@@ -18,18 +18,26 @@ Reference semantics (``/root/reference/appV2.py``):
   ascending tag index within a category (appV2.py:75-101).
 * ``sigmoid`` with ±30 clipping (appV2.py:174).
 
-Spark mapping: the scores arrive long-form ``(image_id, tag_idx, prob)``;
-the tag dimension is a small broadcast join (J1/J2, appV2.py:62-71); A1 is a
-single hash aggregation on ``max(struct(prob, -tag_idx, ...))`` (no sort, and
-the struct ordering reproduces the argmax first-max tie-break); A2 collects
-``struct(cat_rank, tag_idx, tag)``, ``array_sort``s, and ``array_join``s —
-``collect_list`` order alone is not deterministic after a shuffle, the
-explicit sort is what makes the output stable. Everything stays JVM-side
-(whole-stage codegen); no Python UDFs.
+Spark mapping: the selection is a pure function of ONE image's score
+vector, so it is one Column expression over the ``probs`` array — a narrow
+projection, no shuffle. The tag dimension is folded once into a one-row
+frame of per-category candidate arrays (``with_tag_candidates``): P1, F2's
+per-category threshold and F3 are applied to the dimension, not to every
+image, and the threshold candidates are pre-sorted by (category rank, tag
+index), so filtering them per image already yields A2 order. That row is
+broadcast onto the scores (a one-row cross join, BuildRight). Per image, A1
+is ``array_max`` over ``struct(prob, -tag_idx, …)`` — field-wise comparison,
+so the highest prob wins and exact ties go to the lowest index (the argmax
+first-max; NaN sorts above every number, as in any Spark max); F2+F3 is one
+``filter`` against each candidate's threshold; A2 is ``array_join``.
+Indices past the end of a vector read as NULL (``get``, which does not
+throw under ANSI) and are never candidates (F4). Everything stays JVM-side;
+no Python UDFs.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 from operator import or_
 
@@ -98,79 +106,104 @@ def meta_blacklisted(category: Column, cleaned_tag: Column) -> Column:
     return (category == "meta") & hit
 
 
-def top1_per_category(scored: DataFrame, categories: list[str] | None = None) -> DataFrame:
-    """A1 — unconditional per-(image, category) top-1 (appV2.py:77-83).
-
-    One hash aggregation, no sort: ``max`` over ``struct(prob, -tag_idx, …)``
-    compares field-by-field, so the highest prob wins and exact prob ties go
-    to the lowest tag index — the same answer as ``np.argmax``'s first-max
-    (appV2.py:80). Ties are common in practice because the ±30 sigmoid clip
-    plateaus saturated logits to identical probabilities.
-
-    Input columns: image_id, category, tag_idx, prob, tag (cleaned name).
-    """
-    cats = categories if categories is not None else TOP1_CATEGORIES
-    best = F.max(
-        F.struct(
-            F.col("prob").alias("prob"),
-            (-F.col("tag_idx")).alias("neg_idx"),
-            F.col("tag_idx").alias("tag_idx"),
-            F.col("tag").alias("tag"),
-        )
-    ).alias("best")
-    return (
-        scored.where(F.col("category").isin(cats))
-        .groupBy("image_id", "category")
-        .agg(best)
-        .select(
-            "image_id",
-            "category",
-            F.col("best.tag_idx").alias("tag_idx"),
-            F.col("best.tag").alias("tag"),
-        )
-    )
+CANDIDATES = "tag_candidates"  # the broadcast one-row dimension column
 
 
-def threshold_select(
-    scored: DataFrame,
+def with_tag_candidates(
+    df: DataFrame,
+    tag_dim: DataFrame,
     gen_threshold: float = DEFAULT_GEN_THRESHOLD,
     char_threshold: float = DEFAULT_CHAR_THRESHOLD,
 ) -> DataFrame:
-    """F2 + F3 — per-category threshold filter plus the meta substring
-    blacklist (appV2.py:86-99). Pure Column predicates: Catalyst pushes the
-    category/threshold filter below the aggregation that follows."""
+    """``df`` plus the tag dimension (tag_idx, tag_name, category) folded
+    into ONE broadcast row: column ``tag_candidates``, a struct of candidate
+    arrays, one per top-1 category plus ``kept`` — the threshold categories'
+    candidates minus blacklisted meta tags (F3), each with its threshold
+    (F2). Elements are ``struct(cat_rank, tag_idx, category, tag,
+    threshold)`` with the P1-cleaned name, sorted by (cat_rank, tag_idx).
+    Indices absent from the dimension are never candidates (F4: the
+    reference's category index only holds known tags, appV2.py:62-71)."""
+    cat = F.col("category")
+    tag = clean_tag_name(F.col("tag_name"))
     threshold = F.when(
-        F.col("category").isin(GEN_THRESHOLD_CATEGORIES), F.lit(float(gen_threshold))
-    ).otherwise(F.lit(float(char_threshold)))
-    return (
-        scored.where(
-            F.col("category").isin(GEN_THRESHOLD_CATEGORIES + CHAR_THRESHOLD_CATEGORIES)
+        cat.isin(GEN_THRESHOLD_CATEGORIES), F.lit(float(gen_threshold))
+    ).when(cat.isin(CHAR_THRESHOLD_CATEGORIES), F.lit(float(char_threshold)))
+    cand = F.struct(
+        category_rank(cat).alias("cat_rank"),
+        F.col("tag_idx").alias("tag_idx"),
+        cat.alias("category"),
+        tag.alias("tag"),
+        threshold.alias("threshold"),
+    )
+
+    def collect(keep: Column) -> Column:
+        return F.array_sort(F.collect_list(F.when(keep, cand)))
+
+    candidates = tag_dim.agg(
+        F.struct(
+            *[collect(cat == c).alias(c) for c in TOP1_CATEGORIES],
+            collect(threshold.isNotNull() & ~meta_blacklisted(cat, tag)).alias("kept"),
+        ).alias(CANDIDATES)
+    )
+    return df.crossJoin(F.broadcast(candidates))
+
+
+ProbAt = Callable[[Column], Column]
+
+
+def vector_prob(idx: Column) -> Column:
+    """The score at ``idx`` of the ``probs`` array; NULL past its end (F4)."""
+    return F.get(F.col("probs"), idx)
+
+
+def top1_tags(prob_at: ProbAt = vector_prob) -> Column:
+    """A1 — the unconditional top-1 candidate of each top-1 category, in
+    output order; a category with no scored candidate contributes none."""
+
+    def best(cands: Column) -> Column:
+        scored = F.transform(
+            cands,
+            lambda c: F.struct(
+                prob_at(c["tag_idx"]).alias("prob"),
+                (-c["tag_idx"]).alias("neg_idx"),
+                c.alias("cand"),
+            ),
         )
-        .where(F.col("prob") >= threshold)
-        .where(~meta_blacklisted(F.col("category"), F.col("tag")))
-        .select("image_id", "category", "tag_idx", "tag")
+        return F.array_max(F.filter(scored, lambda s: s["prob"].isNotNull()))["cand"]
+
+    return F.array_compact(F.array(*[best(F.col(CANDIDATES)[c]) for c in TOP1_CATEGORIES]))
+
+
+def threshold_tags(prob_at: ProbAt = vector_prob) -> Column:
+    """F2 + F3 — the threshold candidates the image's scores reach, in
+    output order (the blacklist was applied to the dimension)."""
+    return F.filter(
+        F.col(CANDIDATES)["kept"], lambda c: prob_at(c["tag_idx"]) >= c["threshold"]
     )
 
 
-def ordered_tag_string(selected: DataFrame) -> DataFrame:
-    """A2 — deterministic ordered string aggregation (appV2.py:75-101).
+def tags_text(prob_at: ProbAt = vector_prob) -> Column:
+    """A2 — the selected tags joined with ``", "``: the whole selection
+    (appV2.py:74-101) for one image."""
+    selected = F.concat(top1_tags(prob_at), threshold_tags(prob_at))
+    return F.array_join(F.transform(selected, lambda c: c["tag"]), ", ")
 
-    ``collect_list`` order is shuffle-dependent, so we collect
-    ``struct(cat_rank, tag_idx, tag)``, ``array_sort`` (struct comparison is
-    lexicographic by field), project the name, and ``array_join``. Output:
-    ``(image_id, tags_text)``.
-    """
-    ranked = selected.withColumn("cat_rank", category_rank(F.col("category")))
-    return ranked.groupBy("image_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("cat_rank", "tag_idx", F.col("tag").alias("tag")))
-                ),
-                lambda s: s["tag"],
-            ),
-            ", ",
-        ).alias("tags_text")
+
+def select_tags_from_probs(
+    scored: DataFrame,
+    tag_dim: DataFrame,
+    gen_threshold: float = DEFAULT_GEN_THRESHOLD,
+    char_threshold: float = DEFAULT_CHAR_THRESHOLD,
+) -> DataFrame:
+    """The tag-selection projection: ``probs`` (array of per-tag scores,
+    position = tag index) becomes ``tags_text``; every other column passes
+    through in place. A row without a score vector (NULL ``probs``: an
+    image that failed) gets NULL tags; a scored row with no selected tag
+    gets the empty string (the reference writes an empty sidecar for it,
+    appV2.py:101,178-179)."""
+    text = F.when(F.col("probs").isNotNull(), tags_text()).alias("tags_text")
+    return with_tag_candidates(scored, tag_dim, gen_threshold, char_threshold).select(
+        *[text if c == "probs" else F.col(c) for c in scored.columns]
     )
 
 
@@ -181,119 +214,19 @@ def select_tags(
     char_threshold: float = DEFAULT_CHAR_THRESHOLD,
     images: DataFrame | None = None,
 ) -> DataFrame:
-    """The full tag-selection query (appV2.py:74-101) over long-form scores.
-
-    ``scores``: (image_id, tag_idx, prob); ``tag_dim``: (tag_idx, tag_name,
-    category) — small, broadcast. Indices absent from the dimension are
-    never candidates (F4: the reference's category index only contains known
-    tags, appV2.py:62-71, so the inner join is the faithful translation of
-    its ``names[global_idx]`` guard).
-
-    If ``images`` (a DataFrame with an ``image_id`` column) is given, images
-    with zero selected tags still appear with an empty string — the reference
-    writes an empty sidecar file for them (appV2.py:101,178-179).
-
-    Scale notes: the dimension join is an explicit broadcast (no shuffle);
-    the threshold filter runs before any shuffle so only selected tags move;
-    the two aggregations (top-1, final string agg) are the only exchanges.
-    """
-    scored = (
-        scores.join(F.broadcast(tag_dim), "tag_idx", "inner")
-        .withColumn("tag", clean_tag_name(F.col("tag_name")))
-        .select("image_id", "category", "tag_idx", "prob", "tag")
+    """The tag selection over long-form scores (image_id, tag_idx, prob) →
+    (image_id, tags_text): gathers each image's scores into a map and runs
+    the same per-image expression over it. One row per image with scores,
+    or, if ``images`` (an ``image_id`` column) is given, one per distinct
+    image there — images without scores get the empty string.
+    ``(image_id, tag_idx)`` must be unique and a NULL prob counts as absent."""
+    gathered = scores.groupBy("image_id").agg(
+        F.map_from_entries(F.collect_list(F.struct("tag_idx", "prob"))).alias("scores")
     )
-    out = _select_tags_single_pass(scored, gen_threshold, char_threshold)
     if images is not None:
-        out = (
-            images.select("image_id")
-            .distinct()
-            .join(out, "image_id", "left")
-            .withColumn("tags_text", F.coalesce(F.col("tags_text"), F.lit("")))
-        )
-    return out
-
-
-def _select_tags_single_pass(
-    scored: DataFrame, gen_threshold: float, char_threshold: float
-) -> DataFrame:
-    """A1+F2+F3+A2 in ONE scan of the scores relation and ONE shuffle.
-
-    The naive plan (separate top-1 and threshold branches unioned before the
-    final aggregation) recomputes the exploded/joined scores relation per
-    branch — at 100 TB that relation (rows × num_tags) is the dominant cost,
-    so halving its materializations matters more than any small-side trick.
-    Here everything is an aggregate expression of one groupBy(image_id):
-
-    * per top-1 category (rating, quality — a FIXED two-element set,
-      appV2.py:77): a conditional max(struct(prob, -tag_idx, …)) whose
-      struct comparison reproduces the argmax first-max tie-break
-      (appV2.py:80);
-    * ``kept`` — collect_list of threshold-surviving (cat_rank, tag_idx,
-      tag) structs; the `when` emits NULL for rejected rows and
-      collect_list drops NULLs, so the shuffle carries only SELECTED tags.
-
-    The single exchange partitions by image_id; map-side partial
-    aggregation compacts each partition's contribution first. The final
-    array_sort on (cat_rank, tag_idx) makes the output order deterministic
-    (A2) — collect_list order alone is shuffle-dependent.
-    """
-    threshold = F.when(
-        F.col("category").isin(GEN_THRESHOLD_CATEGORIES), F.lit(float(gen_threshold))
-    ).otherwise(F.lit(float(char_threshold)))
-    is_top1_cat = F.col("category").isin(TOP1_CATEGORIES)
-    keeps = (
-        ~is_top1_cat
-        & (F.col("prob") >= threshold)
-        & ~meta_blacklisted(F.col("category"), F.col("tag"))
-    )
-    rank = category_rank(F.col("category"))
-    best_aggs = [
-        F.max(
-            F.when(
-                F.col("category") == cat,
-                F.struct(
-                    F.col("prob").alias("prob"),
-                    (-F.col("tag_idx")).alias("neg_idx"),
-                    F.col("tag_idx").alias("tag_idx"),
-                    F.col("tag").alias("tag"),
-                ),
-            )
-        ).alias(f"best_{cat}")
-        for cat in TOP1_CATEGORIES
-    ]
-    per_image = scored.groupBy("image_id").agg(
-        *best_aggs,
-        F.collect_list(
-            F.when(
-                keeps,
-                F.struct(
-                    rank.alias("cat_rank"),
-                    F.col("tag_idx").alias("tag_idx"),
-                    F.col("tag").alias("tag"),
-                ),
-            )
-        ).alias("kept"),
-    )
-    empty = F.array().cast("array<struct<cat_rank:int,tag_idx:int,tag:string>>")
-    top1_arrays = [
-        F.when(
-            F.col(f"best_{cat}").isNotNull(),
-            F.array(
-                F.struct(
-                    F.lit(OUTPUT_CATEGORY_RANK[cat]).alias("cat_rank"),
-                    F.col(f"best_{cat}.tag_idx").alias("tag_idx"),
-                    F.col(f"best_{cat}.tag").alias("tag"),
-                )
-            ),
-        ).otherwise(empty)
-        for cat in TOP1_CATEGORIES
-    ]
-    items = F.concat(*top1_arrays, F.col("kept"))
-    return per_image.select(
-        "image_id",
-        F.array_join(
-            F.transform(F.array_sort(items), lambda s: s["tag"]), ", "
-        ).alias("tags_text"),
+        gathered = images.select("image_id").distinct().join(gathered, "image_id", "left")
+    return with_tag_candidates(gathered, tag_dim, gen_threshold, char_threshold).select(
+        "image_id", tags_text(lambda idx: F.col("scores")[idx]).alias("tags_text")
     )
 
 
@@ -330,23 +263,21 @@ def demo_tag_dim(spark: SparkSession) -> DataFrame:
     )
 
 
-def scores_from_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stand-in for the model-score relation (appV2.py:171-174
-    with inference stubbed): posexplode the 64-dim embedding, scale to logits,
-    sigmoid with ±30 clip. The explode is partition-local — no shuffle."""
+def embedding_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(image_id, probs): deterministic stand-in for the model-score vector
+    (appV2.py:171-174 with inference stubbed) — each 64-dim embedding
+    scaled to logits and sigmoid-clipped element-wise."""
     from ..sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.select(
-            F.col("vec_id").alias("image_id"),
-            F.posexplode("embedding").alias("tag_idx", "raw"),
-        )
-        .withColumn("logit", F.col("raw").cast("double") * F.lit(DEMO_LOGIT_SCALE))
-        .select("image_id", "tag_idx", sigmoid_clip(F.col("logit")).alias("prob"))
+    return emb.select(
+        F.col("vec_id").alias("image_id"),
+        F.transform(
+            "embedding", lambda x: sigmoid_clip(x.cast("double") * F.lit(DEMO_LOGIT_SCALE))
+        ).alias("probs"),
     )
 
 
 def flagship_tag_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §3.3 flagship query end-to-end: (image_id, tags_text)."""
-    return select_tags(scores_from_embeddings(spark, sf_dir), demo_tag_dim(spark))
+    return select_tags_from_probs(embedding_probs(spark, sf_dir), demo_tag_dim(spark))

@@ -14,7 +14,7 @@ from .handoff import PIPELINE_SCORED_PATH as _PIPELINE_SCORED_PATH
 
 # Long-form deterministic scores derived from `embeddings` — the stand-in for
 # the reference's model output (appV2.py:171-174 with inference stubbed).
-# Mirrors operators.tagging.scores_from_embeddings.
+# Mirrors operators.tagging.embedding_probs, in long form.
 SCORES_CTE = """
 raw_scores AS (
   SELECT vec_id AS image_id,
@@ -116,11 +116,14 @@ SELECT image_id, category, tag_idx, tag FROM thresh
 
 # PARTIAL oracle for the full pipeline: the float32 kernel's output is
 # handed off through pipeline.PIPELINE_SCORED_PATH (written eagerly when the
-# Spark query is built — always before this SQL runs), and the ENTIRE
-# relational tail (posexplode → dim join → top-1/threshold/blacklist →
-# ordered string agg → ok/error union, appV2.py:74-101,178-190) is replayed
-# here from those exact float32 probs. Casting FLOAT→DOUBLE is exact in both
-# engines, so every threshold comparison and tie-break is bit-identical.
+# Spark query is built — always before this SQL runs; the Spark side reads
+# the same file back). Spark selects tags with one projection over each
+# row's probs array; this SQL replays the same selection in long form
+# (unnest → dim join → top-1/threshold/blacklist → ordered string agg →
+# ok/error rows, appV2.py:74-101,178-190) from those exact float32 probs —
+# an independent formulation, not a transcription. Casting FLOAT→DOUBLE is
+# exact in both engines, so every threshold comparison and tie-break is
+# bit-identical.
 _PIPELINE_SCORED_GLOB = f"{_PIPELINE_SCORED_PATH}/*.parquet"
 
 ORACLE_SQL["pipeline_score_tag"] = f"""

@@ -4,16 +4,22 @@
     scan_images (S1+F1)                 appV2.py:132-137
       → score_images: mapInPandas       M1-M6, appV2.py:165-174
           decode → preprocess → batch score → sigmoid, per-row try/except
-      → posexplode to long form         (image_id, tag_idx, prob)
-      → select_tags (J1/J2/F2/F3/F4/P1/A1/A2), appV2.py:74-101
+      → select_tags_from_probs          J1/J2/F2/F3/F4/P1/A1/A2, appV2.py:74-101
+          one projection: probs → tags_text against a broadcast
+          one-row tag dimension
       → (path, tags_text, status, error)
       → sinks.write_sidecar_txt / write_tags_parquet (S3)
 
+Every input of the selection is already in the image's row, so ok and error
+rows leave the same narrow projection: scan → mapInPandas → project → sink,
+with no shuffle, checkpoint or union on the image side.
+
 Fault isolation matches the reference (appV2.py:166,183-185): a decode or
 scoring failure marks THAT row ``status='error'`` and the job continues —
-a task-level failure would kill a whole partition of good images. Error rows
-carry the exception text and a NULL tags_text; the reference's
-success/failure counters (A3) are ``summarize``.
+a task-level failure would kill a whole partition of good images. A scorer
+call that raises on a batch is retried row by row, so only the rows that
+still raise are marked. Error rows carry the exception text and a NULL
+tags_text; the reference's success/failure counters (A3) are ``summarize``.
 
 The Python boundary is exactly one Arrow-batched ``mapInPandas`` stage; the
 scorer batches tensors (vs the reference's hard-coded batch=1, appV2.py:48)
@@ -30,13 +36,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpointing import truncate_lineage
 from .kernels.preprocess import HAS_PIL, fake_decode_bytes, preprocess_bytes
 from .kernels.scoring import StubScorer, sigmoid_clip_np
 from .operators.tagging import (
     DEFAULT_CHAR_THRESHOLD,
     DEFAULT_GEN_THRESHOLD,
-    select_tags,
+    select_tags_from_probs,
 )
 from .sources.images import scan_images
 
@@ -57,8 +62,11 @@ def score_images(
     One mapInPandas stage: per Arrow batch, decode rows individually under
     try/except (per-row fault isolation, appV2.py:166), then score the
     surviving tensors in ``batch_size`` sub-batches (M5) and sigmoid-clip
-    (M6). The scorer object is pickled to executors; any native session it
-    holds must be created lazily inside ``score_batch`` (see OnnxScorer).
+    (M6). A sub-batch whose scorer call raises is scored again row by row;
+    only the rows that still raise become error rows. ``probs`` is NULL
+    exactly on error rows. The scorer object is pickled to executors; any
+    native session it holds must be created lazily inside ``score_batch``
+    (see OnnxScorer).
     """
     scorer = scorer or StubScorer()
     decode_fn = decode or default_decode()
@@ -76,14 +84,24 @@ def score_images(
                     tensors.append(None)
                     errors.append(f"{type(e).__name__}: {e}")
             probs_out: list[list[float] | None] = [None] * len(paths)
+
+            def score(rows: list[int]) -> None:
+                batch = np.stack([tensors[i] for i in rows]).astype(np.float32)
+                probs = sigmoid_clip_np(scorer.score_batch(batch)).tolist()
+                for i, p in zip(rows, probs):
+                    probs_out[i] = p
+
             ok_idx = [i for i, t in enumerate(tensors) if t is not None]
             for start in range(0, len(ok_idx), batch_size):
                 chunk = ok_idx[start : start + batch_size]
-                batch = np.stack([tensors[i] for i in chunk]).astype(np.float32)
-                logits = scorer.score_batch(batch)
-                probs = sigmoid_clip_np(logits)
-                for j, i in enumerate(chunk):
-                    probs_out[i] = [float(x) for x in probs[j]]
+                try:
+                    score(chunk)
+                except Exception:  # noqa: BLE001 — retry alone to find the bad rows
+                    for i in chunk:
+                        try:
+                            score([i])
+                        except Exception as e:  # noqa: BLE001 — per-row isolation
+                            errors[i] = f"{type(e).__name__}: {e}"
             yield pd.DataFrame(
                 {
                     "path": paths,
@@ -118,35 +136,8 @@ def tag_images(
     images = scan_images(spark, folder, recursive=recursive)
     if fail_on_empty and images.isEmpty():
         raise ValueError(f"no supported images found under {folder!r} (F5)")
-    # Materialize the kernel output ONCE: it feeds three consumers (the ok
-    # branch, the error branch, and the zero-tag image list) and decode+
-    # score is the most expensive stage of the whole pipeline — without a
-    # checkpoint each consumer would re-execute the Python kernel.
-    scored = score_images(
-        images, scorer=scorer, decode=decode, batch_size=batch_size
-    ).transform(truncate_lineage)
-    ok = scored.where(F.col("status") == "ok")
-    long_scores = ok.select(
-        F.col("path").alias("image_id"),
-        F.posexplode("probs").alias("tag_idx", "prob"),
-    ).select("image_id", "tag_idx", F.col("prob").cast("double").alias("prob"))
-    tagged = select_tags(
-        long_scores,
-        tag_dim,
-        gen_threshold=gen_threshold,
-        char_threshold=char_threshold,
-        images=ok.select(F.col("path").alias("image_id")),
-    )
-    result_ok = tagged.select(
-        F.col("image_id").alias("path"),
-        "tags_text",
-        F.lit("ok").alias("status"),
-        F.lit(None).cast("string").alias("error"),
-    )
-    result_err = scored.where(F.col("status") == "error").select(
-        "path", F.lit(None).cast("string").alias("tags_text"), "status", "error"
-    )
-    return result_ok.unionByName(result_err)
+    scored = score_images(images, scorer=scorer, decode=decode, batch_size=batch_size)
+    return select_tags_from_probs(scored, tag_dim, gen_threshold, char_threshold)
 
 
 def summarize(result: DataFrame) -> DataFrame:
@@ -171,79 +162,15 @@ def observe_status(result: DataFrame, name: str = "tagging_metrics"):
     return observed, obs
 
 
-def score_images_predict_udf(
-    images: DataFrame,
-    scorer=None,
-    decode: Callable[[bytes], np.ndarray] | None = None,
-    batch_size: int = 32,
-    tensor_shape: tuple[int, int, int] = (3, 64, 64),
-) -> DataFrame:
-    """Alternative M5 using ``pyspark.ml.functions.predict_batch_udf`` —
-    the idiomatic Spark ML-serving path (SURVEY.md §2.3 M5): tensors flow as
-    a flat array column, the UDF reshapes per ``input_tensor_shapes``, and
-    the model object is constructed once per Python worker by
-    ``make_predict_fn``. Results are identical to ``score_images``.
-    """
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql.types import ArrayType, FloatType
-
-    scorer = scorer or StubScorer()
-    decode_fn = decode or default_decode()
-
-    def decode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tensors, errors = [], []
-            for content in pdf["content"]:
-                try:
-                    tensors.append(decode_fn(bytes(content)).ravel().tolist())
-                    errors.append(None)
-                except Exception as e:  # noqa: BLE001 — per-row isolation
-                    tensors.append(None)
-                    errors.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "tensor": tensors,
-                    "status": ["error" if e else "ok" for e in errors],
-                    "error": errors,
-                }
-            )
-
-    decoded = images.select("path", "content").mapInPandas(
-        decode_stage, schema="path string, tensor array<float>, status string, error string"
-    )
-
-    def make_predict_fn():
-        # runs once per Python worker — the per-executor model init point
-        def predict(t: np.ndarray) -> np.ndarray:
-            return sigmoid_clip_np(scorer.score_batch(t.astype(np.float32)))
-
-        return predict
-
-    score_udf = predict_batch_udf(
-        make_predict_fn,
-        return_type=ArrayType(FloatType()),
-        batch_size=batch_size,
-        input_tensor_shapes=[list(tensor_shape)],
-    )
-    ok = decoded.where(F.col("status") == "ok").select(
-        "path", score_udf(F.col("tensor")).alias("probs"), "status", "error"
-    )
-    err = decoded.where(F.col("status") == "error").select(
-        "path", F.lit(None).cast("array<float>").alias("probs"), "status", "error"
-    )
-    return ok.unionByName(err)
-
-
 # Handoff point for pipeline_score_tag's PARTIAL oracle: the float32 ML
 # kernel has no SQL twin (matmul accumulation order), but its output is a
-# deterministic relation — so the query persists the checkpointed
-# (path, probs, status, error) here and the DuckDB oracle replays the
-# relational tail (posexplode → dim join → select_tags → union) from the
-# SAME float32 values. The path is per-(user, checkout) — see handoff.py —
-# and overwritten per build: the oracle always sees exactly the probs of
-# the most recently constructed query (the correctness harness builds the
-# Spark side first, then runs the SQL).
+# deterministic relation — so the query writes (path, probs, status, error)
+# here, tags what it reads back, and the DuckDB oracle replays the selection
+# (dim join → top-1/threshold/blacklist → ordered string → ok/error rows)
+# from the SAME float32 values. The path is per-(user, checkout) — see
+# handoff.py — and overwritten per build: the oracle always sees exactly the
+# probs of the most recently constructed query (the correctness harness
+# builds the Spark side first, then runs the SQL).
 from .handoff import PIPELINE_SCORED_PATH  # noqa: E402 — re-export
 
 
@@ -251,12 +178,14 @@ def pipeline_score_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL main() flow (appV2.py:103-191) as one registry
     query over the fixtures: binary payloads (documents.text bytes standing
     in for image files) → mapInPandas decode+score (fake decode +
-    StubScorer — deterministic, no PIL/onnxruntime needed) → posexplode →
-    broadcast-join tag selection → (path, tags_text, status, error).
+    StubScorer — deterministic, no PIL/onnxruntime needed) → the handoff
+    Parquet → tag-selection projection → (path, tags_text, status, error).
 
     Value-checked via the PIPELINE_SCORED_PATH handoff (above): the kernel
     itself is golden-tested in test_kernels/test_pipeline, and the oracle
-    verifies the full relational tail from the kernel's actual output.
+    verifies the selection from the kernel's actual output. Reading the
+    handoff back is what runs the kernel once: the query consumes the
+    written relation, never a second kernel execution.
     """
     from .operators.multimodal import with_binary_payload
     from .operators.tagging import demo_tag_dim
@@ -267,29 +196,7 @@ def pipeline_score_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string"), F.lit(".png")).alias("path"),
         "content",
     )
-    # One execution of the Python kernel for all three downstream consumers
-    # (same rationale as tag_images).
-    scored = score_images(
-        images, scorer=StubScorer(), decode=fake_decode_bytes
-    ).transform(truncate_lineage)
-    scored.write.mode("overwrite").parquet(PIPELINE_SCORED_PATH)
-    ok = scored.where(F.col("status") == "ok")
-    long_scores = ok.select(
-        F.col("path").alias("image_id"),
-        F.posexplode("probs").alias("tag_idx", "prob"),
-    ).select("image_id", "tag_idx", F.col("prob").cast("double").alias("prob"))
-    tagged = select_tags(
-        long_scores,
-        demo_tag_dim(spark),
-        images=ok.select(F.col("path").alias("image_id")),
-    )
-    result_ok = tagged.select(
-        F.col("image_id").alias("path"),
-        "tags_text",
-        F.lit("ok").alias("status"),
-        F.lit(None).cast("string").alias("error"),
-    )
-    result_err = scored.where(F.col("status") == "error").select(
-        "path", F.lit(None).cast("string").alias("tags_text"), "status", "error"
-    )
-    return result_ok.unionByName(result_err)
+    score_images(images, scorer=StubScorer(), decode=fake_decode_bytes).write.mode(
+        "overwrite"
+    ).parquet(PIPELINE_SCORED_PATH)
+    return select_tags_from_probs(spark.read.parquet(PIPELINE_SCORED_PATH), demo_tag_dim(spark))

@@ -31,35 +31,28 @@ def register(name: str, fn: QueryFn, no_oracle: str | None = None) -> None:
 register("tag_select", tagging.flagship_tag_select)
 
 
-def _tag_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _tag_exploded(spark: SparkSession, sf_dir: str, pick) -> DataFrame:
+    """One row per tag ``pick`` selects (tagging.top1_tags or
+    tagging.threshold_tags): (image_id, category, tag_idx, tag)."""
     from pyspark.sql import functions as F
 
-    scores = tagging.scores_from_embeddings(spark, sf_dir)
-    dim = tagging.demo_tag_dim(spark)
-    return (
-        scores.join(F.broadcast(dim), "tag_idx", "inner")
-        .withColumn("tag", tagging.clean_tag_name(F.col("tag_name")))
-        .select("image_id", "category", "tag_idx", "prob", "tag")
+    scored = tagging.with_tag_candidates(
+        tagging.embedding_probs(spark, sf_dir), tagging.demo_tag_dim(spark)
+    )
+    # tag_idx widened to BIGINT: the oracle emits int64 and the driver
+    # hashes through Arrow, where an int32-vs-int64 width split is the
+    # same failure class as r12's HUGEINT fails (see tests/test_oracle_types)
+    return scored.select("image_id", F.explode(pick()).alias("t")).select(
+        "image_id", "t.category", F.col("t.tag_idx").cast("bigint").alias("tag_idx"), "t.tag"
     )
 
 
 def _tag_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    # tag_idx widened to BIGINT: the oracle emits int64 and the driver
-    # hashes through Arrow, where an int32-vs-int64 width split is the
-    # same failure class as r12's HUGEINT fails (see tests/test_oracle_types)
-    return tagging.top1_per_category(_tag_scored(spark, sf_dir)).withColumn(
-        "tag_idx", F.col("tag_idx").cast("bigint")
-    )
+    return _tag_exploded(spark, sf_dir, tagging.top1_tags)
 
 
 def _tag_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return tagging.threshold_select(_tag_scored(spark, sf_dir)).withColumn(
-        "tag_idx", F.col("tag_idx").cast("bigint")
-    )
+    return _tag_exploded(spark, sf_dir, tagging.threshold_tags)
 
 
 # r8 window refresh: tag_top1_rating_quality / tag_threshold_filter were

@@ -104,24 +104,6 @@ def test_cli_empty_folder_aborts(spark, tmp_path):
     assert rc == 1  # F5 empty-input abort, appV2.py:139-141
 
 
-def test_predict_batch_udf_path_matches_mapinpandas(spark, image_dir):
-    from cl_tagger_batch_processing_spark.sources.images import scan_images
-
-    scorer = StubScorer(num_tags=64)
-    images = scan_images(spark, image_dir)
-    a = {r.path: r.probs for r in pipeline.score_images(images, scorer=scorer).collect()}
-    b = {
-        r.path: r.probs
-        for r in pipeline.score_images_predict_udf(images, scorer=scorer).collect()
-    }
-    assert a.keys() == b.keys()
-    for path in a:
-        if a[path] is None:
-            assert b[path] is None
-        else:
-            assert a[path] == pytest.approx(b[path], abs=1e-6)
-
-
 def test_observe_status_counters(spark, image_dir):
     result = pipeline.tag_images(spark, image_dir, demo_tag_dim(spark))
     observed, obs = pipeline.observe_status(result)
@@ -137,3 +119,79 @@ def test_score_images_prob_range_and_width(spark, image_dir):
     for r in rows:
         assert len(r.probs) == 64
         assert all(0.0 <= p <= 1.0 for p in r.probs)
+
+
+def test_scorer_batch_failure_marks_only_the_poisoned_row(spark, tmp_path):
+    """A scorer call that raises on a whole batch costs only the row that
+    makes it raise: the batch is scored again row by row."""
+    from cl_tagger_batch_processing_spark.sources.images import scan_images
+
+    d = tmp_path / "imgs"
+    d.mkdir()
+    for i in range(6):
+        (d / f"img_{i}.jpg").write_bytes(f"payload-{i}".encode() * 10)
+    poison = -7.0
+
+    def decode(content: bytes) -> np.ndarray:
+        tensor = fake_decode_bytes(content)
+        return np.full_like(tensor, poison) if content.startswith(b"payload-3") else tensor
+
+    class RowwiseScorer(StubScorer):
+        # one tensor per matmul, so a row's float32 probs do not depend on
+        # which rows share its batch — the clean run is then an exact twin
+        def __init__(self, poisoned: bool):
+            super().__init__()
+            self.poisoned = poisoned
+
+        def score_batch(self, tensors):
+            if self.poisoned and (tensors == poison).all(axis=(1, 2, 3)).any():
+                raise RuntimeError("poisoned tensor in batch")
+            rows = [super(RowwiseScorer, self).score_batch(t[None]) for t in tensors]
+            return np.concatenate(rows)
+
+    images = scan_images(spark, str(d)).coalesce(1)  # one batch holds all six
+
+    def run(poisoned: bool) -> dict:
+        scorer = RowwiseScorer(poisoned)
+        return {r.path: r for r in pipeline.score_images(images, scorer, decode).collect()}
+
+    clean, got = run(False), run(True)
+    errors = {os.path.basename(p): r.error for p, r in got.items() if r.status == "error"}
+    assert errors == {"img_3.jpg": "RuntimeError: poisoned tensor in batch"}
+    assert got.keys() == clean.keys()
+    for path, row in got.items():
+        if row.status == "ok":
+            assert row.probs == clean[path].probs
+        else:
+            assert row.probs is None
+
+
+def test_tag_images_dimension_longer_than_score_vector(spark, image_dir):
+    # F4 in the array form: the 62-entry demo dimension against a 40-tag
+    # scorer — indices 40..61 read past the end of every probs vector, which
+    # must neither throw (ANSI) nor yield a tag.
+    from cl_tagger_batch_processing_spark.sources.images import scan_images
+
+    from .test_tagging_properties import reference_get_tags
+
+    scorer = StubScorer(num_tags=40)
+    dim = demo_tag_dim(spark)
+    names = {r.tag_idx: (r.tag_name, r.category) for r in dim.collect()}
+    assert max(names) >= 40
+    probs = {
+        r.path: r.probs
+        for r in pipeline.score_images(scan_images(spark, image_dir), scorer=scorer).collect()
+        if r.status == "ok"
+    }
+    got = {
+        r.path: r.tags_text
+        for r in pipeline.tag_images(spark, image_dir, dim, scorer=scorer).collect()
+        if r.status == "ok"
+    }
+    assert len(got) == 6
+    # the transcription skips indices the vector lacks, as the reference does
+    want = {
+        path: reference_get_tags(dict(enumerate(p)), names, 0.55, 0.60)
+        for path, p in probs.items()
+    }
+    assert got == want

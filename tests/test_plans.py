@@ -26,10 +26,28 @@ def test_q3_small_dims_broadcast(spark, sf_dir):
 
 def test_tag_select_broadcasts_dimension(spark, sf_dir):
     df = QUERIES["tag_select"](spark, sf_dir)
-    assert inspect.count_operator(df, "BroadcastHashJoin") >= 1
+    plan = inspect.executed_plan(df)
+    # selection is a projection over each image's probs: the image side is
+    # never shuffled, and the one-row tag dimension arrives as a broadcast
+    assert "Exchange hashpartitioning" not in plan
+    assert inspect.count_operator(df, "BroadcastExchange") >= 1
     assert inspect.count_operator(df, "SortMergeJoin") == 0
-    # single-pass plan: exactly one aggregation shuffle and no join shuffle
-    assert inspect.count_shuffles(df) == 1
+
+
+def test_tag_images_plan_is_scan_kernel_project(spark, tmp_path):
+    # scan → mapInPandas → project: no shuffle, no ok/error union, no
+    # checkpoint scan, and the Python kernel appears exactly once
+    from cl_tagger_batch_processing_spark.operators.tagging import demo_tag_dim
+    from cl_tagger_batch_processing_spark.pipeline import tag_images
+
+    for i in range(4):
+        (tmp_path / f"img_{i}.png").write_bytes(b"payload" * (i + 1))
+    plan = inspect.executed_plan(tag_images(spark, str(tmp_path), demo_tag_dim(spark)))
+    assert "Exchange hashpartitioning" not in plan
+    assert "Union" not in plan
+    assert "SortMergeJoin" not in plan
+    assert plan.count("MapInPandas") == 1
+    assert "ExistingRDD" not in plan
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
