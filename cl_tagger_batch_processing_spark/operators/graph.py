@@ -1058,9 +1058,8 @@ def graph_assortativity(
 
     Determinism: degrees are exact integers; the six sufficient
     statistics are exact DECIMAL(38,0) sums (HUGEINT in the oracle) and
-    the subtraction/sqrt/divide tree runs in double — the
-    events_autocorrelation convention. Zero variance (regular graph)
-    yields NULL, not NaN.
+    the subtraction/sqrt/divide tree runs in double. Zero variance
+    (regular graph) yields NULL, not NaN.
 
     Scale: two equi-joins hang the degree on each edge endpoint (degree
     frame is node-sized), then ONE map-side-combinable aggregate to six
@@ -1211,13 +1210,18 @@ def graph_hits(
     # eager materializations of the same memoized sym blocks, so they run
     # CONCURRENTLY (guide §2.6 — actions are only sequential because the
     # driver calls them sequentially); values are per-direction frames, so
-    # overlap cannot reorder anything arithmetic.
+    # overlap cannot reorder anything arithmetic. The workers inherit the
+    # caller's local properties (job group, scheduler pool), so their jobs
+    # stay attributable and cancellable with the rest of the query.
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    prepare = inheritable_thread_target(spark)(_prepare_superstep_edges)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fwd_f = pool.submit(_prepare_superstep_edges, edges, hot_outdeg, n_salts)
-        rev_f = pool.submit(_prepare_superstep_edges, rev, hot_outdeg, n_salts)
+        fwd_f = pool.submit(prepare, edges, hot_outdeg, n_salts)
+        rev_f = pool.submit(prepare, rev, hot_outdeg, n_salts)
         fwd_deg, fwd_hot = fwd_f.result()
         rev_deg, rev_hot = rev_f.result()
     nodes = (

@@ -4,7 +4,7 @@ The reference has no general joins/aggregations (SURVEY.md §2.5: its only
 "joins" are two broadcast dimension lookups, appV2.py:62-71); this module is
 the generic relational surface the engine exposes on top of Catalyst —
 multi-way joins, grouped aggregation, rollup, semi/anti joins, window
-functions, top-k per group, set operations, pivot, JSON extraction, and an
+functions, top-k per group, set operations, pivot, and an
 as-of join (which Spark lacks natively; implemented shuffle-once via
 union + window).
 
@@ -45,8 +45,7 @@ def _one_plus(col: str):
 # ``Window.orderBy`` with no ``partitionBy`` forces EVERY row into one task —
 # fine over bounded spines (day grids, bucket spines, top-k after LIMIT), a
 # scale defect over user/customer/value-cardinality relations (r11 verdict:
-# customer_rfm, events_user_gini, orders_rfm_migration, events_spearman_corr;
-# r11 advice: events_kruskal_wallis). The helpers below compute the SAME
+# customer_rfm, orders_rfm_migration). The helpers below compute the SAME
 # row_number / ntile / cumulative-sum values with a bounded per-task
 # footprint — the "range-partitioned two-pass rank" made deterministic:
 #
@@ -499,42 +498,6 @@ def distinct_brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("p_retailprice").alias("min_price"),
         F.max("p_retailprice").alias("max_price"),
         F.count(F.lit(1)).alias("n_parts"),
-    )
-
-
-def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction from the events props column + grouped aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured props through Spark 4's VARIANT type: ``parse_json``
-    once into the binary variant encoding, then typed ``variant_get`` path
-    extraction.
-
-    The scale argument over per-path ``get_json_object``
-    (events_json_extract): VARIANT parses each JSON string ONCE into a
-    shredded binary form; every subsequent typed path is a field get, not a
-    string re-parse — at 100 TB of event props with many extracted paths
-    that's one parse amortized over N paths instead of N parses."""
-    ev = load_table(spark, sf_dir, "events")
-    parsed = ev.select("event_type", F.parse_json("props").alias("v"))
-    k = F.expr("variant_get(v, '$.k', 'bigint')")
-    return (
-        parsed.select("event_type", (k % 10).alias("k_bucket"), k.alias("k"))
-        .groupBy("event_type", "k_bucket")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("sum_k"))
     )
 
 
@@ -1343,100 +1306,6 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _funnel_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user sequential funnel milestones — (first view, first click
-    AFTER that view, first purchase AFTER that click) — the shared spine
-    for the funnel reach and latency readouts.
-
-    The Spark-first shape for sequence matching without MATCH_RECOGNIZE:
-    three chained window passes over the SAME user partitioning — Catalyst
-    reuses one exchange for all three (each stage's milestone is a window
-    min over a predicate referencing the previous stage's column), then a
-    per-user aggregate. One shuffle on user_id at any event volume."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    w = Window.partitionBy("user_id")
-    staged = (
-        ev.withColumn(
-            "v_ts", F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w)
-        )
-        .withColumn(
-            "c_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click") & (F.col("ts") > F.col("v_ts")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "p_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("ts") > F.col("c_ts")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-    )
-    return staged.groupBy("user_id").agg(
-        F.min("v_ts").alias("v_ts"), F.min("c_ts").alias("c_ts"), F.min("p_ts").alias("p_ts")
-    )
-
-
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential funnel analysis: per user, first view -> first click
-    AFTER that view -> first purchase AFTER that click, reported as stage
-    reach counts and exact dwell-time sums (one tiny global aggregate over
-    the shared ``_funnel_milestones`` spine). Dwell sums are exact integer
-    microseconds; the averages divide once in double."""
-    per_user = _funnel_milestones(spark, sf_dir)
-    # fixture ts loads as TIMESTAMP_NTZ; session TZ is pinned UTC, so the
-    # cast to TIMESTAMP is exact and unix_micros accepts it
-    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.when(F.col("v_ts").isNotNull(), 1).otherwise(0)).cast("bigint").alias("n_viewed"),
-        F.sum(F.when(F.col("c_ts").isNotNull(), 1).otherwise(0)).cast("bigint").alias("n_clicked"),
-        F.sum(F.when(F.col("p_ts").isNotNull(), 1).otherwise(0)).cast("bigint").alias("n_purchased"),
-        F.sum(F.when(F.col("c_ts").isNotNull(), us("c_ts") - us("v_ts")).otherwise(0))
-        .cast("bigint")
-        .alias("view_click_us"),
-        F.sum(F.when(F.col("p_ts").isNotNull(), us("p_ts") - us("c_ts")).otherwise(0))
-        .cast("bigint")
-        .alias("click_purchase_us"),
-    )
-
-
-def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention: users grouped by first-seen date, counted active
-    per day-offset for the first week — the day-N retention triangle every
-    growth dashboard is built on.
-
-    Two corpus aggregations (first-seen per user; distinct active
-    user-days) meet in one join on the user key, then a small (cohort,
-    offset) aggregate. COUNT(DISTINCT user) per cell is exact — at scale
-    the distinct state per (cohort, offset) cell is bounded by cohort
-    size, and the join side carries only (user, date) pairs."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d")
-    )
-    cohorts = ev.groupBy("user_id").agg(F.min("d").alias("cohort_date"))
-    active = ev.distinct()
-    return (
-        active.join(cohorts, "user_id")
-        .select(
-            "user_id",
-            "cohort_date",
-            F.datediff(F.col("d"), F.col("cohort_date")).cast("bigint").alias("day_offset"),
-        )
-        .where(F.col("day_offset") <= 7)
-        .groupBy("cohort_date", "day_offset")
-        .agg(F.count_distinct("user_id").cast("bigint").alias("n_active"))
-    )
-
-
 _PART_PAIRS_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -1712,53 +1581,6 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAD_SIGMAS = 3.0
-
-
-def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection: flag events whose value deviates from the
-    per-event-type median by more than 3× the MAD (median absolute
-    deviation) — the standard quantile-robust alternative to z-scores for
-    heavy-tailed telemetry.
-
-    Two grouped exact-percentile passes (median, then MAD over the
-    deviations) + one broadcast join of the per-type statistics back onto
-    the fact rows. The per-type stats frame is dimension-sized (one row
-    per event_type), so the join is an explicit broadcast — fact rows
-    never shuffle. At 100 TB swap F.percentile for approx_percentile
-    (t-digest, map-side combined) and keep the identical plan shape.
-
-    Determinism: exact interpolated percentile over doubles is the same
-    IEEE arithmetic in Spark and DuckDB (quantile_cont); the flag compares
-    deviations ROUNDED to 9dp so a boundary-sitting value can't flip on a
-    final-ulp difference."""
-    events = load_table(spark, sf_dir, "events")
-    med = events.groupBy("event_type").agg(
-        F.percentile("value", F.lit(0.5)).alias("med")
-    )
-    dev = events.join(F.broadcast(med), "event_type").withColumn(
-        "abs_dev", F.abs(F.col("value") - F.col("med"))
-    )
-    mad = dev.groupBy("event_type").agg(
-        F.first("med").alias("med"),
-        F.percentile("abs_dev", F.lit(0.5)).alias("mad"),
-    )
-    return (
-        events.join(F.broadcast(mad), "event_type")
-        .where(
-            F.round(F.abs(F.col("value") - F.col("med")), 9)
-            > F.round(F.lit(MAD_SIGMAS) * F.col("mad"), 9)
-        )
-        .select(
-            "event_id",
-            "event_type",
-            "value",
-            F.round("med", 6).alias("med"),
-            F.round("mad", 6).alias("mad"),
-        )
-    )
-
-
 def scd2_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type 2 build: compress each customer's
     time-ordered order-status history into validity intervals
@@ -1806,15 +1628,19 @@ def scd2_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ZSCORE_WINDOW = 10
+
+
 ZSCORE_MIN_HISTORY = 5
+
+
 ZSCORE_SIGMAS = 2.0
 
 
 def events_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly flags: each event compared against the mean
     and standard deviation of ITS OWN user's previous ZSCORE_WINDOW events
-    — the self-calibrating per-entity detector (complementing
-    events_anomaly_mad's global per-type robust stats). Events with fewer
+    — the self-calibrating per-entity detector (rather than global
+    per-type robust stats). Events with fewer
     than ZSCORE_MIN_HISTORY predecessors are unscored (cold-start rule).
 
     One shuffle: both rolling sums, the count, and the ordering share the
@@ -1858,36 +1684,6 @@ def events_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round("z", 6) + F.lit(0.0)).alias("z"),
         )
     )
-
-
-PATH_TOP_K = 25
-
-
-def events_path_topk(spark: SparkSession, sf_dir: str, k: int = PATH_TOP_K) -> DataFrame:
-    """Top event-type paths: the most frequent 3-step type sequences across
-    user streams — the path-mining companion to events_markov_transitions
-    (transitions say where users go NEXT; paths say which multi-step flows
-    dominate).
-
-    One (user_id; ts, event_id) window shuffle builds both lead columns;
-    the path rollup is a map-side-combinable groupBy over a key space
-    bounded by #types³; the global top-k orders by (count DESC, path ASC)
-    through a distributed TakeOrdered, never a full sort."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    paths = (
-        events.select(
-            F.col("event_type").alias("t0"),
-            F.lead("event_type", 1).over(w).alias("t1"),
-            F.lead("event_type", 2).over(w).alias("t2"),
-        )
-        .where(F.col("t2").isNotNull())
-        .select(F.concat_ws(" > ", "t0", "t1", "t2").alias("path"))
-    )
-    counts = paths.groupBy("path").agg(F.count(F.lit(1)).alias("n_paths"))
-    top = counts.orderBy(F.desc("n_paths"), F.asc("path")).limit(k)
-    w_rank = Window.orderBy(F.desc("n_paths"), F.asc("path"))
-    return top.withColumn("rank", F.row_number().over(w_rank).cast("bigint"))
 
 
 ABC_A_CUTOFF = 0.8
@@ -1979,47 +1775,10 @@ def customer_trailing_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_daily_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily p50/p90 of event values per type, with the day-over-day
-    median drift — the time-series quantile monitoring behind alerting
-    dashboards (a shifting median is the earliest robust signal of a
-    behavior change; events_anomaly_mad flags points, this tracks the
-    distribution itself).
-
-    One groupBy((type, day)) computes both exact percentiles map-side-
-    combinable-free (exact percentile needs the group's values — at
-    100 TB swap for approx_percentile's mergeable t-digest, same plan
-    shape); the drift lag window runs over the tiny (type × day)
-    relation. Percentiles round at 6dp (interpolated exact quantiles are
-    the same IEEE arithmetic in both engines; rounding removes the last
-    ulp of doubt), and day ordinals are exact integers."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events = load_table(spark, sf_dir, "events")
-    day = F.to_date(F.col("ts"))
-    per_day = events.groupBy(
-        F.col("event_type"), day.alias("day")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.percentile("value", F.lit(0.5)), 6).alias("p50"),
-        F.round(F.percentile("value", F.lit(0.9)), 6).alias("p90"),
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    return per_day.select(
-        "event_type",
-        "day",
-        "n_events",
-        "p50",
-        "p90",
-        (F.round(F.col("p50") - F.lag("p50").over(w), 6) + F.lit(0.0)).alias(
-            "p50_drift"
-        ),
-    )
-
-
 def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime-value curve: customers grouped by FIRST-order month,
     cumulative revenue tracked by month-offset from that first order — the
-    revenue companion of events_retention's activity triangle (retention
+    revenue companion of an activity-retention triangle (retention
     says who comes back; LTV says what coming back is worth), and the
     query behind every "payback period" chart.
 
@@ -2345,6 +2104,8 @@ def _daily_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2^EWMA_SHIFT is the weight of the current day; each older day halves.
 # Mirrored literally in the DuckDB oracle (oracles.py) — sync-pinned.
 EWMA_WINDOW_DAYS = 30
+
+
 EWMA_SHIFT = EWMA_WINDOW_DAYS - 1
 
 
@@ -2367,8 +2128,8 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist, which is exactly pandas' adjust=True normalization over the
     available observations.
 
-    Scale: daily counts are one map-side-combinable groupBy (shared with
-    events_cusum_drift); the window is expressed as explode(sequence) +
+    Scale: daily counts are one map-side-combinable groupBy; the window
+    is expressed as explode(sequence) +
     re-aggregate — an equi groupBy, no range join, no per-row window
     state, no ordering spine at all."""
     daily = _daily_event_counts(spark, sf_dir).withColumnRenamed(
@@ -2493,59 +2254,6 @@ def approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided CUSUM drift detection on daily event volume — the
-    sequential change-point statistic behind "did traffic structurally
-    shift?" (a one-day spike barely moves it; a sustained level change
-    accumulates linearly until the alarm fires).
-
-    The textbook recurrence S_t = max(0, S_{t−1} + dev_t) is not a
-    window function, but it has the exact closed form
-    S_t = P_t − min_{j≤t} P_j (prefix sum minus its running minimum) —
-    two ordinary cumulative windows. Deviations are cross-multiplied to
-    stay integer (dev_t = n_days·c_t − C_total avoids the non-exact mean
-    c̄ = C/n): every prefix sum, running min/max, and CUSUM value is an
-    EXACT BIGINT — immune to window-sum association differences between
-    engines (DuckDB's segment-tree window aggregation vs Spark's running
-    accumulation) — and only the final rescale by 1/n_days and the
-    3·√c̄ alarm threshold are (identical) double expressions.
-
-    The day spine is calendar-bounded, so the single-partition cumulative
-    windows are constant-size frames at any data scale (the
-    events_ewma_daily argument)."""
-    daily = _daily_event_counts(spark, sf_dir)
-    tot = daily.agg(
-        F.sum("daily_count").alias("c_total"), F.count(F.lit(1)).alias("n_days")
-    )
-    dev = F.col("n_days") * F.col("daily_count") - F.col("c_total")
-    with_dev = daily.crossJoin(F.broadcast(tot)).withColumn("dev", dev)
-    cum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    p = F.sum("dev").over(cum)
-    prefixed = with_dev.withColumn("p", p).withColumn(
-        "pmin", F.min("p").over(cum)
-    ).withColumn("pmax", F.max("p").over(cum))
-    mean_daily = F.col("c_total").cast("double") / F.col("n_days").cast("double")
-    scale = F.col("n_days").cast("double")
-    # P₀ = 0 (empty prefix) participates in the running extrema — that is
-    # exactly the max(0, ·) reset in the textbook recurrence
-    zero = F.lit(0).cast("bigint")
-    cusum_up = (F.col("p") - F.least(zero, F.col("pmin"))).cast("double") / scale
-    cusum_down = (F.greatest(zero, F.col("pmax")) - F.col("p")).cast("double") / scale
-    threshold = F.lit(3.0) * F.sqrt(mean_daily)
-    return prefixed.select(
-        "day",
-        "daily_count",
-        cusum_up.alias("cusum_up"),
-        cusum_down.alias("cusum_down"),
-        F.when(
-            (cusum_up > threshold) | (cusum_down > threshold), F.lit(1)
-        )
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("is_drift"),
-    )
-
-
 def orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition of monthly order revenue
     (trend = centered 2×12 moving average, seasonal = month-of-year mean
@@ -2628,8 +2336,14 @@ def orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bot-detection thresholds (events/hour peak, max distinct types, minimum
 # volume; a user tripping >= 2 of 3 flags is marked). Oracle-mirrored.
 BOT_PEAK_PER_HOUR = 20
+
+
 BOT_MAX_TYPES = 2
+
+
 BOT_MIN_EVENTS = 50
+
+
 BOT_MIN_FLAGS = 2
 
 
@@ -2987,7 +2701,7 @@ def orders_duplicate_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Forecast-backtest geometry: seasonal lag and the power-of-two EWMA
-# window reused from events_ewma_daily's convention. Oracle-mirrored.
+# window. Oracle-mirrored.
 FC_SEASON_LAG = 12
 FC_EWMA_LAGS = 6
 
@@ -3003,7 +2717,7 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: monthly revenue is a DECIMAL sum; every forecast is
     CALENDAR-true — naive/seasonal come from equi-joins on ym−1 / ym−12
     and the EWMA from power-of-two-weighted contributions keyed by
-    target month (the events_ewma_daily calendar trick: lagging by
+    target month (the calendar trick: lagging by
     observed ROW index would treat months across a revenue gap as
     consecutive), gated on all FC_EWMA_LAGS calendar months existing;
     error aggregation rounds each per-month term at 9dp into
@@ -3266,43 +2980,6 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-transition latency distribution for the sequential funnel —
-    events_funnel reports HOW MANY users reach each stage; this reports
-    HOW LONG the converting users took (the metric behind "is checkout
-    friction growing?"). Per converting user, the view→click and
-    click→purchase latencies in exact integer microseconds, rolled up per
-    stage as min/max/avg and interpolated p50/p90 (the
-    customer_order_gap_percentiles convention — identical arithmetic to
-    DuckDB's quantile_cont).
-
-    Scale: the one corpus-sized pass is the shared ``_funnel_milestones``
-    user window chain (materialized once — both stage branches read it);
-    everything after runs on the #users-row milestone frame."""
-    per_user = _funnel_milestones(spark, sf_dir).transform(truncate_lineage)
-    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))
-    vc = per_user.where(F.col("c_ts").isNotNull()).select(
-        F.lit("view_to_click").alias("stage"),
-        (us("c_ts") - us("v_ts")).alias("lat_us"),
-    )
-    cp = per_user.where(F.col("p_ts").isNotNull()).select(
-        F.lit("click_to_purchase").alias("stage"),
-        (us("p_ts") - us("c_ts")).alias("lat_us"),
-    )
-    return (
-        vc.unionByName(cp)
-        .groupBy("stage")
-        .agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.min("lat_us").alias("min_lat_us"),
-            F.max("lat_us").alias("max_lat_us"),
-            (F.sum("lat_us").cast("double") / F.count(F.lit(1))).alias("avg_lat_us"),
-            F.expr("percentile(lat_us, 0.5)").alias("p50_lat_us"),
-            F.expr("percentile(lat_us, 0.9)").alias("p90_lat_us"),
-        )
-    )
-
-
 # Logistic-regression training geometry — fixed full-batch GD steps, the
 # learning rate, and the feature scale, all mirrored literally in the
 # oracle's chained weight CTEs (sync-pinned).
@@ -3330,9 +3007,9 @@ def events_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     LR_STEPS iterates are bit-identical. The feature is value/LR_X_SCALE
     (fixed literal — no data-dependent standardization pass).
 
-    Scale (r14, the distributed-histogram shape events_decision_stump
-    already uses): every per-row term — gradient, log-loss, accuracy —
-    depends on the row ONLY through (x, y), so rows are grouped to
+    Scale (r14, a distributed-histogram shape): every per-row term —
+    gradient, log-loss, accuracy — depends on the row ONLY through
+    (x, y), so rows are grouped to
     (x, y, cnt) in ONE map-side-combinable pass, and all LR_STEPS+1
     passes run over that histogram (cardinality = distinct feature
     values, corpus-independent for fixed-precision features) instead of
@@ -3512,10 +3189,8 @@ def histogram_quantile_estimates(
 ) -> DataFrame:
     """Crossing-bin quantile finalize over a (keys…, b, cnt) histogram
     frame: per key group, the first bin whose exact integer cumulative
-    count reaches q·n, linearly interpolated within the bin. Shared by
-    events_quantile_sketch_report (no keys) and the streaming
-    per-window variant (keyed by window) — the hll_finalize convention
-    of ONE finalize implementation for both execution modes."""
+    count reaches q·n, linearly interpolated within the bin. The
+    streaming per-window sketch calls it keyed by window."""
     qs = spark.createDataFrame([(q,) for q in QSK_QUANTILES], "q double")
     if keys:
         wcum = (
@@ -3551,56 +3226,6 @@ def histogram_quantile_estimates(
                 )
             ).alias("estimate"),
         )
-    )
-
-
-def events_quantile_sketch_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-histogram quantile estimation with an exact-side error
-    audit — the third leg of the sketch family (approx_distinct_hll =
-    cardinality, text_heavy_hitters_cms = frequency; this = quantiles):
-    a fixed equi-width histogram is the simplest MERGEABLE quantile
-    summary (per-partition histograms add cell-wise — the same algebraic
-    property that lets HLL registers max-merge), so at 100 TB the state
-    is QSK_MAX_BIN+1 counters per shard instead of a global sort. The
-    report estimates p50/p90/p99 of the event value by in-bin linear
-    interpolation and joins each against the exact interpolated
-    percentile, showing the per-quantile absolute/relative error the
-    4-unit bin resolution costs.
-
-    Determinism: bin counts and cumulative ranks are exact integers
-    (histogram pass is ONE map-side-combinable aggregate, materialized
-    once); the crossing-bin pick is an integer predicate; interpolation
-    and the error columns are identical double trees; the exact side is
-    the established percentile/quantile_cont convention."""
-    ev = load_table(spark, sf_dir, "events")
-    hist = (
-        ev.select(histogram_bin(F.col("value")).alias("b"))
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .transform(truncate_lineage)
-    )
-    hit = histogram_quantile_estimates(spark, hist, [])
-    exact = ev.agg(
-        F.expr("percentile(value, 0.5)").alias("e50"),
-        F.expr("percentile(value, 0.9)").alias("e90"),
-        F.expr("percentile(value, 0.99)").alias("e99"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(F.lit(0.5).alias("q"), F.col("e50").alias("exact")),
-                F.struct(F.lit(0.9).alias("q"), F.col("e90").alias("exact")),
-                F.struct(F.lit(0.99).alias("q"), F.col("e99").alias("exact")),
-            )
-        ).alias("s")
-    ).select("s.q", "s.exact")
-    return hit.join(F.broadcast(exact), "q").select(
-        "q",
-        "estimate",
-        "exact",
-        F.abs(F.col("estimate") - F.col("exact")).alias("abs_err"),
-        (F.abs(F.col("estimate") - F.col("exact")) / F.col("exact")).alias(
-            "rel_err"
-        ),
     )
 
 
@@ -3816,132 +3441,10 @@ def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# AUC label threshold: a user is a positive iff they made at least this
-# many purchases. Shared by events_auc_report AND events_ab_lift;
-# sync-pinned to BOTH oracle literals.
+# Heavy-purchaser threshold: a user is a positive iff they made at least
+# this many purchases. Sync-pinned to the privacy_randomized_response
+# oracle literal.
 AUC_LABEL_MIN_PURCHASES = 10
-
-
-def events_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ROC-AUC of a per-user engagement score against the purchase
-    label — the standard offline-eval statistic for every ranking/quality
-    classifier this engine trains (logistic regression, decision stump,
-    quality calibration). Computed as the tie-aware Mann-Whitney rank sum:
-
-        AUC = (2·R⁺ − n⁺(n⁺+1)) / (2·n⁺·n⁻),  R⁺ = Σ avg-rank of positives
-
-    with average ranks carried DOUBLED so tie midpoints (x.5) stay exact
-    integers; the single division happens once in double.
-
-    Distributed shape: per-user label/score is one map-side-combined
-    groupBy(user_id); ranks come from ONE window over the per-SCORE
-    aggregate (cardinality = distinct scores, corpus-size-independent —
-    the "lag analytics over the aggregated series" pattern), never over
-    raw users. Degenerate labels (no positives or no negatives) emit NULL
-    AUC on both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        # label = HEAVY purchaser (>= AUC_LABEL_MIN_PURCHASES): the fixture
-        # is dense — every user has >= 1 of every event type at every
-        # scale, so an any-purchase label is all-ones and the AUC is
-        # vacuously NULL (the KM lesson, caught by the r9 pair-counting
-        # cross-check); the count threshold gives real label variation
-        (
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            >= F.lit(AUC_LABEL_MIN_PURCHASES)
-        )
-        .cast("bigint")
-        .alias("label"),
-        F.sum(F.when(F.col("event_type").isin("view", "click"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("score"),
-    )
-    per_score = users.groupBy("score").agg(
-        F.count(F.lit(1)).alias("n_s"),
-        F.sum("label").alias("p_s"),
-    )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_score.select(
-        "score",
-        "n_s",
-        "p_s",
-        F.coalesce(F.sum("n_s").over(w), F.lit(0)).alias("cum_before"),
-    )
-    # doubled average rank of the tie group: (min_rank + max_rank) =
-    # 2·cum_before + n_s + 1 — exact integers throughout
-    agg = ranked.agg(
-        F.sum("n_s").alias("n_users"),
-        F.sum("p_s").alias("n_pos"),
-        F.sum(F.col("p_s") * (F.lit(2) * F.col("cum_before") + F.col("n_s") + 1)).alias(
-            "r2_pos"
-        ),
-    )
-    n_neg = F.col("n_users") - F.col("n_pos")
-    auc = F.when(
-        (F.col("n_pos") > 0) & (n_neg > 0),
-        (
-            F.col("r2_pos").cast("double")
-            - F.col("n_pos").cast("double") * (F.col("n_pos") + 1).cast("double")
-        )
-        / (F.lit(2.0) * F.col("n_pos").cast("double") * n_neg.cast("double")),
-    )
-    return agg.select(
-        F.col("n_users").cast("bigint").alias("n_users"),
-        F.col("n_pos").cast("bigint").alias("n_pos"),
-        n_neg.cast("bigint").alias("n_neg"),
-        F.round(auc, 9).alias("auc"),
-        F.round(F.lit(2.0) * auc - F.lit(1.0), 9).alias("gini"),
-    )
-
-
-def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entropy rate of the session Markov chain — the information-theoretic
-    summary of events_markov_transitions: per from-state conditional
-    entropy H(s) = −Σ_t p(t|s)·log2 p(t|s), the state's empirical weight
-    π(s), and the contribution π(s)·H(s) whose total is the chain's
-    entropy rate (how predictable the next action is — the behavioral
-    counterpart of text_char_entropy).
-
-    All probabilities are exact-integer ratios divided once in double;
-    entropy terms round to 9dp and sum in DECIMAL(28,9) (the
-    order-independent float-sum rail); the rollup runs over the tiny
-    (type × type) transition matrix, so everything after the one window
-    shuffle (shared shape with events_markov_transitions) is map-side."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    pairs = events.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    counts = pairs.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    outs = counts.groupBy("from_type").agg(F.sum("n").alias("n_out"))
-    total = outs.agg(F.sum("n_out").alias("n_total"))
-    p = F.col("n").cast("double") / F.col("n_out").cast("double")
-    ent_term = F.round(-(p * F.log2(p)), 9).cast("decimal(28,9)")
-    ent = (
-        counts.join(F.broadcast(outs), "from_type")
-        .groupBy("from_type")
-        .agg(F.round(F.sum(ent_term).cast("double"), 9).alias("entropy_bits"))
-    )
-    return (
-        outs.join(ent, "from_type")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "from_type",
-            F.col("n_out").cast("bigint").alias("n_out"),
-            F.round(
-                F.col("n_out").cast("double") / F.col("n_total").cast("double"), 9
-            ).alias("pi"),
-            "entropy_bits",
-            F.round(
-                (F.col("n_out").cast("double") / F.col("n_total").cast("double"))
-                * F.col("entropy_bits"),
-                9,
-            ).alias("contribution_bits"),
-        )
-    )
 
 
 def parts_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4236,84 +3739,6 @@ def orders_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_retention_curve_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-law fit of the day-N retention curve: aggregate the cohort
-    retention triangle into one rate-per-day series (horizon-eligible
-    denominators), then closed-form OLS of ln(rate) on ln(day) — the
-    "retention exponent" scaling-law readout (b ≈ −0.5 is a typical
-    consumer curve; shallower means stickier).
-
-    Exactness: cohorts, horizons, retained/eligible counts are all
-    integers; each point's (ln day, ln rate) is one double expression;
-    the OLS sufficient statistics round to 9dp and sum in DECIMAL(28,9)
-    (order-independent — the float-sum rail); slope/intercept/r² divide
-    once in double. The fit runs over ≤ horizon-many points; everything
-    upstream is map-side-combinable groupBys plus one tiny
-    cohorts × days cross (both frames are date-cardinality sized)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id", F.to_date(F.expr("cast(ts as timestamp)")).alias("d")
-    )
-    cohorts = base.groupBy("user_id").agg(F.min("d").alias("c"))
-    mx = base.agg(F.max("d").alias("dmax"))
-    active = (
-        base.join(cohorts, "user_id")
-        .select("user_id", F.datediff("d", "c").cast("bigint").alias("day_n"))
-        .where(F.col("day_n") >= 1)
-        .distinct()
-    )
-    retained = active.groupBy("day_n").agg(
-        F.countDistinct("user_id").alias("retained")
-    )
-    csize = (
-        cohorts.crossJoin(F.broadcast(mx))
-        .groupBy("c")
-        .agg(
-            F.count(F.lit(1)).alias("size"),
-            F.first(F.datediff("dmax", "c")).cast("bigint").alias("horizon"),
-        )
-    )
-    days = retained.select("day_n")
-    eligible = (
-        days.join(F.broadcast(csize), F.col("horizon") >= F.col("day_n"))
-        .groupBy("day_n")
-        .agg(F.sum("size").alias("eligible"))
-    )
-    pts = (
-        retained.join(eligible, "day_n")
-        .where(F.col("retained") > 0)
-        .select(
-            F.log(F.col("day_n").cast("double")).alias("x"),
-            F.log(
-                F.col("retained").cast("double") / F.col("eligible").cast("double")
-            ).alias("y"),
-        )
-    )
-    dec = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    s = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).cast("double").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    vx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = nd * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    slope = F.when(vx > 0, cov / vx)
-    return s.select(
-        F.col("n").cast("bigint").alias("n_points"),
-        F.round(slope, 6).alias("slope"),
-        F.round((F.col("sy") - slope * F.col("sx")) / nd, 6).alias("intercept"),
-        F.round(
-            F.when((vx > 0) & (vy > 0), cov * cov / (vx * vy)), 6
-        ).alias("r2"),
-    )
-
-
 # 2-state HMM for daily activity decoding (calm=0 / busy=1), parameters as
 # exact scaled log-probabilities (×1000, bigint) — sync-pinned to the
 # oracle literals. ln(0.8)≈-223, ln(0.2)≈-1609, ln(0.5)≈-693 at 3dp scale.
@@ -4503,122 +3928,6 @@ def events_hmm_viterbi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction for the A/B readout — the modern
-    experimentation standard beside the plain z-test (events_ab_lift):
-    adjust each user's post-period metric with their PRE-period activity,
-    y_adj = y − θ·(x − x̄), θ = cov(x,y)/var(x) pooled across arms, which
-    removes the between-user variance the covariate explains and tightens
-    the same comparison the unadjusted test makes.
-
-    Determinism: the timeline splits at the exact µs midpoint; per-user
-    pre/post metrics are exact cents BIGINTs (the stream_user_totals
-    convention); θ's sufficient statistics are exact DECIMAL(38,0)
-    products summed before ONE double division; per-user adjusted values
-    are identical double trees, and every adjusted-side mean/variance sum
-    rides the 9dp-round → DECIMAL(28,9) rail. Output: one row per arm
-    with raw and adjusted means plus the pooled θ and the variance-
-    reduction ratio the adjustment bought."""
-    ev = load_table(spark, sf_dir, "events")
-    rng = ev.agg(
-        F.min(F.expr("unix_micros(cast(ts as timestamp))")).alias("lo"),
-        F.max(F.expr("unix_micros(cast(ts as timestamp))")).alias("hi"),
-    )
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_user = (
-        ev.crossJoin(F.broadcast(rng))
-        .select(
-            "user_id",
-            F.when(
-                F.expr("unix_micros(cast(ts as timestamp))")
-                <= F.expr("lo + (hi - lo) div 2"),
-                cents,
-            )
-            .otherwise(F.lit(0))
-            .alias("pre_c"),
-            F.when(
-                F.expr("unix_micros(cast(ts as timestamp))")
-                > F.expr("lo + (hi - lo) div 2"),
-                cents,
-            )
-            .otherwise(F.lit(0))
-            .alias("post_c"),
-        )
-        .groupBy("user_id")
-        .agg(F.sum("pre_c").alias("x"), F.sum("post_c").alias("y"))
-        .select(
-            "user_id",
-            "x",
-            "y",
-            F.when(F.col("user_id") % 2 == 0, F.lit("control"))
-            .otherwise(F.lit("treatment"))
-            .alias("arm"),
-        )
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    s = per_user.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(d38("x")).alias("sx"),
-        F.sum(d38("y")).alias("sy"),
-        F.sum(d38("x") * d38("y")).alias("sxy"),
-        F.sum(d38("x") * d38("x")).alias("sxx"),
-    )
-    nd = F.col("n").cast("double")
-    varx = nd * F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col(
-        "sx"
-    ).cast("double")
-    theta = F.when(
-        varx > 0,
-        (
-            nd * F.col("sxy").cast("double")
-            - F.col("sx").cast("double") * F.col("sy").cast("double")
-        )
-        / varx,
-    ).otherwise(F.lit(0.0))
-    stats = s.select(
-        theta.alias("theta"),
-        (F.col("sx").cast("double") / nd).alias("xbar"),
-    )
-    adj = per_user.crossJoin(F.broadcast(stats)).select(
-        "arm",
-        (F.col("y").cast("double") / F.lit(100.0)).alias("yd"),
-        (
-            (
-                F.col("y").cast("double")
-                - F.col("theta") * (F.col("x").cast("double") - F.col("xbar"))
-            )
-            / F.lit(100.0)
-        ).alias("ya"),
-        "theta",
-    )
-    dec9 = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    per_arm = adj.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum(dec9(F.col("yd"))).alias("sy"),
-        F.sum(dec9(F.col("yd") * F.col("yd"))).alias("syy"),
-        F.sum(dec9(F.col("ya"))).alias("sa"),
-        F.sum(dec9(F.col("ya") * F.col("ya"))).alias("saa"),
-        F.min("theta").alias("theta"),  # constant per row; min > first for discipline
-    )
-    an = F.col("n_users").cast("double")
-    var_raw = an * F.col("syy").cast("double") - F.col("sy").cast("double") * F.col(
-        "sy"
-    ).cast("double")
-    var_adj = an * F.col("saa").cast("double") - F.col("sa").cast("double") * F.col(
-        "sa"
-    ).cast("double")
-    return per_arm.select(
-        "arm",
-        "n_users",
-        F.round(F.col("sy").cast("double") / an, 6).alias("mean_metric"),
-        F.round(F.col("sa").cast("double") / an, 6).alias("mean_adjusted"),
-        F.round(F.col("theta"), 9).alias("theta"),
-        F.round(F.when(var_raw > 0, var_adj / var_raw), 6).alias(
-            "variance_ratio"
-        ),
-    )
-
-
 def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / WAU / MAU active-user series with the DAU/MAU stickiness
     ratio — the product-analytics staple. Exact distinct counts (no HLL):
@@ -4680,85 +3989,11 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of engagement across users (events and exact-cents
-    value) — the inequality readout behind "do 1% of users generate 90%
-    of the data?", which decides per-user caps and sampling strategy for
-    training-data pipelines.
-
-        G = (2·Σᵢ i·xᵢ) / (n·Σx) − (n+1)/n,   xᵢ ascending, i = 1..n
-
-    Exact integer sufficient statistics: per-user counts/cents from one
-    map-side-combined groupBy; ranks (r12, replacing a row_number window
-    with no partitionBy — one single-task sort over every user) from the
-    ``bucketed_rank`` boundary-sketch machinery with the (metric ASC,
-    user_id ASC) total tie-break (ties ordered arbitrarily change Σi·xᵢ
-    only between equal x values — the tie-break pins one order so both
-    engines agree bit-for-bit); the two Gini divisions happen once in
-    double. Σi·xᵢ is summed as DECIMAL(38,0) (rank × cents overflows
-    BIGINT at web-scale user counts)."""
-    ev = load_table(spark, sf_dir, "events")
-    # materialize ONCE: the two gini() branches share no physical plan
-    # otherwise (no cross-branch CSE in Spark) and each would rescan
-    # events + re-aggregate (r8 review)
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum((F.col("value").cast("decimal(12,2)") * 100).cast("bigint")).alias(
-                "cents"
-            ),
-        )
-        .transform(truncate_lineage)
-    )
-
-    # both metrics' boundary sketches ride ONE aggregate job over the
-    # checkpointed per-user frame (the customer_rfm shared-bounds pattern)
-    fr = [i / RANK_BUCKETS for i in range(1, RANK_BUCKETS)]
-    all_bounds = truncate_lineage(
-        per_user.agg(
-            *[
-                F.percentile_approx(m, fr, _RANK_PCTL_ACCURACY).alias(f"_bs_{m}")
-                for m in ("n_events", "cents")
-            ]
-        )
-    )
-
-    def gini(metric: str) -> DataFrame:
-        slim = per_user.select(F.col(metric).alias("x"), "user_id")
-        ranked = bucketed_rank(
-            slim,
-            "x",
-            "user_id",
-            "i",
-            bounds=all_bounds.select(F.col(f"_bs_{metric}").alias("_bs")),
-        ).select("x", "i")
-        s = ranked.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("x").cast("decimal(38,0)")).alias("sx"),
-            F.sum(
-                F.col("i").cast("decimal(38,0)") * F.col("x").cast("decimal(38,0)")
-            ).alias("six"),
-        )
-        nd = F.col("n").cast("double")
-        g = (
-            F.lit(2.0) * F.col("six").cast("double") / (nd * F.col("sx").cast("double"))
-            - (nd + F.lit(1.0)) / nd
-        )
-        return s.select(
-            F.lit(metric).alias("metric"),
-            F.col("n").cast("bigint").alias("n_users"),
-            F.round(g, 9).alias("gini"),
-        )
-
-    return gini("n_events").unionByName(gini("cents"))
-
-
 def orders_interrupted_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interrupted time-series analysis of daily revenue — the segmented-
     regression causal readout (level shift + trend change at the
     intervention) that completes the experimentation family beside the
-    randomized readouts (events_ab_lift / events_ab_cuped): when there is
+    randomized A/B readouts: when there is
     no control group, ITS is the standard quasi-experimental design.
 
     The intervention is the exact integer midpoint of the date range
@@ -4832,360 +4067,35 @@ def orders_interrupted_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# KS test pair and the α=0.05 two-sample coefficient c(α)=1.358,
-# sync-pinned to the oracle literals.
+# The two event types the permutation test compares, sync-pinned to the
+# oracle literals.
 KS_TYPE_A = "view"
 KS_TYPE_B = "click"
-KS_COEFF_05 = 1.358
 
 
-def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov test on event VALUE distributions
-    (view vs click) — the standard nonparametric drift/equality check
-    (are two segments drawing from the same distribution?) that completes
-    the statistics family beside the parametric readouts: D = sup over
-    the pooled support of |F̂_A − F̂_B|, compared to the α=0.05 bound
-    c(α)·√((n+m)/(n·m)).
-
-    Exact evaluation: values quantize to exact cents (the established
-    convention); both ECDFs are cumulative sums over the PER-VALUE
-    aggregate (distinct cents, not rows) through the
-    ``bucketed_cum_before`` boundary-sketch machinery (r12, replacing an
-    unpartitioned window — distinct cents scale with the corpus; both
-    ECDFs ride ONE machinery pass); |ΔF| at each support point is
-    the exact integer cross-difference |cumA·nB − cumB·nA| so the argmax
-    (tie → smaller value) needs no float compare; only the final D and
-    bound are doubles."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_v = (
-        ev.where(F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B))
-        .select(F.col("event_type").alias("et"), cents.alias("v"))
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("et") == KS_TYPE_A, 1).otherwise(0)).alias("ca"),
-            F.sum(F.when(F.col("et") == KS_TYPE_B, 1).otherwise(0)).alias("cb"),
-        )
-        # feeds the totals, the boundary sketch and both machinery passes
-        .transform(truncate_lineage)
-    )
-    tot = per_v.agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb")
-    )
-    cum = (
-        bucketed_cum_before(per_v, "v", ["ca", "cb"], ["_pa", "_pb"])
-        .select(
-            "v",
-            (F.col("_pa") + F.col("ca")).alias("cuma"),
-            (F.col("_pb") + F.col("cb")).alias("cumb"),
-        )
-        .crossJoin(F.broadcast(tot))
-    )
-    # cross-products widened to DECIMAL(38,0): cum·n overflows BIGINT at
-    # web-scale event counts (the events_user_gini overflow rule; r8
-    # review — the oracle side is HUGEINT-exact, so a silent wrap here
-    # would also be a divergence)
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    gap = F.abs(d38("cuma") * d38("nb") - d38("cumb") * d38("na"))
-    best = (
-        cum.select("v", gap.alias("g"), "na", "nb")
-        .orderBy(F.desc("g"), F.asc("v"))
-        .limit(1)
-    )
-    na, nb = F.col("na").cast("double"), F.col("nb").cast("double")
-    d = F.col("g").cast("double") / (na * nb)
-    bound = F.lit(KS_COEFF_05) * F.sqrt((na + nb) / (na * nb))
-    return best.select(
-        F.col("na").cast("bigint").alias("n_a"),
-        F.col("nb").cast("bigint").alias("n_b"),
-        (F.col("v").cast("double") / F.lit(100.0)).alias("d_at_value"),
-        F.round(d, 9).alias("ks_d"),
-        F.round(bound, 9).alias("reject_bound_05"),
-        (F.col("g").cast("double") > bound * na * nb).alias("reject_equal_05"),
-    )
-
-
-# KMV (k-minimum-values / theta) sketch parameters: retained minima per
-# set and the 60-bit hash domain (15 md5 hex chars). Sync-pinned.
-KMV_K = 64
-KMV_DOMAIN = float(1 << 60)
-
-
-def events_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV (theta) sketch SET ALGEBRA over per-event-type audiences — the
-    sketch capability HLL cannot give: estimate union, Jaccard and
-    INTERSECTION of distinct-user sets from k-minimum-value summaries
-    (Beyer et al.), reported beside the exact answers per type pair so
-    the estimator's error is measured, not assumed.
-
-    Deterministic by construction: the sketch is the KMV_K smallest
-    60-bit md5 hashes of each type's distinct users (a total order — no
-    randomness to diverge); the union sketch is the k smallest of the
-    merged minima with θ = its kth value; est_union = (k−1)·D/θ (exact
-    count when the set has fewer than k distinct hashes); Jaccard is the
-    fraction of the merged k-set present in BOTH input sketches;
-    est_intersection = Ĵ·est_union. All selections are rank windows
-    per type / type-pair over hash-distinct rows (corpus touched once
-    for the hash pass); exact counts come from the same distinct
-    relation. One double division per estimate."""
-    ev = load_table(spark, sf_dir, "events")
-    uh = (
-        ev.select("event_type", "user_id")
-        .distinct()
-        .select(
-            "event_type",
-            "user_id",
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("kmv:"), F.col("user_id").cast("string"))), 1, 15),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h"),
-        )
-        .transform(truncate_lineage)
-    )
-    wk = Window.partitionBy("event_type").orderBy("h")
-    kmv = uh.select(
-        "event_type", "h", F.row_number().over(wk).alias("rn")
-    ).where(F.col("rn") <= KMV_K)
-    types = uh.select("event_type").distinct()
-    pairs = (
-        types.select(F.col("event_type").alias("ta"))
-        .crossJoin(F.broadcast(types.select(F.col("event_type").alias("tb"))))
-        .where(F.col("ta") < F.col("tb"))
-    )
-    merged = (
-        pairs.join(
-            kmv.select(F.col("event_type").alias("ta"), F.col("h").alias("ha")),
-            "ta",
-        )
-        .select("ta", "tb", F.col("ha").alias("h"))
-        .unionByName(
-            pairs.join(
-                kmv.select(F.col("event_type").alias("tb"), F.col("h").alias("hb")),
-                "tb",
-            ).select("ta", "tb", F.col("hb").alias("h"))
-        )
-        .distinct()
-    )
-    wm = Window.partitionBy("ta", "tb").orderBy("h")
-    topk = merged.select(
-        "ta", "tb", "h", F.row_number().over(wm).alias("rn")
-    ).where(F.col("rn") <= KMV_K)
-    in_a = kmv.select(F.col("event_type").alias("ta"), F.col("h").alias("h"), F.lit(1).alias("ia"))
-    in_b = kmv.select(F.col("event_type").alias("tb"), F.col("h").alias("h"), F.lit(1).alias("ib"))
-    sk = (
-        topk.join(in_a, ["ta", "h"], "left")
-        .join(in_b, ["tb", "h"], "left")
-        .groupBy("ta", "tb")
-        .agg(
-            F.count(F.lit(1)).alias("k_used"),
-            F.max("h").alias("theta"),
-            F.sum(
-                F.when(F.col("ia").isNotNull() & F.col("ib").isNotNull(), 1).otherwise(0)
-            ).alias("n_both"),
-        )
-    )
-    exact_per_type = uh.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users")
-    )
-    exact_int = (
-        uh.select(F.col("event_type").alias("ta"), "user_id")
-        .join(uh.select(F.col("event_type").alias("tb"), "user_id"), "user_id")
-        .where(F.col("ta") < F.col("tb"))
-        .groupBy("ta", "tb")
-        .agg(F.countDistinct("user_id").alias("exact_intersection"))
-    )
-    est_union = F.when(
-        F.col("k_used") < F.lit(KMV_K),
-        F.col("k_used").cast("double"),
-    ).otherwise(
-        F.lit(float(KMV_K - 1)) * F.lit(KMV_DOMAIN) / F.col("theta").cast("double")
-    )
-    jac = F.col("n_both").cast("double") / F.col("k_used").cast("double")
-    return (
-        sk.join(
-            F.broadcast(
-                exact_per_type.select(F.col("event_type").alias("ta"), F.col("n_users").alias("exact_a"))
-            ),
-            "ta",
-        )
-        .join(
-            F.broadcast(
-                exact_per_type.select(F.col("event_type").alias("tb"), F.col("n_users").alias("exact_b"))
-            ),
-            "tb",
-        )
-        .join(exact_int, ["ta", "tb"])
-        .select(
-            "ta",
-            "tb",
-            F.col("exact_a").cast("bigint").alias("exact_a"),
-            F.col("exact_b").cast("bigint").alias("exact_b"),
-            F.col("exact_intersection").cast("bigint").alias("exact_intersection"),
-            F.round(est_union, 6).alias("est_union"),
-            F.round(jac, 9).alias("est_jaccard"),
-            F.round(jac * est_union, 6).alias("est_intersection"),
-        )
-    )
-
-
-def events_changepoint_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single change-point DETECTION over daily event value — binary
-    segmentation's first split (the data-chosen complement of
-    orders_interrupted_timeseries' fixed intervention, and the offline
-    twin of events_cusum_drift): the split day maximizing the
-    between-segment sum-of-squares reduction
-
-        R(s) = (n_r·S_l − n_l·S_r)² / (n_l·n_r·n)
-
-    (the variance-reduction form whose numerator is an EXACT integer in
-    cents — S are exact cents sums, n are day counts — so each
-    candidate's score is one double division of exact integers: identical
-    bits on both engines, and the argmax carries a day ASC tie-break).
-
-    Shape: per-day cents sums from one groupBy; candidate scores from ONE
-    cumulative window over the per-DAY aggregate; the argmax is
-    TakeOrdered(1). Numerator widened to DECIMAL(38,0) before squaring
-    (cents·days products overflow BIGINT at scale)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date(F.expr("cast(ts as timestamp)")).alias("day")).agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum((F.col("value").cast("decimal(12,2)") * 100).cast("bigint")).alias(
-            "s"
-        ),
-    )
-    tot = daily.agg(F.sum("c").alias("n"), F.sum("s").alias("stot"))
-    wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    pre = daily.select(
-        "day",
-        F.sum("c").over(wc).alias("nl"),
-        F.sum("s").over(wc).alias("sl"),
-    ).crossJoin(F.broadcast(tot))
-    nl, nr = F.col("nl"), F.col("n") - F.col("nl")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    num = d38(nr) * d38(F.col("sl")) - d38(nl) * d38(F.col("stot") - F.col("sl"))
-    score = (
-        (num.cast("double") * num.cast("double"))
-        / (nl.cast("double") * nr.cast("double") * F.col("n").cast("double"))
-    )
-    cand = pre.where(nr > 0).select(
-        "day",
-        nl.cast("bigint").alias("n_left"),
-        nr.cast("bigint").alias("n_right"),
-        (F.col("sl").cast("double") / F.lit(100.0) / nl.cast("double")).alias(
-            "mean_left"
-        ),
-        (
-            (F.col("stot") - F.col("sl")).cast("double")
-            / F.lit(100.0)
-            / nr.cast("double")
-        ).alias("mean_right"),
-        score.alias("r"),
-    )
-    best = cand.orderBy(F.desc("r"), F.asc("day")).limit(1)
-    return best.select(
-        F.col("day").alias("split_day"),
-        "n_left",
-        "n_right",
-        F.round("mean_left", 6).alias("mean_left"),
-        F.round("mean_right", 6).alias("mean_right"),
-        F.round(F.col("r") / F.lit(10000.0), 6).alias("sse_reduction"),
-    )
-
-
-# --- r9 additions: rank-based tests, Benford QA, Poisson bootstrap, robust
-# (winsorized/trimmed) stats ------------------------------------------------
-
-# Mann-Whitney: same two groups as the KS test; z rejection at two-sided
-# α=0.05. Sync-pinned to the oracle literals.
-MW_Z_05 = 1.96
+# --- r9 additions: Benford QA and the permutation test ---------------------
 
 # Benford: chi-square critical value for df=8 at α=0.05.
 BENFORD_CHI2_CRIT_05 = 15.507
+
 
 # Poisson bootstrap: replicate count and the rank positions of the CI
 # endpoints among the sorted replicate means (rank 2 / rank 31 of 32 ≈ the
 # central 90%+ band). Sync-pinned.
 BOOT_B = 32
+
+
 BOOT_LO_RANK = 2
+
+
 BOOT_HI_RANK = 31
+
+
 BOOT_TYPE = "purchase"
+
 
 # Winsorized stats: lower/upper quantile positions (5% / 95%).
 WINSOR_LO_NUM, WINSOR_HI_NUM, WINSOR_DEN = 5, 95, 100
-
-
-def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Mann-Whitney U (Wilcoxon rank-sum) test on event VALUE
-    distributions (view vs click) — the rank-based location test beside
-    the KS distribution-equality test: robust to outliers and any
-    monotone transform, the standard nonparametric A/B readout.
-
-    Exact evaluation on the per-value aggregate (cents, the established
-    quantization): with per-value counts (ca, cb) in pooled value order,
-    the tie-averaged rank of every row at value v is prev_cum + (c+1)/2,
-    so TWICE the rank sum of group A is the exact integer
-    Σ_v ca·(2·prev_cum + c + 1) and 2·U_A = 2·R_A − n_a·(n_a+1) needs no
-    float arithmetic. The normal approximation applies the standard tie
-    correction: σ² = (n_a·n_b/12)·((n+1) − Σ(t³−t)/(n·(n−1))). Cross
-    products ride DECIMAL(38,0) (t³ overflows BIGINT at web-scale counts
-    — the events_user_gini rule); only μ, σ and z divide in double, with
-    the identical expression tree on both engines.
-
-    Shape: one groupBy(value), then the ``bucketed_cum_before``
-    boundary-sketch machinery over the DISTINCT-value relation (r12,
-    replacing an unpartitioned cumulative window — distinct cents scale
-    with the corpus, the events_kruskal_wallis advice) — the KS-test
-    plan, corpus touched once."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_v = (
-        ev.where(F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B))
-        .select(F.col("event_type").alias("et"), cents.alias("v"))
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("et") == KS_TYPE_A, 1).otherwise(0)).alias("ca"),
-            F.sum(F.when(F.col("et") == KS_TYPE_B, 1).otherwise(0)).alias("cb"),
-        )
-        .withColumn("c", F.col("ca") + F.col("cb"))
-        # feeds the boundary sketch and both machinery passes
-        .transform(truncate_lineage)
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    ranked = bucketed_cum_before(per_v, "v", "c", "prev")
-    stats = ranked.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
-        # 2·R_A: exact integer rank-sum ×2 (tie-averaged ranks are .5-granular)
-        F.sum(
-            d38("ca") * (F.lit(2) * d38("prev") + d38("c") + F.lit(1))
-        ).alias("r2a"),
-        # tie correction term Σ(t³ − t) over pooled tie groups
-        F.sum(d38("c") * d38("c") * d38("c") - d38("c")).alias("ties"),
-    )
-    na, nb = F.col("na").cast("double"), F.col("nb").cast("double")
-    n = na + nb
-    # 2·U_A exact, then U_A in double (the ÷2 is exact: .5-granular)
-    u2a = F.col("r2a") - d38("na") * (d38("na") + F.lit(1))
-    ua = u2a.cast("double") / F.lit(2.0)
-    mu = na * nb / F.lit(2.0)
-    sigma = F.sqrt(
-        na * nb / F.lit(12.0)
-        * ((n + F.lit(1.0)) - F.col("ties").cast("double") / (n * (n - F.lit(1.0))))
-    )
-    z = F.when(sigma != F.lit(0.0), (ua - mu) / sigma)
-    return stats.select(
-        F.col("na").alias("n_a"),
-        F.col("nb").alias("n_b"),
-        F.round(ua, 6).alias("u_a"),
-        F.round(mu, 6).alias("mu_u"),
-        F.round(sigma, 6).alias("sigma_u"),
-        F.round(z, 9).alias("z"),
-        (F.abs(z) > F.lit(MW_Z_05)).alias("reject_equal_05"),
-    )
 
 
 def orders_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5308,7 +4218,7 @@ def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("w").alias("sw"),
             # Σ w·cv widened to DECIMAL(38,0): replicate cents sums wrap
             # BIGINT at web-scale row counts while the oracle's HUGEINT
-            # stays exact (the events_user_gini rule; r9 review)
+            # stays exact (r9 review)
             F.sum(
                 F.col("w").cast("decimal(38,0)") * F.col("cv").cast("decimal(38,0)")
             ).alias("swx"),
@@ -5397,7 +4307,7 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped = F.greatest(F.least(F.col("v"), F.col("q_hi")), F.col("q_lo"))
     inside = (F.col("v") >= F.col("q_lo")) & (F.col("v") <= F.col("q_hi"))
     # cnt·v widened to DECIMAL(38,0): per-value count × cents overflows
-    # BIGINT at web-scale row counts (the events_user_gini envelope rule)
+    # BIGINT at web-scale row counts while the oracle's HUGEINT is exact
     d38 = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     agg = joined.groupBy("event_type").agg(
         F.sum("cnt").alias("n"),
@@ -5422,8 +4332,9 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Permutation (randomization) test: replicate count and the two compared
-# groups (the KS/Mann-Whitney pair). Sync-pinned to the oracle literals.
+# Permutation (randomization) test: replicate count (the two compared
+# groups are KS_TYPE_A / KS_TYPE_B above). Sync-pinned to the oracle
+# literals.
 PERM_B = 64
 
 
@@ -5460,7 +4371,7 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("bigint").alias("na"),
         F.sum(F.when(~F.col("is_a"), 1).otherwise(0)).cast("bigint").alias("nb"),
         # cents sums in DECIMAL(38,0): BIGINT wraps silently at corpus
-        # scale while the oracle's HUGEINT is exact (events_user_gini rule)
+        # scale while the oracle's HUGEINT is exact
         F.sum(
             F.when(F.col("is_a"), F.col("cv")).otherwise(F.lit(0)).cast("decimal(38,0)")
         ).alias("sa"),
@@ -5475,7 +4386,7 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row frame with THREE consumers (the replicate pass's cut broadcast,
     # the tail's diff_obs broadcast, the final select): checkpoint it so the
     # corpus aggregate runs once, not once per consumer (the multi-consumer
-    # truncate_lineage discipline; same fix class as events_sprt_boundary)
+    # truncate_lineage discipline)
     obs = tot.select(
         "na",
         "nb",
@@ -5559,75 +4470,6 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences readout: user-parity arms (the ab_lift
-    assignment) × exact-µs-midpoint pre/post periods (the CUPED split),
-    metric = mean event value — the 2×2 quasi-experimental estimator that
-    completes the experimentation family (randomized: ab_lift/CUPED;
-    single-series: ITS; this is the two-group two-period workhorse):
-
-        DiD = (ȳ_T,post − ȳ_T,pre) − (ȳ_C,post − ȳ_C,pre)
-
-    Determinism: cell sums are exact cents in DECIMAL(38,0) (the
-    events_user_gini envelope), counts exact; the four means and the DiD
-    divide once in double with the identical expression tree on both
-    engines. One corpus pass to the 4-cell aggregate; everything after is
-    4 rows."""
-    ev = load_table(spark, sf_dir, "events")
-    rng = ev.agg(
-        F.min(F.expr("unix_micros(cast(ts as timestamp))")).alias("lo"),
-        F.max(F.expr("unix_micros(cast(ts as timestamp))")).alias("hi"),
-    )
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    cells = (
-        ev.crossJoin(F.broadcast(rng))
-        .select(
-            F.when(F.col("user_id") % 2 == 0, F.lit("control"))
-            .otherwise(F.lit("treatment"))
-            .alias("arm"),
-            F.when(
-                F.expr("unix_micros(cast(ts as timestamp))")
-                <= F.col("lo") + F.expr("(hi - lo) div 2"),
-                F.lit("pre"),
-            )
-            .otherwise(F.lit("post"))
-            .alias("period"),
-            cents.alias("cv"),
-        )
-        .groupBy("arm", "period")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("cv").cast("decimal(38,0)")).alias("s"),
-        )
-    )
-    mean = F.col("s").cast("double") / F.col("n").cast("double") / F.lit(100.0)
-    wide = (
-        cells.select("arm", "period", F.col("n").cast("bigint").alias("n"), mean.alias("m"))
-        .groupBy()
-        .pivot("arm", ["control", "treatment"])
-        .agg(
-            F.sum(F.when(F.col("period") == "pre", F.col("m"))).alias("pre"),
-            F.sum(F.when(F.col("period") == "post", F.col("m"))).alias("post"),
-            F.sum(F.when(F.col("period") == "pre", F.col("n"))).alias("n_pre"),
-            F.sum(F.when(F.col("period") == "post", F.col("n"))).alias("n_post"),
-        )
-    )
-    did = (F.col("treatment_post") - F.col("treatment_pre")) - (
-        F.col("control_post") - F.col("control_pre")
-    )
-    return wide.select(
-        F.col("control_n_pre").cast("bigint").alias("n_control_pre"),
-        F.col("control_n_post").cast("bigint").alias("n_control_post"),
-        F.col("treatment_n_pre").cast("bigint").alias("n_treatment_pre"),
-        F.col("treatment_n_post").cast("bigint").alias("n_treatment_post"),
-        F.round("control_pre", 9).alias("mean_control_pre"),
-        F.round("control_post", 9).alias("mean_control_post"),
-        F.round("treatment_pre", 9).alias("mean_treatment_pre"),
-        F.round("treatment_post", 9).alias("mean_treatment_post"),
-        F.round(did, 9).alias("did_estimate"),
-    )
-
-
 def orders_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly LASPEYRES price index of shipped parts (base = the first
     ship month): I_t = Σᵢ p_{i,t}·q_{i,0} / Σᵢ p_{i,0}·q_{i,0} × 100 over
@@ -5689,6 +4531,8 @@ def orders_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket-triple enumeration stays control-plane sized at ANY corpus
 # scale. Sync-pinned to the oracle literals.
 ISO_BUCKET_W = 5
+
+
 ISO_BUCKET_MAX = 31
 
 
@@ -5792,7 +4636,11 @@ def isotonic_rates(per_b: DataFrame) -> DataFrame:
 # Split-conformal parameters: miscoverage alpha = CONF_ALPHA_NUM/DEN,
 # calibration split = even event ids. Sync-pinned to the oracle literals.
 CONF_ALPHA_NUM = 1
+
+
 CONF_ALPHA_DEN = 10
+
+
 CONF_TYPE = "purchase"
 
 
@@ -6025,6 +4873,8 @@ TUKEY_Q_CRIT_05_BY_K = {  # q(k, df=inf, alpha=0.05), studentized range
     2: 2.772, 3: 3.314, 4: 3.633, 5: 3.858, 6: 4.030,
     7: 4.170, 8: 4.286, 9: 4.387, 10: 4.474,
 }
+
+
 ANOVA_F_CRIT_05_BY_DF1 = {  # F(df1, inf) upper 5% point (= chi2(df1)/df1)
     1: 3.841, 2: 2.996, 3: 2.605, 4: 2.372, 5: 2.214,
     6: 2.099, 7: 2.010, 8: 1.938, 9: 1.880,
@@ -6147,7 +4997,11 @@ def events_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # grid for the experiment-design readout. Sync-pinned to the oracle
 # literals (test_r11_constants_in_sync).
 POWER_Z_ALPHA_2 = 1.96
+
+
 POWER_Z_BETA_80 = 0.842
+
+
 POWER_MDE_PCTS = [1, 2, 5, 10]
 
 
@@ -6341,87 +5195,15 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_empirical_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bayes shrinkage of per-user conversion rates — the
-    beta-binomial smoothing every ranking/quality pipeline needs before
-    trusting small-sample rates (a 2/2 user must not outrank a 95/100
-    user): the Beta(α, β) prior is fitted to the corpus's own rate
-    distribution by method of moments,
-
-        α+β = m(1−m)/v − 1,   α = m·(α+β),
-
-    and each user's rate shrinks to (purchases + α)/(events + α + β).
-
-    Exact evaluation: per-user counts are exact integers; each raw rate
-    and squared rate rides the 9dp-DECIMAL sum rail (corpus moments must
-    not depend on float summation order); m, v, α, β and every shrunk
-    rate are identical double expression trees. The degenerate prior
-    (v = 0 or an off-support moment fit) yields NULL α/β and shrunk =
-    raw on BOTH engines.
-
-    Scale shape: one map-side-combined per-user aggregate, one 1-row
-    moment aggregate broadcast back — corpus touched once."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum(
-                F.when(
-                    F.col("event_type") == F.lit("purchase"), F.lit(1)
-                ).otherwise(F.lit(0))
-            )
-            .cast("bigint")
-            .alias("n_purchases"),
-        )
-        # two consumers (moments + output) — one corpus pass (r11 review)
-        .transform(truncate_lineage)
-    )
-    raw = F.col("n_purchases").cast("double") / F.col("n_events").cast("double")
-    r9 = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    moments = per_user.select(
-        raw.alias("r"), r9(raw).alias("r1"), r9(raw * raw).alias("r2")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum("r1").alias("s1"),
-        F.sum("r2").alias("s2"),
-    )
-    n = F.col("n_users").cast("double")
-    m = F.col("s1").cast("double") / n
-    # sample variance from the railed moments: (Σr² − n·m²)/(n−1)
-    v = (F.col("s2").cast("double") - n * m * m) / (n - F.lit(1.0))
-    ab = m * (F.lit(1.0) - m) / v - F.lit(1.0)
-    prior = moments.select(
-        "n_users",
-        m.alias("m"),
-        v.alias("v"),
-        F.when((v > 0) & (ab > 0), m * ab).alias("alpha"),
-        F.when((v > 0) & (ab > 0), (F.lit(1.0) - m) * ab).alias("beta"),
-    )
-    shrunk = F.when(
-        F.col("alpha").isNotNull(),
-        (F.col("n_purchases").cast("double") + F.col("alpha"))
-        / (F.col("n_events").cast("double") + F.col("alpha") + F.col("beta")),
-    ).otherwise(raw)
-    return (
-        per_user.crossJoin(F.broadcast(prior))
-        .select(
-            "user_id",
-            "n_events",
-            "n_purchases",
-            raw.alias("raw_rate"),
-            shrunk.alias("shrunk_rate"),
-            "alpha",
-            "beta",
-        )
-    )
-
-
 # Granger-style lagged-predictor screen: cause/effect event types and the
 # F(1, inf) critical value. Sync-pinned to the oracle literals
 # (test_r11_constants_in_sync).
 GRANGER_CAUSE_TYPE = "view"
+
+
 GRANGER_EFFECT_TYPE = "purchase"
+
+
 GRANGER_F_CRIT_05 = 3.841  # F(1, inf) upper 5% = chi2(1)
 
 
@@ -6586,720 +5368,6 @@ def events_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Absorbing-Markov session-outcome parameters: success/failure absorbing
-# states and the truncated hitting horizon. Sync-pinned to the oracle
-# literals (test_r11_constants_in_sync).
-MARKOV_ABSORB_SUCCESS = "purchase"
-MARKOV_ABSORB_FAIL = "error"
-MARKOV_ABSORB_HORIZON = 8
-
-
-def events_absorption_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Absorbing-Markov session outcomes: from each event-type state, the
-    probability the chain hits PURCHASE before ERROR within
-    MARKOV_ABSORB_HORIZON steps — the quantitative "which states funnel
-    toward conversion vs failure" readout on top of the transition
-    matrix (transitions say where one step goes; this says where the
-    walk ENDS), with purchase/error imposed as absorbing.
-
-    Evaluation: transition counts come from the same (ts, event_id)
-    tie-safe lead window as events_markov_transitions; the k² count
-    matrix is CONSTANT-SIZE, so the 8 value-iteration rounds
-    h_{t+1}(i) = Σ_j (c_ij/tot_i)·h_t(j) run driver-side (the Lloyd's
-    centroids / PCA precedent — 8 tiny Spark jobs would be pure
-    scheduler overhead), with each product rounded to 9dp and summed in
-    Decimal so the recurrence is order-free and bit-reproducible; the
-    oracle replays the identical 8 rounds as chained MATERIALIZED CTEs.
-    A non-absorbing state with no outgoing transitions scores 0 on both
-    engines.
-
-    Scale shape: ONE corpus pass (user-keyed window + map-side-combined
-    (from, to) groupBy); everything after is k×k control-plane."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    pairs = events.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    rows = (
-        pairs.groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .collect()
-    )
-    cnt = {(r.from_type, r.to_type): r.c for r in rows}
-    states = sorted({k[0] for k in cnt} | {k[1] for k in cnt})
-    tot = {
-        s: sum(c for (i, _), c in cnt.items() if i == s) for s in states
-    }
-    q9 = lambda x: Decimal(x).quantize(  # noqa: E731
-        Decimal("1e-9"), rounding=ROUND_HALF_UP
-    )
-    h = {
-        s: 1.0 if s == MARKOV_ABSORB_SUCCESS else 0.0 for s in states
-    }
-    for _ in range(MARKOV_ABSORB_HORIZON):
-        nh = {}
-        for i in states:
-            if i == MARKOV_ABSORB_SUCCESS:
-                nh[i] = 1.0
-            elif i == MARKOV_ABSORB_FAIL:
-                nh[i] = 0.0
-            elif tot[i] == 0:
-                nh[i] = 0.0
-            else:
-                acc = Decimal(0)
-                for j in states:
-                    c = cnt.get((i, j), 0)
-                    if c:
-                        acc += q9((c / tot[i]) * h[j])
-                nh[i] = float(acc)
-        h = nh
-    out = [
-        (
-            s,
-            s in (MARKOV_ABSORB_SUCCESS, MARKOV_ABSORB_FAIL),
-            int(tot[s]),
-            float(h[s]),
-        )
-        for s in states
-    ]
-    return spark.createDataFrame(
-        out,
-        "state string, is_absorbing boolean, n_out_transitions bigint, "
-        "p_hit_success double",
-    )
-
-
-def events_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation between per-user activity (event count)
-    and spend (purchase cents) — the monotone-association readout that
-    completes the correlation family (Pearson assumes linearity; ranks
-    are robust to heavy tails and any monotone transform of spend).
-
-    Exact evaluation: tie-averaged ranks come from the Mann-Whitney
-    machinery — per-value aggregates with a cumulative window, where
-    rank(v) = prev_cum + (c+1)/2 — and DOUBLED ranks are exact integers
-    (ties average to .5 granularity), so Pearson's correlation over
-    (2·rx, 2·ry) uses DECIMAL(38,0) sufficient statistics and divides
-    ONCE in double: ρ = (n·Σxy − Σx·Σy) / √(n·Σx² − (Σx)²) /
-    √(n·Σy² − (Σy)²), identical trees on both engines. Degenerate
-    variance (a constant column) yields NULL ρ on both engines.
-
-    Scale shape: one per-user corpus aggregate; each rank pass is a
-    groupBy over DISTINCT values plus (r12, replacing an unpartitioned
-    cumulative window — a single-task sort of a relation that for the
-    spend side grows with the user base) the ``bucketed_cum_before``
-    boundary-sketch machinery. The x-rank relation (distinct per-user
-    EVENT COUNTS — bounded by the busiest user's activity, genuinely
-    dimension-like) broadcasts; the y-rank relation (distinct spend
-    sums ≈ user cardinality) must NOT broadcast — it joins back
-    shuffle-hash on the near-unique y key (the one hot key, y=0 for
-    non-purchasers, matches a single build row, which AQE's skew split
-    duplicates for free). The final correlation is a 1-row aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("x"),
-            F.sum(
-                F.when(F.col("event_type") == F.lit("purchase"), cents).otherwise(
-                    F.lit(0)
-                )
-            )
-            .cast("bigint")
-            .alias("y"),
-        )
-        # one corpus pass; three consumers (two rank passes + the join)
-        .transform(truncate_lineage)
-    )
-
-    def ranks2(col: str) -> DataFrame:
-        """(value, doubled tie-averaged rank) for one metric column."""
-        per_v = per_user.groupBy(col).agg(F.count(F.lit(1)).alias("c"))
-        cum = bucketed_cum_before(per_v, col, "c", "_cb")
-        return cum.select(
-            col,
-            (2 * F.col("_cb") + F.col("c") + F.lit(1))
-            .cast("bigint")
-            .alias(f"r2_{col}"),
-        )
-
-    ranked = per_user.join(F.broadcast(ranks2("x")), "x").join(
-        ranks2("y").hint("shuffle_hash"), "y"
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    s = ranked.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(d38("r2_x")).alias("sx"),
-        F.sum(d38("r2_y")).alias("sy"),
-        F.sum(d38("r2_x") * d38("r2_x")).alias("sxx"),
-        F.sum(d38("r2_y") * d38("r2_y")).alias("syy"),
-        F.sum(d38("r2_x") * d38("r2_y")).alias("sxy"),
-    )
-    vx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    vy = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    return s.select(
-        "n",
-        F.when((vx > 0) & (vy > 0), num / F.sqrt(vx) / F.sqrt(vy)).alias(
-            "spearman_rho"
-        ),
-    )
-
-
-def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index of the event-value distribution, weekday
-    (reference) vs weekend (actual), per event type — the standard
-    production-ML drift monitor for "did this feature's distribution move
-    between two populations" (the same readout a 100 TB training-data
-    pipeline runs between ingestion snapshots).
-
-    Method: 10 equal-width buckets over the REFERENCE population's
-    [min, max] per event type (actual values clamp to the edge buckets),
-    Laplace-smoothed proportions p_b = (c_b + 1)/(n + 10) on BOTH sides so
-    empty buckets stay finite and every bucket contributes,
-    PSI = Σ_b (p_b − q_b)·ln(p_b/q_b). The ln output is explicitly rounded
-    to 7 decimals (the round(exp(...), 6) perplexity precedent) so the one
-    transcendental in the tree cannot ulp-split the engines.
-
-    Weekday/weekend is evaluated with each engine's own day-of-week
-    function under its own encoding (Spark dayofweek 1=Sun..7=Sat; DuckDB
-    0=Sun..6=Sat) — semantically identical predicates.
-
-    Scale shape: two corpus passes (one min/max aggregate over the
-    reference side, one bucket-count aggregate), both map-side combinable
-    to #event_types×10 keys; the bucket spine and edge frames broadcast.
-    No window over raw rows, no join keyed on anything bigger than
-    event_type."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # NULL values drop: greatest/least SKIP nulls, so an unguarded NULL
-    # row would silently land in bucket 9 and fake tail drift.
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.col("value").cast("double").alias("v"),
-            F.dayofweek("ts").isin(1, 7).alias("is_weekend"),
-        )
-    )
-    edges = (
-        ev.filter(~F.col("is_weekend"))
-        .groupBy("event_type")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    )
-    bucketed = ev.join(F.broadcast(edges), "event_type", "left").select(
-        "event_type",
-        "is_weekend",
-        F.when(
-            F.col("mx") > F.col("mn"),
-            F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(9),
-                    F.floor(
-                        (F.col("v") - F.col("mn")) * 10.0 / (F.col("mx") - F.col("mn"))
-                    ).cast("int"),
-                ),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .alias("bucket"),
-    )
-    counts = (
-        bucketed.groupBy("event_type", "bucket")
-        .agg(
-            F.sum(F.when(~F.col("is_weekend"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("c_ref"),
-            F.sum(F.when(F.col("is_weekend"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("c_act"),
-        )
-        # types×10 rows feeding the spine, the totals AND the final join —
-        # without this the two corpus passes replicate per consumer.
-        .transform(truncate_lineage)
-    )
-    spine = (
-        counts.select("event_type")
-        .distinct()
-        .select("event_type", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("bucket"))
-    )
-    full = spine.join(counts, ["event_type", "bucket"], "left").na.fill(
-        {"c_ref": 0, "c_act": 0}
-    )
-    tot = full.groupBy("event_type").agg(
-        F.sum("c_ref").cast("bigint").alias("n_ref"),
-        F.sum("c_act").cast("bigint").alias("n_act"),
-    )
-    # Per-bucket term → round(9) → DECIMAL(28,9) → exact sum (the Benford
-    # float-sum rail: a raw double SUM would drift with partition order).
-    p = lambda c, n: (F.col(c).cast("double") + 1.0) / (  # noqa: E731
-        F.col(n).cast("double") + 10.0
-    )
-    term = F.round(
-        (p("c_ref", "n_ref") - p("c_act", "n_act"))
-        * F.log(p("c_ref", "n_ref") / p("c_act", "n_act")),
-        9,
-    ).cast("decimal(28,9)")
-    return (
-        full.join(F.broadcast(tot), "event_type")
-        .groupBy("event_type", "n_ref", "n_act")
-        .agg(F.round(F.sum(term).cast("double"), 7).alias("psi"))
-    )
-
-
-def events_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér's V association between event type and day-of-week — the
-    categorical-×-categorical dependence readout (is traffic mix a
-    function of the day?), the complement to the numeric correlation
-    family (Pearson/Spearman) already in the registry.
-
-    χ² is evaluated over the FULL observed r×c spine (row-total ×
-    column-total cross join, observed counts left-joined in) so
-    zero-observed cells still contribute their expected mass — dropping
-    them is the classic contingency-table bug. Expected counts e = rt·ct/n
-    and the χ² fold use only IEEE +,−,×,÷ (identical trees both engines,
-    no rounding needed). V = √(χ²/(n·min(r−1, c−1))), NULL when the table
-    is degenerate (a single row or column).
-
-    Scale shape: one corpus pass map-side combined to ≤ 7·#event_types
-    cells; everything after is arithmetic over broadcast-size frames."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", (F.dayofweek("ts") - 1).alias("dow")
-    )
-    cells = ev.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).cast("bigint").alias("o")
-    )
-    cells = cells.transform(truncate_lineage)  # 3 consumers below
-    rows = cells.groupBy("event_type").agg(F.sum("o").alias("rt"))
-    cols = cells.groupBy("dow").agg(F.sum("o").alias("ct"))
-    n = cells.agg(F.sum("o").alias("n"))
-    spine = (
-        rows.crossJoin(F.broadcast(cols))
-        .join(cells, ["event_type", "dow"], "left")
-        .na.fill({"o": 0})
-        .crossJoin(F.broadcast(n))
-    )
-    e = F.col("rt").cast("double") * F.col("ct").cast("double") / F.col(
-        "n"
-    ).cast("double")
-    # Per-cell contribution rides the Benford float-sum rail (round(9) →
-    # DECIMAL(28,9) → exact order-independent sum → double).
-    contrib = F.round(
-        (F.col("o").cast("double") - e) * (F.col("o").cast("double") - e) / e, 9
-    ).cast("decimal(28,9)")
-    chi = spine.agg(
-        F.sum(contrib).cast("double").alias("chi2"),
-        F.countDistinct("event_type").alias("r"),
-        F.countDistinct("dow").alias("c"),
-        F.max("n").alias("n"),
-    )
-    mindim = F.least(F.col("r") - 1, F.col("c") - 1)
-    return chi.select(
-        "n",
-        "chi2",
-        ((F.col("r") - 1) * (F.col("c") - 1)).cast("bigint").alias("dof"),
-        F.when(
-            (mindim >= 1) & (F.col("n") > 0),
-            F.sqrt(F.col("chi2") / (F.col("n").cast("double") * mindim.cast("double"))),
-        ).alias("cramers_v"),
-    )
-
-
-def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal–Wallis H test: does the event `value` distribution differ
-    across event types? The k-group rank generalization of Mann–Whitney
-    (already in the registry) — the distribution-free ANOVA a pipeline
-    runs before trusting per-source quality comparisons.
-
-    Exact rank machinery: one corpus pass to per-(event_type, value)
-    counts; GLOBAL per-value counts re-aggregate from that relation (no
-    second corpus pass); tie-averaged DOUBLED ranks via the Mann-Whitney
-    cumulative-window form (exact integers); per-group rank sums ride
-    DECIMAL(38,0). H uses the CENTERED form
-    H = 3/(N(N+1))·Σ_j n_j·(R̄2_j − (N+1))² (R̄2_j = R2_j/n_j): the
-    textbook Σ R_j²/n_j − 3(N+1) tail subtracts two O(N)-sized floats to
-    reach an O(1) statistic — catastrophic cancellation at corpus scale —
-    while the centered deviations are the statistic's own magnitude. The
-    per-group term rides DECIMAL(38,6) (worst case Σ ≈ N³/3 at full
-    separation: exact to N ≈ 10¹⁰). Tie correction
-    C = 1 − Σ(t³−t)/(N³−N) rides DECIMAL(38,0) cubes (the t³ overflow
-    rule); H_corr = H/C is NULL when every value ties (C = 0).
-
-    Scale shape: the only raw-row pass is the first aggregate; the rank
-    pass runs over the DISTINCT-value relation through the
-    ``bucketed_cum_before`` boundary-sketch machinery (r12, replacing an
-    unpartitioned cumulative window — `value` is DOUBLE, so the distinct-
-    value relation scales with the corpus; r11 advice) and the rank join
-    is shuffle-hash on the distinct-value key, never a broadcast of a
-    corpus-cardinality relation (each value carries ≤ k group rows — no
-    skew)."""
-    ev = load_table(spark, sf_dir, "events")
-    gv = (
-        # NULL values drop (rank tests exclude missing) — and keeping them
-        # would split the engines: Spark windows order NULLS FIRST, DuckDB
-        # NULLS LAST, shifting every doubled rank (second review).
-        ev.where(F.col("value").isNotNull())
-        .groupBy("event_type", F.col("value").cast("double").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .transform(truncate_lineage)  # feeds the global ranks AND the join
-    )
-    per_v = gv.groupBy("v").agg(F.sum("c").alias("cv"))
-    ranks = bucketed_cum_before(per_v, "v", "cv", "_cb").select(
-        "v",
-        (2 * F.col("_cb") + F.col("cv") + F.lit(1)).cast("bigint").alias("r2"),
-        F.col("cv"),
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    grp = (
-        gv.join(ranks.select("v", "r2").hint("shuffle_hash"), "v")
-        .groupBy("event_type")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_j"),
-            F.sum(d38(F.col("c")) * d38(F.col("r2"))).alias("r2_j"),
-        )
-    )
-    ties = per_v.agg(
-        F.sum(d38(F.col("cv")) * d38(F.col("cv")) * d38(F.col("cv")) - d38(F.col("cv"))).alias(
-            "t3"
-        )
-    )
-    grp = grp.transform(truncate_lineage)  # N/k totals + the centered pass
-    totals = grp.agg(
-        F.sum("n_j").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-    )
-    # Centered per-group term n_j·(R̄2_j − (N+1))² on the float-sum rail:
-    # round(6) → DECIMAL(38,6) → exact order-independent sum (worst case
-    # Σ ≈ N³/3 needs the 10³² integer range, not DECIMAL(28,9)'s 10¹⁹).
-    dev = (
-        F.col("r2_j").cast("double") / F.col("n_j").cast("double")
-        - (F.col("n").cast("double") + 1.0)
-    )
-    sq_term = F.round(F.col("n_j").cast("double") * dev * dev, 6).cast(
-        "decimal(38,6)"
-    )
-    stats = (
-        grp.crossJoin(F.broadcast(totals))
-        .groupBy("n", "k")
-        .agg(F.sum(sq_term).cast("double").alias("sq"))
-        .crossJoin(F.broadcast(ties))
-    )
-    nd = F.col("n").cast("double")
-    h = F.lit(3.0) * F.col("sq") / (nd * (nd + 1.0))
-    corr = F.lit(1.0) - F.col("t3").cast("double") / (nd * nd * nd - nd)
-    return stats.select(
-        "n",
-        "k",
-        (F.col("k") - 1).cast("bigint").alias("dof"),
-        h.alias("h_stat"),
-        F.when(corr > 0, h / corr).alias("h_corrected"),
-    )
-
-
-def events_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delete-one-user jackknife variance of the revenue-per-event ratio
-    estimator — the resampling-free uncertainty quantifier for ratio
-    metrics (mean-per-user is biased for ratios; the jackknife SE is the
-    survey-statistics standard). Complements the Poisson-bootstrap CI
-    (r9) with an exact, randomness-free method.
-
-    The leave-one-out replicate never re-scans anything: with corpus
-    totals S = Σy, C = Σc broadcast, r_i = (S − y_i)/(C − c_i) is
-    row-local math on the per-user relation (the totals-minus-row trick —
-    n replicates for one pass, not n passes). Variance is DEFINITIONAL
-    two-pass — r̄ from a railed Σr, then Σ(r_i − r̄)² — NOT the
-    Σr² − (Σr)²/n identity: jackknife replicates are near-identical by
-    construction (each deletes one user from a global total), so the
-    identity cancels 7+ significant digits and its error grows with
-    corpus size. The squared deviations are themselves tiny, so their
-    rail is DECIMAL(38,15) (9dp would quantize them to zero);
-    SE = √((n−1)/n · Σ(r_i − r̄)²). Replicates where the denominator
-    hits zero (a user owning ALL events) are excluded and counted; SE is
-    NULL when fewer than 2 replicates survive.
-
-    Scale shape: one corpus pass to per-user (y, c); a 1-row totals
-    aggregate broadcast back; two aggregates over the checkpointed
-    per-user relation (the mean pass, then the deviation pass)."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == F.lit("purchase"), cents).otherwise(
-                    F.lit(0)
-                )
-            )
-            .cast("bigint")
-            .alias("y"),
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-        )
-        .transform(truncate_lineage)  # totals + mean pass + deviation pass
-    )
-    tot = per_user.agg(
-        F.sum("y").cast("bigint").alias("s"),
-        F.sum("c").cast("bigint").alias("ctot"),
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-    )
-    r_i = (F.col("s") - F.col("y")).cast("double") / (
-        F.col("ctot") - F.col("c")
-    ).cast("double")
-    reps = (
-        per_user.crossJoin(F.broadcast(tot))
-        .select(
-            "s",
-            "ctot",
-            "n_users",
-            F.when(F.col("ctot") - F.col("c") > 0, r_i).alias("r"),
-        )
-        # NOT checkpointed: reps is per-user-sized; both passes re-derive
-        # it with row-local math off the checkpointed per_user frame.
-    )
-    mean_pass = reps.groupBy("s", "ctot", "n_users").agg(
-        F.count("r").cast("bigint").alias("n_reps"),
-        F.sum(F.round(F.col("r"), 9).cast("decimal(28,9)"))
-        .cast("double")
-        .alias("sr"),
-    )
-    rbar = F.col("sr") / F.col("n_reps").cast("double")
-    agg = (
-        reps.join(F.broadcast(mean_pass), ["s", "ctot", "n_users"])
-        .groupBy("s", "ctot", "n_users", "n_reps")
-        .agg(
-            F.sum(
-                F.round((F.col("r") - rbar) * (F.col("r") - rbar), 15).cast(
-                    "decimal(38,15)"
-                )
-            )
-            .cast("double")
-            .alias("sdev2"),
-        )
-    )
-    nr = F.col("n_reps").cast("double")
-    var = (nr - 1.0) / nr * F.col("sdev2")
-    se = F.when(
-        (F.col("n_reps") >= 2) & (var >= 0), F.sqrt(var)
-    )
-    ratio = F.when(
-        F.col("ctot") > 0, F.col("s").cast("double") / F.col("ctot").cast("double")
-    )
-    return agg.select(
-        "n_users",
-        "n_reps",
-        ratio.alias("ratio_cents_per_event"),
-        se.alias("jackknife_se"),
-        (ratio - 1.96 * se).alias("ci_lo"),
-        (ratio + 1.96 * se).alias("ci_hi"),
-    )
-
-
-def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald–Wolfowitz runs test on the daily event-count series: are
-    above-mean and below-mean days randomly interleaved, or does traffic
-    cluster (trend/seasonality the sampling pipeline must stratify over)?
-
-    The cutpoint comparison is EXACT integer cross-multiplication
-    (c·n_days vs total — no mean division), days equal to the mean drop
-    out per the standard convention. Runs count via lag over the per-day
-    relation ordered by day; z = (R − μ)/σ with μ = 2n₁n₂/(n₁+n₂) + 1 and
-    the textbook σ² — pure IEEE arithmetic + sqrt, no rounding needed.
-    z is NULL when either side is empty or σ = 0.
-
-    Scale shape: one corpus pass map-side combined to per-day counts
-    (the shared _daily_event_counts spine — UTC epoch-day integers, the
-    EWMA/CUSUM convention); the lag window and the closing aggregate run
-    on the ~#days relation."""
-    daily = (
-        _daily_event_counts(spark, sf_dir)
-        .select("day", F.col("daily_count").cast("bigint").alias("c"))
-        .transform(truncate_lineage)  # totals + the ordered sign pass
-    )
-    tot = daily.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum("c").cast("bigint").alias("total"),
-    )
-    signed = (
-        daily.crossJoin(F.broadcast(tot))
-        .filter(F.col("c") * F.col("n_days") != F.col("total"))
-        .select(
-            "day",
-            "n_days",
-            (F.col("c") * F.col("n_days") > F.col("total")).alias("above"),
-        )
-    )
-    w = Window.orderBy("day")
-    flips = signed.select(
-        "n_days",
-        "above",
-        F.when(
-            F.lag("above").over(w).isNotNull()
-            & (F.lag("above").over(w) != F.col("above")),
-            1,
-        )
-        .otherwise(0)
-        .alias("flip"),
-    )
-    stats = flips.groupBy("n_days").agg(
-        F.sum(F.when(F.col("above"), 1).otherwise(0)).cast("bigint").alias("n_above"),
-        F.sum(F.when(~F.col("above"), 1).otherwise(0)).cast("bigint").alias("n_below"),
-        (F.sum("flip") + 1).cast("bigint").alias("runs"),
-    )
-    n1 = F.col("n_above").cast("double")
-    n2 = F.col("n_below").cast("double")
-    mu = 2.0 * n1 * n2 / (n1 + n2) + 1.0
-    sig2 = (
-        2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-        / ((n1 + n2) * (n1 + n2) * (n1 + n2 - 1.0))
-    )
-    return stats.select(
-        "n_days",
-        "n_above",
-        "n_below",
-        "runs",
-        F.when(
-            (F.col("n_above") > 0) & (F.col("n_below") > 0) & (sig2 > 0),
-            (F.col("runs").cast("double") - mu) / F.sqrt(sig2),
-        ).alias("z"),
-    )
-
-
-# Zelen–Severo (A&S 26.2.17) normal-CDF tail constants, shared by both
-# engines as identical literal trees (|ε| < 7.5e-8; outputs round to 9dp
-# so the approximation error, not engine drift, is the only slack).
-_ZS_K = 0.2316419
-_ZS_B = (0.319381530, -0.356563782, 1.781477937, -1.821255978, 1.330274429)
-_SQRT_2PI = 2.5066282746310002
-
-
-def _normal_two_sided_p(z_abs: Column) -> Column:
-    """Two-sided normal p-value 2·(1 − Φ(|z|)) via the Zelen–Severo
-    polynomial tail — Spark has no erf, so both engines evaluate this
-    exact same tree (the oracle mirrors it literally)."""
-    k = 1.0 / (1.0 + F.lit(_ZS_K) * z_abs)
-    poly = (
-        F.lit(_ZS_B[0]) * k
-        + F.lit(_ZS_B[1]) * k * k
-        + F.lit(_ZS_B[2]) * k * k * k
-        + F.lit(_ZS_B[3]) * k * k * k * k
-        + F.lit(_ZS_B[4]) * k * k * k * k * k
-    )
-    pdf = F.exp(-z_abs * z_abs / 2.0) / F.lit(_SQRT_2PI)
-    return F.least(F.lit(1.0), 2.0 * pdf * poly)
-
-
-def events_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benjamini–Hochberg FDR correction over a family of per-event-type
-    tests (weekend vs weekday mean value, Welch z) — the
-    multiple-comparisons discipline for pipeline dashboards: five
-    uncorrected 5% tests alarm ~23% of the time on pure noise; BH bounds
-    the FALSE DISCOVERY RATE across the family.
-
-    Per type: exact DECIMAL(38,0) sufficient statistics (cents sums and
-    squares), Welch z in double; two-sided p via the shared Zelen–Severo
-    normal tail (_normal_two_sided_p), rounded to 9dp BEFORE ranking so
-    the step-up order can never ulp-split the engines. BH step-up over
-    the non-degenerate tests: q_i = min_{j≥i} p_j·m/j via a reversed
-    cumulative-min window (ties get equal q by construction; both window
-    orders carry event_type tie-breaks). reject_fdr_05 = q ≤ 0.05;
-    degenerate tests (a side under 2 observations or zero variance) keep
-    NULL z/p/q.
-
-    Scale shape: one corpus pass map-side combined to #event_types
-    sufficient-statistic rows; the BH windows run over that tiny
-    relation."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # NULL values drop (r12, r11 advice): the cents sums/squares already
-    # skip NULLs, so counting NULL rows in n_w/n_d would divide the Welch
-    # means/variances by an inflated n — and it matches the explicit
-    # NULL drops in events_psi_drift / events_kruskal_wallis. Synced in
-    # the oracle; fixtures are NULL-free, so hashes are unchanged.
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    wk = F.dayofweek("ts").isin(1, 7)
-    d38 = lambda x: x.cast("decimal(38,0)")  # noqa: E731
-    g = ev.groupBy("event_type").agg(
-        F.sum(F.when(wk, 1).otherwise(0)).cast("bigint").alias("n_w"),
-        F.sum(F.when(wk, cents).otherwise(0)).cast("bigint").alias("s_w"),
-        F.sum(F.when(wk, d38(cents) * d38(cents)).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("ss_w"),
-        F.sum(F.when(~wk, 1).otherwise(0)).cast("bigint").alias("n_d"),
-        F.sum(F.when(~wk, cents).otherwise(0)).cast("bigint").alias("s_d"),
-        F.sum(F.when(~wk, d38(cents) * d38(cents)).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("ss_d"),
-    )
-
-    def welch(n, s, ss):
-        nn = F.col(n).cast("double")
-        sd = F.col(s).cast("double")
-        ssd = F.col(ss).cast("double")
-        var = (ssd - sd * sd / nn) / (nn - 1.0)
-        return sd / nn, var / nn
-
-    mw, vw = welch("n_w", "s_w", "ss_w")
-    md, vd = welch("n_d", "s_d", "ss_d")
-    se2 = vw + vd
-    z = F.when(
-        (F.col("n_w") >= 2) & (F.col("n_d") >= 2) & (se2 > 0),
-        (mw - md) / F.sqrt(se2),
-    )
-    tested = g.select(
-        "event_type",
-        F.col("n_w").alias("n_weekend"),
-        F.col("n_d").alias("n_weekday"),
-        F.round(z, 9).alias("z"),
-        # Guard on z: F.least SKIPS nulls, so an unguarded p would read
-        # 1.0 on degenerate arms, enter the BH family, and inflate m —
-        # corrupting every real test's q (second review).
-        F.when(
-            z.isNotNull(), F.round(_normal_two_sided_p(F.abs(z)), 9)
-        ).alias("p"),
-        # #event_types rows feeding m, the BH window AND the final join —
-        # without this the corpus aggregate replicates per consumer.
-    ).transform(truncate_lineage)
-    valid = tested.filter(F.col("p").isNotNull())
-    m = valid.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
-    wi = Window.orderBy("p", "event_type")
-    wrev = Window.orderBy(F.col("p").desc(), F.col("event_type").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    bh = (
-        valid.crossJoin(F.broadcast(m))
-        .withColumn("i", F.row_number().over(wi))
-        .withColumn(
-            "q",
-            F.round(
-                F.min(
-                    F.least(
-                        F.lit(1.0),
-                        F.col("p") * F.col("m").cast("double") / F.col("i").cast("double"),
-                    )
-                ).over(wrev),
-                9,
-            ),
-        )
-        .select("event_type", "q")
-    )
-    return (
-        tested.join(F.broadcast(bh), "event_type", "left")
-        .select(
-            "event_type",
-            "n_weekend",
-            "n_weekday",
-            "z",
-            "p",
-            "q",
-            F.when(F.col("q").isNotNull(), F.col("q") <= 0.05).alias("reject_fdr_05"),
-        )
-    )
-
-
-# --- r12 additions: the paired/rank/trend test family over the new
-# bucketed machinery, plus experimentation and EVT readouts ------------------
-
 # Two-sided 5% normal critical value — shared with the Mann-Whitney flag;
 # mirrored literally in the DuckDB oracles (sync-pinned).
 WSR_Z_05 = 1.959964
@@ -7449,7 +5517,7 @@ def events_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         df2 = (k²−1) / (3 Σ (1−w_j/W)²/(n_j−1))
 
     Sufficient statistics per group are exact (cents sums and DECIMAL(38,0)
-    squares in ONE corpus pass — the events_bh_fdr Welch convention; the
+    squares in ONE corpus pass; the
     Σx² identity is safe here because raw values vary, unlike the
     jackknife's near-identical replicates); groups with n_j < 2 or zero
     variance drop (reported as k_dropped). The k-row folds ride the
@@ -7561,9 +5629,11 @@ def events_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold (the fixture is dense — EVERY user has ≥1 purchase in both
 # halves at every scale, so an any-purchase flag is all-concordant and
 # the test vacuously NULL; the count threshold gives real discordance —
-# the events_auc_report AUC_LABEL_MIN_PURCHASES precedent). Both mirrored
+# the AUC_LABEL_MIN_PURCHASES precedent). Both mirrored
 # in the oracle (sync-pinned).
 MCNEMAR_CHI2_05 = 3.841459
+
+
 MCNEMAR_CONV_MIN = 3
 
 
@@ -7630,54 +5700,6 @@ def events_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chapman capture-recapture estimate of the active-user population
-    from two overlapping "captures" — weekend-active vs weekday-active
-    users: N̂ = (n₁+1)(n₂+1)/(m+1) − 1 with the standard Seber variance.
-    The coverage diagnostic for any panel/telemetry pipeline ("how many
-    users exist that NEITHER capture saw?"), reported beside the observed
-    distinct-user count so the estimator's gap is measured, not assumed.
-
-    Exactness: n₁, n₂, m, and the observed total are exact integers from
-    ONE per-user aggregate; N̂ and the Wald CI divide once in double.
-    Scale shape: per-user weekend/weekday flags map-side combine; the
-    closing aggregate is 1 row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    wk = F.dayofweek("ts").isin(1, 7)
-    per_user = ev.groupBy("user_id").agg(
-        F.max(F.when(wk, True).otherwise(False)).alias("in_a"),
-        F.max(F.when(~wk, True).otherwise(False)).alias("in_b"),
-    )
-    s = per_user.agg(
-        F.sum(F.when(F.col("in_a"), 1).otherwise(0)).cast("bigint").alias("n1"),
-        F.sum(F.when(F.col("in_b"), 1).otherwise(0)).cast("bigint").alias("n2"),
-        F.sum(F.when(F.col("in_a") & F.col("in_b"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("m"),
-        F.count(F.lit(1)).cast("bigint").alias("n_observed"),
-    )
-    n1, n2, m = (F.col(c).cast("double") for c in ("n1", "n2", "m"))
-    n_hat = (n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0
-    var = (
-        (n1 + 1.0)
-        * (n2 + 1.0)
-        * (n1 - m)
-        * (n2 - m)
-        / ((m + 1.0) * (m + 1.0) * (m + 2.0))
-    )
-    half = F.lit(1.959964) * F.sqrt(var)
-    return s.select(
-        "n1",
-        "n2",
-        F.col("m").alias("n_both"),
-        "n_observed",
-        F.round(n_hat, 6).alias("n_hat_chapman"),
-        F.round(n_hat - half, 6).alias("ci_lo"),
-        F.round(n_hat + half, 6).alias("ci_hi"),
-    )
-
-
 def events_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Odds ratio of purchase on weekends vs weekdays with the Woolf
     log-OR confidence interval — the effect-size readout beside the test
@@ -7721,173 +5743,18 @@ def events_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Wald SPRT design constants: H0/H1 purchase shares and alpha=beta=0.05.
-# The per-event log-likelihood increments and both decision boundaries are
-# Python-computed double literals INLINED identically into the Spark plan
-# and the DuckDB oracle (no runtime transcendental to ulp-split engines).
-# Sync-pinned via the f-string oracle.
-import math as _math  # noqa: E402
-
-SPRT_P0 = 0.15
-SPRT_P1 = 0.25
-SPRT_ALPHA = 0.05
-SPRT_LLR_POS = _math.log(SPRT_P1 / SPRT_P0)
-SPRT_LLR_NEG = _math.log((1.0 - SPRT_P1) / (1.0 - SPRT_P0))
-SPRT_UPPER = _math.log((1.0 - SPRT_ALPHA) / SPRT_ALPHA)
-SPRT_LOWER = _math.log(SPRT_ALPHA / (1.0 - SPRT_ALPHA))
-
-
-def events_sprt_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald sequential probability-ratio test on the daily purchase share:
-    H0 p=0.15 vs H1 p=0.25, alpha=beta=0.05 — the always-valid sequential
-    monitor that answers "could this experiment have STOPPED early, and
-    when?" (fixed-horizon z tests peek-inflate; the SPRT's boundaries are
-    crossing-safe by construction).
-
-    LLR_t = Σ_{d≤t} [x_d·ln(p1/p0) + (n_d−x_d)·ln((1−p1)/(1−p0))]
-    accumulates over the calendar-bounded day spine; the per-day exact
-    integer (x_d, n_d) pair multiplies two PINNED double literals (the
-    same Python-computed constants inlined in both engines — the only
-    transcendentals are evaluated once at build time). Reports the first
-    boundary crossing (day, direction) and the end-of-series LLR; NULL
-    crossing day when the test never decides.
-
-    Scale shape: one corpus pass map-side combined to the day spine; the
-    cumulative window and the closing aggregate run over ~#days rows."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400").cast(
-        "bigint"
-    )
-    daily = (
-        ev.select(day.alias("day"), (F.col("event_type") == "purchase").alias("p"))
-        .groupBy("day")
-        .agg(
-            F.sum(F.when(F.col("p"), 1).otherwise(0)).cast("bigint").alias("x"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-        )
-        # day-spine-sized, two consumers downstream (first_cross + tail both
-        # read `marked`): truncate so the corpus is scanned exactly once
-        .transform(truncate_lineage)
-    )
-    # per-day LLR increment: exact ints × pinned literals, rounded to 9dp
-    # and summed on the decimal rail so the cumulative is order-exact
-    inc = F.round(
-        F.col("x").cast("double") * F.lit(SPRT_LLR_POS)
-        + (F.col("n") - F.col("x")).cast("double") * F.lit(SPRT_LLR_NEG),
-        9,
-    ).cast("decimal(28,9)")
-    wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select(
-        "day", F.sum(inc).over(wc).cast("double").alias("llr")
-    )
-    crossed = F.when(F.col("llr") >= F.lit(SPRT_UPPER), F.lit("accept_h1")).when(
-        F.col("llr") <= F.lit(SPRT_LOWER), F.lit("accept_h0")
-    )
-    marked = cum.select("day", "llr", crossed.alias("decision"))
-    first_cross = (
-        marked.where(F.col("decision").isNotNull())
-        .orderBy(F.asc("day"))
-        .limit(1)
-        .select(
-            F.col("day").alias("decision_day"),
-            F.col("llr").alias("llr_at_decision"),
-            "decision",
-        )
-    )
-    tail = marked.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.max(F.struct(F.col("day"), F.col("llr")))["llr"].alias("final_llr"),
-    )
-    return tail.join(F.broadcast(first_cross), how="left").select(
-        "n_days",
-        F.round(F.col("final_llr"), 9).alias("final_llr"),
-        F.col("decision_day").cast("bigint").alias("decision_day"),
-        F.round(F.col("llr_at_decision"), 9).alias("llr_at_decision"),
-        F.coalesce(F.col("decision"), F.lit("undecided")).alias("decision"),
-    )
-
-
-# Gumbel method-of-moments constants: Euler-Mascheroni and pi/sqrt(6),
-# pinned as Python double literals in BOTH engines; return-period spine.
-GUMBEL_GAMMA = 0.5772156649015329
-GUMBEL_SQRT6_OVER_PI = _math.sqrt(6.0) / _math.pi
-GUMBEL_RETURN_PERIODS = (30, 90, 365)
-
-
-def events_gumbel_daily_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gumbel (EV-I) fit of the daily MAXIMUM event value by the method of
-    moments, with return levels — the extreme-value answer to "what's the
-    biggest value we should expect in a month / quarter / year?", the
-    principled way to set outlier thresholds that a pipeline's anomaly
-    gates need (a 99.9th percentile says nothing about maxima).
-
-    β̂ = s·√6/π, μ̂ = m − γ·β̂ over the daily-max series (block maxima,
-    block = UTC day); return level x_T = μ̂ − β̂·ln(−ln(1−1/T)). The mean
-    and DEFINITIONAL two-pass variance ride the decimal rails over the
-    calendar-bounded day spine (daily maxima are exact cents ints); γ,
-    √6/π and the three ln(−ln(·)) factors are Python double literals
-    inlined identically in both engines. NULL fit when fewer than 2 days.
-
-    Scale shape: one corpus pass map-side combined to per-day maxima;
-    both moment passes and the 3-row return-level spine are day-bounded."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400").cast(
-        "bigint"
-    )
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    daily = (
-        ev.select(day.alias("day"), cents.alias("v"))
-        .groupBy("day")
-        .agg(F.max("v").alias("mx"))
-        .transform(truncate_lineage)  # mean pass + deviation pass
-    )
-    m1 = daily.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("mx").cast("bigint").alias("s"),
-    )
-    mean = F.col("s").cast("double") / F.col("n").cast("double")
-    dev = F.col("mx").cast("double") - mean
-    m2 = (
-        daily.crossJoin(F.broadcast(m1))
-        .groupBy("n", "s")
-        .agg(
-            F.sum(F.round(dev * dev, 9).cast("decimal(38,9)"))
-            .cast("double")
-            .alias("sdev2"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    sd = F.sqrt(F.col("sdev2") / (nd - 1.0))
-    beta = sd * F.lit(GUMBEL_SQRT6_OVER_PI)
-    mu = mean - F.lit(GUMBEL_GAMMA) * beta
-    ok = (F.col("n") >= 2) & (F.col("sdev2") > 0)
-    cols = [
-        F.col("n").alias("n_days"),
-        F.round(F.when(ok, mu), 6).alias("mu_hat_cents"),
-        F.round(F.when(ok, beta), 6).alias("beta_hat_cents"),
-    ]
-    for t in GUMBEL_RETURN_PERIODS:
-        factor = -_math.log(-_math.log(1.0 - 1.0 / t))
-        cols.append(
-            F.round(F.when(ok, mu + beta * F.lit(factor)), 6).alias(
-                f"return_level_{t}d_cents"
-            )
-        )
-    return m2.select(*cols)
-
-
 # Page-Hinkley design constants: the tolerance delta (in events/day) and
 # the alarm threshold lambda. Mirrored literally in the oracle.
 PH_DELTA = 0.0
+
+
 PH_LAMBDA = 50.0
 
 
 def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley sequential change detector on daily event counts —
-    the online mean-shift alarm beside events_cusum_drift's offline
-    two-sided chart: PH_t = Σ_{i≤t} (x_i − x̄_t − δ) with x̄_t the
+    the online mean-shift alarm (an offline two-sided CUSUM chart's
+    sequential counterpart): PH_t = Σ_{i≤t} (x_i − x̄_t − δ) with x̄_t the
     RUNNING mean, alarm when PH_t − min_{i≤t} PH_i > λ (upward drift).
 
     This is the STREAMING form every drift library implements
@@ -8023,226 +5890,6 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown-Forsythe test of variance homogeneity across event types —
-    the robust Levene variant (deviations from the group MEDIAN, not the
-    mean) and the missing companion of events_welch_anova: Welch asks
-    "are the means equal under unequal variances", Brown-Forsythe asks
-    "are the variances equal at all", which is the test that DECIDES
-    whether classic pooled ANOVA is even admissible.
-
-    Exact evaluation: per-group medians come from the per-(type, cents)
-    aggregate through ``bucketed_cum_before`` with parts=[event_type]
-    (built this round — the per-group cumulative over distinct cents
-    scales with the corpus), carried DOUBLED (med2 = v_⌈n/2⌉ + v_⌊n/2⌋+1)
-    so even-n midpoints stay exact integers; z2 = |2v − med2| is exact,
-    and the one-way ANOVA F over z2 equals F over z (scale-invariant).
-    Between-group terms ride the DECIMAL(38,6) rail (the
-    events_kruskal_wallis convention); within-group sums are exact
-    integers in DECIMAL(38,0); the final F divides once in double.
-    Groups with n_j < 2 drop (reported as k_dropped).
-
-    Scale shape: one corpus pass to the per-(type, value) aggregate, one
-    bucketed-machinery pass, two k-row folds."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_gv = (
-        ev.select(F.col("event_type").alias("g"), cents.alias("v"))
-        .groupBy("g", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
-        # feeds the machinery pass, the group totals and the z2 pass
-        .transform(truncate_lineage)
-    )
-    cum = bucketed_cum_before(per_gv, "v", "c", "prev", parts=["g"])
-    totals = per_gv.groupBy("g").agg(F.sum("c").cast("bigint").alias("n_j"))
-    k1 = (F.col("n_j") + 1) / 2  # ⌈n/2⌉ as (n+1) div 2
-    with_tot = cum.join(F.broadcast(totals), "g")
-    lo = F.floor((F.col("n_j") + F.lit(1)) / F.lit(2)).cast("bigint")
-    hi = (F.floor(F.col("n_j") / F.lit(2)) + F.lit(1)).cast("bigint")
-    contains = lambda k: (F.col("prev") < k) & (k <= F.col("prev") + F.col("c"))  # noqa: E731
-    med2 = with_tot.groupBy("g").agg(
-        F.sum(F.when(contains(lo), F.col("v")).otherwise(0)).alias("m_lo"),
-        F.sum(F.when(contains(hi), F.col("v")).otherwise(0)).alias("m_hi"),
-    ).select("g", (F.col("m_lo") + F.col("m_hi")).alias("med2"))
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    z2 = F.abs(F.lit(2) * F.col("v") - F.col("med2"))
-    stats = (
-        per_gv.join(F.broadcast(med2), "g")
-        .groupBy("g")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_j"),
-            F.sum(d38(F.col("c")) * d38(z2)).alias("s1"),
-            F.sum(d38(F.col("c")) * d38(z2) * d38(z2)).alias("s2"),
-        )
-        .where(F.col("n_j") >= 2)
-        # k rows; feeds the grand totals and the between/within folds
-        .transform(truncate_lineage)
-    )
-    grand = stats.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("n_j").cast("bigint").alias("n_total"),
-        F.sum("s1").alias("s1_tot"),
-    )
-    dropped = per_gv.groupBy("g").agg(F.sum("c").alias("nj")).agg(
-        F.sum(F.when(F.col("nj") < 2, 1).otherwise(0)).cast("bigint").alias("k_dropped")
-    )
-    nj = F.col("n_j").cast("double")
-    m_j = F.col("s1").cast("double") / nj
-    m_bar = F.col("s1_tot").cast("double") / F.col("n_total").cast("double")
-    # between-group fold on the DECIMAL(38,6) rail (KW convention: the
-    # magnitudes are web-scale, the 6dp granularity is far below the
-    # double-rounding already present in m_j)
-    d386 = lambda c: F.round(c, 6).cast("decimal(38,6)")  # noqa: E731
-    folds = stats.crossJoin(F.broadcast(grand)).agg(
-        F.max("k").alias("k"),
-        F.max("n_total").alias("n_total"),
-        F.sum(d386(nj * (m_j - m_bar) * (m_j - m_bar))).cast("double").alias("between"),
-        F.sum(d386(F.col("s2").cast("double") - F.col("s1").cast("double") * m_j))
-        .cast("double")
-        .alias("within"),
-    )
-    kd = F.col("k").cast("double")
-    nd = F.col("n_total").cast("double")
-    f_stat = F.when(
-        (F.col("k") >= 2) & (F.col("n_total") > F.col("k")) & (F.col("within") > 0),
-        (F.col("between") / (kd - 1.0)) / (F.col("within") / (nd - kd)),
-    )
-    return folds.crossJoin(F.broadcast(dropped)).select(
-        F.col("k").alias("k_groups"),
-        "k_dropped",
-        (F.col("k") - 1).cast("bigint").alias("df1"),
-        (F.col("n_total") - F.col("k")).cast("bigint").alias("df2"),
-        F.round(f_stat, 9).alias("f_stat"),
-    )
-
-
-# Cliff's delta magnitude thresholds (Romano, Kromrey, Coraggio & Skowronek
-# 2006): |d| < 0.147 negligible, < 0.33 small, < 0.474 medium, else large.
-# Sync-pinned via the f-string oracle.
-CLIFFS_NEGLIGIBLE = 0.147
-CLIFFS_SMALL = 0.33
-CLIFFS_MEDIUM = 0.474
-
-
-def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cliff's delta ordinal EFFECT SIZE between the view and click value
-    distributions — the magnitude readout the Mann-Whitney z deliberately
-    is not: at corpus scale every test "rejects", so pipelines gate on
-    δ = P(A>B) − P(A<B) ∈ [−1, 1] with the Romano et al. magnitude bands.
-
-    Exact evaluation: δ relates to the tie-averaged Mann-Whitney U by
-    δ = 2U_A/(n_a·n_b) − 1, and 2·U_A is the exact integer the
-    events_mann_whitney machinery already produces (per-cents-value
-    aggregate + ``bucketed_cum_before``, 2R_A = Σ ca·(2·prev + c + 1));
-    so δ = (2U_A − n_a·n_b)/(n_a·n_b) divides exact DECIMAL(38,0)
-    integers once in double. Magnitude thresholds are pinned literals.
-
-    Scale shape: identical to events_mann_whitney — one corpus pass to
-    distinct cents, one machinery pass, a 1-row fold."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_v = (
-        ev.where(F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B))
-        .select(F.col("event_type").alias("et"), cents.alias("v"))
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("et") == KS_TYPE_A, 1).otherwise(0)).alias("ca"),
-            F.sum(F.when(F.col("et") == KS_TYPE_B, 1).otherwise(0)).alias("cb"),
-        )
-        .withColumn("c", F.col("ca") + F.col("cb"))
-        .transform(truncate_lineage)  # feeds the sketch and the fold
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    ranked = bucketed_cum_before(per_v, "v", "c", "prev")
-    stats = ranked.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
-        F.sum(d38("ca") * (F.lit(2) * d38("prev") + d38("c") + F.lit(1))).alias("r2a"),
-    )
-    u2a = F.col("r2a") - d38("na") * (d38("na") + F.lit(1))
-    nanb = F.col("na").cast("double") * F.col("nb").cast("double")
-    delta = F.when(nanb > 0, (u2a.cast("double") - nanb) / nanb)
-    mag = (
-        F.when(delta.isNull(), F.lit(None).cast("string"))
-        .when(F.abs(delta) < F.lit(CLIFFS_NEGLIGIBLE), F.lit("negligible"))
-        .when(F.abs(delta) < F.lit(CLIFFS_SMALL), F.lit("small"))
-        .when(F.abs(delta) < F.lit(CLIFFS_MEDIUM), F.lit("medium"))
-        .otherwise(F.lit("large"))
-    )
-    return stats.select(
-        F.col("na").alias("n_a"),
-        F.col("nb").alias("n_b"),
-        F.round(delta, 9).alias("cliffs_delta"),
-        mag.alias("magnitude"),
-    )
-
-
-# Cochran-Armitage two-sided 5% normal critical value — the odds-ratio CI
-# convention (1.959964). Sync-pinned via the f-string oracle.
-CA_Z_05 = 1.959964
-
-
-def events_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Armitage trend test of the purchase share across the ordered
-    day-of-week (scores 0=Sun..6=Sat) — the DIRECTIONAL categorical test
-    the chi-square family lacks: Cramér's V asks "is conversion associated
-    with the day at all", this asks "does it RISE (or fall) monotonically
-    through the week", one degree of freedom, far more powerful against
-    ordered alternatives.
-
-    Z = (N·Σr_i s_i − R·Σn_i s_i) / √(R(N−R)(N·Σn_i s_i² − (Σn_i s_i)²)/N)
-
-    with r_i purchases and n_i events at score s_i. Every Σ is an exact
-    integer over the 7-row day spine (DECIMAL(38,0) cross products — the
-    events_user_gini overflow rule); the radicand multiplies its exact
-    factors in double with an identical expression tree on both engines
-    (each factor alone can reach ~1e24 at web scale, their PRODUCT cannot
-    stay integral in any fixed decimal). Day-of-week uses each engine's
-    native function under its own encoding (Spark dayofweek−1 = DuckDB
-    dayofweek — the events_cramers_v convention).
-
-    Scale shape: one corpus pass map-side combined to 7 keys, then a
-    1-row fold."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    per_dow = ev.select(
-        (F.dayofweek("ts") - 1).alias("s"),
-        (F.col("event_type") == "purchase").alias("p"),
-    ).groupBy("s").agg(
-        F.sum(F.when(F.col("p"), 1).otherwise(0)).cast("bigint").alias("r"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    agg = per_dow.agg(
-        F.sum("n").cast("bigint").alias("n_total"),
-        F.sum("r").cast("bigint").alias("n_success"),
-        F.sum(d38("r") * d38("s")).alias("rs"),
-        F.sum(d38("n") * d38("s")).alias("ns"),
-        F.sum(d38("n") * d38("s") * d38("s")).alias("nss"),
-    )
-    num = (
-        d38("n_total") * F.col("rs") - d38("n_success") * F.col("ns")
-    ).cast("double")
-    nd = F.col("n_total").cast("double")
-    rd = F.col("n_success").cast("double")
-    radicand = (
-        rd
-        * (nd - rd)
-        * (
-            (d38("n_total") * F.col("nss")).cast("double")
-            - (F.col("ns") * F.col("ns")).cast("double")
-        )
-        / nd
-    )
-    z = F.when(radicand > 0, num / F.sqrt(radicand))
-    return agg.select(
-        "n_total",
-        "n_success",
-        F.round(z, 9).alias("z"),
-        (F.abs(z) > F.lit(CA_Z_05)).alias("reject_no_trend_05"),
-    )
-
-
 def events_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Friedman rank test of event-type intensity across matched user
     blocks — the REPEATED-MEASURES companion of Kruskal-Wallis: KW treats
@@ -8338,172 +5985,18 @@ def events_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Brier decomposition design constants: the score-bin cap (forecast bins =
-# min(score, CAP), so bin cardinality is a CONSTANT, not data-scaled) and
-# the user-id parity split (even = train/calibration, odd = test). The
-# heavy-purchaser label threshold is shared with events_auc_report.
-BRIER_BIN_CAP = 50
-BRIER_TRAIN_MOD = 2
-
-
-def events_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Murphy decomposition of the Brier score for a held-out forecast of
-    the heavy-purchaser label — the calibration audit behind every quality
-    classifier this engine evaluates: BS = REL − RES + UNC, where
-    reliability (how far forecasts sit from observed rates) should be ~0
-    for a calibrated model, resolution (how much the bins separate) should
-    be large, and uncertainty ō(1−ō) is the data's irreducible floor.
-
-    Design: per-user activity score (view+click count, the
-    events_auc_report spine) binned at min(score, BRIER_BIN_CAP); users
-    split by id parity — the EVEN half's per-bin empirical heavy-purchaser
-    rate becomes the forecast f_b (global train rate for test-only bins),
-    the ODD half is scored. With forecasts constant within bins the
-    decomposition is EXACT: REL = Σ n_b(f_b−o_b)²/N, RES = Σ n_b(o_b−ō)²/N,
-    UNC = ō(1−ō), and BS = REL − RES + UNC identically. Per-bin terms are
-    doubles rounded to 9dp and summed on the DECIMAL(28,9) rail over the
-    ≤BRIER_BIN_CAP+1-row bin relation (order-exact); ratios divide exact
-    integers once each.
-
-    Scale shape: one corpus pass to per-user labels/scores, two bounded
-    bin aggregates (≤21 keys each), a broadcast bin join, a 1-row fold."""
-    ev = load_table(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            >= F.lit(AUC_LABEL_MIN_PURCHASES)
-        )
-        .cast("bigint")
-        .alias("label"),
-        F.sum(F.when(F.col("event_type").isin("view", "click"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("score"),
-    ).select(
-        "label",
-        F.least(F.col("score"), F.lit(BRIER_BIN_CAP)).alias("bin"),
-        (F.col("user_id") % BRIER_TRAIN_MOD == 0).alias("is_train"),
-    )
-    train = users.where("is_train").groupBy("bin").agg(
-        F.sum("label").cast("bigint").alias("pos_tr"),
-        F.count(F.lit(1)).cast("bigint").alias("n_tr"),
-    )
-    train_tot = train.agg(
-        F.sum("pos_tr").cast("bigint").alias("pos_all"),
-        F.sum("n_tr").cast("bigint").alias("n_all"),
-    )
-    test = users.where(~F.col("is_train")).groupBy("bin").agg(
-        F.sum("label").cast("bigint").alias("pos_te"),
-        F.count(F.lit(1)).cast("bigint").alias("n_te"),
-    )
-    test_tot = test.agg(
-        F.sum("pos_te").cast("bigint").alias("pos_te_all"),
-        F.sum("n_te").cast("bigint").alias("n_te_all"),
-    )
-    joined = (
-        test.join(F.broadcast(train), "bin", "left")
-        .crossJoin(F.broadcast(train_tot))
-        .crossJoin(F.broadcast(test_tot))
-    )
-    f_b = F.when(
-        F.col("n_tr").isNotNull() & (F.col("n_tr") > 0),
-        F.col("pos_tr").cast("double") / F.col("n_tr").cast("double"),
-    ).otherwise(F.col("pos_all").cast("double") / F.col("n_all").cast("double"))
-    o_b = F.col("pos_te").cast("double") / F.col("n_te").cast("double")
-    o_bar = F.col("pos_te_all").cast("double") / F.col("n_te_all").cast("double")
-    n_b = F.col("n_te").cast("double")
-    rail = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    folds = joined.agg(
-        F.max("n_te_all").alias("n_test"),
-        F.max("pos_te_all").alias("pos_test"),
-        F.count(F.lit(1)).cast("bigint").alias("n_bins"),
-        F.sum(rail(n_b * (f_b - o_b) * (f_b - o_b))).cast("double").alias("rel_n"),
-        F.sum(rail(n_b * (o_b - o_bar) * (o_b - o_bar))).cast("double").alias("res_n"),
-    )
-    n_te_d = F.col("n_test").cast("double")
-    o_all = F.col("pos_test").cast("double") / n_te_d
-    rel = F.when(n_te_d > 0, F.col("rel_n") / n_te_d)
-    res = F.when(n_te_d > 0, F.col("res_n") / n_te_d)
-    unc = F.when(n_te_d > 0, o_all * (F.lit(1.0) - o_all))
-    return folds.select(
-        "n_test",
-        "n_bins",
-        F.round(rel, 9).alias("reliability"),
-        F.round(res, 9).alias("resolution"),
-        F.round(unc, 9).alias("uncertainty"),
-        F.round(rel - res + unc, 9).alias("brier"),
-    )
-
-
-# Median-CI normal-approximation critical value (two-sided 95%, the
-# odds-ratio/CA convention). Sync-pinned via the f-string oracle.
-MEDIAN_CI_Z_05 = 1.959964
-
-
-def events_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-free 95% confidence interval for the MEDIAN event
-    value via order statistics — the uncertainty readout every
-    median-based SLO/report needs and bootstrap does approximately: the
-    binomial argument gives ranks l = ⌊(n − z√n)/2⌋ and u = n + 1 − l
-    (normal approximation, z = 1.959964) such that
-    P(X₍l₎ ≤ median ≤ X₍u₎) ≈ 0.95 with NO distributional assumption.
-
-    Exact evaluation: the median is carried DOUBLED (med2 = v_⌈n/2⌉ +
-    v_⌊n/2⌋₊₁ — even-n midpoints stay exact integer cents, the
-    Brown-Forsythe convention) and all three order statistics (l, u and
-    both middle ranks) are selected in ONE ``bucketed_cum_before`` pass
-    over the per-cents aggregate: a row holds rank k iff
-    prev < k ≤ prev + c. The rank formulas evaluate floor on the same
-    double expression in both engines; clamping to [1, n] keeps tiny
-    panels valid. Division to dollars happens once at the end.
-
-    Scale shape: one corpus pass to distinct cents, one machinery pass,
-    a 1-row fold."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_v = (
-        ev.select(cents.alias("v"))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .transform(truncate_lineage)  # feeds the total, sketch + fold
-    )
-    tot = per_v.agg(F.sum("c").cast("bigint").alias("n"))
-    cum = bucketed_cum_before(per_v, "v", "c", "prev").crossJoin(F.broadcast(tot))
-    nd = F.col("n").cast("double")
-    l_rank = F.greatest(
-        F.lit(1).cast("bigint"),
-        F.floor((nd - F.lit(MEDIAN_CI_Z_05) * F.sqrt(nd)) / F.lit(2.0)).cast(
-            "bigint"
-        ),
-    )
-    u_rank = F.least(F.col("n"), F.col("n") + F.lit(1) - l_rank)
-    m_lo = F.floor((F.col("n") + F.lit(1)) / F.lit(2)).cast("bigint")
-    m_hi = (F.floor(F.col("n") / F.lit(2)) + F.lit(1)).cast("bigint")
-    contains = lambda k: (F.col("prev") < k) & (k <= F.col("prev") + F.col("c"))  # noqa: E731
-    sel = lambda k: F.sum(F.when(contains(k), F.col("v")).otherwise(0))  # noqa: E731
-    agg = cum.agg(
-        F.max("n").alias("n"),
-        F.max(l_rank).alias("rank_lo"),
-        F.max(u_rank).alias("rank_hi"),
-        (sel(m_lo) + sel(m_hi)).alias("med2"),
-        sel(l_rank).alias("v_lo"),
-        sel(u_rank).alias("v_hi"),
-    )
-    return agg.select(
-        "n",
-        F.round(F.col("med2").cast("double") / F.lit(200.0), 9).alias("median"),
-        (F.col("v_lo").cast("double") / F.lit(100.0)).alias("ci_lo"),
-        (F.col("v_hi").cast("double") / F.lit(100.0)).alias("ci_hi"),
-        F.col("rank_lo").cast("bigint").alias("rank_lo"),
-        F.col("rank_hi").cast("bigint").alias("rank_hi"),
-    )
-
-
 # Cohen's d conventional magnitude bands (Cohen 1988) and the two-sided
 # 95% normal critical value for the d CI. Sync-pinned via the f-string
 # oracle (test_r13b_constants_in_sync).
 COHEN_D_SMALL = 0.2
+
+
 COHEN_D_MEDIUM = 0.5
+
+
 COHEN_D_LARGE = 0.8
+
+
 COHEN_D_Z_05 = 1.959964
 
 
@@ -8533,8 +6026,8 @@ def _view_click_sufficient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's d standardized mean difference between the view and click
     value distributions, with the small-sample Hedges' g correction and a
-    normal-approximation 95% CI — the PARAMETRIC effect-size companion to
-    events_cliffs_delta (which is ordinal): pipelines gate on magnitude,
+    normal-approximation 95% CI — the PARAMETRIC effect size (Cliff's
+    delta is the ordinal one): pipelines gate on magnitude,
     not p-values, because at corpus scale every test "rejects".
 
         d = (m̄_a − m̄_b) / s_p,  s_p² = [(n_a−1)s_a² + (n_b−1)s_b²] / (n_a+n_b−2)
@@ -8606,6 +6099,8 @@ def events_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the one-sided 5% normal critical value. Sync-pinned via the
 # f-string oracle (test_r13b_constants_in_sync).
 TOST_MARGIN_CENTS = 1000
+
+
 TOST_Z_05 = 1.644854
 
 
@@ -8668,8 +6163,8 @@ def events_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the groups straddle the grand median the same way?"), so it is the
     robust first gate when value distributions are wild.
 
-    The grand median is carried DOUBLED (med2 = v_⌈n/2⌉ + v_⌊n/2⌋₊₁, the
-    events_median_ci selection — both order statistics picked in ONE
+    The grand median is carried DOUBLED (med2 = v_⌈n/2⌉ + v_⌊n/2⌋₊₁ —
+    both order statistics picked in ONE
     ``bucketed_cum_before`` pass via the prev<k≤prev+c containment test),
     so the above/below split (2v > med2, SciPy's ties='below') is exact
     integer arithmetic. The 2×k chi-square folds k per-type terms
@@ -8831,145 +6326,6 @@ def events_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Jonckheere-Terpstra one-sided 5% normal critical value (the ordered
-# alternative is directional). Sync-pinned via the f-string oracle.
-JT_Z_05 = 1.644854
-
-
-def events_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jonckheere-Terpstra test of an ORDERED shift in the event-value
-    distribution across the week (groups = day-of-week scores 0=Sun..6=Sat)
-    — the continuous-response counterpart of events_cochran_armitage
-    (binary trend) and the ordered-alternative upgrade of Kruskal-Wallis
-    (which wastes the known ordering): JT = Σ_{g<h} U_gh, far more
-    powerful when the alternative is monotone.
-
-    Exact evaluation: per-(dow, cents) counts pivot into SEVEN weight
-    columns that ride ONE ``bucketed_cum_before`` machinery pass
-    (prev_g = #rows of group g strictly below v), and
-
-        2·U_gh = Σ_v c_h(v) · (2·prev_g(v) + c_g(v))
-
-    is an exact DECIMAL(38,0) integer — the events_cliffs_delta identity
-    summed over the 21 ordered pairs. The tie-corrected null variance
-    (Hollander & Wolfe 6.19) needs Σ t(t−1)(2t+5) / t(t−1)(t−2) / t(t−1)
-    over tied values and the same folds over the 7 group totals — all
-    exact DECIMAL(38,0) (n³-sized, the events_mann_kendall class); the
-    three variance terms multiply their exact factors in DOUBLE (each
-    factor alone can reach ~1e36 — no fixed decimal holds a product,
-    the events_cochran_armitage convention) with identical trees. The z
-    numerator 2·(2JT) − (N² − Σn_g²) stays one exact decimal integer.
-
-    Scale shape: one corpus pass map-side combined to (dow, cents) and
-    pivoted to per-cents rows, one machinery pass, a 1-row fold."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    K = 7
-    per_v = (
-        ev.select((F.dayofweek("ts") - 1).alias("g"), cents.alias("v"))
-        .groupBy("v")
-        .agg(
-            *[
-                F.sum(F.when(F.col("g") == gi, 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"c{gi}")
-                for gi in range(K)
-            ]
-        )
-        .transform(truncate_lineage)  # feeds the sketch and the fold
-    )
-    cum = bucketed_cum_before(
-        per_v,
-        "v",
-        [f"c{gi}" for gi in range(K)],
-        [f"p{gi}" for gi in range(K)],
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    two = F.lit(2).cast("decimal(38,0)")
-    # 2·JT: Σ over the 21 ordered (g<h) pairs of c_h·(2·prev_g + c_g)
-    jt_terms = None
-    for h in range(1, K):
-        for g in range(h):
-            t = d38(F.col(f"c{h}")) * (
-                two * d38(F.col(f"p{g}")) + d38(F.col(f"c{g}"))
-            )
-            jt_terms = t if jt_terms is None else jt_terms + t
-    tie_t = None
-    for gi in range(K):
-        c = d38(F.col(f"c{gi}"))
-        tie_t = c if tie_t is None else tie_t + c
-    agg = cum.agg(
-        F.sum(jt_terms).alias("jt2"),
-        F.sum(tie_t * (tie_t - F.lit(1)) * (two * tie_t + F.lit(5))).alias("tt1"),
-        F.sum(tie_t * (tie_t - F.lit(1)) * (tie_t - F.lit(2))).alias("tt2"),
-        F.sum(tie_t * (tie_t - F.lit(1))).alias("tt3"),
-        *[F.sum(f"c{gi}").cast("bigint").alias(f"ng{gi}") for gi in range(K)],
-    )
-    ngs = [d38(F.col(f"ng{gi}")) for gi in range(K)]
-    n_tot = sum(ngs[1:], ngs[0])
-    sumsq = sum((g * g for g in ngs[1:]), ngs[0] * ngs[0])
-    gg1 = sum(
-        (g * (g - F.lit(1)) * (two * g + F.lit(5)) for g in ngs[1:]),
-        ngs[0] * (ngs[0] - F.lit(1)) * (two * ngs[0] + F.lit(5)),
-    )
-    gg2 = sum(
-        (g * (g - F.lit(1)) * (g - F.lit(2)) for g in ngs[1:]),
-        ngs[0] * (ngs[0] - F.lit(1)) * (ngs[0] - F.lit(2)),
-    )
-    gg3 = sum(
-        (g * (g - F.lit(1)) for g in ngs[1:]), ngs[0] * (ngs[0] - F.lit(1))
-    )
-    k_groups = sum(
-        (F.when(F.col(f"ng{gi}") > 0, 1).otherwise(0) for gi in range(1, K)),
-        F.when(F.col("ng0") > 0, 1).otherwise(0),
-    )
-    folds = agg.select(
-        "jt2",
-        "tt1",
-        "tt2",
-        "tt3",
-        n_tot.cast("bigint").alias("n_total"),
-        k_groups.cast("bigint").alias("k_groups"),
-        (n_tot * n_tot - sumsq).alias("m2x2"),  # 2·(2·mean) = N² − Σn_g²
-        (n_tot * (n_tot - F.lit(1)) * (two * n_tot + F.lit(5)) - F.col("tt1"))
-        .alias("a_term"),
-        gg1.alias("gg1"),
-        gg2.alias("gg2"),
-        gg3.alias("gg3"),
-    ).select(
-        "*",
-        (F.col("a_term") - F.col("gg1")).alias("a_full"),
-    )
-    nd = F.col("n_total").cast("double")
-    var = (
-        F.col("a_full").cast("double") / F.lit(72.0)
-        + F.col("gg2").cast("double")
-        * F.col("tt2").cast("double")
-        / (F.lit(36.0) * (nd * (nd - F.lit(1.0)) * (nd - F.lit(2.0))))
-        + F.col("gg3").cast("double")
-        * F.col("tt3").cast("double")
-        / (F.lit(8.0) * (nd * (nd - F.lit(1.0))))
-    )
-    # var guarded on N ≥ 3 (the middle term divides by N(N−1)(N−2); ANSI
-    # raises on /0) — CaseWhen branches evaluate lazily, so the division
-    # never runs on tiny panels; NULL var propagates to NULL z
-    var_g = F.when(F.col("n_total") >= 3, var)
-    z = F.when(
-        var_g > 0,
-        (two * F.col("jt2") - F.col("m2x2")).cast("double")
-        / (F.lit(4.0) * F.sqrt(var_g)),
-    )
-    return folds.select(
-        "n_total",
-        "k_groups",
-        F.col("jt2").cast("double").alias("jt_u2"),
-        (F.col("m2x2").cast("double") / F.lit(2.0)).alias("mean_u2"),
-        F.round(z, 9).alias("z_jt"),
-        F.when(z.isNotNull(), z > F.lit(JT_Z_05)).alias("reject_increasing_05"),
-    )
-
-
 # Bland-Altman limits-of-agreement multiplier (two-sided 95%, the house
 # z convention). Sync-pinned via the f-string oracle.
 BLAND_ALTMAN_Z_05 = 1.959964
@@ -9093,7 +6449,7 @@ def events_bland_altman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's tau-b rank correlation between the daily view and click
     count series — the pairwise-concordance association readout beside
-    events_spearman_corr (per-user, rank-Pearson) and events_mann_kendall
+    Spearman's rank-Pearson and events_mann_kendall
     (one series vs time): tau-b tie-corrects BOTH margins,
 
         τ_b = S / √[(P − T_x)(P − T_y)],  S = Σ_{i<j} sgn(Δv)·sgn(Δc)
@@ -9142,171 +6498,4 @@ def events_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "n_days", "n_pairs", "s", "ties_x", "ties_y",
         F.round(tau, 9).alias("tau_b"),
-    )
-
-
-# Hurst R/S dyadic block sizes (complete blocks only; sizes longer than
-# the calendar drop out). Mirrored literally in the oracle — sync-pinned.
-HURST_BLOCK_SIZES = [4, 8, 16, 32, 64, 128, 256]
-
-
-def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hurst exponent of the daily event-count series by classical
-    rescaled-range (R/S) analysis — the long-range-dependence readout the
-    rest of the time-series family assumes away: H ≈ 0.5 for independent
-    increments (Poisson-like load), H → 1 for trending/persistent
-    series, H < 0.5 for mean-reverting ones; alarms tuned on H = 0.5
-    noise false-fire on persistent traffic.
-
-    Exact evaluation: on the zero-filled calendar spine, every block
-    statistic is carried SCALED BY the block size n so it stays an exact
-    DECIMAL(38,0) integer: n·Z_k = n·Σ_{j≤k}y_j − k·Σy (cumulative
-    deviations), n·R = max − min of those, and (n·S)² = n·Σy² − (Σy)²
-    (population sd — the overdispersion identity); R/S = n·R / √((n·S)²)
-    divides exact integers once in double per block. Per-size means ride
-    the 9dp/DECIMAL(28,9) rail; the log-log OLS over the ≤7 dyadic sizes
-    reuses the text_heaps_law_fit exact-decimal sufficient-sum rails
-    (7dp-pinned lns into DECIMAL(18,7)). Constant blocks (S = 0) drop
-    and are reported; fewer than 2 usable sizes yields NULL H.
-
-    Scale shape: one corpus pass to the day spine, a ×|sizes| bounded
-    fan-out, windows PARTITIONED by (size, block) (≤ max block size
-    rows each), a ≤7-point fold."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    day = (
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-        .cast("bigint")
-        .alias("day")
-    )
-    per_d = (
-        ev.select(day)
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-        .transform(truncate_lineage)  # feeds the range agg AND the spine join
-    )
-    rng = per_d.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = rng.select(
-        F.explode(F.sequence(F.col("dmin"), F.col("dmax"))).alias("day"),
-        F.col("dmin"),
-    )
-    daily = (
-        spine.join(per_d, "day", "left")
-        .select(
-            (F.col("day") - F.col("dmin")).cast("bigint").alias("t"),
-            F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("y"),
-        )
-        .transform(truncate_lineage)  # feeds the count AND the block frames
-    )
-    nd = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
-    framed = (
-        daily.select(
-            "t",
-            "y",
-            F.explode(
-                F.array(*[F.lit(s).cast("bigint") for s in HURST_BLOCK_SIZES])
-            ).alias("bs"),
-        )
-        .crossJoin(F.broadcast(nd))
-        # complete blocks only: blk and the per-size block count via exact
-        # integer division (a − a%b over tiny quotients)
-        .withColumn(
-            "blk",
-            (
-                (F.col("t") - F.pmod(F.col("t"), F.col("bs"))) / F.col("bs")
-            ).cast("bigint"),
-        )
-        .withColumn(
-            "nblk",
-            (
-                (F.col("n_days") - F.pmod(F.col("n_days"), F.col("bs")))
-                / F.col("bs")
-            ).cast("bigint"),
-        )
-        .where(F.col("blk") < F.col("nblk"))
-        .transform(truncate_lineage)  # feeds the block stats AND the cum pass
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    stats = framed.groupBy("bs", "blk").agg(
-        F.sum("y").cast("bigint").alias("s"),
-        F.sum(d38(F.col("y")) * d38(F.col("y"))).alias("ss"),
-    )
-    w = Window.partitionBy("bs", "blk").orderBy("t").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = framed.select(
-        "bs",
-        "blk",
-        "t",
-        F.sum("y").over(w).cast("bigint").alias("cy"),
-        (F.pmod(F.col("t"), F.col("bs")) + F.lit(1)).cast("bigint").alias("k"),
-    )
-    blocks = (
-        cum.join(stats, ["bs", "blk"])
-        .select(
-            "bs",
-            "blk",
-            "s",
-            "ss",
-            (d38(F.col("bs")) * d38(F.col("cy")) - d38(F.col("k")) * d38(F.col("s")))
-            .alias("zn"),
-        )
-        .groupBy("bs", "blk")
-        .agg(
-            (F.max("zn") - F.min("zn")).alias("rn"),
-            (
-                d38(F.max("bs")) * F.max("ss") - d38(F.max("s")) * d38(F.max("s"))
-            ).alias("s2n"),
-        )
-    )
-    rail = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    rs = F.when(
-        F.col("s2n") > 0,
-        F.col("rn").cast("double") / F.sqrt(F.col("s2n").cast("double")),
-    )
-    per_size = blocks.groupBy("bs").agg(
-        F.sum(F.when(F.col("s2n") > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("nb"),
-        F.count(F.lit(1)).cast("bigint").alias("nb_all"),
-        F.sum(F.when(F.col("s2n") > 0, rail(rs)).otherwise(F.lit(None)))
-        .cast("double")
-        .alias("rs_sum"),
-    )
-    d7 = lambda c: F.round(c, 7).cast("decimal(18,7)")  # noqa: E731
-    pts = per_size.where(F.col("nb") > 0).select(
-        "nb",
-        "nb_all",
-        d7(F.log(F.col("bs").cast("double"))).alias("x"),
-        d7(F.log(F.col("rs_sum") / F.col("nb").cast("double"))).alias("y"),
-    )
-    sums = pts.agg(
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum("nb").cast("bigint").alias("n_blocks_used"),
-        (F.sum("nb_all") - F.sum("nb")).cast("bigint").alias("n_blocks_skipped"),
-    ).crossJoin(F.broadcast(nd))
-    md = F.col("m").cast("double")
-    dx = md * F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col(
-        "sx"
-    ).cast("double")
-    dy = md * F.col("syy").cast("double") - F.col("sy").cast("double") * F.col(
-        "sy"
-    ).cast("double")
-    num = md * F.col("sxy").cast("double") - F.col("sx").cast("double") * F.col(
-        "sy"
-    ).cast("double")
-    h = F.when((F.col("m") >= 2) & (dx > 0), num / dx)
-    r2 = F.when(h.isNotNull() & (dy > 0), num * num / (dx * dy))
-    return sums.select(
-        "n_days",
-        F.col("m").alias("n_sizes"),
-        "n_blocks_used",
-        "n_blocks_skipped",
-        F.round(h, 9).alias("hurst_h"),
-        F.round(r2, 9).alias("r2"),
     )

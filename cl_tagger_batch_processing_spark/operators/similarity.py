@@ -2224,12 +2224,18 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_cache_sweep(_INTRINSIC_CAND_CACHE, app_id)
     cached = _INTRINSIC_CAND_CACHE.get(memo_key)
     if cached is None:
-        cand = base.select("vec_id", "qv", "nrm").toPandas()
+        # Collect at most one row past the cap: an oversized corpus fails
+        # here without pulling the whole candidate side to the driver.
+        cand = (
+            base.select("vec_id", "qv", "nrm")
+            .limit(INTRINSIC_DIM_MAX_CANDIDATES + 1)
+            .toPandas()
+        )
         if len(cand) > INTRINSIC_DIM_MAX_CANDIDATES:
             raise RuntimeError(
-                f"embedding_intrinsic_dim: {len(cand)} candidate vectors "
-                f"exceed the exact-referee driver boundary "
-                f"({INTRINSIC_DIM_MAX_CANDIDATES}); use the LSH/IVF "
+                f"embedding_intrinsic_dim: more than "
+                f"{INTRINSIC_DIM_MAX_CANDIDATES} candidate vectors "
+                "exceed the exact-referee driver boundary; use the LSH/IVF "
                 "candidate machinery (sim_ann_lsh / sim_topk_ivf) at this "
                 "scale"
             )

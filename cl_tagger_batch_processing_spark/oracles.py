@@ -310,14 +310,6 @@ FROM part
 GROUP BY p_brand
 """
 
-ORACLE_SQL["events_json_extract"] = """
-SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-       MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-       MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-FROM events
-GROUP BY event_type
-"""
 
 # Tie policy mirrors the Spark union+window implementation: clicks at the
 # purchase timestamp count (<=); among equal-ts clicks the highest event_id
@@ -1932,17 +1924,6 @@ SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
 FROM c
 """
 
-# Same typed path + bucket arithmetic, via DuckDB's native JSON extraction.
-ORACLE_SQL["events_variant_extract"] = """
-WITH v AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-  FROM events
-)
-SELECT event_type, k % 10 AS k_bucket, COUNT(*) AS n,
-       CAST(SUM(k) AS BIGINT) AS sum_k
-FROM v GROUP BY 1, 2
-"""
 
 # DuckDB runs the identical LATERAL text.
 ORACLE_SQL["lateral_top_customers"] = """
@@ -2148,56 +2129,6 @@ SELECT l_orderkey,
 FROM g
 """
 
-# Same chained window milestones; exact integer-microsecond dwell sums.
-ORACLE_SQL["events_funnel"] = """
-WITH s1 AS (
-  SELECT user_id, event_type, ts,
-         MIN(CASE WHEN event_type = 'view' THEN ts END)
-           OVER (PARTITION BY user_id) AS v_ts
-  FROM events
-),
-s2 AS (
-  SELECT *, MIN(CASE WHEN event_type = 'click' AND ts > v_ts THEN ts END)
-              OVER (PARTITION BY user_id) AS c_ts
-  FROM s1
-),
-s3 AS (
-  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > c_ts THEN ts END)
-              OVER (PARTITION BY user_id) AS p_ts
-  FROM s2
-),
-u AS (
-  SELECT user_id, MIN(v_ts) AS v_ts, MIN(c_ts) AS c_ts, MIN(p_ts) AS p_ts
-  FROM s3 GROUP BY user_id
-)
-SELECT COUNT(*) AS n_users,
-       CAST(SUM(CASE WHEN v_ts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_viewed,
-       CAST(SUM(CASE WHEN c_ts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_clicked,
-       CAST(SUM(CASE WHEN p_ts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_purchased,
-       CAST(SUM(CASE WHEN c_ts IS NOT NULL
-                     THEN epoch_us(c_ts) - epoch_us(v_ts) ELSE 0 END) AS BIGINT)
-         AS view_click_us,
-       CAST(SUM(CASE WHEN p_ts IS NOT NULL
-                     THEN epoch_us(p_ts) - epoch_us(c_ts) ELSE 0 END) AS BIGINT)
-         AS click_purchase_us
-FROM u
-"""
-
-# Same first-seen cohorts and distinct active user-days.
-ORACLE_SQL["events_retention"] = """
-WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
-cohorts AS (SELECT user_id, MIN(d) AS cohort_date FROM ev GROUP BY user_id),
-active AS (SELECT DISTINCT user_id, d FROM ev)
-SELECT c.cohort_date,
-       CAST(a.d - c.cohort_date AS BIGINT) AS day_offset,
-       CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_active
-FROM active a JOIN cohorts c USING (user_id)
-WHERE a.d - c.cohort_date <= 7
-GROUP BY 1, 2
-"""
 
 # Same distinct-basket pair counts, same unique ordering.
 ORACLE_SQL["part_cooccurrence"] = """
@@ -2551,7 +2482,6 @@ SELECT phash, CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM hashed GROUP BY phash HAVING COUNT(*) > 1
 """
 
-# --- round-5 batch-2 additions ----------------------------------------------
 
 # Mirrors relational.events_markov_transitions: lead() over (user_id; ts,
 # event_id) then an exact-int transition rollup.
@@ -2573,25 +2503,8 @@ SELECT from_type, to_type, n_transitions,
 FROM c
 """
 
-# Mirrors relational.events_anomaly_mad: exact interpolated medians
-# (quantile_cont ≡ Spark percentile), flag on 9dp-rounded deviations.
-ORACLE_SQL["events_anomaly_mad"] = """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med FROM events GROUP BY 1
-),
-dev AS (
-  SELECT e.event_type, m.med, abs(e.value - m.med) AS abs_dev
-  FROM events e JOIN med m USING (event_type)
-),
-mad AS (
-  SELECT event_type, med, quantile_cont(abs_dev, 0.5) AS mad
-  FROM dev GROUP BY event_type, med
-)
-SELECT e.event_id, e.event_type, e.value,
-       round(m.med, 6) AS med, round(m.mad, 6) AS mad
-FROM events e JOIN mad m USING (event_type)
-WHERE round(abs(e.value - m.med), 9) > round(3.0 * m.mad, 9)
-"""
+# --- round-5 batch-2 additions ----------------------------------------------
+
 
 # Mirrors relational.scd2_order_status: change rows via lag(), intervals via
 # lead(), both over (o_custkey; date, o_orderkey).
@@ -2984,6 +2897,7 @@ SELECT lang, CAST(decile AS BIGINT) AS decile, COUNT(*) AS n_docs,
 FROM d GROUP BY lang, decile
 """
 
+
 # Mirrors relational.events_rolling_zscore: pinned-DECIMAL rolling moments
 # over the previous 10 events per user, z on exact rationals, 9dp-rounded
 # flag compare, 6dp + (-0 canonicalized) output.
@@ -3010,6 +2924,7 @@ SELECT event_id, user_id, value,
 FROM f
 WHERE var_num > 0 AND round(abs(num / sqrt(var_num)), 9) > 2.0
 """
+
 
 # Mirrors dedup.dedup_minhash_incremental: the dedup_minhash_lsh candidate
 # machinery restricted to store(even)/incoming(odd) generations, greedy
@@ -3051,25 +2966,6 @@ LEFT JOIN rej_batch b2 ON inc.doc_id = b2.doc_id
 GROUP BY lang
 """
 
-# Mirrors relational.events_path_topk: two leads over (user_id; ts,
-# event_id), 3-step path counts, (count DESC, path ASC) top-25.
-ORACLE_SQL["events_path_topk"] = """
-WITH p AS (
-  SELECT event_type AS t0,
-         lead(event_type, 1) OVER w AS t1,
-         lead(event_type, 2) OVER w AS t2
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-c AS (
-  SELECT t0 || ' > ' || t1 || ' > ' || t2 AS path, COUNT(*) AS n_paths
-  FROM p WHERE t2 IS NOT NULL GROUP BY 1
-  ORDER BY n_paths DESC, path ASC LIMIT 25
-)
-SELECT path, n_paths,
-       row_number() OVER (ORDER BY n_paths DESC, path ASC) AS rank
-FROM c
-"""
 
 # XML roundtrip: same fidelity contract as the other interchange formats.
 ORACLE_SQL["source_xml_roundtrip"] = _ROUNDTRIP_AGG_SQL
@@ -3298,22 +3194,6 @@ terms AS (
 SELECT sa, sb, COUNT(*) AS n_vocab_union,
        round(CAST(SUM(term) AS DOUBLE), 6) + 0.0 AS jsd_bits
 FROM terms GROUP BY sa, sb
-"""
-
-# Mirrors relational.events_daily_percentiles: exact interpolated daily
-# quantiles (quantile_cont ≡ Spark percentile) at 6dp, lag drift.
-ORACLE_SQL["events_daily_percentiles"] = """
-WITH d AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         COUNT(*) AS n_events,
-         round(quantile_cont(value, 0.5), 6) AS p50,
-         round(quantile_cont(value, 0.9), 6) AS p90
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, day, n_events, p50, p90,
-       round(p50 - lag(p50) OVER (PARTITION BY event_type ORDER BY day), 6)
-         + 0.0 AS p50_drift
-FROM d
 """
 
 
@@ -4225,6 +4105,7 @@ SELECT u, v, n_common, nbr_jaccard,
 FROM top
 """
 
+
 # Mirrors relational.events_decayed_engagement: exact epoch-microsecond
 # ages, one double division + pow per row, 9dp-round -> DECIMAL(28,9)
 # order-independent sum, 6dp display round.
@@ -4242,6 +4123,7 @@ SELECT user_id, COUNT(*) AS n_events,
        round(MIN(age_days), 6) AS days_since_last_event
 FROM t GROUP BY user_id
 """
+
 
 # Mirrors text.corpus_fertility_by_lang: integer token/char sums, two
 # single double divisions per lang row.
@@ -4403,6 +4285,7 @@ SELECT w1, w2, n_ab, n_a, n_b, pmi,
 FROM top
 """
 
+
 # Mirrors relational.events_hourly_seasonality: pure integer epoch
 # arithmetic (Thursday anchor), no engine calendar functions.
 ORACLE_SQL["events_hourly_seasonality"] = """
@@ -4417,6 +4300,7 @@ SELECT dow, hour, COUNT(*) AS n_events,
 FROM c CROSS JOIN tot t
 GROUP BY dow, hour, t.n_total
 """
+
 
 # Mirrors relational.customer_order_gap_percentiles: gaps = diffs of each
 # customer's date-sorted order list (tie order irrelevant - equal dates
@@ -4479,6 +4363,7 @@ FROM d
 WHERE n_rows >= 2 AND denx <> 0 AND deny <> 0
 """
 
+
 # Mirrors relational.events_ewma_daily: exact power-of-two weights as
 # BIGINT sums (shift constants = EWMA_SHIFT/EWMA_WINDOW_DAYS, sync-pinned),
 # one double division at the end. Day/index arithmetic is pure integer.
@@ -4503,6 +4388,7 @@ SELECT d.day, d.cnt,
        CAST(sm.num AS DOUBLE) / CAST(sm.den AS DOUBLE) AS ewma
 FROM daily d JOIN sm ON d.day = sm.target_day
 """
+
 
 # Mirrors graph.graph_shortest_paths: same co-occurrence graph, seeds =
 # the 3 smallest node ids, min hop distance per reachable node via a
@@ -4690,51 +4576,6 @@ SELECT doc_id, source, n_tokens, es_key,
 FROM top
 """
 
-# Mirrors relational.events_cusum_drift: integer cross-multiplied
-# deviations, exact BIGINT prefix sums and running extrema (with the
-# P0 = 0 empty-prefix term via least/greatest), identical final rescale
-# and 3·sqrt(mean) alarm threshold.
-ORACLE_SQL["events_cusum_drift"] = """
-WITH daily AS (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         COUNT(*) AS daily_count
-  FROM events GROUP BY 1
-),
-tot AS (SELECT SUM(daily_count) AS c_total, COUNT(*) AS n_days FROM daily),
-dev AS (
-  SELECT day, daily_count, t.c_total, t.n_days,
-         t.n_days * daily_count - t.c_total AS dev
-  FROM daily CROSS JOIN tot t
-),
-pre AS (
-  SELECT day, daily_count, c_total, n_days,
-         SUM(dev) OVER (ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
-  FROM dev
-),
-ext AS (
-  SELECT day, daily_count, c_total, n_days, p,
-         MIN(p) OVER (ORDER BY day
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pmin,
-         MAX(p) OVER (ORDER BY day
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pmax
-  FROM pre
-)
-SELECT day, daily_count,
-       CAST(p - least(CAST(0 AS BIGINT), pmin) AS DOUBLE)
-         / CAST(n_days AS DOUBLE) AS cusum_up,
-       CAST(greatest(CAST(0 AS BIGINT), pmax) - p AS DOUBLE)
-         / CAST(n_days AS DOUBLE) AS cusum_down,
-       CAST(CASE WHEN CAST(p - least(CAST(0 AS BIGINT), pmin) AS DOUBLE)
-                      / CAST(n_days AS DOUBLE)
-                    > 3.0 * sqrt(CAST(c_total AS DOUBLE) / CAST(n_days AS DOUBLE))
-                  OR CAST(greatest(CAST(0 AS BIGINT), pmax) - p AS DOUBLE)
-                      / CAST(n_days AS DOUBLE)
-                    > 3.0 * sqrt(CAST(c_total AS DOUBLE) / CAST(n_days AS DOUBLE))
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_drift
-FROM ext
-"""
-
 
 # Mirrors relational.orders_seasonal_decompose: DECIMAL monthly sums, 2×12
 # MA numerator kept ×24 (2·window − endpoints), exact detrending, one
@@ -4788,6 +4629,7 @@ SELECT t.ym, t.month_of_year,
 FROM tr t JOIN sc s ON t.month_of_year = s.month_of_year
 """
 
+
 # Mirrors relational.events_bot_detection: integer epoch hour buckets,
 # two-level aggregation, threshold constants sync-pinned (20 / 2 / 50 / 2).
 ORACLE_SQL["events_bot_detection"] = """
@@ -4823,6 +4665,7 @@ SELECT user_id, n_events, n_types, peak_per_hour,
        CAST(CASE WHEN flags >= 2 THEN 1 ELSE 0 END AS BIGINT) AS is_bot
 FROM j
 """
+
 
 # Mirrors relational.supplier_herfindahl: ×10⁴ integral rescale, exact
 # HUGEINT (Spark: DECIMAL(38,0)) squares, one double division.
@@ -5133,6 +4976,7 @@ SELECT a.arm, a.n_users, a.n_converted,
 FROM arms a CROSS JOIN stats s
 """
 
+
 # Mirrors text.text_blocklist_filter: token-exact list matching
 # (list_filter / list_intersect — no regex), blocklist sync-pinned.
 ORACLE_SQL["text_blocklist_filter"] = """
@@ -5326,6 +5170,7 @@ FROM customer
 GROUP BY 1, 2
 """
 
+
 # Mirrors relational.events_autocorrelation: daily event counts on the
 # shared epoch-day spine, Pearson r at lags 1..7 from exact HUGEINT
 # sufficient statistics (Spark side: DECIMAL(38,0) — both far past the
@@ -5361,6 +5206,7 @@ SELECT lag, n AS n_pairs,
             ELSE NULL END AS acf
 FROM s
 """
+
 
 # Mirrors relational.privacy_t_closeness: same QI key as the k-anonymity /
 # l-diversity audits, total-variation distance to the global market-segment
@@ -5440,7 +5286,7 @@ GROUP BY r.root, r.degree
 # Mirrors graph.graph_assortativity: degrees hung on both endpoints of the
 # symmetric edge list, Pearson r from exact HUGEINT sufficient statistics
 # (Spark: DECIMAL(38,0)) with the identical double subtraction/sqrt/divide
-# tree — the events_autocorrelation convention.
+# tree.
 ORACLE_SQL["graph_assortativity"] = f"""
 WITH {_PR_GRAPH_CTES},
 deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
@@ -5466,47 +5312,6 @@ SELECT n AS n_edges,
                         * (CAST(n AS DOUBLE) * syy - sy * sy))
             ELSE NULL END AS assortativity
 FROM s
-"""
-
-# Mirrors relational.events_funnel_latency: the events_funnel milestone
-# CTE chain, per-stage latency in exact integer microseconds, interpolated
-# percentiles via quantile_cont (the customer_order_gap_percentiles
-# convention).
-ORACLE_SQL["events_funnel_latency"] = """
-WITH s1 AS (
-  SELECT user_id, event_type, ts,
-         MIN(CASE WHEN event_type = 'view' THEN ts END)
-           OVER (PARTITION BY user_id) AS v_ts
-  FROM events
-),
-s2 AS (
-  SELECT *, MIN(CASE WHEN event_type = 'click' AND ts > v_ts THEN ts END)
-              OVER (PARTITION BY user_id) AS c_ts
-  FROM s1
-),
-s3 AS (
-  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > c_ts THEN ts END)
-              OVER (PARTITION BY user_id) AS p_ts
-  FROM s2
-),
-u AS (
-  SELECT user_id, MIN(v_ts) AS v_ts, MIN(c_ts) AS c_ts, MIN(p_ts) AS p_ts
-  FROM s3 GROUP BY user_id
-),
-lat AS (
-  SELECT 'view_to_click' AS stage,
-         epoch_us(c_ts) - epoch_us(v_ts) AS lat_us
-  FROM u WHERE c_ts IS NOT NULL
-  UNION ALL
-  SELECT 'click_to_purchase', epoch_us(p_ts) - epoch_us(c_ts)
-  FROM u WHERE p_ts IS NOT NULL
-)
-SELECT stage, COUNT(*) AS n_users,
-       MIN(lat_us) AS min_lat_us, MAX(lat_us) AS max_lat_us,
-       CAST(SUM(lat_us) AS DOUBLE) / COUNT(*) AS avg_lat_us,
-       quantile_cont(lat_us, 0.5) AS p50_lat_us,
-       quantile_cont(lat_us, 0.9) AS p90_lat_us
-FROM lat GROUP BY stage
 """
 
 
@@ -5673,6 +5478,7 @@ GROUP BY w.a, w.b"""
 
 ORACLE_SQL["events_logistic_regression"] = _logit_sql()
 
+
 # Mirrors relational.events_decision_stump: 10-unit value histogram, split
 # evaluation from cumulative bucket counts, weighted Gini as the identical
 # per-row double tree, (gini ASC, threshold ASC) rank tie-break.
@@ -5732,6 +5538,7 @@ SELECT threshold, n_left, pos_left, n_right, pos_right, weighted_gini,
 FROM scored
 """
 
+
 # Mirrors text.text_textrank_keywords: the adjacent-word co-occurrence
 # graph (least/greatest undirected pairs, HAVING >= 5 sync-pinned with
 # TEXTRANK_MIN_COOC) fed through the SAME exact-integer PageRank chain as
@@ -5766,48 +5573,6 @@ SELECT node AS word, pr_scaled, pagerank,
 FROM ranked
 """
 
-# Mirrors relational.events_quantile_sketch_report: 4-unit equi-width
-# histogram (bin cap 127 sync-pinned), crossing-bin pick on exact integer
-# cumulative ranks, identical interpolation/error double trees, exact side
-# via quantile_cont (the percentile convention).
-ORACLE_SQL["events_quantile_sketch_report"] = """
-WITH hist AS MATERIALIZED (
-  SELECT least(CAST(floor(value / 4.0) AS BIGINT), 127) AS b,
-         COUNT(*) AS cnt
-  FROM events GROUP BY 1
-),
-tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM hist),
-cum AS (
-  SELECT b, cnt,
-         CAST(SUM(cnt) OVER (ORDER BY b
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         t.n
-  FROM hist CROSS JOIN tot t
-),
-qs AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS q),
-hit AS (
-  SELECT q,
-         CAST(b AS DOUBLE) * 4.0
-           + 4.0 * (((q * CAST(n AS DOUBLE))
-                     - CAST(cum - cnt AS DOUBLE)) / CAST(cnt AS DOUBLE))
-           AS estimate
-  FROM cum CROSS JOIN qs
-  WHERE CAST(cum AS DOUBLE) >= q * CAST(n AS DOUBLE)
-    AND CAST(cum - cnt AS DOUBLE) < q * CAST(n AS DOUBLE)
-),
-ex AS (
-  SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS q,
-         unnest([quantile_cont(value, 0.5),
-                 quantile_cont(value, 0.9),
-                 quantile_cont(value, 0.99)]) AS exact
-  FROM events
-)
-SELECT h.q, h.estimate, e.exact,
-       abs(h.estimate - e.exact) AS abs_err,
-       abs(h.estimate - e.exact) / e.exact AS rel_err
-FROM hit h JOIN ex e ON h.q = e.q
-"""
 
 # Mirrors streaming.windows.stream_quantile_histogram: hour-tumbling
 # integer-epoch windows, the 4-unit/127-cap histogram bin, and the same
@@ -5894,6 +5659,7 @@ SELECT split_a, split_b, n_pairs,
 FROM cells CROSS JOIN tot t
 """
 
+
 # Mirrors relational.events_user_hazard_curve: per-user lifetime from
 # epoch-day min/max, endings histogram, at-risk via total minus the
 # strictly-before cumulative, hazard as one exact-integer division.
@@ -5921,6 +5687,7 @@ SELECT day_offset, n_ended, n_at_risk,
        CAST(n_ended AS DOUBLE) / CAST(n_at_risk AS DOUBLE) AS hazard
 FROM risky
 """
+
 
 # Mirrors similarity.sim_knn_label_vote: the sim_topk_cosine CTE joined to
 # neighbor labels, majority vote with the (count DESC, label ASC)
@@ -6045,6 +5812,7 @@ SELECT b.k, b.n_tokens_used, b.covered_tokens, t.total_tokens,
 FROM best b CROSS JOIN tot t
 """
 
+
 # Mirrors relational.events_burstiness_by_type: per-(user, type) lag gaps
 # in exact integer microseconds, HUGEINT sufficient sums, the identical
 # double mean/sigma/B tree with the degenerate-NULL guard.
@@ -6079,6 +5847,7 @@ SELECT event_type, n AS n_gaps,
             ELSE NULL END AS burstiness
 FROM s
 """
+
 
 # BM25 (Lucene idf) for the fixed 3-term query; constants sync-pinned to
 # text.BM25_K1/BM25_B/BM25_TOP_K/BM25_QUERY. All inputs exact ints; each
@@ -6239,50 +6008,6 @@ SELECT e.entity_id, p.p_name AS canonical_name, e.n_records, e.member_ids
 FROM ent e JOIN part p ON e.entity_id = p.p_partkey
 """
 
-# Tie-aware Mann-Whitney AUC: doubled average ranks stay exact integers;
-# rank arithmetic runs over the per-SCORE aggregate; one double division.
-ORACLE_SQL["events_auc_report"] = """
-WITH users AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 10
-              AS BIGINT) AS label,
-         CAST(SUM(CASE WHEN event_type IN ('view', 'click') THEN 1 ELSE 0 END)
-              AS BIGINT) AS score
-  FROM events GROUP BY user_id
-),
-per_score AS (
-  SELECT score, COUNT(*) AS n_s, SUM(label) AS p_s
-  FROM users GROUP BY score
-),
-ranked AS (
-  SELECT score, n_s, p_s,
-         COALESCE(SUM(n_s) OVER (ORDER BY score
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND 1 PRECEDING), 0) AS cum_before
-  FROM per_score
-),
-agg AS (
-  SELECT SUM(n_s) AS n_users, SUM(p_s) AS n_pos,
-         SUM(p_s * (2 * cum_before + n_s + 1)) AS r2_pos
-  FROM ranked
-)
-SELECT CAST(n_users AS BIGINT) AS n_users,
-       CAST(n_pos AS BIGINT) AS n_pos,
-       CAST(n_users - n_pos AS BIGINT) AS n_neg,
-       round(CASE WHEN n_pos > 0 AND n_users - n_pos > 0 THEN
-         (CAST(r2_pos AS DOUBLE) - CAST(n_pos AS DOUBLE)
-                                    * CAST(n_pos + 1 AS DOUBLE))
-         / (CAST(2.0 AS DOUBLE) * CAST(n_pos AS DOUBLE)
-            * CAST(n_users - n_pos AS DOUBLE)) END, 9) AS auc,
-       round(CASE WHEN n_pos > 0 AND n_users - n_pos > 0 THEN
-         CAST(2.0 AS DOUBLE) * (
-           (CAST(r2_pos AS DOUBLE) - CAST(n_pos AS DOUBLE)
-                                      * CAST(n_pos + 1 AS DOUBLE))
-           / (CAST(2.0 AS DOUBLE) * CAST(n_pos AS DOUBLE)
-              * CAST(n_users - n_pos AS DOUBLE)))
-         - CAST(1.0 AS DOUBLE) END, 9) AS gini
-FROM agg
-"""
 
 # Per-source repeated-shingle census (boilerplate detection); df >= 2 and
 # the 3-gram window are sync-pinned to text.BOILERPLATE_MIN_DF /
@@ -6440,38 +6165,6 @@ SELECT CAST(row_number() OVER (ORDER BY aa_score DESC, u ASC, v ASC)
 FROM top
 """
 
-# Entropy rate of the event-type Markov chain: exact-int ratios, 9dp-round
-# -> DECIMAL(28,9) entropy sums, tiny (type x type) rollup.
-ORACLE_SQL["events_markov_entropy_rate"] = """
-WITH pairs AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS to_type
-  FROM events
-),
-counts AS (
-  SELECT from_type, to_type, COUNT(*) AS n FROM pairs
-  WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-),
-outs AS (SELECT from_type, SUM(n) AS n_out FROM counts GROUP BY from_type),
-total AS (SELECT SUM(n_out) AS n_total FROM outs),
-ent AS (
-  SELECT c.from_type,
-         round(CAST(SUM(CAST(round(
-             -((CAST(c.n AS DOUBLE) / CAST(o.n_out AS DOUBLE))
-               * log2(CAST(c.n AS DOUBLE) / CAST(o.n_out AS DOUBLE))), 9)
-           AS DECIMAL(28,9))) AS DOUBLE), 9) AS entropy_bits
-  FROM counts c JOIN outs o USING (from_type)
-  GROUP BY c.from_type
-)
-SELECT o.from_type,
-       CAST(o.n_out AS BIGINT) AS n_out,
-       round(CAST(o.n_out AS DOUBLE) / CAST(t.n_total AS DOUBLE), 9) AS pi,
-       e.entropy_bits,
-       round((CAST(o.n_out AS DOUBLE) / CAST(t.n_total AS DOUBLE))
-             * e.entropy_bits, 9) AS contribution_bits
-FROM outs o JOIN ent e USING (from_type) CROSS JOIN total t
-"""
 
 # Skyline oracle: deliberately the INDEPENDENT n^2 dominance algorithm
 # (NOT EXISTS dominator), so a bug in the engine's sort-based pass cannot
@@ -6520,6 +6213,7 @@ SELECT (SELECT MIN(p.day) FROM dd p, trough t
        CAST(t.drawdown AS DOUBLE) AS max_drawdown
 FROM trough t
 """
+
 
 # Kaplan-Meier over SESSION durations with the session-gap censor horizon
 # (30min, sync-pinned): gaps-and-islands sessionization (the sessionize
@@ -6588,6 +6282,7 @@ SELECT CAST(duration_h AS BIGINT) AS duration_minutes,
 FROM curve WHERE d > 0
 """
 
+
 # Value-tier migration: exact epoch-day midpoint split, ntile(4) with the
 # customer_rfm tie-break convention, absent period = tier 0, exact-int
 # within-row shares.
@@ -6629,64 +6324,6 @@ SELECT from_tier, to_tier, CAST(n_customers AS BIGINT) AS n_customers,
 FROM mig
 """
 
-# Retention power-law fit: integer triangle counts, per-point doubles,
-# OLS sufficient statistics on the 9dp-DECIMAL rail, one final division.
-ORACLE_SQL["events_retention_curve_fit"] = """
-WITH base AS (
-  SELECT user_id, CAST(ts AS DATE) AS d FROM events
-),
-cohorts AS (SELECT user_id, MIN(d) AS c FROM base GROUP BY user_id),
-mx AS (SELECT MAX(d) AS dmax FROM base),
-active AS (
-  SELECT DISTINCT b.user_id,
-         CAST(date_diff('day', co.c, b.d) AS BIGINT) AS day_n
-  FROM base b JOIN cohorts co USING (user_id)
-  WHERE date_diff('day', co.c, b.d) >= 1
-),
-retained AS (
-  SELECT day_n, COUNT(DISTINCT user_id) AS retained FROM active GROUP BY day_n
-),
-csize AS (
-  SELECT c, COUNT(*) AS sz,
-         CAST(date_diff('day', c, (SELECT dmax FROM mx)) AS BIGINT) AS horizon
-  FROM cohorts GROUP BY c
-),
-eligible AS (
-  SELECT r.day_n, SUM(s.sz) AS eligible
-  FROM (SELECT day_n FROM retained) r
-  JOIN csize s ON s.horizon >= r.day_n
-  GROUP BY r.day_n
-),
-pts AS (
-  SELECT ln(CAST(r.day_n AS DOUBLE)) AS x,
-         ln(CAST(r.retained AS DOUBLE) / CAST(e.eligible AS DOUBLE)) AS y
-  FROM retained r JOIN eligible e USING (day_n)
-  WHERE r.retained > 0
-),
-s AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(CAST(round(x, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(round(y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS syy
-  FROM pts
-)
-SELECT CAST(n AS BIGINT) AS n_points,
-       round(CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx > 0 THEN
-         (CAST(n AS DOUBLE) * sxy - sx * sy)
-           / (CAST(n AS DOUBLE) * sxx - sx * sx) END, 6) AS slope,
-       round((sy - (CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx > 0 THEN
-         (CAST(n AS DOUBLE) * sxy - sx * sy)
-           / (CAST(n AS DOUBLE) * sxx - sx * sx) END) * sx)
-         / CAST(n AS DOUBLE), 6) AS intercept,
-       round(CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx > 0
-                   AND CAST(n AS DOUBLE) * syy - sy * sy > 0 THEN
-         (CAST(n AS DOUBLE) * sxy - sx * sy) * (CAST(n AS DOUBLE) * sxy - sx * sy)
-           / ((CAST(n AS DOUBLE) * sxx - sx * sx)
-              * (CAST(n AS DOUBLE) * syy - sy * sy)) END, 6) AS r2
-FROM s
-"""
 
 # Near-dup keep-best: the memoized cluster assignment (dedup_clusters
 # oracle reused verbatim as a CTE) joined with THE shared quality formula;
@@ -7127,75 +6764,6 @@ FROM knn k
 LEFT JOIN (SELECT v AS u, u AS v FROM knn) r ON k.u = r.u AND k.v = r.v
 """
 
-# CUPED: exact µs midpoint split, cents BIGINT metrics, theta from exact
-# HUGEINT sufficient statistics (one double division), adjusted-side
-# means/variances on the 9dp-DECIMAL rail.
-ORACLE_SQL["events_ab_cuped"] = """
-WITH rng AS (
-  SELECT MIN(epoch_us(ts)) AS lo, MAX(epoch_us(ts)) AS hi FROM events
-),
-per_user AS (
-  SELECT user_id,
-         SUM(CASE WHEN epoch_us(ts) <= r.lo + (r.hi - r.lo) // 2
-                  THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  ELSE 0 END) AS x,
-         SUM(CASE WHEN epoch_us(ts) > r.lo + (r.hi - r.lo) // 2
-                  THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  ELSE 0 END) AS y,
-         CASE WHEN user_id % 2 = 0 THEN 'control' ELSE 'treatment' END AS arm
-  FROM events CROSS JOIN rng r
-  GROUP BY user_id
-),
-s AS (
-  SELECT COUNT(*) AS n,
-         SUM(CAST(x AS HUGEINT)) AS sx,
-         SUM(CAST(y AS HUGEINT)) AS sy,
-         SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-         SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx
-  FROM per_user
-),
-stats AS (
-  SELECT CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-              THEN (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                   / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-              ELSE CAST(0.0 AS DOUBLE) END AS theta,
-         CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS xbar
-  FROM s
-),
-adj AS (
-  SELECT arm,
-         CAST(y AS DOUBLE) / CAST(100.0 AS DOUBLE) AS yd,
-         (CAST(y AS DOUBLE)
-          - t.theta * (CAST(x AS DOUBLE) - t.xbar))
-           / CAST(100.0 AS DOUBLE) AS ya,
-         t.theta
-  FROM per_user CROSS JOIN stats t
-),
-per_arm AS (
-  SELECT arm, COUNT(*) AS n_users,
-         SUM(CAST(round(yd, 9) AS DECIMAL(28,9))) AS sy,
-         SUM(CAST(round(yd * yd, 9) AS DECIMAL(28,9))) AS syy,
-         SUM(CAST(round(ya, 9) AS DECIMAL(28,9))) AS sa,
-         SUM(CAST(round(ya * ya, 9) AS DECIMAL(28,9))) AS saa,
-         MIN(theta) AS theta
-  FROM adj GROUP BY arm
-)
-SELECT arm, CAST(n_users AS BIGINT) AS n_users,
-       round(CAST(sy AS DOUBLE) / CAST(n_users AS DOUBLE), 6) AS mean_metric,
-       round(CAST(sa AS DOUBLE) / CAST(n_users AS DOUBLE), 6) AS mean_adjusted,
-       round(theta, 9) AS theta,
-       round(CASE WHEN CAST(n_users AS DOUBLE) * CAST(syy AS DOUBLE)
-                       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-                  THEN (CAST(n_users AS DOUBLE) * CAST(saa AS DOUBLE)
-                        - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-                       / (CAST(n_users AS DOUBLE) * CAST(syy AS DOUBLE)
-                          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) END, 6)
-         AS variance_ratio
-FROM per_arm
-"""
 
 # True winnowing (k=4, w=4, rightmost-min): per-window argmin via the
 # lexicographic struct-max (probed identical on both engines).
@@ -7312,38 +6880,6 @@ FROM scored
 GROUP BY n_matches
 """
 
-# Engagement Gini: exact integer sufficient statistics, the (metric ASC,
-# user_id ASC) rank tie-break, two double divisions at the end.
-ORACLE_SQL["events_user_gini"] = """
-WITH per_user AS (
-  SELECT user_id, COUNT(*) AS n_events,
-         SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS cents
-  FROM events GROUP BY user_id
-),
-g1 AS (
-  SELECT 'n_events' AS metric, COUNT(*) AS n,
-         SUM(CAST(x AS HUGEINT)) AS sx,
-         SUM(CAST(i AS HUGEINT) * CAST(x AS HUGEINT)) AS six
-  FROM (SELECT n_events AS x,
-               row_number() OVER (ORDER BY n_events ASC, user_id ASC) AS i
-        FROM per_user)
-),
-g2 AS (
-  SELECT 'cents' AS metric, COUNT(*) AS n,
-         SUM(CAST(x AS HUGEINT)) AS sx,
-         SUM(CAST(i AS HUGEINT) * CAST(x AS HUGEINT)) AS six
-  FROM (SELECT cents AS x,
-               row_number() OVER (ORDER BY cents ASC, user_id ASC) AS i
-        FROM per_user)
-),
-u AS (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
-SELECT metric, CAST(n AS BIGINT) AS n_users,
-       round(CAST(2.0 AS DOUBLE) * CAST(six AS DOUBLE)
-               / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE))
-             - (CAST(n AS DOUBLE) + CAST(1.0 AS DOUBLE))
-               / CAST(n AS DOUBLE), 9) AS gini
-FROM u
-"""
 
 # k-anonymity generalization sweep: four band widths, shared KANON_K bar;
 # all statistics exact integers with one division per rate.
@@ -7423,46 +6959,6 @@ FROM (SELECT * FROM fit WHERE segment = 'pre') p
 CROSS JOIN (SELECT * FROM fit WHERE segment = 'post') q
 """
 
-# Two-sample KS: exact cents support, ECDF windows over the per-value
-# aggregate, integer cross-difference argmax with smaller-value tie-break,
-# doubles only at the final D/bound. Constants sync-pinned.
-ORACLE_SQL["events_ks_test"] = """
-WITH per_v AS (
-  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS ca,
-         SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cb
-  FROM events WHERE event_type IN ('view', 'click')
-  GROUP BY 1
-),
-tot AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM per_v),
-cum AS (
-  SELECT v,
-         SUM(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND CURRENT ROW) AS cuma,
-         SUM(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND CURRENT ROW) AS cumb
-  FROM per_v
-),
-best AS (
-  SELECT c.v, abs(c.cuma * t.nb - c.cumb * t.na) AS g, t.na, t.nb
-  FROM cum c CROSS JOIN tot t
-  ORDER BY g DESC, c.v ASC LIMIT 1
-)
-SELECT CAST(na AS BIGINT) AS n_a,
-       CAST(nb AS BIGINT) AS n_b,
-       CAST(v AS DOUBLE) / CAST(100.0 AS DOUBLE) AS d_at_value,
-       round(CAST(g AS DOUBLE)
-             / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 9) AS ks_d,
-       round(CAST(1.358 AS DOUBLE)
-             * sqrt((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
-                    / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))), 9)
-         AS reject_bound_05,
-       CAST(g AS DOUBLE) > CAST(1.358 AS DOUBLE)
-         * sqrt((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
-                / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)))
-         * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) AS reject_equal_05
-FROM best
-"""
 
 # One-stop per-source health dashboard: composes the funnel survivor
 # windows, THE quality formula, and the token-count convention.
@@ -7523,181 +7019,9 @@ LEFT JOIN (SELECT source, COUNT(*) AS c FROM near_surv GROUP BY source) nv
 CROSS JOIN tot t
 """
 
-# KMV / theta sketch set algebra: k smallest 60-bit md5 minima per type,
-# merged top-k with theta = kth value, est_union = (k-1)*D/theta (exact
-# count below k), Jaccard = merged-k fraction present in both sketches.
-# Constants sync-pinned (k=64, D=2^60).
-ORACLE_SQL["events_kmv_overlap"] = """
-WITH uh AS (
-  SELECT DISTINCT event_type, user_id,
-         CAST('0x' || substr(md5('kmv:' || CAST(user_id AS VARCHAR)), 1, 15)
-              AS BIGINT) AS h
-  FROM events
-),
-kmv AS (
-  SELECT event_type, h FROM (
-    SELECT event_type, h,
-           row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-    FROM uh)
-  WHERE rn <= 64
-),
-types AS (SELECT DISTINCT event_type FROM uh),
-pairs AS (
-  SELECT a.event_type AS ta, b.event_type AS tb
-  FROM types a JOIN types b ON a.event_type < b.event_type
-),
-merged AS (
-  SELECT DISTINCT ta, tb, h FROM (
-    SELECT p.ta, p.tb, k.h FROM pairs p JOIN kmv k ON k.event_type = p.ta
-    UNION ALL
-    SELECT p.ta, p.tb, k.h FROM pairs p JOIN kmv k ON k.event_type = p.tb
-  )
-),
-topk AS (
-  SELECT ta, tb, h FROM (
-    SELECT ta, tb, h,
-           row_number() OVER (PARTITION BY ta, tb ORDER BY h) AS rn
-    FROM merged)
-  WHERE rn <= 64
-),
-sk AS (
-  SELECT t.ta, t.tb, COUNT(*) AS k_used, MAX(t.h) AS theta,
-         SUM(CASE WHEN ia.h IS NOT NULL AND ib.h IS NOT NULL
-                  THEN 1 ELSE 0 END) AS n_both
-  FROM topk t
-  LEFT JOIN kmv ia ON ia.event_type = t.ta AND ia.h = t.h
-  LEFT JOIN kmv ib ON ib.event_type = t.tb AND ib.h = t.h
-  GROUP BY t.ta, t.tb
-),
-ex AS (SELECT event_type, COUNT(DISTINCT user_id) AS n_users FROM uh
-       GROUP BY event_type),
-exi AS (
-  SELECT a.event_type AS ta, b.event_type AS tb,
-         COUNT(DISTINCT a.user_id) AS exact_intersection
-  FROM uh a JOIN uh b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT s.ta, s.tb,
-       CAST(ea.n_users AS BIGINT) AS exact_a,
-       CAST(eb.n_users AS BIGINT) AS exact_b,
-       CAST(x.exact_intersection AS BIGINT) AS exact_intersection,
-       round(CASE WHEN s.k_used < 64 THEN CAST(s.k_used AS DOUBLE)
-                  ELSE CAST(63.0 AS DOUBLE)
-                       * CAST(1152921504606846976 AS DOUBLE)
-                       / CAST(s.theta AS DOUBLE) END, 6) AS est_union,
-       round(CAST(s.n_both AS DOUBLE) / CAST(s.k_used AS DOUBLE), 9)
-         AS est_jaccard,
-       round((CAST(s.n_both AS DOUBLE) / CAST(s.k_used AS DOUBLE))
-             * (CASE WHEN s.k_used < 64 THEN CAST(s.k_used AS DOUBLE)
-                     ELSE CAST(63.0 AS DOUBLE)
-                          * CAST(1152921504606846976 AS DOUBLE)
-                          / CAST(s.theta AS DOUBLE) END), 6)
-         AS est_intersection
-FROM sk s
-JOIN ex ea ON ea.event_type = s.ta
-JOIN ex eb ON eb.event_type = s.tb
-JOIN exi x ON x.ta = s.ta AND x.tb = s.tb
-"""
 
-# Binary-segmentation change-point: exact cents prefix sums over the
-# per-day aggregate, integer-numerator variance-reduction score (one
-# double division per candidate), (score DESC, day ASC) argmax; the
-# reported reduction rescales cents^2 -> value^2 (/1e4).
-ORACLE_SQL["events_changepoint_detection"] = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c,
-         SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS s
-  FROM events GROUP BY 1
-),
-tot AS (SELECT SUM(c) AS n, SUM(s) AS stot FROM daily),
-pre AS (
-  SELECT day,
-         SUM(c) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                                           AND CURRENT ROW) AS nl,
-         SUM(s) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                                           AND CURRENT ROW) AS sl,
-         t.n, t.stot
-  FROM daily CROSS JOIN tot t
-),
-cand AS (
-  SELECT day, CAST(nl AS BIGINT) AS n_left,
-         CAST(n - nl AS BIGINT) AS n_right,
-         CAST(sl AS DOUBLE) / CAST(100.0 AS DOUBLE)
-           / CAST(nl AS DOUBLE) AS mean_left,
-         CAST(stot - sl AS DOUBLE) / CAST(100.0 AS DOUBLE)
-           / CAST(n - nl AS DOUBLE) AS mean_right,
-         (CAST(CAST(n - nl AS HUGEINT) * CAST(sl AS HUGEINT)
-               - CAST(nl AS HUGEINT) * CAST(stot - sl AS HUGEINT) AS DOUBLE)
-          * CAST(CAST(n - nl AS HUGEINT) * CAST(sl AS HUGEINT)
-                 - CAST(nl AS HUGEINT) * CAST(stot - sl AS HUGEINT) AS DOUBLE))
-           / (CAST(nl AS DOUBLE) * CAST(n - nl AS DOUBLE)
-              * CAST(n AS DOUBLE)) AS r
-  FROM pre WHERE n - nl > 0
-),
-best AS (SELECT * FROM cand ORDER BY r DESC, day ASC LIMIT 1)
-SELECT day AS split_day, n_left, n_right,
-       round(mean_left, 6) AS mean_left,
-       round(mean_right, 6) AS mean_right,
-       round(r / CAST(10000.0 AS DOUBLE), 6) AS sse_reduction
-FROM best
-"""
+# --- r9 additions: Benford QA, permutation test, retrieval statistics -------
 
-
-# --- r9 additions: rank/QA statistics + Poisson bootstrap --------------------
-
-# Mirrors relational.events_mann_whitney: exact integer 2·rank-sum over the
-# per-cents-value aggregate (tie-averaged rank ×2 is integer), HUGEINT tie
-# cubes, then μ/σ/z as one double expression tree each.
-ORACLE_SQL["events_mann_whitney"] = """
-WITH per_v AS (
-  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS ca,
-         SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cb
-  FROM events
-  WHERE event_type IN ('view', 'click')
-  GROUP BY 1
-),
-ranked AS (
-  SELECT v, ca, cb, ca + cb AS c,
-         COALESCE(SUM(ca + cb) OVER (
-           ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS prev
-  FROM per_v
-),
-stats AS (
-  SELECT CAST(SUM(ca) AS BIGINT) AS na,
-         CAST(SUM(cb) AS BIGINT) AS nb,
-         SUM(CAST(ca AS HUGEINT)
-             * (2 * CAST(prev AS HUGEINT) + CAST(c AS HUGEINT) + 1)) AS r2a,
-         SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT) * CAST(c AS HUGEINT)
-             - CAST(c AS HUGEINT)) AS ties
-  FROM ranked
-),
-terms AS (
-  SELECT na, nb,
-         CAST(r2a - CAST(na AS HUGEINT) * (CAST(na AS HUGEINT) + 1)
-              AS DOUBLE) / CAST(2 AS DOUBLE) AS ua,
-         CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / CAST(2 AS DOUBLE) AS mu,
-         sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / CAST(12 AS DOUBLE)
-              * ((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) + CAST(1 AS DOUBLE))
-                 - CAST(ties AS DOUBLE)
-                   / ((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
-                      * (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)
-                         - CAST(1 AS DOUBLE))))) AS sigma
-  FROM stats
-)
-SELECT na AS n_a, nb AS n_b,
-       round(ua, 6) AS u_a,
-       round(mu, 6) AS mu_u,
-       round(sigma, 6) AS sigma_u,
-       round(CASE WHEN sigma != CAST(0 AS DOUBLE)
-                  THEN (ua - mu) / sigma END, 9) AS z,
-       abs(CASE WHEN sigma != CAST(0 AS DOUBLE)
-                THEN (ua - mu) / sigma END) > CAST(1.96 AS DOUBLE)
-         AS reject_equal_05
-FROM terms
-"""
 
 # Mirrors relational.orders_benford_test: leading digit from the exact cents
 # decimal's STRING, expected shares via ln(1+1/d)/ln(10), 9dp-rounded
@@ -7742,6 +7066,7 @@ SELECT digit, n_obs,
        chi2 > CAST(15.507 AS DOUBLE) AS reject_benford_05
 FROM terms CROSS JOIN chi
 """
+
 
 # Mirrors relational.events_poisson_bootstrap_ci: inverse-CDF Poisson(1)
 # weights from md5-60-bit uniforms, exact cents replicate sums, rank-based
@@ -7803,6 +7128,7 @@ SELECT n_rows, mean_value, ci_lo, ci_hi, n_replicates
 FROM pt CROSS JOIN lo CROSS JOIN hi CROSS JOIN nrep
 """
 
+
 # Mirrors relational.events_winsorized_stats: k-th order statistic as
 # "min v with cumulative count >= k" over the per-(type, cents) aggregate,
 # HUGEINT-widened clamped sums, // floor positions.
@@ -7853,6 +7179,7 @@ SELECT event_type,
        CAST(nt AS BIGINT) AS n_trimmed
 FROM agg
 """
+
 
 # Mirrors text.text_kneser_ney_bigram: same tokenization/halving as the
 # add-1 bigram LM, D = 3/4 absolute discount, add-1-smoothed continuation
@@ -8151,49 +7478,6 @@ SELECT lang, bucket, n_docs, n_tokens,
 FROM agg
 """
 
-# Mirrors relational.events_did_estimator: parity arms x exact-us-midpoint
-# periods, HUGEINT cents cell sums, DiD from unrounded means.
-ORACLE_SQL["events_did_estimator"] = """
-WITH rng AS (
-  SELECT MIN(epoch_us(ts)) AS lo, MAX(epoch_us(ts)) AS hi FROM events
-),
-cells AS (
-  SELECT CASE WHEN user_id % 2 = 0 THEN 'control' ELSE 'treatment' END AS arm,
-         CASE WHEN epoch_us(ts) <= r.lo + (r.hi - r.lo) // 2
-              THEN 'pre' ELSE 'post' END AS period,
-         COUNT(*) AS n,
-         SUM(CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  AS HUGEINT)) AS s
-  FROM events CROSS JOIN rng r
-  GROUP BY 1, 2
-),
-m AS (
-  SELECT arm, period, n,
-         CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / CAST(100 AS DOUBLE) AS m
-  FROM cells
-),
-wide AS (
-  SELECT MAX(CASE WHEN arm = 'control' AND period = 'pre' THEN n END) AS ncp,
-         MAX(CASE WHEN arm = 'control' AND period = 'post' THEN n END) AS ncq,
-         MAX(CASE WHEN arm = 'treatment' AND period = 'pre' THEN n END) AS ntp,
-         MAX(CASE WHEN arm = 'treatment' AND period = 'post' THEN n END) AS ntq,
-         MAX(CASE WHEN arm = 'control' AND period = 'pre' THEN m END) AS mcp,
-         MAX(CASE WHEN arm = 'control' AND period = 'post' THEN m END) AS mcq,
-         MAX(CASE WHEN arm = 'treatment' AND period = 'pre' THEN m END) AS mtp,
-         MAX(CASE WHEN arm = 'treatment' AND period = 'post' THEN m END) AS mtq
-  FROM m
-)
-SELECT CAST(ncp AS BIGINT) AS n_control_pre,
-       CAST(ncq AS BIGINT) AS n_control_post,
-       CAST(ntp AS BIGINT) AS n_treatment_pre,
-       CAST(ntq AS BIGINT) AS n_treatment_post,
-       round(mcp, 9) AS mean_control_pre,
-       round(mcq, 9) AS mean_control_post,
-       round(mtp, 9) AS mean_treatment_pre,
-       round(mtq, 9) AS mean_treatment_post,
-       round((mtq - mtp) - (mcq - mcp), 9) AS did_estimate
-FROM wide
-"""
 
 # Mirrors relational.orders_price_index_laspeyres: exact cents unit-price
 # rationals, 9dp-rounded basket terms on the DECIMAL(28,9) rail, base =
@@ -8232,6 +7516,7 @@ SELECT month,
              * CAST(100 AS DOUBLE), 6) AS laspeyres_index
 FROM agg
 """
+
 
 # Mirrors relational.events_isotonic_calibration: heavy-purchaser rate vs
 # fixed-width activity buckets (LEAST(activity // 5, 31)), isotonic fit
@@ -8279,6 +7564,7 @@ SELECT b.bucket,
 FROM per_b b JOIN iso ON iso.i = b.bucket
 """
 
+
 # Mirrors relational.events_conformal_interval: split-conformal upper
 # bound, k = ceil((n_cal + 1) * (1 - alpha)) in exact integer arithmetic,
 # q-hat = "min v with cumulative calibration count >= LEAST(k, n_cal)".
@@ -8323,6 +7609,7 @@ SELECT kd.n_cal,
                        / CAST(t.n_test AS DOUBLE), 6) END AS coverage
 FROM kd CROSS JOIN q CROSS JOIN t
 """
+
 
 # Mirrors relational.orders_theil_sen_trend: per-day exact-cents revenue,
 # pairwise slopes as one double division of exact integers, both medians
@@ -8390,6 +7677,7 @@ SELECT n_days, n_pairs, ts_slope, ts_intercept, ols_slope
 FROM ols CROSS JOIN m CROSS JOIN icept
 """
 
+
 # df=inf critical-value tables BY GROUP COUNT (r11 review: the operator
 # computes k dynamically, so the bound must move with it; NULL off-table).
 # Sync-pinned equal to the relational dicts (test_r11_constants_in_sync).
@@ -8397,6 +7685,8 @@ _TUKEY_Q_BY_K = {
     2: 2.772, 3: 3.314, 4: 3.633, 5: 3.858, 6: 4.030,
     7: 4.170, 8: 4.286, 9: 4.387, 10: 4.474,
 }
+
+
 _ANOVA_F_BY_DF1 = {
     1: 3.841, 2: 2.996, 3: 2.605, 4: 2.372, 5: 2.214,
     6: 2.099, 7: 2.010, 8: 1.938, 9: 1.880,
@@ -8471,6 +7761,7 @@ FROM g a JOIN g b ON a.et < b.et CROSS JOIN stats s
     f_crit=_crit_case_sql("k - 1", _ANOVA_F_BY_DF1),
 )
 
+
 # Mirrors similarity.embedding_dbscan_lite: the sim_knn_graph CTE chain,
 # cosine-eps filter + symmetrize, degree >= min-neighbors cores, reach
 # transitive closure over core-core edges (min core id per component —
@@ -8514,6 +7805,7 @@ LEFT JOIN comp cmp ON e.vec_id = cmp.node
 LEFT JOIN border bor ON e.vec_id = bor.node
 LEFT JOIN deg d ON e.vec_id = d.node
 """
+
 
 # Mirrors relational.events_power_analysis: exact-cents per-user sums,
 # control-arm variance as one division of the exact HUGEINT numerator,
@@ -8571,6 +7863,7 @@ SELECT mde_pct, n_control, n_treatment, mean_control_cents, var_control,
        END AS powered
 FROM calc2
 """
+
 
 # Mirrors text.text_ndcg_eval: the BM25 oracle as a CTE + the RRF oracle's
 # semantic ranking chain; DCG/IDCG terms on the 9dp-DECIMAL sum rail; one
@@ -8678,49 +7971,6 @@ SELECT n_users, n_true, n_reported_true,
 FROM agg
 """
 
-# Mirrors relational.events_empirical_bayes: 9dp-railed rate moments, the
-# method-of-moments Beta prior as identical double trees, NULL prior (and
-# shrunk = raw) on the degenerate fit.
-ORACLE_SQL["events_empirical_bayes"] = """
-WITH per_user AS (
-  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_purchases
-  FROM events GROUP BY 1
-),
-rr AS MATERIALIZED (
-  SELECT user_id, n_events, n_purchases,
-         CAST(n_purchases AS DOUBLE) / CAST(n_events AS DOUBLE) AS r
-  FROM per_user
-),
-moments AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-         SUM(CAST(round(r, 9) AS DECIMAL(28,9))) AS s1,
-         SUM(CAST(round(r * r, 9) AS DECIMAL(28,9))) AS s2
-  FROM rr
-),
-prior AS (
-  SELECT CASE WHEN v > 0 AND ab > 0 THEN m * ab END AS alpha,
-         CASE WHEN v > 0 AND ab > 0 THEN (CAST(1 AS DOUBLE) - m) * ab
-              END AS beta
-  FROM (SELECT m, v,
-               m * (CAST(1 AS DOUBLE) - m) / v - CAST(1 AS DOUBLE) AS ab
-        FROM (SELECT CAST(s1 AS DOUBLE) / CAST(n_users AS DOUBLE) AS m,
-                     (CAST(s2 AS DOUBLE)
-                      - CAST(n_users AS DOUBLE)
-                        * (CAST(s1 AS DOUBLE) / CAST(n_users AS DOUBLE))
-                        * (CAST(s1 AS DOUBLE) / CAST(n_users AS DOUBLE)))
-                       / (CAST(n_users AS DOUBLE) - CAST(1 AS DOUBLE)) AS v
-              FROM moments))
-)
-SELECT user_id, n_events, n_purchases, r AS raw_rate,
-       CASE WHEN alpha IS NOT NULL
-            THEN (CAST(n_purchases AS DOUBLE) + alpha)
-                 / (CAST(n_events AS DOUBLE) + alpha + beta)
-            ELSE r END AS shrunk_rate,
-       alpha, beta
-FROM rr CROSS JOIN prior
-"""
 
 # Mirrors relational.events_granger_lite: epoch-day counts, calendar lag
 # join, nine HUGEINT sufficient statistics, Cramer / normal-equation
@@ -8820,6 +8070,7 @@ SELECT n_days, b0, b1, b2, c0, c1, ssr_full, ssr_restricted,
 FROM ssr CROSS JOIN coeffs
 """
 
+
 # Mirrors text.text_burrows_delta: one (source, token) count relation, the
 # top-20 function-word budget, 9dp-railed frequency moments, guarded
 # z-scores, and the re-railed pairwise mean |dz|.
@@ -8877,367 +8128,6 @@ WHERE a.z IS NOT NULL AND b.z IS NOT NULL
 GROUP BY 1, 2
 """
 
-
-def _absorption_sql(horizon: int = 8) -> str:
-    """Static chained-CTE generator for the absorbing-Markov value
-    iteration (the PCA/HMM fixed-round precedent): h_{t+1}(i) =
-    Σ_j (c_ij/tot_i)·h_t(j) with 9dp-railed terms, purchase/error
-    clamped, no-out-edge states scoring 0."""
-    rounds = []
-    for t in range(1, horizon + 1):
-        prev = f"h{t - 1}"
-        rounds.append(f"""
-h{t} AS MATERIALIZED (
-  SELECT s,
-         CASE WHEN s = 'purchase' THEN CAST(1 AS DOUBLE)
-              WHEN s = 'error' THEN CAST(0 AS DOUBLE)
-              ELSE COALESCE(agg, CAST(0 AS DOUBLE)) END AS h
-  FROM states
-  LEFT JOIN (
-    SELECT c.from_type AS fs,
-           CAST(SUM(CAST(round((CAST(c.c AS DOUBLE) / CAST(t.tot AS DOUBLE))
-                                 * p.h, 9) AS DECIMAL(28,9))) AS DOUBLE) AS agg
-    FROM counts c
-    JOIN tots t ON c.from_type = t.from_type
-    JOIN {prev} p ON c.to_type = p.s
-    GROUP BY 1
-  ) ON s = fs
-)""".strip())
-    body = ",\n".join(rounds)
-    return f"""
-WITH pairs AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts ASC, event_id ASC) AS to_type
-  FROM events
-),
-counts AS MATERIALIZED (
-  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS c
-  FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2
-),
-states AS MATERIALIZED (
-  SELECT DISTINCT s FROM (SELECT from_type AS s FROM counts
-                          UNION ALL SELECT to_type FROM counts)
-),
-tots AS MATERIALIZED (
-  SELECT from_type, CAST(SUM(c) AS BIGINT) AS tot FROM counts GROUP BY 1
-),
-h0 AS (
-  SELECT s, CASE WHEN s = 'purchase' THEN CAST(1 AS DOUBLE)
-                 ELSE CAST(0 AS DOUBLE) END AS h
-  FROM states
-),
-{body}
-SELECT st.s AS state,
-       st.s IN ('purchase', 'error') AS is_absorbing,
-       CAST(COALESCE(t.tot, 0) AS BIGINT) AS n_out_transitions,
-       hf.h AS p_hit_success
-FROM states st
-LEFT JOIN tots t ON st.s = t.from_type
-JOIN h{horizon} hf ON st.s = hf.s
-"""
-
-
-ORACLE_SQL["events_absorption_probability"] = _absorption_sql(8)
-
-# Mirrors relational.events_spearman_corr: tie-averaged DOUBLED ranks via
-# the MW per-value/cumulative machinery (exact integers), Pearson over
-# HUGEINT sufficient statistics, guarded degenerate variance.
-ORACLE_SQL["events_spearman_corr"] = """
-WITH per_user AS MATERIALIZED (
-  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                       THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS y
-  FROM events GROUP BY 1
-),
-rx AS MATERIALIZED (
-  SELECT x, CAST(2 * COALESCE(SUM(c) OVER (ORDER BY x
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + c + 1 AS BIGINT) AS r2_x
-  FROM (SELECT x, COUNT(*) AS c FROM per_user GROUP BY 1)
-),
-ry AS MATERIALIZED (
-  SELECT y, CAST(2 * COALESCE(SUM(c) OVER (ORDER BY y
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + c + 1 AS BIGINT) AS r2_y
-  FROM (SELECT y, COUNT(*) AS c FROM per_user GROUP BY 1)
-),
-s AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(r2_x AS HUGEINT)) AS sx,
-         SUM(CAST(r2_y AS HUGEINT)) AS sy,
-         SUM(CAST(r2_x AS HUGEINT) * CAST(r2_x AS HUGEINT)) AS sxx,
-         SUM(CAST(r2_y AS HUGEINT) * CAST(r2_y AS HUGEINT)) AS syy,
-         SUM(CAST(r2_x AS HUGEINT) * CAST(r2_y AS HUGEINT)) AS sxy
-  FROM per_user JOIN rx USING (x) JOIN ry USING (y)
-)
-SELECT n,
-       CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
-             AND CAST(n * syy - sy * sy AS DOUBLE) > 0 THEN
-         CAST(n * sxy - sx * sy AS DOUBLE)
-           / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-           / sqrt(CAST(n * syy - sy * sy AS DOUBLE))
-       END AS spearman_rho
-FROM s
-"""
-
-# Mirrors relational.events_psi_drift: weekday-reference equal-width
-# buckets (engine-native day-of-week under DuckDB's 0=Sun encoding),
-# Laplace-smoothed proportions over the full 10-bucket spine, PSI rounded
-# to 7 decimals (the one ln in the tree).
-ORACLE_SQL["events_psi_drift"] = """
-WITH ev AS MATERIALIZED (
-  SELECT event_type, CAST(value AS DOUBLE) AS v,
-         dayofweek(ts) IN (0, 6) AS is_weekend
-  FROM events WHERE value IS NOT NULL
-),
-edges AS (
-  SELECT event_type, MIN(v) AS mn, MAX(v) AS mx
-  FROM ev WHERE NOT is_weekend GROUP BY 1
-),
-bucketed AS (
-  SELECT ev.event_type, ev.is_weekend,
-         CASE WHEN e.mx > e.mn THEN
-           GREATEST(0, LEAST(9, CAST(FLOOR((ev.v - e.mn) * 10.0 / (e.mx - e.mn)) AS INT)))
-         ELSE 0 END AS bucket
-  FROM ev LEFT JOIN edges e USING (event_type)
-),
-counts AS (
-  SELECT event_type, bucket,
-         CAST(SUM(CASE WHEN NOT is_weekend THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-         CAST(SUM(CASE WHEN is_weekend THEN 1 ELSE 0 END) AS BIGINT) AS c_act
-  FROM bucketed GROUP BY 1, 2
-),
-spine AS (
-  SELECT t.event_type, b.bucket,
-         COALESCE(c.c_ref, 0) AS c_ref, COALESCE(c.c_act, 0) AS c_act
-  FROM (SELECT DISTINCT event_type FROM counts) t
-  CROSS JOIN (SELECT UNNEST(generate_series(0, 9)) AS bucket) b
-  LEFT JOIN counts c USING (event_type, bucket)
-),
-tot AS (
-  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-         CAST(SUM(c_act) AS BIGINT) AS n_act
-  FROM spine GROUP BY 1
-)
-SELECT s.event_type, t.n_ref, t.n_act,
-       ROUND(CAST(SUM(CAST(ROUND(
-         ((CAST(s.c_ref AS DOUBLE) + 1.0) / (CAST(t.n_ref AS DOUBLE) + 10.0)
-          - (CAST(s.c_act AS DOUBLE) + 1.0) / (CAST(t.n_act AS DOUBLE) + 10.0))
-         * LN(((CAST(s.c_ref AS DOUBLE) + 1.0) / (CAST(t.n_ref AS DOUBLE) + 10.0))
-              / ((CAST(s.c_act AS DOUBLE) + 1.0) / (CAST(t.n_act AS DOUBLE) + 10.0)))
-       , 9) AS DECIMAL(28,9))) AS DOUBLE), 7) AS psi
-FROM spine s JOIN tot t USING (event_type)
-GROUP BY 1, 2, 3
-"""
-
-# Mirrors relational.events_cramers_v: full r×c spine so zero-observed
-# cells contribute expected mass; IEEE-only arithmetic, no rounding.
-ORACLE_SQL["events_cramers_v"] = """
-WITH cells AS MATERIALIZED (
-  SELECT event_type, dayofweek(ts) AS dow, CAST(COUNT(*) AS BIGINT) AS o
-  FROM events GROUP BY 1, 2
-),
-rows_t AS (SELECT event_type, SUM(o) AS rt FROM cells GROUP BY 1),
-cols_t AS (SELECT dow, SUM(o) AS ct FROM cells GROUP BY 1),
-n_t AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
-spine AS (
-  SELECT r.event_type, c.dow, r.rt, c.ct, COALESCE(x.o, 0) AS o, n.n
-  FROM rows_t r CROSS JOIN cols_t c
-  LEFT JOIN cells x USING (event_type, dow)
-  CROSS JOIN n_t n
-),
-chi AS (
-  SELECT MAX(n) AS n,
-         CAST(SUM(CAST(ROUND(
-           (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-           * (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-           / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-         , 9) AS DECIMAL(28,9))) AS DOUBLE) AS chi2,
-         COUNT(DISTINCT event_type) AS r, COUNT(DISTINCT dow) AS c
-  FROM spine
-)
-SELECT n, chi2, CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
-       CASE WHEN LEAST(r - 1, c - 1) >= 1 AND n > 0 THEN
-         SQRT(chi2 / (CAST(n AS DOUBLE) * CAST(LEAST(r - 1, c - 1) AS DOUBLE)))
-       END AS cramers_v
-FROM chi
-"""
-
-# Mirrors relational.events_kruskal_wallis: doubled tie-averaged ranks via
-# the MW per-value/cumulative machinery (NULL values dropped — engine
-# window NULL-ordering differs), HUGEINT rank sums and tie cubes, CENTERED
-# H = 3/(N(N+1))·Σ n_j·(R2_j/n_j − (N+1))² on a DECIMAL(38,6) rail (the
-# textbook tail cancels catastrophically at corpus scale).
-ORACLE_SQL["events_kruskal_wallis"] = """
-WITH gv AS MATERIALIZED (
-  SELECT event_type, CAST(value AS DOUBLE) AS v, CAST(COUNT(*) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-),
-per_v AS (SELECT v, SUM(c) AS cv FROM gv GROUP BY 1),
-ranks AS (
-  SELECT v, CAST(2 * COALESCE(SUM(cv) OVER (ORDER BY v
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + cv + 1 AS BIGINT) AS r2, cv
-  FROM per_v
-),
-grp AS (
-  SELECT g.event_type, CAST(SUM(g.c) AS BIGINT) AS n_j,
-         SUM(CAST(g.c AS HUGEINT) * CAST(r.r2 AS HUGEINT)) AS r2_j
-  FROM gv g JOIN ranks r USING (v) GROUP BY 1
-),
-ties AS (
-  SELECT SUM(CAST(cv AS HUGEINT) * CAST(cv AS HUGEINT) * CAST(cv AS HUGEINT)
-             - CAST(cv AS HUGEINT)) AS t3
-  FROM ranks
-),
-totals AS (
-  SELECT CAST(SUM(n_j) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS k
-  FROM grp
-),
-stats AS (
-  SELECT t.n, t.k,
-         CAST(SUM(CAST(ROUND(
-           CAST(g.n_j AS DOUBLE)
-           * (CAST(g.r2_j AS DOUBLE) / CAST(g.n_j AS DOUBLE)
-              - (CAST(t.n AS DOUBLE) + 1.0))
-           * (CAST(g.r2_j AS DOUBLE) / CAST(g.n_j AS DOUBLE)
-              - (CAST(t.n AS DOUBLE) + 1.0))
-         , 6) AS DECIMAL(38,6))) AS DOUBLE) AS sq
-  FROM grp g CROSS JOIN totals t
-  GROUP BY 1, 2
-)
-SELECT n, k, CAST(k - 1 AS BIGINT) AS dof,
-       3.0 * sq / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)) AS h_stat,
-       CASE WHEN 1.0 - CAST(t3 AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                    - CAST(n AS DOUBLE)) > 0 THEN
-         (3.0 * sq / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)))
-         / (1.0 - CAST(t3 AS DOUBLE)
-              / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                 - CAST(n AS DOUBLE)))
-       END AS h_corrected
-FROM stats CROSS JOIN ties
-"""
-
-# Mirrors relational.events_jackknife_ratio: totals-minus-row replicates,
-# DEFINITIONAL two-pass variance (railed mean, then DECIMAL(38,15)
-# squared deviations — the Σr²−(Σr)²/n identity cancels catastrophically
-# on near-identical replicates), zero-denominator replicates dropped.
-ORACLE_SQL["events_jackknife_ratio"] = """
-WITH per_user AS MATERIALIZED (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                       THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS y,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-tot AS (
-  SELECT CAST(SUM(y) AS BIGINT) AS s, CAST(SUM(c) AS BIGINT) AS ctot,
-         CAST(COUNT(*) AS BIGINT) AS n_users
-  FROM per_user
-),
-reps AS (
-  SELECT t.s, t.ctot, t.n_users,
-         CASE WHEN t.ctot - p.c > 0 THEN
-           CAST(t.s - p.y AS DOUBLE) / CAST(t.ctot - p.c AS DOUBLE)
-         END AS r
-  FROM per_user p CROSS JOIN tot t
-),
-mean_pass AS (
-  SELECT s, ctot, n_users,
-         CAST(COUNT(r) AS BIGINT) AS n_reps,
-         CAST(SUM(CAST(ROUND(r, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sr
-  FROM reps GROUP BY 1, 2, 3
-),
-agg AS (
-  SELECT m.s, m.ctot, m.n_users, m.n_reps,
-         CAST(SUM(CAST(ROUND(
-           (p.r - m.sr / CAST(m.n_reps AS DOUBLE))
-           * (p.r - m.sr / CAST(m.n_reps AS DOUBLE))
-         , 15) AS DECIMAL(38,15))) AS DOUBLE) AS sdev2
-  FROM reps p JOIN mean_pass m ON p.s = m.s AND p.ctot = m.ctot
-                              AND p.n_users = m.n_users
-  GROUP BY 1, 2, 3, 4
-)
-SELECT n_users, n_reps,
-       CASE WHEN ctot > 0 THEN CAST(s AS DOUBLE) / CAST(ctot AS DOUBLE) END
-         AS ratio_cents_per_event,
-       CASE WHEN n_reps >= 2
-             AND (CAST(n_reps AS DOUBLE) - 1.0) / CAST(n_reps AS DOUBLE)
-                 * sdev2 >= 0 THEN
-         SQRT((CAST(n_reps AS DOUBLE) - 1.0) / CAST(n_reps AS DOUBLE) * sdev2)
-       END AS jackknife_se,
-       (CASE WHEN ctot > 0 THEN CAST(s AS DOUBLE) / CAST(ctot AS DOUBLE) END)
-         - 1.96 * (CASE WHEN n_reps >= 2
-             AND (CAST(n_reps AS DOUBLE) - 1.0) / CAST(n_reps AS DOUBLE)
-                 * sdev2 >= 0 THEN
-           SQRT((CAST(n_reps AS DOUBLE) - 1.0) / CAST(n_reps AS DOUBLE)
-                * sdev2) END) AS ci_lo,
-       (CASE WHEN ctot > 0 THEN CAST(s AS DOUBLE) / CAST(ctot AS DOUBLE) END)
-         + 1.96 * (CASE WHEN n_reps >= 2
-             AND (CAST(n_reps AS DOUBLE) - 1.0) / CAST(n_reps AS DOUBLE)
-                 * sdev2 >= 0 THEN
-           SQRT((CAST(n_reps AS DOUBLE) - 1.0) / CAST(n_reps AS DOUBLE)
-                * sdev2) END) AS ci_hi
-FROM agg
-"""
-
-# Mirrors relational.events_runs_test: the shared UTC epoch-day spine
-# (_daily_event_counts / EWMA convention), exact cross-multiplied mean
-# cutpoint (mean-tied days drop), lag-flip runs count over per-day rows.
-ORACLE_SQL["events_runs_test"] = """
-WITH daily AS MATERIALIZED (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days, CAST(SUM(c) AS BIGINT) AS total
-  FROM daily
-),
-signed AS (
-  SELECT d.day, t.n_days, (d.c * t.n_days > t.total) AS above
-  FROM daily d CROSS JOIN tot t
-  WHERE d.c * t.n_days != t.total
-),
-flips AS (
-  SELECT n_days, above,
-         CASE WHEN LAG(above) OVER (ORDER BY day) IS NOT NULL
-               AND LAG(above) OVER (ORDER BY day) != above THEN 1
-              ELSE 0 END AS flip
-  FROM signed
-),
-stats AS (
-  SELECT n_days,
-         CAST(SUM(CASE WHEN above THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-         CAST(SUM(CASE WHEN NOT above THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-         CAST(SUM(flip) + 1 AS BIGINT) AS runs
-  FROM flips GROUP BY 1
-)
-SELECT n_days, n_above, n_below, runs,
-       CASE WHEN n_above > 0 AND n_below > 0
-             AND 2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE)
-                 * (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE)
-                    - CAST(n_above AS DOUBLE) - CAST(n_below AS DOUBLE))
-                 / ((CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE))
-                    * (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE))
-                    * (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE) - 1.0)) > 0
-       THEN
-         (CAST(runs AS DOUBLE)
-          - (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE)
-             / (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE)) + 1.0))
-         / SQRT(2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE)
-                * (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE)
-                   - CAST(n_above AS DOUBLE) - CAST(n_below AS DOUBLE))
-                / ((CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE))
-                   * (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE))
-                   * (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE) - 1.0)))
-       END AS z
-FROM stats
-"""
 
 # Mirrors text.text_good_turing: frequency-of-frequencies off the
 # (source, token) count relation; space-split token convention.
@@ -9340,78 +8230,6 @@ SELECT sp.s1, sp.s2,
 FROM spine sp LEFT JOIN shared sh ON sp.s1 = sh.s1 AND sp.s2 = sh.s2
 """
 
-# Mirrors relational.events_bh_fdr: exact DECIMAL sufficient statistics,
-# the identical Zelen-Severo tail tree, p rounded to 9dp BEFORE the BH
-# step-up (reversed cumulative min with event_type tie-breaks).
-ORACLE_SQL["events_bh_fdr"] = """
-WITH g AS MATERIALIZED (
-  SELECT event_type,
-         CAST(SUM(CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END) AS BIGINT) AS n_w,
-         CAST(SUM(CASE WHEN dayofweek(ts) IN (0, 6)
-                       THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS s_w,
-         SUM(CASE WHEN dayofweek(ts) IN (0, 6)
-                  THEN CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-                       * CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-                  ELSE 0 END) AS ss_w,
-         CAST(SUM(CASE WHEN dayofweek(ts) NOT IN (0, 6) THEN 1 ELSE 0 END) AS BIGINT) AS n_d,
-         CAST(SUM(CASE WHEN dayofweek(ts) NOT IN (0, 6)
-                       THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS s_d,
-         SUM(CASE WHEN dayofweek(ts) NOT IN (0, 6)
-                  THEN CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-                       * CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-                  ELSE 0 END) AS ss_d
-  -- NULL values drop (synced with the operator): the sums already skip
-  -- NULLs, so counting NULL rows would inflate the Welch n
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-),
-zed AS (
-  SELECT event_type, n_w AS n_weekend, n_d AS n_weekday,
-         CASE WHEN n_w >= 2 AND n_d >= 2
-               AND ((CAST(ss_w AS DOUBLE) - CAST(s_w AS DOUBLE) * CAST(s_w AS DOUBLE) / CAST(n_w AS DOUBLE)) / (CAST(n_w AS DOUBLE) - 1.0)) / CAST(n_w AS DOUBLE)
-                 + ((CAST(ss_d AS DOUBLE) - CAST(s_d AS DOUBLE) * CAST(s_d AS DOUBLE) / CAST(n_d AS DOUBLE)) / (CAST(n_d AS DOUBLE) - 1.0)) / CAST(n_d AS DOUBLE) > 0
-         THEN
-           (CAST(s_w AS DOUBLE) / CAST(n_w AS DOUBLE) - CAST(s_d AS DOUBLE) / CAST(n_d AS DOUBLE))
-           / SQRT(((CAST(ss_w AS DOUBLE) - CAST(s_w AS DOUBLE) * CAST(s_w AS DOUBLE) / CAST(n_w AS DOUBLE)) / (CAST(n_w AS DOUBLE) - 1.0)) / CAST(n_w AS DOUBLE)
-                  + ((CAST(ss_d AS DOUBLE) - CAST(s_d AS DOUBLE) * CAST(s_d AS DOUBLE) / CAST(n_d AS DOUBLE)) / (CAST(n_d AS DOUBLE) - 1.0)) / CAST(n_d AS DOUBLE))
-         END AS z
-  FROM g
-),
-tested AS (
-  SELECT event_type, n_weekend, n_weekday, ROUND(z, 9) AS z,
-         -- guarded on z: LEAST skips NULLs, so degenerate arms would
-         -- otherwise read p = 1.0 and inflate the BH family size m
-         CASE WHEN z IS NOT NULL THEN
-         ROUND(LEAST(1.0,
-           2.0 * (EXP(-ABS(z) * ABS(z) / 2.0) / 2.5066282746310002)
-               * (0.319381530 * (1.0 / (1.0 + 0.2316419 * ABS(z)))
-                  + (-0.356563782) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z)))
-                  + 1.781477937 * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z)))
-                  + (-1.821255978) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z)))
-                  + 1.330274429 * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))) * (1.0 / (1.0 + 0.2316419 * ABS(z))))
-         ), 9) END AS p
-  FROM zed
-),
-valid AS (SELECT * FROM tested WHERE p IS NOT NULL),
-m_t AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM valid),
-bh AS (
-  SELECT event_type,
-         ROUND(MIN(LEAST(1.0, p * CAST(m AS DOUBLE) / CAST(i AS DOUBLE)))
-               OVER (ORDER BY p DESC, event_type DESC ROWS UNBOUNDED PRECEDING), 9) AS q
-  FROM (
-    SELECT v.event_type, v.p, m.m,
-           ROW_NUMBER() OVER (ORDER BY v.p, v.event_type) AS i
-    FROM valid v CROSS JOIN m_t m
-  )
-)
-SELECT t.event_type, t.n_weekend, t.n_weekday, t.z, t.p, b.q,
-       CASE WHEN b.q IS NOT NULL THEN b.q <= 0.05 END AS reject_fdr_05
-FROM tested t LEFT JOIN bh b USING (event_type)
-"""
-
-
-# --- r12 additions -----------------------------------------------------------
 
 # Mirrors relational.events_wilcoxon_signed_rank: per-user paired weekend −
 # weekday cents, zero diffs dropped, tie-averaged DOUBLED |d| ranks via the
@@ -9472,6 +8290,7 @@ SELECT CAST(COALESCE(n, 0) AS BIGINT) AS n_pairs,
 FROM s
 """
 
+
 # Mirrors relational.events_mann_kendall: S over day pairs (exact integer
 # sign sum), tie-corrected variance with HUGEINT cubes, ±1 continuity z.
 ORACLE_SQL["events_mann_kendall"] = """
@@ -9517,6 +8336,7 @@ SELECT n AS n_days, s AS s_stat,
        END AS trend_significant_05
 FROM s CROSS JOIN tie CROSS JOIN n_t
 """
+
 
 # Mirrors relational.events_welch_anova: exact HUGEINT sufficient
 # statistics, degenerate groups dropped, both k-row folds on the decimal
@@ -9574,6 +8394,7 @@ SELECT k AS k_groups, k_dropped,
 FROM folds CROSS JOIN dropped
 """
 
+
 # Mirrors relational.events_mcnemar: epoch-day midpoint split, per-user
 # conversion flags per half, continuity-corrected chi-square over the
 # discordant counts.
@@ -9609,37 +8430,6 @@ SELECT n_users, b AS conv_then_lapsed, c AS lapsed_then_conv,
 FROM s
 """
 
-# Mirrors relational.events_capture_recapture: weekend/weekday captures,
-# Chapman estimator with the Seber variance, Wald CI.
-ORACLE_SQL["events_capture_recapture"] = """
-WITH pu AS (
-  SELECT user_id,
-         MAX(CASE WHEN dayofweek(ts) IN (0, 6) THEN TRUE ELSE FALSE END) AS in_a,
-         MAX(CASE WHEN dayofweek(ts) NOT IN (0, 6) THEN TRUE ELSE FALSE END) AS in_b
-  FROM events GROUP BY 1
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-         CAST(SUM(CASE WHEN in_b THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-         CAST(SUM(CASE WHEN in_a AND in_b THEN 1 ELSE 0 END) AS BIGINT) AS m,
-         CAST(COUNT(*) AS BIGINT) AS n_observed
-  FROM pu
-)
-SELECT n1, n2, m AS n_both, n_observed,
-       ROUND((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-             / (CAST(m AS DOUBLE) + 1.0) - 1.0, 6) AS n_hat_chapman,
-       ROUND((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-             / (CAST(m AS DOUBLE) + 1.0) - 1.0
-             - 1.959964 * SQRT((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-                 * (CAST(n1 AS DOUBLE) - CAST(m AS DOUBLE)) * (CAST(n2 AS DOUBLE) - CAST(m AS DOUBLE))
-                 / ((CAST(m AS DOUBLE) + 1.0) * (CAST(m AS DOUBLE) + 1.0) * (CAST(m AS DOUBLE) + 2.0))), 6) AS ci_lo,
-       ROUND((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-             / (CAST(m AS DOUBLE) + 1.0) - 1.0
-             + 1.959964 * SQRT((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-                 * (CAST(n1 AS DOUBLE) - CAST(m AS DOUBLE)) * (CAST(n2 AS DOUBLE) - CAST(m AS DOUBLE))
-                 / ((CAST(m AS DOUBLE) + 1.0) * (CAST(m AS DOUBLE) + 1.0) * (CAST(m AS DOUBLE) + 2.0))), 6) AS ci_hi
-FROM s
-"""
 
 # Mirrors relational.events_odds_ratio_ci: 2x2 weekend/purchase cells,
 # Haldane +0.5 on every cell when any is zero, Woolf log-OR CI with the
@@ -9670,94 +8460,9 @@ SELECT a, b, c, d, corrected AS haldane_corrected,
 FROM cells
 """
 
-# Mirrors relational.events_sprt_boundary: day-spine LLR accumulation with
-# the SAME Python-computed double literals inlined (no runtime ln), 9dp
-# decimal-railed increments, first boundary crossing by day.
-from .operators.relational import (  # noqa: E402
-    SPRT_LLR_NEG,
-    SPRT_LLR_POS,
-    SPRT_LOWER,
-    SPRT_UPPER,
-)
 
-ORACLE_SQL["events_sprt_boundary"] = f"""
-WITH daily AS (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS x,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
-),
-cum AS (
-  SELECT day,
-         CAST(SUM(CAST(ROUND(CAST(x AS DOUBLE) * ({SPRT_LLR_POS!r})
-               + CAST(n - x AS DOUBLE) * ({SPRT_LLR_NEG!r}), 9) AS DECIMAL(28,9)))
-           OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS llr
-  FROM daily
-),
-marked AS (
-  SELECT day, llr,
-         CASE WHEN llr >= {SPRT_UPPER!r} THEN 'accept_h1'
-              WHEN llr <= {SPRT_LOWER!r} THEN 'accept_h0' END AS decision
-  FROM cum
-),
-fc AS (
-  SELECT day AS decision_day, llr AS llr_at_decision, decision
-  FROM marked WHERE decision IS NOT NULL ORDER BY day LIMIT 1
-),
-tl AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         MAX_BY(llr, day) AS final_llr
-  FROM marked
-)
-SELECT n_days, ROUND(final_llr, 9) AS final_llr,
-       CAST(decision_day AS BIGINT) AS decision_day,
-       ROUND(llr_at_decision, 9) AS llr_at_decision,
-       COALESCE(decision, 'undecided') AS decision
-FROM tl LEFT JOIN fc ON TRUE
-"""
+# --- r12 additions -----------------------------------------------------------
 
-# Mirrors relational.events_gumbel_daily_max: block maxima per UTC day,
-# definitional two-pass variance on the decimal rail, Gumbel moments with
-# the SAME pinned gamma / sqrt(6)/pi / ln(-ln(1-1/T)) double literals.
-from .operators.relational import (  # noqa: E402
-    GUMBEL_GAMMA,
-    GUMBEL_RETURN_PERIODS,
-    GUMBEL_SQRT6_OVER_PI,
-)
-import math as _gmath  # noqa: E402
-
-_G_RL = ",\n       ".join(
-    "ROUND(CASE WHEN n >= 2 AND sdev2 > 0 THEN CAST(s AS DOUBLE)/CAST(n AS DOUBLE)"
-    f" - ({GUMBEL_GAMMA!r}) * (SQRT(sdev2 / (CAST(n AS DOUBLE) - 1.0)) * ({GUMBEL_SQRT6_OVER_PI!r}))"
-    f" + SQRT(sdev2 / (CAST(n AS DOUBLE) - 1.0)) * ({GUMBEL_SQRT6_OVER_PI!r}) * ({-_gmath.log(-_gmath.log(1.0 - 1.0 / t))!r})"
-    f" END, 6) AS return_level_{t}d_cents"
-    for t in GUMBEL_RETURN_PERIODS
-)
-
-ORACLE_SQL["events_gumbel_daily_max"] = f"""
-WITH daily AS MATERIALIZED (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         MAX(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS mx
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-),
-m1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(mx) AS BIGINT) AS s FROM daily),
-m2 AS (
-  SELECT n, s,
-         CAST(SUM(CAST(ROUND((CAST(mx AS DOUBLE) - CAST(s AS DOUBLE)/CAST(n AS DOUBLE))
-               * (CAST(mx AS DOUBLE) - CAST(s AS DOUBLE)/CAST(n AS DOUBLE)), 9) AS DECIMAL(38,9))) AS DOUBLE) AS sdev2
-  FROM daily CROSS JOIN m1 GROUP BY n, s
-)
-SELECT n AS n_days,
-       ROUND(CASE WHEN n >= 2 AND sdev2 > 0
-             THEN CAST(s AS DOUBLE)/CAST(n AS DOUBLE)
-                  - ({GUMBEL_GAMMA!r}) * (SQRT(sdev2 / (CAST(n AS DOUBLE) - 1.0)) * ({GUMBEL_SQRT6_OVER_PI!r}))
-             END, 6) AS mu_hat_cents,
-       ROUND(CASE WHEN n >= 2 AND sdev2 > 0
-             THEN SQRT(sdev2 / (CAST(n AS DOUBLE) - 1.0)) * ({GUMBEL_SQRT6_OVER_PI!r})
-             END, 6) AS beta_hat_cents,
-       {_G_RL}
-FROM m2
-"""
 
 # Mirrors text.text_lexical_diversity: one (source, token) pass, Yule/
 # Simpson from HUGEINT-exact sum of squared counts, Herdan from 7dp-pinned
@@ -9816,6 +8521,7 @@ SELECT s.k, COALESCE(n.n_nodes, 0) AS n_nodes, COALESCE(e.n_edges, 0) AS n_edges
        END AS phi
 FROM spine s LEFT JOIN n_k n USING (k) LEFT JOIN e_k e USING (k)
 """
+
 
 # Mirrors relational.events_page_hinkley: running-mean deviations on the
 # 9dp decimal rail, running min over the railed cumulative, the same
@@ -9901,176 +8607,6 @@ SELECT n_ref, n_act,
 FROM agg
 """
 
-# Mirrors relational.events_brown_forsythe: per-group doubled medians from
-# the per-(type, cents) cumulative, exact-integer z2 sufficient statistics,
-# DECIMAL(38,6)-railed k-row folds, one double F division.
-ORACLE_SQL["events_brown_forsythe"] = """
-WITH per_gv AS MATERIALIZED (
-  SELECT event_type AS g,
-         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-),
-cum AS (
-  SELECT g, v, c,
-         COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
-  FROM per_gv
-),
-totals AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n_j FROM per_gv GROUP BY 1),
-med AS (
-  SELECT c2.g,
-         CAST(SUM(CASE WHEN c2.prev < ((t.n_j + 1) // 2)
-                        AND ((t.n_j + 1) // 2) <= c2.prev + c2.c
-                   THEN c2.v ELSE 0 END)
-              + SUM(CASE WHEN c2.prev < ((t.n_j // 2) + 1)
-                          AND ((t.n_j // 2) + 1) <= c2.prev + c2.c
-                     THEN c2.v ELSE 0 END) AS BIGINT) AS med2
-  FROM cum c2 JOIN totals t USING (g)
-  GROUP BY 1
-),
-stats AS (
-  SELECT p.g, CAST(SUM(p.c) AS BIGINT) AS n_j,
-         CAST(SUM(CAST(p.c AS HUGEINT)
-                  * CAST(ABS(2 * p.v - m.med2) AS HUGEINT)) AS HUGEINT) AS s1,
-         CAST(SUM(CAST(p.c AS HUGEINT)
-                  * CAST(ABS(2 * p.v - m.med2) AS HUGEINT)
-                  * CAST(ABS(2 * p.v - m.med2) AS HUGEINT)) AS HUGEINT) AS s2
-  FROM per_gv p JOIN med m USING (g)
-  GROUP BY 1
-  HAVING SUM(p.c) >= 2
-),
-grand AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(n_j) AS BIGINT) AS n_total,
-         SUM(s1) AS s1_tot
-  FROM stats
-),
-dropped AS (
-  SELECT CAST(SUM(CASE WHEN nj < 2 THEN 1 ELSE 0 END) AS BIGINT) AS k_dropped
-  FROM (SELECT g, SUM(c) AS nj FROM per_gv GROUP BY 1)
-),
-folds AS (
-  SELECT MAX(g2.k) AS k, MAX(g2.n_total) AS n_total,
-         CAST(SUM(CAST(ROUND(CAST(s.n_j AS DOUBLE)
-           * (CAST(s.s1 AS DOUBLE) / CAST(s.n_j AS DOUBLE)
-              - CAST(g2.s1_tot AS DOUBLE) / CAST(g2.n_total AS DOUBLE))
-           * (CAST(s.s1 AS DOUBLE) / CAST(s.n_j AS DOUBLE)
-              - CAST(g2.s1_tot AS DOUBLE) / CAST(g2.n_total AS DOUBLE)), 6)
-           AS DECIMAL(38,6))) AS DOUBLE) AS between_f,
-         CAST(SUM(CAST(ROUND(CAST(s.s2 AS DOUBLE)
-           - CAST(s.s1 AS DOUBLE)
-             * (CAST(s.s1 AS DOUBLE) / CAST(s.n_j AS DOUBLE)), 6)
-           AS DECIMAL(38,6))) AS DOUBLE) AS within_f
-  FROM stats s CROSS JOIN grand g2
-)
-SELECT k AS k_groups,
-       (SELECT k_dropped FROM dropped) AS k_dropped,
-       CAST(k - 1 AS BIGINT) AS df1,
-       CAST(n_total - k AS BIGINT) AS df2,
-       ROUND(CASE WHEN k >= 2 AND n_total > k AND within_f > 0 THEN
-         (between_f / (CAST(k AS DOUBLE) - 1.0))
-           / (within_f / (CAST(n_total AS DOUBLE) - CAST(k AS DOUBLE)))
-       END, 9) AS f_stat
-FROM folds
-"""
-
-# Mirrors relational.events_cliffs_delta: the Mann-Whitney exact 2·U_A over
-# the per-cents aggregate, delta = (2U_A − n_a·n_b)/(n_a·n_b), magnitude
-# bands from the SAME pinned Romano et al. literals.
-from .operators.relational import (  # noqa: E402
-    CLIFFS_MEDIUM,
-    CLIFFS_NEGLIGIBLE,
-    CLIFFS_SMALL,
-)
-
-ORACLE_SQL["events_cliffs_delta"] = f"""
-WITH per_v AS (
-  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS ca,
-         SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cb
-  FROM events
-  WHERE event_type IN ('view', 'click')
-  GROUP BY 1
-),
-ranked AS (
-  SELECT v, ca, cb, ca + cb AS c,
-         COALESCE(SUM(ca + cb) OVER (
-           ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS prev
-  FROM per_v
-),
-stats AS (
-  SELECT CAST(SUM(ca) AS BIGINT) AS na,
-         CAST(SUM(cb) AS BIGINT) AS nb,
-         SUM(CAST(ca AS HUGEINT)
-             * (2 * CAST(prev AS HUGEINT) + CAST(c AS HUGEINT) + 1)) AS r2a
-  FROM ranked
-),
-d AS (
-  SELECT na, nb,
-         CASE WHEN CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) > 0 THEN
-           (CAST(r2a - CAST(na AS HUGEINT) * (CAST(na AS HUGEINT) + 1)
-                 AS DOUBLE)
-            - CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
-           / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
-         END AS delta
-  FROM stats
-)
-SELECT na AS n_a, nb AS n_b,
-       ROUND(delta, 9) AS cliffs_delta,
-       CASE WHEN delta IS NULL THEN NULL
-            WHEN ABS(delta) < {CLIFFS_NEGLIGIBLE!r} THEN 'negligible'
-            WHEN ABS(delta) < {CLIFFS_SMALL!r} THEN 'small'
-            WHEN ABS(delta) < {CLIFFS_MEDIUM!r} THEN 'medium'
-            ELSE 'large' END AS magnitude
-FROM d
-"""
-
-# Mirrors relational.events_cochran_armitage: native dayofweek (DuckDB
-# 0=Sun = Spark dayofweek−1), exact HUGEINT spine sums, the radicand's
-# exact factors multiplied in double with the identical expression tree.
-from .operators.relational import CA_Z_05  # noqa: E402
-
-ORACLE_SQL["events_cochran_armitage"] = f"""
-WITH per_dow AS (
-  SELECT dayofweek(ts) AS s,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS r,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
-),
-agg AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS n_total,
-         CAST(SUM(r) AS BIGINT) AS n_success,
-         SUM(CAST(r AS HUGEINT) * CAST(s AS HUGEINT)) AS rs,
-         SUM(CAST(n AS HUGEINT) * CAST(s AS HUGEINT)) AS ns,
-         SUM(CAST(n AS HUGEINT) * CAST(s AS HUGEINT) * CAST(s AS HUGEINT)) AS nss
-  FROM per_dow
-),
-z AS (
-  SELECT n_total, n_success,
-         CASE WHEN CAST(n_success AS DOUBLE)
-                   * (CAST(n_total AS DOUBLE) - CAST(n_success AS DOUBLE))
-                   * (CAST(CAST(n_total AS HUGEINT) * nss AS DOUBLE)
-                      - CAST(ns * ns AS DOUBLE))
-                   / CAST(n_total AS DOUBLE) > 0 THEN
-           CAST(CAST(n_total AS HUGEINT) * rs
-                - CAST(n_success AS HUGEINT) * ns AS DOUBLE)
-           / SQRT(CAST(n_success AS DOUBLE)
-                  * (CAST(n_total AS DOUBLE) - CAST(n_success AS DOUBLE))
-                  * (CAST(CAST(n_total AS HUGEINT) * nss AS DOUBLE)
-                     - CAST(ns * ns AS DOUBLE))
-                  / CAST(n_total AS DOUBLE))
-         END AS zv
-  FROM agg
-)
-SELECT n_total, n_success,
-       ROUND(zv, 9) AS z,
-       ABS(zv) > {CA_Z_05!r} AS reject_no_trend_05
-FROM z
-"""
 
 # Mirrors relational.events_friedman_test: complete user blocks, doubled
 # tie-averaged within-user ranks via RANGE frames, exact HUGEINT Q ratio.
@@ -10136,139 +8672,6 @@ SELECT CAST(n AS BIGINT) AS n_blocks,
 FROM num_fold
 """
 
-# Mirrors relational.events_brier_decomposition: even-id train bins supply
-# the forecast, odd-id test bins score it; 9dp-railed ≤21-row folds; the
-# Murphy identity BS = REL − RES + UNC computed from the UNROUNDED terms.
-from .operators.relational import (  # noqa: E402
-    AUC_LABEL_MIN_PURCHASES,
-    BRIER_BIN_CAP,
-    BRIER_TRAIN_MOD,
-)
-
-ORACLE_SQL["events_brier_decomposition"] = f"""
-WITH users AS MATERIALIZED (
-  SELECT CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   >= {AUC_LABEL_MIN_PURCHASES} THEN 1 ELSE 0 END AS label,
-         LEAST(SUM(CASE WHEN event_type IN ('view', 'click') THEN 1 ELSE 0 END),
-               {BRIER_BIN_CAP}) AS bin,
-         user_id % {BRIER_TRAIN_MOD} = 0 AS is_train
-  FROM events GROUP BY user_id
-),
-train AS (
-  SELECT bin, CAST(SUM(label) AS BIGINT) AS pos_tr,
-         CAST(COUNT(*) AS BIGINT) AS n_tr
-  FROM users WHERE is_train GROUP BY 1
-),
-train_tot AS (
-  SELECT CAST(SUM(pos_tr) AS BIGINT) AS pos_all,
-         CAST(SUM(n_tr) AS BIGINT) AS n_all
-  FROM train
-),
-test AS (
-  SELECT bin, CAST(SUM(label) AS BIGINT) AS pos_te,
-         CAST(COUNT(*) AS BIGINT) AS n_te
-  FROM users WHERE NOT is_train GROUP BY 1
-),
-test_tot AS (
-  SELECT CAST(SUM(pos_te) AS BIGINT) AS pos_te_all,
-         CAST(SUM(n_te) AS BIGINT) AS n_te_all
-  FROM test
-),
-terms AS (
-  SELECT t.n_te, t.pos_te, tt.pos_te_all, tt.n_te_all,
-         CASE WHEN tr.n_tr IS NOT NULL AND tr.n_tr > 0
-              THEN CAST(tr.pos_tr AS DOUBLE) / CAST(tr.n_tr AS DOUBLE)
-              ELSE CAST(a.pos_all AS DOUBLE) / CAST(a.n_all AS DOUBLE)
-         END AS f_b,
-         CAST(t.pos_te AS DOUBLE) / CAST(t.n_te AS DOUBLE) AS o_b,
-         CAST(tt.pos_te_all AS DOUBLE) / CAST(tt.n_te_all AS DOUBLE) AS o_bar
-  FROM test t
-  LEFT JOIN train tr USING (bin)
-  CROSS JOIN train_tot a
-  CROSS JOIN test_tot tt
-),
-folds AS (
-  SELECT MAX(n_te_all) AS n_test, MAX(pos_te_all) AS pos_test,
-         CAST(COUNT(*) AS BIGINT) AS n_bins,
-         CAST(SUM(CAST(ROUND(CAST(n_te AS DOUBLE) * (f_b - o_b) * (f_b - o_b), 9)
-              AS DECIMAL(28,9))) AS DOUBLE) AS rel_n,
-         CAST(SUM(CAST(ROUND(CAST(n_te AS DOUBLE) * (o_b - o_bar) * (o_b - o_bar), 9)
-              AS DECIMAL(28,9))) AS DOUBLE) AS res_n
-  FROM terms
-)
-SELECT CAST(n_test AS BIGINT) AS n_test, n_bins,
-       ROUND(CASE WHEN n_test > 0 THEN rel_n / CAST(n_test AS DOUBLE) END, 9)
-         AS reliability,
-       ROUND(CASE WHEN n_test > 0 THEN res_n / CAST(n_test AS DOUBLE) END, 9)
-         AS resolution,
-       ROUND(CASE WHEN n_test > 0 THEN
-         (CAST(pos_test AS DOUBLE) / CAST(n_test AS DOUBLE))
-         * (1.0 - CAST(pos_test AS DOUBLE) / CAST(n_test AS DOUBLE)) END, 9)
-         AS uncertainty,
-       ROUND(CASE WHEN n_test > 0 THEN
-         rel_n / CAST(n_test AS DOUBLE)
-         - res_n / CAST(n_test AS DOUBLE)
-         + (CAST(pos_test AS DOUBLE) / CAST(n_test AS DOUBLE))
-           * (1.0 - CAST(pos_test AS DOUBLE) / CAST(n_test AS DOUBLE)) END, 9)
-         AS brier
-FROM folds
-"""
-
-
-# Mirrors relational.events_median_ci: one cumulative pass selects the
-# doubled median and both order-statistic CI ranks; rank formulas evaluate
-# the identical floor-of-double expression; one division to dollars.
-from .operators.relational import MEDIAN_CI_Z_05  # noqa: E402
-
-ORACLE_SQL["events_median_ci"] = f"""
-WITH per_v AS (
-  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per_v),
-cum AS (
-  SELECT v, c,
-         COALESCE(SUM(c) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev,
-         t.n
-  FROM per_v CROSS JOIN tot t
-),
-ranks AS (
-  SELECT n,
-         GREATEST(CAST(1 AS BIGINT),
-           CAST(FLOOR((CAST(n AS DOUBLE)
-                       - {MEDIAN_CI_Z_05!r} * SQRT(CAST(n AS DOUBLE))) / 2.0)
-                AS BIGINT)) AS rank_lo
-  FROM tot
-),
-agg AS (
-  SELECT MAX(c2.n) AS n,
-         MAX(r.rank_lo) AS rank_lo,
-         MAX(LEAST(c2.n, c2.n + 1 - r.rank_lo)) AS rank_hi,
-         CAST(SUM(CASE WHEN c2.prev < ((c2.n + 1) // 2)
-                        AND ((c2.n + 1) // 2) <= c2.prev + c2.c
-                   THEN c2.v ELSE 0 END)
-              + SUM(CASE WHEN c2.prev < ((c2.n // 2) + 1)
-                          AND ((c2.n // 2) + 1) <= c2.prev + c2.c
-                     THEN c2.v ELSE 0 END) AS BIGINT) AS med2,
-         CAST(SUM(CASE WHEN c2.prev < r.rank_lo
-                        AND r.rank_lo <= c2.prev + c2.c
-                   THEN c2.v ELSE 0 END) AS BIGINT) AS v_lo,
-         CAST(SUM(CASE WHEN c2.prev < LEAST(c2.n, c2.n + 1 - r.rank_lo)
-                        AND LEAST(c2.n, c2.n + 1 - r.rank_lo) <= c2.prev + c2.c
-                   THEN c2.v ELSE 0 END) AS BIGINT) AS v_hi
-  FROM cum c2 CROSS JOIN ranks r
-)
-SELECT n,
-       ROUND(CAST(med2 AS DOUBLE) / 200.0, 9) AS median,
-       CAST(v_lo AS DOUBLE) / 100.0 AS ci_lo,
-       CAST(v_hi AS DOUBLE) / 100.0 AS ci_hi,
-       CAST(rank_lo AS BIGINT) AS rank_lo,
-       CAST(rank_hi AS BIGINT) AS rank_hi
-FROM agg
-"""
 
 # Mirrors curation.corpus_source_concentration: sorted-rank Gini identity
 # with exact HUGEINT cross products, 9dp-railed HHI fold, top-k shares.
@@ -10316,6 +8719,7 @@ SELECT n_sources, total_tokens,
 FROM agg
 """
 
+
 # Mirrors relational.events_cohens_d: exact one-pass sufficient statistics
 # (HUGEINT squares internal, BIGINT outputs), identical double expression
 # trees for the pooled sd / d / Hedges J / SE, magnitude bands f-string
@@ -10328,6 +8732,7 @@ from .operators.relational import (  # noqa: E402
     TOST_MARGIN_CENTS,
     TOST_Z_05,
 )
+
 
 _VC_STATS_SQL = """
   SELECT CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS na,
@@ -10349,6 +8754,7 @@ _VC_STATS_SQL = """
   FROM events
   WHERE value IS NOT NULL AND event_type IN ('view', 'click')
 """
+
 
 ORACLE_SQL["events_cohens_d"] = f"""
 WITH stats AS ({_VC_STATS_SQL}),
@@ -10407,6 +8813,7 @@ SELECT na AS n_a, nb AS n_b,
 FROM ci
 """
 
+
 # Mirrors relational.events_tost_equivalence: the same exact sufficient
 # statistics, Welch SE and both one-sided z's with identical double
 # trees; margin and critical value f-string pinned.
@@ -10456,8 +8863,9 @@ SELECT na AS n_a, nb AS n_b,
 FROM zs
 """
 
+
 # Mirrors relational.events_mood_median_test: the doubled grand-median
-# selection (the events_median_ci containment idiom), exact integer 2×k
+# selection (the prev<k≤prev+c containment idiom), exact integer 2×k
 # margins, chi-square terms on the 9dp/DECIMAL(28,9) rail with identical
 # double expression trees.
 ORACLE_SQL["events_mood_median_test"] = """
@@ -10539,11 +8947,13 @@ SELECT n_total, k_groups,
 FROM folds
 """
 
+
 # Mirrors relational.events_overdispersion: full-calendar per-type day
 # spine (zero days count), exact HUGEINT variance numerator n·Σc² − (Σc)²,
 # one double division for the dispersion index, Fisher's √(2X) − √(2df−1)
 # approximation with the pinned two-sided z.
 from .operators.relational import OVERDISP_Z_05  # noqa: E402
+
 
 ORACLE_SQL["events_overdispersion"] = f"""
 WITH per_td AS (
@@ -10613,123 +9023,13 @@ SELECT et AS event_type, n_days, s AS n_events,
 FROM zs
 """
 
-# Mirrors relational.events_jonckheere_terpstra: the seven per-dow weight
-# columns ride plain cumulative windows; 2·JT and every variance fold are
-# exact HUGEINT integers (internal only — outputs cast); the three
-# Hollander-Wolfe variance terms multiply exact factors in double with
-# identical trees; one-sided critical value f-string pinned.
-from .operators.relational import JT_Z_05  # noqa: E402
-
-_JT_K = 7
-_JT_CG = ",\n         ".join(
-    f"CAST(SUM(CASE WHEN g = {gi} THEN 1 ELSE 0 END) AS BIGINT) AS c{gi}"
-    for gi in range(_JT_K)
-)
-_JT_PREV = ",\n         ".join(
-    f"COALESCE(SUM(c{gi}) OVER (ORDER BY v "
-    f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS p{gi}"
-    for gi in range(_JT_K)
-)
-_JT_TERMS = "\n           + ".join(
-    f"CAST(c{h} AS HUGEINT) * (2 * CAST(p{g} AS HUGEINT) + CAST(c{g} AS HUGEINT))"
-    for h in range(1, _JT_K)
-    for g in range(h)
-)
-_JT_TIE = " + ".join(f"CAST(c{gi} AS HUGEINT)" for gi in range(_JT_K))
-_JT_NG = ",\n         ".join(
-    f"CAST(SUM(c{gi}) AS BIGINT) AS ng{gi}" for gi in range(_JT_K)
-)
-_JT_NTOT = " + ".join(f"CAST(ng{gi} AS HUGEINT)" for gi in range(_JT_K))
-_JT_SUMSQ = " + ".join(
-    f"CAST(ng{gi} AS HUGEINT) * CAST(ng{gi} AS HUGEINT)" for gi in range(_JT_K)
-)
-_JT_GG1 = "\n           + ".join(
-    f"CAST(ng{gi} AS HUGEINT) * (CAST(ng{gi} AS HUGEINT) - 1)"
-    f" * (2 * CAST(ng{gi} AS HUGEINT) + 5)"
-    for gi in range(_JT_K)
-)
-_JT_GG2 = "\n           + ".join(
-    f"CAST(ng{gi} AS HUGEINT) * (CAST(ng{gi} AS HUGEINT) - 1)"
-    f" * (CAST(ng{gi} AS HUGEINT) - 2)"
-    for gi in range(_JT_K)
-)
-_JT_GG3 = " + ".join(
-    f"CAST(ng{gi} AS HUGEINT) * (CAST(ng{gi} AS HUGEINT) - 1)"
-    for gi in range(_JT_K)
-)
-_JT_KG = " + ".join(
-    f"CASE WHEN ng{gi} > 0 THEN 1 ELSE 0 END" for gi in range(_JT_K)
-)
-
-ORACLE_SQL["events_jonckheere_terpstra"] = f"""
-WITH base AS (
-  SELECT dayofweek(ts) AS g,
-         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v
-  FROM events WHERE value IS NOT NULL
-),
-per_v AS (
-  SELECT v,
-         {_JT_CG}
-  FROM base GROUP BY 1
-),
-cum AS (
-  SELECT *,
-         {_JT_PREV}
-  FROM per_v
-),
-tied AS (SELECT *, {_JT_TIE} AS t FROM cum),
-agg AS (
-  SELECT SUM({_JT_TERMS}) AS jt2,
-         SUM(t * (t - 1) * (2 * t + 5)) AS tt1,
-         SUM(t * (t - 1) * (t - 2)) AS tt2,
-         SUM(t * (t - 1)) AS tt3,
-         {_JT_NG}
-  FROM tied
-),
-folds AS (
-  SELECT jt2, tt1, tt2, tt3,
-         CAST({_JT_NTOT} AS BIGINT) AS n_total,
-         CAST({_JT_KG} AS BIGINT) AS k_groups,
-         ({_JT_NTOT}) * ({_JT_NTOT}) - ({_JT_SUMSQ}) AS m2x2,
-         ({_JT_NTOT}) * (({_JT_NTOT}) - 1) * (2 * ({_JT_NTOT}) + 5) - tt1
-           - ({_JT_GG1}) AS a_full,
-         {_JT_GG2} AS gg2,
-         {_JT_GG3} AS gg3
-  FROM agg
-),
-vz AS (
-  SELECT *,
-         CASE WHEN n_total >= 3 THEN
-           CAST(a_full AS DOUBLE) / 72.0
-           + CAST(gg2 AS DOUBLE) * CAST(tt2 AS DOUBLE)
-             / (36.0 * (CAST(n_total AS DOUBLE) * (CAST(n_total AS DOUBLE) - 1.0)
-                        * (CAST(n_total AS DOUBLE) - 2.0)))
-           + CAST(gg3 AS DOUBLE) * CAST(tt3 AS DOUBLE)
-             / (8.0 * (CAST(n_total AS DOUBLE) * (CAST(n_total AS DOUBLE) - 1.0)))
-         END AS var_g
-  FROM folds
-),
-zs AS (
-  SELECT *,
-         CASE WHEN var_g > 0 THEN
-           CAST(2 * jt2 - m2x2 AS DOUBLE) / (4.0 * SQRT(var_g))
-         END AS z
-  FROM vz
-)
-SELECT n_total, k_groups,
-       CAST(jt2 AS DOUBLE) AS jt_u2,
-       CAST(m2x2 AS DOUBLE) / 2.0 AS mean_u2,
-       ROUND(z, 9) AS z_jt,
-       CASE WHEN z IS NOT NULL THEN z > {JT_Z_05!r} END
-         AS reject_increasing_05
-FROM zs
-"""
 
 # Mirrors relational._daily_view_click_counts consumers: zero-filled
 # view/click daily series on the full event calendar; Bland-Altman stats
 # from the exact HUGEINT variance numerator; Kendall tau-b over the
 # day-pair frame with identical double trees.
 from .operators.relational import BLAND_ALTMAN_Z_05  # noqa: E402
+
 
 _DAILY_VC_SQL = """
 per_d AS (
@@ -10752,6 +9052,7 @@ daily AS (
   FROM spine s LEFT JOIN per_d p ON s.day = p.day
 )
 """
+
 
 ORACLE_SQL["events_bland_altman_daily"] = f"""
 WITH {_DAILY_VC_SQL},
@@ -10800,6 +9101,7 @@ SELECT n_days,
 FROM outside
 """
 
+
 ORACLE_SQL["events_kendall_tau_daily"] = f"""
 WITH {_DAILY_VC_SQL},
 pairs AS (
@@ -10825,6 +9127,7 @@ SELECT n_days, n_pairs, s, ties_x, ties_y,
        END, 9) AS tau_b
 FROM j
 """
+
 
 # Mirrors text.text_heaps_law_fit: integer-arithmetic prefix buckets
 # (DuckDB // = Spark's a − a%b form for non-negative ids), exact
@@ -11036,100 +9339,4 @@ SELECT a.n_vectors, f.n_queries, f.n_used,
 FROM folds f CROSS JOIN n_all a
 """
 
-# Mirrors relational.events_hurst_exponent: size-scaled exact integer
-# block statistics (n·Z_k, n·R, (n·S)² all HUGEINT), one double division
-# per block, railed per-size means, the heaps-fit exact-decimal OLS.
-from .operators.relational import HURST_BLOCK_SIZES  # noqa: E402
 
-_HURST_SIZES_SQL = ", ".join(str(s) for s in HURST_BLOCK_SIZES)
-
-ORACLE_SQL["events_hurst_exponent"] = f"""
-WITH per_d AS (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-),
-rng AS (SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM per_d),
-spine AS (
-  SELECT UNNEST(generate_series((SELECT dmin FROM rng),
-                                (SELECT dmax FROM rng))) AS day
-),
-daily AS (
-  SELECT CAST(s.day - (SELECT dmin FROM rng) AS BIGINT) AS t,
-         COALESCE(p.y, 0) AS y
-  FROM spine s LEFT JOIN per_d p ON s.day = p.day
-),
-nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days FROM daily),
-framed AS (
-  SELECT d.t, d.y, z.bs, d.t // z.bs AS blk
-  FROM daily d
-  CROSS JOIN (SELECT UNNEST([{_HURST_SIZES_SQL}]) AS bs) z
-  CROSS JOIN nd
-  WHERE d.t // z.bs < nd.n_days // z.bs
-),
-stats AS (
-  SELECT bs, blk, CAST(SUM(y) AS BIGINT) AS s,
-         SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS ss
-  FROM framed GROUP BY 1, 2
-),
-cum AS (
-  SELECT bs, blk, t,
-         CAST(SUM(y) OVER (PARTITION BY bs, blk ORDER BY t
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cy,
-         CAST(t % bs + 1 AS BIGINT) AS k
-  FROM framed
-),
-blocks AS (
-  SELECT c.bs, c.blk,
-         MAX(CAST(c.bs AS HUGEINT) * CAST(c.cy AS HUGEINT)
-             - CAST(c.k AS HUGEINT) * CAST(st.s AS HUGEINT))
-           - MIN(CAST(c.bs AS HUGEINT) * CAST(c.cy AS HUGEINT)
-                 - CAST(c.k AS HUGEINT) * CAST(st.s AS HUGEINT)) AS rn,
-         CAST(MAX(c.bs) AS HUGEINT) * MAX(st.ss)
-           - CAST(MAX(st.s) AS HUGEINT) * CAST(MAX(st.s) AS HUGEINT) AS s2n
-  FROM cum c JOIN stats st ON c.bs = st.bs AND c.blk = st.blk
-  GROUP BY 1, 2
-),
-per_size AS (
-  SELECT bs,
-         CAST(SUM(CASE WHEN s2n > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-         CAST(COUNT(*) AS BIGINT) AS nb_all,
-         CAST(SUM(CASE WHEN s2n > 0 THEN
-           CAST(ROUND(CAST(rn AS DOUBLE) / SQRT(CAST(s2n AS DOUBLE)), 9)
-                AS DECIMAL(28,9)) END) AS DOUBLE) AS rs_sum
-  FROM blocks GROUP BY 1
-),
-pts AS (
-  SELECT nb, nb_all,
-         CAST(ROUND(LN(CAST(bs AS DOUBLE)), 7) AS DECIMAL(18,7)) AS x,
-         CAST(ROUND(LN(rs_sum / CAST(nb AS DOUBLE)), 7) AS DECIMAL(18,7)) AS y
-  FROM per_size WHERE nb > 0
-),
-sums AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS m,
-         SUM(x) AS sx, SUM(y) AS sy,
-         SUM(x * y) AS sxy, SUM(x * x) AS sxx, SUM(y * y) AS syy,
-         CAST(SUM(nb) AS BIGINT) AS n_blocks_used,
-         CAST(SUM(nb_all) - SUM(nb) AS BIGINT) AS n_blocks_skipped
-  FROM pts
-),
-fit AS (
-  SELECT m, n_blocks_used, n_blocks_skipped,
-         CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS dx,
-         CAST(m AS DOUBLE) * CAST(syy AS DOUBLE)
-           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS dy,
-         CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num
-  FROM sums
-),
-coef AS (
-  SELECT *, CASE WHEN m >= 2 AND dx > 0 THEN num / dx END AS h FROM fit
-)
-SELECT (SELECT n_days FROM nd) AS n_days,
-       m AS n_sizes, n_blocks_used, n_blocks_skipped,
-       ROUND(h, 9) AS hurst_h,
-       ROUND(CASE WHEN h IS NOT NULL AND dy > 0
-             THEN num * num / (dx * dy) END, 9) AS r2
-FROM coef
-"""

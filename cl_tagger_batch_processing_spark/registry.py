@@ -109,10 +109,8 @@ from .streaming import windows as streaming_windows  # noqa: E402
 # statistics/ML loops, the embedding kernels, the ANN referees, the
 # market-basket memo riders, the text/LM multi-consumer checkpoints, and
 # the concurrent-stream CMS query. Displaced: the r12/r13 rotation blocks
-# (driver-green one to two rounds each, machinery untouched since —
-# including events_psi_drift / events_cramers_v, whose HUGEINT-cast fix is
-# pinned forever by tests/test_oracle_types.py); all remain oracle-backed
-# locally below slot 50.
+# (driver-green one to two rounds each, machinery untouched since); all
+# remain oracle-backed locally below slot 50.
 register("graph_pagerank", graph.graph_pagerank)
 register("graph_personalized_pagerank", graph.graph_personalized_pagerank)
 register("graph_hits", graph.graph_hits)
@@ -174,16 +172,8 @@ from .sources import textfiles  # noqa: E402
 # Displaced by the r14 window refresh (see above): the r12/r13 rotation
 # names, all driver-green and oracle-backed locally.
 register("customer_rfm", relational.customer_rfm)
-register("events_user_gini", relational.events_user_gini)
 register("orders_rfm_migration", relational.orders_rfm_migration)
-register("events_spearman_corr", relational.events_spearman_corr)
-register("events_kruskal_wallis", relational.events_kruskal_wallis)
 register("events_conformal_interval", relational.events_conformal_interval)
-register("events_bh_fdr", relational.events_bh_fdr)
-register("events_psi_drift", relational.events_psi_drift)
-register("events_cramers_v", relational.events_cramers_v)
-register("events_jackknife_ratio", relational.events_jackknife_ratio)
-register("events_runs_test", relational.events_runs_test)
 register("text_good_turing", text.text_good_turing)
 register("text_js_divergence", text.text_js_divergence)
 register("text_quality_kappa", text.text_quality_kappa)
@@ -196,14 +186,9 @@ register("corpus_temperature_mix", curation.corpus_temperature_mix)
 register("text_heavy_hitters_cms", text.text_heavy_hitters_cms)
 register("orders_backlog_timeseries", relational.orders_backlog_timeseries)
 register("events_page_hinkley", relational.events_page_hinkley)
-register("events_ab_cuped", relational.events_ab_cuped)
 register("events_ab_lift", relational.events_ab_lift)
-register("events_anomaly_mad", relational.events_anomaly_mad)
 register("events_autocorrelation", relational.events_autocorrelation)
 register("events_ewma_daily", relational.events_ewma_daily)
-register("events_funnel", relational.events_funnel)
-register("events_markov_entropy_rate", relational.events_markov_entropy_rate)
-register("events_retention", relational.events_retention)
 register("events_tukey_hsd", relational.events_tukey_hsd)
 register("text_hashing_tf", text.text_hashing_tf)
 register("text_word_pmi", text.text_word_pmi)
@@ -234,7 +219,6 @@ register("source_orc_roundtrip", textfiles.source_orc_roundtrip)
 register("source_xml_roundtrip", textfiles.source_xml_roundtrip)
 register("source_schema_evolution", textfiles.source_schema_evolution)
 register("source_jsonl_corrupt_quarantine", textfiles.source_jsonl_corrupt_quarantine)
-register("events_variant_extract", relational.events_variant_extract)
 register("lateral_top_customers", relational.lateral_top_customers)
 register("dedup_semantic_keep", similarity.dedup_semantic_keep)
 register("string_functions", scalar.string_functions)
@@ -247,14 +231,12 @@ register("percentiles_by_priority", scalar.percentiles_by_priority)
 # Displaced by the r12 window refresh (see above): the 20 r10-rotation
 # names were driver-green two consecutive rounds (r10-r11); all remain
 # fully oracle-backed locally.
-register("events_mann_whitney", relational.events_mann_whitney)
 register("orders_benford_test", relational.orders_benford_test)
 register("events_poisson_bootstrap_ci", relational.events_poisson_bootstrap_ci)
 register("events_winsorized_stats", relational.events_winsorized_stats)
 register("sim_hybrid_rrf", similarity.sim_hybrid_rrf)
 register("dedup_rouge_verify", dedup.dedup_rouge_verify)
 register("sim_ann_graph_search", similarity.sim_ann_graph_search)
-register("events_did_estimator", relational.events_did_estimator)
 register("orders_price_index_laspeyres", relational.orders_price_index_laspeyres)
 register("stream_session_counts", streaming_windows.stream_session_counts)
 register("approx_distinct", relational.approx_distinct)
@@ -273,20 +255,14 @@ register("stream_quantile_histogram", streaming_windows.stream_quantile_histogra
 register("dedup_minhash_lev_verify", dedup.dedup_minhash_lev_verify)
 register("orders_forecast_backtest", relational.orders_forecast_backtest)
 register("approx_distinct_hll", relational.approx_distinct_hll)
-register("events_cusum_drift", relational.events_cusum_drift)
 register("sim_mmr_diversify", similarity.sim_mmr_diversify)
 register("privacy_t_closeness", relational.privacy_t_closeness)
 register("text_bpe_train_merges", text.text_bpe_train_merges)
 register("text_winnowing_fingerprints", text.text_winnowing_fingerprints)
 register("parts_pareto_skyline", relational.parts_pareto_skyline)
-register("events_ks_test", relational.events_ks_test)
-register("events_kmv_overlap", relational.events_kmv_overlap)
-register("events_changepoint_detection", relational.events_changepoint_detection)
 register("text_bm25_topk", text.text_bm25_topk)
-register("events_auc_report", relational.events_auc_report)
 register("orders_interrupted_timeseries", relational.orders_interrupted_timeseries)
 register("privacy_generalization_sweep", curation.privacy_generalization_sweep)
-register("events_retention_curve_fit", relational.events_retention_curve_fit)
 
 # Displaced by the r10 window refresh (see above): the ten r7-survivors were
 # driver-green three consecutive rounds (r7-r9), the ten r8-survivors two
@@ -299,7 +275,6 @@ register("mm_scene_cuts", multimodal.mm_scene_cuts)
 register("orders_cohort_ltv", relational.orders_cohort_ltv)
 register("crossmodal_curation_verdict", curation.crossmodal_curation_verdict)
 register("embedding_kmeans", similarity.embedding_kmeans)
-register("events_quantile_sketch_report", relational.events_quantile_sketch_report)
 register("privacy_k_anonymity", curation.privacy_k_anonymity)
 register("privacy_l_diversity", relational.privacy_l_diversity)
 
@@ -387,7 +362,6 @@ register("join_semi_anti", relational.join_semi_anti)
 register("set_ops", relational.set_ops)
 register("pivot_status", relational.pivot_status)
 register("distinct_brand_stats", relational.distinct_brand_stats)
-register("events_json_extract", relational.events_json_extract)
 register("cube_agg", relational.cube_agg)
 register("window_frames", relational.window_frames)
 register("grouping_sets_agg", relational.grouping_sets_agg)
@@ -399,8 +373,6 @@ register("unpivot_measures", relational.unpivot_measures)
 # roundtrips, remaining stream_* queries, VARIANT/LATERAL surfaces and the
 # composed ANN/SemDeDup verdicts by the r11 rotation — all registered above.
 
-# Sequential funnel via chained same-partition windows (one shuffle).
-# Day-N cohort retention triangle (exact distinct users per cell).
 # Market-basket pair counts (bounded self-join: baskets are small).
 # Lag analytics over the aggregated series, not the fact rows.
 register("yoy_revenue_growth", relational.yoy_revenue_growth)
@@ -473,7 +445,6 @@ register("events_rolling_zscore", relational.events_rolling_zscore)
 
 register("dedup_minhash_incremental", dedup.dedup_minhash_incremental)
 
-register("events_path_topk", relational.events_path_topk)
 
 
 register("layout_zorder_skipping", sources_layout.layout_zorder_skipping)
@@ -489,7 +460,6 @@ register("corpus_length_filter_sweep", curation.corpus_length_filter_sweep)
 
 register("source_jsd_matrix", text.source_jsd_matrix)
 
-register("events_daily_percentiles", relational.events_daily_percentiles)
 
 # --- round-6 additions kept below the window (the other ten r6 additions
 # were promoted into the driver window by the r7 refresh above) -------------
@@ -525,7 +495,6 @@ register("text_langid", text.text_langid)
 register("text_fingerprint", text.text_fingerprint)
 register("text_blocklist_filter", text.text_blocklist_filter)
 register("orders_duplicate_detection", relational.orders_duplicate_detection)
-register("events_funnel_latency", relational.events_funnel_latency)
 register("text_stats", text.text_stats)
 register("mm_byte_histogram", multimodal.mm_byte_histogram)
 register("corpus_split_assign", curation.corpus_split_assign)
@@ -543,9 +512,9 @@ register("sim_ivf_balance_report", similarity.sim_ivf_balance_report)
 register("mm_audio_silence_trim", multimodal.mm_audio_silence_trim)
 register("embedding_hard_negatives", similarity.embedding_hard_negatives)
 register("corpus_dedup_token_savings", dedup.corpus_dedup_token_savings)
-# The 12 round-9 additions (Mann-Whitney U, Benford QA, Poisson-bootstrap
-# CI, winsorized stats, Kneser-Ney LM, RRF fusion, permutation test, ROUGE
-# verify, graph-ANN beam search, CCNet buckets, DiD, Laspeyres) plus the
+# The round-9 additions (Benford QA, Poisson-bootstrap CI, winsorized
+# stats, Kneser-Ney LM, RRF fusion, permutation test, ROUGE verify,
+# graph-ANN beam search, CCNet buckets, Laspeyres) plus the
 # corpus_stratified_split / corpus_health_report / streaming reports were
 # promoted into the driver window by the r10 rotation — registered above.
 
@@ -560,80 +529,43 @@ register("events_isotonic_calibration", relational.events_isotonic_calibration)
 register("events_power_analysis", relational.events_power_analysis)
 register("text_ndcg_eval", text.text_ndcg_eval)
 register("privacy_randomized_response", relational.privacy_randomized_response)
-register("events_empirical_bayes", relational.events_empirical_bayes)
 register("events_granger_lite", relational.events_granger_lite)
 register("text_burrows_delta", text.text_burrows_delta)
-register("events_absorption_probability", relational.events_absorption_probability)
-
-# --- round-11 continuation batch: the distribution-drift / categorical-
-# association / k-group rank-test family (PSI is the production drift
-# monitor; Cramér's V and Kruskal-Wallis complete the dependence-test
-# surface around Pearson/Spearman/Mann-Whitney) ---------------------------
-
-# --- round-11 continuation batch 2: resampling-free uncertainty
-# (jackknife), sequence-randomness QA (runs test), and the vocabulary-
-# coverage diagnostic (Good-Turing/Chao1) ---------------------------------
-
-# --- round-11 continuation batch 3: multiple-comparisons discipline
-# (BH-FDR over the per-type Welch family), rater-agreement QA (Cohen's
-# kappa between quality gates), and the corpus-level source-distance
-# matrix (pairwise Jensen-Shannon divergence) ------------------------------
 
 # --- round-12 additions (held under the ≤20 first-time-rotation budget):
 # the paired/rank/trend test family — several riding the new bucketed
-# two-pass rank machinery — plus experimentation effect-size and
-# population-coverage readouts --------------------------------------------
+# two-pass rank machinery — plus an experimentation effect-size
+# readout -----------------------------------------------------------------
 register("events_wilcoxon_signed_rank", relational.events_wilcoxon_signed_rank)
 register("events_mann_kendall", relational.events_mann_kendall)
 register("events_welch_anova", relational.events_welch_anova)
 register("events_mcnemar", relational.events_mcnemar)
-register("events_capture_recapture", relational.events_capture_recapture)
 register("events_odds_ratio_ci", relational.events_odds_ratio_ci)
-register("events_sprt_boundary", relational.events_sprt_boundary)
-register("events_gumbel_daily_max", relational.events_gumbel_daily_max)
 register("text_lexical_diversity", text.text_lexical_diversity)
 
-# r13 additions (8 ≤ the 27 first-time rotations): the drift metric that
-# reports distance in value units (1-D Wasserstein over the new
-# bucketed_lead machinery), the variance-homogeneity gate Welch ANOVA
-# presupposes (Brown-Forsythe on per-group bucketed medians), the ordinal
-# effect size the MW z is not (Cliff's delta), the one-df directional
-# categorical test (Cochran-Armitage trend), the repeated-measures rank
-# test over matched user blocks (Friedman), and the calibration audit
-# (Murphy's Brier decomposition on a held-out parity split), the
-# distribution-free order-statistic CI for the median (one cum-machinery
-# pass selects all three order statistics), and the source-concentration
-# report (HHI/Gini/top-k token shares — mixture governance). Each is
-# oracle-backed, textbook-replayed, SCALE/COVERAGE-rowed and
-# vacuity-triaged (house additions discipline).
+# r13 additions: the drift metric that reports distance in value units
+# (1-D Wasserstein over the bucketed_lead machinery), the
+# repeated-measures rank test over matched user blocks (Friedman), and the
+# source-concentration report (HHI/Gini/top-k token shares — mixture
+# governance). Each is oracle-backed, textbook-replayed,
+# SCALE/COVERAGE-rowed and vacuity-triaged (house additions discipline).
 register("events_wasserstein_drift", relational.events_wasserstein_drift)
-register("events_brown_forsythe", relational.events_brown_forsythe)
-register("events_cliffs_delta", relational.events_cliffs_delta)
-register("events_cochran_armitage", relational.events_cochran_armitage)
 register("events_friedman_test", relational.events_friedman_test)
-register("events_brier_decomposition", relational.events_brier_decomposition)
-register("events_median_ci", relational.events_median_ci)
 register("corpus_source_concentration", curation.corpus_source_concentration)
 
-# r13 continuation additions (12 more — r13 total 20 ≤ the 27 first-time
-# rotations): the parametric effect-size companion to Cliff's delta
-# (Cohen's d with Hedges' g and a normal CI) and the inverted question no
+# r13 continuation additions: the parametric effect size (Cohen's d with
+# Hedges' g and a normal CI) and the inverted question no
 # difference test can ask (TOST equivalence within a stated margin). Same
 # additions discipline: oracle-backed, textbook-replayed,
 # SCALE/COVERAGE-rowed, vacuity-triaged, constants sync-pinned.
 register("events_cohens_d", relational.events_cohens_d)
 register("events_tost_equivalence", relational.events_tost_equivalence)
 # Mood's median test (the weakest-assumption k-group location gate; the
-# median_ci doubled-order-statistic selection feeds an exact 2×k table)
+# doubled-order-statistic selection feeds an exact 2×k table)
 # and the per-type Poisson overdispersion audit of the daily series
 # (zero days on the calendar spine; exact integer dispersion numerator).
 register("events_mood_median_test", relational.events_mood_median_test)
 register("events_overdispersion", relational.events_overdispersion)
-# Jonckheere-Terpstra ordered-alternative test (the continuous-response
-# counterpart of Cochran-Armitage; seven dow weight columns ride ONE
-# bucketed_cum_before machinery pass; tie-corrected Hollander-Wolfe null
-# variance from exact DECIMAL(38,0) folds).
-register("events_jonckheere_terpstra", relational.events_jonckheere_terpstra)
 # The paired-daily-series family on the shared zero-filled view/click
 # spine: Bland-Altman agreement (bias, limits, outside share) and
 # Kendall's tau-b (tie-corrected pairwise concordance on BOTH margins).
@@ -649,7 +581,3 @@ register("text_token_dispersion", text.text_token_dispersion)
 # dimension MLE (exact integer 2-NN distances; all-pairs stage documented
 # as the sim_topk_cosine fixture-scale referee class).
 register("embedding_isotropy_report", similarity.embedding_isotropy_report)
-# Hurst R/S long-range-dependence exponent of the daily series (exact
-# size-scaled integer block statistics; railed per-size means; the
-# heaps-fit exact-decimal log-log OLS).
-register("events_hurst_exponent", relational.events_hurst_exponent)

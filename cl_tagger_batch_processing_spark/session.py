@@ -71,9 +71,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # PySpark 4 wraps EVERY DataFrame/Column API call with a call-site
         # capture (stack inspection + 4 py4j round trips) for error-message
-        # enrichment. Across a 336-query registry that is ~40% of query
-        # CONSTRUCTION time (profiled r14: events_tukey_hsd spent 0.55s of a
-        # 1.3s build inside the wrapper) for a debugging nicety — guide
+        # enrichment. Across the registry that is ~40% of query
+        # CONSTRUCTION time (profiled r14: one 1.3s statistics-query build
+        # spent 0.55s inside the wrapper) for a debugging nicety — guide
         # §4's "you control how much crosses the boundary" applied to the
         # driver-side API itself. Deployment-independent: the overhead is
         # py4j latency, present on any cluster's driver.

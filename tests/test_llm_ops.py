@@ -1222,8 +1222,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert curation.ES_HASH_DOMAIN == float(1 << 60)
     es_sql = oracles.ORACLE_SQL["corpus_weighted_sample"]
     assert "LIMIT 100" in es_sql and "1152921504606846976.0" in es_sql
-    cu_sql = oracles.ORACLE_SQL["events_cusum_drift"]
-    assert "3.0 * sqrt" in cu_sql  # alarm threshold mirrored
     cov_sql = oracles.ORACLE_SQL["embedding_covariance"]
     assert "* 1000, 0" in cov_sql and "1000000.0" in cov_sql  # quant scale
     assert (relational.BOT_PEAK_PER_HOUR, relational.BOT_MAX_TYPES) == (20, 2)
@@ -1314,8 +1312,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert "pr10" in tr_sql  # same 10-superstep chain as graph_pagerank
     assert (relational.QSK_BIN_WIDTH, relational.QSK_MAX_BIN) == (4.0, 127)
     assert relational.QSK_QUANTILES == (0.5, 0.9, 0.99)
-    qsk_sql = oracles.ORACLE_SQL["events_quantile_sketch_report"]
-    assert "floor(value / 4.0)" in qsk_sql and "127" in qsk_sql
     sqh_sql = oracles.ORACLE_SQL["stream_quantile_histogram"]
     assert "floor(value / 4.0)" in sqh_sql and "127" in sqh_sql
     assert "3600 * 3600" in sqh_sql  # hour tumbling window, integer epoch
@@ -1547,28 +1543,6 @@ def test_weighted_sample_favors_weight(spark, sf_dir):
     )
     sample_mean = sum(r.n_tokens for r in rows) / len(rows)
     assert sample_mean > corpus_mean
-
-
-def test_cusum_closed_form_matches_recurrence(spark, sf_dir):
-    """The prefix-sum/extrema closed form must equal the textbook
-    recurrence S_t = max(0, S_{t-1} + dev_t) replayed in exact Python
-    ints, for both directions."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    rows = sorted(
-        relational.events_cusum_drift(spark, sf_dir).collect(),
-        key=lambda r: r.day,
-    )
-    assert rows
-    counts = [r.daily_count for r in rows]
-    n, total = len(counts), sum(counts)
-    s_up = s_dn = 0
-    for r, c in zip(rows, counts):
-        dev = n * c - total
-        s_up = max(0, s_up + dev)
-        s_dn = max(0, s_dn - dev)
-        assert r.cusum_up == s_up / n, r
-        assert r.cusum_down == s_dn / n, r
 
 
 def test_seasonal_decompose_identity(spark, sf_dir):
@@ -2207,27 +2181,6 @@ def test_assortativity_matches_exact_stats(spark, sf_dir):
     assert sx == sy and sxx == syy
 
 
-def test_funnel_latency_consistent_with_funnel(spark, sf_dir):
-    """Latency stages agree with events_funnel's reach counts and exact
-    dwell sums; percentiles are ordered within [min, max]."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    lat = {r.stage: r for r in relational.events_funnel_latency(spark, sf_dir).collect()}
-    fun = relational.events_funnel(spark, sf_dir).collect()[0]
-    assert set(lat) == {"view_to_click", "click_to_purchase"}
-    assert lat["view_to_click"].n_users == fun.n_clicked
-    assert lat["click_to_purchase"].n_users == fun.n_purchased
-    for r in lat.values():
-        assert 0 <= r.min_lat_us <= r.p50_lat_us <= r.p90_lat_us <= r.max_lat_us
-        assert r.min_lat_us <= r.avg_lat_us <= r.max_lat_us
-    # exact dwell-sum replay: avg * n == events_funnel's integer sums
-    assert lat["view_to_click"].avg_lat_us == fun.view_click_us / lat["view_to_click"].n_users
-    assert (
-        lat["click_to_purchase"].avg_lat_us
-        == fun.click_purchase_us / lat["click_to_purchase"].n_users
-    )
-
-
 def test_mmr_diversify_replays_greedy(spark, sf_dir):
     """Exact greedy replay: pool = top-MMR_POOL by (rel DESC, id ASC);
     pick 1 is pure relevance; each later pick maximizes
@@ -2433,45 +2386,6 @@ def test_textrank_matches_python_pagerank(spark, sf_dir):
     ranked = sorted(nodes, key=lambda v: (-pr[v], v))
     for i, v in enumerate(ranked, 1):
         assert rows[v].rank == i
-
-
-def test_quantile_sketch_report_invariants(spark, sf_dir):
-    """The histogram estimate replays exactly from a driver-side histogram;
-    the audited error is bounded by one bin width (interpolation within
-    the crossing bin cannot miss by more)."""
-    import math
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = {
-        r.q: r
-        for r in relational.events_quantile_sketch_report(spark, sf_dir).collect()
-    }
-    assert set(rows) == {0.5, 0.9, 0.99}
-    vals = [
-        r.value for r in load_table(spark, sf_dir, "events").select("value").collect()
-    ]
-    from collections import Counter
-
-    hist: Counter = Counter()
-    for v in vals:
-        hist[min(math.floor(v / relational.QSK_BIN_WIDTH), relational.QSK_MAX_BIN)] += 1
-    n = len(vals)
-    for q, r in rows.items():
-        cum = 0
-        for b in sorted(hist):
-            prev = cum
-            cum += hist[b]
-            if cum >= q * n and prev < q * n:
-                est = float(b) * relational.QSK_BIN_WIDTH + relational.QSK_BIN_WIDTH * (
-                    (q * float(n) - float(prev)) / float(hist[b])
-                )
-                break
-        assert r.estimate == est
-        assert r.abs_err <= relational.QSK_BIN_WIDTH  # one-bin resolution bound
-        assert r.abs_err == abs(r.estimate - r.exact)
-        assert r.rel_err == r.abs_err / r.exact
 
 
 def test_dp_sensitivity_replays_exactly(spark, sf_dir):
@@ -3008,35 +2922,12 @@ def test_kanon_sweep_constants_in_sync():
     assert sql.count("class_size < 5") == 3
 
 
-def test_ks_constants_in_sync():
-    from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    assert (relational.KS_TYPE_A, relational.KS_TYPE_B) == ("view", "click")
-    assert relational.KS_COEFF_05 == 1.358
-    sql = oracles.ORACLE_SQL["events_ks_test"]
-    assert "IN ('view', 'click')" in sql and sql.count("CAST(1.358 AS DOUBLE)") == 2
-
-
-def test_kmv_constants_in_sync():
-    from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    assert relational.KMV_K == 64
-    assert relational.KMV_DOMAIN == float(1 << 60)
-    sql = oracles.ORACLE_SQL["events_kmv_overlap"]
-    assert "rn <= 64" in sql and sql.count("CAST(63.0 AS DOUBLE)") == 2
-    assert "1152921504606846976" in sql  # 2^60
-
-
 def test_r9_constants_in_sync_with_oracles():
     """Round-9 tuning constants pinned to their oracle literals."""
     from cl_tagger_batch_processing_spark import oracles
     from cl_tagger_batch_processing_spark.operators import relational, similarity
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
-    mw = oracles.ORACLE_SQL["events_mann_whitney"]
-    assert relational.MW_Z_05 == 1.96 and "CAST(1.96 AS DOUBLE)" in mw
     bf = oracles.ORACLE_SQL["orders_benford_test"]
     assert relational.BENFORD_CHI2_CRIT_05 == 15.507
     assert "CAST(15.507 AS DOUBLE)" in bf
@@ -3055,10 +2946,8 @@ def test_r9_constants_in_sync_with_oracles():
     kn = oracles.ORACLE_SQL["text_kneser_ney_bigram"]
     assert (text_ops.KN_DISCOUNT_NUM, text_ops.KN_DISCOUNT_DEN) == (3, 4)
     assert kn.count("CAST(3 AS DOUBLE) / CAST(4 AS DOUBLE)") == 2
-    auc = oracles.ORACLE_SQL["events_auc_report"]
     assert relational.AUC_LABEL_MIN_PURCHASES == 10
-    assert ">= 10" in auc
-    # the same constant gates events_ab_lift's conversion
+    # the constant gates events_ab_lift's conversion
     assert ">= 10" in oracles.ORACLE_SQL["events_ab_lift"]
     pt = oracles.ORACLE_SQL["events_permutation_test"]
     assert relational.PERM_B == 64 and "generate_series(0, 63)" in pt
@@ -3161,41 +3050,6 @@ def _duck_rows(sf_dir, sql):
         con.close()
 
 
-def test_changepoint_matches_bruteforce(spark, sf_dir):
-    """Brute-force every split with plain float means/between-group SS —
-    no cumulative windows, no exact-integer numerator trick — and demand
-    the same argmax day and (to float tolerance) the same reduction."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_changepoint_detection"](spark, sf_dir).collect()[0]
-    daily = _duck_rows(
-        sf_dir,
-        """SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c,
-                  SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS s
-           FROM '{sf}/events.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    n = sum(c for _, c, _ in daily)
-    stot = sum(s for _, _, s in daily)
-    best = None
-    nl = sl = 0
-    for day, c, s in daily:
-        nl += c
-        sl += s
-        nr = n - nl
-        if nr == 0:
-            break
-        ml, mr = sl / nl, (stot - sl) / nr
-        b = nl * nr / n * (ml - mr) ** 2  # between-group SS, cents²
-        if best is None or b > best[1] + 1e-9:
-            best = (day, b, nl, nr, ml, mr)
-    day, b, nl, nr, ml, mr = best
-    assert row.split_day == day
-    assert row.n_left == nl and row.n_right == nr
-    assert abs(row.sse_reduction - b / 10000.0) < 1e-3
-    assert abs(row.mean_left - ml / 100.0) < 1e-6
-    assert abs(row.mean_right - mr / 100.0) < 1e-6
-
-
 def test_er_clusters_match_union_find(spark, sf_dir):
     """Textbook ER: Python blocking dict + O(mn) Levenshtein DP +
     union-find transitive closure — no SQL, no recursive CTE, no pointer
@@ -3295,50 +3149,6 @@ def test_winnowing_matches_textbook(spark, sf_dir):
     assert got == expected
 
 
-def test_kmv_matches_sequential_sketch(spark, sf_dir):
-    """Sequential KMV: per-type sorted 60-bit minima, set-union merge,
-    θ = kth smallest, (k−1)·D/θ — plain Python sets and sorts."""
-    import hashlib
-
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        KMV_DOMAIN,
-        KMV_K,
-    )
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    pairs_seen = _duck_rows(
-        sf_dir,
-        "SELECT DISTINCT event_type, user_id FROM '{sf}/events.parquet'",
-    )
-    users = {}
-    for et, uid in pairs_seen:
-        users.setdefault(et, set()).add(uid)
-
-    def h60(uid):
-        return int(
-            hashlib.md5(f"kmv:{uid}".encode()).hexdigest()[:15], 16
-        )
-
-    sketch = {et: sorted(h60(u) for u in us)[:KMV_K] for et, us in users.items()}
-    for r in QUERIES["events_kmv_overlap"](spark, sf_dir).collect():
-        sa, sb = set(sketch[r.ta]), set(sketch[r.tb])
-        merged = sorted(sa | sb)[:KMV_K]
-        k_used = len(merged)
-        theta = merged[-1]
-        est_union = (
-            float(k_used)
-            if k_used < KMV_K
-            else float(KMV_K - 1) * KMV_DOMAIN / float(theta)
-        )
-        n_both = sum(1 for h in merged if h in sa and h in sb)
-        jac = n_both / k_used
-        assert r.exact_a == len(users[r.ta]) and r.exact_b == len(users[r.tb])
-        assert r.exact_intersection == len(users[r.ta] & users[r.tb])
-        assert abs(r.est_union - est_union) < 1e-3
-        assert abs(r.est_jaccard - jac) < 1e-6
-        assert abs(r.est_intersection - jac * est_union) < 1e-3
-
-
 def test_bpe_matches_sequential_trainer(spark, sf_dir):
     """Textbook sequential BPE (Sennrich et al.): Python dict vocab,
     per-round pair count with overlap, left-to-right greedy merge scan —
@@ -3392,62 +3202,6 @@ def test_bpe_matches_sequential_trainer(spark, sf_dir):
         .collect()
     ]
     assert got == expected
-
-
-def test_ks_matches_bruteforce(spark, sf_dir):
-    """Brute-force KS: sorted samples, ECDF difference at every pooled
-    support point via plain float division — no cumulative windows, no
-    integer cross-difference trick."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_ks_test"](spark, sf_dir).collect()[0]
-    vals = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet'
-           WHERE event_type IN ('view', 'click')""",
-    )
-    a = sorted(v for t, v in vals if t == "view")
-    b = sorted(v for t, v in vals if t == "click")
-    na, nb = len(a), len(b)
-    import bisect
-
-    best_d, best_v = -1.0, None
-    for v in sorted(set(a) | set(b)):
-        d = abs(
-            bisect.bisect_right(a, v) / na - bisect.bisect_right(b, v) / nb
-        )
-        if d > best_d + 1e-15:
-            best_d, best_v = d, v
-    assert row.n_a == na and row.n_b == nb
-    assert abs(row.ks_d - best_d) < 1e-9
-    assert row.d_at_value == best_v / 100.0
-    bound = 1.358 * ((na + nb) / (na * nb)) ** 0.5
-    assert row.reject_equal_05 == (best_d > bound)
-
-
-def test_auc_matches_pair_counting(spark, sf_dir):
-    """AUC by its probabilistic DEFINITION — O(n²) pair counting
-    (P(score⁺ > score⁻) + ½·P(tie)) — against the engine's tie-aware
-    rank-sum formula."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_auc_report"](spark, sf_dir).collect()[0]
-    users = _duck_rows(
-        sf_dir,
-        """SELECT CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                       >= 10 AS BIGINT),
-                  SUM(CASE WHEN event_type IN ('view', 'click') THEN 1 ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY user_id""",
-    )
-    pos = [s for l, s in users if l == 1]
-    neg = [s for l, s in users if l == 0]
-    assert pos and neg, "fixture must have both labels for this check"
-    assert row.auc is not None  # non-vacuity: the gate checks a real AUC
-    wins = sum(1 for p in pos for q in neg if p > q)
-    ties = sum(1 for p in pos for q in neg if p == q)
-    auc = (wins + 0.5 * ties) / (len(pos) * len(neg))
-    assert abs(row.auc - auc) < 1e-9
 
 
 def test_gopher_flags_fire_on_synthetic_pathologies(spark):
@@ -3707,46 +3461,6 @@ def test_modularity_matches_textbook_formula(spark, sf_dir):
 # green at sf0.01/sf0.1 too (the r9 rule), not just the sf0.001 default.
 
 
-def test_mann_whitney_matches_pair_counting(spark, sf_dir):
-    """U from its DEFINITION: wins + half-ties over the two samples (via
-    per-value counters and a prefix sum — never the tie-averaged-rank
-    identity the production query and oracle both use)."""
-    from collections import Counter
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_mann_whitney"](spark, sf_dir).collect()[0]
-    pairs = _duck_rows(
-        sf_dir,
-        """SELECT event_type,
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet'
-           WHERE event_type IN ('view', 'click')""",
-    )
-    ca = Counter(v for t, v in pairs if t == "view")
-    cb = Counter(v for t, v in pairs if t == "click")
-    na, nb = sum(ca.values()), sum(cb.values())
-    u = 0.0
-    b_less = 0
-    for v in sorted(set(ca) | set(cb)):
-        u += ca.get(v, 0) * (b_less + 0.5 * cb.get(v, 0))
-        b_less += cb.get(v, 0)
-    n = na + nb
-    ties = sum(
-        (ca.get(v, 0) + cb.get(v, 0)) ** 3 - (ca.get(v, 0) + cb.get(v, 0))
-        for v in set(ca) | set(cb)
-    )
-    mu = na * nb / 2.0
-    sigma = ((na * nb / 12.0) * ((n + 1) - ties / (n * (n - 1)))) ** 0.5
-    assert (row.n_a, row.n_b) == (na, nb)
-    assert row.u_a == pytest.approx(u, abs=1e-6)
-    assert row.mu_u == pytest.approx(mu, abs=1e-6)
-    assert row.sigma_u == pytest.approx(sigma, rel=1e-9)
-    z = (u - mu) / sigma
-    assert row.z == pytest.approx(z, abs=1e-6)
-    assert row.reject_equal_05 == (abs(z) > 1.96)
-
-
 def test_permutation_test_matches_hashlib_replay(spark, sf_dir):
     """All 64 relabelings replayed with hashlib.md5 and plain float sums
     (no 9dp rail, no DECIMAL(38) widening, no explode/groupBy)."""
@@ -3897,41 +3611,6 @@ def test_benford_degenerate_zero_digit_fixture(spark, tmp_path):
     for digit, n_obs, n_expected, chi2_term, chi2, reject in out:
         assert n_obs == 0 and n_expected == 0.0
         assert chi2_term is None and chi2 is None and reject is None
-
-
-def test_did_matches_python_replay(spark, sf_dir):
-    """The 2x2 cell means and the DiD recomputed from raw (user, micros,
-    cents) rows with Python integer midpoint arithmetic and float means."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_did_estimator"](spark, sf_dir).collect()[0]
-    rows = _duck_rows(
-        sf_dir,
-        """SELECT user_id, epoch_us(ts),
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet'""",
-    )
-    lo = min(us for _, us, _ in rows)
-    hi = max(us for _, us, _ in rows)
-    cut = lo + (hi - lo) // 2
-    cells: dict[tuple, list] = {}
-    for uid, us, cv in rows:
-        key = ("control" if uid % 2 == 0 else "treatment",
-               "pre" if us <= cut else "post")
-        cells.setdefault(key, [0, 0])
-        cells[key][0] += 1
-        cells[key][1] += cv
-    m = {k: s / n / 100.0 for k, (n, s) in cells.items()}
-    assert row.n_control_pre == cells[("control", "pre")][0]
-    assert row.n_control_post == cells[("control", "post")][0]
-    assert row.n_treatment_pre == cells[("treatment", "pre")][0]
-    assert row.n_treatment_post == cells[("treatment", "post")][0]
-    assert row.mean_control_pre == pytest.approx(m[("control", "pre")], abs=1e-8)
-    assert row.mean_treatment_post == pytest.approx(m[("treatment", "post")], abs=1e-8)
-    did = (m[("treatment", "post")] - m[("treatment", "pre")]) - (
-        m[("control", "post")] - m[("control", "pre")]
-    )
-    assert row.did_estimate == pytest.approx(did, abs=1e-8)
 
 
 def test_laspeyres_matches_python_replay(spark, sf_dir):
@@ -4345,40 +4024,6 @@ def test_conformal_keeps_one_row_contract_on_degenerate_splits(spark, tmp_path):
     assert o[3] == pytest.approx(r.q_hat)
 
 
-def test_ks_and_mw_reject_on_synthetic_shifted_distributions(spark, tmp_path):
-    """reject_equal_05 is identically False on the organic fixture (view
-    and click values draw from the same generator at every scale — r10
-    ALL_FALSE vacuity triage), so the TRUE path of BOTH nonparametric
-    tests is exercised here on a grossly shifted synthetic fixture,
-    through the full production queries (the conformal tmp_path
-    precedent): 50 views at 1..50 cents-dollars vs 50 clicks at
-    101..150 gives KS D = 1 >> 0.272 bound and |z| ≈ 8.6 >> 1.96."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "shifted"
-    d.mkdir()
-    rows = [(i, "2024-01-01 00:00:00", 1, "view", float(i), "{}") for i in range(1, 51)]
-    rows += [
-        (100 + i, "2024-01-01 00:00:00", 1, "click", float(100 + i), "{}")
-        for i in range(1, 51)
-    ]
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-    ks = QUERIES["events_ks_test"](spark, str(d)).collect()[0]
-    assert ks.reject_equal_05 is True
-    assert ks.ks_d == pytest.approx(1.0)
-    mw = QUERIES["events_mann_whitney"](spark, str(d)).collect()[0]
-    assert mw.reject_equal_05 is True
-    assert abs(mw.z) > 1.96
-
-
 def test_r11_constants_in_sync():
     """Round-11 tuning constants pinned to their oracle literals."""
     from cl_tagger_batch_processing_spark import oracles
@@ -4414,10 +4059,6 @@ def test_r11_constants_in_sync():
     assert relational.RR_COIN_SALT == "rr-coin" and "md5('rr-coin:'" in rr
     assert relational.RR_VALUE_SALT == "rr-value" and "md5('rr-value:'" in rr
     assert relational.AUC_LABEL_MIN_PURCHASES == 10 and ">= 10" in rr
-    ab = oracles.ORACLE_SQL["events_absorption_probability"]
-    assert relational.MARKOV_ABSORB_SUCCESS == "purchase" and "'purchase'" in ab
-    assert relational.MARKOV_ABSORB_FAIL == "error" and "'error'" in ab
-    assert relational.MARKOV_ABSORB_HORIZON == 8 and "JOIN h8 hf" in ab
     bd = oracles.ORACLE_SQL["text_burrows_delta"]
     assert text_ops.BURROWS_TOP_WORDS == 20 and "LIMIT 20" in bd
     pw = oracles.ORACLE_SQL["events_power_analysis"]
@@ -4745,45 +4386,6 @@ def test_randomized_response_matches_hashlib_replay(spark, sf_dir):
     assert r.within_contract == (abs(p_hat - p_true) <= bound)
 
 
-def test_empirical_bayes_matches_decimal_replay(spark, sf_dir):
-    """Prior fit and every shrunk rate replayed from raw per-user counts
-    with Decimal ROUND_HALF_UP moments (never banker's round) and plain
-    float method-of-moments algebra; also pins the shrinkage DIRECTION
-    (every shrunk rate sits strictly between raw and the prior mean)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {r.user_id: r for r in QUERIES["events_empirical_bayes"](spark, sf_dir).collect()}
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, COUNT(*),
-                  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    )
-    q9 = lambda x: Decimal(x).quantize(  # noqa: E731
-        Decimal("1e-9"), rounding=ROUND_HALF_UP
-    )
-    n = len(raw)
-    s1 = sum(q9(p / e) for _, e, p in raw)
-    s2 = sum(q9((p / e) * (p / e)) for _, e, p in raw)
-    m = float(s1) / n
-    v = (float(s2) - n * m * m) / (n - 1.0)
-    ab = m * (1.0 - m) / v - 1.0
-    assert v > 0 and ab > 0, "fixture must fit a proper prior"
-    alpha, beta = m * ab, (1.0 - m) * ab
-    assert len(rows) == n
-    for uid, e, p in raw:
-        r = rows[uid]
-        assert (r.n_events, r.n_purchases) == (e, p)
-        assert r.alpha == pytest.approx(alpha, rel=1e-9)
-        assert r.beta == pytest.approx(beta, rel=1e-9)
-        shrunk = (p + alpha) / (e + alpha + beta)
-        assert r.shrunk_rate == pytest.approx(shrunk, rel=1e-9)
-        lo, hi = sorted((p / e, m))
-        assert lo - 1e-9 <= r.shrunk_rate <= hi + 1e-9
-
-
 def test_granger_matches_numpy_lstsq_replay(spark, sf_dir):
     """Both regressions re-solved with numpy.linalg.lstsq (QR — a
     genuinely different algorithm from the production Cramer closed
@@ -5038,295 +4640,6 @@ def test_burrows_delta_matches_python_replay(spark, sf_dir):
         assert r.delta >= 0
 
 
-def test_absorption_matches_numpy_replay(spark, sf_dir):
-    """The 8-step hitting probabilities re-derived with a plain numpy
-    matrix power iteration (no 9dp rail — a different arithmetic path)
-    plus the structural invariants: clamped absorbing states, p in
-    [0, 1], and horizon monotonicity."""
-    import numpy as np
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    out = {r.state: r for r in QUERIES["events_absorption_probability"](spark, sf_dir).collect()}
-    raw = _duck_rows(
-        sf_dir,
-        """WITH pairs AS (
-             SELECT event_type AS f,
-                    lead(event_type) OVER (PARTITION BY user_id
-                                           ORDER BY ts ASC, event_id ASC) AS t
-             FROM '{sf}/events.parquet')
-           SELECT f, t, COUNT(*) FROM pairs WHERE t IS NOT NULL GROUP BY 1, 2""",
-    )
-    states = sorted({f for f, _, _ in raw} | {t for _, t, _ in raw})
-    idx = {s: i for i, s in enumerate(states)}
-    k = len(states)
-    T = np.zeros((k, k))
-    tot = {s: 0 for s in states}
-    for f, _, c in raw:
-        tot[f] += c
-    for f, t, c in raw:
-        T[idx[f], idx[t]] = c / tot[f]
-    # impose absorption
-    for s in ("purchase", "error"):
-        T[idx[s], :] = 0.0
-        T[idx[s], idx[s]] = 1.0
-    h = np.zeros(k)
-    h[idx["purchase"]] = 1.0
-    prev = h.copy()
-    for _ in range(8):
-        prev = h.copy()
-        h = T @ h
-        h[idx["purchase"]], h[idx["error"]] = 1.0, 0.0
-    for s in states:
-        r = out[s]
-        assert r.n_out_transitions == tot.get(s, 0)
-        assert r.is_absorbing == (s in ("purchase", "error"))
-        assert 0.0 <= r.p_hit_success <= 1.0
-        assert r.p_hit_success == pytest.approx(h[idx[s]], abs=1e-6)
-        # hitting probabilities are monotone in the horizon
-        assert h[idx[s]] >= prev[idx[s]] - 1e-12
-
-
-def test_spearman_matches_scipy_free_replay(spark, sf_dir):
-    """rho recomputed from raw per-user counts with textbook tie-averaged
-    ranks (sorted lists, no windows) and plain float Pearson; also
-    cross-checked against Pearson-on-ranks computed with Fractions."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_spearman_corr"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT COUNT(*),
-                  SUM(CASE WHEN event_type = 'purchase'
-                           THEN CAST(CAST(value AS DECIMAL(12,2)) * 100
-                                     AS BIGINT) ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY user_id""",
-    )
-
-    def tie_ranks(vals):
-        order = sorted(vals)
-        first = {}
-        for i, v in enumerate(order):
-            first.setdefault(v, i)
-        cnt = {}
-        for v in order:
-            cnt[v] = cnt.get(v, 0) + 1
-        return {v: Fraction(2 * first[v] + cnt[v] + 1, 2) for v in cnt}
-
-    xs = [x for x, _ in raw]
-    ys = [y for _, y in raw]
-    rkx, rky = tie_ranks(xs), tie_ranks(ys)
-    n = len(raw)
-    assert r.n == n
-    rx = [rkx[x] for x in xs]
-    ry = [rky[y] for y in ys]
-    sx, sy = sum(rx), sum(ry)
-    sxx = sum(v * v for v in rx)
-    syy = sum(v * v for v in ry)
-    sxy = sum(a * b for a, b in zip(rx, ry))
-    vx, vy = n * sxx - sx * sx, n * syy - sy * sy
-    if vx > 0 and vy > 0:
-        rho = float(n * sxy - sx * sy) / (float(vx) ** 0.5 * float(vy) ** 0.5)
-        assert r.spearman_rho == pytest.approx(rho, rel=1e-9)
-        assert -1.0 <= r.spearman_rho <= 1.0
-    else:
-        assert r.spearman_rho is None
-
-
-def test_psi_drift_matches_textbook_replay(spark, sf_dir):
-    """PSI recomputed with plain Python dict counting and math.log — no
-    spine joins, no decimal rail — over an independent duckdb pull of
-    (event_type, value, weekend flag)."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.event_type: r
-        for r in QUERIES["events_psi_drift"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(value AS DOUBLE),
-                  dayofweek(ts) IN (0, 6)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    by_type: dict = {}
-    for et, v, wk in raw:
-        by_type.setdefault(et, []).append((v, wk))
-    assert set(rows) == set(by_type)
-    for et, vals in by_type.items():
-        ref = [v for v, wk in vals if not wk]
-        act = [v for v, wk in vals if wk]
-        mn, mx = (min(ref), max(ref)) if ref else (None, None)
-
-        def bucket(v):
-            if ref and mx > mn:
-                return max(0, min(9, math.floor((v - mn) * 10.0 / (mx - mn))))
-            return 0
-
-        cr = [0] * 10
-        ca = [0] * 10
-        for v in ref:
-            cr[bucket(v)] += 1
-        for v in act:
-            ca[bucket(v)] += 1
-        psi = 0.0
-        for b in range(10):
-            p = (cr[b] + 1.0) / (len(ref) + 10.0)
-            q = (ca[b] + 1.0) / (len(act) + 10.0)
-            psi += (p - q) * math.log(p / q)
-        r = rows[et]
-        assert r.n_ref == len(ref) and r.n_act == len(act)
-        assert r.psi == pytest.approx(psi, abs=2e-7)
-        assert r.psi >= 0.0  # PSI is a symmetrized-KL-style sum, ≥ 0
-
-
-def test_cramers_v_matches_textbook_replay(spark, sf_dir):
-    """Contingency table rebuilt with dict counting; chi2/V with plain
-    floats over the FULL r×c spine (zero cells included)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_cramers_v"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, dayofweek(ts) FROM '{sf}/events.parquet'""",
-    )
-    obs: dict = {}
-    for et, dow in raw:
-        obs[(et, dow)] = obs.get((et, dow), 0) + 1
-    rts: dict = {}
-    cts: dict = {}
-    for (et, dow), c in obs.items():
-        rts[et] = rts.get(et, 0) + c
-        cts[dow] = cts.get(dow, 0) + c
-    n = sum(rts.values())
-    chi2 = 0.0
-    for et in rts:
-        for dow in cts:
-            e = rts[et] * cts[dow] / n
-            o = obs.get((et, dow), 0)
-            chi2 += (o - e) ** 2 / e
-    assert r.n == n
-    assert r.chi2 == pytest.approx(chi2, rel=1e-8)
-    assert r.dof == (len(rts) - 1) * (len(cts) - 1)
-    mind = min(len(rts) - 1, len(cts) - 1)
-    if mind >= 1 and n > 0:
-        v = (chi2 / (n * mind)) ** 0.5
-        assert r.cramers_v == pytest.approx(v, rel=1e-8)
-        assert 0.0 <= r.cramers_v <= 1.0 + 1e-9
-    else:
-        assert r.cramers_v is None
-
-
-def test_kruskal_wallis_matches_textbook_replay(spark, sf_dir):
-    """H recomputed with sorted-list tie-averaged ranks (Fractions — no
-    windows, no doubled-rank trick) and the textbook
-    H = 12/(N(N+1))·ΣR_j²/n_j − 3(N+1), tie-corrected."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_kruskal_wallis"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(value AS DOUBLE)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    vals = [v for _, v in raw]
-    order = sorted(vals)
-    first: dict = {}
-    cnt: dict = {}
-    for i, v in enumerate(order):
-        first.setdefault(v, i)
-        cnt[v] = cnt.get(v, 0) + 1
-    rank = {v: Fraction(2 * first[v] + cnt[v] + 1, 2) for v in cnt}
-    groups: dict = {}
-    for et, v in raw:
-        groups.setdefault(et, []).append(v)
-    n = len(vals)
-    sq = sum(
-        float(sum(rank[v] for v in g)) ** 2 / len(g) for g in groups.values()
-    )
-    h = 12.0 / (n * (n + 1.0)) * sq - 3.0 * (n + 1.0)
-    corr = 1.0 - sum(t**3 - t for t in cnt.values()) / (n**3 - n)
-    assert r.n == n and r.k == len(groups) and r.dof == len(groups) - 1
-    assert r.h_stat == pytest.approx(h, rel=1e-7, abs=1e-7)
-    if corr > 0:
-        assert r.h_corrected == pytest.approx(h / corr, rel=1e-7, abs=1e-7)
-    else:
-        assert r.h_corrected is None
-
-
-def test_jackknife_ratio_matches_textbook_replay(spark, sf_dir):
-    """Replicates recomputed the naive way — an explicit leave-one-out
-    loop over per-user rows with Fractions for the ratio, then the
-    definitional (n−1)/n·Σ(r_i − r̄)² variance (no sum-of-squares
-    identity, no decimal rail)."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_jackknife_ratio"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT SUM(CASE WHEN event_type = 'purchase'
-                           THEN CAST(CAST(value AS DECIMAL(12,2)) * 100
-                                     AS BIGINT) ELSE 0 END),
-                  COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY user_id""",
-    )
-    s = sum(y for y, _ in raw)
-    ctot = sum(c for _, c in raw)
-    reps = [
-        float(Fraction(s - y, ctot - c)) for y, c in raw if ctot - c > 0
-    ]
-    assert r.n_users == len(raw)
-    assert r.n_reps == len(reps)
-    assert r.ratio_cents_per_event == pytest.approx(s / ctot, rel=1e-12)
-    if len(reps) >= 2:
-        rbar = sum(reps) / len(reps)
-        var = (len(reps) - 1) / len(reps) * sum((x - rbar) ** 2 for x in reps)
-        assert r.jackknife_se == pytest.approx(var**0.5, rel=1e-6, abs=1e-6)
-        assert r.ci_lo <= r.ratio_cents_per_event <= r.ci_hi
-    else:
-        assert r.jackknife_se is None
-
-
-def test_runs_test_matches_textbook_replay(spark, sf_dir):
-    """Runs counted by a plain Python scan over the day-ordered sign
-    list; z from the textbook Wald–Wolfowitz moments."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_runs_test"](spark, sf_dir).collect()[0]
-    daily = _duck_rows(
-        sf_dir,
-        """SELECT CAST(ts AS DATE), COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    n_days = len(daily)
-    total = sum(c for _, c in daily)
-    signs = [c * n_days > total for _, c in daily if c * n_days != total]
-    runs = 1 + sum(1 for a, b in zip(signs, signs[1:]) if a != b)
-    n1 = sum(signs)
-    n2 = len(signs) - n1
-    assert r.n_days == n_days
-    assert r.n_above == n1 and r.n_below == n2
-    assert r.runs == runs
-    if n1 > 0 and n2 > 0:
-        mu = 2.0 * n1 * n2 / (n1 + n2) + 1.0
-        sig2 = (
-            2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-            / ((n1 + n2) ** 2 * (n1 + n2 - 1.0))
-        )
-        if sig2 > 0:
-            assert r.z == pytest.approx((runs - mu) / sig2**0.5, rel=1e-9)
-    else:
-        assert r.z is None
-
-
 def test_good_turing_matches_textbook_replay(spark, sf_dir):
     """Frequency-of-frequencies rebuilt with Counter over plain
     space-split tokens; Chao1/p₀ with plain floats. Also pins the
@@ -5432,172 +4745,19 @@ def test_js_divergence_matches_textbook_replay(spark, sf_dir):
         assert r.n_shared_tokens == len(set(p) & set(q))
 
 
-def test_bh_fdr_matches_textbook_replay(spark, sf_dir):
-    """Welch z recomputed with plain float mean/variance; p via
-    math.erfc (the REAL normal tail — pins the Zelen-Severo polynomial
-    to its documented 7.5e-8 accuracy); BH step-up replayed with a
-    Python sort. Also pins the BH monotonicity invariant q ≥ p."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.event_type: r for r in QUERIES["events_bh_fdr"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT),
-                  dayofweek(ts) IN (0, 6)
-           FROM '{sf}/events.parquet'""",
-    )
-    by_type: dict = {}
-    for et, cents, wk in raw:
-        by_type.setdefault(et, ([], []))[0 if wk else 1].append(cents)
-    ps = {}
-    for et, (w, d) in by_type.items():
-        r = rows[et]
-        assert (r.n_weekend, r.n_weekday) == (len(w), len(d))
-        if len(w) >= 2 and len(d) >= 2:
-            mw, md = sum(w) / len(w), sum(d) / len(d)
-            vw = sum((x - mw) ** 2 for x in w) / (len(w) - 1)
-            vd = sum((x - md) ** 2 for x in d) / (len(d) - 1)
-            se2 = vw / len(w) + vd / len(d)
-            if se2 > 0:
-                z = (mw - md) / se2**0.5
-                p = math.erfc(abs(z) / 2**0.5)
-                assert r.z == pytest.approx(z, rel=1e-6, abs=1e-9)
-                assert r.p == pytest.approx(p, abs=2e-7)
-                ps[et] = r.p  # engine p (9dp) for the exact BH replay
-                continue
-        assert r.z is None and r.p is None and r.q is None
-    order = sorted(ps, key=lambda et: (ps[et], et))
-    m = len(order)
-    qs = {}
-    running = 1.0
-    for pos in range(m - 1, -1, -1):
-        et = order[pos]
-        running = min(running, ps[et] * m / (pos + 1))
-        qs[et] = running
-    for et, q in qs.items():
-        assert rows[et].q == pytest.approx(q, abs=2e-9)
-        assert rows[et].q >= rows[et].p - 1e-9  # BH never shrinks p
-        assert rows[et].reject_fdr_05 == (rows[et].q <= 0.05)
-
-
-def test_bh_fdr_rejects_on_synthetic_weekend_shift(spark, tmp_path):
-    """reject_fdr_05 is identically False on the organic fixture (weekend
-    and weekday values draw from the same generator — ALL_FALSE vacuity
-    triage), so the TRUE path runs here on a synthetic fixture where ONE
-    type's weekend values are grossly shifted (weekday 1..50 vs weekend
-    1001..1050) while two null types stay identical across the split —
-    BH must reject exactly the shifted family member."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "wkshift"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # 2024-01-01 is a Monday, 2024-01-06 a Saturday.
-    for et, wk_base in [("shifted", 1000.0), ("null_a", 0.0), ("null_b", 0.0)]:
-        for i in range(1, 51):
-            eid += 1
-            rows.append((eid, "2024-01-01 00:00:00", 1, et, float(i), "{}"))
-            eid += 1
-            rows.append(
-                (eid, "2024-01-06 00:00:00", 1, et, wk_base + float(i), "{}")
-            )
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-    out = {r.event_type: r for r in QUERIES["events_bh_fdr"](spark, str(d)).collect()}
-    assert out["shifted"].reject_fdr_05 is True
-    assert out["shifted"].q <= 0.05 and out["shifted"].p < 1e-6
-    assert out["null_a"].reject_fdr_05 is False
-    assert out["null_b"].reject_fdr_05 is False
-
-
 def test_r11_continuation_constants_in_sync():
     """Continuation-batch shared literals pinned to their oracle text —
     a drift between the engine constants and the SQL mirrors would
     surface as a subtle hash mismatch; pin it structurally instead."""
     from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
-    bh = oracles.ORACLE_SQL["events_bh_fdr"]
-    assert relational._ZS_K == 0.2316419 and "0.2316419" in bh
-    assert relational._SQRT_2PI == 2.5066282746310002
-    assert "2.5066282746310002" in bh
-    for b in relational._ZS_B:
-        assert repr(abs(b)).rstrip("0") in bh or f"{abs(b):.9f}" in bh, b
     js = oracles.ORACLE_SQL["text_js_divergence"]
     assert text_ops._LN2 == 0.6931471805599453
     assert js.count("0.6931471805599453") == 5  # 2×(sp,sq) + the norm divisor
     # kappa gates: the engine thresholds must appear in the oracle
     kp = oracles.ORACLE_SQL["text_quality_kappa"]
     assert ">= 250" in kp and ">= 45" in kp
-    # PSI/JSD final rounding and rail scales mirrored
-    assert ", 7) AS psi" in oracles.ORACLE_SQL["events_psi_drift"]
-    assert "DECIMAL(38,6)" in oracles.ORACLE_SQL["events_kruskal_wallis"]
-    assert "DECIMAL(38,15)" in oracles.ORACLE_SQL["events_jackknife_ratio"]
-
-
-def test_null_values_and_degenerate_arms_handled(spark, tmp_path):
-    """Second-review pins: NULL event values must DROP from the
-    PSI/Kruskal-Wallis distributions (greatest/least and window
-    NULL-ordering would otherwise corrupt or engine-split them), and a
-    degenerate BH arm (one weekend row) must keep NULL p/q without
-    inflating the family size m for the real tests."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "nulls"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # 40 weekday + 40 weekend clean rows for two types, plus NULL values
-    # sprinkled on both, plus a 'lone' type with a single weekend row.
-    for et in ["alpha", "beta"]:
-        for i in range(1, 41):
-            eid += 1
-            rows.append((eid, "2024-01-01 00:00:00", 1, et, float(i), "{}"))
-            eid += 1
-            rows.append((eid, "2024-01-06 00:00:00", 1, et, float(i + 3), "{}"))
-        for _ in range(5):
-            eid += 1
-            rows.append((eid, "2024-01-01 00:00:00", 1, et, None, "{}"))
-    eid += 1
-    rows.append((eid, "2024-01-06 00:00:00", 1, "lone", 7.0, "{}"))
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-    psi = {r.event_type: r for r in QUERIES["events_psi_drift"](spark, str(d)).collect()}
-    assert psi["alpha"].n_ref == 40 and psi["alpha"].n_act == 40  # NULLs dropped
-    kw = QUERIES["events_kruskal_wallis"](spark, str(d)).collect()[0]
-    assert kw.n == 161  # 2×80 clean + 1 lone; the 10 NULL rows dropped
-    bh = {r.event_type: r for r in QUERIES["events_bh_fdr"](spark, str(d)).collect()}
-    lone = bh["lone"]
-    assert lone.z is None and lone.p is None and lone.q is None
-    assert lone.reject_fdr_05 is None
-    # family size must be 2 (alpha, beta) — a p=1.0 degenerate entry
-    # would have inflated m to 3 and shifted both real q values. BH with
-    # m=2 and p1 ≤ p2: q(rank2) = p2, q(rank1) = min(2·p1, p2).
-    assert bh["alpha"].p is not None and bh["beta"].p is not None
-    p1, p2 = sorted([bh["alpha"].p, bh["beta"].p])
-    qs = sorted([bh["alpha"].q, bh["beta"].q])
-    assert qs[1] == pytest.approx(min(1.0, p2), abs=1e-9)
-    assert qs[0] == pytest.approx(min(1.0, 2 * p1, p2), abs=1e-9)
 
 
 def test_date_operators_pin_utc_session_timezone():
@@ -5637,44 +4797,6 @@ def test_date_operators_pin_utc_session_timezone():
 # the oracle (blanket parity could not catch a mirrored mistake) ----------
 
 
-def test_markov_entropy_rate_matches_textbook_replay(spark, sf_dir):
-    """Transitions rebuilt with a plain Python loop over user-ordered
-    events; conditional entropies with math.log2 — no windows, no rail."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.from_type: r
-        for r in QUERIES["events_markov_entropy_rate"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, ts, event_id, event_type
-           FROM '{sf}/events.parquet' ORDER BY user_id, ts, event_id""",
-    )
-    trans: dict = {}
-    for (u1, *_, t1), (u2, *_, t2) in zip(raw, raw[1:]):
-        if u1 == u2:
-            trans.setdefault(t1, {}).setdefault(t2, 0)
-            trans[t1][t2] += 1
-    total = sum(sum(d.values()) for d in trans.values())
-    assert set(rows) == set(trans)
-    for ft, outs in trans.items():
-        n_out = sum(outs.values())
-        h = -sum(
-            (c / n_out) * math.log2(c / n_out) for c in outs.values()
-        )
-        r = rows[ft]
-        assert r.n_out == n_out
-        assert r.pi == pytest.approx(n_out / total, abs=1e-9)
-        assert r.entropy_bits == pytest.approx(h, abs=2e-7)
-        assert r.contribution_bits == pytest.approx(
-            (n_out / total) * h, abs=2e-7
-        )
-        assert 0.0 <= r.entropy_bits <= math.log2(max(len(outs), 2)) + 1e-9
-
-
 def test_max_drawdown_matches_textbook_replay(spark, sf_dir):
     """Daily series rebuilt in Python with exact Decimal revenue, the
     running max / trough / peak found by a plain scan."""
@@ -5703,74 +4825,6 @@ def test_max_drawdown_matches_textbook_replay(spark, sf_dir):
     assert r.max_drawdown == pytest.approx(float(dd), rel=1e-12)
     assert r.peak_cum == pytest.approx(float(peak_cum), rel=1e-12)
     assert r.trough_cum == pytest.approx(float(trough_cum), rel=1e-12)
-
-
-def test_ab_cuped_matches_textbook_replay(spark, sf_dir):
-    """θ from exact Python-int sufficient statistics, per-user adjusted
-    values and per-arm means/variances with plain floats. The CUPED
-    no-variance-added guarantee holds for the POOLED sample (θ is the
-    pooled OLS slope; a small arm's own variance can grow — observed
-    1.03 on the 7-user sf0.001 treatment arm), so the invariant is
-    checked pooled, not per arm."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.arm: r for r in QUERIES["events_ab_cuped"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, epoch_us(ts),
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet'""",
-    )
-    lo = min(t for _, t, _ in raw)
-    hi = max(t for _, t, _ in raw)
-    mid = lo + (hi - lo) // 2
-    per: dict = {}
-    for u, t, c in raw:
-        x, y = per.get(u, (0, 0))
-        if t <= mid:
-            x += c
-        else:
-            y += c
-        per[u] = (x, y)
-    n = len(per)
-    sx = sum(x for x, _ in per.values())
-    sy = sum(y for _, y in per.values())
-    sxy = sum(x * y for x, y in per.values())
-    sxx = sum(x * x for x, _ in per.values())
-    varx = n * sxx - sx * sx
-    theta = (n * sxy - sx * sy) / varx if varx > 0 else 0.0
-    xbar = sx / n
-    arms: dict = {}
-    for u, (x, y) in per.items():
-        arm = "control" if u % 2 == 0 else "treatment"
-        yd = y / 100.0
-        ya = (y - theta * (x - xbar)) / 100.0
-        arms.setdefault(arm, []).append((yd, ya))
-    assert set(rows) == set(arms)
-    for arm, vals in arms.items():
-        r = rows[arm]
-        na = len(vals)
-        syd = sum(v for v, _ in vals)
-        sya = sum(v for _, v in vals)
-        assert r.n_users == na
-        assert r.mean_metric == pytest.approx(syd / na, abs=2e-6)
-        assert r.mean_adjusted == pytest.approx(sya / na, abs=2e-6)
-        assert r.theta == pytest.approx(theta, abs=2e-9)
-        var_raw = na * sum(v * v for v, _ in vals) - syd * syd
-        var_adj = na * sum(v * v for _, v in vals) - sya * sya
-        if var_raw > 0:
-            assert r.variance_ratio == pytest.approx(
-                var_adj / var_raw, abs=5e-6
-            )
-    pooled = [v for vals in arms.values() for v in vals]
-    np_ = len(pooled)
-    syd = sum(v for v, _ in pooled)
-    sya = sum(v for _, v in pooled)
-    pv_raw = np_ * sum(v * v for v, _ in pooled) - syd * syd
-    pv_adj = np_ * sum(v * v for _, v in pooled) - sya * sya
-    assert pv_adj <= pv_raw + 1e-6 * max(pv_raw, 1.0)
 
 
 def test_burstiness_matches_textbook_replay(spark, sf_dir):
@@ -5909,55 +4963,6 @@ def test_seasonal_decompose_matches_textbook_replay(spark, sf_dir):
         assert r.revenue == pytest.approx(
             r.trend + r.seasonal + r.residual, abs=1e-6
         )
-
-
-def test_retention_curve_fit_matches_textbook_replay(spark, sf_dir):
-    """Retention triangle rebuilt with Python sets/dicts; power-law OLS
-    with plain floats over (ln day, ln rate)."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_retention_curve_fit"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        "SELECT user_id, CAST(ts AS DATE) FROM '{sf}/events.parquet'",
-    )
-    first: dict = {}
-    for u, d in raw:
-        if u not in first or d < first[u]:
-            first[u] = d
-    dmax = max(d for _, d in raw)
-    active = {(u, (d - first[u]).days) for u, d in raw if (d - first[u]).days >= 1}
-    retained: dict = {}
-    for _, dn in active:
-        retained[dn] = retained.get(dn, 0) + 1
-    sizes: dict = {}
-    for u, c in first.items():
-        sizes[c] = sizes.get(c, 0) + 1
-    pts = []
-    for dn, ret in retained.items():
-        elig = sum(s for c, s in sizes.items() if (dmax - c).days >= dn)
-        if ret > 0:
-            pts.append((math.log(dn), math.log(ret / elig)))
-    n = len(pts)
-    sx = sum(x for x, _ in pts)
-    sy = sum(y for _, y in pts)
-    sxy = sum(x * y for x, y in pts)
-    sxx = sum(x * x for x, _ in pts)
-    syy = sum(y * y for _, y in pts)
-    vx, vy = n * sxx - sx * sx, n * syy - sy * sy
-    cov = n * sxy - sx * sy
-    assert r.n_points == n
-    if vx > 0:
-        slope = cov / vx
-        assert r.slope == pytest.approx(slope, abs=2e-6)
-        assert r.intercept == pytest.approx((sy - slope * sx) / n, abs=2e-6)
-        if vy > 0:
-            assert r.r2 == pytest.approx(cov * cov / (vx * vy), abs=2e-6)
-            assert -1e-9 <= r.r2 <= 1.0 + 1e-9
-    else:
-        assert r.slope is None
 
 
 def _basket_pairs(sf_dir, min_support=2):
@@ -6135,48 +5140,6 @@ def test_hourly_seasonality_matches_textbook_replay(spark, sf_dir):
         assert r.share == pytest.approx(n / total, rel=1e-12)
 
 
-def test_daily_percentiles_matches_textbook_replay(spark, sf_dir):
-    """Per-(type, day) exact interpolated percentiles rebuilt with the
-    textbook index formula; drift re-derived with a Python lag."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        (r.event_type, str(r.day)): r
-        for r in QUERIES["events_daily_percentiles"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(ts AS DATE), CAST(value AS DOUBLE)
-           FROM '{sf}/events.parquet'""",
-    )
-    groups: dict = {}
-    for et, d, v in raw:
-        groups.setdefault((et, d), []).append(v)
-
-    def pctl(sorted_vals, q):
-        idx = q * (len(sorted_vals) - 1)
-        lo = int(idx)
-        frac = idx - lo
-        if lo + 1 < len(sorted_vals):
-            return sorted_vals[lo] + frac * (sorted_vals[lo + 1] - sorted_vals[lo])
-        return float(sorted_vals[lo])
-
-    assert set(rows) == {(et, str(d)) for et, d in groups}
-    p50s: dict = {}
-    for (et, d), vals in sorted(groups.items(), key=lambda kv: (kv[0][0], kv[0][1])):
-        vals.sort()
-        r = rows[(et, str(d))]
-        assert r.n_events == len(vals)
-        assert r.p50 == pytest.approx(pctl(vals, 0.5), abs=1e-6)
-        assert r.p90 == pytest.approx(pctl(vals, 0.9), abs=1e-6)
-        prev = p50s.get(et)
-        if prev is None:
-            assert r.p50_drift is None
-        else:
-            assert r.p50_drift == pytest.approx(r.p50 - prev, abs=2e-6)
-        p50s[et] = r.p50
-
-
 def test_adamic_adar_matches_textbook_replay(spark, sf_dir):
     """AA scores rebuilt with Python dict wedges over the hub-capped
     subgraph (cap + degree recompute + non-adjacency re-derived
@@ -6219,31 +5182,6 @@ def test_adamic_adar_matches_textbook_replay(spark, sf_dir):
     for got, exp in zip(out, expect):
         assert got[:4] == exp[:4]
         assert got[4] == pytest.approx(exp[4], abs=2e-6)
-
-
-def test_events_retention_matches_textbook_replay(spark, sf_dir):
-    """Cohort triangle rebuilt with Python sets (first-seen, distinct
-    active days, day offsets ≤ 7)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        (str(r.cohort_date), r.day_offset): r.n_active
-        for r in QUERIES["events_retention"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        "SELECT DISTINCT user_id, CAST(ts AS DATE) FROM '{sf}/events.parquet'",
-    )
-    first: dict = {}
-    for u, d in raw:
-        if u not in first or d < first[u]:
-            first[u] = d
-    tri: dict = {}
-    for u, d in raw:
-        off = (d - first[u]).days
-        if off <= 7:
-            tri.setdefault((str(first[u]), off), set()).add(u)
-    assert rows == {k: len(v) for k, v in tri.items()}
 
 
 def test_trailing_revenue_matches_textbook_replay(spark, sf_dir):
@@ -6343,32 +5281,6 @@ def test_rfm_migration_matches_textbook_replay(spark, sf_dir):
         assert r.share_of_from_tier == pytest.approx(
             mig[(ft, tt)] / from_tot[ft], abs=1e-9
         )
-
-
-def test_user_gini_matches_textbook_replay(spark, sf_dir):
-    """Both Gini branches rebuilt with Python ints and the rank formula
-    over an explicit ascending sort; pins 0 ≤ G < 1 for count metrics."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.metric: r for r in QUERIES["events_user_gini"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, COUNT(*),
-                  SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    )
-    for metric, idx in [("n_events", 1), ("cents", 2)]:
-        vals = sorted((row[idx], row[0]) for row in raw)
-        n = len(vals)
-        sx = sum(x for x, _ in vals)
-        six = sum((i + 1) * x for i, (x, _) in enumerate(vals))
-        g = 2.0 * six / (n * sx) - (n + 1.0) / n
-        r = rows[metric]
-        assert r.n_users == n
-        assert r.gini == pytest.approx(g, abs=2e-9)
-        assert -1e-9 <= r.gini < 1.0
 
 
 def test_herfindahl_matches_textbook_replay(spark, sf_dir):
@@ -6697,11 +5609,6 @@ def test_source_overlap_matrix_matches_textbook_replay(spark, sf_dir):
         assert r.jaccard == pytest.approx(nc / (na + nb - nc), rel=1e-12)
 
 
-# --- r12 addition replays: each addition recomputed the naive textbook way
-# off a raw duckdb parquet pull (no windows, no decimal rails, no doubled-
-# rank tricks) — independent of both engines' machinery -----------------------
-
-
 def test_wilcoxon_signed_rank_matches_textbook_replay(spark, sf_dir):
     """W⁺ recomputed with sorted-list tie-averaged Fraction ranks over the
     per-user paired weekend−weekday diffs; textbook mu/sigma with the tie
@@ -6853,31 +5760,6 @@ def test_mcnemar_matches_textbook_replay(spark, sf_dir):
         assert r.chi2_cc is None
 
 
-def test_capture_recapture_matches_textbook_replay(spark, sf_dir):
-    """Chapman estimate recomputed from python sets of weekend/weekday
-    users; Seber variance and Wald CI re-derived with plain floats."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_capture_recapture"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, dayofweek(ts) IN (0,6)
-           FROM '{sf}/events.parquet'""",
-    )
-    a = {u for u, wk in raw if wk}
-    b = {u for u, wk in raw if not wk}
-    n1, n2, m = len(a), len(b), len(a & b)
-    n_hat = (n1 + 1) * (n2 + 1) / (m + 1) - 1
-    var = (n1 + 1) * (n2 + 1) * (n1 - m) * (n2 - m) / ((m + 1) ** 2 * (m + 2))
-    assert (r.n1, r.n2, r.n_both, r.n_observed) == (n1, n2, m, len(a | b))
-    assert r.n_hat_chapman == pytest.approx(n_hat, rel=1e-9)
-    assert r.ci_lo == pytest.approx(n_hat - 1.959964 * var**0.5, abs=1e-5)
-    assert r.ci_hi == pytest.approx(n_hat + 1.959964 * var**0.5, abs=1e-5)
-    # sanity: the estimate can never fall below what we directly observed
-    # minus the CI's own width worth of noise
-    assert r.n_hat_chapman >= m
-
-
 def test_odds_ratio_matches_textbook_replay(spark, sf_dir):
     """2×2 cells recomputed with plain counting; Woolf CI with math.log/
     math.exp."""
@@ -6907,68 +5789,9 @@ def test_odds_ratio_matches_textbook_replay(spark, sf_dir):
     assert r.ci_hi == pytest.approx(math.exp(ln_or + 1.959964 * se), rel=1e-6)
 
 
-def test_sprt_matches_textbook_replay(spark, sf_dir):
-    """The LLR walk recomputed with a plain python loop over the ordered
-    daily series and math.log-derived increments; same first crossing."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_sprt_boundary"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-                  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END),
-                  COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    lp = math.log(0.25 / 0.15)
-    ln = math.log(0.75 / 0.85)
-    up = math.log(0.95 / 0.05)
-    lo = math.log(0.05 / 0.95)
-    llr = 0.0
-    crossing = None
-    for day, x, n in raw:
-        llr += x * lp + (n - x) * ln
-        if crossing is None and (llr >= up or llr <= lo):
-            crossing = (day, "accept_h1" if llr >= up else "accept_h0")
-    assert r.n_days == len(raw)
-    assert r.final_llr == pytest.approx(llr, abs=1e-5)
-    if crossing is None:
-        assert r.decision == "undecided" and r.decision_day is None
-    else:
-        assert (r.decision_day, r.decision) == crossing
-
-
-def test_gumbel_matches_textbook_replay(spark, sf_dir):
-    """Moments fit recomputed with plain float mean/std over the daily
-    maxima and the scipy-free Gumbel formulas."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_gumbel_daily_max"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT MAX(CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT))
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL
-           GROUP BY (epoch_us(ts) // 1000000) // 86400""",
-    )
-    xs = [x for (x,) in raw]
-    n = len(xs)
-    assert r.n_days == n
-    if n >= 2:
-        m = sum(xs) / n
-        sd = math.sqrt(sum((x - m) ** 2 for x in xs) / (n - 1))
-        beta = sd * math.sqrt(6.0) / math.pi
-        mu = m - 0.5772156649015329 * beta
-        assert r.beta_hat_cents == pytest.approx(beta, rel=1e-6)
-        assert r.mu_hat_cents == pytest.approx(mu, rel=1e-6)
-        for t, col in [(30, r.return_level_30d_cents), (365, r.return_level_365d_cents)]:
-            rl = mu - beta * math.log(-math.log(1 - 1 / t))
-            assert col == pytest.approx(rl, rel=1e-6)
-        # the monthly level must not exceed the yearly level
-        assert r.return_level_30d_cents <= r.return_level_365d_cents
+# --- r12 addition replays: each addition recomputed the naive textbook way
+# off a raw duckdb parquet pull (no windows, no decimal rails, no doubled-
+# rank tricks) — independent of both engines' machinery -----------------------
 
 
 def test_lexical_diversity_matches_textbook_replay(spark, sf_dir):
@@ -7027,10 +5850,6 @@ def test_rich_club_matches_textbook_replay(spark, sf_dir):
             )  # 9dp output round
         else:
             assert r.phi is None
-
-
-# --- r12 vacuity TRUE-path pins: each honest-negative flag exercised on a
-# synthetic fixture through the FULL production query ------------------------
 
 
 def _write_events(spark, d, rows):
@@ -7218,9 +6037,8 @@ def test_wilcoxon_ranks_synthetic_weekend_spenders(spark, tmp_path):
 def test_r12_constants_in_sync():
     """r12 shared literals pinned to their oracle text (the r11 pattern):
     hand-written critical values and thresholds must appear verbatim in
-    the SQL mirrors; the SPRT/Gumbel literals are f-string-injected from
-    the SAME Python constants, so their sync is structural — assert they
-    resolved into the SQL at full repr precision."""
+    the SQL mirrors; the rich-club degree thresholds are f-string-injected
+    from the SAME Python constant, so their sync is structural."""
     from cl_tagger_batch_processing_spark import oracles
     from cl_tagger_batch_processing_spark.operators import graph, relational
 
@@ -7228,7 +6046,6 @@ def test_r12_constants_in_sync():
     for name in [
         "events_wilcoxon_signed_rank",
         "events_mann_kendall",
-        "events_capture_recapture",
         "events_odds_ratio_ci",
     ]:
         assert "1.959964" in oracles.ORACLE_SQL[name], name
@@ -7236,19 +6053,6 @@ def test_r12_constants_in_sync():
     mc = oracles.ORACLE_SQL["events_mcnemar"]
     assert "3.841459" in mc
     assert f">= {relational.MCNEMAR_CONV_MIN}" in mc
-    sprt = oracles.ORACLE_SQL["events_sprt_boundary"]
-    for lit in [
-        relational.SPRT_LLR_POS,
-        relational.SPRT_LLR_NEG,
-        relational.SPRT_UPPER,
-        relational.SPRT_LOWER,
-    ]:
-        assert repr(lit) in sprt, lit
-    gum = oracles.ORACLE_SQL["events_gumbel_daily_max"]
-    assert repr(relational.GUMBEL_GAMMA) in gum
-    assert repr(relational.GUMBEL_SQRT6_OVER_PI) in gum
-    for t in relational.GUMBEL_RETURN_PERIODS:
-        assert f"return_level_{t}d_cents" in gum
     rc = oracles.ORACLE_SQL["graph_rich_club"]
     for k in graph.RICH_CLUB_KS:
         assert f"({k})" in rc
@@ -7296,6 +6100,26 @@ def test_hits_matches_python_power_iteration(spark, sf_dir):
     got = {r.node: (r.hub_scaled, r.auth_scaled)
            for r in QUERIES["graph_hits"](spark, sf_dir).collect()}
     assert got == {n: (h[n], a[n]) for n in nodes}
+
+
+def test_hits_prep_jobs_keep_the_callers_job_group(spark, sf_dir):
+    """graph_hits prepares both edge orientations on worker threads; their
+    jobs must carry the caller's job group, or cancelling the group misses
+    them and per-group job accounting drops them."""
+    from cl_tagger_batch_processing_spark.registry import QUERIES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("hits-prep-group", "graph_hits job-group attribution")
+    try:
+        QUERIES["graph_hits"](spark, sf_dir)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert not set(tracker.getJobIdsForGroup(None)) - before
+    assert tracker.getJobIdsForGroup("hits-prep-group")
 
 
 def test_personalized_pagerank_matches_python_loop(spark, sf_dir):
@@ -8080,9 +6904,6 @@ def test_page_hinkley_alarms_on_synthetic_level_shift(spark, tmp_path):
     assert r.max_excursion >= r.excursion_at_alarm
 
 
-# --------------------------- r13 addition replays ---------------------------
-
-
 def test_wasserstein_matches_textbook_replay(spark, sf_dir):
     """W1 recomputed the textbook way: sort both samples' cents, build the
     two ECDFs over the merged support and integrate |F_ref − F_act| dx
@@ -8108,101 +6929,6 @@ def test_wasserstein_matches_textbook_replay(spark, sf_dir):
         fa = bisect.bisect_right(act, a) / len(act)
         w1 += abs(fr - fa) * (b - a)
     assert r.wasserstein_value == pytest.approx(w1 / 100.0, rel=1e-9, abs=1e-9)
-
-
-def test_brown_forsythe_matches_textbook_replay(spark, sf_dir):
-    """Brown-Forsythe 1974 recomputed directly: python statistics.median
-    per group, z = |x − med|, plain one-way ANOVA F over z with float
-    means — no doubled medians, no rails, no machinery."""
-    import statistics
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_brown_forsythe"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    groups: dict = {}
-    for g, v in raw:
-        groups.setdefault(g, []).append(v)
-    kept = {g: xs for g, xs in groups.items() if len(xs) >= 2}
-    assert r.k_groups == len(kept)
-    assert r.k_dropped == len(groups) - len(kept)
-    zs = {
-        g: [abs(x - statistics.median(xs)) for x in xs] for g, xs in kept.items()
-    }
-    k = len(zs)
-    n = sum(len(z) for z in zs.values())
-    means = {g: sum(z) / len(z) for g, z in zs.items()}
-    grand = sum(sum(z) for z in zs.values()) / n
-    between = sum(len(zs[g]) * (means[g] - grand) ** 2 for g in zs) / (k - 1)
-    within = sum(
-        sum((x - means[g]) ** 2 for x in zs[g]) for g in zs
-    ) / (n - k)
-    assert r.df1 == k - 1 and r.df2 == n - k
-    assert r.f_stat == pytest.approx(between / within, rel=1e-6)
-
-
-def test_cliffs_delta_matches_bruteforce_pairs(spark, sf_dir):
-    """δ recomputed as the literal definition P(A>B) − P(A<B) by counting
-    pairs over the per-value histograms (the O(|A|·|B|) double loop runs
-    on distinct cents, feasible at fixture scale)."""
-    from collections import Counter
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_cliffs_delta"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE event_type IN ('view','click')""",
-    )
-    ca = Counter(v for et, v in raw if et == "view")
-    cb = Counter(v for et, v in raw if et == "click")
-    na, nb = sum(ca.values()), sum(cb.values())
-    assert (r.n_a, r.n_b) == (na, nb)
-    gt = sum(m * n for a, m in ca.items() for b, n in cb.items() if a > b)
-    lt = sum(m * n for a, m in ca.items() for b, n in cb.items() if a < b)
-    delta = (gt - lt) / (na * nb)
-    assert r.cliffs_delta == pytest.approx(delta, rel=1e-9, abs=1e-9)
-    expect = (
-        "negligible"
-        if abs(delta) < 0.147
-        else "small" if abs(delta) < 0.33 else "medium" if abs(delta) < 0.474 else "large"
-    )
-    assert r.magnitude == expect
-
-
-def test_cochran_armitage_matches_textbook_replay(spark, sf_dir):
-    """Z recomputed from the Armitage 1955 formula with plain python
-    floats: T = Σr_i s_i − p̄Σn_i s_i over the 7 day-of-week cells."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_cochran_armitage"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT dayofweek(ts), event_type = 'purchase'
-           FROM '{sf}/events.parquet'""",
-    )
-    cells: dict = {}
-    for s, p in raw:
-        n, rr = cells.get(s, (0, 0))
-        cells[s] = (n + 1, rr + (1 if p else 0))
-    N = sum(n for n, _ in cells.values())
-    R = sum(rr for _, rr in cells.values())
-    assert (r.n_total, r.n_success) == (N, R)
-    pbar = R / N
-    t = sum(rr * s for s, (n, rr) in cells.items()) - pbar * sum(
-        n * s for s, (n, _) in cells.items()
-    )
-    sbar = sum(n * s for s, (n, _) in cells.items()) / N
-    var = pbar * (1 - pbar) * sum(
-        n * (s - sbar) ** 2 for s, (n, _) in cells.items()
-    )
-    assert r.z == pytest.approx(t / var**0.5, rel=1e-6)
-    assert r.reject_no_trend_05 == (abs(t / var**0.5) > 1.959964)
 
 
 def test_friedman_matches_scipy_style_replay(spark, sf_dir):
@@ -8244,83 +6970,6 @@ def test_friedman_matches_scipy_style_replay(spark, sf_dir):
     assert r.q_stat == pytest.approx((k - 1) * num / den, rel=1e-9)
 
 
-def test_brier_decomposition_matches_textbook_replay(spark, sf_dir):
-    """Murphy 1973 decomposition recomputed row-wise: per-user labels and
-    capped score bins in plain python dicts, train-half forecasts, and the
-    DIRECT Brier score (1/N)Σ(f_i − y_i)² — asserting both the reported
-    components and the exactness of BS = REL − RES + UNC."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_brier_decomposition"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id,
-                  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END),
-                  SUM(CASE WHEN event_type IN ('view','click') THEN 1 ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    )
-    train: dict = {}
-    test: dict = {}
-    for u, pur, sc in raw:
-        label = 1 if pur >= 10 else 0
-        from cl_tagger_batch_processing_spark.operators.relational import (
-            BRIER_BIN_CAP,
-        )
-
-        b = min(sc, BRIER_BIN_CAP)
-        side = train if u % 2 == 0 else test
-        pos, n = side.get(b, (0, 0))
-        side[b] = (pos + label, n + 1)
-    p_all = sum(p for p, _ in train.values()) / sum(n for _, n in train.values())
-    n_test = sum(n for _, n in test.values())
-    o_bar = sum(p for p, _ in test.values()) / n_test
-    assert r.n_test == n_test and r.n_bins == len(test)
-    rel = res = bs = 0.0
-    for b, (pos, n) in test.items():
-        f = (train[b][0] / train[b][1]) if train.get(b, (0, 0))[1] > 0 else p_all
-        o = pos / n
-        rel += n * (f - o) ** 2
-        res += n * (o - o_bar) ** 2
-        bs += pos * (f - 1) ** 2 + (n - pos) * f * f
-    unc = o_bar * (1 - o_bar)
-    assert r.reliability == pytest.approx(rel / n_test, abs=1e-8)
-    assert r.resolution == pytest.approx(res / n_test, abs=1e-8)
-    assert r.uncertainty == pytest.approx(unc, abs=1e-9)
-    assert r.brier == pytest.approx(bs / n_test, abs=1e-8)  # Murphy identity
-
-
-def test_r13_constants_in_sync():
-    """r13 shared literals pinned to their oracle text (the r11/r12
-    pattern): the Cliff's-delta magnitude bands and Cochran-Armitage
-    critical value are f-string-injected from the SAME Python constants;
-    the Brier bin cap / split modulus and the shared heavy-purchaser
-    threshold must appear verbatim in the SQL mirror."""
-    from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    assert (
-        relational.CLIFFS_NEGLIGIBLE,
-        relational.CLIFFS_SMALL,
-        relational.CLIFFS_MEDIUM,
-    ) == (0.147, 0.33, 0.474)
-    cd = oracles.ORACLE_SQL["events_cliffs_delta"]
-    for lit in [
-        relational.CLIFFS_NEGLIGIBLE,
-        relational.CLIFFS_SMALL,
-        relational.CLIFFS_MEDIUM,
-    ]:
-        assert repr(lit) in cd, lit
-    assert relational.CA_Z_05 == 1.959964
-    assert repr(relational.CA_Z_05) in oracles.ORACLE_SQL["events_cochran_armitage"]
-    br = oracles.ORACLE_SQL["events_brier_decomposition"]
-    assert f"{relational.BRIER_BIN_CAP})" in br
-    assert f"% {relational.BRIER_TRAIN_MOD} = 0" in br
-    assert f">= {relational.AUC_LABEL_MIN_PURCHASES} THEN 1" in br
-    assert relational.MEDIAN_CI_Z_05 == 1.959964
-    assert repr(relational.MEDIAN_CI_Z_05) in oracles.ORACLE_SQL["events_median_ci"]
-    assert relational.WELCH_W_RAIL_LIMIT == 1.0e21
-
-
 def test_wasserstein_pure_shift_synthetic(spark, tmp_path):
     """A pure +Δ location shift between weekday and weekend with identical
     shapes must report W1 = Δ exactly (the defining property of the
@@ -8342,74 +6991,6 @@ def test_wasserstein_pure_shift_synthetic(spark, tmp_path):
     r = QUERIES["events_wasserstein_drift"](spark, str(d)).collect()[0]
     assert (r.n_ref, r.n_act) == (20, 20)
     assert r.wasserstein_value == pytest.approx(7.25, abs=1e-9)
-
-
-def test_brown_forsythe_detects_synthetic_variance_gap(spark, tmp_path):
-    """A tight group vs a wide group of equal size and equal median must
-    produce a LARGE F (the test's TRUE path); a singleton group drops."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "bf"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for i in range(30):
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "tight", 100.0 + (i % 3), "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "wide", 100.0 + 10.0 * (i % 7), "{}"))
-    eid += 1
-    rows.append((eid, "2024-01-01 00:00:00", 1, "singleton", 5.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_brown_forsythe"](spark, str(d)).collect()[0]
-    assert r.k_groups == 2 and r.k_dropped == 1
-    assert r.df1 == 1 and r.df2 == 58
-    assert r.f_stat is not None and r.f_stat > 10
-
-
-def test_cliffs_delta_total_dominance_synthetic(spark, tmp_path):
-    """All view values above all click values must hit δ = +1 exactly and
-    the 'large' magnitude band."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "cd"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for i in range(15):
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "view", 1000.0 + i, "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "click", 10.0 + i, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_cliffs_delta"](spark, str(d)).collect()[0]
-    assert (r.n_a, r.n_b) == (15, 15)
-    assert r.cliffs_delta == pytest.approx(1.0, abs=1e-12)
-    assert r.magnitude == "large"
-
-
-def test_cochran_armitage_detects_synthetic_trend(spark, tmp_path):
-    """Purchase share rising monotonically through the week must reject
-    (the TRUE path of reject_no_trend_05, organically all-false on a
-    no-trend fixture)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "ca"
-    d.mkdir()
-    # 2024-01-07 is a Sunday (dow 0) .. 2024-01-13 Saturday (dow 6)
-    rows = []
-    eid = 0
-    for dow in range(7):
-        day = f"2024-01-{7 + dow:02d}"
-        for i in range(40):
-            eid += 1
-            et = "purchase" if i < 2 + 5 * dow else "view"
-            rows.append((eid, f"{day} 12:00:00", 1, et, 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_cochran_armitage"](spark, str(d)).collect()[0]
-    assert r.n_total == 280 and r.n_success == sum(2 + 5 * d for d in range(7))
-    assert r.z is not None and r.z > 1.959964
-    assert bool(r.reject_no_trend_05) is True
 
 
 def test_friedman_drops_synthetic_incomplete_block(spark, tmp_path):
@@ -8441,51 +7022,7 @@ def test_friedman_drops_synthetic_incomplete_block(spark, tmp_path):
     assert r.q_stat == pytest.approx(16.0, abs=1e-9)
 
 
-def test_median_ci_matches_textbook_replay(spark, sf_dir):
-    """Median + order-statistic CI recomputed by literally sorting the
-    cents list and indexing: med = (s[(n−1)//2] + s[n//2])/2,
-    l = max(1, ⌊(n − z√n)/2⌋), u = n + 1 − l."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_median_ci"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    s = sorted(v for (v,) in raw)
-    n = len(s)
-    assert r.n == n
-    med = (s[(n - 1) // 2] + s[n // 2]) / 2
-    assert r.median == pytest.approx(med / 100.0, abs=1e-9)
-    lo = max(1, math.floor((n - 1.959964 * math.sqrt(n)) / 2))
-    hi = min(n, n + 1 - lo)
-    assert (r.rank_lo, r.rank_hi) == (lo, hi)
-    assert r.ci_lo == pytest.approx(s[lo - 1] / 100.0, abs=1e-12)
-    assert r.ci_hi == pytest.approx(s[hi - 1] / 100.0, abs=1e-12)
-    assert r.ci_lo <= r.median <= r.ci_hi
-
-
-def test_median_ci_known_panel_synthetic(spark, tmp_path):
-    """1..100 cents: median 0.505, l = ⌊80.4/2⌋ = 40, u = 61 —
-    the CI is exactly [0.40, 0.61]."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "mci"
-    d.mkdir()
-    rows = [
-        (i, "2024-01-01 00:00:00", 1, "view", i / 100.0, "{}")
-        for i in range(1, 101)
-    ]
-    _write_events(spark, d, rows)
-    r = QUERIES["events_median_ci"](spark, str(d)).collect()[0]
-    assert r.n == 100
-    assert r.median == pytest.approx(0.505, abs=1e-12)
-    assert (r.rank_lo, r.rank_hi) == (40, 61)
-    assert r.ci_lo == pytest.approx(0.40, abs=1e-12)
-    assert r.ci_hi == pytest.approx(0.61, abs=1e-12)
+# --------------------------- r13 addition replays ---------------------------
 
 
 def test_source_concentration_matches_textbook_replay(spark, sf_dir):
@@ -8677,11 +7214,6 @@ def test_r13b_constants_in_sync():
         repr(relational.OVERDISP_Z_05)
         in oracles.ORACLE_SQL["events_overdispersion"]
     )
-    assert relational.JT_Z_05 == 1.644854
-    assert (
-        repr(relational.JT_Z_05)
-        in oracles.ORACLE_SQL["events_jonckheere_terpstra"]
-    )
     assert relational.BLAND_ALTMAN_Z_05 == 1.959964
     assert (
         repr(relational.BLAND_ALTMAN_Z_05)
@@ -8699,9 +7231,6 @@ def test_r13b_constants_in_sync():
         f"LIMIT {text_ops.DISPERSION_TOPK}"
         in oracles.ORACLE_SQL["text_token_dispersion"]
     )
-    assert relational.HURST_BLOCK_SIZES == [4, 8, 16, 32, 64, 128, 256]
-    sizes_sql = ", ".join(str(s) for s in relational.HURST_BLOCK_SIZES)
-    assert f"[{sizes_sql}]" in oracles.ORACLE_SQL["events_hurst_exponent"]
     from cl_tagger_batch_processing_spark.operators import similarity as sim_ops
 
     assert sim_ops.INTRINSIC_DIM_QUERY_CAP == 500
@@ -8838,88 +7367,6 @@ def test_overdispersion_synthetic_burst_and_constant(spark, tmp_path):
     assert rows_out["steady"].verdict == "underdispersed"
     assert rows_out["bursty"].dispersion_index > 100
     assert rows_out["bursty"].verdict == "overdispersed"
-
-
-def test_jonckheere_terpstra_matches_bruteforce(spark, sf_dir):
-    """2·JT recomputed as the literal pairwise definition over (dow, cents)
-    cells (Σ_{g<h} counts of strictly-less plus half the ties), and the
-    Hollander-Wolfe tie-corrected variance from plain python ints."""
-    from collections import Counter
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_jonckheere_terpstra"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT dayofweek(ts), CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    cells = Counter(raw)  # (g, v) -> count
-    jt2 = 0
-    for (g1, v1), c1 in cells.items():
-        for (g2, v2), c2 in cells.items():
-            if g1 < g2:
-                if v1 < v2:
-                    jt2 += 2 * c1 * c2
-                elif v1 == v2:
-                    jt2 += c1 * c2
-    assert r.jt_u2 == jt2
-    ng = Counter()
-    tv = Counter()
-    for (g, v), c in cells.items():
-        ng[g] += c
-        tv[v] += c
-    n = sum(ng.values())
-    assert r.n_total == n
-    assert r.k_groups == len(ng)
-    assert r.mean_u2 == (n * n - sum(x * x for x in ng.values())) / 2
-    tt1 = sum(t * (t - 1) * (2 * t + 5) for t in tv.values())
-    tt2 = sum(t * (t - 1) * (t - 2) for t in tv.values())
-    tt3 = sum(t * (t - 1) for t in tv.values())
-    gg1 = sum(x * (x - 1) * (2 * x + 5) for x in ng.values())
-    gg2 = sum(x * (x - 1) * (x - 2) for x in ng.values())
-    gg3 = sum(x * (x - 1) for x in ng.values())
-    var = (
-        (n * (n - 1) * (2 * n + 5) - gg1 - tt1) / 72.0
-        + gg2 * tt2 / (36.0 * n * (n - 1) * (n - 2))
-        + gg3 * tt3 / (8.0 * n * (n - 1))
-    )
-    z = (2 * jt2 - (n * n - sum(x * x for x in ng.values()))) / (4.0 * var**0.5)
-    assert r.z_jt == pytest.approx(z, rel=1e-7, abs=1e-9)
-    assert r.reject_increasing_05 == (z > 1.644854)
-
-
-def test_jonckheere_detects_synthetic_ordered_shift(spark, tmp_path):
-    """Values rising strictly with day-of-week must reject the no-trend
-    null one-sided (the TRUE path of reject_increasing_05, organically
-    all-false on the no-trend fixture)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "jt"
-    d.mkdir()
-    # 2024-01-07 is a Sunday (dow score 0) .. 2024-01-13 Saturday (6)
-    rows = []
-    eid = 0
-    for dow in range(7):
-        for i in range(12):
-            eid += 1
-            rows.append(
-                (
-                    eid,
-                    f"2024-01-{7+dow:02d} 10:00:00",
-                    1,
-                    "view",
-                    10.0 * (dow + 1) + i * 0.25,
-                    "{}",
-                )
-            )
-    _write_events(spark, d, rows)
-    r = QUERIES["events_jonckheere_terpstra"](spark, str(d)).collect()[0]
-    assert (r.n_total, r.k_groups) == (84, 7)
-    # perfectly ordered: every cross-group pair concordant, 2JT = 2*max
-    assert r.jt_u2 == 2 * sum(12 * 12 for h in range(1, 7) for g in range(h))
-    assert r.z_jt > 5
-    assert r.reject_increasing_05 is True
 
 
 def _daily_vc_replay(sf_dir):
@@ -9291,95 +7738,6 @@ def test_intrinsic_dim_duplicates_synthetic(spark, tmp_path):
     assert r.intrinsic_dim == pytest.approx(12.0 / total, abs=1e-5)
 
 
-def test_hurst_matches_textbook_replay(spark, sf_dir):
-    """R/S per block and the log-log OLS recomputed in plain python with
-    the same size-scaled exact-integer statistics and rails."""
-    import math
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_hurst_exponent"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST((epoch_us(ts)//1000000)//86400 AS BIGINT), COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    )
-    bymap = dict(raw)
-    dmin, dmax = min(bymap), max(bymap)
-    y = [bymap.get(d, 0) for d in range(dmin, dmax + 1)]
-    n_days = len(y)
-    assert r.n_days == n_days
-    used = skipped = 0
-    pts = []
-    for bs in [4, 8, 16, 32, 64, 128, 256]:
-        rs_vals = []
-        for blk in range(n_days // bs):
-            chunk = y[blk * bs:(blk + 1) * bs]
-            s = sum(chunk)
-            ss = sum(v * v for v in chunk)
-            s2n = bs * ss - s * s
-            if s2n <= 0:
-                skipped += 1
-                continue
-            used += 1
-            zn = []
-            cy = 0
-            for k, v in enumerate(chunk, start=1):
-                cy += v
-                zn.append(bs * cy - k * s)
-            rs_vals.append(round((max(zn) - min(zn)) / math.sqrt(s2n), 9))
-        if rs_vals:
-            pts.append(
-                (round(round(math.log(bs), 7) * 10**7),
-                 round(round(math.log(sum(rs_vals) / len(rs_vals)), 7) * 10**7))
-            )
-    assert (r.n_blocks_used, r.n_blocks_skipped) == (used, skipped)
-    assert r.n_sizes == len(pts)
-    m = len(pts)
-    sx = sum(x for x, _ in pts)
-    sy = sum(v for _, v in pts)
-    sxy = sum(x * v for x, v in pts)
-    sxx = sum(x * x for x, _ in pts)
-    syy = sum(v * v for _, v in pts)
-    dx, dy = m * sxx - sx * sx, m * syy - sy * sy
-    num = m * sxy - sx * sy
-    if m >= 2 and dx > 0:
-        assert r.hurst_h == pytest.approx(num / dx, abs=1e-7)
-        if dy > 0:
-            assert r.r2 == pytest.approx(num * num / (dx * dy), abs=1e-7)
-    else:
-        assert r.hurst_h is None
-
-
-def test_hurst_trend_and_constant_block_synthetic(spark, tmp_path):
-    """A strongly trending series must report H near 1 (persistent), and
-    a constant 4-day block must DROP into n_blocks_skipped (organically
-    zero on the fixture)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "hurst"
-    d.mkdir()
-    import datetime
-
-    rows = []
-    eid = 0
-    # days 1-4: constant 3 events/day (one skipped bs=4 block);
-    # days 5-32: strictly rising load 5, 10, 15, ...
-    d0 = datetime.date(2024, 1, 1)
-    for day in range(1, 33):
-        cnt = 3 if day <= 4 else 5 * (day - 4)
-        stamp = (d0 + datetime.timedelta(days=day - 1)).isoformat()
-        for _ in range(cnt):
-            eid += 1
-            rows.append((eid, f"{stamp} 10:00:00", 1, "view", 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_hurst_exponent"](spark, str(d)).collect()[0]
-    assert r.n_days == 32
-    assert r.n_blocks_skipped >= 1  # the constant first block
-    assert r.hurst_h is not None and r.hurst_h > 0.9  # trending: persistent
-
-
 def test_intrinsic_dim_query_cap_active(spark, tmp_path):
     """Above INTRINSIC_DIM_QUERY_CAP vectors, only the smallest-vec_id
     sample queries (every vector stays a candidate) — numpy replays the
@@ -9410,6 +7768,34 @@ def test_intrinsic_dim_query_cap_active(spark, tmp_path):
         assert r.intrinsic_dim == pytest.approx(
             2.0 * int(usable.sum()) / sum(terms), abs=1e-5
         )
+
+
+def test_intrinsic_dim_candidate_cap_fails_before_full_collect(
+    spark, tmp_path, monkeypatch
+):
+    """The candidate-count guard must fire on a collect bounded at cap + 1
+    rows, not after the whole candidate side reached the driver."""
+    from cl_tagger_batch_processing_spark.registry import QUERIES
+
+    d = tmp_path / "twonn_cap"
+    d.mkdir()
+    _write_embeddings(
+        spark, d, [(i, [float(i + 1)] + [0.0] * 63, 0) for i in range(20)]
+    )
+    monkeypatch.setattr(similarity, "INTRINSIC_DIM_MAX_CANDIDATES", 3)
+    collected = []
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    to_pandas = frame_cls.toPandas
+
+    def counting_to_pandas(self):
+        pdf = to_pandas(self)
+        collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(frame_cls, "toPandas", counting_to_pandas)
+    with pytest.raises(RuntimeError, match="candidate vectors"):
+        QUERIES["embedding_intrinsic_dim"](spark, str(d))
+    assert collected and max(collected) <= 4, collected
 
 
 def test_intrinsic_dim_two_vector_corpus(spark, tmp_path):

@@ -402,13 +402,6 @@ def test_mixture_sample_single_shuffle(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_funnel_single_user_shuffle(spark, sf_dir):
-    # Three chained window passes over the SAME user partitioning must
-    # reuse one exchange; plus the final 1-row aggregate's tiny exchange.
-    df = QUERIES["events_funnel"](spark, sf_dir)
-    assert inspect.count_shuffles(df) <= 2
-
-
 def test_phash_dedup_single_shuffle_no_python(spark, sf_dir):
     # perceptual hash is row-local unrolled Column math: the ONLY exchange
     # is the final groupBy(phash); no Python boundary, no join of any kind
@@ -466,16 +459,6 @@ def test_markov_transitions_no_join_bounded_shuffles(spark, sf_dir):
         assert op not in plan, op
     df = QUERIES["events_markov_transitions"](spark, sf_dir)
     assert inspect.count_shuffles(df) <= 3
-
-
-def test_anomaly_mad_stats_broadcast_back(spark, sf_dir):
-    # the per-type stats frames are dimension-sized and must attach to fact
-    # rows via broadcast hash joins — a sort-merge join here would shuffle
-    # the full fact table twice at scale
-    plan = inspect.executed_plan(QUERIES["events_anomaly_mad"](spark, sf_dir))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2
 
 
 def test_scd2_single_customer_shuffle(spark, sf_dir):
@@ -627,17 +610,6 @@ def test_minhash_incremental_banded_only(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     for op in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
-        assert op not in plan, op
-
-
-def test_path_topk_take_ordered(spark, sf_dir):
-    # one user window exchange + one map-side-combined count exchange; the
-    # global cut must be a distributed TakeOrdered, never a full sort
-    df = QUERIES["events_path_topk"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    assert "TakeOrderedAndProject" in plan
-    for op in ["SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-               "BatchEvalPython", "MapInPandas"]:
         assert op not in plan, op
 
 
@@ -1034,17 +1006,6 @@ def test_assortativity_no_cartesian_no_python(spark, sf_dir):
         assert op not in plan, op
 
 
-def test_funnel_latency_single_user_exchange_upstream(spark, sf_dir):
-    # the milestone spine is materialized; the latency rollup must not
-    # re-run the user window chain per stage branch
-    df = QUERIES["events_funnel_latency"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    assert plan.count("FileScan") == 0  # milestone frame is checkpointed
-    assert "Window" not in plan  # windows ran upstream of the checkpoint
-    for op in ["BatchEvalPython", "ArrowEvalPython"]:
-        assert op not in plan, op
-
-
 def test_mmr_loop_runs_on_materialized_pool(spark, sf_dir):
     # the greedy loop's plan must touch only the checkpointed pool/sims
     # frames — no corpus rescans, no Python, broadcast-only joins
@@ -1153,17 +1114,7 @@ def test_r11_continuation_plan_shapes(spark):
     from cl_tagger_batch_processing_spark.registry import QUERIES
 
     sf = os.environ.get("SPARK_GRAFT_GUARD_SF_DIR", "/root/testdata/sf0.001")
-    for name in [
-        "events_psi_drift",
-        "events_cramers_v",
-        "events_kruskal_wallis",
-        "events_jackknife_ratio",
-        "events_runs_test",
-        "text_good_turing",
-        "events_bh_fdr",
-        "text_quality_kappa",
-        "text_js_divergence",
-    ]:
+    for name in ["text_good_turing", "text_quality_kappa", "text_js_divergence"]:
         plan = inspect.executed_plan(QUERIES[name](spark, sf))
         assert "SortMergeJoin" not in plan, name
 
@@ -1177,12 +1128,6 @@ def test_r11_continuation_plan_shapes(spark):
     gt = inspect.executed_plan(QUERIES["text_good_turing"](spark, sf))
     assert "Join" not in gt
     assert gt.count("FileScan parquet") == 1
-
-    # runs test: the sign pass and closing aggregate read the CHECKPOINTED
-    # daily spine — the corpus parquet is scanned only inside the spine
-    # build, so the final plan must not re-touch it.
-    rt = inspect.executed_plan(QUERIES["events_runs_test"](spark, sf))
-    assert rt.count("FileScan parquet") == 0
 
 
 # --- r12 standing gate: no unpartitioned Window over unbounded relations ----
@@ -1206,16 +1151,11 @@ UNPARTITIONED_WINDOW_OK = {
     "events_poisson_bootstrap_ci": "B=64 bootstrap replicate means",
     "sim_hybrid_rrf": "fusion of two bounded top-k lists",
     "sim_ann_graph_search": "beam candidates, bounded by GBS_BEAM",
-    "events_cusum_drift": "daily spine — calendar-bounded",
-    "events_changepoint_detection": "daily spine — calendar-bounded",
     "orders_backlog_timeseries": "daily spine — calendar-bounded",
     "orders_max_drawdown": "daily spine — calendar-bounded",
-    "events_runs_test": "daily spine — calendar-bounded",
-    "events_sprt_boundary": "daily spine — calendar-bounded",
     "events_page_hinkley": "daily spine — calendar-bounded",
     "orders_seasonal_decompose": "month spine — calendar-bounded",
     "parts_pareto_skyline": "constant bucket grid",
-    "events_quantile_sketch_report": "constant bucket grid",
     "text_ngram_novelty": "constant bucket grid",
     "events_decision_stump": "constant threshold/bucket grid",
     "text_bm25_topk": "rank window AFTER .limit(k)",
@@ -1227,9 +1167,7 @@ UNPARTITIONED_WINDOW_OK = {
     "graph_common_neighbors": "rank window AFTER .limit(k)",
     "corpus_dsir_sample": "rank window AFTER .limit(k)",
     "corpus_weighted_sample": "rank window AFTER .limit(k)",
-    "events_path_topk": "rank window AFTER .limit(k)",
     "text_heavy_hitters_cms": "CMS heavy-hitter candidates — bounded",
-    "events_auc_report": "distinct activity counts — bounded by busiest user",
     "corpus_source_mix": "#sources strata",
     "corpus_temperature_mix": "#sources strata",
     "corpus_source_concentration": "#sources strata",
@@ -1240,7 +1178,6 @@ UNPARTITIONED_WINDOW_OK = {
     "events_user_hazard_curve": "day-offset spine — calendar-bounded",
     "graph_effective_diameter": "distinct BFS distances ≤ diameter",
     "orders_theil_sen_trend": "calendar-bounded trailing-year pair stage",
-    "events_bh_fdr": "#event_types test family",
     "text_ndcg_eval": "two bounded top-k rankings",
     "text_heaps_law_fit": "constant checkpoint spine — ≤ HEAPS_CHECKPOINTS rows",
 }
@@ -1303,26 +1240,19 @@ STATIC_WINDOW_OK = {
     ("relational.py", "_bucket_offsets"): "bucketed-rank spine ≤RANK_BUCKETS",
     ("relational.py", "bucketed_cum_before"): "bucketed-rank spine ≤RANK_BUCKETS",
     ("relational.py", "bucketed_lead"): "bucketed-rank spine ≤RANK_BUCKETS",
-    ("relational.py", "events_path_topk"): "rank window AFTER .limit(k)",
     ("relational.py", "part_abc_classification"): "parts-dimension relation",
-    ("relational.py", "events_cusum_drift"): "daily spine",
     ("relational.py", "orders_seasonal_decompose"): "month spine",
     ("relational.py", "orders_backlog_timeseries"): "daily spine",
     ("relational.py", "events_decision_stump"): "constant threshold/bucket grid",
     ("relational.py", "histogram_quantile_estimates"): "constant bucket grid",
     ("relational.py", "events_user_hazard_curve"): "day-offset spine",
-    ("relational.py", "events_auc_report"): "distinct activity counts — bounded",
     ("relational.py", "parts_pareto_skyline"): "constant bucket grid",
     ("relational.py", "orders_max_drawdown"): "daily spine",
     ("relational.py", "events_survival_km"): "distinct durations — calendar-bounded",
     ("relational.py", "events_hmm_viterbi_decode"): "daily spine",
-    ("relational.py", "events_changepoint_detection"): "daily spine",
     ("relational.py", "events_poisson_bootstrap_ci"): "B=64 replicate means",
     ("relational.py", "isotonic_rates"): "constant score buckets",
     ("relational.py", "orders_theil_sen_trend"): "calendar-bounded pair stage",
-    ("relational.py", "events_runs_test"): "daily spine",
-    ("relational.py", "events_bh_fdr"): "#event_types test family",
-    ("relational.py", "events_sprt_boundary"): "daily spine",
     ("relational.py", "events_page_hinkley"): "daily spine",
     ("curation.py", "corpus_source_mix"): "#sources strata",
     ("curation.py", "corpus_token_budget"): "#source×lang strata",

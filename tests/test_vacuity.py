@@ -66,7 +66,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("q8_market_share", "ALL_ZERO", "mkt_share"): (
         "target-nation share is a true 0 at sf0.001; 7/7 nonzero at sf0.1"
     ),
-    ("events_json_extract", "ALL_ZERO", "min_k"): "a real minimum of 0",
     ("corpus_pack_sequences", "ALL_ZERO", "window_id"): (
         "short docs pack into chunk 0 at sf0.001; 120/140 nonzero at sf0.1"
     ),
@@ -100,16 +99,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "the union-find cross-check pins the closure"
     ),
     # --- ALL_FALSE triage (ADVICE r10: identically-False boolean flags) ---
-    ("events_ks_test", "ALL_FALSE", "reject_equal_05"): (
-        "honest negative: view and click values draw from the same "
-        "generator at every scale; TRUE path pinned by "
-        "test_ks_and_mw_reject_on_synthetic_shifted_distributions "
-        "through the full production query"
-    ),
-    ("events_mann_whitney", "ALL_FALSE", "reject_equal_05"): (
-        "same-generator fixture as the KS triage; TRUE path pinned by "
-        "test_ks_and_mw_reject_on_synthetic_shifted_distributions"
-    ),
     ("text_gopher_flags", "ALL_FALSE", "flag_too_long"): (
         "clean-fixture honest negative; TRUE path pinned by "
         "test_gopher_flags_fire_on_synthetic_pathologies through the "
@@ -135,12 +124,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "(F ~ 0.02-1.0 across scales); TRUE path pinned by "
         "test_granger_rejects_on_synthetic_leading_series through the "
         "full production query"
-    ),
-    ("events_bh_fdr", "ALL_FALSE", "reject_fdr_05"): (
-        "honest negative: weekend and weekday values draw from the same "
-        "generator at every scale (the KS/MW triage); TRUE path pinned by "
-        "test_bh_fdr_rejects_on_synthetic_weekend_shift through the full "
-        "production query"
     ),
     ("events_power_analysis", "ALL_FALSE", "powered"): (
         "honest negative at sf0.001 (8/7 users per arm vs >=212 required "
@@ -182,23 +165,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "variance at every scale; the degenerate-group TRUE path is "
         "pinned by test_welch_anova_drops_synthetic_constant_group"
     ),
-    ("events_brown_forsythe", "ALL_ZERO", "k_dropped"): (
-        "honest zero: every fixture event type has n>=2 at every scale; "
-        "the singleton-drop TRUE path is pinned by "
-        "test_brown_forsythe_detects_synthetic_variance_gap"
-    ),
-    ("events_cochran_armitage", "ALL_FALSE", "reject_no_trend_05"): (
-        "honest negative: the fixture's purchase share has no day-of-week "
-        "trend by construction (z = -0.54/-0.94 at sf0.001/sf0.01); the "
-        "monotone-trend TRUE path is pinned by "
-        "test_cochran_armitage_detects_synthetic_trend"
-    ),
-    ("events_jonckheere_terpstra", "ALL_FALSE", "reject_increasing_05"): (
-        "honest negative: the fixture's value distribution has no "
-        "day-of-week ordering by construction (z = +0.37 at sf0.01); the "
-        "ordered-shift TRUE path is pinned by "
-        "test_jonckheere_detects_synthetic_ordered_shift"
-    ),
     ("text_heaps_law_fit", "ALL_ZERO", "heaps_beta"): (
         "honest zero: the synthetic fixture vocabulary is CLOSED (~31-40 "
         "types, fully seen in the first checkpoint at every scale), so "
@@ -221,12 +187,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "honest zero: the fixture has no exact duplicate embeddings at "
         "any scale (r1 > 0 everywhere); the duplicate-drop TRUE path is "
         "pinned by test_intrinsic_dim_duplicates_synthetic"
-    ),
-    ("events_hurst_exponent", "ALL_ZERO", "n_blocks_skipped"): (
-        "honest zero: no 4..256-day window of the fixture calendar has a "
-        "perfectly constant daily count at any scale; the constant-block "
-        "drop TRUE path is pinned by "
-        "test_hurst_trend_and_constant_block_synthetic"
     ),
     ("events_friedman_test", "ALL_ZERO", "n_dropped"): (
         "honest zero: the fixture is dense (every user has every event "

@@ -14,9 +14,10 @@ AQE's final plan is what lands in the file.
 Each run is tagged with its own Spark job group so the output reports the
 NUMBER OF SPARK JOBS the run launched — the measurement the iterative-
 family optimizations (fewer checkpoint/census jobs per superstep) are
-graded on. Session memo caches (the bench.py cold/warm list) are cleared
-before every timed run by default so isolated medians compare cold against
-cold; pass --keep-memos for bench-like warm riding.
+graded on. Session memo caches (the bench.py cold/warm list plus the
+table-plan memo) are cleared before every timed run by default so isolated
+medians compare cold against cold; pass --keep-memos for bench-like warm
+riding.
 """
 
 from __future__ import annotations
@@ -29,31 +30,17 @@ import time
 
 
 def _memo_caches():
-    """The session memo dicts bench.py instruments — cleared per run so
-    every isolated run pays its own memo builds (cold-vs-cold A/B)."""
-    from cl_tagger_batch_processing_spark.operators import dedup as _dedup
-    from cl_tagger_batch_processing_spark.operators import graph as _graph
-    from cl_tagger_batch_processing_spark.operators import relational as _rel
-    from cl_tagger_batch_processing_spark.operators import similarity as _sim
+    """The session memo dicts cleared before each run: the operator memos
+    bench.py instruments plus the table-plan memo, so every isolated run
+    pays its own memo builds and table plans (cold-vs-cold A/B)."""
+    import importlib
 
-    out = []
-    for mod, attr in [
-        (_rel, "_PART_PAIRS_CACHE"),
-        (_sim, "_TOPK_COSINE_CACHE"),
-        (_sim, "_KMEANS_CACHE"),
-        (_sim, "_SEMANTIC_KEEP_CACHE"),
-        (_sim, "_KNN_GRAPH_CACHE"),
-        (_sim, "_INTRINSIC_CAND_CACHE"),
-        (_dedup, "_CLUSTERS_CACHE"),
-        (_dedup, "_LSH_PAIRS_CACHE"),
-        (_dedup, "_SIMHASH_PAIRS_CACHE"),
-        (_dedup, "_SIG_CACHE"),
-        (_graph, "_EDGES_CACHE"),
-    ]:
-        cache = getattr(mod, attr, None)
-        if isinstance(cache, dict):
-            out.append(cache)
-    return out
+    from bench import MEMO_CACHES
+
+    return [
+        getattr(importlib.import_module(f"cl_tagger_batch_processing_spark.{mod}"), attr)
+        for mod, attr in [*MEMO_CACHES, ("sources.tables", "_TABLE_PLAN_CACHE")]
+    ]
 
 
 def main() -> int:
