@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import truncate_lineage, truncate_lineage_eager
-from ..sources.tables import load_table
 
 PR_SCALE = 10**15  # rank unit: 1e-15 (bigint-exact; total mass 1e15 ≪ 2^63)
 PR_DAMPING_NUM, PR_DAMPING_DEN = 85, 100  # 0.85 as an exact integer ratio

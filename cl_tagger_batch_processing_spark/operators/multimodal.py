@@ -114,25 +114,16 @@ FRAME_CHARS = 64
 FRAME_STRIDE = 4
 
 
-def decode_video_frames(content: bytes) -> list[bytes]:
-    """Real video decode would go here (no codec libs in this environment).
-
-    The Spark-side plumbing (schema, batch shape, sampling, hashing) is
-    exercised by the deterministic fake in ``mm_frame_sample``; swap this in
-    behind the same signature when a codec is available.
-    """
-    raise NotImplementedError("video codecs are not available in this environment")
-
-
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over "video" payloads via Arrow-batched mapInPandas:
     split each payload into fixed-size frames, keep every FRAME_STRIDE-th,
     emit (doc_id, frame_idx, frame_md5, n_frames) — one row per kept frame.
 
     The decode step is a deterministic fake (fixed-width slices of the
-    payload text; see ``decode_video_frames`` for where a real codec plugs
-    in), which keeps the operator value-oracle-checkable: DuckDB reproduces
-    the slicing with substring arithmetic. The plan is the real thing —
+    payload text; a real video codec would replace the slicing inside the
+    batch function), which keeps the operator value-oracle-checkable:
+    DuckDB reproduces the slicing with substring arithmetic. The plan is
+    the real thing —
     binary column in, Arrow batches through Python, long-form feature rows
     out, fully partition-parallel with no driver involvement.
     """

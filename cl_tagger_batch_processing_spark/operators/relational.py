@@ -45,9 +45,9 @@ def _one_plus(col: str):
 # ``Window.orderBy`` with no ``partitionBy`` forces EVERY row into one task —
 # fine over bounded spines (day grids, bucket spines, top-k after LIMIT), a
 # scale defect over user/customer/value-cardinality relations (r11 verdict:
-# customer_rfm, orders_rfm_migration). The helpers below compute the SAME
-# row_number / ntile / cumulative-sum values with a bounded per-task
-# footprint — the "range-partitioned two-pass rank" made deterministic:
+# customer_rfm, orders_rfm_migration). ``bucketed_ntile`` below computes the
+# SAME ntile values with a bounded per-task footprint — the
+# "range-partitioned two-pass rank" made deterministic:
 #
 #   1. approx-quantile bucket boundaries of the order key (percentile_approx
 #      sketch, one map-side-combined pass), CHECKPOINTED so every consumer
@@ -114,42 +114,6 @@ def _bucket_offsets(sizes: DataFrame, size_col: str, parts: list[str]) -> DataFr
     )
 
 
-def bucketed_rank(
-    df: DataFrame,
-    value: str,
-    tiebreak: str,
-    rank_col: str,
-    parts: list[str] | None = None,
-    probe: str | None = None,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """``row_number() OVER ([PARTITION BY parts] ORDER BY value ASC,
-    tiebreak ASC)`` without a single-partition sort (see the block comment
-    above). ``probe`` optionally names a monotone-in-``value`` numeric
-    column to bucket on (e.g. a double shadow of an exact DECIMAL key —
-    equal probes collapsing distinct values into one bucket is harmless).
-    ``bounds`` optionally supplies a pre-checkpointed boundary frame
-    (parts + one ``_bs`` array column) so several rankings over one
-    relation share a single sketch job. ``value`` must be non-NULL;
-    ``(value, tiebreak)`` must be unique within each ``parts`` group.
-    Cost: two passes over ``df`` (sizes + the bucketed sort) after the
-    boundary sketch — checkpoint ``df`` at the call site."""
-    parts = list(parts or [])
-    probe = probe or value
-    if bounds is None:
-        bounds = _bucket_boundaries(df, probe, parts)
-    bk = _with_bucket(df, bounds, probe, parts)
-    sizes = bk.groupBy(*parts, "_bkt").agg(F.count(F.lit(1)).alias("_bsz"))
-    offs = _bucket_offsets(sizes, "_bsz", parts)
-    w_loc = Window.partitionBy(*parts, "_bkt").orderBy(
-        F.asc(value), F.asc(tiebreak)
-    )
-    return bk.join(F.broadcast(offs), [*parts, "_bkt"]).select(
-        *df.columns,
-        (F.col("_boff") + F.row_number().over(w_loc)).cast("bigint").alias(rank_col),
-    )
-
-
 def bucketed_ntile(
     df: DataFrame,
     value: str,
@@ -164,8 +128,9 @@ def bucketed_ntile(
     ASC)`` from the bucketed two-pass rank plus NTile's exact arithmetic
     (N rows into n buckets: the first N%n buckets hold N/n+1 rows, the rest
     N/n — verified against F.ntile in tests), so values are bit-identical
-    to the single-partition window it replaces. Same contract/cost as
-    ``bucketed_rank``."""
+    to the single-partition window it replaces. Cost: one percentile sketch
+    pass (skipped when ``bounds`` is given) plus one bucket-local sort; no
+    task ever holds more than one bucket's rows."""
     parts = list(parts or [])
     probe = probe or value
     if bounds is None:
@@ -206,104 +171,6 @@ def bucketed_ntile(
     )
     return joined.select(
         *df.columns, ntile.cast("bigint").alias(out_col)
-    )
-
-
-def bucketed_cum_before(
-    df: DataFrame,
-    value: str,
-    weight: str | list[str],
-    out_col: str | list[str],
-    probe: str | None = None,
-    parts: list[str] | None = None,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """Σ ``weight`` over rows with strictly smaller ``value`` (within each
-    ``parts`` group) — the Mann-Whitney tie-averaged-rank machinery
-    (rank(v) = cum_before + (c+1)/2) without the single-partition
-    cumulative window. ``df`` must hold ONE non-NULL row per distinct
-    (``parts``, ``value``). Several weight columns (e.g. the KS test's two
-    ECDFs) ride ONE machinery pass. Weight-skew note: tasks are per-bucket
-    ROW counts (balanced by the sketch); a hot value only makes its weight
-    large, not its bucket."""
-    weights = [weight] if isinstance(weight, str) else list(weight)
-    outs = [out_col] if isinstance(out_col, str) else list(out_col)
-    probe = probe or value
-    parts = list(parts or [])
-    if bounds is None:
-        bounds = _bucket_boundaries(df, probe, parts)
-    bk = _with_bucket(df, bounds, probe, parts)
-    btot = bk.groupBy(*parts, "_bkt").agg(
-        *[F.sum(w).alias(f"_bw{i}") for i, w in enumerate(weights)]
-    )
-    w_off = (
-        Window.partitionBy(*parts)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-        if parts
-        else Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    )  # bounded: the ≤RANK_BUCKETS-row bucket spine (per parts group)
-    offs = btot.select(
-        *parts,
-        "_bkt",
-        *[
-            F.coalesce(F.sum(f"_bw{i}").over(w_off), F.lit(0)).alias(f"_boff{i}")
-            for i in range(len(weights))
-        ],
-    )
-    w_loc = (
-        Window.partitionBy(*parts, "_bkt")
-        .orderBy(value)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return bk.join(F.broadcast(offs), [*parts, "_bkt"]).select(
-        *df.columns,
-        *[
-            (
-                F.col(f"_boff{i}")
-                + F.coalesce(F.sum(w).over(w_loc), F.lit(0))
-            ).alias(o)
-            for i, (w, o) in enumerate(zip(weights, outs))
-        ],
-    )
-
-
-def bucketed_lead(
-    df: DataFrame,
-    value: str,
-    out_col: str,
-    probe: str | None = None,
-    parts: list[str] | None = None,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """``lead(value) OVER ([PARTITION BY parts] ORDER BY value)`` on a
-    distinct-value relation (NULL for each group's maximum) without the
-    single-partition window — the support-gap machinery the 1-D
-    Wasserstein distance needs (Δv between consecutive distinct values).
-    Within-bucket rows take a per-bucket lead; each bucket's LAST row
-    coalesces to the next non-empty bucket's minimum, computed with one
-    bounded window over the ≤RANK_BUCKETS bucket spine. Same contract as
-    ``bucketed_cum_before``: one non-NULL row per distinct (parts, value);
-    bucket minima are deterministic integer aggregates, so nothing beyond
-    the sketch (pinned inside ``_bucket_boundaries``) needs checkpointing."""
-    probe = probe or value
-    parts = list(parts or [])
-    if bounds is None:
-        bounds = _bucket_boundaries(df, probe, parts)
-    bk = _with_bucket(df, bounds, probe, parts)
-    bmins = bk.groupBy(*parts, "_bkt").agg(F.min(value).alias("_bmn"))
-    w_nb = (
-        Window.partitionBy(*parts).orderBy("_bkt")
-        if parts
-        else Window.orderBy("_bkt")
-    )  # bounded: the ≤RANK_BUCKETS-row bucket spine (per parts group)
-    nxt = bmins.select(
-        *parts, "_bkt", F.lead("_bmn").over(w_nb).alias("_nxtmn")
-    )
-    w_loc = Window.partitionBy(*parts, "_bkt").orderBy(value)
-    return bk.join(F.broadcast(nxt), [*parts, "_bkt"]).select(
-        *df.columns,
-        F.coalesce(F.lead(value).over(w_loc), F.col("_nxtmn")).alias(out_col),
     )
 
 
@@ -2577,77 +2444,6 @@ def orders_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B experiment readout: users split into control/treatment by the
-    deterministic user_id parity, conversion = heavy purchaser
-    (>= AUC_LABEL_MIN_PURCHASES purchases — the any-purchase form is
-    all-ones on the dense fixture and made z/lift vacuous, r9 audit);
-    per arm the conversion rate, plus the pooled two-proportion
-    z-score and relative lift — the standard experiment-analysis shape
-    (assignment and conversion both derive from exact integer counts, so
-    the whole readout is reproducible on any engine).
-
-    One user-level aggregate (map-side combinable), one 2-row arm rollup;
-    the z-score arithmetic is an identical double expression tree over
-    the four exact counts. Output: one row per arm carrying its own
-    stats plus the experiment-level z/lift (constant across rows, the
-    repo's flat-scalar-output convention)."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    # conversion = HEAVY purchaser (>= AUC_LABEL_MIN_PURCHASES purchases):
-    # the dense fixture gives every user >= 1 purchase at every scale, so
-    # an any-purchase conversion was 100% in both arms and z/lift were
-    # vacuously NULL/0 (caught by the r9 registry-wide vacuity audit —
-    # the KM/AUC lesson)
-    per_user = ev.groupBy("user_id").agg(
-        (
-            F.sum(
-                F.when(F.col("event_type") == F.lit("purchase"), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            )
-            >= F.lit(AUC_LABEL_MIN_PURCHASES)
-        )
-        .cast("int")
-        .alias("converted")
-    )
-    arms = per_user.select(
-        F.when(F.col("user_id") % 2 == 0, F.lit("control"))
-        .otherwise(F.lit("treatment"))
-        .alias("arm"),
-        "converted",
-    ).groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum("converted").cast("bigint").alias("n_converted"),
-    )
-    ctl = arms.where(F.col("arm") == "control").select(
-        F.col("n_users").alias("n0"), F.col("n_converted").alias("c0")
-    )
-    trt = arms.where(F.col("arm") == "treatment").select(
-        F.col("n_users").alias("n1"), F.col("n_converted").alias("c1")
-    )
-    x = ctl.crossJoin(F.broadcast(trt))  # both sides 1 row; hint for plan stability
-    n0, c0 = F.col("n0").cast("double"), F.col("c0").cast("double")
-    n1, c1 = F.col("n1").cast("double"), F.col("c1").cast("double")
-    p0, p1 = c0 / n0, c1 / n1
-    pooled = (c0 + c1) / (n0 + n1)
-    se2 = pooled * (F.lit(1.0) - pooled) * (F.lit(1.0) / n0 + F.lit(1.0) / n1)
-    # degenerate experiments (pooled 0% or 100%, or a zero-conversion
-    # control) have no defined z / relative lift — NULL on both engines
-    z = F.when(se2 > F.lit(0.0), (p1 - p0) / F.sqrt(se2))
-    lift = F.when(p0 > F.lit(0.0), (p1 - p0) / p0)
-    stats = x.select(z.alias("z_score"), lift.alias("relative_lift"))
-    return arms.crossJoin(F.broadcast(stats)).select(
-        "arm",
-        "n_users",
-        "n_converted",
-        (F.col("n_converted").cast("double") / F.col("n_users").cast("double")).alias(
-            "conv_rate"
-        ),
-        "z_score",
-        "relative_lift",
-    )
-
-
 # Duplicate-invoice blocking: same customer, amount in the same
 # DUP_INVOICE_BAND-wide band, within DUP_INVOICE_WINDOW_DAYS. Both
 # constants mirrored in the oracle — sync-pinned.
@@ -2843,65 +2639,6 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ACF lag range — mirrored literally in the DuckDB oracle (sync-pinned).
-ACF_MAX_LAG = 7
-
-
-def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample autocorrelation of the daily event-count series at lags
-    1..ACF_MAX_LAG — the time-series family's diagnostic completion: the
-    seasonal decomposition assumes a weekly cycle, CUSUM assumes drift;
-    the ACF is the readout that JUSTIFIES those assumptions (a weekly
-    cycle shows as a lag-7 peak).
-
-    Pearson r between (x_t, x_{t+lag}) over calendar-aligned day pairs
-    (absent days are excluded pairwise, documented). The six sufficient
-    statistics (n, Σx, Σy, Σxy, Σx², Σy²) are EXACT decimal sums of
-    integer daily counts (DECIMAL(38,0) here, HUGEINT in the oracle —
-    a 100 TB corpus at ~3e9 events/day squares to ~1e19, past int64 but
-    nowhere near either 38-digit envelope); the subtraction tree, sqrt,
-    and division then run in double — the same IEEE op sequence on both
-    engines, so the hash compare is safe. Zero-variance sides yield NULL
-    (not NaN) on both.
-
-    Scale: the only full-data pass is the map-side-combinable daily
-    groupBy, MATERIALIZED once — both sides of the lag self-join read the
-    ~#days-row aggregate, not the corpus (plan-tested: one FileScan). The
-    lag spine broadcasts. At 100 TB the daily frame is still tiny."""
-    daily = _daily_event_counts(spark, sf_dir).transform(truncate_lineage)
-    lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
-    x = daily.select(F.col("day").alias("xd"), F.col("daily_count").alias("xv"))
-    y = daily.select(F.col("day").alias("yd"), F.col("daily_count").alias("yv"))
-    pairs = (
-        x.crossJoin(F.broadcast(lags))
-        .join(F.broadcast(y), F.col("yd") == F.col("xd") + F.col("lag"))
-    )
-    xd = F.col("xv").cast("decimal(19,0)")
-    yd = F.col("yv").cast("decimal(19,0)")
-    s = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(xd).alias("sx"),
-        F.sum(yd).alias("sy"),
-        F.sum(xd * yd).alias("sxy"),
-        F.sum(xd * xd).alias("sxx"),
-        F.sum(yd * yd).alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    vx = nd * d("sxx") - d("sx") * d("sx")
-    vy = nd * d("syy") - d("sy") * d("sy")
-    return s.select(
-        "lag",
-        F.col("n").alias("n_pairs"),
-        F.when(
-            (vx > 0) & (vy > 0),
-            (nd * d("sxy") - d("sx") * d("sy")) / F.sqrt(vx * vy),
-        )
-        .otherwise(F.lit(None).cast("double"))
-        .alias("acf"),
-    )
-
-
 # t-closeness threshold (total-variation distance) — sync-pinned in the
 # oracle. TVD is the categorical-sensitive-attribute instantiation of the
 # t-closeness EMD (Li et al., ICDE'07: equal-distance ground metric).
@@ -3079,94 +2816,6 @@ def events_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Decision-stump split search: candidate thresholds are the STUMP_BUCKET
-# boundaries of the value axis — mirrored literally in the oracle.
-STUMP_BUCKET = 10.0
-
-
-def events_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best-split search for a one-node decision tree (purchase ~ value) —
-    the primitive every tree ensemble repeats millions of times, and the
-    distributed-histogram shape every scalable GBDT (LightGBM/XGBoost
-    hist mode) uses: bucket the feature axis, ONE map-side-combinable
-    histogram pass over the corpus, then evaluate every candidate split
-    from cumulative bucket counts on the tiny histogram frame — the
-    corpus is never rescanned per threshold.
-
-    Exactness: bucket/class cells are exact integers; left/right counts
-    come from an ordered cumulative window over ≤#buckets rows; each
-    threshold's weighted Gini is a fixed per-row double expression over
-    those integers (identical tree on both engines), and the best-split
-    rank carries a (gini ASC, threshold ASC) total tie-break.
-
-    Output: one row per evaluable threshold — split counts, weighted
-    Gini, rank (rank 1 = the stump)."""
-    ev = load_table(spark, sf_dir, "events")
-    cells = (
-        ev.select(
-            F.floor(F.col("value") / F.lit(STUMP_BUCKET)).cast("bigint").alias("b"),
-            F.when(F.col("event_type") == "purchase", F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("y"),
-        )
-        .groupBy("b")
-        .agg(
-            F.count(F.lit(1)).alias("n_b"),
-            F.sum("y").cast("bigint").alias("pos_b"),
-        )
-        # materialized: the histogram feeds the grand total AND the
-        # cumulative split frame — one corpus scan, not one per consumer
-        .transform(truncate_lineage)
-    )
-    w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    tot = cells.agg(
-        F.sum("n_b").alias("n"), F.sum("pos_b").cast("bigint").alias("npos")
-    )
-    cum = (
-        cells.select(
-            "b",
-            F.sum("n_b").over(w).alias("n_left"),
-            F.sum("pos_b").over(w).cast("bigint").alias("pos_left"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            ((F.col("b") + 1) * F.lit(STUMP_BUCKET)).alias("threshold"),
-            "n_left",
-            "pos_left",
-            (F.col("n") - F.col("n_left")).alias("n_right"),
-            (F.col("npos") - F.col("pos_left")).alias("pos_right"),
-            "n",
-        )
-        .where((F.col("n_left") > 0) & (F.col("n_right") > 0))
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    gini_l = (
-        F.lit(1.0)
-        - (d("pos_left") / d("n_left")) * (d("pos_left") / d("n_left"))
-        - ((d("n_left") - d("pos_left")) / d("n_left"))
-        * ((d("n_left") - d("pos_left")) / d("n_left"))
-    )
-    gini_r = (
-        F.lit(1.0)
-        - (d("pos_right") / d("n_right")) * (d("pos_right") / d("n_right"))
-        - ((d("n_right") - d("pos_right")) / d("n_right"))
-        * ((d("n_right") - d("pos_right")) / d("n_right"))
-    )
-    wg = (d("n_left") * gini_l + d("n_right") * gini_r) / d("n")
-    rw = Window.orderBy(F.asc("weighted_gini"), F.asc("threshold"))
-    return (
-        cum.select(
-            "threshold",
-            "n_left",
-            "pos_left",
-            "n_right",
-            "pos_right",
-            wg.alias("weighted_gini"),
-        )
-        .withColumn("rank", F.row_number().over(rw).cast("bigint"))
-    )
-
-
 # Histogram-sketch geometry: bin width, bin cap, and the audited
 # quantiles — mirrored literally in the oracles (sync-pinned).
 QSK_BIN_WIDTH = 4.0
@@ -3341,7 +2990,7 @@ def events_burstiness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gaps are exact integer microseconds from one (user, type)-keyed lag
     window; σ/μ come from exact DECIMAL(38,0)/HUGEINT sufficient sums
-    (gap² at 100 TB passes int64 — the events_autocorrelation envelope)
+    (gap² summed at 100 TB passes int64)
     with the subtraction/sqrt/divide tree in double, identical on both
     engines. Degenerate types (fewer than two gaps or zero σ+μ) yield
     NULL. Output: event_type, n_gaps, mean_gap_us, burstiness."""
@@ -3545,116 +3194,6 @@ def orders_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("peak_cum").cast("double").alias("peak_cum"),
         F.col("trough_cum").cast("double").alias("trough_cum"),
         F.col("max_drawdown").cast("double").alias("max_drawdown"),
-    )
-
-
-# Kaplan-Meier right-censoring horizon: a SESSION whose last event is
-# within the 30-minute session gap of the corpus end may still be alive
-# (its closing silence has not yet been observed), so it is censored —
-# the principled horizon IS the gap. Sync-pinned to the oracle literal.
-# (r8 review fix: the first cut measured USER lifetimes with a 168h
-# horizon, under which every fixture user at every scale was censored —
-# the operator emitted 0 rows and its parity gate was vacuous.)
-KM_CENSOR_MINUTES = 30
-
-
-def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival curve of SESSION duration (first → last event
-    of each 30-min-gap session, minutes) with right-censoring — THE
-    estimator for duration/churn curves under incomplete observation:
-    sessions whose last event is within the session gap of the corpus end
-    are censored (still open), not counted as ended.
-
-        S(tᵢ) = Π_{j ≤ i} (1 − dⱼ/nⱼ)   (dⱼ ended at tⱼ, nⱼ at risk)
-
-    Determinism: durations are exact integer minutes (µs div);
-    sessionization is the shared gaps-and-islands rule (lag window with
-    the (ts, event_id) total order); at-risk counts come from a
-    cumulative window over the per-DURATION aggregate (cardinality =
-    distinct durations, corpus-size-independent); the product is carried
-    as exp(Σ ln(1 − d/n)) with each term rounded to 9dp and summed in
-    DECIMAL(28,9) (order-independent; exp/ln parity verified
-    in-container), with an exact-zero guard for the d = n exhaustion row
-    where ln is undefined. Curve points emit at event (churn) times only
-    (the standard KM step points)."""
-    ev = load_table(spark, sf_dir, "events")
-    mx = ev.agg(F.max(F.expr("unix_micros(cast(ts as timestamp))")).alias("max_us"))
-    wlag = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    marked = ev.select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
-        F.when(
-            F.lag(F.expr("unix_micros(cast(ts as timestamp))")).over(wlag).isNull()
-            | (
-                F.expr("unix_micros(cast(ts as timestamp))")
-                - F.lag(F.expr("unix_micros(cast(ts as timestamp))")).over(wlag)
-                >= F.lit(1800000000)
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("new_s"),
-    )
-    wcum = Window.partitionBy("user_id").orderBy("us").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    sess = (
-        marked.withColumn("sid", F.sum("new_s").over(wcum))
-        .groupBy("user_id", "sid")
-        .agg(
-            F.min("us").alias("first_us"),
-            F.max("us").alias("last_us"),
-        )
-    )
-    users = (
-        sess.crossJoin(F.broadcast(mx))
-        .select(
-            F.expr("(last_us - first_us) div 60000000").alias("duration_h"),
-            F.when(
-                F.col("last_us")
-                >= F.col("max_us") - F.lit(KM_CENSOR_MINUTES * 60000000),
-                F.lit(0),
-            )
-            .otherwise(F.lit(1))
-            .alias("churned"),
-        )
-    )
-    per_t = users.groupBy("duration_h").agg(
-        F.count(F.lit(1)).alias("c_all"),
-        F.sum("churned").alias("d"),
-    )
-    total = per_t.agg(F.sum("c_all").alias("n_users"))
-    wt = Window.orderBy("duration_h").rowsBetween(Window.unboundedPreceding, -1)
-    at_risk = (
-        per_t.crossJoin(F.broadcast(total))
-        .withColumn(
-            "n_at_risk",
-            F.col("n_users") - F.coalesce(F.sum("c_all").over(wt), F.lit(0)),
-        )
-    )
-    ratio = F.col("d").cast("double") / F.col("n_at_risk").cast("double")
-    ln_term = F.when(
-        F.col("d") < F.col("n_at_risk"),
-        F.round(F.log(F.lit(1.0) - ratio), 9),
-    ).otherwise(F.lit(0.0))
-    exhausted = F.when(F.col("d") >= F.col("n_at_risk"), 1).otherwise(0)
-    wc = Window.orderBy("duration_h").rowsBetween(Window.unboundedPreceding, 0)
-    curve = at_risk.select(
-        "duration_h",
-        "n_at_risk",
-        F.col("d").alias("n_churned"),
-        (F.col("c_all") - F.col("d")).alias("n_censored_here"),
-        F.sum(ln_term.cast("decimal(28,9)")).over(wc).alias("lnsum"),
-        F.max(exhausted).over(wc).alias("dead"),
-    )
-    return curve.where(F.col("n_churned") > 0).select(
-        F.col("duration_h").cast("bigint").alias("duration_minutes"),
-        F.col("n_at_risk").cast("bigint").alias("n_at_risk"),
-        F.col("n_churned").cast("bigint").alias("n_churned"),
-        F.col("n_censored_here").cast("bigint").alias("n_censored_here"),
-        F.when(F.col("dead") == 1, F.lit(0.0))
-        .otherwise(F.round(F.exp(F.col("lnsum").cast("double")), 6))
-        .alias("survival"),
     )
 
 
@@ -4079,21 +3618,6 @@ KS_TYPE_B = "click"
 BENFORD_CHI2_CRIT_05 = 15.507
 
 
-# Poisson bootstrap: replicate count and the rank positions of the CI
-# endpoints among the sorted replicate means (rank 2 / rank 31 of 32 ≈ the
-# central 90%+ band). Sync-pinned.
-BOOT_B = 32
-
-
-BOOT_LO_RANK = 2
-
-
-BOOT_HI_RANK = 31
-
-
-BOOT_TYPE = "purchase"
-
-
 # Winsorized stats: lower/upper quantile positions (5% / 95%).
 WINSOR_LO_NUM, WINSOR_HI_NUM, WINSOR_DEN = 5, 95, 100
 
@@ -4138,8 +3662,8 @@ def orders_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_total = 0 (no order has a leading significant digit) makes every
     # term 0.0/0.0 — Spark Divide yields NULL where DuckDB float division
     # yields NaN, which then fails the DECIMAL cast (r10 ADVICE). Guard the
-    # degenerate path to NULL terms on BOTH engines (the conformal
-    # NULL-bounds convention); chi2 and the reject flag follow as NULL.
+    # degenerate path to NULL terms on BOTH engines; chi2 and the reject
+    # flag follow as NULL.
     contrib = F.when(
         F.col("n_total") > 0,
         F.round(
@@ -4170,93 +3694,6 @@ def orders_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "chi2",
             (F.col("chi2") > F.lit(BENFORD_CHI2_CRIT_05)).alias("reject_benford_05"),
         )
-    )
-
-
-def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap confidence interval for the mean purchase value —
-    THE bootstrap that scales: resampling n rows with replacement needs
-    global coordination, but Binomial(n, 1/n) → Poisson(1) per-row
-    replicate weights need only a per-row hash, so all B replicates ride
-    ONE corpus pass with map-side combine (the shuffle carries B keys).
-
-    Deterministic by construction: replicate b's weight for a row is the
-    inverse-CDF Poisson(1) draw from u = md5(event_id:b)/2⁶⁰ ∈ [0,1) —
-    thresholds are exp(-1)·(1, 2, 5/2, 8/3, 65/24) evaluated identically
-    on both engines (exp/division parity verified in-container), weights
-    capped at 5 (P(X≥5) ≈ 0.0004 lands in the cap bucket). Replicate
-    means divide exact cents-integer sums once in double; the CI is
-    RANK-BASED (the 2nd / 31st sorted replicate mean of B=32 — no
-    float percentile interpolation), tie-broken by replicate id. The
-    final ordered window runs over exactly B rows."""
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == BOOT_TYPE
-    )
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    rows = ev.select(F.col("event_id").alias("eid"), cents.alias("cv"))
-    b = F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("b")
-    u = (
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.col("eid"), F.col("b"))), 1, 15), 16, 10)
-        .cast("decimal(38,0)")
-        .cast("double")
-        / F.lit(float(1 << 60))
-    )
-    e1 = F.exp(F.lit(-1.0))
-    w = (
-        F.when(u < e1, F.lit(0))
-        .when(u < e1 * F.lit(2.0), F.lit(1))
-        .when(u < e1 * F.lit(2.5), F.lit(2))
-        .when(u < e1 * (F.lit(8.0) / F.lit(3.0)), F.lit(3))
-        .when(u < e1 * (F.lit(65.0) / F.lit(24.0)), F.lit(4))
-        .otherwise(F.lit(5))
-    )
-    rep = (
-        rows.select("eid", "cv", b)
-        .select(F.col("b"), w.cast("bigint").alias("w"), F.col("cv"))
-        .groupBy("b")
-        .agg(
-            F.sum("w").alias("sw"),
-            # Σ w·cv widened to DECIMAL(38,0): replicate cents sums wrap
-            # BIGINT at web-scale row counts while the oracle's HUGEINT
-            # stays exact (r9 review)
-            F.sum(
-                F.col("w").cast("decimal(38,0)") * F.col("cv").cast("decimal(38,0)")
-            ).alias("swx"),
-        )
-    )
-    mean_b = F.round(
-        F.col("swx").cast("double") / F.col("sw").cast("double") / F.lit(100.0), 9
-    )
-    wr = Window.orderBy(F.col("mean_b").asc(), F.col("b").asc())
-    ranked = rep.where(F.col("sw") > 0).select(
-        "b", mean_b.alias("mean_b")
-    ).withColumn("r", F.row_number().over(wr))
-    point = rows.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.round(
-            F.sum(F.col("cv").cast("decimal(38,0)")).cast("double")
-            / F.count(F.lit(1)).cast("double")
-            / F.lit(100.0),
-            9,
-        ).alias("mean_value"),
-    )
-    # CI endpoints as one-row AGGREGATES (conditional min), not filters:
-    # if fewer than BOOT_HI_RANK replicates survive sw > 0, a filtered
-    # frame would be EMPTY and the crossJoin chain would silently collapse
-    # the whole output to zero rows — an aggregate keeps the one-row
-    # contract and surfaces degeneracy as NULL bounds (r9 ADVICE).
-    lo = ranked.agg(
-        F.min(F.when(F.col("r") == BOOT_LO_RANK, F.col("mean_b"))).alias("ci_lo")
-    )
-    hi = ranked.agg(
-        F.min(F.when(F.col("r") == BOOT_HI_RANK, F.col("mean_b"))).alias("ci_hi")
-    )
-    nrep = ranked.agg(F.count(F.lit(1)).alias("n_replicates"))
-    return (
-        point.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
-        .crossJoin(F.broadcast(nrep))
-        .select("n_rows", "mean_value", "ci_lo", "ci_hi", "n_replicates")
     )
 
 
@@ -4350,9 +3787,9 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group sizes preserved in expectation — the large-sample approximation
     of the exact fixed-size permutation, documented deviation). All B=64
     replicates ride ONE corpus pass (explode is row-local; map-side
-    combine collapses the shuffle to B keys — the Poisson-bootstrap
-    shape). p = (1 + #{|diff_b| ≥ |diff_obs|}) / (n_valid + 1), the
-    standard add-one MC estimator; replicates that left a side empty are
+    combine collapses the shuffle to B keys).
+    p = (1 + #{|diff_b| ≥ |diff_obs|}) / (n_valid + 1), the standard
+    add-one MC estimator; replicates that left a side empty are
     excluded (vanishingly rare beyond toy scale, counted in n_perms).
 
     Determinism: sums/counts are exact cents integers; each replicate's
@@ -4526,214 +3963,6 @@ def orders_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Isotonic-calibration bucketing: per-user activity scores collapse to
-# at most ISO_BUCKET_MAX+1 fixed-width buckets so the PAVA closed form's
-# bucket-triple enumeration stays control-plane sized at ANY corpus
-# scale. Sync-pinned to the oracle literals.
-ISO_BUCKET_W = 5
-
-
-ISO_BUCKET_MAX = 31
-
-
-def events_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ISOTONIC regression (PAVA) of the heavy-purchaser rate against the
-    per-user activity score — the calibration step every score-based
-    curation/reward model needs before its outputs can be read as
-    probabilities (raw bucket rates are non-monotone noise; the isotonic
-    fit is the least-squares monotone curve).
-
-    Computed via the MINIMAX closed form of isotonic regression
-    (Robertson-Wright-Dykstra):
-
-        iso(i) = max_{j<=i} min_{k>=i} mean(y over buckets j..k)
-
-    which is order-free and join-expressible, instead of the sequential
-    pool-adjacent-violators sweep (the independent pytest replays THAT,
-    so the two implementations share no algorithm — the r8 skyline rule).
-
-    Scale shape: ONE corpus pass to the per-user aggregate, one groupBy
-    to at most ISO_BUCKET_MAX+1 fixed-width buckets; the j<=i<=k triple
-    enumeration runs on the bucket relation (<= 32 rows — bounded by the
-    bucket cap, NOT the corpus), all broadcast joins. Rates are single
-    divisions of exact integer sums evaluated identically on both
-    engines; minimax over such doubles needs no summation-order rail."""
-    ev = load_table(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            >= F.lit(AUC_LABEL_MIN_PURCHASES)
-        )
-        .cast("bigint")
-        .alias("label"),
-        F.count(F.lit(1)).alias("activity"),
-    )
-    bucket = F.least(
-        F.expr(f"activity div {ISO_BUCKET_W}"), F.lit(ISO_BUCKET_MAX)
-    )
-    per_b = users.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum("label").alias("n_pos"),
-    )
-    return isotonic_rates(per_b)
-
-
-def isotonic_rates(per_b: DataFrame) -> DataFrame:
-    """Minimax isotonic fit over a (bucket, n_users, n_pos) frame —
-    factored so the pooling behavior (raw rates already monotone on some
-    fixture scales — sf0.001 never pools; sf0.01 pools buckets 11-12 and
-    14-15) is pinned by a synthetic non-monotone pytest THROUGH this
-    exact production pipeline, beside the fixture-data sequential-PAVA
-    cross-check (the bot_verdict / r9 vacuity-audit rule)."""
-    wc = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cum = per_b.select(
-        "bucket",
-        "n_users",
-        "n_pos",
-        F.sum("n_users").over(wc).alias("cn"),
-        F.sum("n_pos").over(wc).alias("cp"),
-    ).transform(truncate_lineage)
-    j, k = cum.alias("j"), cum.alias("k")
-    seg = (
-        j.join(F.broadcast(k), F.col("j.bucket") <= F.col("k.bucket"))
-        .select(
-            F.col("j.bucket").alias("jb"),
-            F.col("k.bucket").alias("kb"),
-            (
-                (F.col("k.cp") - F.col("j.cp") + F.col("j.n_pos")).cast("double")
-                / (F.col("k.cn") - F.col("j.cn") + F.col("j.n_users")).cast("double")
-            ).alias("seg_rate"),
-        )
-    )
-    spine = cum.select(F.col("bucket").alias("i"))
-    iso = (
-        spine.join(
-            F.broadcast(seg),
-            (F.col("jb") <= F.col("i")) & (F.col("kb") >= F.col("i")),
-        )
-        .groupBy("i", "jb")
-        .agg(F.min("seg_rate").alias("m"))
-        .groupBy("i")
-        .agg(F.max("m").alias("rate_iso"))
-    )
-    # project off the CHECKPOINTED cum frame (it already carries bucket /
-    # n_users / n_pos): joining the un-truncated per_b here would
-    # re-execute the whole upstream corpus pass a second time (r10 review)
-    return (
-        cum.join(F.broadcast(iso), cum.bucket == F.col("i"))
-        .select(
-            "bucket",
-            F.col("n_users").cast("bigint").alias("n_users"),
-            F.col("n_pos").cast("bigint").alias("n_pos"),
-            F.round(
-                F.col("n_pos").cast("double") / F.col("n_users").cast("double"), 9
-            ).alias("rate_raw"),
-            F.round(F.col("rate_iso"), 9).alias("rate_isotonic"),
-        )
-    )
-
-
-# Split-conformal parameters: miscoverage alpha = CONF_ALPHA_NUM/DEN,
-# calibration split = even event ids. Sync-pinned to the oracle literals.
-CONF_ALPHA_NUM = 1
-
-
-CONF_ALPHA_DEN = 10
-
-
-CONF_TYPE = "purchase"
-
-
-def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-CONFORMAL upper prediction bound for purchase values — the
-    distribution-free guarantee layer for any score this engine produces
-    (Vovk et al.; Angelopoulos-Bates intro): with calibration scores
-    s_1..s_n and q-hat = the ceil((n+1)(1-alpha))-th order statistic, a
-    fresh draw satisfies P(s <= q-hat) >= 1-alpha with NO distributional
-    assumption. Calibration = even event ids, test = odd (the
-    train/score split protocol of the LM family).
-
-    Exactness: the rank k = ceil((n+1)*(1-alpha)) is pure integer
-    arithmetic (ceil(a/b) = (a + b - 1) div b on non-negative ints); the
-    order statistic is "min v with cumulative count >= k" over the
-    per-value aggregate (the KS/winsorized discipline — the cumulative
-    runs over distinct cents, never raw rows, via the bucketed two-pass
-    machinery); coverage divides two exact integers once. If k > n_cal the textbook bound is +infinity — the
-    guarantee flag goes false and q-hat reads the max (rank n_cal).
-
-    One-row contract: every stage after the per-value aggregate is a
-    GLOBAL aggregate (one row even over empty input) chained by one-row
-    cross joins — an empty calibration or test split yields NULL q_hat /
-    NULL coverage, never zero rows (the bootstrap-CI crossJoin-collapse
-    lesson, re-caught here by the r10 review)."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("event_type") == CONF_TYPE)
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    rows = ev.select(
-        F.col("event_id").alias("eid"),
-        cents.alias("v"),
-        (F.col("event_id") % 2 == 0).alias("is_cal"),
-    )
-    per_v = (
-        rows.where("is_cal")
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        # feeds n_cal, the boundary sketch and both machinery passes
-        .transform(truncate_lineage)
-    )
-    # bucketed two-pass cumulative (r12): distinct calibration cents scale
-    # with the corpus — never a single-partition cumulative window
-    cum = bucketed_cum_before(per_v, "v", "cnt", "_cb").select(
-        "v", (F.col("_cb") + F.col("cnt")).alias("cum")
-    )
-    ncal = per_v.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("n_cal")
-    )
-    # k = ceil((n+1) * (1 - alpha)) = ceil((n+1) * (DEN-NUM) / DEN)
-    k = F.expr(
-        f"((n_cal + 1) * ({CONF_ALPHA_DEN} - {CONF_ALPHA_NUM}) "
-        f"+ {CONF_ALPHA_DEN} - 1) div {CONF_ALPHA_DEN}"
-    )
-    kd = ncal.select(
-        "n_cal",
-        k.alias("k"),
-        (k <= F.col("n_cal")).alias("finite_guarantee"),
-        F.least(k, F.col("n_cal")).alias("k_eff"),
-    )
-    qc = (
-        cum.crossJoin(F.broadcast(kd))
-        .agg(F.min(F.when(F.col("cum") >= F.col("k_eff"), F.col("v"))).alias("qc"))
-    )
-    test = rows.where(~F.col("is_cal")).select("v")
-    stats = test.crossJoin(F.broadcast(qc)).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_test"),
-        F.coalesce(
-            F.sum(F.when(F.col("v") <= F.col("qc"), 1).otherwise(0)), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("n_covered"),
-    )
-    return (
-        kd.crossJoin(F.broadcast(qc))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "n_cal",
-            F.col("k").cast("bigint").alias("k"),
-            "finite_guarantee",
-            (F.col("qc").cast("double") / F.lit(100.0)).alias("q_hat"),
-            "n_test",
-            "n_covered",
-            F.when(
-                F.col("n_test") > 0,
-                F.round(
-                    F.col("n_covered").cast("double")
-                    / F.col("n_test").cast("double"),
-                    6,
-                ),
-            ).alias("coverage"),
-        )
-    )
-
-
 # Theil-Sen evaluation window: the trailing year of the series. Slopes are
 # near-unique doubles, so the median's ordered cumulative pass is a
 # single-task sort of the whole pair list — days²/2 pairs. A full-history
@@ -4862,240 +4091,6 @@ def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One-way ANOVA / Tukey-HSD critical values at df -> infinity, TABULATED
-# BY GROUP COUNT k (the operator computes k from the data — a fixture
-# gaining or losing an event type must move the bound, not silently keep
-# the k=5 quantile; r11 review). Within-group df is ~2k-20k on every
-# fixture, where the infinite-df quantiles are correct to 3dp. Outside
-# the tabulated range both reject flags are NULL (no bound claimed).
-# Sync-pinned to the oracle dicts (test_r11_constants_in_sync).
-TUKEY_Q_CRIT_05_BY_K = {  # q(k, df=inf, alpha=0.05), studentized range
-    2: 2.772, 3: 3.314, 4: 3.633, 5: 3.858, 6: 4.030,
-    7: 4.170, 8: 4.286, 9: 4.387, 10: 4.474,
-}
-
-
-ANOVA_F_CRIT_05_BY_DF1 = {  # F(df1, inf) upper 5% point (= chi2(df1)/df1)
-    1: 3.841, 2: 2.996, 3: 2.605, 4: 2.372, 5: 2.214,
-    6: 2.099, 7: 2.010, 8: 1.938, 9: 1.880,
-}
-
-
-def _crit_by_key(key: Column, table: dict[int, float]) -> Column:
-    """Chained-CASE lookup of a tabulated critical value; NULL off-table."""
-    out = F.lit(None).cast("double")
-    for kk in sorted(table, reverse=True):
-        out = F.when(key == F.lit(kk), F.lit(table[kk])).otherwise(out)
-    return out
-
-
-def events_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA + Tukey-Kramer HSD across event-type VALUE groups —
-    the multiple-comparisons readout missing beside the two-sample tests
-    (KS, Mann-Whitney, permutation): one F test for "any group differs",
-    then every pair tested against the studentized-range bound that
-    controls the FAMILY-wISE error rate (plain pairwise t-tests at
-    alpha=.05 would fire spuriously across k·(k-1)/2 comparisons).
-
-    Exact evaluation: per-group sufficient statistics (n, Σx, Σx²) in
-    exact cents DECIMAL(38,0); each group's between-term (Σx)²/n rides
-    the established float-mean rail (round to 9dp → DECIMAL(28,9) → one
-    exact sum) so no double is ever summed in nondeterministic order;
-    SSW/MSE/F/q are identical double expression trees on both engines.
-
-    Scale shape: ONE map-side-combined groupBy(event_type) over the scan
-    (k·3 numbers cross the wire), one k-row aggregate, one broadcast
-    k×k pair join — corpus touched once, everything after is O(k²)."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    g = (
-        ev.select(F.col("event_type").alias("et"), cents.alias("c"))
-        .groupBy("et")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(d38(F.col("c"))).alias("sx"),
-            F.sum(d38(F.col("c")) * d38(F.col("c"))).alias("sxx"),
-        )
-        .transform(truncate_lineage)  # two consumers: totals + pair join
-    )
-    # between-group term (Σx)²/n per group on the 9dp-DECIMAL rail
-    bt = F.round(
-        (F.col("sx") * F.col("sx")).cast("double") / F.col("n").cast("double"), 9
-    ).cast("decimal(28,9)")
-    tot = g.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("n").cast("bigint").alias("n_total"),
-        F.sum("sx").alias("sx_tot"),
-        F.sum("sxx").alias("sxx_tot"),
-        F.sum(bt).alias("a_between"),
-    ).select(
-        "k",
-        "n_total",
-        # SSW = Σx²_tot − Σ_g (Σx_g)²/n_g ; SSB = Σ_g (Σx_g)²/n_g − (ΣΣx)²/N
-        (
-            F.col("sxx_tot").cast("double") - F.col("a_between").cast("double")
-        ).alias("ssw"),
-        (
-            F.col("a_between").cast("double")
-            - (F.col("sx_tot") * F.col("sx_tot")).cast("double")
-            / F.col("n_total").cast("double")
-        ).alias("ssb"),
-    )
-    stats = tot.select(
-        "k",
-        "n_total",
-        (F.col("ssb") / (F.col("k") - 1).cast("double")).alias("msb"),
-        (F.col("ssw") / (F.col("n_total") - F.col("k")).cast("double")).alias(
-            "mse"
-        ),
-    ).select(
-        "k",
-        "n_total",
-        "mse",
-        (F.col("msb") / F.col("mse")).alias("f_stat"),
-        _crit_by_key(F.col("k"), TUKEY_Q_CRIT_05_BY_K).alias("q_crit_05"),
-        _crit_by_key(F.col("k") - 1, ANOVA_F_CRIT_05_BY_DF1).alias("f_crit_05"),
-    )
-    a = g.select(
-        F.col("et").alias("type_a"), F.col("n").alias("n_a"), F.col("sx").alias("sa")
-    )
-    b = g.select(
-        F.col("et").alias("type_b"), F.col("n").alias("n_b"), F.col("sx").alias("sb")
-    )
-    mean = lambda s, n: F.col(s).cast("double") / F.col(n).cast("double")  # noqa: E731
-    se = F.sqrt(
-        (F.col("mse") / F.lit(2.0))
-        * (
-            F.lit(1.0) / F.col("n_a").cast("double")
-            + F.lit(1.0) / F.col("n_b").cast("double")
-        )
-    )
-    q = F.abs(mean("sa", "n_a") - mean("sb", "n_b")) / se
-    return (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("type_a") < F.col("type_b"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "type_a",
-            "type_b",
-            "n_a",
-            "n_b",
-            mean("sa", "n_a").alias("mean_a_cents"),
-            mean("sb", "n_b").alias("mean_b_cents"),
-            q.alias("q_stat"),
-            "q_crit_05",
-            (q > F.col("q_crit_05")).alias("reject_hsd_05"),
-            "f_stat",
-            "f_crit_05",
-            (F.col("f_stat") > F.col("f_crit_05")).alias("reject_anova_05"),
-        )
-    )
-
-
-# Two-sided alpha=0.05 / power=0.80 normal quantiles and the relative-MDE
-# grid for the experiment-design readout. Sync-pinned to the oracle
-# literals (test_r11_constants_in_sync).
-POWER_Z_ALPHA_2 = 1.96
-
-
-POWER_Z_BETA_80 = 0.842
-
-
-POWER_MDE_PCTS = [1, 2, 5, 10]
-
-
-def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B sample-size / power readout for the per-user purchase-value
-    metric — the experiment-DESIGN companion to the readout family
-    (ab_lift, CUPED, DiD): for each relative MDE on the grid, the
-    per-arm sample size required at alpha=.05 / power .80,
-
-        n = 2·s²·(z_{α/2} + z_β)² / τ²,   τ = mde%·mean_control,
-
-    against what the corpus actually has — "how small an effect could
-    this dataset even detect?" is the first question before any lift
-    number is trusted.
-
-    Exact evaluation: the control arm's mean and sample variance come
-    from exact cents sufficient statistics — the variance numerator
-    n·Σx² − (Σx)² is exact DECIMAL(38,0) and divides by n·(n−1) ONCE in
-    double, so every emitted double is a single expression tree over
-    exact integers (no float sums). The MDE grid is a 4-row literal
-    spine; n_required is one ceil of an identical double on both
-    engines.
-
-    Scale shape: one map-side-combined per-user aggregate, one 2-row arm
-    rollup, a broadcast 4-row spine join — corpus touched once."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_user = (
-        ev.where(F.col("event_type") == F.lit("purchase"))
-        .groupBy("user_id")
-        .agg(F.sum(cents).cast("bigint").alias("x"))
-    )
-    x38 = F.col("x").cast("decimal(38,0)")
-    is_ctrl = F.col("user_id") % 2 == 0
-    # ONE global aggregate over the per-user rollup (never a filter per
-    # arm: a missing arm must yield NULL stats on a 4-row spine, not zero
-    # rows — the bootstrap-CI collapse class; r11 review, which also
-    # flagged the two-filter shape as a double corpus scan).
-    arms = per_user.agg(
-        F.sum(F.when(is_ctrl, 1).otherwise(0)).cast("bigint").alias("nc"),
-        F.sum(F.when(is_ctrl, x38)).alias("sxc"),
-        F.sum(F.when(is_ctrl, x38 * x38)).alias("sxxc"),
-        F.sum(F.when(~is_ctrl, 1).otherwise(0)).cast("bigint").alias("nt"),
-    )
-    nc = F.col("nc")
-    # n_control <= 1 zeroes the sample-variance divisor — ANSI Spark
-    # raises where DuckDB yields Infinity; NULL stats cascade to NULL
-    # requirements and a NULL powered verdict on both engines.
-    ctrl = arms.select(
-        nc.alias("n_control"),
-        F.col("nt").alias("n_treatment"),
-        F.when(
-            nc > 0, F.col("sxc").cast("double") / nc.cast("double")
-        ).alias("mean_control_cents"),
-        F.when(
-            nc > 1,
-            (nc * F.col("sxxc") - F.col("sxc") * F.col("sxc")).cast("double")
-            / (nc * (nc - 1)).cast("double"),
-        ).alias("var_control"),
-    )
-    spine = spark.range(1).select(
-        F.explode(F.array(*[F.lit(p) for p in POWER_MDE_PCTS])).alias("mde_pct")
-    )
-    tau = (
-        F.col("mde_pct").cast("double")
-        / F.lit(100.0)
-        * F.col("mean_control_cents")
-    )
-    zsum = F.lit(POWER_Z_ALPHA_2) + F.lit(POWER_Z_BETA_80)
-    # tau = 0 (an all-zero control metric) would zero the divisor — same
-    # ANSI-raises guard class as the variance above.
-    n_req = F.when(
-        tau > 0,
-        F.ceil(
-            F.lit(2.0) * F.col("var_control") * zsum * zsum / (tau * tau)
-        ).cast("bigint"),
-    )
-    return spine.crossJoin(F.broadcast(ctrl)).select(
-        "mde_pct",
-        "n_control",
-        "n_treatment",
-        "mean_control_cents",
-        "var_control",
-        tau.alias("tau_cents"),
-        n_req.alias("n_required_per_arm"),
-        # least() skips NULLs asymmetrically across engines (r9 rule:
-        # decide nullability BEFORE, never through, least/greatest)
-        F.when(
-            n_req.isNotNull(),
-            F.least(F.col("n_control"), F.col("n_treatment")) >= n_req,
-        ).alias("powered"),
-    )
-
-
 # Randomized-response (Warner / RAPPOR-style local DP) parameters: flip
 # probability f = 0.5 and the deterministic md5 coin salts. Sync-pinned
 # to the oracle literals (test_r11_constants_in_sync).
@@ -5113,7 +4108,7 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 − f the true bit is reported, otherwise a uniform coin, and the
     collector debiases  p̂ = (mean_reported − f/2)/(1 − f).
 
-    Deterministic by construction (the Poisson-bootstrap convention):
+    Deterministic by construction:
     both coins are md5 draws — flip if md5(rr-coin:user)/2⁶⁰ < f, noise
     bit = md5(rr-value:user) parity — so the privatized table, the
     estimate, and the |p̂ − p| error are reproducible facts on any
@@ -5192,311 +4187,6 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
         abs_err.alias("abs_err"),
         bound.alias("err_bound"),
         (abs_err <= bound).alias("within_contract"),
-    )
-
-
-# Granger-style lagged-predictor screen: cause/effect event types and the
-# F(1, inf) critical value. Sync-pinned to the oracle literals
-# (test_r11_constants_in_sync).
-GRANGER_CAUSE_TYPE = "view"
-
-
-GRANGER_EFFECT_TYPE = "purchase"
-
-
-GRANGER_F_CRIT_05 = 3.841  # F(1, inf) upper 5% = chi2(1)
-
-
-def events_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Granger-style causality screen: do yesterday's VIEW counts carry
-    information about today's PURCHASE counts beyond purchase history? —
-    the lead-lag readout missing beside the correlation family (ACF,
-    cross-type correlations say "move together"; this asks "does one
-    LEAD the other", the standard screen before trusting a funnel or
-    attribution story).
-
-    Full model p_t = b0 + b1·p_{t-1} + b2·v_{t-1} vs restricted
-    p_t = c0 + c1·p_{t-1}; the F test on the SSR gap (1 numerator df,
-    F(1, inf) = 3.841) is the Granger verdict. Lags join on the CALENDAR
-    day (cur.day = prev.day + 1 — the r7 calendar-spine rule, never
-    observed-row lag), so gap days drop out honestly.
-
-    Exact evaluation: both OLS fits are CLOSED FORM over exact integer
-    sufficient statistics (nine DECIMAL(38,0) sums; Cramer 3x3 /
-    normal-equation 2x2 determinants as identical double trees); the two
-    SSRs ride the 9dp-DECIMAL sum rail (per-day squared residuals round
-    to 9dp before summing). One corpus pass, a ~30-row lag join, 1-row
-    aggregates — the daily-series shape."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-            .cast("bigint")
-            .alias("day"),
-            "event_type",
-        )
-        .groupBy("day")
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == GRANGER_EFFECT_TYPE, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("p"),
-            F.sum(
-                F.when(F.col("event_type") == GRANGER_CAUSE_TYPE, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("v"),
-        )
-        # ONE corpus pass: both lag-join sides re-read this checkpoint,
-        # never the scan (r11 review — the _daily_event_counts precedent)
-        .transform(truncate_lineage)
-    )
-    cur = daily.select(F.col("day").alias("d"), F.col("p").alias("y"))
-    prev = daily.select(
-        (F.col("day") + 1).alias("d"),
-        F.col("p").alias("pl"),
-        F.col("v").alias("vl"),
-    )
-    feat = cur.join(prev, "d").transform(truncate_lineage)  # 3 consumers
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    stats = feat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(d38(F.col("y"))).alias("sp"),
-        F.sum(d38(F.col("pl"))).alias("spl"),
-        F.sum(d38(F.col("vl"))).alias("svl"),
-        F.sum(d38(F.col("pl")) * d38(F.col("pl"))).alias("spl2"),
-        F.sum(d38(F.col("vl")) * d38(F.col("vl"))).alias("svl2"),
-        F.sum(d38(F.col("pl")) * d38(F.col("vl"))).alias("splvl"),
-        F.sum(d38(F.col("y")) * d38(F.col("pl"))).alias("sppl"),
-        F.sum(d38(F.col("y")) * d38(F.col("vl"))).alias("spvl"),
-    )
-    dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    n, sp, spl, svl = dd("n"), dd("sp"), dd("spl"), dd("svl")
-    spl2, svl2, splvl, sppl, spvl = (
-        dd("spl2"), dd("svl2"), dd("splvl"), dd("sppl"), dd("spvl"),
-    )
-    det = (
-        n * (spl2 * svl2 - splvl * splvl)
-        - spl * (spl * svl2 - splvl * svl)
-        + svl * (spl * splvl - spl2 * svl)
-    )
-    det0 = (
-        sp * (spl2 * svl2 - splvl * splvl)
-        - spl * (sppl * svl2 - splvl * spvl)
-        + svl * (sppl * splvl - spl2 * spvl)
-    )
-    det1 = (
-        n * (sppl * svl2 - splvl * spvl)
-        - sp * (spl * svl2 - splvl * svl)
-        + svl * (spl * spvl - sppl * svl)
-    )
-    det2 = (
-        n * (spl2 * spvl - sppl * splvl)
-        - spl * (spl * spvl - sppl * svl)
-        + sp * (spl * splvl - spl2 * svl)
-    )
-    # Collinear/constant lag columns make det = 0 (and a constant p-lag
-    # makes the restricted normal-equation denominator 0) — ANSI Spark
-    # raises on the double division where DuckDB yields Infinity (r11
-    # review, the same class as the ssr_full guard below). NULL
-    # coefficients cascade to NULL SSRs/F/verdict on both engines.
-    den2 = n * spl2 - spl * spl
-    c1 = F.when(den2 != 0, (n * sppl - spl * sp) / den2)
-    coeffs = stats.select(
-        "n",
-        F.when(det != 0, det0 / det).alias("b0"),
-        F.when(det != 0, det1 / det).alias("b1"),
-        F.when(det != 0, det2 / det).alias("b2"),
-        F.when(den2 != 0, (sp - c1 * spl) / n).alias("c0"),
-        c1.alias("c1"),
-    )
-    r9 = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    y, pl, vl = (
-        F.col("y").cast("double"),
-        F.col("pl").cast("double"),
-        F.col("vl").cast("double"),
-    )
-    rf = y - (F.col("b0") + F.col("b1") * pl + F.col("b2") * vl)
-    rr = y - (F.col("c0") + F.col("c1") * pl)
-    ssr = (
-        feat.crossJoin(F.broadcast(coeffs))
-        .select(r9(rf * rf).alias("tf"), r9(rr * rr).alias("tr"), "n")
-        .agg(
-            F.max("n").alias("n_days"),
-            F.sum("tf").cast("double").alias("ssr_full"),
-            F.sum("tr").cast("double").alias("ssr_restricted"),
-        )
-    )
-    # ssr_full = 0 (the full model fits perfectly) makes the F denominator
-    # zero — ANSI Spark RAISES on the double division where DuckDB yields
-    # Infinity, so the degenerate path is guarded on both engines (the
-    # conformal NULL-bounds convention): F is NULL, and the verdict falls
-    # through to "restricted strictly worse than a perfect fit" = reject.
-    # n_days <= 3 zeroes the df divisor — same ANSI-raises class; both
-    # that and the perfect-fit fall-through require the guards together.
-    testable = (F.col("ssr_full") > 0) & (F.col("n_days") > 3)
-    f_stat = F.when(
-        testable,
-        (F.col("ssr_restricted") - F.col("ssr_full"))
-        / (F.col("ssr_full") / (F.col("n_days") - F.lit(3)).cast("double")),
-    )
-    # The perfect-fit fall-through also requires df > 0: a SATURATED
-    # model (n_days = 3) fits perfectly by construction and supports no
-    # verdict at all.
-    reject = F.when(testable, f_stat > F.lit(GRANGER_F_CRIT_05)).when(
-        (F.col("ssr_full") == 0)
-        & (F.col("ssr_restricted") > 0)
-        & (F.col("n_days") > 3),
-        F.lit(True),
-    )
-    return (
-        ssr.crossJoin(F.broadcast(coeffs.select("b0", "b1", "b2", "c0", "c1")))
-        .select(
-            "n_days",
-            "b0",
-            "b1",
-            "b2",
-            "c0",
-            "c1",
-            "ssr_full",
-            "ssr_restricted",
-            f_stat.alias("f_stat"),
-            reject.alias("granger_reject_05"),
-        )
-    )
-
-
-# Two-sided 5% normal critical value — shared with the Mann-Whitney flag;
-# mirrored literally in the DuckDB oracles (sync-pinned).
-WSR_Z_05 = 1.959964
-
-
-def events_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wilcoxon signed-rank test of PAIRED per-user spend: weekend total
-    cents vs weekday total cents for the SAME user — the within-subject
-    companion of Mann-Whitney (which compares two independent samples);
-    the standard nonparametric answer to "do users spend differently on
-    weekends?" with every user serving as their own control.
-
-    Textbook evaluation on exact integers: d_u = weekend − weekday cents
-    per user (one corpus pass); zero differences drop (the standard
-    convention); |d| ranks are tie-averaged DOUBLED ranks from the
-    ``bucketed_cum_before`` machinery over the per-|d| aggregate (distinct
-    |d| values scale with the user base — never a single-partition
-    window); 2·W⁺ = Σ_v c_pos(v)·(2·prev(v) + c(v) + 1) rides
-    DECIMAL(38,0). Normal approximation with the tie correction:
-    μ = n(n+1)/4, σ² = n(n+1)(2n+1)/24 − Σ(t³−t)/48; z = (W⁺ − μ)/σ
-    divides once in double, NULL when n = 0 or σ = 0.
-
-    Scale shape: one corpus pass map-side combined to per-user cents; one
-    groupBy over distinct |d|; the bucketed cumulative; a 1-row closing
-    aggregate."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    wk = F.dayofweek("ts").isin(1, 7)
-    per_user = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.when(wk, cents).otherwise(0))
-            - F.sum(F.when(~wk, cents).otherwise(0))
-        )
-        .cast("bigint")
-        .alias("d")
-    )
-    per_abs = (
-        per_user.where(F.col("d") != 0)
-        .groupBy(F.abs(F.col("d")).alias("ad"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.when(F.col("d") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("c_pos"),
-        )
-        # feeds the boundary sketch, both machinery passes and the tie agg
-        .transform(truncate_lineage)
-    )
-    ranked = bucketed_cum_before(per_abs, "ad", "c", "prev")
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    s = ranked.agg(
-        F.sum("c").cast("bigint").alias("n"),
-        F.sum(
-            d38("c_pos") * (F.lit(2) * d38("prev") + d38("c") + F.lit(1))
-        ).alias("w2_plus"),
-        F.sum(d38("c") * d38("c") * d38("c") - d38("c")).alias("t3"),
-    )
-    nd = F.coalesce(F.col("n"), F.lit(0)).cast("double")
-    w_plus = F.col("w2_plus").cast("double") / F.lit(2.0)
-    mu = nd * (nd + 1.0) / 4.0
-    var = nd * (nd + 1.0) * (2.0 * nd + 1.0) / 24.0 - F.col("t3").cast(
-        "double"
-    ) / 48.0
-    z = F.when((F.col("n") > 0) & (var > 0), (w_plus - mu) / F.sqrt(var))
-    return s.select(
-        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_pairs"),
-        F.round(w_plus, 6).alias("w_plus"),
-        F.round(mu, 6).alias("mu_w"),
-        F.round(z, 9).alias("z"),
-        (F.abs(z) > F.lit(WSR_Z_05)).alias("reject_equal_05"),
-    )
-
-
-def events_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall monotonic-trend test on the daily event-count series —
-    the significance test conventionally paired with the Theil-Sen slope
-    (orders_theil_sen_trend): S = Σ_{i<j} sign(y_j − y_i) over day pairs,
-    with the tie-corrected normal approximation
-    σ² = [n(n−1)(2n+5) − Σ_t t(t−1)(2t+5)] / 18 and the ±1 continuity
-    correction on z.
-
-    Exactness: counts are integers, sign() is exact, S and the tie term
-    are exact integer sums (DECIMAL(38,0) — n³-sized at long calendars);
-    z divides once in double. The pair stage is the Theil-Sen shape: a
-    broadcast nested-loop self-join of the per-DAY aggregate — days²/2
-    pairs, FIXED by the calendar and independent of corpus row count."""
-    daily = _daily_event_counts(spark, sf_dir).transform(truncate_lineage)
-    a = daily.select(F.col("day").alias("d1"), F.col("daily_count").alias("y1"))
-    b = daily.select(F.col("day").alias("d2"), F.col("daily_count").alias("y2"))
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    pairs = a.crossJoin(F.broadcast(b)).where(F.col("d2") > F.col("d1"))
-    s_stat = pairs.agg(
-        F.sum(
-            F.signum((F.col("y2") - F.col("y1")).cast("double")).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("s")
-    )
-    ties = (
-        daily.groupBy("daily_count")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-        .agg(
-            F.sum(
-                d38(F.col("t"))
-                * (d38(F.col("t")) - F.lit(1))
-                * (F.lit(2) * d38(F.col("t")) + F.lit(5))
-            ).alias("tie_term")
-        )
-    )
-    n_days = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    out = s_stat.crossJoin(F.broadcast(ties)).crossJoin(F.broadcast(n_days))
-    nd = F.col("n").cast("double")
-    var = (
-        nd * (nd - 1.0) * (2.0 * nd + 5.0) - F.col("tie_term").cast("double")
-    ) / 18.0
-    sd = F.col("s").cast("double")
-    z = F.when(
-        (F.col("n") >= 2) & (var > 0),
-        F.when(F.col("s") > 0, (sd - 1.0) / F.sqrt(var))
-        .when(F.col("s") < 0, (sd + 1.0) / F.sqrt(var))
-        .otherwise(F.lit(0.0)),
-    )
-    return out.select(
-        F.col("n").alias("n_days"),
-        F.col("s").alias("s_stat"),
-        F.round(var, 6).alias("var_s"),
-        F.round(z, 9).alias("z"),
-        (F.abs(z) > F.lit(WSR_Z_05)).alias("trend_significant_05"),
     )
 
 
@@ -5622,880 +4312,4 @@ def events_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("k") - 1).cast("bigint").alias("df1"),
         F.round(df2, 6).alias("df2"),
         F.round(f_stat, 9).alias("f_stat"),
-    )
-
-
-# McNemar 5% chi-square(1) critical value and the repeat-purchaser
-# threshold (the fixture is dense — EVERY user has ≥1 purchase in both
-# halves at every scale, so an any-purchase flag is all-concordant and
-# the test vacuously NULL; the count threshold gives real discordance —
-# the AUC_LABEL_MIN_PURCHASES precedent). Both mirrored
-# in the oracle (sync-pinned).
-MCNEMAR_CHI2_05 = 3.841459
-
-
-MCNEMAR_CONV_MIN = 3
-
-
-def events_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar's test of PAIRED conversion: was the same user a REPEAT
-    purchaser (≥MCNEMAR_CONV_MIN purchases) in the first half of the
-    timeline vs the second half? The within-subject binary companion of
-    the Wilcoxon pair: only the DISCORDANT pairs carry information —
-    b = converted-then-lapsed, c = lapsed-then-converted — and the
-    continuity-corrected χ² = (|b−c|−1)²/(b+c) tests marginal homogeneity
-    ("is conversion drifting between periods?").
-
-    Exactness: the split day is the exact integer midpoint of the
-    epoch-day range (the orders_rfm_migration convention); b and c are
-    exact integer counts from ONE corpus pass; χ² is one double division,
-    NULL when b+c = 0 (no discordant pairs). Scale shape: per-user flags
-    map-side combine; everything after is a 1-row aggregate."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400").cast(
-        "bigint"
-    )
-    base = ev.select(
-        "user_id", day.alias("day"), (F.col("event_type") == "purchase").alias("p")
-    )
-    rng = base.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    flagged = base.crossJoin(F.broadcast(rng)).select(
-        "user_id",
-        "p",
-        (F.col("day") <= (F.col("dmin") + F.col("dmax")) / F.lit(2)).alias(
-            "first_half"
-        ),
-    )
-    per_user = flagged.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("first_half") & F.col("p"), 1).otherwise(0))
-            >= F.lit(MCNEMAR_CONV_MIN)
-        ).alias("conv1"),
-        (
-            F.sum(F.when(~F.col("first_half") & F.col("p"), 1).otherwise(0))
-            >= F.lit(MCNEMAR_CONV_MIN)
-        ).alias("conv2"),
-    )
-    s = per_user.agg(
-        F.sum(F.when(F.col("conv1") & ~F.col("conv2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("b"),
-        F.sum(F.when(~F.col("conv1") & F.col("conv2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("c"),
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-    )
-    bd, cd = F.col("b").cast("double"), F.col("c").cast("double")
-    chi2 = F.when(
-        F.col("b") + F.col("c") > 0,
-        (F.abs(bd - cd) - 1.0) * (F.abs(bd - cd) - 1.0) / (bd + cd),
-    )
-    return s.select(
-        "n_users",
-        F.col("b").alias("conv_then_lapsed"),
-        F.col("c").alias("lapsed_then_conv"),
-        F.round(chi2, 9).alias("chi2_cc"),
-        (chi2 > F.lit(MCNEMAR_CHI2_05)).alias("reject_homogeneity_05"),
-    )
-
-
-def events_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Odds ratio of purchase on weekends vs weekdays with the Woolf
-    log-OR confidence interval — the effect-size readout beside the test
-    family (a significant z says "different"; the OR says HOW different):
-    OR = (a·d)/(b·c) over the 2×2 (weekend?, purchase?) event table,
-    CI = exp(ln OR ± 1.96·√(1/a+1/b+1/c+1/d)), with the Haldane-Anscombe
-    +0.5 continuity correction applied to EVERY cell when any cell is
-    zero (the standard convention, flagged in the output).
-
-    Exactness: the four cells are exact integers from ONE corpus pass;
-    ln/exp round to 7dp (the established transcendental pin) and the CI
-    arithmetic divides once in double."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    wk = F.dayofweek("ts").isin(1, 7)
-    pur = F.col("event_type") == "purchase"
-    s = ev.agg(
-        F.sum(F.when(wk & pur, 1).otherwise(0)).cast("bigint").alias("a"),
-        F.sum(F.when(wk & ~pur, 1).otherwise(0)).cast("bigint").alias("b"),
-        F.sum(F.when(~wk & pur, 1).otherwise(0)).cast("bigint").alias("c"),
-        F.sum(F.when(~wk & ~pur, 1).otherwise(0)).cast("bigint").alias("d"),
-    )
-    corrected = (
-        (F.col("a") == 0) | (F.col("b") == 0) | (F.col("c") == 0) | (F.col("d") == 0)
-    )
-    cell = lambda c: F.col(c).cast("double") + F.when(  # noqa: E731
-        corrected, F.lit(0.5)
-    ).otherwise(F.lit(0.0))
-    a, b, c, d = cell("a"), cell("b"), cell("c"), cell("d")
-    ln_or = F.round(F.log(a * d / (b * c)), 7)
-    se = F.sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d)
-    return s.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        corrected.alias("haldane_corrected"),
-        F.round(F.exp(ln_or), 7).alias("odds_ratio"),
-        F.round(F.exp(ln_or - F.lit(1.959964) * se), 7).alias("ci_lo"),
-        F.round(F.exp(ln_or + F.lit(1.959964) * se), 7).alias("ci_hi"),
-    )
-
-
-# Page-Hinkley design constants: the tolerance delta (in events/day) and
-# the alarm threshold lambda. Mirrored literally in the oracle.
-PH_DELTA = 0.0
-
-
-PH_LAMBDA = 50.0
-
-
-def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-Hinkley sequential change detector on daily event counts —
-    the online mean-shift alarm (an offline two-sided CUSUM chart's
-    sequential counterpart): PH_t = Σ_{i≤t} (x_i − x̄_t − δ) with x̄_t the
-    RUNNING mean, alarm when PH_t − min_{i≤t} PH_i > λ (upward drift).
-
-    This is the STREAMING form every drift library implements
-    (Hinkley 1971): each point deviates against the running mean AS OF
-    that point, PH_t = Σ_{i≤t} (x_i − x̄_i − δ) with x̄_i = S_i/i.
-    Exactness over the calendar-bounded day spine: S_i and i are exact
-    integers, each term x_i − S_i/i − δ is one double expression rounded
-    to 9dp and summed on the DECIMAL(28,9) rail, and the running minimum
-    and alarm comparison operate on railed DECIMALs — engine-identical.
-
-    Scale shape: one corpus pass map-side combined to the day spine;
-    three cumulative windows over the ~#days relation (bounded — the MW
-    discipline); the report is a 1-row aggregate (first alarm day, max
-    excursion)."""
-    daily = _daily_event_counts(spark, sf_dir).transform(truncate_lineage)
-    wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    run = daily.select(
-        "day",
-        "daily_count",
-        F.sum("daily_count").over(wc).alias("s"),
-        F.count(F.lit(1)).over(wc).alias("t"),
-    )
-    term = F.round(
-        F.col("daily_count").cast("double")
-        - F.col("s").cast("double") / F.col("t").cast("double")
-        - F.lit(PH_DELTA),
-        9,
-    ).cast("decimal(28,9)")
-    ph = run.select(
-        "day", term.alias("term")
-    ).select(
-        "day", F.sum("term").over(wc).alias("ph")
-    )
-    marked = ph.select(
-        "day",
-        "ph",
-        (F.col("ph") - F.min("ph").over(wc)).alias("excursion"),
-    )
-    first_alarm = (
-        marked.where(F.col("excursion").cast("double") > F.lit(PH_LAMBDA))
-        .orderBy(F.asc("day"))
-        .limit(1)
-        .select(
-            F.col("day").alias("alarm_day"),
-            F.round(F.col("excursion").cast("double"), 6).alias(
-                "excursion_at_alarm"
-            ),
-        )
-    )
-    tail = marked.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.round(F.max("excursion").cast("double"), 6).alias("max_excursion"),
-    )
-    return tail.join(F.broadcast(first_alarm), how="left").select(
-        "n_days",
-        "max_excursion",
-        F.col("alarm_day").cast("bigint").alias("alarm_day"),
-        "excursion_at_alarm",
-        F.col("alarm_day").isNotNull().alias("drift_detected"),
-    )
-
-
-def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-D Wasserstein (earth-mover) distance between the weekday and
-    weekend event-value distributions — the drift metric that reports HOW
-    FAR the distribution moved in value units, completing the drift
-    family: PSI and JS score overlap, KS the maximum ECDF gap, W1 the
-    area between the ECDFs (W₁ = ∫|F_ref − F_act| dx), which is what a
-    spend/latency SLO actually cares about.
-
-    Exact evaluation on the per-cents-value aggregate: both ECDF
-    numerators ride ONE ``bucketed_cum_before`` pass and the support gaps
-    Δv come from ``bucketed_lead`` (built for this query — a lead over
-    distinct cents scales with the corpus, so it uses the same
-    boundary-sketch machinery, never a single-partition window). Each
-    support term |cum_ref·n_act − cum_act·n_ref|·Δv is an exact
-    DECIMAL(38,0) integer, so the full area accumulates exactly and the
-    ONLY division is the final 1/(n_ref·n_act·100): engines cannot
-    ulp-split. NULL values drop (the PSI rule).
-
-    Scale shape: one corpus pass map-side combined to distinct cents,
-    then two bucketed-machinery passes and a 1-row aggregate."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_v = (
-        ev.select(
-            cents.alias("v"),
-            F.dayofweek("ts").isin(1, 7).alias("is_weekend"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(~F.col("is_weekend"), 1).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(F.col("is_weekend"), 1).otherwise(0)).alias("c_act"),
-        )
-        # feeds the totals and both machinery passes (cum + lead)
-        .transform(truncate_lineage)
-    )
-    tot = per_v.agg(
-        F.sum("c_ref").cast("bigint").alias("n_ref"),
-        F.sum("c_act").cast("bigint").alias("n_act"),
-    )
-    # ONE boundary sketch shared by both machinery passes (the r12
-    # customer_rfm shared-sketch lesson: the sketch job is the dominant
-    # fixture-scale cost of the machinery)
-    bounds = _bucket_boundaries(per_v, "v", [])
-    cum = bucketed_cum_before(
-        per_v, "v", ["c_ref", "c_act"], ["_pr", "_pa"], bounds=bounds
-    ).select(
-        "v",
-        (F.col("_pr") + F.col("c_ref")).alias("cum_ref"),
-        (F.col("_pa") + F.col("c_act")).alias("cum_act"),
-    )
-    gapped = bucketed_lead(cum, "v", "nxt", bounds=bounds).crossJoin(
-        F.broadcast(tot)
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    # exact scaled area: |F_ref−F_act|·n_ref·n_act·Δv per support segment
-    term = F.abs(
-        d38("cum_ref") * d38("n_act") - d38("cum_act") * d38("n_ref")
-    ) * (d38("nxt") - d38("v"))
-    agg = gapped.where(F.col("nxt").isNotNull()).agg(
-        F.max("n_ref").alias("n_ref"),
-        F.max("n_act").alias("n_act"),
-        F.sum(term).alias("area"),
-    )
-    denom = F.col("n_ref").cast("double") * F.col("n_act").cast("double")
-    w1 = F.when(denom > 0, F.col("area").cast("double") / denom / F.lit(100.0))
-    return agg.select(
-        "n_ref",
-        "n_act",
-        F.round(w1, 9).alias("wasserstein_value"),
-    )
-
-
-def events_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Friedman rank test of event-type intensity across matched user
-    blocks — the REPEATED-MEASURES companion of Kruskal-Wallis: KW treats
-    the per-type samples as independent, but each user contributes a count
-    to EVERY type, so the blocked design must rank WITHIN users (removing
-    the user's overall activity level) before comparing types.
-
-    With doubled tie-averaged within-user ranks (2r = 2·prev + eq + 1,
-    exact integers), the tie-adjusted statistic is exactly
-
-        Q = (k−1)·Σ_j (2R_j − n(k+1))² / (Σ_ij (2r_ij)² − n·k·(k+1)²)
-
-    — an exact-integer ratio (DECIMAL(38,0) cross products) divided once
-    in double, χ²(k−1) under H0. Blocks must be complete: users missing
-    any of the k types drop (reported as n_dropped; the fixture is dense
-    so the organic count is zero — the synthetic TRUE-path test pins the
-    drop arm). Within-user ranks use a RANGE-frame window PARTITIONED BY
-    user (≤ k = #event_types rows per partition — bounded, never the
-    single-task shape).
-
-    Scale shape: one corpus pass to the (user, type) aggregate, bounded
-    per-user windows, a k-row fold."""
-    ev = load_table(spark, sf_dir, "events")
-    counts = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    k_tot = ev.select("event_type").distinct().agg(
-        F.count(F.lit(1)).cast("bigint").alias("k")
-    )
-    per_user = counts.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_types")
-    )
-    eligible = per_user.crossJoin(F.broadcast(k_tot)).select(
-        "user_id", (F.col("n_types") == F.col("k")).alias("complete")
-    )
-    dropped = eligible.agg(
-        F.sum(F.when(~F.col("complete"), 1).otherwise(0)).cast("bigint").alias("n_dropped")
-    )
-    kept = counts.join(
-        eligible.where("complete").select("user_id"), "user_id"
-    )
-    # doubled tie-averaged rank within the user's k-row block: RANGE frames
-    # over the numeric count — strictly-smaller cum + tie-class size
-    w_lt = (
-        Window.partitionBy("user_id")
-        .orderBy("c")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_eq = Window.partitionBy("user_id").orderBy("c").rangeBetween(0, 0)
-    ranked = kept.select(
-        "user_id",
-        "event_type",
-        (
-            F.lit(2) * F.coalesce(F.count(F.lit(1)).over(w_lt), F.lit(0))
-            + F.count(F.lit(1)).over(w_eq)
-            + F.lit(1)
-        ).alias("r2"),
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    by_type = ranked.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
-        F.sum("r2").cast("bigint").alias("r2_sum"),
-        F.sum(d38("r2") * d38("r2")).alias("r2_sq"),
-    ).transform(truncate_lineage)  # k rows; feeds both folds below
-    grand = by_type.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.max("n_blocks").cast("bigint").alias("n"),
-        F.sum("r2_sq").alias("sq_tot"),
-    )
-    num_fold = by_type.crossJoin(F.broadcast(grand)).agg(
-        F.max("k").alias("k"),
-        F.max("n").alias("n"),
-        F.max("sq_tot").alias("sq_tot"),
-        F.sum(
-            (d38("r2_sum") - d38("n") * (d38("k") + F.lit(1)))
-            * (d38("r2_sum") - d38("n") * (d38("k") + F.lit(1)))
-        ).alias("num"),
-    )
-    den = (
-        F.col("sq_tot")
-        - d38("n") * d38("k") * (d38("k") + F.lit(1)) * (d38("k") + F.lit(1))
-    ).cast("double")
-    q = F.when(
-        (F.col("k") >= 2) & (F.col("n") >= 1) & (den > 0),
-        (F.col("k") - F.lit(1)).cast("double") * F.col("num").cast("double") / den,
-    )
-    return num_fold.crossJoin(F.broadcast(dropped)).select(
-        F.col("n").alias("n_blocks"),
-        "n_dropped",
-        F.col("k").alias("k_treatments"),
-        (F.col("k") - 1).cast("bigint").alias("df"),
-        F.round(q, 9).alias("q_stat"),
-    )
-
-
-# Cohen's d conventional magnitude bands (Cohen 1988) and the two-sided
-# 95% normal critical value for the d CI. Sync-pinned via the f-string
-# oracle (test_r13b_constants_in_sync).
-COHEN_D_SMALL = 0.2
-
-
-COHEN_D_MEDIUM = 0.5
-
-
-COHEN_D_LARGE = 0.8
-
-
-COHEN_D_Z_05 = 1.959964
-
-
-def _view_click_sufficient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One corpus pass to the 1-row (n, Σcents, Σcents²) sufficient
-    statistics of the view and click value distributions — shared by the
-    parametric two-sample family (Cohen's d, TOST). Squared sums ride
-    DECIMAL(38,0) (exact at any scale: 1e12 rows × 1e8 cents² ≈ 1e20);
-    the Σx² identity is safe because raw values vary (the
-    events_welch_anova convention, NOT the jackknife's near-identical
-    replicates)."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    is_a = F.col("event_type") == KS_TYPE_A
-    is_b = F.col("event_type") == KS_TYPE_B
-    return ev.where(F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B)).agg(
-        F.sum(F.when(is_a, 1).otherwise(0)).cast("bigint").alias("na"),
-        F.sum(F.when(is_b, 1).otherwise(0)).cast("bigint").alias("nb"),
-        F.sum(F.when(is_a, cents).otherwise(0)).cast("bigint").alias("sa"),
-        F.sum(F.when(is_b, cents).otherwise(0)).cast("bigint").alias("sb"),
-        F.sum(F.when(is_a, d38(cents) * d38(cents)).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("ssa"),
-        F.sum(F.when(is_b, d38(cents) * d38(cents)).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("ssb"),
-    )
-
-
-def events_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's d standardized mean difference between the view and click
-    value distributions, with the small-sample Hedges' g correction and a
-    normal-approximation 95% CI — the PARAMETRIC effect size (Cliff's
-    delta is the ordinal one): pipelines gate on magnitude,
-    not p-values, because at corpus scale every test "rejects".
-
-        d = (m̄_a − m̄_b) / s_p,  s_p² = [(n_a−1)s_a² + (n_b−1)s_b²] / (n_a+n_b−2)
-        g = d·J,  J = 1 − 3/(4(n_a+n_b) − 9)     (Hedges & Olkin 1985)
-        SE(d) = √[(n_a+n_b)/(n_a·n_b) + d²/(2(n_a+n_b−2))]
-
-    Sufficient statistics are exact integers in ONE corpus pass
-    (``_view_click_sufficient_stats``); every division/sqrt happens once
-    in double with the identical expression tree on both engines; the
-    unit (cents vs dollars) cancels inside d. Degenerate inputs (either
-    n < 2, or zero pooled variance) yield NULL d/g/CI on both engines.
-    Magnitude bands are the pinned Cohen (1988) literals.
-
-    Scale shape: one map-side-combined corpus pass to a 1-row fold."""
-    stats = _view_click_sufficient_stats(spark, sf_dir)
-    nad, nbd = F.col("na").cast("double"), F.col("nb").cast("double")
-    # each mean/variance guarded on its n (ANSI raises on /0 even for
-    # doubles — the events_welch_anova singleton lesson); NULL propagates
-    # identically on both engines
-    ma = F.when(F.col("na") > 0, F.col("sa").cast("double") / nad)
-    mb = F.when(F.col("nb") > 0, F.col("sb").cast("double") / nbd)
-    va = F.when(
-        F.col("na") >= 2,
-        (
-            F.col("ssa").cast("double")
-            - F.col("sa").cast("double") * F.col("sa").cast("double") / nad
-        )
-        / (nad - F.lit(1.0)),
-    )
-    vb = F.when(
-        F.col("nb") >= 2,
-        (
-            F.col("ssb").cast("double")
-            - F.col("sb").cast("double") * F.col("sb").cast("double") / nbd
-        )
-        / (nbd - F.lit(1.0)),
-    )
-    df = nad + nbd - F.lit(2.0)
-    sp = F.sqrt(((nad - F.lit(1.0)) * va + (nbd - F.lit(1.0)) * vb) / df)
-    valid = (F.col("na") >= 2) & (F.col("nb") >= 2)
-    d = F.when(valid & (sp > 0), (ma - mb) / sp)
-    j = F.lit(1.0) - F.lit(3.0) / (F.lit(4.0) * (nad + nbd) - F.lit(9.0))
-    # guarded like d: n_a·n_b = 0 would be an ANSI double /0
-    se = F.when(
-        valid, F.sqrt((nad + nbd) / (nad * nbd) + d * d / (F.lit(2.0) * df))
-    )
-    mag = (
-        F.when(d.isNull(), F.lit(None).cast("string"))
-        .when(F.abs(d) < F.lit(COHEN_D_SMALL), F.lit("negligible"))
-        .when(F.abs(d) < F.lit(COHEN_D_MEDIUM), F.lit("small"))
-        .when(F.abs(d) < F.lit(COHEN_D_LARGE), F.lit("medium"))
-        .otherwise(F.lit("large"))
-    )
-    return stats.select(
-        F.col("na").alias("n_a"),
-        F.col("nb").alias("n_b"),
-        F.round(F.when(F.col("na") > 0, ma / F.lit(100.0)), 9).alias("mean_a"),
-        F.round(F.when(F.col("nb") > 0, mb / F.lit(100.0)), 9).alias("mean_b"),
-        F.round(F.when(valid, sp / F.lit(100.0)), 9).alias("pooled_sd"),
-        F.round(d, 9).alias("cohens_d"),
-        F.round(d * j, 9).alias("hedges_g"),
-        F.round(d - F.lit(COHEN_D_Z_05) * se, 9).alias("ci_lo"),
-        F.round(d + F.lit(COHEN_D_Z_05) * se, 9).alias("ci_hi"),
-        mag.alias("magnitude"),
-    )
-
-
-# TOST equivalence margin (cents — $10 on the ~$50-mean fixture values)
-# and the one-sided 5% normal critical value. Sync-pinned via the
-# f-string oracle (test_r13b_constants_in_sync).
-TOST_MARGIN_CENTS = 1000
-
-
-TOST_Z_05 = 1.644854
-
-
-def events_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-one-sided-tests (TOST) EQUIVALENCE of the view and click mean
-    values within a ±$10 margin — the inverted question every other test
-    in the family cannot ask: "are these two segments the SAME to within
-    a stated tolerance?" (failing to reject a difference test is NOT
-    evidence of equivalence; TOST is the standard fix — Schuirmann 1987).
-
-        z_lower = (Δ + δ)/SE_w   must exceed  +z_{0.05}
-        z_upper = (Δ − δ)/SE_w   must fall below −z_{0.05}
-
-    with Δ = m̄_a − m̄_b and the Welch standard error
-    SE_w = √(s_a²/n_a + s_b²/n_b) (large-sample normal form — at corpus
-    scale the t/z distinction is below double precision). Sufficient
-    statistics are the same exact-integer one-pass fold Cohen's d uses;
-    both z's divide once in double with identical trees. Degenerate
-    inputs (either n < 2 or zero SE) yield NULL z's and NULL verdict.
-
-    Scale shape: one map-side-combined corpus pass to a 1-row fold."""
-    stats = _view_click_sufficient_stats(spark, sf_dir)
-    nad, nbd = F.col("na").cast("double"), F.col("nb").cast("double")
-    ma = F.col("sa").cast("double") / nad
-    mb = F.col("sb").cast("double") / nbd
-    va = (
-        F.col("ssa").cast("double")
-        - F.col("sa").cast("double") * F.col("sa").cast("double") / nad
-    ) / (nad - F.lit(1.0))
-    vb = (
-        F.col("ssb").cast("double")
-        - F.col("sb").cast("double") * F.col("sb").cast("double") / nbd
-    ) / (nbd - F.lit(1.0))
-    se = F.sqrt(va / nad + vb / nbd)
-    valid = (F.col("na") >= 2) & (F.col("nb") >= 2)
-    diff = ma - mb
-    margin = F.lit(float(TOST_MARGIN_CENTS))
-    z_lo = F.when(valid & (se > 0), (diff + margin) / se)
-    z_hi = F.when(valid & (se > 0), (diff - margin) / se)
-    verdict = F.when(
-        z_lo.isNotNull(),
-        (z_lo > F.lit(TOST_Z_05)) & (z_hi < -F.lit(TOST_Z_05)),
-    )
-    return stats.select(
-        F.col("na").alias("n_a"),
-        F.col("nb").alias("n_b"),
-        F.round(F.when(valid, diff / F.lit(100.0)), 9).alias("mean_diff"),
-        F.round(F.when(valid & (se > 0), se / F.lit(100.0)), 9).alias("se_welch"),
-        (margin / F.lit(100.0)).alias("margin"),
-        F.round(z_lo, 9).alias("z_lower"),
-        F.round(z_hi, 9).alias("z_upper"),
-        verdict.alias("equivalent_05"),
-    )
-
-
-def events_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mood's median test across event types — the k-group location test
-    with the WEAKEST assumptions in the family (Kruskal-Wallis compares
-    rank distributions, Welch/BF compare moments; this one only asks "do
-    the groups straddle the grand median the same way?"), so it is the
-    robust first gate when value distributions are wild.
-
-    The grand median is carried DOUBLED (med2 = v_⌈n/2⌉ + v_⌊n/2⌋₊₁ —
-    both order statistics picked in ONE
-    ``bucketed_cum_before`` pass via the prev<k≤prev+c containment test),
-    so the above/below split (2v > med2, SciPy's ties='below') is exact
-    integer arithmetic. The 2×k chi-square folds k per-type terms
-    (O−E)²/E on the 9dp/DECIMAL(28,9) rail; degenerate splits (all
-    values equal — either margin empty) yield NULL chi2 on both engines.
-
-    Scale shape: one corpus pass to per-(type, cents) counts (the k·|V|
-    relation, checkpointed — feeds the median machinery AND the group
-    fold), one machinery pass, a k-row fold."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_tv = (
-        ev.select(F.col("event_type").alias("et"), cents.alias("v"))
-        .groupBy("et", "v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .transform(truncate_lineage)  # feeds the per-v median AND group agg
-    )
-    per_v = (
-        per_tv.groupBy("v").agg(F.sum("c").cast("bigint").alias("c"))
-        .transform(truncate_lineage)  # feeds the sketch and the fold
-    )
-    tot = per_v.agg(F.sum("c").cast("bigint").alias("n"))
-    cum = bucketed_cum_before(per_v, "v", "c", "prev").crossJoin(F.broadcast(tot))
-    m_lo = F.floor((F.col("n") + F.lit(1)) / F.lit(2)).cast("bigint")
-    m_hi = (F.floor(F.col("n") / F.lit(2)) + F.lit(1)).cast("bigint")
-    contains = lambda k: (F.col("prev") < k) & (k <= F.col("prev") + F.col("c"))  # noqa: E731
-    sel = lambda k: F.sum(F.when(contains(k), F.col("v")).otherwise(0))  # noqa: E731
-    med = cum.agg(
-        F.max("n").alias("n"), (sel(m_lo) + sel(m_hi)).cast("bigint").alias("med2")
-    )
-    groups = (
-        per_tv.crossJoin(F.broadcast(med))
-        .groupBy("et")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_g"),
-            F.sum(F.when(F.lit(2) * F.col("v") > F.col("med2"), F.col("c")).otherwise(0))
-            .cast("bigint")
-            .alias("a_g"),
-            F.max("n").alias("n"),
-            F.max("med2").alias("med2"),
-        )
-        .transform(truncate_lineage)  # k rows; feeds the margin AND the fold
-    )
-    margins = groups.agg(
-        F.max("n").alias("n"),
-        F.max("med2").alias("med2"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("a_g").cast("bigint").alias("a_tot"),
-    )
-    j = groups.crossJoin(F.broadcast(margins.drop("n", "med2")))
-    nd = F.col("n_g").cast("double")
-    ad, btd = F.col("a_tot").cast("double"), (F.col("n") - F.col("a_tot")).cast("double")
-    ntd = F.col("n").cast("double")
-    e_a = nd * ad / ntd
-    e_b = nd * btd / ntd
-    oa = F.col("a_g").cast("double")
-    ob = (F.col("n_g") - F.col("a_g")).cast("double")
-    ok = (F.col("a_tot") > 0) & (F.col("a_tot") < F.col("n")) & (F.col("k") >= 2)
-    term = F.when(ok, (oa - e_a) * (oa - e_a) / e_a + (ob - e_b) * (ob - e_b) / e_b)
-    rail = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    folds = j.agg(
-        F.max("n").alias("n_total"),
-        F.max("k").alias("k_groups"),
-        F.max("med2").alias("med2"),
-        F.max("a_tot").alias("n_above"),
-        F.sum(rail(term)).cast("double").alias("chi2_n"),
-    )
-    return folds.select(
-        "n_total",
-        "k_groups",
-        F.round(F.col("med2").cast("double") / F.lit(200.0), 9).alias("grand_median"),
-        F.col("n_above").cast("bigint").alias("n_above"),
-        (F.col("k_groups") - F.lit(1)).cast("bigint").alias("df"),
-        F.round("chi2_n", 9).alias("chi2"),
-    )
-
-
-# Overdispersion two-sided 5% normal critical value (the house z
-# convention). Sync-pinned via the f-string oracle.
-OVERDISP_Z_05 = 1.959964
-
-
-def events_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type Poisson overdispersion audit of the DAILY count series —
-    the data-quality readout behind every rate alarm in the family
-    (CUSUM/EWMA/Page-Hinkley assume a stable mean; a dispersion index
-    ≫ 1 says the day-to-day variance is NOT Poisson and those alarms
-    will false-fire): D = s²/m̄ with the chi-square dispersion test
-    z = √(2X) − √(2df−1), X = (n−1)·D (Fisher's approximation).
-
-    Zero days COUNT: the per-type series rides the full calendar spine
-    (global min..max epoch day, the absent-day convention of the daily
-    family). Exactness: the sample variance's numerator n·Σc² − (Σc)²
-    is an exact DECIMAL(38,0) integer, so the dispersion index
-    [n·Σc² − (Σc)²] / ((n−1)·Σc) divides exact integers ONCE in double
-    — no cancellation, no rail needed. Verdict bands use the pinned
-    two-sided 5% z.
-
-    Scale shape: one corpus pass map-side combined to (type, day) keys,
-    a calendar-bounded spine join, a #types-row fold."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    day = (
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-        .cast("bigint")
-        .alias("day")
-    )
-    per_td = (
-        ev.select(F.col("event_type").alias("et"), day)
-        .groupBy("et", "day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .transform(truncate_lineage)  # feeds the range agg AND the spine join
-    )
-    rng = per_td.agg(
-        F.min("day").alias("dmin"), F.max("day").alias("dmax")
-    )
-    types = per_td.select("et").distinct()
-    spine = types.crossJoin(F.broadcast(rng)).select(
-        "et", F.explode(F.sequence(F.col("dmin"), F.col("dmax"))).alias("day")
-    )
-    filled = spine.join(per_td, ["et", "day"], "left").select(
-        "et", F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("c")
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    g = filled.groupBy("et").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum("c").cast("bigint").alias("s"),
-        F.sum(d38(F.col("c")) * d38(F.col("c"))).alias("ss"),
-    )
-    ndd = F.col("n_days").cast("double")
-    num = d38(F.col("n_days")) * F.col("ss") - d38(F.col("s")) * d38(F.col("s"))
-    ok = (F.col("n_days") >= 2) & (F.col("s") > 0)
-    mean = F.when(F.col("n_days") > 0, F.col("s").cast("double") / ndd)
-    var = F.when(
-        F.col("n_days") >= 2,
-        num.cast("double") / (ndd * (ndd - F.lit(1.0))),
-    )
-    disp = F.when(
-        ok,
-        num.cast("double") / ((ndd - F.lit(1.0)) * F.col("s").cast("double")),
-    )
-    x = (ndd - F.lit(1.0)) * disp
-    z = F.sqrt(F.lit(2.0) * x) - F.sqrt(F.lit(2.0) * (ndd - F.lit(1.0)) - F.lit(1.0))
-    verdict = (
-        F.when(z.isNull(), F.lit(None).cast("string"))
-        .when(z > F.lit(OVERDISP_Z_05), F.lit("overdispersed"))
-        .when(z < -F.lit(OVERDISP_Z_05), F.lit("underdispersed"))
-        .otherwise(F.lit("poisson-consistent"))
-    )
-    return g.select(
-        F.col("et").alias("event_type"),
-        "n_days",
-        F.col("s").alias("n_events"),
-        F.round(mean, 9).alias("mean_daily"),
-        F.round(var, 9).alias("var_daily"),
-        F.round(disp, 9).alias("dispersion_index"),
-        F.round(z, 9).alias("z_dispersion"),
-        verdict.alias("verdict"),
-    )
-
-
-# Bland-Altman limits-of-agreement multiplier (two-sided 95%, the house
-# z convention). Sync-pinned via the f-string oracle.
-BLAND_ALTMAN_Z_05 = 1.959964
-
-
-def _daily_view_click_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-filled (day, n_view, n_click) over the FULL event calendar
-    (global min..max epoch day across ALL event types — the observation
-    window, matching events_overdispersion's absent-day convention).
-    Shared by the paired-daily-series family (Bland-Altman, Kendall
-    tau-b). One map-side-combined corpus pass + a calendar-bounded spine."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    day = (
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-        .cast("bigint")
-        .alias("day")
-    )
-    per_d = (
-        ev.select(day, "event_type")
-        .groupBy("day")
-        .agg(
-            F.sum(F.when(F.col("event_type") == KS_TYPE_A, 1).otherwise(0))
-            .cast("bigint")
-            .alias("nv"),
-            F.sum(F.when(F.col("event_type") == KS_TYPE_B, 1).otherwise(0))
-            .cast("bigint")
-            .alias("nc"),
-        )
-        .transform(truncate_lineage)  # feeds the range agg AND the spine join
-    )
-    rng = per_d.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = rng.select(
-        F.explode(F.sequence(F.col("dmin"), F.col("dmax"))).alias("day")
-    )
-    return spine.join(per_d, "day", "left").select(
-        "day",
-        F.coalesce(F.col("nv"), F.lit(0)).cast("bigint").alias("nv"),
-        F.coalesce(F.col("nc"), F.lit(0)).cast("bigint").alias("nc"),
-    )
-
-
-def events_bland_altman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bland-Altman agreement analysis between the daily view and click
-    count series — the method-comparison readout correlation deliberately
-    is not (two instruments can correlate at 0.99 and still disagree by a
-    constant bias): bias = mean(d_t), limits of agreement bias ± 1.96·sd,
-    and the share of days OUTSIDE the limits.
-
-    Exactness: d_t = views_t − clicks_t is an exact integer on the
-    zero-filled calendar spine; the sd numerator n·Σd² − (Σd)² is an
-    exact DECIMAL(38,0) integer (the events_overdispersion identity — no
-    cancellation, no rail); bias/sd/limits divide once in double, and
-    the outside-count compares each day against the broadcast 1-row
-    stats in exact-vs-double form identically on both engines.
-
-    Scale shape: one corpus pass, a calendar-bounded spine, a 1-row
-    stats fold broadcast back over the day spine, a 1-row fold."""
-    daily = _daily_view_click_counts(spark, sf_dir).select(
-        "day", (F.col("nv") - F.col("nc")).alias("d")
-    ).transform(truncate_lineage)  # feeds the stats fold AND the outside scan
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    stats = daily.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum("d").cast("bigint").alias("sd_sum"),
-        F.sum(d38(F.col("d")) * d38(F.col("d"))).alias("ssd"),
-    )
-    ndd = F.col("n_days").cast("double")
-    num = d38(F.col("n_days")) * F.col("ssd") - d38(F.col("sd_sum")) * d38(
-        F.col("sd_sum")
-    )
-    bias = F.when(F.col("n_days") > 0, F.col("sd_sum").cast("double") / ndd)
-    sd = F.when(
-        F.col("n_days") >= 2,
-        F.sqrt(num.cast("double") / (ndd * (ndd - F.lit(1.0)))),
-    )
-    z = F.lit(BLAND_ALTMAN_Z_05)
-    enriched = stats.select(
-        "n_days",
-        bias.alias("bias"),
-        sd.alias("sd"),
-        (bias - z * sd).alias("lo"),
-        (bias + z * sd).alias("hi"),
-    )
-    outside = (
-        daily.crossJoin(F.broadcast(enriched))
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("d").cast("double") < F.col("lo"))
-                    | (F.col("d").cast("double") > F.col("hi")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_outside"),
-            F.max("n_days").alias("n_days"),
-            F.max("bias").alias("bias"),
-            F.max("sd").alias("sd"),
-            F.max("lo").alias("lo"),
-            F.max("hi").alias("hi"),
-        )
-    )
-    return outside.select(
-        "n_days",
-        F.round("bias", 9).alias("bias"),
-        F.round("sd", 9).alias("sd_diff"),
-        F.round("lo", 9).alias("loa_lo"),
-        F.round("hi", 9).alias("loa_hi"),
-        "n_outside",
-        F.round(
-            F.when(
-                F.col("n_days") > 0,
-                F.col("n_outside").cast("double") / F.col("n_days").cast("double"),
-            ),
-            9,
-        ).alias("pct_outside"),
-    )
-
-
-def events_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall's tau-b rank correlation between the daily view and click
-    count series — the pairwise-concordance association readout beside
-    Spearman's rank-Pearson and events_mann_kendall
-    (one series vs time): tau-b tie-corrects BOTH margins,
-
-        τ_b = S / √[(P − T_x)(P − T_y)],  S = Σ_{i<j} sgn(Δv)·sgn(Δc)
-
-    Exactness: S, the pair count P = n(n−1)/2 and both tie counts are
-    exact integer sums over the day-pair frame; τ divides once in double
-    with the identical √·√ tree on both engines. Degenerate margins (a
-    constant series — P = T) yield NULL τ.
-
-    Scale shape: the events_mann_kendall pair stage — a broadcast
-    nested-loop self-join of the per-DAY aggregate, days²/2 pairs, FIXED
-    by the calendar and independent of corpus row count."""
-    daily = _daily_view_click_counts(spark, sf_dir).transform(truncate_lineage)
-    a = daily.select(
-        F.col("day").alias("d1"), F.col("nv").alias("v1"), F.col("nc").alias("c1")
-    )
-    b = daily.select(
-        F.col("day").alias("d2"), F.col("nv").alias("v2"), F.col("nc").alias("c2")
-    )
-    pairs = a.crossJoin(F.broadcast(b)).where(F.col("d2") > F.col("d1"))
-    agg = pairs.agg(
-        F.sum(
-            (
-                F.signum((F.col("v2") - F.col("v1")).cast("double"))
-                * F.signum((F.col("c2") - F.col("c1")).cast("double"))
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.sum(F.when(F.col("v1") == F.col("v2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("ties_x"),
-        F.sum(F.when(F.col("c1") == F.col("c2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("ties_y"),
-    )
-    n_days = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
-    j = agg.crossJoin(F.broadcast(n_days))
-    px = (F.col("n_pairs") - F.col("ties_x")).cast("double")
-    py = (F.col("n_pairs") - F.col("ties_y")).cast("double")
-    tau = F.when(
-        (F.col("n_pairs") > F.col("ties_x")) & (F.col("n_pairs") > F.col("ties_y")),
-        F.col("s").cast("double") / (F.sqrt(px) * F.sqrt(py)),
-    )
-    return j.select(
-        "n_days", "n_pairs", "s", "ties_x", "ties_y",
-        F.round(tau, 9).alias("tau_b"),
     )

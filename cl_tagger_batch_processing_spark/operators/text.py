@@ -375,24 +375,6 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def source_overlap_candidates(
-    spark: SparkSession, sf_dir: str, max_df: int | None = DEFAULT_MAX_DF
-) -> DataFrame:
-    """Pre-aggregation source-pair relation (shingle, source_a, source_b) —
-    the quantity the hot-shingle guard bounds; tests count it with a cap
-    small enough to engage on fixture data."""
-    docs = load_table(spark, sf_dir, "documents")
-    sh = (
-        word_shingles(docs, k=3, max_df=max_df)
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .select("source", "shingle")
-        .distinct()
-    )
-    a = sh.select(F.col("source").alias("source_a"), "shingle")
-    b = sh.select(F.col("source").alias("source_b"), "shingle")
-    return a.join(b, "shingle").where(F.col("source_a") < F.col("source_b"))
-
-
 def source_overlap_matrix(
     spark: SparkSession, sf_dir: str, max_df: int | None = DEFAULT_MAX_DF
 ) -> DataFrame:
@@ -2036,8 +2018,8 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     third "middle", the rest "tail".
 
     Determinism: docs aggregate per (lang, perplexity) value first (the
-    KS/winsorize discipline — the ordered window runs over DISTINCT
-    6dp perplexity values per language, not raw docs), so a tie-group
+    ordered window runs over DISTINCT 6dp perplexity values per language,
+    not raw docs), so a tie-group
     lands in ONE bucket as a unit (documented deviation from per-doc
     splitting: deterministic regardless of doc order); boundaries are the
     exact integer comparisons 3·cum ≤ tot and 3·cum ≤ 2·tot on

@@ -4934,49 +4934,6 @@ FROM sw GROUP BY threshold, lang
 """
 
 
-# Mirrors relational.events_ab_lift: user_id-parity arms, max-flag
-# conversion, identical pooled z-score double tree over exact counts.
-ORACLE_SQL["events_ab_lift"] = """
-WITH per_user AS (
-  SELECT user_id,
-         CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   >= 10 THEN 1 ELSE 0 END AS converted
-  FROM events GROUP BY user_id
-),
-arms AS (
-  SELECT CASE WHEN user_id % 2 = 0 THEN 'control' ELSE 'treatment' END AS arm,
-         COUNT(*) AS n_users,
-         CAST(SUM(converted) AS BIGINT) AS n_converted
-  FROM per_user GROUP BY 1
-),
-x AS (
-  SELECT c.n_users AS n0, c.n_converted AS c0,
-         t.n_users AS n1, t.n_converted AS c1
-  FROM (SELECT * FROM arms WHERE arm = 'control') c
-  CROSS JOIN (SELECT * FROM arms WHERE arm = 'treatment') t
-),
-parts AS (
-  SELECT CAST(c0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS p0,
-         CAST(c1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS p1,
-         (CAST(c0 AS DOUBLE) + CAST(c1 AS DOUBLE))
-           / (CAST(n0 AS DOUBLE) + CAST(n1 AS DOUBLE)) AS pooled,
-         1.0 / CAST(n0 AS DOUBLE) + 1.0 / CAST(n1 AS DOUBLE) AS invn
-  FROM x
-),
-stats AS (
-  SELECT CASE WHEN pooled * (1.0 - pooled) * invn > 0.0
-              THEN (p1 - p0) / sqrt(pooled * (1.0 - pooled) * invn)
-              ELSE NULL END AS z_score,
-         CASE WHEN p0 > 0.0 THEN (p1 - p0) / p0 ELSE NULL END AS relative_lift
-  FROM parts
-)
-SELECT a.arm, a.n_users, a.n_converted,
-       CAST(a.n_converted AS DOUBLE) / CAST(a.n_users AS DOUBLE) AS conv_rate,
-       s.z_score, s.relative_lift
-FROM arms a CROSS JOIN stats s
-"""
-
-
 # Mirrors text.text_blocklist_filter: token-exact list matching
 # (list_filter / list_intersect — no regex), blocklist sync-pinned.
 ORACLE_SQL["text_blocklist_filter"] = """
@@ -5168,43 +5125,6 @@ SELECT CAST(c_nationkey AS BIGINT) AS nation_key,
             AS BIGINT) AS is_l_diverse
 FROM customer
 GROUP BY 1, 2
-"""
-
-
-# Mirrors relational.events_autocorrelation: daily event counts on the
-# shared epoch-day spine, Pearson r at lags 1..7 from exact HUGEINT
-# sufficient statistics (Spark side: DECIMAL(38,0) — both far past the
-# 1e19 squared daily counts a 100 TB corpus produces) with the identical
-# double subtraction/sqrt/divide tree; lag range and the zero-variance
-# NULL guard are sync-pinned (generate_series(1, 7)).
-ORACLE_SQL["events_autocorrelation"] = """
-WITH daily AS (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         COUNT(*) AS cnt
-  FROM events GROUP BY 1
-),
-lags AS (SELECT CAST(unnest(generate_series(1, 7)) AS BIGINT) AS lag),
-pairs AS (
-  SELECT l.lag, CAST(x.cnt AS HUGEINT) AS xv, CAST(y.cnt AS HUGEINT) AS yv
-  FROM daily x CROSS JOIN lags l
-  JOIN daily y ON y.day = x.day + l.lag
-),
-s AS (
-  SELECT lag, COUNT(*) AS n,
-         CAST(SUM(xv) AS DOUBLE) AS sx, CAST(SUM(yv) AS DOUBLE) AS sy,
-         CAST(SUM(xv * yv) AS DOUBLE) AS sxy,
-         CAST(SUM(xv * xv) AS DOUBLE) AS sxx,
-         CAST(SUM(yv * yv) AS DOUBLE) AS syy
-  FROM pairs GROUP BY lag
-)
-SELECT lag, n AS n_pairs,
-       CASE WHEN (CAST(n AS DOUBLE) * sxx - sx * sx) > 0
-             AND (CAST(n AS DOUBLE) * syy - sy * sy) > 0
-            THEN (CAST(n AS DOUBLE) * sxy - sx * sy)
-                 / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
-                        * (CAST(n AS DOUBLE) * syy - sy * sy))
-            ELSE NULL END AS acf
-FROM s
 """
 
 
@@ -5477,66 +5397,6 @@ GROUP BY w.a, w.b"""
 
 
 ORACLE_SQL["events_logistic_regression"] = _logit_sql()
-
-
-# Mirrors relational.events_decision_stump: 10-unit value histogram, split
-# evaluation from cumulative bucket counts, weighted Gini as the identical
-# per-row double tree, (gini ASC, threshold ASC) rank tie-break.
-ORACLE_SQL["events_decision_stump"] = """
-WITH cells AS (
-  SELECT CAST(floor(value / 10.0) AS BIGINT) AS b,
-         COUNT(*) AS n_b,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS pos_b
-  FROM events GROUP BY 1
-),
-tot AS (
-  SELECT CAST(SUM(n_b) AS BIGINT) AS n,
-         CAST(SUM(pos_b) AS BIGINT) AS npos
-  FROM cells
-),
-cum AS (
-  SELECT CAST((b + 1) * 10.0 AS DOUBLE) AS threshold,
-         CAST(SUM(n_b) OVER (ORDER BY b
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS n_left,
-         CAST(SUM(pos_b) OVER (ORDER BY b
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS pos_left,
-         t.n, t.npos
-  FROM cells CROSS JOIN tot t
-),
-sides AS (
-  SELECT threshold, n_left, pos_left,
-         n - n_left AS n_right, npos - pos_left AS pos_right, n
-  FROM cum WHERE n_left > 0 AND n - n_left > 0
-),
-scored AS (
-  SELECT threshold, n_left, pos_left, n_right, pos_right,
-         (CAST(n_left AS DOUBLE)
-            * (1.0
-               - (CAST(pos_left AS DOUBLE) / CAST(n_left AS DOUBLE))
-                 * (CAST(pos_left AS DOUBLE) / CAST(n_left AS DOUBLE))
-               - ((CAST(n_left AS DOUBLE) - CAST(pos_left AS DOUBLE))
-                  / CAST(n_left AS DOUBLE))
-                 * ((CAST(n_left AS DOUBLE) - CAST(pos_left AS DOUBLE))
-                    / CAST(n_left AS DOUBLE)))
-          + CAST(n_right AS DOUBLE)
-            * (1.0
-               - (CAST(pos_right AS DOUBLE) / CAST(n_right AS DOUBLE))
-                 * (CAST(pos_right AS DOUBLE) / CAST(n_right AS DOUBLE))
-               - ((CAST(n_right AS DOUBLE) - CAST(pos_right AS DOUBLE))
-                  / CAST(n_right AS DOUBLE))
-                 * ((CAST(n_right AS DOUBLE) - CAST(pos_right AS DOUBLE))
-                    / CAST(n_right AS DOUBLE))))
-         / CAST(n AS DOUBLE) AS weighted_gini
-  FROM sides
-)
-SELECT threshold, n_left, pos_left, n_right, pos_right, weighted_gini,
-       CAST(row_number() OVER (ORDER BY weighted_gini ASC, threshold ASC)
-            AS BIGINT) AS rank
-FROM scored
-"""
 
 
 # Mirrors text.text_textrank_keywords: the adjacent-word co-occurrence
@@ -6212,74 +6072,6 @@ SELECT (SELECT MIN(p.day) FROM dd p, trough t
        CAST(t.cum AS DOUBLE) AS trough_cum,
        CAST(t.drawdown AS DOUBLE) AS max_drawdown
 FROM trough t
-"""
-
-
-# Kaplan-Meier over SESSION durations with the session-gap censor horizon
-# (30min, sync-pinned): gaps-and-islands sessionization (the sessionize
-# rule), exact integer-minute durations, at-risk via cumulative window
-# over the per-duration aggregate, survival via 9dp-rounded ln-sum in
-# DECIMAL(28,9) + one exp, exact-zero guard on the d = n exhaustion row.
-ORACLE_SQL["events_survival_km"] = """
-WITH mx AS (SELECT MAX(epoch_us(ts)) AS max_us FROM events),
-o AS (
-  SELECT user_id, ts, event_id,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-),
-m AS (
-  SELECT user_id, ts,
-         CASE WHEN prev IS NULL
-                OR epoch_us(ts) - epoch_us(prev) >= 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM o
-),
-s AS (
-  SELECT user_id, epoch_us(ts) AS us,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS sid
-  FROM m
-),
-users AS (
-  SELECT (MAX(us) - MIN(us)) // 60000000 AS duration_h,
-         CASE WHEN MAX(us) >= (SELECT max_us FROM mx) - 30 * 60000000
-              THEN 0 ELSE 1 END AS churned
-  FROM s GROUP BY user_id, sid
-),
-per_t AS (
-  SELECT duration_h, COUNT(*) AS c_all, SUM(churned) AS d
-  FROM users GROUP BY duration_h
-),
-total AS (SELECT SUM(c_all) AS n_users FROM per_t),
-at_risk AS (
-  SELECT p.*, t.n_users
-           - COALESCE(SUM(c_all) OVER (ORDER BY duration_h
-                                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                                AND 1 PRECEDING), 0)
-           AS n_at_risk
-  FROM per_t p CROSS JOIN total t
-),
-curve AS (
-  SELECT duration_h, n_at_risk, d, c_all - d AS n_censored_here,
-         SUM(CAST(CASE WHEN d < n_at_risk THEN
-               round(ln(CAST(1.0 AS DOUBLE)
-                        - CAST(d AS DOUBLE) / CAST(n_at_risk AS DOUBLE)), 9)
-             ELSE CAST(0.0 AS DOUBLE) END AS DECIMAL(28,9)))
-           OVER (ORDER BY duration_h
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lnsum,
-         MAX(CASE WHEN d >= n_at_risk THEN 1 ELSE 0 END)
-           OVER (ORDER BY duration_h
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
-  FROM at_risk
-)
-SELECT CAST(duration_h AS BIGINT) AS duration_minutes,
-       CAST(n_at_risk AS BIGINT) AS n_at_risk,
-       CAST(d AS BIGINT) AS n_churned,
-       CAST(n_censored_here AS BIGINT) AS n_censored_here,
-       CASE WHEN dead = 1 THEN CAST(0.0 AS DOUBLE)
-            ELSE round(exp(CAST(lnsum AS DOUBLE)), 6) END AS survival
-FROM curve WHERE d > 0
 """
 
 
@@ -7068,67 +6860,6 @@ FROM terms CROSS JOIN chi
 """
 
 
-# Mirrors relational.events_poisson_bootstrap_ci: inverse-CDF Poisson(1)
-# weights from md5-60-bit uniforms, exact cents replicate sums, rank-based
-# CI endpoints (2nd / 31st of 32 sorted replicate means).
-ORACLE_SQL["events_poisson_bootstrap_ci"] = """
-WITH rws AS (
-  SELECT event_id AS eid,
-         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cv
-  FROM events
-  WHERE event_type = 'purchase'
-),
-rep_rows AS (
-  SELECT eid, cv, unnest(generate_series(0, 31)) AS b FROM rws
-),
-uw AS (
-  SELECT b, cv,
-         CAST(CAST('0x' || substr(md5(CAST(eid AS VARCHAR) || ':'
-                                      || CAST(b AS VARCHAR)), 1, 15)
-                   AS BIGINT) AS DOUBLE)
-           / 1152921504606846976.0 AS u
-  FROM rep_rows
-),
-wts AS (
-  SELECT b, cv,
-         CASE WHEN u < exp(CAST(-1 AS DOUBLE)) THEN 0
-              WHEN u < exp(CAST(-1 AS DOUBLE)) * CAST(2 AS DOUBLE) THEN 1
-              WHEN u < exp(CAST(-1 AS DOUBLE)) * CAST(2.5 AS DOUBLE) THEN 2
-              WHEN u < exp(CAST(-1 AS DOUBLE))
-                       * (CAST(8 AS DOUBLE) / CAST(3 AS DOUBLE)) THEN 3
-              WHEN u < exp(CAST(-1 AS DOUBLE))
-                       * (CAST(65 AS DOUBLE) / CAST(24 AS DOUBLE)) THEN 4
-              ELSE 5 END AS w
-  FROM uw
-),
-rep AS (
-  SELECT b, SUM(w) AS sw, SUM(w * cv) AS swx FROM wts GROUP BY b
-),
-means AS (
-  SELECT b,
-         round(CAST(swx AS DOUBLE) / CAST(sw AS DOUBLE)
-               / CAST(100 AS DOUBLE), 9) AS mean_b
-  FROM rep WHERE sw > 0
-),
-ranked AS (
-  SELECT b, mean_b,
-         row_number() OVER (ORDER BY mean_b ASC, b ASC) AS r
-  FROM means
-),
-pt AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-         round(CAST(SUM(cv) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-               / CAST(100 AS DOUBLE), 9) AS mean_value
-  FROM rws
-),
-lo AS (SELECT MIN(CASE WHEN r = 2 THEN mean_b END) AS ci_lo FROM ranked),
-hi AS (SELECT MIN(CASE WHEN r = 31 THEN mean_b END) AS ci_hi FROM ranked),
-nrep AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_replicates FROM ranked)
-SELECT n_rows, mean_value, ci_lo, ci_hi, n_replicates
-FROM pt CROSS JOIN lo CROSS JOIN hi CROSS JOIN nrep
-"""
-
-
 # Mirrors relational.events_winsorized_stats: k-th order statistic as
 # "min v with cumulative count >= k" over the per-(type, cents) aggregate,
 # HUGEINT-widened clamped sums, // floor positions.
@@ -7518,99 +7249,6 @@ FROM agg
 """
 
 
-# Mirrors relational.events_isotonic_calibration: heavy-purchaser rate vs
-# fixed-width activity buckets (LEAST(activity // 5, 31)), isotonic fit
-# via the minimax closed form iso(i) = max_{j<=i} min_{k>=i} mean(j..k)
-# over the bounded bucket relation. cum/seg are referenced twice+ —
-# MATERIALIZED per the chained-CTE rule.
-ORACLE_SQL["events_isotonic_calibration"] = """
-WITH users AS (
-  SELECT user_id,
-         CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   >= 10 THEN 1 ELSE 0 END AS label,
-         COUNT(*) AS activity
-  FROM events GROUP BY user_id
-),
-per_b AS (
-  SELECT LEAST(activity // 5, 31) AS bucket,
-         COUNT(*) AS n_users, SUM(label) AS n_pos
-  FROM users GROUP BY 1
-),
-cum AS MATERIALIZED (
-  SELECT bucket, n_users, n_pos,
-         SUM(n_users) OVER (ORDER BY bucket) AS cn,
-         SUM(n_pos) OVER (ORDER BY bucket) AS cp
-  FROM per_b
-),
-seg AS MATERIALIZED (
-  SELECT j.bucket AS jb, k.bucket AS kb,
-         CAST(k.cp - j.cp + j.n_pos AS DOUBLE)
-           / CAST(k.cn - j.cn + j.n_users AS DOUBLE) AS seg_rate
-  FROM cum j JOIN cum k ON j.bucket <= k.bucket
-),
-iso AS (
-  SELECT i, MAX(m) AS rate_iso FROM (
-    SELECT c.bucket AS i, s.jb, MIN(s.seg_rate) AS m
-    FROM cum c JOIN seg s ON s.jb <= c.bucket AND s.kb >= c.bucket
-    GROUP BY 1, 2
-  ) GROUP BY i
-)
-SELECT b.bucket,
-       CAST(b.n_users AS BIGINT) AS n_users,
-       CAST(b.n_pos AS BIGINT) AS n_pos,
-       round(CAST(b.n_pos AS DOUBLE) / CAST(b.n_users AS DOUBLE), 9)
-         AS rate_raw,
-       round(iso.rate_iso, 9) AS rate_isotonic
-FROM per_b b JOIN iso ON iso.i = b.bucket
-"""
-
-
-# Mirrors relational.events_conformal_interval: split-conformal upper
-# bound, k = ceil((n_cal + 1) * (1 - alpha)) in exact integer arithmetic,
-# q-hat = "min v with cumulative calibration count >= LEAST(k, n_cal)".
-ORACLE_SQL["events_conformal_interval"] = """
-WITH rows_ AS (
-  SELECT event_id,
-         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         event_id % 2 = 0 AS is_cal
-  FROM events WHERE event_type = 'purchase'
-),
-per_v AS (
-  SELECT v, COUNT(*) AS cnt FROM rows_ WHERE is_cal GROUP BY v
-),
-cum AS (SELECT v, SUM(cnt) OVER (ORDER BY v) AS cum FROM per_v),
-kd AS (
-  SELECT CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS n_cal,
-         ((COALESCE(SUM(cnt), 0) + 1) * (10 - 1) + 10 - 1) // 10 AS k
-  FROM per_v
-),
--- every stage below is a GLOBAL aggregate chained by one-row cross
--- joins: an empty calibration or test split yields NULL q_hat / NULL
--- coverage, never zero rows (the bootstrap-CI collapse lesson)
-q AS (
-  SELECT MIN(CASE WHEN cum.cum >= LEAST(kd.k, kd.n_cal)
-                  THEN cum.v END) AS qc
-  FROM cum CROSS JOIN kd
-),
-t AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
-         CAST(COALESCE(SUM(CASE WHEN tv.v <= q.qc THEN 1 ELSE 0 END), 0)
-              AS BIGINT) AS n_covered
-  FROM (SELECT v FROM rows_ WHERE NOT is_cal) tv CROSS JOIN q
-)
-SELECT kd.n_cal,
-       CAST(kd.k AS BIGINT) AS k,
-       kd.k <= kd.n_cal AS finite_guarantee,
-       CAST(q.qc AS DOUBLE) / CAST(100 AS DOUBLE) AS q_hat,
-       t.n_test,
-       t.n_covered,
-       CASE WHEN t.n_test > 0
-            THEN round(CAST(t.n_covered AS DOUBLE)
-                       / CAST(t.n_test AS DOUBLE), 6) END AS coverage
-FROM kd CROSS JOIN q CROSS JOIN t
-"""
-
-
 # Mirrors relational.orders_theil_sen_trend: per-day exact-cents revenue,
 # pairwise slopes as one double division of exact integers, both medians
 # via the per-value cumulative order statistic (2*cum >= N / N+1), OLS
@@ -7678,90 +7316,6 @@ FROM ols CROSS JOIN m CROSS JOIN icept
 """
 
 
-# df=inf critical-value tables BY GROUP COUNT (r11 review: the operator
-# computes k dynamically, so the bound must move with it; NULL off-table).
-# Sync-pinned equal to the relational dicts (test_r11_constants_in_sync).
-_TUKEY_Q_BY_K = {
-    2: 2.772, 3: 3.314, 4: 3.633, 5: 3.858, 6: 4.030,
-    7: 4.170, 8: 4.286, 9: 4.387, 10: 4.474,
-}
-
-
-_ANOVA_F_BY_DF1 = {
-    1: 3.841, 2: 2.996, 3: 2.605, 4: 2.372, 5: 2.214,
-    6: 2.099, 7: 2.010, 8: 1.938, 9: 1.880,
-}
-
-
-def _crit_case_sql(key: str, table: dict[int, float]) -> str:
-    whens = " ".join(
-        f"WHEN {k} THEN CAST({v} AS DOUBLE)" for k, v in sorted(table.items())
-    )
-    return f"CASE {key} {whens} END"
-
-
-# Mirrors relational.events_tukey_hsd: exact-cents sufficient statistics,
-# per-group between-terms on the 9dp-DECIMAL rail, identical double trees
-# for MSE/F/q, and the k-tabulated df=inf critical values (sync-pinned).
-ORACLE_SQL["events_tukey_hsd"] = """
-WITH g AS MATERIALIZED (
-  SELECT event_type AS et,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  AS HUGEINT)) AS sx,
-         SUM(CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  AS HUGEINT)
-             * CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                    AS HUGEINT)) AS sxx
-  FROM events GROUP BY 1
-),
-tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(n) AS BIGINT) AS n_total,
-         SUM(sx) AS sx_tot,
-         SUM(sxx) AS sxx_tot,
-         SUM(CAST(round(CAST(sx * sx AS DOUBLE) / CAST(n AS DOUBLE), 9)
-                  AS DECIMAL(28,9))) AS a_between
-  FROM g
-),
-stats AS (
-  SELECT k, n_total,
-         ((CAST(a_between AS DOUBLE)
-           - CAST(sx_tot * sx_tot AS DOUBLE) / CAST(n_total AS DOUBLE))
-          / CAST(k - 1 AS DOUBLE))
-         / ((CAST(sxx_tot AS DOUBLE) - CAST(a_between AS DOUBLE))
-            / CAST(n_total - k AS DOUBLE)) AS f_stat,
-         (CAST(sxx_tot AS DOUBLE) - CAST(a_between AS DOUBLE))
-           / CAST(n_total - k AS DOUBLE) AS mse,
-         {q_crit} AS q_crit_05,
-         {f_crit} AS f_crit_05
-  FROM tot
-)
-SELECT a.et AS type_a, b.et AS type_b, a.n AS n_a, b.n AS n_b,
-       CAST(a.sx AS DOUBLE) / CAST(a.n AS DOUBLE) AS mean_a_cents,
-       CAST(b.sx AS DOUBLE) / CAST(b.n AS DOUBLE) AS mean_b_cents,
-       abs(CAST(a.sx AS DOUBLE) / CAST(a.n AS DOUBLE)
-           - CAST(b.sx AS DOUBLE) / CAST(b.n AS DOUBLE))
-         / sqrt((s.mse / CAST(2 AS DOUBLE))
-                * (CAST(1 AS DOUBLE) / CAST(a.n AS DOUBLE)
-                   + CAST(1 AS DOUBLE) / CAST(b.n AS DOUBLE))) AS q_stat,
-       s.q_crit_05,
-       abs(CAST(a.sx AS DOUBLE) / CAST(a.n AS DOUBLE)
-           - CAST(b.sx AS DOUBLE) / CAST(b.n AS DOUBLE))
-         / sqrt((s.mse / CAST(2 AS DOUBLE))
-                * (CAST(1 AS DOUBLE) / CAST(a.n AS DOUBLE)
-                   + CAST(1 AS DOUBLE) / CAST(b.n AS DOUBLE)))
-         > s.q_crit_05 AS reject_hsd_05,
-       s.f_stat,
-       s.f_crit_05,
-       s.f_stat > s.f_crit_05 AS reject_anova_05
-FROM g a JOIN g b ON a.et < b.et CROSS JOIN stats s
-""".format(
-    q_crit=_crit_case_sql("k", _TUKEY_Q_BY_K),
-    f_crit=_crit_case_sql("k - 1", _ANOVA_F_BY_DF1),
-)
-
-
 # Mirrors similarity.embedding_dbscan_lite: the sim_knn_graph CTE chain,
 # cosine-eps filter + symmetrize, degree >= min-neighbors cores, reach
 # transitive closure over core-core edges (min core id per component —
@@ -7804,64 +7358,6 @@ FROM (SELECT vec_id FROM q) e
 LEFT JOIN comp cmp ON e.vec_id = cmp.node
 LEFT JOIN border bor ON e.vec_id = bor.node
 LEFT JOIN deg d ON e.vec_id = d.node
-"""
-
-
-# Mirrors relational.events_power_analysis: exact-cents per-user sums,
-# control-arm variance as one division of the exact HUGEINT numerator,
-# the 4-point MDE spine, and one ceil of an identical double per row.
-ORACLE_SQL["events_power_analysis"] = """
-WITH per_user AS (
-  SELECT user_id,
-         CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-              AS BIGINT) AS x
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
-arms AS (
-  -- ONE global aggregate, never a filter per arm: a missing arm yields
-  -- NULL stats on the 4-row spine, not zero rows (r11 review); n <= 1
-  -- and tau = 0 guards mirror the engine's ANSI-raise guards
-  SELECT CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS nc,
-         SUM(CASE WHEN user_id % 2 = 0 THEN CAST(x AS HUGEINT) END) AS sxc,
-         SUM(CASE WHEN user_id % 2 = 0
-                  THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS sxxc,
-         CAST(SUM(CASE WHEN user_id % 2 != 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS nt
-  FROM per_user
-),
-ctrl AS (
-  SELECT nc AS n_control, nt AS n_treatment,
-         CASE WHEN nc > 0 THEN CAST(sxc AS DOUBLE) / CAST(nc AS DOUBLE)
-              END AS mean_control_cents,
-         CASE WHEN nc > 1 THEN CAST(nc * sxxc - sxc * sxc AS DOUBLE)
-                                 / CAST(nc * (nc - 1) AS DOUBLE)
-              END AS var_control
-  FROM arms
-),
-spine AS (SELECT unnest([1, 2, 5, 10]) AS mde_pct),
-calc AS (
-  SELECT mde_pct, n_control, n_treatment, mean_control_cents, var_control,
-         CAST(mde_pct AS DOUBLE) / CAST(100 AS DOUBLE)
-           * mean_control_cents AS tau_cents
-  FROM spine CROSS JOIN ctrl
-),
-calc2 AS (
-  SELECT *,
-         CASE WHEN tau_cents > 0 THEN
-           CAST(ceil(CAST(2 AS DOUBLE) * var_control
-                     * (CAST(1.96 AS DOUBLE) + CAST(0.842 AS DOUBLE))
-                     * (CAST(1.96 AS DOUBLE) + CAST(0.842 AS DOUBLE))
-                     / (tau_cents * tau_cents)) AS BIGINT)
-         END AS n_required_per_arm
-  FROM calc
-)
-SELECT mde_pct, n_control, n_treatment, mean_control_cents, var_control,
-       tau_cents, n_required_per_arm,
-       CASE WHEN n_required_per_arm IS NOT NULL THEN
-         least(n_control, n_treatment) >= n_required_per_arm
-       END AS powered
-FROM calc2
 """
 
 
@@ -7918,9 +7414,9 @@ SELECT CAST(20 AS BIGINT) AS k, n_eval, n_overlap, dcg, idcg,
 FROM dcg CROSS JOIN idcg
 """
 
-# Mirrors relational.privacy_randomized_response: the bootstrap oracle's
-# md5-60-bit uniform coins, the f=0.5 Warner debias, and the 3-sigma
-# Hoeffding accuracy contract as identical double trees.
+# Mirrors relational.privacy_randomized_response: md5-60-bit uniform
+# coins, the f=0.5 Warner debias, and the 3-sigma Hoeffding accuracy
+# contract as identical double trees.
 ORACLE_SQL["privacy_randomized_response"] = """
 WITH per_user AS (
   SELECT user_id,
@@ -7969,105 +7465,6 @@ SELECT n_users, n_true, n_reported_true,
                  * (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE)))
          AS within_contract
 FROM agg
-"""
-
-
-# Mirrors relational.events_granger_lite: epoch-day counts, calendar lag
-# join, nine HUGEINT sufficient statistics, Cramer / normal-equation
-# closed forms as identical double trees, 9dp-railed SSRs, F(1, inf).
-ORACLE_SQL["events_granger_lite"] = """
-WITH daily AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS p,
-         CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-              AS BIGINT) AS v
-  FROM events GROUP BY 1
-),
-feat AS MATERIALIZED (
-  SELECT c.p AS y, pr.p AS pl, pr.v AS vl
-  FROM daily c JOIN (SELECT day + 1 AS d, p, v FROM daily) pr
-    ON c.day = pr.d
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(y AS HUGEINT)) AS sp,
-         SUM(CAST(pl AS HUGEINT)) AS spl,
-         SUM(CAST(vl AS HUGEINT)) AS svl,
-         SUM(CAST(pl AS HUGEINT) * CAST(pl AS HUGEINT)) AS spl2,
-         SUM(CAST(vl AS HUGEINT) * CAST(vl AS HUGEINT)) AS svl2,
-         SUM(CAST(pl AS HUGEINT) * CAST(vl AS HUGEINT)) AS splvl,
-         SUM(CAST(y AS HUGEINT) * CAST(pl AS HUGEINT)) AS sppl,
-         SUM(CAST(y AS HUGEINT) * CAST(vl AS HUGEINT)) AS spvl
-  FROM feat
-),
-dbl AS (
-  SELECT n,
-         CAST(n AS DOUBLE) AS nd, CAST(sp AS DOUBLE) AS sp,
-         CAST(spl AS DOUBLE) AS spl, CAST(svl AS DOUBLE) AS svl,
-         CAST(spl2 AS DOUBLE) AS spl2, CAST(svl2 AS DOUBLE) AS svl2,
-         CAST(splvl AS DOUBLE) AS splvl, CAST(sppl AS DOUBLE) AS sppl,
-         CAST(spvl AS DOUBLE) AS spvl
-  FROM stats
-),
-coeffs AS MATERIALIZED (
-  -- det = 0 (collinear lags) / den2 = 0 (constant p-lag): ANSI Spark
-  -- raises on the double division where DuckDB yields Infinity — NULL
-  -- coefficients cascade to NULL SSRs/F/verdict on both engines
-  SELECT n,
-         CASE WHEN det != 0 THEN
-           (sp * (spl2 * svl2 - splvl * splvl)
-            - spl * (sppl * svl2 - splvl * spvl)
-            + svl * (sppl * splvl - spl2 * spvl)) / det END AS b0,
-         CASE WHEN det != 0 THEN
-           (nd * (sppl * svl2 - splvl * spvl)
-            - sp * (spl * svl2 - splvl * svl)
-            + svl * (spl * spvl - sppl * svl)) / det END AS b1,
-         CASE WHEN det != 0 THEN
-           (nd * (spl2 * spvl - sppl * splvl)
-            - spl * (spl * spvl - sppl * svl)
-            + sp * (spl * splvl - spl2 * svl)) / det END AS b2,
-         CASE WHEN den2 != 0 THEN
-           (sp - ((nd * sppl - spl * sp) / den2) * spl) / nd END AS c0,
-         CASE WHEN den2 != 0 THEN
-           (nd * sppl - spl * sp) / den2 END AS c1
-  FROM (SELECT *,
-               nd * (spl2 * svl2 - splvl * splvl)
-               - spl * (spl * svl2 - splvl * svl)
-               + svl * (spl * splvl - spl2 * svl) AS det,
-               nd * spl2 - spl * spl AS den2
-        FROM dbl)
-),
-ssr AS (
-  SELECT MAX(n) AS n_days,
-         CAST(SUM(CAST(round(
-           (CAST(y AS DOUBLE) - (b0 + b1 * CAST(pl AS DOUBLE)
-                                 + b2 * CAST(vl AS DOUBLE)))
-           * (CAST(y AS DOUBLE) - (b0 + b1 * CAST(pl AS DOUBLE)
-                                   + b2 * CAST(vl AS DOUBLE))), 9)
-           AS DECIMAL(28,9))) AS DOUBLE) AS ssr_full,
-         CAST(SUM(CAST(round(
-           (CAST(y AS DOUBLE) - (c0 + c1 * CAST(pl AS DOUBLE)))
-           * (CAST(y AS DOUBLE) - (c0 + c1 * CAST(pl AS DOUBLE))), 9)
-           AS DECIMAL(28,9))) AS DOUBLE) AS ssr_restricted
-  FROM feat CROSS JOIN coeffs
-)
-SELECT n_days, b0, b1, b2, c0, c1, ssr_full, ssr_restricted,
-       -- ssr_full = 0 (perfect fit) or n_days <= 3 (zero df): Spark ANSI
-       -- raises on the double division where DuckDB yields Infinity —
-       -- guarded to NULL F on both engines, with the verdict falling
-       -- through to the perfect-fit branch
-       CASE WHEN ssr_full > 0 AND n_days > 3 THEN
-         (ssr_restricted - ssr_full)
-           / (ssr_full / CAST(n_days - 3 AS DOUBLE))
-       END AS f_stat,
-       CASE WHEN ssr_full > 0 AND n_days > 3 THEN
-         (ssr_restricted - ssr_full)
-           / (ssr_full / CAST(n_days - 3 AS DOUBLE))
-           > CAST(3.841 AS DOUBLE)
-       WHEN ssr_full = 0 AND ssr_restricted > 0 AND n_days > 3 THEN TRUE
-       END AS granger_reject_05
-FROM ssr CROSS JOIN coeffs
 """
 
 
@@ -8231,113 +7628,6 @@ FROM spine sp LEFT JOIN shared sh ON sp.s1 = sh.s1 AND sp.s2 = sh.s2
 """
 
 
-# Mirrors relational.events_wilcoxon_signed_rank: per-user paired weekend −
-# weekday cents, zero diffs dropped, tie-averaged DOUBLED |d| ranks via the
-# cumulative-before window (HUGEINT-exact), tie-corrected normal z.
-ORACLE_SQL["events_wilcoxon_signed_rank"] = """
-WITH pu AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN dayofweek(ts) IN (0, 6)
-                       THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                       ELSE 0 END)
-            - SUM(CASE WHEN dayofweek(ts) NOT IN (0, 6)
-                       THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS d
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-),
-pa AS (
-  SELECT ABS(d) AS ad, CAST(COUNT(*) AS BIGINT) AS c,
-         CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_pos
-  FROM pu WHERE d <> 0 GROUP BY 1
-),
-rk AS (
-  SELECT ad, c, c_pos,
-         COALESCE(SUM(c) OVER (ORDER BY ad
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
-  FROM pa
-),
-s AS (
-  SELECT CAST(SUM(c) AS BIGINT) AS n,
-         SUM(CAST(c_pos AS HUGEINT)
-             * (2 * CAST(prev AS HUGEINT) + CAST(c AS HUGEINT) + 1)) AS w2p,
-         SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT) * CAST(c AS HUGEINT)
-             - CAST(c AS HUGEINT)) AS t3
-  FROM rk
-)
-SELECT CAST(COALESCE(n, 0) AS BIGINT) AS n_pairs,
-       ROUND(CAST(w2p AS DOUBLE) / 2.0, 6) AS w_plus,
-       ROUND(CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 4.0, 6) AS mu_w,
-       ROUND(CASE WHEN n > 0
-                   AND CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0)
-                       * (2.0 * CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 24.0
-                       - CAST(t3 AS DOUBLE) / 48.0 > 0
-             THEN (CAST(w2p AS DOUBLE) / 2.0
-                   - CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 4.0)
-                  / SQRT(CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0)
-                         * (2.0 * CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 24.0
-                         - CAST(t3 AS DOUBLE) / 48.0)
-             END, 9) AS z,
-       CASE WHEN n > 0
-             AND CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0)
-                 * (2.0 * CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 24.0
-                 - CAST(t3 AS DOUBLE) / 48.0 > 0
-       THEN ABS((CAST(w2p AS DOUBLE) / 2.0
-                 - CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 4.0)
-                / SQRT(CAST(COALESCE(n, 0) AS DOUBLE) * (CAST(COALESCE(n, 0) AS DOUBLE) + 1.0)
-                       * (2.0 * CAST(COALESCE(n, 0) AS DOUBLE) + 1.0) / 24.0
-                       - CAST(t3 AS DOUBLE) / 48.0)) > 1.959964
-       END AS reject_equal_05
-FROM s
-"""
-
-
-# Mirrors relational.events_mann_kendall: S over day pairs (exact integer
-# sign sum), tie-corrected variance with HUGEINT cubes, ±1 continuity z.
-ORACLE_SQL["events_mann_kendall"] = """
-WITH daily AS MATERIALIZED (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-),
-s AS (
-  SELECT CAST(SUM(CAST(SIGN(CAST(b.y AS DOUBLE) - CAST(a.y AS DOUBLE)) AS BIGINT)) AS BIGINT) AS s
-  FROM daily a CROSS JOIN daily b WHERE b.day > a.day
-),
-tie AS (
-  SELECT SUM(CAST(t AS HUGEINT) * (CAST(t AS HUGEINT) - 1)
-             * (2 * CAST(t AS HUGEINT) + 5)) AS tie_term
-  FROM (SELECT COUNT(*) AS t FROM daily GROUP BY y)
-),
-n_t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM daily)
-SELECT n AS n_days, s AS s_stat,
-       ROUND((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-              - CAST(tie_term AS DOUBLE)) / 18.0, 6) AS var_s,
-       ROUND(CASE WHEN n >= 2
-                   AND (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-                        - CAST(tie_term AS DOUBLE)) / 18.0 > 0
-             THEN CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0)
-                         / SQRT((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-                                 - CAST(tie_term AS DOUBLE)) / 18.0)
-                       WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0)
-                         / SQRT((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-                                 - CAST(tie_term AS DOUBLE)) / 18.0)
-                       ELSE 0.0 END
-             END, 9) AS z,
-       CASE WHEN n >= 2
-             AND (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-                  - CAST(tie_term AS DOUBLE)) / 18.0 > 0
-       THEN ABS(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0)
-                       / SQRT((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-                               - CAST(tie_term AS DOUBLE)) / 18.0)
-                     WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0)
-                       / SQRT((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (2.0 * CAST(n AS DOUBLE) + 5.0)
-                               - CAST(tie_term AS DOUBLE)) / 18.0)
-                     ELSE 0.0 END) > 1.959964
-       END AS trend_significant_05
-FROM s CROSS JOIN tie CROSS JOIN n_t
-"""
-
-
 # Mirrors relational.events_welch_anova: exact HUGEINT sufficient
 # statistics, degenerate groups dropped, both k-row folds on the decimal
 # rails (9dp for the weighted terms, 15dp for the tiny lambda terms).
@@ -8392,72 +7682,6 @@ SELECT k AS k_groups, k_dropped,
                             / (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)) * lam_fold)
              END, 9) AS f_stat
 FROM folds CROSS JOIN dropped
-"""
-
-
-# Mirrors relational.events_mcnemar: epoch-day midpoint split, per-user
-# conversion flags per half, continuity-corrected chi-square over the
-# discordant counts.
-ORACLE_SQL["events_mcnemar"] = """
-WITH base AS (
-  SELECT user_id, CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         event_type = 'purchase' AS p
-  FROM events
-),
-rng AS (SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM base),
-pu AS (
-  SELECT user_id,
-         SUM(CASE WHEN day <= (dmin + dmax) / 2 AND p THEN 1 ELSE 0 END) >= 3 AS conv1,
-         SUM(CASE WHEN day > (dmin + dmax) / 2 AND p THEN 1 ELSE 0 END) >= 3 AS conv2
-  FROM base CROSS JOIN rng GROUP BY 1
-),
-s AS (
-  SELECT CAST(SUM(CASE WHEN conv1 AND NOT conv2 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(SUM(CASE WHEN NOT conv1 AND conv2 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(COUNT(*) AS BIGINT) AS n_users
-  FROM pu
-)
-SELECT n_users, b AS conv_then_lapsed, c AS lapsed_then_conv,
-       ROUND(CASE WHEN b + c > 0
-             THEN (ABS(CAST(b AS DOUBLE) - CAST(c AS DOUBLE)) - 1.0)
-                  * (ABS(CAST(b AS DOUBLE) - CAST(c AS DOUBLE)) - 1.0)
-                  / (CAST(b AS DOUBLE) + CAST(c AS DOUBLE)) END, 9) AS chi2_cc,
-       CASE WHEN b + c > 0
-       THEN (ABS(CAST(b AS DOUBLE) - CAST(c AS DOUBLE)) - 1.0)
-            * (ABS(CAST(b AS DOUBLE) - CAST(c AS DOUBLE)) - 1.0)
-            / (CAST(b AS DOUBLE) + CAST(c AS DOUBLE)) > 3.841459
-       END AS reject_homogeneity_05
-FROM s
-"""
-
-
-# Mirrors relational.events_odds_ratio_ci: 2x2 weekend/purchase cells,
-# Haldane +0.5 on every cell when any is zero, Woolf log-OR CI with the
-# 7dp ln pin.
-ORACLE_SQL["events_odds_ratio_ci"] = """
-WITH s AS (
-  SELECT CAST(SUM(CASE WHEN dayofweek(ts) IN (0, 6) AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(SUM(CASE WHEN dayofweek(ts) IN (0, 6) AND event_type <> 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(SUM(CASE WHEN dayofweek(ts) NOT IN (0, 6) AND event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(SUM(CASE WHEN dayofweek(ts) NOT IN (0, 6) AND event_type <> 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM events
-),
-cells AS (
-  SELECT a, b, c, d,
-         (a = 0 OR b = 0 OR c = 0 OR d = 0) AS corrected,
-         CAST(a AS DOUBLE) + CASE WHEN a = 0 OR b = 0 OR c = 0 OR d = 0 THEN 0.5 ELSE 0.0 END AS ac,
-         CAST(b AS DOUBLE) + CASE WHEN a = 0 OR b = 0 OR c = 0 OR d = 0 THEN 0.5 ELSE 0.0 END AS bc,
-         CAST(c AS DOUBLE) + CASE WHEN a = 0 OR b = 0 OR c = 0 OR d = 0 THEN 0.5 ELSE 0.0 END AS cc,
-         CAST(d AS DOUBLE) + CASE WHEN a = 0 OR b = 0 OR c = 0 OR d = 0 THEN 0.5 ELSE 0.0 END AS dc
-  FROM s
-)
-SELECT a, b, c, d, corrected AS haldane_corrected,
-       ROUND(EXP(ROUND(LN(ac * dc / (bc * cc)), 7)), 7) AS odds_ratio,
-       ROUND(EXP(ROUND(LN(ac * dc / (bc * cc)), 7)
-                 - 1.959964 * SQRT(1.0/ac + 1.0/bc + 1.0/cc + 1.0/dc)), 7) AS ci_lo,
-       ROUND(EXP(ROUND(LN(ac * dc / (bc * cc)), 7)
-                 + 1.959964 * SQRT(1.0/ac + 1.0/bc + 1.0/cc + 1.0/dc)), 7) AS ci_hi
-FROM cells
 """
 
 
@@ -8523,156 +7747,6 @@ FROM spine s LEFT JOIN n_k n USING (k) LEFT JOIN e_k e USING (k)
 """
 
 
-# Mirrors relational.events_page_hinkley: running-mean deviations on the
-# 9dp decimal rail, running min over the railed cumulative, the same
-# delta/lambda literals.
-ORACLE_SQL["events_page_hinkley"] = """
-WITH daily AS MATERIALIZED (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-run AS (
-  SELECT day, c,
-         SUM(c) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
-         COUNT(*) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t
-  FROM daily
-),
-ph AS (
-  SELECT day,
-         SUM(CAST(ROUND(CAST(c AS DOUBLE) - CAST(s AS DOUBLE) / CAST(t AS DOUBLE) - 0.0, 9)
-                  AS DECIMAL(28,9)))
-           OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ph
-  FROM run
-),
-marked AS (
-  SELECT day, ph,
-         ph - MIN(ph) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS excursion
-  FROM ph
-),
-fa AS (
-  SELECT day AS alarm_day, ROUND(CAST(excursion AS DOUBLE), 6) AS excursion_at_alarm
-  FROM marked WHERE CAST(excursion AS DOUBLE) > 50.0 ORDER BY day LIMIT 1
-),
-tl AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         ROUND(CAST(MAX(excursion) AS DOUBLE), 6) AS max_excursion
-  FROM marked
-)
-SELECT n_days, max_excursion,
-       CAST(alarm_day AS BIGINT) AS alarm_day,
-       excursion_at_alarm,
-       alarm_day IS NOT NULL AS drift_detected
-FROM tl LEFT JOIN fa ON TRUE
-"""
-
-
-# Mirrors relational.events_wasserstein_drift: per-cents ECDF numerators,
-# support gaps via LEAD, exact HUGEINT area |cum_ref·n_act − cum_act·n_ref|·Δv,
-# one double division at the end.
-ORACLE_SQL["events_wasserstein_drift"] = """
-WITH per_v AS (
-  SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         SUM(CASE WHEN dayofweek(ts) IN (0, 6) THEN 0 ELSE 1 END) AS c_ref,
-         SUM(CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END) AS c_act
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1
-),
-tot AS (
-  SELECT CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-         CAST(SUM(c_act) AS BIGINT) AS n_act
-  FROM per_v
-),
-cum AS (
-  SELECT v,
-         SUM(c_ref) OVER w AS cum_ref,
-         SUM(c_act) OVER w AS cum_act,
-         LEAD(v) OVER (ORDER BY v) AS nxt
-  FROM per_v
-  WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-agg AS (
-  SELECT MAX(t.n_ref) AS n_ref, MAX(t.n_act) AS n_act,
-         SUM(ABS(CAST(cum_ref AS HUGEINT) * t.n_act
-                 - CAST(cum_act AS HUGEINT) * t.n_ref)
-             * CAST(nxt - v AS HUGEINT)) AS area
-  FROM cum CROSS JOIN tot t
-  WHERE nxt IS NOT NULL
-)
-SELECT n_ref, n_act,
-       ROUND(CASE WHEN CAST(n_ref AS DOUBLE) * CAST(n_act AS DOUBLE) > 0 THEN
-         CAST(area AS DOUBLE)
-           / (CAST(n_ref AS DOUBLE) * CAST(n_act AS DOUBLE)) / 100.0
-       END, 9) AS wasserstein_value
-FROM agg
-"""
-
-
-# Mirrors relational.events_friedman_test: complete user blocks, doubled
-# tie-averaged within-user ranks via RANGE frames, exact HUGEINT Q ratio.
-ORACLE_SQL["events_friedman_test"] = """
-WITH counts AS MATERIALIZED (
-  SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-k_tot AS (SELECT CAST(COUNT(DISTINCT event_type) AS BIGINT) AS k FROM events),
-eligible AS (
-  SELECT user_id, COUNT(*) = (SELECT k FROM k_tot) AS complete
-  FROM counts GROUP BY 1
-),
-dropped AS (
-  SELECT CAST(SUM(CASE WHEN NOT complete THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_dropped
-  FROM eligible
-),
-ranked AS (
-  SELECT c.user_id, c.event_type,
-         2 * COALESCE(COUNT(*) OVER (PARTITION BY c.user_id ORDER BY c.c
-               RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         + COUNT(*) OVER (PARTITION BY c.user_id ORDER BY c.c
-               RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
-         + 1 AS r2
-  FROM counts c JOIN eligible e USING (user_id)
-  WHERE e.complete
-),
-by_type AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS BIGINT) AS n_blocks,
-         CAST(SUM(r2) AS BIGINT) AS r2_sum,
-         SUM(CAST(r2 AS HUGEINT) * CAST(r2 AS HUGEINT)) AS r2_sq
-  FROM ranked GROUP BY 1
-),
-grand AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(MAX(n_blocks) AS BIGINT) AS n,
-         SUM(r2_sq) AS sq_tot
-  FROM by_type
-),
-num_fold AS (
-  SELECT MAX(g.k) AS k, MAX(g.n) AS n, MAX(g.sq_tot) AS sq_tot,
-         SUM((CAST(b.r2_sum AS HUGEINT)
-              - CAST(g.n AS HUGEINT) * (CAST(g.k AS HUGEINT) + 1))
-             * (CAST(b.r2_sum AS HUGEINT)
-                - CAST(g.n AS HUGEINT) * (CAST(g.k AS HUGEINT) + 1))) AS num
-  FROM by_type b CROSS JOIN grand g
-)
-SELECT CAST(n AS BIGINT) AS n_blocks,
-       (SELECT n_dropped FROM dropped) AS n_dropped,
-       CAST(k AS BIGINT) AS k_treatments,
-       CAST(k - 1 AS BIGINT) AS df,
-       ROUND(CASE WHEN k >= 2 AND n >= 1
-                   AND CAST(sq_tot - CAST(n AS HUGEINT) * CAST(k AS HUGEINT)
-                            * (CAST(k AS HUGEINT) + 1)
-                            * (CAST(k AS HUGEINT) + 1) AS DOUBLE) > 0 THEN
-         CAST(k - 1 AS DOUBLE) * CAST(num AS DOUBLE)
-           / CAST(sq_tot - CAST(n AS HUGEINT) * CAST(k AS HUGEINT)
-                  * (CAST(k AS HUGEINT) + 1)
-                  * (CAST(k AS HUGEINT) + 1) AS DOUBLE)
-       END, 9) AS q_stat
-FROM num_fold
-"""
-
-
 # Mirrors curation.corpus_source_concentration: sorted-rank Gini identity
 # with exact HUGEINT cross products, 9dp-railed HHI fold, top-k shares.
 ORACLE_SQL["corpus_source_concentration"] = """
@@ -8717,415 +7791,6 @@ SELECT n_sources, total_tokens,
        ROUND(CAST(top3 AS DOUBLE) / CAST(total_tokens AS DOUBLE), 9)
          AS top3_share
 FROM agg
-"""
-
-
-# Mirrors relational.events_cohens_d: exact one-pass sufficient statistics
-# (HUGEINT squares internal, BIGINT outputs), identical double expression
-# trees for the pooled sd / d / Hedges J / SE, magnitude bands f-string
-# pinned from the SAME Cohen (1988) literals.
-from .operators.relational import (  # noqa: E402
-    COHEN_D_LARGE,
-    COHEN_D_MEDIUM,
-    COHEN_D_SMALL,
-    COHEN_D_Z_05,
-    TOST_MARGIN_CENTS,
-    TOST_Z_05,
-)
-
-
-_VC_STATS_SQL = """
-  SELECT CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS na,
-         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-         CAST(SUM(CASE WHEN event_type = 'view'
-                  THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS sa,
-         CAST(SUM(CASE WHEN event_type = 'click'
-                  THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS sb,
-         SUM(CASE WHEN event_type = 'view'
-             THEN CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-                  * CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-             ELSE 0 END) AS ssa,
-         SUM(CASE WHEN event_type = 'click'
-             THEN CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-                  * CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-             ELSE 0 END) AS ssb
-  FROM events
-  WHERE value IS NOT NULL AND event_type IN ('view', 'click')
-"""
-
-
-ORACLE_SQL["events_cohens_d"] = f"""
-WITH stats AS ({_VC_STATS_SQL}),
-terms AS (
-  SELECT na, nb,
-         CASE WHEN na > 0
-              THEN CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) END AS ma,
-         CASE WHEN nb > 0
-              THEN CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) END AS mb,
-         CASE WHEN na >= 2 THEN
-           (CAST(ssa AS DOUBLE)
-            - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / CAST(na AS DOUBLE))
-             / (CAST(na AS DOUBLE) - 1.0) END AS va,
-         CASE WHEN nb >= 2 THEN
-           (CAST(ssb AS DOUBLE)
-            - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE))
-             / (CAST(nb AS DOUBLE) - 1.0) END AS vb,
-         CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0 AS df,
-         na >= 2 AND nb >= 2 AS valid
-  FROM stats
-),
-folds AS (
-  SELECT na, nb, ma, mb, valid, df,
-         SQRT(((CAST(na AS DOUBLE) - 1.0) * va
-               + (CAST(nb AS DOUBLE) - 1.0) * vb) / df) AS sp
-  FROM terms
-),
-d AS (
-  SELECT na, nb, ma, mb, valid, df, sp,
-         CASE WHEN valid AND sp > 0 THEN (ma - mb) / sp END AS dd
-  FROM folds
-),
-ci AS (
-  SELECT *,
-         1.0 - 3.0 / (4.0 * (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)) - 9.0)
-           AS j,
-         CASE WHEN valid THEN
-           SQRT((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
-                / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
-                + dd * dd / (2.0 * df)) END AS se
-  FROM d
-)
-SELECT na AS n_a, nb AS n_b,
-       ROUND(CASE WHEN na > 0 THEN ma / 100.0 END, 9) AS mean_a,
-       ROUND(CASE WHEN nb > 0 THEN mb / 100.0 END, 9) AS mean_b,
-       ROUND(CASE WHEN valid THEN sp / 100.0 END, 9) AS pooled_sd,
-       ROUND(dd, 9) AS cohens_d,
-       ROUND(dd * j, 9) AS hedges_g,
-       ROUND(dd - {COHEN_D_Z_05!r} * se, 9) AS ci_lo,
-       ROUND(dd + {COHEN_D_Z_05!r} * se, 9) AS ci_hi,
-       CASE WHEN dd IS NULL THEN NULL
-            WHEN ABS(dd) < {COHEN_D_SMALL!r} THEN 'negligible'
-            WHEN ABS(dd) < {COHEN_D_MEDIUM!r} THEN 'small'
-            WHEN ABS(dd) < {COHEN_D_LARGE!r} THEN 'medium'
-            ELSE 'large' END AS magnitude
-FROM ci
-"""
-
-
-# Mirrors relational.events_tost_equivalence: the same exact sufficient
-# statistics, Welch SE and both one-sided z's with identical double
-# trees; margin and critical value f-string pinned.
-ORACLE_SQL["events_tost_equivalence"] = f"""
-WITH stats AS ({_VC_STATS_SQL}),
-terms AS (
-  SELECT na, nb,
-         CASE WHEN na > 0
-              THEN CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) END AS ma,
-         CASE WHEN nb > 0
-              THEN CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) END AS mb,
-         CASE WHEN na >= 2 THEN
-           (CAST(ssa AS DOUBLE)
-            - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / CAST(na AS DOUBLE))
-             / (CAST(na AS DOUBLE) - 1.0) END AS va,
-         CASE WHEN nb >= 2 THEN
-           (CAST(ssb AS DOUBLE)
-            - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE))
-             / (CAST(nb AS DOUBLE) - 1.0) END AS vb,
-         na >= 2 AND nb >= 2 AS valid
-  FROM stats
-),
-folds AS (
-  SELECT na, nb, ma, mb, valid,
-         SQRT(va / CAST(na AS DOUBLE) + vb / CAST(nb AS DOUBLE)) AS se
-  FROM terms
-),
-zs AS (
-  SELECT na, nb, ma, mb, valid, se,
-         CASE WHEN valid AND se > 0
-              THEN ((ma - mb) + CAST({TOST_MARGIN_CENTS} AS DOUBLE)) / se
-         END AS z_lo,
-         CASE WHEN valid AND se > 0
-              THEN ((ma - mb) - CAST({TOST_MARGIN_CENTS} AS DOUBLE)) / se
-         END AS z_hi
-  FROM folds
-)
-SELECT na AS n_a, nb AS n_b,
-       ROUND(CASE WHEN valid THEN ma - mb END / 100.0, 9) AS mean_diff,
-       ROUND(CASE WHEN valid AND se > 0 THEN se END / 100.0, 9) AS se_welch,
-       CAST({TOST_MARGIN_CENTS} AS DOUBLE) / 100.0 AS margin,
-       ROUND(z_lo, 9) AS z_lower,
-       ROUND(z_hi, 9) AS z_upper,
-       CASE WHEN z_lo IS NOT NULL
-            THEN z_lo > {TOST_Z_05!r} AND z_hi < -{TOST_Z_05!r}
-       END AS equivalent_05
-FROM zs
-"""
-
-
-# Mirrors relational.events_mood_median_test: the doubled grand-median
-# selection (the prev<k≤prev+c containment idiom), exact integer 2×k
-# margins, chi-square terms on the 9dp/DECIMAL(28,9) rail with identical
-# double expression trees.
-ORACLE_SQL["events_mood_median_test"] = """
-WITH per_tv AS (
-  SELECT event_type AS et,
-         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-  GROUP BY 1, 2
-),
-per_v AS (SELECT v, CAST(SUM(c) AS BIGINT) AS c FROM per_tv GROUP BY 1),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per_v),
-cum AS (
-  SELECT v, c,
-         COALESCE(SUM(c) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev,
-         t.n
-  FROM per_v CROSS JOIN tot t
-),
-med AS (
-  SELECT MAX(n) AS n,
-         CAST(SUM(CASE WHEN prev < ((n + 1) // 2)
-                        AND ((n + 1) // 2) <= prev + c
-                   THEN v ELSE 0 END)
-              + SUM(CASE WHEN prev < ((n // 2) + 1)
-                          AND ((n // 2) + 1) <= prev + c
-                     THEN v ELSE 0 END) AS BIGINT) AS med2
-  FROM cum
-),
-groups AS (
-  SELECT p.et,
-         CAST(SUM(p.c) AS BIGINT) AS n_g,
-         CAST(SUM(CASE WHEN 2 * p.v > m.med2 THEN p.c ELSE 0 END) AS BIGINT)
-           AS a_g,
-         MAX(m.n) AS n, MAX(m.med2) AS med2
-  FROM per_tv p CROSS JOIN med m
-  GROUP BY 1
-),
-margins AS (
-  SELECT MAX(n) AS n, MAX(med2) AS med2,
-         CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(a_g) AS BIGINT) AS a_tot
-  FROM groups
-),
-j AS (
-  SELECT g.et, g.n_g, g.a_g, g.n, g.med2, m.k, m.a_tot
-  FROM groups g CROSS JOIN margins m
-),
-terms AS (
-  SELECT n, med2, k, a_tot,
-         CASE WHEN a_tot > 0 AND a_tot < n AND k >= 2 THEN
-           (CAST(a_g AS DOUBLE)
-            - CAST(n_g AS DOUBLE) * CAST(a_tot AS DOUBLE) / CAST(n AS DOUBLE))
-           * (CAST(a_g AS DOUBLE)
-              - CAST(n_g AS DOUBLE) * CAST(a_tot AS DOUBLE) / CAST(n AS DOUBLE))
-           / (CAST(n_g AS DOUBLE) * CAST(a_tot AS DOUBLE) / CAST(n AS DOUBLE))
-           + (CAST(n_g - a_g AS DOUBLE)
-              - CAST(n_g AS DOUBLE) * CAST(n - a_tot AS DOUBLE)
-                / CAST(n AS DOUBLE))
-             * (CAST(n_g - a_g AS DOUBLE)
-                - CAST(n_g AS DOUBLE) * CAST(n - a_tot AS DOUBLE)
-                  / CAST(n AS DOUBLE))
-             / (CAST(n_g AS DOUBLE) * CAST(n - a_tot AS DOUBLE)
-                / CAST(n AS DOUBLE))
-         END AS term
-  FROM j
-),
-folds AS (
-  SELECT MAX(n) AS n_total, MAX(k) AS k_groups, MAX(med2) AS med2,
-         MAX(a_tot) AS n_above,
-         CAST(SUM(CAST(ROUND(term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS chi2_n
-  FROM terms
-)
-SELECT n_total, k_groups,
-       ROUND(CAST(med2 AS DOUBLE) / 200.0, 9) AS grand_median,
-       CAST(n_above AS BIGINT) AS n_above,
-       CAST(k_groups - 1 AS BIGINT) AS df,
-       ROUND(chi2_n, 9) AS chi2
-FROM folds
-"""
-
-
-# Mirrors relational.events_overdispersion: full-calendar per-type day
-# spine (zero days count), exact HUGEINT variance numerator n·Σc² − (Σc)²,
-# one double division for the dispersion index, Fisher's √(2X) − √(2df−1)
-# approximation with the pinned two-sided z.
-from .operators.relational import OVERDISP_Z_05  # noqa: E402
-
-
-ORACLE_SQL["events_overdispersion"] = f"""
-WITH per_td AS (
-  SELECT event_type AS et,
-         CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-rng AS (SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM per_td),
-days AS (
-  SELECT UNNEST(generate_series((SELECT dmin FROM rng),
-                                (SELECT dmax FROM rng))) AS day
-),
-spine AS (
-  SELECT t.et, d.day
-  FROM (SELECT DISTINCT et FROM per_td) t CROSS JOIN days d
-),
-filled AS (
-  SELECT s.et, COALESCE(p.c, 0) AS c
-  FROM spine s LEFT JOIN per_td p ON s.et = p.et AND s.day = p.day
-),
-g AS (
-  SELECT et,
-         CAST(COUNT(*) AS BIGINT) AS n_days,
-         CAST(SUM(c) AS BIGINT) AS s,
-         SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS ss
-  FROM filled GROUP BY 1
-),
-terms AS (
-  SELECT et, n_days, s,
-         CAST(n_days AS HUGEINT) * ss
-           - CAST(s AS HUGEINT) * CAST(s AS HUGEINT) AS num,
-         n_days >= 2 AND s > 0 AS ok
-  FROM g
-),
-folds AS (
-  SELECT et, n_days, s, ok,
-         CASE WHEN n_days > 0
-              THEN CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE) END AS mean,
-         CASE WHEN n_days >= 2 THEN
-           CAST(num AS DOUBLE)
-             / (CAST(n_days AS DOUBLE) * (CAST(n_days AS DOUBLE) - 1.0))
-         END AS var,
-         CASE WHEN ok THEN
-           CAST(num AS DOUBLE)
-             / ((CAST(n_days AS DOUBLE) - 1.0) * CAST(s AS DOUBLE))
-         END AS disp
-  FROM terms
-),
-zs AS (
-  SELECT *,
-         CASE WHEN ok THEN
-           SQRT(2.0 * ((CAST(n_days AS DOUBLE) - 1.0) * disp))
-             - SQRT(2.0 * (CAST(n_days AS DOUBLE) - 1.0) - 1.0)
-         END AS z
-  FROM folds
-)
-SELECT et AS event_type, n_days, s AS n_events,
-       ROUND(mean, 9) AS mean_daily,
-       ROUND(var, 9) AS var_daily,
-       ROUND(disp, 9) AS dispersion_index,
-       ROUND(z, 9) AS z_dispersion,
-       CASE WHEN z IS NULL THEN NULL
-            WHEN z > {OVERDISP_Z_05!r} THEN 'overdispersed'
-            WHEN z < -{OVERDISP_Z_05!r} THEN 'underdispersed'
-            ELSE 'poisson-consistent' END AS verdict
-FROM zs
-"""
-
-
-# Mirrors relational._daily_view_click_counts consumers: zero-filled
-# view/click daily series on the full event calendar; Bland-Altman stats
-# from the exact HUGEINT variance numerator; Kendall tau-b over the
-# day-pair frame with identical double trees.
-from .operators.relational import BLAND_ALTMAN_Z_05  # noqa: E402
-
-
-_DAILY_VC_SQL = """
-per_d AS (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT)
-           AS nv,
-         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
-           AS nc
-  FROM events GROUP BY 1
-),
-rng AS (SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM per_d),
-spine AS (
-  SELECT UNNEST(generate_series((SELECT dmin FROM rng),
-                                (SELECT dmax FROM rng))) AS day
-),
-daily AS (
-  SELECT s.day,
-         COALESCE(p.nv, 0) AS nv,
-         COALESCE(p.nc, 0) AS nc
-  FROM spine s LEFT JOIN per_d p ON s.day = p.day
-)
-"""
-
-
-ORACLE_SQL["events_bland_altman_daily"] = f"""
-WITH {_DAILY_VC_SQL},
-diffs AS (SELECT day, nv - nc AS d FROM daily),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         CAST(SUM(d) AS BIGINT) AS sd_sum,
-         SUM(CAST(d AS HUGEINT) * CAST(d AS HUGEINT)) AS ssd
-  FROM diffs
-),
-enriched AS (
-  SELECT n_days,
-         CASE WHEN n_days > 0
-              THEN CAST(sd_sum AS DOUBLE) / CAST(n_days AS DOUBLE) END AS bias,
-         CASE WHEN n_days >= 2 THEN
-           SQRT(CAST(CAST(n_days AS HUGEINT) * ssd
-                     - CAST(sd_sum AS HUGEINT) * CAST(sd_sum AS HUGEINT)
-                     AS DOUBLE)
-                / (CAST(n_days AS DOUBLE) * (CAST(n_days AS DOUBLE) - 1.0)))
-         END AS sd
-  FROM stats
-),
-lims AS (
-  SELECT n_days, bias, sd,
-         bias - {BLAND_ALTMAN_Z_05!r} * sd AS lo,
-         bias + {BLAND_ALTMAN_Z_05!r} * sd AS hi
-  FROM enriched
-),
-outside AS (
-  SELECT CAST(SUM(CASE WHEN CAST(d.d AS DOUBLE) < l.lo
-                         OR CAST(d.d AS DOUBLE) > l.hi
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_outside,
-         MAX(l.n_days) AS n_days, MAX(l.bias) AS bias, MAX(l.sd) AS sd,
-         MAX(l.lo) AS lo, MAX(l.hi) AS hi
-  FROM diffs d CROSS JOIN lims l
-)
-SELECT n_days,
-       ROUND(bias, 9) AS bias,
-       ROUND(sd, 9) AS sd_diff,
-       ROUND(lo, 9) AS loa_lo,
-       ROUND(hi, 9) AS loa_hi,
-       n_outside,
-       ROUND(CASE WHEN n_days > 0
-             THEN CAST(n_outside AS DOUBLE) / CAST(n_days AS DOUBLE) END, 9)
-         AS pct_outside
-FROM outside
-"""
-
-
-ORACLE_SQL["events_kendall_tau_daily"] = f"""
-WITH {_DAILY_VC_SQL},
-pairs AS (
-  SELECT a.nv AS v1, a.nc AS c1, b.nv AS v2, b.nc AS c2
-  FROM daily a JOIN daily b ON b.day > a.day
-),
-agg AS (
-  SELECT CAST(SUM(CAST(SIGN(CAST(v2 - v1 AS DOUBLE))
-                       * SIGN(CAST(c2 - c1 AS DOUBLE)) AS BIGINT)) AS BIGINT)
-           AS s,
-         CAST(COUNT(*) AS BIGINT) AS n_pairs,
-         CAST(SUM(CASE WHEN v1 = v2 THEN 1 ELSE 0 END) AS BIGINT) AS ties_x,
-         CAST(SUM(CASE WHEN c1 = c2 THEN 1 ELSE 0 END) AS BIGINT) AS ties_y
-  FROM pairs
-),
-nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days FROM daily),
-j AS (SELECT a.*, n.n_days FROM agg a CROSS JOIN nd n)
-SELECT n_days, n_pairs, s, ties_x, ties_y,
-       ROUND(CASE WHEN n_pairs > ties_x AND n_pairs > ties_y THEN
-         CAST(s AS DOUBLE)
-           / (SQRT(CAST(n_pairs - ties_x AS DOUBLE))
-              * SQRT(CAST(n_pairs - ties_y AS DOUBLE)))
-       END, 9) AS tau_b
-FROM j
 """
 
 

@@ -173,7 +173,6 @@ from .sources import textfiles  # noqa: E402
 # names, all driver-green and oracle-backed locally.
 register("customer_rfm", relational.customer_rfm)
 register("orders_rfm_migration", relational.orders_rfm_migration)
-register("events_conformal_interval", relational.events_conformal_interval)
 register("text_good_turing", text.text_good_turing)
 register("text_js_divergence", text.text_js_divergence)
 register("text_quality_kappa", text.text_quality_kappa)
@@ -185,11 +184,7 @@ register("dedup_paragraphs", text.dedup_paragraphs)
 register("corpus_temperature_mix", curation.corpus_temperature_mix)
 register("text_heavy_hitters_cms", text.text_heavy_hitters_cms)
 register("orders_backlog_timeseries", relational.orders_backlog_timeseries)
-register("events_page_hinkley", relational.events_page_hinkley)
-register("events_ab_lift", relational.events_ab_lift)
-register("events_autocorrelation", relational.events_autocorrelation)
 register("events_ewma_daily", relational.events_ewma_daily)
-register("events_tukey_hsd", relational.events_tukey_hsd)
 register("text_hashing_tf", text.text_hashing_tf)
 register("text_word_pmi", text.text_word_pmi)
 register("text_char_entropy", text.text_char_entropy)
@@ -207,7 +202,6 @@ register("mm_payload_dedup", multimodal.mm_payload_dedup)
 # r11-rotation names (green r11-r12); all remain fully oracle-backed
 # locally, swept at every commit.
 register("stream_cdc_merge", streaming_windows.stream_cdc_merge)
-register("events_survival_km", relational.events_survival_km)
 register("sim_knn_graph", similarity.sim_knn_graph)
 register("stream_sliding_counts", streaming_windows.stream_sliding_counts)
 register("stream_sink_parquet", streaming_windows.stream_sink_parquet)
@@ -232,7 +226,6 @@ register("percentiles_by_priority", scalar.percentiles_by_priority)
 # names were driver-green two consecutive rounds (r10-r11); all remain
 # fully oracle-backed locally.
 register("orders_benford_test", relational.orders_benford_test)
-register("events_poisson_bootstrap_ci", relational.events_poisson_bootstrap_ci)
 register("events_winsorized_stats", relational.events_winsorized_stats)
 register("sim_hybrid_rrf", similarity.sim_hybrid_rrf)
 register("dedup_rouge_verify", dedup.dedup_rouge_verify)
@@ -498,7 +491,6 @@ register("orders_duplicate_detection", relational.orders_duplicate_detection)
 register("text_stats", text.text_stats)
 register("mm_byte_histogram", multimodal.mm_byte_histogram)
 register("corpus_split_assign", curation.corpus_split_assign)
-register("events_decision_stump", relational.events_decision_stump)
 register("privacy_dp_sensitivity", relational.privacy_dp_sensitivity)
 register("events_user_hazard_curve", relational.events_user_hazard_curve)
 register("sim_knn_label_vote", similarity.sim_knn_label_vote)
@@ -512,65 +504,23 @@ register("sim_ivf_balance_report", similarity.sim_ivf_balance_report)
 register("mm_audio_silence_trim", multimodal.mm_audio_silence_trim)
 register("embedding_hard_negatives", similarity.embedding_hard_negatives)
 register("corpus_dedup_token_savings", dedup.corpus_dedup_token_savings)
-# The round-9 additions (Benford QA, Poisson-bootstrap CI, winsorized
-# stats, Kneser-Ney LM, RRF fusion, permutation test, ROUGE verify,
-# graph-ANN beam search, CCNet buckets, Laspeyres) plus the
-# corpus_stratified_split / corpus_health_report / streaming reports were
-# promoted into the driver window by the r10 rotation — registered above.
+# The round-9 additions (Benford QA, winsorized stats, Kneser-Ney LM, RRF
+# fusion, permutation test, ROUGE verify, graph-ANN beam search, CCNet
+# buckets, Laspeyres) plus the corpus_stratified_split /
+# corpus_health_report / streaming reports were promoted into the driver
+# window by the r10 rotation — registered above.
 
-# --- round-10 additions: the model-eval calibration pair — isotonic
-# (PAVA-equivalent minimax) calibration of score-bucket rates, and the
-# split-conformal distribution-free prediction bound --------------------
-register("events_isotonic_calibration", relational.events_isotonic_calibration)
-
-# --- round-11 additions (held well under the 20-slot rotation): the robust
-# trend estimator, the multiple-comparisons test family, and density-based
-# clustering composed over the session-memoized kNN graph ------------------
-register("events_power_analysis", relational.events_power_analysis)
+# Round-11 to round-13 additions: retrieval eval (nDCG), the
+# randomized-response privacy audit, stylometry (Burrows' delta), Welch's
+# heteroscedastic one-way ANOVA, lexical diversity and the
+# source-concentration report (HHI/Gini/top-k token shares — mixture
+# governance).
 register("text_ndcg_eval", text.text_ndcg_eval)
 register("privacy_randomized_response", relational.privacy_randomized_response)
-register("events_granger_lite", relational.events_granger_lite)
 register("text_burrows_delta", text.text_burrows_delta)
-
-# --- round-12 additions (held under the ≤20 first-time-rotation budget):
-# the paired/rank/trend test family — several riding the new bucketed
-# two-pass rank machinery — plus an experimentation effect-size
-# readout -----------------------------------------------------------------
-register("events_wilcoxon_signed_rank", relational.events_wilcoxon_signed_rank)
-register("events_mann_kendall", relational.events_mann_kendall)
 register("events_welch_anova", relational.events_welch_anova)
-register("events_mcnemar", relational.events_mcnemar)
-register("events_odds_ratio_ci", relational.events_odds_ratio_ci)
 register("text_lexical_diversity", text.text_lexical_diversity)
-
-# r13 additions: the drift metric that reports distance in value units
-# (1-D Wasserstein over the bucketed_lead machinery), the
-# repeated-measures rank test over matched user blocks (Friedman), and the
-# source-concentration report (HHI/Gini/top-k token shares — mixture
-# governance). Each is oracle-backed, textbook-replayed,
-# SCALE/COVERAGE-rowed and vacuity-triaged (house additions discipline).
-register("events_wasserstein_drift", relational.events_wasserstein_drift)
-register("events_friedman_test", relational.events_friedman_test)
 register("corpus_source_concentration", curation.corpus_source_concentration)
-
-# r13 continuation additions: the parametric effect size (Cohen's d with
-# Hedges' g and a normal CI) and the inverted question no
-# difference test can ask (TOST equivalence within a stated margin). Same
-# additions discipline: oracle-backed, textbook-replayed,
-# SCALE/COVERAGE-rowed, vacuity-triaged, constants sync-pinned.
-register("events_cohens_d", relational.events_cohens_d)
-register("events_tost_equivalence", relational.events_tost_equivalence)
-# Mood's median test (the weakest-assumption k-group location gate; the
-# doubled-order-statistic selection feeds an exact 2×k table)
-# and the per-type Poisson overdispersion audit of the daily series
-# (zero days on the calendar spine; exact integer dispersion numerator).
-register("events_mood_median_test", relational.events_mood_median_test)
-register("events_overdispersion", relational.events_overdispersion)
-# The paired-daily-series family on the shared zero-filled view/click
-# spine: Bland-Altman agreement (bias, limits, outside share) and
-# Kendall's tau-b (tie-corrected pairwise concordance on BOTH margins).
-register("events_bland_altman_daily", relational.events_bland_altman_daily)
-register("events_kendall_tau_daily", relational.events_kendall_tau_daily)
 # Vocabulary-growth law fit (Heaps β/K over integer-arithmetic doc-prefix
 # checkpoints; exact decimal OLS sums) and Gries' DP token dispersion
 # across sources (the boilerplate-vs-general-vocabulary signal).

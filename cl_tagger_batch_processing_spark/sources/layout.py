@@ -50,10 +50,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 from ..handoff import staging_path
 
 LAYOUT_STAGING = staging_path("layout")

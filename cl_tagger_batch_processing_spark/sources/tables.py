@@ -56,7 +56,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session_cache_sweep(_TABLE_PLAN_CACHE, app_id)
     hit = _TABLE_PLAN_CACHE.get(key)
     if hit is not None:
-        return hit
+        # A fresh projection per call: two loads of one table must not be
+        # the same DataFrame, whose shared column ids make a self-join's
+        # Column predicates ambiguous. It reuses the memoized plan, so
+        # there is still no re-listing and no footer read.
+        return hit.toDF(*hit.columns)
     # Runtime-settable; required before the read plans the parquet schema.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -68,7 +72,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     _TABLE_PLAN_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or FIXTURE_TABLES)}

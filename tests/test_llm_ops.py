@@ -1274,8 +1274,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert "CAST(6 - u.lg" in fb and "/ 63.0" in fb and "DECIMAL(38,9)" in fb
     assert relational.LDIV_L == 3
     assert ">= 3" in oracles.ORACLE_SQL["privacy_l_diversity"]
-    assert relational.ACF_MAX_LAG == 7
-    assert "generate_series(1, 7)" in oracles.ORACLE_SQL["events_autocorrelation"]
     assert relational.TCL_T == 0.2
     assert "<= 0.2" in oracles.ORACLE_SQL["privacy_t_closeness"]
     # all three privacy audits share one QI band width (KANON_BAND_WIDTH)
@@ -1304,8 +1302,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert _inspect.signature(oracles._logit_sql).parameters["steps"].default == 8
     assert "value / 100.0" in lr_sql and "0.1 * (CAST" in lr_sql
     assert "FROM feats f CROSS JOIN w8 w" in lr_sql
-    assert relational.STUMP_BUCKET == 10.0
-    assert "floor(value / 10.0)" in oracles.ORACLE_SQL["events_decision_stump"]
     assert text_ops.TEXTRANK_MIN_COOC == 5
     tr_sql = oracles.ORACLE_SQL["text_textrank_keywords"]
     assert "HAVING COUNT(*) >= 5" in tr_sql
@@ -1818,32 +1814,6 @@ def test_perplexity_sweep_monotone(spark, sf_dir):
     assert any(0.0 < f < 1.0 for f in fracs)  # the sweep discriminates
 
 
-def test_ab_lift_replay(spark, sf_dir):
-    """Both arms partition the user base; conv_rate and the z-score replay
-    exactly from the emitted counts (textbook pooled two-proportion)."""
-    import math
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = {r.arm: r for r in relational.events_ab_lift(spark, sf_dir).collect()}
-    assert set(rows) == {"control", "treatment"}
-    n_users = (
-        load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-    )
-    c, t = rows["control"], rows["treatment"]
-    assert c.n_users + t.n_users == n_users
-    assert c.z_score == t.z_score and c.relative_lift == t.relative_lift
-    p0, p1 = c.n_converted / c.n_users, t.n_converted / t.n_users
-    pooled = (c.n_converted + t.n_converted) / (c.n_users + t.n_users)
-    se2 = pooled * (1.0 - pooled) * (1.0 / c.n_users + 1.0 / t.n_users)
-    if se2 > 0:
-        assert abs(c.z_score - (p1 - p0) / math.sqrt(se2)) < 1e-12
-    else:
-        assert c.z_score is None
-    assert c.conv_rate == p0 and t.conv_rate == p1
-
-
 def test_blocklist_counts_replay(spark, sf_dir):
     """Hit counts replay from the raw text by token equality; the verdict
     is hits > 0; every doc appears exactly once; the list engages (some
@@ -2073,42 +2043,6 @@ def test_closeness_centrality_matches_python_bfs(spark, sf_dir):
             assert r.closeness is None
 
 
-def test_autocorrelation_matches_exact_stats(spark, sf_dir):
-    """ACF cross-check: per lag, the pair count and the Pearson r match a
-    driver-side recomputation from exact integer sufficient statistics
-    (the same one-division float tree the operator and oracle use)."""
-    import math
-
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    rows = {
-        r.lag: r for r in relational.events_autocorrelation(spark, sf_dir).collect()
-    }
-    assert set(rows) == set(range(1, relational.ACF_MAX_LAG + 1))
-    daily = {
-        r.day: r.daily_count
-        for r in relational._daily_event_counts(spark, sf_dir).collect()
-    }
-    for lag, r in rows.items():
-        pairs = [(daily[d], daily[d + lag]) for d in daily if d + lag in daily]
-        assert r.n_pairs == len(pairs)
-        n = len(pairs)
-        sx = sum(x for x, _ in pairs)
-        sy = sum(y for _, y in pairs)
-        sxy = sum(x * y for x, y in pairs)
-        sxx = sum(x * x for x, _ in pairs)
-        syy = sum(y * y for _, y in pairs)
-        nd = float(n)
-        vx = nd * float(sxx) - float(sx) * float(sx)
-        vy = nd * float(syy) - float(sy) * float(sy)
-        if vx > 0 and vy > 0:
-            expect = (nd * float(sxy) - float(sx) * float(sy)) / math.sqrt(vx * vy)
-            assert r.acf == expect
-            assert -1.0 <= r.acf <= 1.0
-        else:
-            assert r.acf is None
-
-
 def test_t_closeness_matches_exact_tvd(spark, sf_dir):
     """t-closeness cross-check: every class's t_distance equals the exact
     integer TVD recomputed driver-side, class sizes partition the table,
@@ -2291,56 +2225,6 @@ def test_logistic_regression_training_invariants(spark, sf_dir):
     assert row.accuracy == (n - npos) / n
     assert 0.0 < row.log_loss < 1.0
     assert abs(row.coef) < 1.0
-
-
-def test_decision_stump_matches_exact_replay(spark, sf_dir):
-    """Exact split-search replay: per-threshold counts from a driver-side
-    histogram, the same double Gini tree, and the (gini ASC, threshold
-    ASC) ranking."""
-    import math
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    rows = {
-        r.threshold: r
-        for r in relational.events_decision_stump(spark, sf_dir).collect()
-    }
-    data = (
-        load_table(spark, sf_dir, "events")
-        .select("value", "event_type")
-        .collect()
-    )
-    from collections import Counter
-
-    nb: Counter = Counter()
-    pb: Counter = Counter()
-    for r in data:
-        b = math.floor(r.value / relational.STUMP_BUCKET)
-        nb[b] += 1
-        pb[b] += r.event_type == "purchase"
-    n, npos = sum(nb.values()), sum(pb.values())
-    nl = pl = 0
-    expect = {}
-    for b in sorted(nb):
-        nl += nb[b]
-        pl += pb[b]
-        nr, pr = n - nl, npos - pl
-        if nl > 0 and nr > 0:
-            gl = 1.0 - (pl / nl) * (pl / nl) - ((nl - pl) / nl) * ((nl - pl) / nl)
-            gr = 1.0 - (pr / nr) * (pr / nr) - ((nr - pr) / nr) * ((nr - pr) / nr)
-            expect[(b + 1) * relational.STUMP_BUCKET] = (
-                nl, pl, nr, pr, (nl * gl + nr * gr) / n
-            )
-    assert set(rows) == set(expect)
-    for t, (enl, epl, enr, epr, eg) in expect.items():
-        r = rows[t]
-        assert (r.n_left, r.pos_left, r.n_right, r.pos_right) == (enl, epl, enr, epr)
-        assert r.weighted_gini == eg
-    ranked = sorted(expect, key=lambda t: (expect[t][4], t))
-    for i, t in enumerate(ranked, 1):
-        assert rows[t].rank == i
 
 
 def test_textrank_matches_python_pagerank(spark, sf_dir):
@@ -2711,31 +2595,6 @@ def test_r8_constants_in_sync_with_oracles():
     assert "s3 AS MATERIALIZED" in bpe and "s4 AS" not in bpe
 
 
-def test_km_censor_constant_in_sync():
-    from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    assert relational.KM_CENSOR_MINUTES == 30
-    assert "30 * 60000000" in oracles.ORACLE_SQL["events_survival_km"]
-
-
-def test_km_curve_is_nonvacuous(spark, sf_dir):
-    # r8 review fix: the first cut censored EVERY fixture user (168h
-    # horizon over a 30-day span) and emitted 0 rows — a vacuously green
-    # parity gate. Pin that the session-level curve has real churn points,
-    # a real censored tail, and monotone non-increasing survival.
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        events_survival_km,
-    )
-
-    rows = events_survival_km(spark, sf_dir).orderBy("duration_minutes").collect()
-    assert len(rows) >= 5  # real curve, not an empty frame
-    assert rows[0].n_at_risk > rows[0].n_churned  # not exhausted at t=0
-    surv = [r.survival for r in rows]
-    assert all(a >= b for a, b in zip(surv, surv[1:]))  # monotone
-    assert 0.0 <= surv[-1] < 1.0
-
-
 def test_r8_batch7_constants_in_sync():
     from cl_tagger_batch_processing_spark import oracles
     from cl_tagger_batch_processing_spark.operators import curation, similarity
@@ -2931,13 +2790,6 @@ def test_r9_constants_in_sync_with_oracles():
     bf = oracles.ORACLE_SQL["orders_benford_test"]
     assert relational.BENFORD_CHI2_CRIT_05 == 15.507
     assert "CAST(15.507 AS DOUBLE)" in bf
-    bs = oracles.ORACLE_SQL["events_poisson_bootstrap_ci"]
-    assert relational.BOOT_B == 32 and "generate_series(0, 31)" in bs
-    # CI endpoints became conditional-min aggregates in the r9 ADVICE
-    # hardening (degenerate runs yield NULL bounds, not an empty frame)
-    assert relational.BOOT_LO_RANK == 2 and "WHEN r = 2 THEN mean_b" in bs
-    assert relational.BOOT_HI_RANK == 31 and "WHEN r = 31 THEN mean_b" in bs
-    assert relational.BOOT_TYPE == "purchase" and "'purchase'" in bs
     ws = oracles.ORACLE_SQL["events_winsorized_stats"]
     assert (relational.WINSOR_LO_NUM, relational.WINSOR_HI_NUM) == (5, 95)
     assert relational.WINSOR_DEN == 100
@@ -2947,8 +2799,6 @@ def test_r9_constants_in_sync_with_oracles():
     assert (text_ops.KN_DISCOUNT_NUM, text_ops.KN_DISCOUNT_DEN) == (3, 4)
     assert kn.count("CAST(3 AS DOUBLE) / CAST(4 AS DOUBLE)") == 2
     assert relational.AUC_LABEL_MIN_PURCHASES == 10
-    # the constant gates events_ab_lift's conversion
-    assert ">= 10" in oracles.ORACLE_SQL["events_ab_lift"]
     pt = oracles.ORACLE_SQL["events_permutation_test"]
     assert relational.PERM_B == 64 and "generate_series(0, 63)" in pt
     rrf = oracles.ORACLE_SQL["sim_hybrid_rrf"]
@@ -3005,20 +2855,6 @@ def test_bench_delta_artifact_citations_match():
         assert float(total) == parsed["value"], (fname, total, parsed["value"])
         assert int(n_queries) == parsed["n_queries"], fname
         assert int(n_errors) == parsed["n_errors"], fname
-
-
-def test_poisson_bootstrap_ci_is_nonvacuous(spark, sf_dir):
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_poisson_bootstrap_ci"](spark, sf_dir).collect()
-    assert len(row) == 1
-    r = row[0]
-    assert r.n_replicates == 32
-    assert r.n_rows > 0
-    assert r.ci_lo <= r.ci_hi
-    # the point estimate should sit inside the rank-based band on any
-    # non-pathological sample
-    assert r.ci_lo <= r.mean_value <= r.ci_hi
 
 
 def test_winsorized_stats_are_nonvacuous(spark, sf_dir):
@@ -3260,77 +3096,6 @@ def test_token_count_classes_on_synthetic_text(spark):
     assert row.n_bpe_tokens == 10
 
 
-def test_ab_lift_z_is_nonvacuous(spark, sf_dir):
-    # the r9 de-vacuized conversion must keep producing a REAL z/lift on
-    # every fixture scale — a regeneration that restores the degenerate
-    # all-ones label must fail here, not silently re-vacuize the gate
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = QUERIES["events_ab_lift"](spark, sf_dir).collect()
-    assert rows and all(r.z_score is not None for r in rows)
-    assert all(r.relative_lift is not None for r in rows)
-
-
-def test_km_matches_sequential_product_limit(spark, sf_dir):
-    """Textbook Kaplan-Meier: Python per-user sessionization (sort, split
-    on >= 30-min gaps) + the sequential product-limit loop with plain
-    float multiplication — no windows, no ln-sum rail."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = _duck_rows(
-        sf_dir,
-        """SELECT user_id, epoch_us(ts) AS us, event_id
-           FROM '{sf}/events.parquet'""",
-    )
-    gap = 30 * 60_000_000
-    by_user = {}
-    max_us = max(us for _, us, _ in rows)
-    for uid, us, eid in rows:
-        by_user.setdefault(uid, []).append((us, eid))
-    durations = []  # (minutes, churned)
-    for evs in by_user.values():
-        evs.sort()
-        sess = []
-        for us, _ in evs:
-            if not sess or us - sess[-1][-1] >= gap:
-                sess.append([us])
-            else:
-                sess[-1].append(us)
-        for s in sess:
-            dur = (s[-1] - s[0]) // 60_000_000
-            churned = 0 if s[-1] >= max_us - gap else 1
-            durations.append((dur, churned))
-    expected = {}
-    surv = 1.0
-    n_at_risk = len(durations)
-    dead = False
-    for t in sorted({d for d, _ in durations}):
-        here = [c for d, c in durations if d == t]
-        d_t = sum(here)
-        if d_t >= n_at_risk:
-            dead = True
-        if not dead and d_t:
-            surv *= 1.0 - d_t / n_at_risk
-        if d_t:
-            expected[t] = (n_at_risk, d_t, len(here) - d_t,
-                           0.0 if dead else surv)
-        n_at_risk -= len(here)
-    got = {
-        r.duration_minutes: (
-            r.n_at_risk,
-            r.n_churned,
-            r.n_censored_here,
-            r.survival,
-        )
-        for r in QUERIES["events_survival_km"](spark, sf_dir).collect()
-    }
-    assert set(got) == set(expected)
-    for t, (n, d, c, s) in expected.items():
-        gn, gd, gc, gs = got[t]
-        assert (gn, gd, gc) == (n, d, c), t
-        assert abs(gs - s) < 1e-5, t
-
-
 def test_its_matches_numpy_lstsq(spark, sf_dir):
     """Independent segmented regression: numpy least squares per segment
     over the raw daily revenue — no sufficient-statistic rails."""
@@ -3501,47 +3266,6 @@ def test_permutation_test_matches_hashlib_replay(spark, sf_dir):
     assert row.p_value == pytest.approx((n_extreme + 1) / (n_perms + 1), abs=1e-6)
 
 
-def test_poisson_bootstrap_matches_hashlib_replay(spark, sf_dir):
-    """All 32 replicates replayed with hashlib.md5 inverse-CDF weights and
-    plain float means; rank endpoints picked by an ordinary Python sort."""
-    import hashlib
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_poisson_bootstrap_ci"](spark, sf_dir).collect()[0]
-    rows = _duck_rows(
-        sf_dir,
-        """SELECT event_id,
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE event_type = 'purchase'""",
-    )
-    e1 = math.exp(-1.0)
-    cuts = [e1, e1 * 2.0, e1 * 2.5, e1 * (8.0 / 3.0), e1 * (65.0 / 24.0)]
-    means = []
-    for b in range(32):
-        sw = swx = 0
-        for eid, cv in rows:
-            h = hashlib.md5(f"{eid}:{b}".encode()).hexdigest()[:15]
-            u = int(h, 16) / float(1 << 60)
-            w = 5
-            for k, c in enumerate(cuts):
-                if u < c:
-                    w = k
-                    break
-            sw, swx = sw + w, swx + w * cv
-        if sw > 0:
-            means.append((swx / sw / 100.0, b))
-    means.sort()
-    assert row.n_rows == len(rows)
-    assert row.mean_value == pytest.approx(
-        sum(v for _, v in rows) / len(rows) / 100.0, abs=1e-8
-    )
-    assert row.n_replicates == len(means)
-    assert row.ci_lo == pytest.approx(means[1][0], abs=1e-8)
-    assert row.ci_hi == pytest.approx(means[30][0], abs=1e-8)
-
-
 def test_benford_matches_python_replay(spark, sf_dir):
     """First-digit counts and chi-square recomputed from the raw decimal
     strings with math.log10 and plain float sums."""
@@ -3578,8 +3302,7 @@ def test_benford_degenerate_zero_digit_fixture(spark, tmp_path):
     """Every order total 0.00 → no leading significant digit → n_total=0,
     where unguarded 0.0/0.0 is NULL in Spark but NaN in DuckDB (r10
     ADVICE). Both engines must emit the 9-digit spine with NULL
-    chi2_term/chi2/reject on the SAME synthetic fixture (the conformal
-    degenerate-split precedent)."""
+    chi2_term/chi2/reject on the SAME synthetic fixture."""
     import duckdb
 
     from cl_tagger_batch_processing_spark import oracles
@@ -3699,117 +3422,6 @@ def test_kneser_ney_matches_textbook_python(spark, sf_dir):
         assert got[d].perplexity == pytest.approx(ppl, rel=1e-4), d
         checked += 1
     assert checked and checked == len(got)
-
-
-def _pava(buckets):
-    """Textbook weighted pool-adjacent-violators over [(bucket, n, pos)]
-    sorted ascending — the SEQUENTIAL algorithm the minimax closed form
-    in production deliberately does not share."""
-    stack: list = []  # [pos_sum, n_sum, width]
-    for _, n, pos in buckets:
-        stack.append([pos, n, 1])
-        while len(stack) > 1 and (
-            stack[-2][0] * stack[-1][1] > stack[-1][0] * stack[-2][1]
-        ):
-            b = stack.pop()
-            stack[-1] = [stack[-1][0] + b[0], stack[-1][1] + b[1], stack[-1][2] + b[2]]
-    out = []
-    for pos, n, width in stack:
-        out.extend([pos / n] * width)
-    return out
-
-
-def test_isotonic_matches_sequential_pava(spark, sf_dir):
-    """Fixture replay: per-bucket label counts rebuilt from raw events in
-    Python, isotonic rates from textbook sequential PAVA."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    got = {
-        r.bucket: r
-        for r in QUERIES["events_isotonic_calibration"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, COUNT(*) AS activity,
-                  CASE WHEN SUM(CASE WHEN event_type = 'purchase'
-                                     THEN 1 ELSE 0 END) >= 10
-                       THEN 1 ELSE 0 END AS label
-           FROM '{sf}/events.parquet' GROUP BY user_id""",
-    )
-    per_b: dict = {}
-    for _, activity, label in raw:
-        b = min(activity // 5, 31)
-        agg = per_b.setdefault(b, [0, 0])
-        agg[0] += 1
-        agg[1] += label
-    buckets = sorted((b, n, pos) for b, (n, pos) in per_b.items())
-    iso = _pava(buckets)
-    assert set(got) == {b for b, _, _ in buckets}
-    for (b, n, pos), rate in zip(buckets, iso):
-        assert got[b].n_users == n and got[b].n_pos == pos
-        assert got[b].rate_raw == pytest.approx(pos / n, abs=1e-9)
-        assert got[b].rate_isotonic == pytest.approx(rate, abs=1e-8), b
-    # the fit is monotone non-decreasing by construction
-    rates = [got[b].rate_isotonic for b in sorted(got)]
-    assert rates == sorted(rates)
-
-
-def test_isotonic_pools_synthetic_violators(spark):
-    """The pooling behavior through the exact production pipeline
-    (relational.isotonic_rates) on a non-monotone bucket frame — fixture
-    scales where raw rates are already monotone never exercise it."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    per_b = spark.createDataFrame(
-        [(0, 10, 2), (1, 10, 8), (2, 10, 4), (3, 10, 9), (4, 10, 1)],
-        "bucket long, n_users long, n_pos long",
-    )
-    got = {r.bucket: r for r in relational.isotonic_rates(per_b).collect()}
-    iso = _pava([(0, 10, 2), (1, 10, 8), (2, 10, 4), (3, 10, 9), (4, 10, 1)])
-    for b in range(5):
-        assert got[b].rate_isotonic == pytest.approx(iso[b], abs=1e-9), b
-    # sanity against the closed form by hand: buckets 1..4 pool to 22/40
-    assert iso == pytest.approx([0.2, 0.55, 0.55, 0.55, 0.55])
-
-
-def test_conformal_matches_python_replay(spark, sf_dir):
-    """Split-conformal replay: k = ceil((n+1)*0.9) by integer arithmetic,
-    q-hat from an ordinary sorted list, coverage counted directly."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["events_conformal_interval"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_id,
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE event_type = 'purchase'""",
-    )
-    cal = sorted(v for eid, v in raw if eid % 2 == 0)
-    test = [v for eid, v in raw if eid % 2 != 0]
-    n_cal = len(cal)
-    k = -(-(n_cal + 1) * 9 // 10)  # ceil((n+1) * 9/10)
-    qhat = cal[min(k, n_cal) - 1]
-    assert row.n_cal == n_cal and row.k == k
-    assert row.finite_guarantee == (k <= n_cal)
-    assert row.q_hat == pytest.approx(qhat / 100.0, abs=1e-9)
-    assert row.n_test == len(test)
-    assert row.n_covered == sum(1 for v in test if v <= qhat)
-    assert row.coverage == pytest.approx(row.n_covered / row.n_test, abs=1e-6)
-
-
-def test_r10_constants_in_sync_with_oracles():
-    """Round-10 tuning constants pinned to their oracle literals."""
-    from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    iso = oracles.ORACLE_SQL["events_isotonic_calibration"]
-    assert relational.ISO_BUCKET_W == 5 and relational.ISO_BUCKET_MAX == 31
-    assert "LEAST(activity // 5, 31)" in iso
-    assert relational.AUC_LABEL_MIN_PURCHASES == 10 and ">= 10" in iso
-    conf = oracles.ORACLE_SQL["events_conformal_interval"]
-    assert (relational.CONF_ALPHA_NUM, relational.CONF_ALPHA_DEN) == (1, 10)
-    assert "* (10 - 1) + 10 - 1) // 10" in conf
-    assert relational.CONF_TYPE == "purchase" and "'purchase'" in conf
 
 
 def test_winsorized_stats_match_python_replay(spark, sf_dir):
@@ -3961,69 +3573,6 @@ def test_rrf_fusion_matches_python_replay(spark, sf_dir):
         assert r.lex_rank == lex.get(d) and r.sem_rank == sem.get(d)
 
 
-def test_conformal_keeps_one_row_contract_on_degenerate_splits(spark, tmp_path):
-    """An empty calibration split (every purchase event_id odd) or empty
-    test split (every id even) must yield ONE row with NULL bounds, never
-    zero rows — the bootstrap-CI crossJoin-collapse class (r10 review)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    def fixture(ids):
-        d = tmp_path / f"fx{ids[0]}"
-        d.mkdir()
-        spark.createDataFrame(
-            [(i, "2024-01-01 00:00:00", 1, "purchase", 10.0, "{}") for i in ids],
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).selectExpr(
-            "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-            "value", "props",
-        ).write.parquet(str(d / "events.parquet"))
-        return str(d)
-
-    import duckdb
-
-    from cl_tagger_batch_processing_spark import oracles
-
-    def oracle_row(d):
-        # the oracle's degenerate path must mirror the engine on the SAME
-        # synthetic fixture (the standard sf fixtures never exercise it)
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW events AS SELECT * FROM "
-                f"read_parquet('{d}/events.parquet/*.parquet')"
-            )
-            out = con.execute(
-                oracles.ORACLE_SQL["events_conformal_interval"]
-            ).fetchall()
-        finally:
-            con.close()
-        assert len(out) == 1
-        return out[0]
-
-    q = QUERIES["events_conformal_interval"]
-    # all-odd ids: n_cal = 0 -> NULL q_hat, guarantee false, one row
-    d = fixture([1, 3, 5])
-    rows = q(spark, d).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.n_cal == 0 and not r.finite_guarantee
-    assert r.q_hat is None and r.n_test == 3 and r.n_covered == 0
-    o = oracle_row(d)
-    assert (o[0], o[2], o[3], o[4], o[5]) == (0, False, None, 3, 0)
-    assert o[1] == r.k
-    # all-even ids: n_test = 0 -> NULL coverage, one row
-    d = fixture([2, 4, 6])
-    rows = q(spark, d).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.n_cal == 3 and r.n_test == 0 and r.n_covered == 0
-    assert r.coverage is None and r.q_hat is not None
-    o = oracle_row(d)
-    assert (o[0], o[4], o[5], o[6]) == (3, 0, 0, None)
-    assert o[3] == pytest.approx(r.q_hat)
-
-
 def test_r11_constants_in_sync():
     """Round-11 tuning constants pinned to their oracle literals."""
     from cl_tagger_batch_processing_spark import oracles
@@ -4032,28 +3581,12 @@ def test_r11_constants_in_sync():
     ts = oracles.ORACLE_SQL["orders_theil_sen_trend"]
     assert relational.THEIL_SEN_TRAILING_DAYS == 365
     assert "(SELECT MAX(x) FROM all_days) - 365" in ts
-    th = oracles.ORACLE_SQL["events_tukey_hsd"]
-    # critical tables are k-ADAPTIVE (r11 review): the engine dicts must be
-    # equal and every entry must appear in the oracle's generated CASE
-    assert relational.TUKEY_Q_CRIT_05_BY_K == oracles._TUKEY_Q_BY_K
-    assert relational.ANOVA_F_CRIT_05_BY_DF1 == oracles._ANOVA_F_BY_DF1
-    assert relational.TUKEY_Q_CRIT_05_BY_K[5] == 3.858
-    assert relational.ANOVA_F_CRIT_05_BY_DF1[4] == 2.372
-    for k, v in oracles._TUKEY_Q_BY_K.items():
-        assert f"WHEN {k} THEN CAST({v} AS DOUBLE)" in th
-    for k, v in oracles._ANOVA_F_BY_DF1.items():
-        assert f"WHEN {k} THEN CAST({v} AS DOUBLE)" in th
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
     nd = oracles.ORACLE_SQL["text_ndcg_eval"]
     assert text_ops.NDCG_K == 20 and text_ops.NDCG_QUERY_VEC == 0
     assert "generate_series(1, 20)" in nd and "sem_rank <= 20" in nd
     assert "WHERE doc_id != 0" in nd
-    gr = oracles.ORACLE_SQL["events_granger_lite"]
-    assert relational.GRANGER_F_CRIT_05 == 3.841
-    assert "CAST(3.841 AS DOUBLE)" in gr
-    assert relational.GRANGER_CAUSE_TYPE == "view" and "'view'" in gr
-    assert relational.GRANGER_EFFECT_TYPE == "purchase" and "'purchase'" in gr
     rr = oracles.ORACLE_SQL["privacy_randomized_response"]
     assert relational.RR_FLIP_PROB == 0.5 and "< CAST(0.5 AS DOUBLE)" in rr
     assert relational.RR_COIN_SALT == "rr-coin" and "md5('rr-coin:'" in rr
@@ -4061,11 +3594,6 @@ def test_r11_constants_in_sync():
     assert relational.AUC_LABEL_MIN_PURCHASES == 10 and ">= 10" in rr
     bd = oracles.ORACLE_SQL["text_burrows_delta"]
     assert text_ops.BURROWS_TOP_WORDS == 20 and "LIMIT 20" in bd
-    pw = oracles.ORACLE_SQL["events_power_analysis"]
-    assert relational.POWER_Z_ALPHA_2 == 1.96 and "CAST(1.96 AS DOUBLE)" in pw
-    assert relational.POWER_Z_BETA_80 == 0.842 and "CAST(0.842 AS DOUBLE)" in pw
-    assert relational.POWER_MDE_PCTS == [1, 2, 5, 10]
-    assert "unnest([1, 2, 5, 10])" in pw
     db = oracles.ORACLE_SQL["embedding_dbscan_lite"]
     assert similarity.DBSCAN_EPS_COS == 0.25
     assert "cosine >= CAST(0.25 AS DOUBLE)" in db
@@ -4115,93 +3643,6 @@ def test_theil_sen_matches_python_replay(spark, sf_dir):
     sxy = sum(Fraction(x) * y for x, y in xs)
     ols = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     assert row.ols_slope == pytest.approx(float(ols), rel=1e-12)
-
-
-def test_tukey_matches_python_replay(spark, sf_dir):
-    """F and every pairwise q recomputed from raw (type, cents) rows with
-    textbook sums-of-squares formulas; the 9dp between-term rail is
-    replayed with Decimal ROUND_HALF_UP (never Python's banker's round)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = QUERIES["events_tukey_hsd"](spark, sf_dir).collect()
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type,
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet'""",
-    )
-    groups: dict[str, list[int]] = {}
-    for t, c in raw:
-        groups.setdefault(t, []).append(c)
-    k = len(groups)
-    n_total = sum(len(v) for v in groups.values())
-    q9 = lambda x: Decimal(x).quantize(  # noqa: E731
-        Decimal("1e-9"), rounding=ROUND_HALF_UP
-    )
-    a_between = sum(q9(sum(v) ** 2 / len(v)) for v in groups.values())
-    sxx_tot = sum(c * c for v in groups.values() for c in v)
-    ssw = float(sxx_tot) - float(a_between)
-    grand = sum(sum(v) for v in groups.values())
-    ssb = float(a_between) - float(grand * grand) / float(n_total)
-    mse = ssw / (n_total - k)
-    f = (ssb / (k - 1)) / mse
-    # the replay's own copy of the published df=inf tables
-    q_tab = {2: 2.772, 3: 3.314, 4: 3.633, 5: 3.858, 6: 4.030,
-             7: 4.170, 8: 4.286, 9: 4.387, 10: 4.474}
-    f_tab = {1: 3.841, 2: 2.996, 3: 2.605, 4: 2.372, 5: 2.214,
-             6: 2.099, 7: 2.010, 8: 1.938, 9: 1.880}
-    by_pair = {(r.type_a, r.type_b): r for r in rows}
-    assert len(by_pair) == k * (k - 1) // 2
-    for (ta, tb), r in by_pair.items():
-        na, nb = len(groups[ta]), len(groups[tb])
-        ma, mb = sum(groups[ta]) / na, sum(groups[tb]) / nb
-        q = abs(ma - mb) / ((mse / 2.0) * (1.0 / na + 1.0 / nb)) ** 0.5
-        assert (r.n_a, r.n_b) == (na, nb)
-        assert r.mean_a_cents == pytest.approx(ma, rel=1e-12)
-        assert r.mean_b_cents == pytest.approx(mb, rel=1e-12)
-        assert r.q_stat == pytest.approx(q, rel=1e-9)
-        assert r.f_stat == pytest.approx(f, rel=1e-9)
-        assert r.q_crit_05 == q_tab[k] and r.f_crit_05 == f_tab[k - 1]
-        assert r.reject_hsd_05 == (q > q_tab[k])
-        assert r.reject_anova_05 == (f > f_tab[k - 1])
-
-
-def test_tukey_rejects_on_synthetic_shifted_groups(spark, tmp_path):
-    """reject_hsd_05 / reject_anova_05 are identically False on the
-    same-generator fixture at every scale (r11 ALL_FALSE triage) — the
-    TRUE path of both flags runs here on a grossly shifted synthetic
-    fixture through the full production query: one group sits 1000
-    dollars above the other two with tiny within-group spread."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "shifted_groups"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # click and view share a mean exactly (q = 0 pins the keep-false path
-    # — the tiny synthetic MSE makes even a dollar-level gap "significant",
-    # so only an identical mean stays below the bound)
-    for t, base in [("view", 50.0), ("click", 50.0), ("purchase", 1050.0)]:
-        for i in range(30):
-            eid += 1
-            rows.append((eid, "2024-01-01 00:00:00", 1, t, base + (i % 5), "{}"))
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-    out = {(r.type_a, r.type_b): r for r in QUERIES["events_tukey_hsd"](spark, str(d)).collect()}
-    assert len(out) == 3
-    assert all(r.reject_anova_05 is True for r in out.values())
-    assert out[("click", "purchase")].reject_hsd_05 is True
-    assert out[("purchase", "view")].reject_hsd_05 is True
-    assert out[("click", "view")].reject_hsd_05 is False  # identical means
 
 
 def test_dbscan_matches_union_find_replay(spark, sf_dir):
@@ -4280,39 +3721,6 @@ def test_dbscan_matches_union_find_replay(spark, sf_dir):
             assert r.role == "noise" and r.cluster_id is None
 
 
-def test_power_analysis_matches_python_replay(spark, sf_dir):
-    """Means, variance, and every per-MDE sample size recomputed from raw
-    per-user purchase sums with textbook formulas and math.ceil."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {r.mde_pct: r for r in QUERIES["events_power_analysis"](spark, sf_dir).collect()}
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id,
-                  CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-                       AS BIGINT)
-           FROM '{sf}/events.parquet'
-           WHERE event_type = 'purchase' GROUP BY 1""",
-    )
-    ctrl = [x for u, x in raw if u % 2 == 0]
-    treat = [x for u, x in raw if u % 2 == 1]
-    n = len(ctrl)
-    mean = sum(ctrl) / n
-    var = (n * sum(x * x for x in ctrl) - sum(ctrl) ** 2) / (n * (n - 1))
-    assert sorted(rows) == [1, 2, 5, 10]
-    for pct, r in rows.items():
-        assert (r.n_control, r.n_treatment) == (n, len(treat))
-        assert r.mean_control_cents == pytest.approx(mean, rel=1e-12)
-        assert r.var_control == pytest.approx(var, rel=1e-12)
-        tau = pct / 100.0 * mean
-        n_req = math.ceil(2.0 * var * (1.96 + 0.842) ** 2 / (tau * tau))
-        assert r.tau_cents == pytest.approx(tau, rel=1e-12)
-        assert r.n_required_per_arm == n_req
-        assert r.powered == (min(n, len(treat)) >= n_req)
-
-
 def test_ndcg_matches_python_replay(spark, sf_dir):
     """DCG/IDCG/nDCG recomputed with math.log2 over the two production
     rankings (each independently oracle-backed and replayed elsewhere) —
@@ -4384,206 +3792,6 @@ def test_randomized_response_matches_hashlib_replay(spark, sf_dir):
     bound = 3.0 / (2.0 * n**0.5 * 0.5)
     assert r.err_bound == pytest.approx(bound, rel=1e-12)
     assert r.within_contract == (abs(p_hat - p_true) <= bound)
-
-
-def test_granger_matches_numpy_lstsq_replay(spark, sf_dir):
-    """Both regressions re-solved with numpy.linalg.lstsq (QR — a
-    genuinely different algorithm from the production Cramer closed
-    form) from raw per-day counts, plus the F verdict."""
-    import numpy as np
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_granger_lite"](spark, sf_dir).collect()[0]
-    daily = dict()
-    for day, p, v in _duck_rows(
-        sf_dir,
-        """SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400,
-                  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END),
-                  SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    ):
-        daily[day] = (p, v)
-    rows = [
-        (daily[d][0], daily[d - 1][0], daily[d - 1][1])
-        for d in sorted(daily)
-        if d - 1 in daily
-    ]
-    assert r.n_days == len(rows)
-    y = np.array([t[0] for t in rows], dtype=float)
-    Xf = np.array([[1.0, t[1], t[2]] for t in rows])
-    Xr = np.array([[1.0, t[1]] for t in rows])
-    bf, *_ = np.linalg.lstsq(Xf, y, rcond=None)
-    br, *_ = np.linalg.lstsq(Xr, y, rcond=None)
-    assert r.b0 == pytest.approx(bf[0], rel=1e-6)
-    assert r.b1 == pytest.approx(bf[1], rel=1e-6)
-    assert r.b2 == pytest.approx(bf[2], rel=1e-6)
-    assert r.c0 == pytest.approx(br[0], rel=1e-6)
-    assert r.c1 == pytest.approx(br[1], rel=1e-6)
-    ssr_f = float(((y - Xf @ bf) ** 2).sum())
-    ssr_r = float(((y - Xr @ br) ** 2).sum())
-    assert r.ssr_full == pytest.approx(ssr_f, rel=1e-6)
-    assert r.ssr_restricted == pytest.approx(ssr_r, rel=1e-6)
-    f = (ssr_r - ssr_f) / (ssr_f / (len(rows) - 3))
-    assert r.f_stat == pytest.approx(f, rel=1e-4)
-    assert r.granger_reject_05 == (r.f_stat > 3.841)
-
-
-def test_granger_rejects_on_synthetic_leading_series(spark, tmp_path):
-    """granger_reject_05 is identically False on the organic fixture (no
-    lead-lag structure) — the TRUE path runs here on a synthetic fixture
-    where tomorrow's purchases ARE yesterday's view spike, through the
-    full production query."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "leading"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # 30 days; views spike every 3rd day; purchases echo the spike next day
-    # (plus a small constant floor so the restricted model keeps df)
-    for day in range(1, 31):
-        n_views = 9 if day % 3 == 0 else 1
-        n_purch = 9 if (day - 1) % 3 == 0 and day > 1 else 1
-        for _ in range(n_views):
-            eid += 1
-            rows.append((eid, f"2024-01-{day:02d} 12:00:00", 1, "view", 1.0, "{}"))
-        for _ in range(n_purch):
-            eid += 1
-            rows.append(
-                (eid, f"2024-01-{day:02d} 12:00:00", 1, "purchase", 1.0, "{}")
-            )
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-    r = QUERIES["events_granger_lite"](spark, str(d)).collect()[0]
-    assert r.n_days == 29
-    assert r.granger_reject_05 is True
-    assert r.b2 == pytest.approx(1.0, abs=1e-6)  # purchases echo views 1:1
-    # the echo is EXACT, so the full model fits perfectly: this fixture
-    # also exercises the guarded ssr_full = 0 branch (NULL F, reject via
-    # the perfect-fit fall-through) — the oracle must agree on it
-    assert r.ssr_full == 0.0 and r.f_stat is None
-    import duckdb
-
-    from cl_tagger_batch_processing_spark import oracles
-
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW events AS SELECT * FROM "
-            f"read_parquet('{d}/events.parquet/*.parquet')"
-        )
-        out = con.execute(oracles.ORACLE_SQL["events_granger_lite"]).fetchall()
-    finally:
-        con.close()
-    assert len(out) == 1
-    assert out[0][8] is None and out[0][9] is True  # f_stat NULL, reject
-
-
-def _oracle_rows_on_events_fixture(d, name):
-    import duckdb
-
-    from cl_tagger_batch_processing_spark import oracles
-
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW events AS SELECT * FROM "
-            f"read_parquet('{d}/events.parquet/*.parquet')"
-        )
-        return con.execute(oracles.ORACLE_SQL[name]).fetchall()
-    finally:
-        con.close()
-
-
-def _write_events(spark, d, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-
-def test_granger_degenerate_guards_match_oracle(spark, tmp_path):
-    """The r11-review guard classes, engine and oracle side by side:
-    n_days = 3 (zero df) and a constant view series (collinear design,
-    det = 0) must yield NULL F / NULL verdict rows, never a crash."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    # 4 consecutive days -> n_days = 3 -> df divisor 0
-    d = tmp_path / "fourdays"
-    d.mkdir()
-    rows, eid = [], 0
-    for day in range(1, 5):
-        for t, k in [("view", 1 + day % 2), ("purchase", 1 + (day * 7) % 3)]:
-            for _ in range(k):
-                eid += 1
-                rows.append((eid, f"2024-01-{day:02d} 12:00:00", 1, t, 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_granger_lite"](spark, str(d)).collect()[0]
-    assert r.n_days == 3
-    assert r.f_stat is None and r.granger_reject_05 is None
-    o = _oracle_rows_on_events_fixture(d, "events_granger_lite")[0]
-    assert o[8] is None and o[9] is None
-
-    # constant daily views -> vl column constant -> [1, pl, vl] collinear
-    d2 = tmp_path / "constviews"
-    d2.mkdir()
-    rows, eid = [], 0
-    for day in range(1, 11):
-        eid += 1
-        rows.append((eid, f"2024-01-{day:02d} 12:00:00", 1, "view", 1.0, "{}"))
-        for _ in range(1 + (day * 7) % 3):
-            eid += 1
-            rows.append(
-                (eid, f"2024-01-{day:02d} 12:00:00", 1, "purchase", 1.0, "{}")
-            )
-    _write_events(spark, d2, rows)
-    r = QUERIES["events_granger_lite"](spark, str(d2)).collect()[0]
-    assert r.b0 is None and r.b1 is None and r.b2 is None
-    assert r.f_stat is None and r.granger_reject_05 is None
-    o = _oracle_rows_on_events_fixture(d2, "events_granger_lite")[0]
-    assert o[1] is None and o[8] is None and o[9] is None
-
-
-def test_power_analysis_degenerate_arms_match_oracle(spark, tmp_path):
-    """One control purchaser (n = 1: zero variance divisor) must yield
-    the full 4-row MDE spine with NULL stats/requirements/verdicts on
-    BOTH engines — never zero rows (the bootstrap-CI collapse class) and
-    never an ANSI divide-by-zero crash."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "onectrl"
-    d.mkdir()
-    rows = [
-        (1, "2024-01-01 00:00:00", 2, "purchase", 10.0, "{}"),
-        (2, "2024-01-01 00:00:00", 2, "purchase", 12.0, "{}"),
-        (3, "2024-01-01 00:00:00", 3, "purchase", 11.0, "{}"),
-        (4, "2024-01-01 00:00:00", 5, "purchase", 13.0, "{}"),
-    ]
-    _write_events(spark, d, rows)
-    out = QUERIES["events_power_analysis"](spark, str(d)).collect()
-    assert len(out) == 4
-    for r in out:
-        assert (r.n_control, r.n_treatment) == (1, 2)
-        assert r.mean_control_cents is not None
-        assert r.var_control is None
-        assert r.n_required_per_arm is None and r.powered is None
-    o = _oracle_rows_on_events_fixture(d, "events_power_analysis")
-    assert len(o) == 4
-    for row in o:
-        assert (row[1], row[2]) == (1, 2)
-        assert row[4] is None and row[6] is None and row[7] is None
 
 
 def test_burrows_delta_matches_python_replay(spark, sf_dir):
@@ -5609,81 +4817,6 @@ def test_source_overlap_matrix_matches_textbook_replay(spark, sf_dir):
         assert r.jaccard == pytest.approx(nc / (na + nb - nc), rel=1e-12)
 
 
-def test_wilcoxon_signed_rank_matches_textbook_replay(spark, sf_dir):
-    """W⁺ recomputed with sorted-list tie-averaged Fraction ranks over the
-    per-user paired weekend−weekday diffs; textbook mu/sigma with the tie
-    correction."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_wilcoxon_signed_rank"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT SUM(CASE WHEN dayofweek(ts) IN (0,6)
-                           THEN CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-                           ELSE 0 END)
-                - SUM(CASE WHEN dayofweek(ts) NOT IN (0,6)
-                           THEN CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-                           ELSE 0 END)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL
-           GROUP BY user_id""",
-    )
-    diffs = [d for (d,) in raw if d != 0]
-    n = len(diffs)
-    assert r.n_pairs == n
-    order = sorted(abs(d) for d in diffs)
-    first: dict = {}
-    cnt: dict = {}
-    for i, v in enumerate(order):
-        first.setdefault(v, i)
-        cnt[v] = cnt.get(v, 0) + 1
-    rank = {v: Fraction(2 * first[v] + cnt[v] + 1, 2) for v in cnt}
-    w_plus = float(sum(rank[abs(d)] for d in diffs if d > 0))
-    assert r.w_plus == pytest.approx(w_plus, abs=1e-5)
-    mu = n * (n + 1) / 4.0
-    var = n * (n + 1) * (2 * n + 1) / 24.0 - sum(
-        t**3 - t for t in cnt.values()
-    ) / 48.0
-    assert r.mu_w == pytest.approx(mu, abs=1e-5)
-    if n > 0 and var > 0:
-        assert r.z == pytest.approx((w_plus - mu) / var**0.5, rel=1e-7, abs=1e-7)
-    else:
-        assert r.z is None
-
-
-def test_mann_kendall_matches_textbook_replay(spark, sf_dir):
-    """S recomputed with an explicit double loop over the daily series;
-    textbook tie-corrected variance and the ±1 continuity z."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_mann_kendall"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT),
-                  COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    ys = [y for _, y in raw]
-    n = len(ys)
-    s = sum(
-        (ys[j] > ys[i]) - (ys[j] < ys[i])
-        for i in range(n)
-        for j in range(i + 1, n)
-    )
-    cnt: dict = {}
-    for y in ys:
-        cnt[y] = cnt.get(y, 0) + 1
-    var = (
-        n * (n - 1) * (2 * n + 5) - sum(t * (t - 1) * (2 * t + 5) for t in cnt.values())
-    ) / 18.0
-    assert r.n_days == n and r.s_stat == s
-    assert r.var_s == pytest.approx(var, abs=1e-5)
-    if n >= 2 and var > 0:
-        z = (s - 1) / var**0.5 if s > 0 else ((s + 1) / var**0.5 if s < 0 else 0.0)
-        assert r.z == pytest.approx(z, rel=1e-7, abs=1e-7)
-
-
 def test_welch_anova_matches_textbook_replay(spark, sf_dir):
     """F* recomputed with plain per-group float means/variances and the
     Welch 1951 formulas — no sufficient-statistic identity, no rails."""
@@ -5720,73 +4853,6 @@ def test_welch_anova_matches_textbook_replay(spark, sf_dir):
         assert r.f_stat == pytest.approx(a / b, rel=1e-6, abs=1e-6)
         assert r.df1 == k - 1
         assert r.df2 == pytest.approx((k * k - 1) / (3 * lam), rel=1e-6)
-
-
-def test_mcnemar_matches_textbook_replay(spark, sf_dir):
-    """Discordant-pair counts recomputed with plain python sets over the
-    per-user per-half conversion flags; textbook continuity-corrected
-    chi-square."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_mcnemar"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT),
-                  event_type = 'purchase'
-           FROM '{sf}/events.parquet'""",
-    )
-    days = [d for _, d, _ in raw]
-    mid = (min(days) + max(days)) / 2
-    users: set = set()
-    n1: dict = {}
-    n2: dict = {}
-    for u, d, p in raw:
-        users.add(u)
-        if p and d <= mid:
-            n1[u] = n1.get(u, 0) + 1
-        if p and d > mid:
-            n2[u] = n2.get(u, 0) + 1
-    conv1 = {u for u, n in n1.items() if n >= 3}
-    conv2 = {u for u, n in n2.items() if n >= 3}
-    b = len(conv1 - conv2)
-    c = len(conv2 - conv1)
-    assert r.n_users == len(users)
-    assert r.conv_then_lapsed == b and r.lapsed_then_conv == c
-    if b + c > 0:
-        assert r.chi2_cc == pytest.approx(
-            (abs(b - c) - 1) ** 2 / (b + c), rel=1e-9
-        )
-    else:
-        assert r.chi2_cc is None
-
-
-def test_odds_ratio_matches_textbook_replay(spark, sf_dir):
-    """2×2 cells recomputed with plain counting; Woolf CI with math.log/
-    math.exp."""
-    import math
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_odds_ratio_ci"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT dayofweek(ts) IN (0,6), event_type = 'purchase', COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1, 2""",
-    )
-    cells = {(wk, p): n for wk, p, n in raw}
-    a = cells.get((True, True), 0)
-    b = cells.get((True, False), 0)
-    c = cells.get((False, True), 0)
-    d = cells.get((False, False), 0)
-    assert (r.a, r.b, r.c, r.d) == (a, b, c, d)
-    corr = 0.5 if min(a, b, c, d) == 0 else 0.0
-    assert r.haldane_corrected == (corr == 0.5)
-    aa, bb, cc, dd = a + corr, b + corr, c + corr, d + corr
-    ln_or = math.log(aa * dd / (bb * cc))
-    se = math.sqrt(1 / aa + 1 / bb + 1 / cc + 1 / dd)
-    assert r.odds_ratio == pytest.approx(math.exp(ln_or), rel=1e-6)
-    assert r.ci_lo == pytest.approx(math.exp(ln_or - 1.959964 * se), rel=1e-6)
-    assert r.ci_hi == pytest.approx(math.exp(ln_or + 1.959964 * se), rel=1e-6)
 
 
 # --- r12 addition replays: each addition recomputed the naive textbook way
@@ -5863,88 +4929,6 @@ def _write_events(spark, d, rows):
     ).write.parquet(str(d / "events.parquet"))
 
 
-def test_mann_kendall_detects_synthetic_trend(spark, tmp_path):
-    """trend_significant_05 is identically False on the stationary fixture
-    (ALL_FALSE triage) — a strictly increasing 30-day ramp must trip it."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "mk"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for day in range(1, 31):
-        for i in range(day):  # day d carries d events: monotone trend
-            eid += 1
-            rows.append(
-                (eid, f"2024-01-{day:02d} 12:00:00", 1, "view", 1.0, "{}")
-            )
-    _write_events(spark, d, rows)
-    r = QUERIES["events_mann_kendall"](spark, str(d)).collect()[0]
-    assert r.n_days == 30 and r.s_stat == 30 * 29 // 2  # every pair ascends
-    assert r.trend_significant_05 is True and r.z > 5
-
-
-def test_mcnemar_counts_synthetic_discordant_users(spark, tmp_path):
-    """lapsed_then_conv is zero and the reject flag False on the organic
-    fixture (triage) — synthetic discordant repeat-purchasers in BOTH
-    directions, heavily skewed one way, must count and reject."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "mcn"
-    d.mkdir()
-    rows = []
-    eid = 0
-
-    def burst(user, day, n):
-        nonlocal eid
-        for _ in range(n):
-            eid += 1
-            rows.append(
-                (eid, f"2024-01-{day:02d} 10:00:00", user, "purchase", 5.0, "{}")
-            )
-
-    # timeline 2024-01-01..28 (midpoint day 14); 20 users convert only in
-    # the SECOND half, 2 only in the first — b=2, c=20
-    for u in range(1, 21):
-        burst(u, 20, 3)
-    for u in (101, 102):
-        burst(u, 5, 3)
-    eid += 1
-    rows.append((eid, "2024-01-01 00:00:00", 999, "view", 1.0, "{}"))
-    eid += 1
-    rows.append((eid, "2024-01-28 00:00:00", 999, "view", 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_mcnemar"](spark, str(d)).collect()[0]
-    assert r.conv_then_lapsed == 2 and r.lapsed_then_conv == 20
-    assert r.chi2_cc == pytest.approx((abs(2 - 20) - 1) ** 2 / 22, rel=1e-9)
-    assert r.reject_homogeneity_05 is True
-
-
-def test_odds_ratio_haldane_on_synthetic_zero_cell(spark, tmp_path):
-    """haldane_corrected is identically False on the organic fixture — a
-    synthetic table with NO weekend purchases (a=0) must flag the
-    correction and still produce a finite CI."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "orz"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # 2024-01-06 is a Saturday, 2024-01-01 a Monday
-    for _ in range(30):
-        eid += 1
-        rows.append((eid, "2024-01-06 10:00:00", 1, "view", 1.0, "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 10:00:00", 1, "purchase", 1.0, "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_odds_ratio_ci"](spark, str(d)).collect()[0]
-    assert (r.a, r.b, r.c, r.d) == (0, 30, 30, 30)
-    assert r.haldane_corrected is True
-    assert 0 < r.ci_lo < r.odds_ratio < r.ci_hi < 1
-
-
 def test_welch_anova_drops_synthetic_constant_group(spark, tmp_path):
     """k_dropped is identically zero on the organic fixture — a synthetic
     zero-variance group must drop (and a 1-row group too) while the
@@ -6011,54 +4995,16 @@ def test_welch_anova_rail_guard_raises_past_limit(spark):
         bad.select(guarded(F.col("w")).alias("t")).collect()
 
 
-def test_wilcoxon_ranks_synthetic_weekend_spenders(spark, tmp_path):
-    """w_plus is identically zero on the organic fixture (weekends are 2/7
-    of days, every paired diff is negative — an honest extreme) — users
-    who spend MORE on weekends must produce a positive rank sum, and an
-    all-positive panel must hit the maximum W+ = n(n+1)/2."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "wsr"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for u in range(1, 11):  # distinct positive diffs 10,20,..,100 cents
-        eid += 1
-        rows.append(
-            (eid, "2024-01-06 10:00:00", u, "purchase", float(u) / 10.0, "{}")
-        )
-    _write_events(spark, d, rows)
-    r = QUERIES["events_wilcoxon_signed_rank"](spark, str(d)).collect()[0]
-    assert r.n_pairs == 10
-    assert r.w_plus == pytest.approx(10 * 11 / 2)  # all diffs positive
-    assert r.z is not None and r.z > 0
-
-
 def test_r12_constants_in_sync():
     """r12 shared literals pinned to their oracle text (the r11 pattern):
-    hand-written critical values and thresholds must appear verbatim in
-    the SQL mirrors; the rich-club degree thresholds are f-string-injected
-    from the SAME Python constant, so their sync is structural."""
+    the rich-club degree thresholds are f-string-injected from the SAME
+    Python constant, so their sync is structural."""
     from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import graph, relational
+    from cl_tagger_batch_processing_spark.operators import graph
 
-    assert relational.WSR_Z_05 == 1.959964
-    for name in [
-        "events_wilcoxon_signed_rank",
-        "events_mann_kendall",
-        "events_odds_ratio_ci",
-    ]:
-        assert "1.959964" in oracles.ORACLE_SQL[name], name
-    assert relational.MCNEMAR_CHI2_05 == 3.841459
-    mc = oracles.ORACLE_SQL["events_mcnemar"]
-    assert "3.841459" in mc
-    assert f">= {relational.MCNEMAR_CONV_MIN}" in mc
     rc = oracles.ORACLE_SQL["graph_rich_club"]
     for k in graph.RICH_CLUB_KS:
         assert f"({k})" in rc
-    ph = oracles.ORACLE_SQL["events_page_hinkley"]
-    assert relational.PH_DELTA == 0.0 and "- 0.0, 9)" in ph
-    assert relational.PH_LAMBDA == 50.0 and "> 50.0" in ph
 
 
 # --- r12 replay-depth backfill: mirrored-algorithm operators whose oracle
@@ -6840,188 +5786,6 @@ def test_hashing_tf_matches_python_md5(spark, sf_dir):
     assert got == want
 
 
-def test_page_hinkley_matches_python_scan(spark, sf_dir):
-    """The PH walk replayed with a plain python loop: running mean,
-    9dp Decimal terms, running min, same delta/lambda."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        PH_DELTA,
-        PH_LAMBDA,
-    )
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT), COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    s = t = 0
-    ph = Decimal(0)
-    mn = None
-    alarm = None
-    max_exc = None
-    for day, c in raw:
-        s += c
-        t += 1
-        ph += Decimal(str(round(c - s / t - PH_DELTA, 9)))
-        mn = ph if mn is None or ph < mn else mn
-        exc = ph - mn
-        max_exc = exc if max_exc is None or exc > max_exc else max_exc
-        if alarm is None and float(exc) > PH_LAMBDA:
-            alarm = (day, round(float(exc), 6))
-    r = QUERIES["events_page_hinkley"](spark, sf_dir).collect()[0]
-    assert r.n_days == len(raw)
-    assert r.max_excursion == pytest.approx(round(float(max_exc), 6), abs=1e-6)
-    if alarm is None:
-        assert r.drift_detected is False and r.alarm_day is None
-    else:
-        assert r.drift_detected is True
-        assert (r.alarm_day, r.excursion_at_alarm) == alarm
-
-
-def test_page_hinkley_alarms_on_synthetic_level_shift(spark, tmp_path):
-    """drift_detected is identically False on the stationary fixture
-    (ALL_FALSE/ALL_NULL triage) — a 10x level shift at day 16 of a
-    30-day series must alarm shortly after the shift."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "ph"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for day in range(1, 31):
-        n = 5 if day <= 15 else 50
-        for _ in range(n):
-            eid += 1
-            rows.append(
-                (eid, f"2024-01-{day:02d} 12:00:00", 1, "view", 1.0, "{}")
-            )
-    _write_events(spark, d, rows)
-    r = QUERIES["events_page_hinkley"](spark, str(d)).collect()[0]
-    assert r.drift_detected is True
-    assert r.alarm_day is not None and r.excursion_at_alarm > 50.0
-    assert r.max_excursion >= r.excursion_at_alarm
-
-
-def test_wasserstein_matches_textbook_replay(spark, sf_dir):
-    """W1 recomputed the textbook way: sort both samples' cents, build the
-    two ECDFs over the merged support and integrate |F_ref − F_act| dx
-    with plain python floats — no exact-integer identity, no machinery."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_wasserstein_drift"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT),
-                  dayofweek(ts) IN (0, 6)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    ref = sorted(v for v, wk in raw if not wk)
-    act = sorted(v for v, wk in raw if wk)
-    assert r.n_ref == len(ref) and r.n_act == len(act)
-    support = sorted(set(ref) | set(act))
-    import bisect
-
-    w1 = 0.0
-    for a, b in zip(support, support[1:]):
-        fr = bisect.bisect_right(ref, a) / len(ref)
-        fa = bisect.bisect_right(act, a) / len(act)
-        w1 += abs(fr - fa) * (b - a)
-    assert r.wasserstein_value == pytest.approx(w1 / 100.0, rel=1e-9, abs=1e-9)
-
-
-def test_friedman_matches_scipy_style_replay(spark, sf_dir):
-    """Q recomputed the rank-matrix way: per complete user, tie-averaged
-    float ranks of the k counts; tie-adjusted statistic via the standard
-    Σr²-denominator form (the scipy.friedmanchisquare formulation)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_friedman_test"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, event_type, COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1, 2""",
-    )
-    types = sorted({et for _, et, _ in raw})
-    k = len(types)
-    by_user: dict = {}
-    for u, et, c in raw:
-        by_user.setdefault(u, {})[et] = c
-    complete = {u: d for u, d in by_user.items() if len(d) == k}
-    assert r.n_blocks == len(complete)
-    assert r.n_dropped == len(by_user) - len(complete)
-    assert r.k_treatments == k and r.df == k - 1
-    rank_sums = {et: 0.0 for et in types}
-    sq = 0.0
-    for d in complete.values():
-        vals = sorted(d.values())
-        for et, c in d.items():
-            import bisect
-
-            lo = bisect.bisect_left(vals, c)
-            hi = bisect.bisect_right(vals, c)
-            rnk = (lo + 1 + hi) / 2  # tie-averaged rank
-            rank_sums[et] += rnk
-            sq += rnk * rnk
-    n = len(complete)
-    num = sum((rs - n * (k + 1) / 2) ** 2 for rs in rank_sums.values())
-    den = sq - n * k * (k + 1) ** 2 / 4
-    assert r.q_stat == pytest.approx((k - 1) * num / den, rel=1e-9)
-
-
-def test_wasserstein_pure_shift_synthetic(spark, tmp_path):
-    """A pure +Δ location shift between weekday and weekend with identical
-    shapes must report W1 = Δ exactly (the defining property of the
-    earth-mover distance) — and the degenerate one-sided panel NULLs."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "w1"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # Mon 2024-01-01 (weekday) and Sat 2024-01-06 (weekend): same 20-value
-    # shape, weekend shifted +7.25
-    for i in range(20):
-        eid += 1
-        rows.append((eid, "2024-01-01 10:00:00", 1, "view", 10.0 + i, "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-06 10:00:00", 1, "view", 17.25 + i, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_wasserstein_drift"](spark, str(d)).collect()[0]
-    assert (r.n_ref, r.n_act) == (20, 20)
-    assert r.wasserstein_value == pytest.approx(7.25, abs=1e-9)
-
-
-def test_friedman_drops_synthetic_incomplete_block(spark, tmp_path):
-    """A user missing one event type must drop (n_dropped TRUE path —
-    organically zero on the dense fixture) while the complete blocks
-    still produce a finite Q; a consistent type ordering across users
-    must push Q up."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "fr"
-    d.mkdir()
-    rows = []
-    eid = 0
-    # 8 complete users: type_a < type_b < type_c counts in EVERY block
-    for u in range(1, 9):
-        for et, reps in [("type_a", 1), ("type_b", 2 + u % 2), ("type_c", 5 + u)]:
-            for _ in range(reps):
-                eid += 1
-                rows.append((eid, "2024-01-01 00:00:00", u, et, 1.0, "{}"))
-    # one incomplete user: only two of the three types
-    for et in ["type_a", "type_b"]:
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 99, et, 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_friedman_test"](spark, str(d)).collect()[0]
-    assert r.n_blocks == 8 and r.n_dropped == 1
-    assert r.k_treatments == 3 and r.df == 2
-    # perfectly consistent ordering: Q = n(k-1) = 16 with no ties
-    assert r.q_stat == pytest.approx(16.0, abs=1e-9)
-
-
 # --------------------------- r13 addition replays ---------------------------
 
 
@@ -7067,158 +5831,11 @@ def test_source_concentration_single_source_synthetic(spark, tmp_path):
     assert r.top3_share == pytest.approx(1.0, abs=1e-12)
 
 
-def test_cohens_d_matches_textbook_replay(spark, sf_dir):
-    """d, g, CI recomputed from raw cents with the plain textbook formulas
-    (statistics.mean/variance — no sufficient-statistic identity)."""
-    import statistics
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_cohens_d"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet'
-           WHERE value IS NOT NULL AND event_type IN ('view','click')""",
-    )
-    a = [v for et, v in raw if et == "view"]
-    b = [v for et, v in raw if et == "click"]
-    assert (r.n_a, r.n_b) == (len(a), len(b))
-    ma, mb = statistics.mean(a), statistics.mean(b)
-    va, vb = statistics.variance(a), statistics.variance(b)
-    df = len(a) + len(b) - 2
-    sp = (((len(a) - 1) * va + (len(b) - 1) * vb) / df) ** 0.5
-    d = (ma - mb) / sp
-    assert r.mean_a == pytest.approx(ma / 100.0, rel=1e-9)
-    assert r.mean_b == pytest.approx(mb / 100.0, rel=1e-9)
-    assert r.pooled_sd == pytest.approx(sp / 100.0, rel=1e-9)
-    assert r.cohens_d == pytest.approx(d, rel=1e-7, abs=1e-9)
-    j = 1.0 - 3.0 / (4.0 * (len(a) + len(b)) - 9.0)
-    assert r.hedges_g == pytest.approx(d * j, rel=1e-7, abs=1e-9)
-    se = ((len(a) + len(b)) / (len(a) * len(b)) + d * d / (2.0 * df)) ** 0.5
-    assert r.ci_lo == pytest.approx(d - 1.959964 * se, rel=1e-7, abs=1e-9)
-    assert r.ci_hi == pytest.approx(d + 1.959964 * se, rel=1e-7, abs=1e-9)
-    assert r.magnitude == (
-        "negligible" if abs(d) < 0.2
-        else "small" if abs(d) < 0.5 else "medium" if abs(d) < 0.8 else "large"
-    )
-
-
-def test_tost_equivalence_matches_textbook_replay(spark, sf_dir):
-    """Both one-sided Schuirmann z's recomputed with plain float Welch SE;
-    the fixture's ~$50-mean segments must conclude equivalence within the
-    $10 margin (the operator's organic TRUE path)."""
-    import statistics
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_tost_equivalence"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet'
-           WHERE value IS NOT NULL AND event_type IN ('view','click')""",
-    )
-    a = [v for et, v in raw if et == "view"]
-    b = [v for et, v in raw if et == "click"]
-    diff = statistics.mean(a) - statistics.mean(b)
-    se = (statistics.variance(a) / len(a) + statistics.variance(b) / len(b)) ** 0.5
-    assert r.mean_diff == pytest.approx(diff / 100.0, rel=1e-9)
-    assert r.se_welch == pytest.approx(se / 100.0, rel=1e-9)
-    assert r.margin == 10.0
-    z_lo, z_hi = (diff + 1000.0) / se, (diff - 1000.0) / se
-    assert r.z_lower == pytest.approx(z_lo, rel=1e-7)
-    assert r.z_upper == pytest.approx(z_hi, rel=1e-7)
-    assert r.equivalent_05 == (z_lo > 1.644854 and z_hi < -1.644854)
-    assert r.equivalent_05 is True  # organic TRUE path on every fixture
-
-
-def test_cohens_d_synthetic_large_effect(spark, tmp_path):
-    """Two unit-variance groups a full pooled-sd*2 apart must land d ≈ 2
-    in the 'large' band with a CI excluding zero."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "cd2"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for i in range(40):
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "view", 30.0 + (i % 5), "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "click", 10.0 + (i % 5), "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_cohens_d"](spark, str(d)).collect()[0]
-    assert (r.n_a, r.n_b) == (40, 40)
-    assert r.mean_a == pytest.approx(32.0)
-    assert r.mean_b == pytest.approx(12.0)
-    assert r.magnitude == "large"
-    assert r.ci_lo > 0  # the separation is real, CI excludes zero
-    # textbook check: sd of (i%5)+const is sqrt(2), d = 2000/sqrt(2)/100... in cents
-    import statistics
-
-    sd = statistics.variance([(i % 5) * 100 for i in range(40)]) ** 0.5
-    assert r.cohens_d == pytest.approx(2000.0 / sd, rel=1e-9)
-
-
-def test_tost_rejects_synthetic_inequivalence(spark, tmp_path):
-    """Means $20 apart can never be equivalent within ±$10 — the FALSE
-    path of equivalent_05 (organically TRUE on the fixtures)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "tost"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for i in range(40):
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "view", 30.0 + (i % 5), "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "click", 10.0 + (i % 5), "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_tost_equivalence"](spark, str(d)).collect()[0]
-    assert r.mean_diff == pytest.approx(20.0)
-    assert r.equivalent_05 is False
-    assert r.z_upper > 0  # diff sits ABOVE the upper margin, not inside
-
-
 def test_r13b_constants_in_sync():
     """r13-continuation shared literals pinned to their oracle text: the
-    Cohen (1988) magnitude bands, the d-CI critical value, the TOST
-    margin and one-sided critical value are f-string-injected from the
-    SAME Python constants."""
+    Heaps checkpoint count, the dispersion top-k and the intrinsic-dim
+    query cap are f-string-injected from the SAME Python constants."""
     from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    assert (
-        relational.COHEN_D_SMALL,
-        relational.COHEN_D_MEDIUM,
-        relational.COHEN_D_LARGE,
-    ) == (0.2, 0.5, 0.8)
-    cd = oracles.ORACLE_SQL["events_cohens_d"]
-    for lit in [
-        relational.COHEN_D_SMALL,
-        relational.COHEN_D_MEDIUM,
-        relational.COHEN_D_LARGE,
-        relational.COHEN_D_Z_05,
-    ]:
-        assert repr(lit) in cd, lit
-    assert relational.COHEN_D_Z_05 == 1.959964
-    ts = oracles.ORACLE_SQL["events_tost_equivalence"]
-    assert relational.TOST_MARGIN_CENTS == 1000
-    assert f"CAST({relational.TOST_MARGIN_CENTS} AS DOUBLE)" in ts
-    assert relational.TOST_Z_05 == 1.644854
-    assert repr(relational.TOST_Z_05) in ts
-    assert relational.OVERDISP_Z_05 == 1.959964
-    assert (
-        repr(relational.OVERDISP_Z_05)
-        in oracles.ORACLE_SQL["events_overdispersion"]
-    )
-    assert relational.BLAND_ALTMAN_Z_05 == 1.959964
-    assert (
-        repr(relational.BLAND_ALTMAN_Z_05)
-        in oracles.ORACLE_SQL["events_bland_altman_daily"]
-    )
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
     assert text_ops.HEAPS_CHECKPOINTS == 12
@@ -7238,241 +5855,6 @@ def test_r13b_constants_in_sync():
         f"a.vec_id < {sim_ops.INTRINSIC_DIM_QUERY_CAP}"
         in oracles.ORACLE_SQL["embedding_intrinsic_dim"]
     )
-
-
-def test_mood_median_matches_textbook_replay(spark, sf_dir):
-    """Grand median and the 2×k chi-square recomputed from raw cents with
-    plain python (sorted-list median, ties='below' split, direct
-    Σ(O−E)²/E) — no order-statistic machinery."""
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_mood_median_test"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    allv = sorted(v for _, v in raw)
-    n = len(allv)
-    med2 = allv[(n - 1) // 2] + allv[n // 2]
-    assert r.n_total == n
-    assert r.grand_median == pytest.approx(med2 / 200.0, abs=1e-9)
-    groups = defaultdict(lambda: [0, 0])  # [n_g, a_g]
-    for et, v in raw:
-        groups[et][0] += 1
-        groups[et][1] += 1 if 2 * v > med2 else 0
-    k = len(groups)
-    a_tot = sum(a for _, a in groups.values())
-    assert (r.k_groups, r.n_above, r.df) == (k, a_tot, k - 1)
-    chi2 = 0.0
-    for ng, ag in groups.values():
-        ea, eb = ng * a_tot / n, ng * (n - a_tot) / n
-        chi2 += (ag - ea) ** 2 / ea + ((ng - ag) - eb) ** 2 / eb
-    assert r.chi2 == pytest.approx(chi2, rel=1e-7, abs=1e-9)
-
-
-def test_overdispersion_matches_textbook_replay(spark, sf_dir):
-    """Per-type dispersion index recomputed with statistics.variance over
-    the zero-filled daily series; Fisher z and verdict recomputed with
-    plain floats."""
-    import statistics
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.event_type: r
-        for r in QUERIES["events_overdispersion"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type,
-                  CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT), COUNT(*)
-           FROM '{sf}/events.parquet' GROUP BY 1, 2""",
-    )
-    dmin = min(d for _, d, _ in raw)
-    dmax = max(d for _, d, _ in raw)
-    per = defaultdict(dict)
-    for et, d, c in raw:
-        per[et][d] = c
-    assert set(rows) == set(per)
-    for et, daymap in per.items():
-        series = [daymap.get(d, 0) for d in range(dmin, dmax + 1)]
-        r = rows[et]
-        assert r.n_days == len(series)
-        assert r.n_events == sum(series)
-        m = statistics.mean(series)
-        v = statistics.variance(series)
-        assert r.mean_daily == pytest.approx(m, rel=1e-9)
-        assert r.var_daily == pytest.approx(v, rel=1e-7)
-        disp = v / m
-        assert r.dispersion_index == pytest.approx(disp, rel=1e-7)
-        x = (len(series) - 1) * disp
-        z = (2 * x) ** 0.5 - (2 * (len(series) - 1) - 1) ** 0.5
-        assert r.z_dispersion == pytest.approx(z, rel=1e-6, abs=1e-9)
-        expect = (
-            "overdispersed" if z > 1.959964
-            else "underdispersed" if z < -1.959964 else "poisson-consistent"
-        )
-        assert r.verdict == expect
-
-
-def test_mood_median_synthetic_separation(spark, tmp_path):
-    """Two groups on opposite sides of the grand median must produce the
-    maximal 2×2 chi-square (= n when the split is perfect)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "mood"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for i in range(30):
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "low", 10.0 + i * 0.01, "{}"))
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "high", 90.0 + i * 0.01, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_mood_median_test"](spark, str(d)).collect()[0]
-    assert (r.n_total, r.k_groups, r.df) == (60, 2, 1)
-    assert r.n_above == 30  # exactly the 'high' group sits above
-    assert 10.0 < r.grand_median < 90.0
-    assert r.chi2 == pytest.approx(60.0, abs=1e-9)  # perfect split: chi2 = n
-
-
-def test_overdispersion_synthetic_burst_and_constant(spark, tmp_path):
-    """A type with all events on ONE day of a 10-day calendar must flag
-    overdispersed; a perfectly constant one-per-day type must flag
-    underdispersed (variance 0 ≪ mean)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "od"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for i in range(10):  # constant: one event every day
-        eid += 1
-        rows.append((eid, f"2024-01-{i+1:02d} 12:00:00", 1, "steady", 1.0, "{}"))
-    for _ in range(200):  # burst: 200 events on day 1 only
-        eid += 1
-        rows.append((eid, "2024-01-01 00:00:00", 1, "bursty", 1.0, "{}"))
-    _write_events(spark, d, rows)
-    rows_out = {
-        r.event_type: r
-        for r in QUERIES["events_overdispersion"](spark, str(d)).collect()
-    }
-    assert rows_out["steady"].n_days == 10
-    assert rows_out["steady"].var_daily == pytest.approx(0.0, abs=1e-12)
-    assert rows_out["steady"].verdict == "underdispersed"
-    assert rows_out["bursty"].dispersion_index > 100
-    assert rows_out["bursty"].verdict == "overdispersed"
-
-
-def _daily_vc_replay(sf_dir):
-    rows = _duck_rows(
-        sf_dir,
-        """SELECT CAST((epoch_us(ts)//1000000)//86400 AS BIGINT),
-                  SUM(CASE WHEN event_type='view' THEN 1 ELSE 0 END),
-                  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    )
-    bymap = {d: (v, c) for d, v, c in rows}
-    dmin, dmax = min(bymap), max(bymap)
-    return [bymap.get(d, (0, 0)) for d in range(dmin, dmax + 1)]
-
-
-def test_bland_altman_matches_textbook_replay(spark, sf_dir):
-    """bias/sd/limits/outside-share recomputed with statistics.mean/stdev
-    over the zero-filled daily differences."""
-    import statistics
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_bland_altman_daily"](spark, sf_dir).collect()[0]
-    series = _daily_vc_replay(sf_dir)
-    d = [v - c for v, c in series]
-    assert r.n_days == len(d)
-    bias, sd = statistics.mean(d), statistics.stdev(d)
-    assert r.bias == pytest.approx(bias, rel=1e-9)
-    assert r.sd_diff == pytest.approx(sd, rel=1e-9)
-    lo, hi = bias - 1.959964 * sd, bias + 1.959964 * sd
-    assert r.loa_lo == pytest.approx(lo, rel=1e-9)
-    assert r.loa_hi == pytest.approx(hi, rel=1e-9)
-    n_out = sum(1 for x in d if x < lo or x > hi)
-    assert r.n_outside == n_out
-    assert r.pct_outside == pytest.approx(n_out / len(d), abs=1e-9)
-
-
-def test_kendall_tau_daily_matches_bruteforce(spark, sf_dir):
-    """tau-b recomputed as the literal O(n²) pairwise definition."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_kendall_tau_daily"](spark, sf_dir).collect()[0]
-    series = _daily_vc_replay(sf_dir)
-    n = len(series)
-    assert (r.n_days, r.n_pairs) == (n, n * (n - 1) // 2)
-    s = tx = ty = 0
-    for i in range(n):
-        for k in range(i + 1, n):
-            dv = series[k][0] - series[i][0]
-            dc = series[k][1] - series[i][1]
-            sv = (dv > 0) - (dv < 0)
-            sc = (dc > 0) - (dc < 0)
-            s += sv * sc
-            tx += dv == 0
-            ty += dc == 0
-    assert (r.s, r.ties_x, r.ties_y) == (s, tx, ty)
-    npairs = n * (n - 1) // 2
-    tau = s / (((npairs - tx) ** 0.5) * ((npairs - ty) ** 0.5))
-    assert r.tau_b == pytest.approx(tau, abs=1e-9)  # output is 9dp-rounded
-
-
-def test_bland_altman_perfect_agreement_synthetic(spark, tmp_path):
-    """A constant daily difference is PERFECT agreement: sd = 0, limits
-    collapse onto the bias, zero days outside."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "ba"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for day in range(1, 11):  # every day: 3 views, 1 click -> d = 2
-        for _ in range(3):
-            eid += 1
-            rows.append((eid, f"2024-01-{day:02d} 08:00:00", 1, "view", 1.0, "{}"))
-        eid += 1
-        rows.append((eid, f"2024-01-{day:02d} 09:00:00", 1, "click", 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_bland_altman_daily"](spark, str(d)).collect()[0]
-    assert r.n_days == 10
-    assert r.bias == pytest.approx(2.0, abs=1e-12)
-    assert r.sd_diff == pytest.approx(0.0, abs=1e-12)
-    assert r.loa_lo == pytest.approx(2.0, abs=1e-12)
-    assert r.loa_hi == pytest.approx(2.0, abs=1e-12)
-    assert (r.n_outside, r.pct_outside) == (0, 0.0)
-
-
-def test_kendall_tau_perfectly_concordant_synthetic(spark, tmp_path):
-    """Strictly co-monotone tie-free daily series must hit tau_b = +1."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "kt"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for day in range(1, 9):  # day k: k views, 2k clicks -> both strictly rise
-        for _ in range(day):
-            eid += 1
-            rows.append((eid, f"2024-01-{day:02d} 08:00:00", 1, "view", 1.0, "{}"))
-        for _ in range(2 * day):
-            eid += 1
-            rows.append((eid, f"2024-01-{day:02d} 09:00:00", 1, "click", 1.0, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_kendall_tau_daily"](spark, str(d)).collect()[0]
-    assert (r.n_days, r.ties_x, r.ties_y) == (8, 0, 0)
-    assert r.s == 28  # all C(8,2) pairs concordant
-    assert r.tau_b == pytest.approx(1.0, abs=1e-12)
 
 
 def test_heaps_fit_matches_textbook_replay(spark, sf_dir):

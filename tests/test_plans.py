@@ -236,10 +236,18 @@ def test_candidate_volume_bounds(spark, sf_dir):
     # source_overlap_matrix shares the dedup family's hot-shingle guard;
     # with a cap small enough to engage on this self-similar fixture the
     # posting-list self-join must shrink (df>cap shingles dropped).
+    from pyspark.sql import functions as F
+
     from cl_tagger_batch_processing_spark.operators import text
 
-    sov_guarded = text.source_overlap_candidates(spark, sf_dir, max_df=5).count()
-    sov_unguarded = text.source_overlap_candidates(spark, sf_dir, max_df=None).count()
+    # sum(n_common) is the pre-aggregation (shingle, source_a, source_b)
+    # row count, so it measures the guarded self-join's volume directly
+    def _pair_volume(max_df):
+        df = text.source_overlap_matrix(spark, sf_dir, max_df=max_df)
+        return df.agg(F.sum("n_common")).first()[0]
+
+    sov_guarded = _pair_volume(5)
+    sov_unguarded = _pair_volume(None)
     assert sov_guarded < sov_unguarded, (
         f"hot-shingle guard did not prune source-overlap candidates "
         f"({sov_guarded} vs {sov_unguarded})"
@@ -940,11 +948,10 @@ def test_hits_salted_strategy_agrees(spark, sf_dir):
 
 
 def test_source_pair_frames_broadcast(spark, sf_dir):
-    # the #sources² pair frames (JSD / A-B lift scalars) must reach their
-    # cross as an explicit BROADCAST — never a partitioned CartesianProduct
-    for name in ["source_jsd_matrix", "events_ab_lift"]:
-        plan = inspect.executed_plan(QUERIES[name](spark, sf_dir))
-        assert "CartesianProduct" not in plan, name
+    # the #sources² pair frames (JSD scalars) must reach their cross as an
+    # explicit BROADCAST — never a partitioned CartesianProduct
+    plan = inspect.executed_plan(QUERIES["source_jsd_matrix"](spark, sf_dir))
+    assert "CartesianProduct" not in plan
 
 
 def test_er_blocking_join_is_block_keyed(spark, sf_dir):
@@ -973,17 +980,6 @@ def test_lev_verify_distance_on_candidates_only(spark, sf_dir):
     plan = inspect.executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "levenshtein" in plan
-
-
-def test_autocorrelation_single_events_scan(spark, sf_dir):
-    # the daily aggregate is materialized once; BOTH lag-join sides read
-    # it, so the corpus is scanned exactly once and no Python runs
-    df = QUERIES["events_autocorrelation"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    assert plan.count("FileScan") == 0  # daily frame is checkpointed
-    for op in ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython",
-               "SortMergeJoin"]:
-        assert op not in plan, op
 
 
 def test_t_closeness_single_customer_scan(spark, sf_dir):
@@ -1023,18 +1019,6 @@ def test_modularity_rollup_on_materialized_counts(spark, sf_dir):
     plan = inspect.executed_plan(df)
     assert plan.count("FileScan") == 0
     for op in ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"]:
-        assert op not in plan, op
-
-
-def test_decision_stump_single_histogram_scan(spark, sf_dir):
-    # the LightGBM-hist shape: one corpus scan into the bucket histogram;
-    # thresholds are evaluated on the tiny cumulative frame, never joined
-    # back against facts
-    df = QUERIES["events_decision_stump"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    assert plan.count("FileScan") == 0  # histogram frame is checkpointed
-    for op in ["SortMergeJoin", "CartesianProduct", "BatchEvalPython",
-               "ArrowEvalPython"]:
         assert op not in plan, op
 
 
@@ -1144,20 +1128,16 @@ def test_r11_continuation_plan_shapes(spark):
 # naming the bound.
 
 # Runtime allowlist: query name -> why the windowed relation is bounded.
-# (Specs ordered on the bucketed-rank helpers' `_bkt` spine are allowed
+# (Specs ordered on the bucketed-rank machinery's `_bkt` spine are allowed
 # structurally: the spine is ≤RANK_BUCKETS rows by construction.)
 UNPARTITIONED_WINDOW_OK = {
-    "events_survival_km": "distinct durations — calendar-bounded",
-    "events_poisson_bootstrap_ci": "B=64 bootstrap replicate means",
     "sim_hybrid_rrf": "fusion of two bounded top-k lists",
     "sim_ann_graph_search": "beam candidates, bounded by GBS_BEAM",
     "orders_backlog_timeseries": "daily spine — calendar-bounded",
     "orders_max_drawdown": "daily spine — calendar-bounded",
-    "events_page_hinkley": "daily spine — calendar-bounded",
     "orders_seasonal_decompose": "month spine — calendar-bounded",
     "parts_pareto_skyline": "constant bucket grid",
     "text_ngram_novelty": "constant bucket grid",
-    "events_decision_stump": "constant threshold/bucket grid",
     "text_bm25_topk": "rank window AFTER .limit(k)",
     "text_vocab_topk": "rank window AFTER .limit(k)",
     "text_bpe_pair_counts": "rank window AFTER .limit(k)",
@@ -1205,7 +1185,7 @@ def test_registry_wide_unpartitioned_window_allowlist(spark):
     # Runtime prong: every non-stream registry query's executed plan may
     # contain an unpartitioned window ONLY if the query is allowlisted
     # with a boundedness reason (or the window is the bucketed-rank
-    # helpers' ≤RANK_BUCKETS `_bkt` spine). Allowlist entries may go
+    # machinery's ≤RANK_BUCKETS `_bkt` spine). Allowlist entries may go
     # unused at runtime — eager checkpoints hide upstream machinery from
     # the final plan, so visibility varies; the STATIC audit below is the
     # staleness-checked prong.
@@ -1227,8 +1207,8 @@ def test_registry_wide_unpartitioned_window_allowlist(spark):
             bad.append(f"{name}: {specs}")
     assert not bad, (
         "unpartitioned window over a relation with no triaged bound "
-        "(single-task global sort at scale) — fix via the bucketed_rank/"
-        "bucketed_ntile/bucketed_cum_before machinery or allowlist with a "
+        "(single-task global sort at scale) — fix via the bucketed two-pass "
+        "rank machinery (bucketed_ntile) or allowlist with a "
         f"boundedness reason: {bad}"
     )
 
@@ -1238,22 +1218,15 @@ def test_registry_wide_unpartitioned_window_allowlist(spark):
 # events_kruskal_wallis lesson) cannot dodge the gate.
 STATIC_WINDOW_OK = {
     ("relational.py", "_bucket_offsets"): "bucketed-rank spine ≤RANK_BUCKETS",
-    ("relational.py", "bucketed_cum_before"): "bucketed-rank spine ≤RANK_BUCKETS",
-    ("relational.py", "bucketed_lead"): "bucketed-rank spine ≤RANK_BUCKETS",
     ("relational.py", "part_abc_classification"): "parts-dimension relation",
     ("relational.py", "orders_seasonal_decompose"): "month spine",
     ("relational.py", "orders_backlog_timeseries"): "daily spine",
-    ("relational.py", "events_decision_stump"): "constant threshold/bucket grid",
     ("relational.py", "histogram_quantile_estimates"): "constant bucket grid",
     ("relational.py", "events_user_hazard_curve"): "day-offset spine",
     ("relational.py", "parts_pareto_skyline"): "constant bucket grid",
     ("relational.py", "orders_max_drawdown"): "daily spine",
-    ("relational.py", "events_survival_km"): "distinct durations — calendar-bounded",
     ("relational.py", "events_hmm_viterbi_decode"): "daily spine",
-    ("relational.py", "events_poisson_bootstrap_ci"): "B=64 replicate means",
-    ("relational.py", "isotonic_rates"): "constant score buckets",
     ("relational.py", "orders_theil_sen_trend"): "calendar-bounded pair stage",
-    ("relational.py", "events_page_hinkley"): "daily spine",
     ("curation.py", "corpus_source_mix"): "#sources strata",
     ("curation.py", "corpus_token_budget"): "#source×lang strata",
     ("curation.py", "corpus_temperature_mix"): "#sources strata",
@@ -1309,9 +1282,9 @@ def test_static_unpartitioned_window_audit():
             if key not in STATIC_WINDOW_OK:
                 bad.append(f"{p.name}:{i} in {cur}: {line.strip()[:80]}")
     assert not bad, (
-        "new unpartitioned-Window construction site — use bucketed_rank/"
-        "bucketed_ntile/bucketed_cum_before for unbounded relations, or "
-        f"allowlist the bounded spine with a reason: {bad}"
+        "new unpartitioned-Window construction site — use the bucketed "
+        "two-pass rank machinery (bucketed_ntile) for unbounded relations, "
+        f"or allowlist the bounded spine with a reason: {bad}"
     )
     stale = set(STATIC_WINDOW_OK) - hits
     assert not stale, f"stale STATIC_WINDOW_OK entries (site gone): {stale}"

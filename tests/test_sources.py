@@ -115,3 +115,18 @@ def test_sidecar_shared_fs_guard():
         _require_shared_out_dir(_Fake("yarn"), ok, False)
     # explicit escape hatch for unlisted shared mounts
     _require_shared_out_dir(_Fake("yarn"), "/data/nfs-mount/out", True)
+
+
+def test_two_loads_of_one_table_self_join_on_columns(spark, sf_dir):
+    # The table-plan memo must not hand the same DataFrame to both sides
+    # of a self-join: identical column ids make `a.col == b.col` ambiguous.
+    from cl_tagger_batch_processing_spark.sources.tables import load_table
+
+    a = load_table(spark, sf_dir, "orders")
+    b = load_table(spark, sf_dir, "orders")
+    joined = a.join(b, a.o_custkey == b.o_orderkey)
+    fresh_a = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    fresh_b = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    want = fresh_a.join(fresh_b, fresh_a.o_custkey == fresh_b.o_orderkey).count()
+    assert want > 0
+    assert joined.count() == want

@@ -110,61 +110,13 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("text_gopher_flags", "ALL_FALSE", "flag_repetition"): (
         "clean-fixture honest negative; same synthetic-pathology pin"
     ),
-    ("events_tukey_hsd", "ALL_FALSE", "reject_hsd_05"): (
-        "honest negative: every event type draws values from the same "
-        "generator at every scale (the KS/MW triage); TRUE path pinned by "
-        "test_tukey_rejects_on_synthetic_shifted_groups through the full "
-        "production query"
-    ),
-    ("events_tukey_hsd", "ALL_FALSE", "reject_anova_05"): (
-        "same-generator fixture; same synthetic shifted-groups pin"
-    ),
-    ("events_granger_lite", "ALL_FALSE", "granger_reject_05"): (
-        "honest negative: the organic fixture has no lead-lag structure "
-        "(F ~ 0.02-1.0 across scales); TRUE path pinned by "
-        "test_granger_rejects_on_synthetic_leading_series through the "
-        "full production query"
-    ),
-    ("events_power_analysis", "ALL_FALSE", "powered"): (
-        "honest negative at sf0.001 (8/7 users per arm vs >=212 required "
-        "at the widest MDE); the 10%-MDE row is powered=true at sf0.1 "
-        "(750 users vs 224 required) — tiny-scale-only, the q21 triage "
-        "form"
-    ),
     # --- r12 addition triage -------------------------------------------
-    ("events_mann_kendall", "ALL_FALSE", "trend_significant_05"): (
-        "honest negative: the fixture's daily counts are stationary at "
-        "every scale; TRUE path pinned by "
-        "test_mann_kendall_detects_synthetic_trend through the full "
-        "production query"
-    ),
-    ("events_mcnemar", "ALL_ZERO", "lapsed_then_conv"): (
-        "honest zero at sf0.001 (1.5k events: one repeat-purchaser "
-        "lapses, none convert; both sides nonzero at sf0.01/sf0.1 — "
-        "b=17/c=15 at sf0.1); TRUE path pinned by "
-        "test_mcnemar_counts_synthetic_discordant_users"
-    ),
-    ("events_mcnemar", "ALL_ZERO", "chi2_cc"): (
-        "honest zero at sf0.001: the lone discordant pair (b=1, c=0) "
-        "yields (|1-0|-1)^2/1 = 0 under the continuity correction — the "
-        "statistic's true value; nonzero at sf0.01/sf0.1 and pinned "
-        "nonzero by test_mcnemar_counts_synthetic_discordant_users"
-    ),
-    ("events_mcnemar", "ALL_FALSE", "reject_homogeneity_05"): (
-        "honest negative: conversion is not drifting between fixture "
-        "halves at any scale; TRUE path pinned by "
-        "test_mcnemar_counts_synthetic_discordant_users"
-    ),
-    ("events_odds_ratio_ci", "ALL_FALSE", "haldane_corrected"): (
-        "honest negative: all four 2x2 cells are populated at every "
-        "scale; the zero-cell TRUE path is pinned by "
-        "test_odds_ratio_haldane_on_synthetic_zero_cell"
-    ),
     ("events_welch_anova", "ALL_ZERO", "k_dropped"): (
         "honest zero: every fixture event type has n>=2 and positive "
         "variance at every scale; the degenerate-group TRUE path is "
         "pinned by test_welch_anova_drops_synthetic_constant_group"
     ),
+    # --- text and embedding QA triage ----------------------------------
     ("text_heaps_law_fit", "ALL_ZERO", "heaps_beta"): (
         "honest zero: the synthetic fixture vocabulary is CLOSED (~31-40 "
         "types, fully seen in the first checkpoint at every scale), so "
@@ -187,31 +139,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "honest zero: the fixture has no exact duplicate embeddings at "
         "any scale (r1 > 0 everywhere); the duplicate-drop TRUE path is "
         "pinned by test_intrinsic_dim_duplicates_synthetic"
-    ),
-    ("events_friedman_test", "ALL_ZERO", "n_dropped"): (
-        "honest zero: the fixture is dense (every user has every event "
-        "type at every scale — the KM/AUC lesson); the incomplete-block "
-        "TRUE path is pinned by test_friedman_drops_synthetic_incomplete_block"
-    ),
-    ("events_page_hinkley", "ALL_NULL", "alarm_day"): (
-        "honest negative: the fixture's daily counts are stationary at "
-        "every scale (max excursion 26.6/44.9 at sf0.001/sf0.01, under "
-        "the lambda=50 threshold); TRUE path pinned by "
-        "test_page_hinkley_alarms_on_synthetic_level_shift through the "
-        "full production query"
-    ),
-    ("events_page_hinkley", "ALL_NULL", "excursion_at_alarm"): (
-        "same stationary-fixture triage as alarm_day; same synthetic pin"
-    ),
-    ("events_page_hinkley", "ALL_FALSE", "drift_detected"): (
-        "same stationary-fixture triage as alarm_day; same synthetic pin"
-    ),
-    ("events_wilcoxon_signed_rank", "ALL_ZERO", "w_plus"): (
-        "honest extreme: weekends are 2 of 7 days, so EVERY user's "
-        "weekend-minus-weekday spend diff is negative on the uniform "
-        "fixture (W+ = 0 is the true rank sum; z is strongly negative "
-        "and non-vacuous); the positive-diff TRUE path is pinned by "
-        "test_wilcoxon_ranks_synthetic_weekend_spenders"
     ),
 }
 
