@@ -17,7 +17,7 @@ list #3); it is import-gated because the test container may not ship it.
 ``tensorize_array`` is the pure-NumPy tail of the kernel and is golden-
 tested without PIL.
 
-Execution shape: these functions run inside Arrow-batched ``mapInPandas``
+Execution shape: these functions run inside Arrow-batched ``mapInArrow``
 (see pipeline.py) — per-executor, batch-at-a-time, never on the driver.
 """
 
@@ -77,7 +77,7 @@ def fake_decode_bytes(content: bytes, size: int = 64) -> np.ndarray:
     """DETERMINISTIC FAKE decode for containers without PIL: tiles the raw
     bytes into a (size×size×3) uint8 "image" and runs the real tensorize
     tail. Not a real image decode — it exists so the full pipeline
-    (binary column → mapInPandas → tensor → scores → tags) is exercised
+    (binary column → mapInArrow → tensor → scores → tags) is exercised
     end-to-end with reproducible values. Swap in ``preprocess_bytes`` when
     PIL is available; nothing else changes."""
     if len(content) < 4:
@@ -96,7 +96,7 @@ def preprocess_bytes(content: bytes, target_size=TARGET_SIZE) -> np.ndarray:
     if not HAS_PIL:  # pragma: no cover
         raise NotImplementedError(
             "image decode requires PIL, which is not installed in this "
-            "container; the Spark-side plumbing (binary column → mapInPandas "
+            "container; the Spark-side plumbing (binary column → mapInArrow "
             "→ tensor column) is exercised with tensorize_array goldens"
         )
     image = Image.open(io.BytesIO(content))

@@ -8,7 +8,8 @@ appV2.py:48). The Spark mapping fixes both limitations:
   session is built once per Python worker process on first batch
   (module-level cache) from a model path shipped to executors;
 * **real batching** — tensors are scored ``batch_size`` at a time inside an
-  Arrow-batched ``mapInPandas`` stage.
+  Arrow-batched ``mapInArrow`` stage (``pipeline.score_images``), which
+  then selects each image's tags from the score matrix in the same stage.
 
 onnxruntime is import-gated (not in this container); ``StubScorer`` is the
 deterministic stand-in used by tests and the demo pipeline: logits are exact

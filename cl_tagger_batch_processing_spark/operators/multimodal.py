@@ -500,7 +500,7 @@ def mm_keyframe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One hash aggregation over the shared per-frame relation:
     max(struct(sharp, −frame_idx)) picks the first maximum without a sort
-    or window (the argmax shape of tagging.top1_tags) — doc-keyed,
+    or window (a first-max argmax as one struct max) — doc-keyed,
     map-side combined, linear at any corpus size."""
     frames = _scene_frames(spark, sf_dir)
     best = F.max(

@@ -117,13 +117,13 @@ SELECT image_id, category, tag_idx, tag FROM thresh
 # PARTIAL oracle for the full pipeline: the float32 kernel's output is
 # handed off through pipeline.PIPELINE_SCORED_PATH (written eagerly when the
 # Spark query is built — always before this SQL runs; the Spark side reads
-# the same file back). Spark selects tags with one projection over each
-# row's probs array; this SQL replays the same selection in long form
+# the same file back). Spark selects tags with the NumPy selection, run as a
+# mapInArrow over each row's probs array; this SQL replays it in long form
 # (unnest → dim join → top-1/threshold/blacklist → ordered string agg →
 # ok/error rows, appV2.py:74-101,178-190) from those exact float32 probs —
 # an independent formulation, not a transcription. Casting FLOAT→DOUBLE is
-# exact in both engines, so every threshold comparison and tie-break is
-# bit-identical.
+# exact in both engines (the NumPy side compares in float64), so every
+# threshold comparison and tie-break is bit-identical.
 _PIPELINE_SCORED_GLOB = f"{_PIPELINE_SCORED_PATH}/*.parquet"
 
 ORACLE_SQL["pipeline_score_tag"] = f"""

@@ -2,17 +2,17 @@
 (appV2.py:103-191) as one composed Spark job.
 
     scan_images (S1+F1)                 appV2.py:132-137
-      → score_images: mapInPandas       M1-M6, appV2.py:165-174
-          decode → preprocess → batch score → sigmoid, per-row try/except
-      → select_tags_from_probs          J1/J2/F2/F3/F4/P1/A1/A2, appV2.py:74-101
-          one projection: probs → tags_text against a broadcast
-          one-row tag dimension
+      → coalesce to one task per core
+      → score_images: mapInArrow        M1-M6 + J1/J2/F2/F3/F4/P1/A1/A2,
+          decode → preprocess → batch   appV2.py:74-101,165-174
+          score → sigmoid → NumPy tag
+          selection, per-row try/except
       → (path, tags_text, status, error)
       → sinks.write_sidecar_txt / write_tags_parquet (S3)
 
-Every input of the selection is already in the image's row, so ok and error
-rows leave the same narrow projection: scan → mapInPandas → project → sink,
-with no shuffle, checkpoint or union on the image side.
+The tag dimension is folded once per ``tag_images`` call, and the kernel
+selects tags from the score matrix it has just computed: one stage, with
+no shuffle, broadcast, checkpoint or union.
 
 Fault isolation matches the reference (appV2.py:166,183-185): a decode or
 scoring failure marks THAT row ``status='error'`` and the job continues —
@@ -21,7 +21,7 @@ call that raises on a batch is retried row by row, so only the rows that
 still raise are marked. Error rows carry the exception text and a NULL
 tags_text; the reference's success/failure counters (A3) are ``summarize``.
 
-The Python boundary is exactly one Arrow-batched ``mapInPandas`` stage; the
+The Python boundary is exactly one Arrow-batched ``mapInArrow`` stage; the
 scorer batches tensors (vs the reference's hard-coded batch=1, appV2.py:48)
 and builds any native session lazily per executor process.
 """
@@ -31,7 +31,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,14 +41,11 @@ from .kernels.scoring import StubScorer, sigmoid_clip_np
 from .operators.tagging import (
     DEFAULT_CHAR_THRESHOLD,
     DEFAULT_GEN_THRESHOLD,
-    select_tags_from_probs,
+    TagSelector,
+    fold_tag_dim,
+    select_tags_arrow,
 )
 from .sources.images import scan_images
-
-
-def default_decode() -> Callable[[bytes], np.ndarray]:
-    """Real PIL decode when available, deterministic fake otherwise."""
-    return preprocess_bytes if HAS_PIL else fake_decode_bytes
 
 
 def score_images(
@@ -56,40 +53,44 @@ def score_images(
     scorer=None,
     decode: Callable[[bytes], np.ndarray] | None = None,
     batch_size: int = 32,
+    selector: TagSelector | None = None,
 ) -> DataFrame:
-    """(path, content) → (path, probs array<float>, status, error).
+    """(path, content) → (path, probs array<float>, status, error), or,
+    given a folded tag dimension ``selector``, → (path, tags_text, status,
+    error).
 
-    One mapInPandas stage: per Arrow batch, decode rows individually under
+    One mapInArrow stage: per Arrow batch, decode rows individually under
     try/except (per-row fault isolation, appV2.py:166), then score the
     surviving tensors in ``batch_size`` sub-batches (M5) and sigmoid-clip
     (M6). A sub-batch whose scorer call raises is scored again row by row;
-    only the rows that still raise become error rows. ``probs`` is NULL
-    exactly on error rows. The scorer object is pickled to executors; any
-    native session it holds must be created lazily inside ``score_batch``
-    (see OnnxScorer).
+    only the rows that still raise become error rows. With a ``selector``
+    the batch's score matrix goes straight into the tag selection;
+    ``probs``/``tags_text`` is NULL exactly on error rows. The scorer
+    object is pickled to executors; any native session it holds must be
+    created lazily inside ``score_batch`` (see OnnxScorer).
     """
     scorer = scorer or StubScorer()
-    decode_fn = decode or default_decode()
+    # real PIL decode when available, deterministic fake otherwise
+    decode_fn = decode or (preprocess_bytes if HAS_PIL else fake_decode_bytes)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            paths = list(pdf["path"])
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             tensors: list[np.ndarray | None] = []
             errors: list[str | None] = []
-            for content in pdf["content"]:
+            for content in batch.column("content").to_pylist():
                 try:
-                    tensors.append(decode_fn(bytes(content)))
+                    tensors.append(decode_fn(content))
                     errors.append(None)
                 except Exception as e:  # noqa: BLE001 — per-row isolation
                     tensors.append(None)
                     errors.append(f"{type(e).__name__}: {e}")
-            probs_out: list[list[float] | None] = [None] * len(paths)
+            out: list = [None] * len(tensors)
 
             def score(rows: list[int]) -> None:
-                batch = np.stack([tensors[i] for i in rows]).astype(np.float32)
-                probs = sigmoid_clip_np(scorer.score_batch(batch)).tolist()
+                stacked = np.stack([tensors[i] for i in rows]).astype(np.float32)
+                probs = sigmoid_clip_np(scorer.score_batch(stacked)).astype(np.float32)
                 for i, p in zip(rows, probs):
-                    probs_out[i] = p
+                    out[i] = p
 
             ok_idx = [i for i, t in enumerate(tensors) if t is not None]
             for start in range(0, len(ok_idx), batch_size):
@@ -102,18 +103,39 @@ def score_images(
                             score([i])
                         except Exception as e:  # noqa: BLE001 — per-row isolation
                             errors[i] = f"{type(e).__name__}: {e}"
-            yield pd.DataFrame(
+            ok = [i for i, e in enumerate(errors) if e is None]
+            if selector is not None and ok:
+                for i, text in zip(ok, selector.texts(np.stack([out[i] for i in ok]))):
+                    out[i] = text
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "path": paths,
-                    "probs": probs_out,
-                    "status": ["error" if e else "ok" for e in errors],
-                    "error": errors,
+                    "path": batch.column("path"),
+                    out_name: pa.array(out, out_type),
+                    "status": pa.array(["error" if e else "ok" for e in errors], pa.string()),
+                    "error": pa.array(errors, pa.string()),
                 }
             )
 
-    return images.select("path", "content").mapInPandas(
-        run, schema="path string, probs array<float>, status string, error string"
+    if selector is None:
+        out_name, out_type, out_ddl = "probs", pa.list_(pa.float32()), "array<float>"
+    else:
+        out_name, out_type, out_ddl = "tags_text", pa.string(), "string"
+    return images.select("path", "content").mapInArrow(
+        run, schema=f"path string, {out_name} {out_ddl}, status string, error string"
     )
+
+
+def one_task_per_core(images: DataFrame) -> DataFrame:
+    """Coalesce a file scan to ``max(leaf parallelism, ceil(listed bytes /
+    spark.sql.files.maxPartitionBytes))`` partitions. The file splitter
+    charges every file ``openCostInBytes`` (4 MB by default), so a folder
+    of small images plans many more partitions than cores, and every
+    Python task has a fixed cost; a narrow coalesce only merges, so a scan
+    that already has that many partitions or fewer is unchanged."""
+    session = images.sparkSession._jsparkSession
+    listed = int(images._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    max_bytes = session.sessionState().conf().filesMaxPartitionBytes()
+    return images.coalesce(max(session.leafNodeDefaultParallelism(), -(-listed // max_bytes)))
 
 
 def tag_images(
@@ -136,8 +158,10 @@ def tag_images(
     images = scan_images(spark, folder, recursive=recursive)
     if fail_on_empty and images.isEmpty():
         raise ValueError(f"no supported images found under {folder!r} (F5)")
-    scored = score_images(images, scorer=scorer, decode=decode, batch_size=batch_size)
-    return select_tags_from_probs(scored, tag_dim, gen_threshold, char_threshold)
+    selector = fold_tag_dim(tag_dim, gen_threshold, char_threshold)
+    return score_images(
+        one_task_per_core(images), scorer, decode, batch_size, selector=selector
+    )
 
 
 def summarize(result: DataFrame) -> DataFrame:
@@ -177,9 +201,10 @@ from .handoff import PIPELINE_SCORED_PATH  # noqa: E402 — re-export
 def pipeline_score_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL main() flow (appV2.py:103-191) as one registry
     query over the fixtures: binary payloads (documents.text bytes standing
-    in for image files) → mapInPandas decode+score (fake decode +
+    in for image files) → mapInArrow decode+score (fake decode +
     StubScorer — deterministic, no PIL/onnxruntime needed) → the handoff
-    Parquet → tag-selection projection → (path, tags_text, status, error).
+    Parquet → the same NumPy tag selection as a mapInArrow over the
+    read-back → (path, tags_text, status, error).
 
     Value-checked via the PIPELINE_SCORED_PATH handoff (above): the kernel
     itself is golden-tested in test_kernels/test_pipeline, and the oracle
@@ -199,4 +224,6 @@ def pipeline_score_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_images(images, scorer=StubScorer(), decode=fake_decode_bytes).write.mode(
         "overwrite"
     ).parquet(PIPELINE_SCORED_PATH)
-    return select_tags_from_probs(spark.read.parquet(PIPELINE_SCORED_PATH), demo_tag_dim(spark))
+    return select_tags_arrow(
+        spark.read.parquet(PIPELINE_SCORED_PATH), fold_tag_dim(demo_tag_dim(spark))
+    )

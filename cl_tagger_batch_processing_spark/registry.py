@@ -9,6 +9,7 @@ rows-only check and are listed in ``NO_ORACLE`` with a reason.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,28 +32,14 @@ def register(name: str, fn: QueryFn, no_oracle: str | None = None) -> None:
 register("tag_select", tagging.flagship_tag_select)
 
 
-def _tag_exploded(spark: SparkSession, sf_dir: str, pick) -> DataFrame:
-    """One row per tag ``pick`` selects (tagging.top1_tags or
-    tagging.threshold_tags): (image_id, category, tag_idx, tag)."""
-    from pyspark.sql import functions as F
-
-    scored = tagging.with_tag_candidates(
-        tagging.embedding_probs(spark, sf_dir), tagging.demo_tag_dim(spark)
-    )
-    # tag_idx widened to BIGINT: the oracle emits int64 and the driver
-    # hashes through Arrow, where an int32-vs-int64 width split is the
-    # same failure class as r12's HUGEINT fails (see tests/test_oracle_types)
-    return scored.select("image_id", F.explode(pick()).alias("t")).select(
-        "image_id", "t.category", F.col("t.tag_idx").cast("bigint").alias("tag_idx"), "t.tag"
-    )
-
-
-def _tag_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tag_exploded(spark, sf_dir, tagging.top1_tags)
-
-
-def _tag_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tag_exploded(spark, sf_dir, tagging.threshold_tags)
+def _tag_exploded(spark: SparkSession, sf_dir: str, top1: bool) -> DataFrame:
+    """One row per tag the top-1 (A1) or the threshold (F2+F3) step
+    selects: (image_id, category, tag_idx, tag). tag_idx is BIGINT: the
+    oracle emits int64 and the driver hashes through Arrow, where an
+    int32-vs-int64 width split is the same failure class as r12's HUGEINT
+    fails (see tests/test_oracle_types)."""
+    selector = tagging.fold_tag_dim(tagging.demo_tag_dim(spark))
+    return tagging.explode_tags(tagging.embedding_probs(spark, sf_dir), selector, top1)
 
 
 # r8 window refresh: tag_top1_rating_quality / tag_threshold_filter were
@@ -294,8 +281,8 @@ register("mm_phash_dedup", multimodal.mm_phash_dedup)
 
 # Displaced by the r8 window refresh (see above): all ten were driver-green
 # five-to-seven consecutive rounds and remain fully oracle-backed locally.
-register("tag_top1_rating_quality", _tag_top1)
-register("tag_threshold_filter", _tag_threshold)
+register("tag_top1_rating_quality", partial(_tag_exploded, top1=True))
+register("tag_threshold_filter", partial(_tag_exploded, top1=False))
 register("dedup_exact", dedup.dedup_exact)
 register("dedup_embedding_cosine", dedup.dedup_embedding_cosine)
 register("sessionize", streaming_windows.sessionize)

@@ -4,13 +4,14 @@ Two surfaces (SURVEY.md §2.1 S3):
 
 * ``write_sidecar_txt`` — byte-compatible behavior: one ``<basename>.txt``
   per image containing the tag string. Runs on executors as a
-  ``mapInPandas`` stage consumed by a SQL aggregation (no driver collect
-  of the rows; only one count per partition comes back). The SQL path
-  matters beyond style: plan-attached ``Observation`` metrics only fire
-  for actions that run through the SQL execution engine, and the previous
-  ``DataFrame.foreachPartition`` implementation (an RDD-path action)
-  bypassed that listener — ``Observation.get`` after a sidecar-only run
-  blocked forever. An output directory must be given — unlike the
+  ``mapInArrow`` stage that yields one count per partition; the driver
+  sums them from a plain ``collect()`` (no rows come back, and no
+  aggregate, whose exchange would run as a second job under AQE). The SQL
+  path matters beyond style: plan-attached ``Observation`` metrics only
+  fire for actions that run through the SQL execution engine, and the
+  previous ``DataFrame.foreachPartition`` implementation (an RDD-path
+  action) bypassed that listener — ``Observation.get`` after a
+  sidecar-only run blocked forever. An output directory must be given — unlike the
   reference, the engine never writes next to read-only inputs.
 * ``write_tags_parquet`` — the idiomatic sink: one partitioned columnar
   table of (path, tags_text, status) instead of N tiny files. This is what
@@ -22,8 +23,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # POSIX mount-point prefixes that conventionally expose a filesystem shared
 # by every executor (NFS/FUSE mounts) — the ONLY kind of path this sink can
@@ -80,24 +81,21 @@ def write_sidecar_txt(tagged: DataFrame, out_dir: str, *, allow_executor_local: 
     _require_shared_out_dir(tagged, out_dir, allow_executor_local)
 
     def write_batches(batches):
-        import pandas as pd  # local import: runs on executors
-
         os.makedirs(out_dir, exist_ok=True)
         n = 0
-        for pdf in batches:
-            for path, text in zip(pdf["path"], pdf["tags_text"]):
+        for batch in batches:
+            for path, text in zip(*batch.to_pydict().values()):
                 base = os.path.splitext(os.path.basename(path))[0]  # appV2.py:178
                 with open(os.path.join(out_dir, base + ".txt"), "w", encoding="utf-8") as f:
-                    f.write(text if isinstance(text, str) else "")
+                    f.write(text or "")
                 n += 1
-        yield pd.DataFrame({"n_written": [n]})
+        yield pa.RecordBatch.from_pydict({"n_written": pa.array([n], pa.int64())})
 
-    written = tagged.select("path", "tags_text").mapInPandas(
+    written = tagged.select("path", "tags_text").mapInArrow(
         write_batches, schema="n_written long"
     )
     # SQL action (fires any upstream Observation); one long per partition.
-    row = written.agg(F.sum("n_written").alias("n")).collect()[0]
-    return int(row["n"] or 0)
+    return sum(row.n_written for row in written.collect())
 
 
 def write_tags_parquet(tagged: DataFrame, out_path: str, mode: str = "overwrite") -> None:

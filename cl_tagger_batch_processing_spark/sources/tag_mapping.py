@@ -8,8 +8,9 @@ The mapping JSON arrives in one of two layouts, detected by probing for the
 
 String keys are cast to int (appV2.py:55,58). Unknown-tag categories default
 to ``general`` (appV2.py:67); categories outside the known 8 are dropped
-(appV2.py:68). The result is a small broadcast-ready dimension DataFrame
-``(tag_idx, tag_name, category)`` — the engine's J1/J2 join side.
+(appV2.py:68). The result is a small dimension DataFrame
+``(tag_idx, tag_name, category)``, which ``tag_images`` folds into the
+selection function with one driver collect (J1/J2 need no join).
 
 This is driver-side work on a tiny file (the reference does the same), so
 plain ``json.load`` is correct; the heavy side of the join is what Spark

@@ -4,6 +4,8 @@ right is necessary; these make sure the PLAN stays right too."""
 
 from __future__ import annotations
 
+import os
+
 from cl_tagger_batch_processing_spark.plans import inspect
 from cl_tagger_batch_processing_spark.registry import QUERIES
 
@@ -24,18 +26,19 @@ def test_q3_small_dims_broadcast(spark, sf_dir):
     assert inspect.count_operator(df, "SortMergeJoin") == 0
 
 
-def test_tag_select_broadcasts_dimension(spark, sf_dir):
+def test_tag_select_has_no_exchange(spark, sf_dir):
     df = QUERIES["tag_select"](spark, sf_dir)
     plan = inspect.executed_plan(df)
-    # selection is a projection over each image's probs: the image side is
-    # never shuffled, and the one-row tag dimension arrives as a broadcast
-    assert "Exchange hashpartitioning" not in plan
-    assert inspect.count_operator(df, "BroadcastExchange") >= 1
-    assert inspect.count_operator(df, "SortMergeJoin") == 0
+    # selection is one mapInArrow over each image's probs, with the tag
+    # dimension folded into the function: no shuffle and no broadcast
+    assert "Exchange" not in plan
+    assert "SortMergeJoin" not in plan
+    assert plan.count("MapInArrow") == 1
 
 
 def test_tag_images_plan_is_scan_kernel_project(spark, tmp_path):
-    # scan → mapInPandas → project: no shuffle, no ok/error union, no
+    # scan → coalesce → mapInArrow (decode, score and tag selection in one
+    # Python stage): no shuffle or broadcast, no ok/error union, no
     # checkpoint scan, and the Python kernel appears exactly once
     from cl_tagger_batch_processing_spark.operators.tagging import demo_tag_dim
     from cl_tagger_batch_processing_spark.pipeline import tag_images
@@ -43,11 +46,47 @@ def test_tag_images_plan_is_scan_kernel_project(spark, tmp_path):
     for i in range(4):
         (tmp_path / f"img_{i}.png").write_bytes(b"payload" * (i + 1))
     plan = inspect.executed_plan(tag_images(spark, str(tmp_path), demo_tag_dim(spark)))
-    assert "Exchange hashpartitioning" not in plan
+    assert "Exchange" not in plan  # neither a shuffle nor a BroadcastExchange
     assert "Union" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "ExistingRDD" not in plan
+
+
+def _kernel_tasks(spark, folder) -> int:
+    from cl_tagger_batch_processing_spark.operators.tagging import demo_tag_dim
+    from cl_tagger_batch_processing_spark.pipeline import tag_images
+
+    return tag_images(spark, folder, demo_tag_dim(spark)).rdd.getNumPartitions()
+
+
+def test_tiny_files_run_one_kernel_task_per_core(spark, tmp_path):
+    # The file splitter charges each file 4 MB of open cost and caps a split
+    # at maxPartitionBytes (128 MB), so 100 tiny files plan 4 partitions of
+    # at most 31 files on 2 cores; the kernel runs one task per core.
+    for i in range(100):
+        (tmp_path / f"img_{i}.png").write_bytes(b"payload" * (i + 1))
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+    try:
+        assert _kernel_tasks(spark, str(tmp_path)) == 2
+    finally:
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+
+
+def test_kernel_tasks_cover_max_partition_bytes(spark, tmp_path):
+    # The coalesce never packs more than maxPartitionBytes of listed bytes
+    # into one kernel task.
+    sizes = [40_000 + 997 * i for i in range(12)]
+    for i, n in enumerate(sizes):
+        (tmp_path / f"img_{i}.png").write_bytes(bytes(range(256)) * (n // 256 + 1))
+    listed = sum(os.path.getsize(tmp_path / f"img_{i}.png") for i in range(12))
+    max_bytes = 100_000
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(max_bytes))
+    try:
+        assert _kernel_tasks(spark, str(tmp_path)) >= -(-listed // max_bytes)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
@@ -349,7 +388,6 @@ def test_jvm_only_hot_paths(spark, sf_dir):
     assert "BatchEvalPython" not in plan, "minhash_candidates"
     assert "ArrowEvalPython" not in plan, "minhash_candidates"
     for name in [
-        "tag_select",
         "text_langid",
         "text_quality_score",
         "text_fingerprint",
@@ -1069,6 +1107,12 @@ def test_registry_wide_no_scale_killers(spark):
         # map-side-combined groupBy above it.
         "embedding_covariance",
         "embedding_pca_power_iteration",
+        # the tag selection is one NumPy function, run as a mapInArrow
+        # over each image's probs (the kernel runs it in-stage)
+        "tag_select",
+        "tag_top1_rating_quality",
+        "tag_threshold_filter",
+        "pipeline_score_tag",
     }
     bad: list[str] = []
     for name, fn in _Q.items():

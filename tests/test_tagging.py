@@ -3,6 +3,8 @@
 Pins the behaviors DuckDB-oracle checks alone would not localize: A1
 tie-break, F2 thresholds, F3 substring blacklist, F4 missing-dimension
 indices, P1 name cleanup, A2 deterministic ordering, empty-image handling.
+The selection is a NumPy function, so most cases run it directly; one test
+drives the long-form Spark adapter ``select_tags``.
 """
 
 from __future__ import annotations
@@ -14,13 +16,12 @@ from pyspark.sql import functions as F
 
 from cl_tagger_batch_processing_spark.operators import tagging
 
-
-def _dim(spark, rows):
-    return spark.createDataFrame(rows, "tag_idx int, tag_name string, category string")
+from .test_tagging_properties import select_sparse
 
 
-def _scores(spark, rows):
-    return spark.createDataFrame(rows, "image_id bigint, tag_idx int, prob double")
+def _select(rows, probs: dict[int, float]) -> str:
+    """One image's tags_text for dimension ``rows`` and sparse ``probs``."""
+    return select_sparse({i: (n, c) for i, n, c in rows}, {0: probs})[0]
 
 
 def test_sigmoid_clip_edges(spark):
@@ -35,54 +36,41 @@ def test_sigmoid_clip_edges(spark):
     assert vals[4] == pytest.approx(hi)  # clipped at +30
 
 
-def test_top1_tie_break_lowest_index(spark):
+def test_top1_tie_break_lowest_index():
     # np.argmax takes the FIRST max (appV2.py:80) → lowest tag_idx wins ties.
-    dim = _dim(spark, [(1, "r_b", "rating"), (2, "r_a", "rating"), (3, "q", "quality")])
-    scores = _scores(spark, [(1, 1, 0.9), (1, 2, 0.9), (1, 3, 0.5)])
-    out = tagging.select_tags(scores, dim).collect()
-    assert len(out) == 1
-    assert out[0]["tags_text"] == "r b, q"  # idx 1 beats idx 2 on the tie; P1 cleans '_'
+    rows = [(1, "r_b", "rating"), (2, "r_a", "rating"), (3, "q", "quality")]
+    # idx 1 beats idx 2 on the tie; P1 cleans '_'
+    assert _select(rows, {1: 0.9, 2: 0.9, 3: 0.5}) == "r b, q"
 
 
-def test_threshold_boundaries_inclusive(spark):
+def test_threshold_boundaries_inclusive():
     # prob >= threshold (appV2.py:93) — boundary values are kept.
-    dim = _dim(
-        spark,
-        [
-            (0, "r", "rating"),
-            (1, "gen_at", "general"),
-            (2, "gen_below", "general"),
-            (3, "char_at", "character"),
-            (4, "char_below", "character"),
-        ],
-    )
-    scores = _scores(
-        spark,
-        [(1, 0, 0.1), (1, 1, 0.55), (1, 2, 0.549999), (1, 3, 0.60), (1, 4, 0.599999)],
-    )
-    out = tagging.select_tags(scores, dim).collect()[0]["tags_text"]
-    assert out == "r, gen at, char at"
+    rows = [
+        (0, "r", "rating"),
+        (1, "gen_at", "general"),
+        (2, "gen_below", "general"),
+        (3, "char_at", "character"),
+        (4, "char_below", "character"),
+    ]
+    probs = {0: 0.1, 1: 0.55, 2: 0.549999, 3: 0.60, 4: 0.599999}
+    assert _select(rows, probs) == "r, gen at, char at"
 
 
-def test_meta_blacklist_is_substring_not_word(spark):
+def test_meta_blacklist_is_substring_not_word():
     # 'holiday' contains 'id' → dropped; blacklist only applies to meta
     # (appV2.py:98-99).
-    dim = _dim(
-        spark,
-        [
-            (0, "r", "rating"),
-            (1, "holiday", "meta"),
-            (2, "commentary_track", "meta"),
-            (3, "clean_meta", "meta"),
-            (4, "holiday", "general"),  # same name, non-meta → kept
-        ],
-    )
-    scores = _scores(spark, [(1, 0, 0.9), (1, 1, 0.99), (1, 2, 0.99), (1, 3, 0.99), (1, 4, 0.99)])
-    out = tagging.select_tags(scores, dim).collect()[0]["tags_text"]
-    assert out == "r, holiday, clean meta"
+    rows = [
+        (0, "r", "rating"),
+        (1, "holiday", "meta"),
+        (2, "commentary_track", "meta"),
+        (3, "clean_meta", "meta"),
+        (4, "holiday", "general"),  # same name, non-meta → kept
+    ]
+    probs = {0: 0.9, 1: 0.99, 2: 0.99, 3: 0.99, 4: 0.99}
+    assert _select(rows, probs) == "r, holiday, clean meta"
 
 
-def test_output_category_order_and_index_order(spark):
+def test_output_category_order_and_index_order():
     # rating, quality, general, meta, model, character, copyright, artist;
     # ascending tag_idx within category (appV2.py:75-101).
     rows = [
@@ -96,28 +84,34 @@ def test_output_category_order_and_index_order(spark):
         (16, "q", "quality"),
         (17, "r", "rating"),
     ]
-    dim = _dim(spark, [(i, n, c) for (i, n, c) in rows])
-    scores = _scores(spark, [(7, i, 0.99) for (i, _, _) in rows])
-    out = tagging.select_tags(scores, dim).collect()[0]["tags_text"]
-    assert out == "r, q, g1, g2, m meta, mdl, c char, cp, a art"
+    probs = {i: 0.99 for (i, _, _) in rows}
+    assert _select(rows, probs) == "r, q, g1, g2, m meta, mdl, c char, cp, a art"
 
 
-def test_missing_dim_index_ignored(spark):
+def test_missing_dim_index_ignored():
     # Indices absent from the dimension are never candidates (F4,
     # appV2.py:62-71): even a prob=1.0 unknown index contributes nothing.
-    dim = _dim(spark, [(0, "r", "rating")])
-    scores = _scores(spark, [(1, 0, 0.2), (1, 999, 1.0)])
-    out = tagging.select_tags(scores, dim).collect()
-    assert out[0]["tags_text"] == "r"
+    assert _select([(0, "r", "rating")], {0: 0.2, 999: 1.0}) == "r"
 
 
 def test_images_with_no_tags_get_empty_string(spark):
-    # The reference writes an empty sidecar for tagless images (appV2.py:101).
-    dim = _dim(spark, [(0, "g", "general")])
-    scores = _scores(spark, [(1, 0, 0.99), (2, 0, 0.01)])
-    images = spark.createDataFrame([(1,), (2,)], "image_id bigint")
-    out = {r["image_id"]: r["tags_text"] for r in tagging.select_tags(scores, dim, images=images).collect()}
-    assert out == {1: "g", 2: ""}
+    # The long-form Spark adapter: the reference writes an empty sidecar for
+    # tagless images (appV2.py:101); an image without scores, or whose only
+    # scores are NULL or outside the dimension, is such an image; a missing
+    # index in a sparse image is absent, not zero.
+    dim = spark.createDataFrame(
+        [(0, "g", "general"), (1, "r0", "rating"), (2, "r1", "rating")],
+        "tag_idx int, tag_name string, category string",
+    )
+    scores = spark.createDataFrame(
+        [(1, 0, 0.99), (2, 0, 0.01), (4, 0, None), (4, 99, 1.0), (5, 2, 0.0)],
+        "image_id bigint, tag_idx int, prob double",
+    )
+    images = spark.createDataFrame([(i,) for i in range(1, 6)], "image_id bigint")
+    out = tagging.select_tags(scores, dim, images=images).collect()
+    assert {r["image_id"]: r["tags_text"] for r in out} == {
+        1: "g", 2: "", 3: "", 4: "", 5: "r1"
+    }
 
 
 def test_flagship_runs_on_fixtures(spark, sf_dir):
