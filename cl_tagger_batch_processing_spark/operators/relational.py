@@ -40,140 +40,6 @@ def _one_plus(col: str):
     return F.lit(1).cast(_DEC_RATE) + _dec(col, _DEC_RATE)
 
 
-# --- scale-safe global ranking (r12) ----------------------------------------
-#
-# ``Window.orderBy`` with no ``partitionBy`` forces EVERY row into one task —
-# fine over bounded spines (day grids, bucket spines, top-k after LIMIT), a
-# scale defect over user/customer/value-cardinality relations (r11 verdict:
-# customer_rfm, orders_rfm_migration). ``bucketed_ntile`` below computes the
-# SAME ntile values with a bounded per-task footprint — the
-# "range-partitioned two-pass rank" made deterministic:
-#
-#   1. approx-quantile bucket boundaries of the order key (percentile_approx
-#      sketch, one map-side-combined pass), CHECKPOINTED so every consumer
-#      probes ONE pinned boundary array — boundaries affect only the
-#      partitioning, never the values (any split yields identical ranks), so
-#      sketch variation cannot ulp-split engines or reruns;
-#   2. row-local bucket id = #boundaries ≤ key (a broadcast array probe —
-#      never spark_partition_id(), whose recompute determinism a plan with
-#      two consumers of a range exchange cannot guarantee);
-#   3. per-bucket counts → cumulative offsets over the ≤RANK_BUCKETS-row
-#      bucket spine (the one remaining unpartitioned window runs over a
-#      BOUNDED relation — the MW discipline);
-#   4. per-bucket local row_number (+ broadcast offset) = global rank.
-#
-# Skew bound: buckets are equal-depth by the sketch EXCEPT ties — all rows
-# sharing one key value land in one bucket, so the max task is the largest
-# tie class (for a degenerate key distribution, salt the tie-break into the
-# bucket probe; none of the call sites needs it: their keys are per-entity
-# aggregates).
-
-RANK_BUCKETS = 32
-_RANK_PCTL_ACCURACY = 10_000
-
-
-def _bucket_boundaries(df: DataFrame, probe: str, parts: list[str]) -> DataFrame:
-    """Equal-depth bucket boundaries of ``probe`` (per ``parts`` group) as a
-    checkpointed tiny frame with one ``_bs`` array column."""
-    fr = [i / RANK_BUCKETS for i in range(1, RANK_BUCKETS)]
-    agg = F.percentile_approx(probe, fr, _RANK_PCTL_ACCURACY).alias("_bs")
-    bounds = df.groupBy(*parts).agg(agg) if parts else df.agg(agg)
-    # tiny (#groups rows); checkpointed so BOTH corpus passes below probe the
-    # same materialized boundary array (never two sketch runs)
-    return truncate_lineage(bounds)
-
-
-def _with_bucket(
-    df: DataFrame, bounds: DataFrame, probe: str, parts: list[str]
-) -> DataFrame:
-    j = (
-        df.join(F.broadcast(bounds), parts)
-        if parts
-        else df.crossJoin(F.broadcast(bounds))
-    )
-    # bucket id = #boundaries ≤ probe: row-local array probe, deterministic
-    # for any boundary array; duplicate boundaries (heavy ties) just leave
-    # some buckets empty
-    return j.withColumn(
-        "_bkt", F.size(F.filter("_bs", lambda b: b <= F.col(probe)))
-    ).drop("_bs")
-
-
-def _bucket_offsets(sizes: DataFrame, size_col: str, parts: list[str]) -> DataFrame:
-    # the ONLY unpartitioned window in the machinery: a cumulative sum over
-    # the ≤RANK_BUCKETS-row bucket spine (bounded by construction)
-    w_off = (
-        Window.partitionBy(*parts)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return sizes.select(
-        *parts,
-        "_bkt",
-        F.coalesce(F.sum(size_col).over(w_off), F.lit(0)).alias("_boff"),
-    )
-
-
-def bucketed_ntile(
-    df: DataFrame,
-    value: str,
-    tiebreak: str,
-    n: int,
-    out_col: str,
-    parts: list[str] | None = None,
-    probe: str | None = None,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """``ntile(n) OVER ([PARTITION BY parts] ORDER BY value ASC, tiebreak
-    ASC)`` from the bucketed two-pass rank plus NTile's exact arithmetic
-    (N rows into n buckets: the first N%n buckets hold N/n+1 rows, the rest
-    N/n — verified against F.ntile in tests), so values are bit-identical
-    to the single-partition window it replaces. Cost: one percentile sketch
-    pass (skipped when ``bounds`` is given) plus one bucket-local sort; no
-    task ever holds more than one bucket's rows."""
-    parts = list(parts or [])
-    probe = probe or value
-    if bounds is None:
-        bounds = _bucket_boundaries(df, probe, parts)
-    bk = _with_bucket(df, bounds, probe, parts)
-    # NOT checkpointed despite two consumers (offsets + totals): bucket
-    # counts are exact integers — order-insensitive, so two independent
-    # recomputes off the pinned bounds are value-identical, and skipping
-    # the eager checkpoint saves a blocking driver job per ntile (only the
-    # SKETCH needs pinning; its merge order is not deterministic)
-    sizes = bk.groupBy(*parts, "_bkt").agg(F.count(F.lit(1)).alias("_bsz"))
-    offs = _bucket_offsets(sizes, "_bsz", parts)
-    tots = (
-        sizes.groupBy(*parts).agg(F.sum("_bsz").cast("bigint").alias("_n"))
-        if parts
-        else sizes.agg(F.sum("_bsz").cast("bigint").alias("_n"))
-    )
-    w_loc = Window.partitionBy(*parts, "_bkt").orderBy(
-        F.asc(value), F.asc(tiebreak)
-    )
-    joined = bk.join(F.broadcast(offs), [*parts, "_bkt"])
-    joined = (
-        joined.join(F.broadcast(tots), parts)
-        if parts
-        else joined.crossJoin(F.broadcast(tots))
-    )
-    rank = F.col("_boff") + F.row_number().over(w_loc)
-    # floor over double division is exact for any N < 2^53 rows
-    q = F.floor(F.col("_n") / F.lit(n)).cast("bigint")
-    rem = (F.col("_n") % F.lit(n)).cast("bigint")
-    big = rem * (q + F.lit(1))  # rows covered by the (q+1)-sized buckets
-    ntile = F.when(
-        rank <= big, F.floor((rank - F.lit(1)) / (q + F.lit(1))) + F.lit(1)
-    ).otherwise(
-        # greatest() keeps ANSI division safe when q=0 (branch unreached:
-        # with q=0, big=N so every rank takes the WHEN arm)
-        rem + F.floor((rank - big - F.lit(1)) / F.greatest(q, F.lit(1))) + F.lit(1)
-    )
-    return joined.select(
-        *df.columns, ntile.cast("bigint").alias(out_col)
-    )
-
-
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate with 8 aggregates.
 
@@ -1328,126 +1194,6 @@ def order_lead_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation: per customer recency (days since last order),
-    frequency (order count), monetary (exact total spend), each scored
-    into ntile(4) quartiles, combined into the classic 3-digit segment.
-
-    One aggregation pass over orders, then three bucketed two-pass ntile
-    scores over the per-customer relation — scoring never re-touches fact
-    rows, and (r12, replacing three unpartitioned ntile windows = three
-    single-task global sorts over every customer) never sorts the
-    customer universe in one task: each score runs through
-    ``bucketed_ntile``'s boundary-sketch + per-bucket machinery and joins
-    back on the unique customer key. Every ordering carries the unique
-    o_custkey tie-break, so quartile assignment is deterministic (bare
-    ntile over ties is engine-dependent) and bit-identical to the window
-    form the oracle still uses. Recency anchors to the fixture's global
-    max order date, not wall clock, so results are stable."""
-    orders = load_table(spark, sf_dir, "orders")
-    # 1-row aggregate + broadcast, NOT max().over(Window.partitionBy()):
-    # an empty window spec funnels the whole fact table through one task
-    anchor = orders.agg(F.max(F.col("o_orderdate").cast("date")).alias("_anchor"))
-    per_cust = (
-        orders.crossJoin(F.broadcast(anchor))
-        .groupBy("o_custkey")
-        .agg(
-            F.datediff(
-                F.first("_anchor"), F.max(F.col("o_orderdate").cast("date"))
-            )
-            .cast("bigint")
-            .alias("recency_days"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            .cast("double")
-            .alias("monetary"),
-        )
-        # per-customer frame feeds three ntile probes (two passes each
-        # plus the boundary sketch) and the final join spine
-        .transform(truncate_lineage)
-    )
-
-    # DESC metric == ASC negated metric (exact for bigint and for the
-    # double monetary sum — negation flips the sign bit only), with the
-    # same ASC custkey tie-break as the original windows. All THREE
-    # boundary sketches ride ONE aggregate job over the checkpointed
-    # per-customer frame (three eager sketch jobs would triple the
-    # blocking driver round-trips for no information).
-    keys = {
-        "r_score": F.col("recency_days"),
-        "f_score": -F.col("frequency"),
-        "m_score": -F.col("monetary"),
-    }
-    fr = [i / RANK_BUCKETS for i in range(1, RANK_BUCKETS)]
-    all_bounds = truncate_lineage(
-        per_cust.agg(
-            *[
-                F.percentile_approx(k, fr, _RANK_PCTL_ACCURACY).alias(f"_bs_{o}")
-                for o, k in keys.items()
-            ]
-        )
-    )
-
-    def score(out: str) -> DataFrame:
-        slim = per_cust.select("o_custkey", keys[out].alias("_k"))
-        return bucketed_ntile(
-            slim,
-            "_k",
-            "o_custkey",
-            4,
-            out,
-            bounds=all_bounds.select(F.col(f"_bs_{out}").alias("_bs")),
-        ).select("o_custkey", out)
-
-    return (
-        per_cust.join(score("r_score"), "o_custkey")
-        .join(score("f_score"), "o_custkey")
-        .join(score("m_score"), "o_custkey")
-        .select(
-            "o_custkey",
-            "recency_days",
-            "frequency",
-            "monetary",
-            "r_score",
-            "f_score",
-            "m_score",
-        )
-    )
-
-
-def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type transition matrix: P(next_type | type) over each user's
-    time-ordered event stream — the Markov-chain view behind session-flow
-    and next-action analyses.
-
-    One window shuffle partitioned by user_id (high cardinality, well
-    distributed) pairs each event with its successor via lead(); the
-    transition rollup is a map-side-combinable groupBy over a tiny
-    (type × type) key space. Counts are exact integers; the probability is
-    one exact-int division — bit-identical across engines. The window
-    orders by (ts, event_id): event_id is unique, so same-timestamp events
-    can never reorder between engines."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    pairs = events.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    counts = pairs.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    w_src = Window.partitionBy("from_type")
-    return counts.select(
-        "from_type",
-        "to_type",
-        "n_transitions",
-        (
-            F.col("n_transitions").cast("double")
-            / F.sum("n_transitions").over(w_src).cast("double")
-        ).alias("probability"),
-    )
-
-
 def scd2_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type 2 build: compress each customer's
     time-ordered order-status history into validity intervals
@@ -1491,65 +1237,6 @@ def scd2_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_date").alias("valid_from"),
         F.lead("o_date").over(w).alias("valid_to"),
         F.lead("o_date").over(w).isNull().alias("is_current"),
-    )
-
-
-ZSCORE_WINDOW = 10
-
-
-ZSCORE_MIN_HISTORY = 5
-
-
-ZSCORE_SIGMAS = 2.0
-
-
-def events_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly flags: each event compared against the mean
-    and standard deviation of ITS OWN user's previous ZSCORE_WINDOW events
-    — the self-calibrating per-entity detector (rather than global
-    per-type robust stats). Events with fewer
-    than ZSCORE_MIN_HISTORY predecessors are unscored (cold-start rule).
-
-    One shuffle: both rolling sums, the count, and the ordering share the
-    (user_id; ts, event_id) window. Determinism is the subtle part: a
-    sliding-frame SUM of doubles would associate additions differently
-    across engines (Spark buffers the frame; other engines use segment
-    trees), so the fixture's 2-decimal values are summed as exact pinned
-    DECIMALs — s1 in (18,2), s2 in (22,4) — making both rolling moments
-    exact rationals; z = (n·x − s1)/√(n·s2 − s1²) then evaluates on
-    identical doubles everywhere. The variance guard (> 0) drops
-    zero-variance windows instead of dividing by zero."""
-    events = load_table(spark, sf_dir, "events")
-    v = F.col("value").cast("decimal(12,2)")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.asc("ts"), F.asc("event_id"))
-        .rowsBetween(-ZSCORE_WINDOW, -1)
-    )
-    hist = events.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.sum(v).over(w).cast("decimal(18,2)").alias("s1"),
-        F.sum(v * v).over(w).cast("decimal(22,4)").alias("s2"),
-        F.count(F.lit(1)).over(w).alias("n_window"),
-    ).where(F.col("n_window") >= ZSCORE_MIN_HISTORY)
-    n = F.col("n_window")
-    var_num = (n * F.col("s2") - F.col("s1") * F.col("s1")).cast("double")
-    z = (n * F.col("value").cast("decimal(12,2)") - F.col("s1")).cast(
-        "double"
-    ) / F.sqrt(var_num)
-    return (
-        hist.where(var_num > 0)
-        .withColumn("z", z)
-        .where(F.round(F.abs(F.col("z")), 9) > F.lit(ZSCORE_SIGMAS))
-        .select(
-            "event_id",
-            "user_id",
-            "value",
-            F.col("n_window").cast("bigint").alias("n_window"),
-            (F.round("z", 6) + F.lit(0.0)).alias("z"),
-        )
     )
 
 
@@ -1603,140 +1290,6 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_lines",
             "cum_share",
             cls.alias("abc_class"),
-        )
-    )
-
-
-TRAILING_DAYS = 30
-
-
-def customer_trailing_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 30-day revenue per customer at each order — the RANGE-frame
-    window (value-based bounds over a day ordinal), complementing
-    window_frames' ROWS frames. RANGE frames are the tie-safe form: all
-    orders sharing a day enter the frame together, so same-day ordering
-    can never change the sum — no tie-break column needed, by
-    construction.
-
-    One (o_custkey; day) window shuffle; revenue accumulates in exact
-    DECIMAL; the day ordinal is an exact integer datediff."""
-    orders = load_table(spark, sf_dir, "orders")
-    day_ord = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1990-01-01").cast("date"))
-    base = orders.select(
-        "o_orderkey",
-        "o_custkey",
-        day_ord.cast("bigint").alias("day_ord"),
-        F.col("o_totalprice").cast("decimal(14,2)").alias("price"),
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("day_ord")
-        .rangeBetween(-TRAILING_DAYS, 0)
-    )
-    return base.select(
-        "o_orderkey",
-        "o_custkey",
-        "day_ord",
-        F.sum("price").over(w).cast("double").alias("trailing_revenue"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("n_orders_window"),
-    )
-
-
-def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value curve: customers grouped by FIRST-order month,
-    cumulative revenue tracked by month-offset from that first order — the
-    revenue companion of an activity-retention triangle (retention
-    says who comes back; LTV says what coming back is worth), and the
-    query behind every "payback period" chart.
-
-    Shape: first-order month per customer is one orders aggregation; each
-    order then joins its customer's cohort (customer-keyed equi-join) and
-    rolls up to (cohort_month, month_offset) — a small matrix — where the
-    cumulative curve runs as a cohort-partitioned window over
-    months-count rows. Determinism: revenue sums in exact DECIMAL(12,2)
-    end to end (including the running cumulative — summing doubles across
-    offsets would be order-sensitive), one cast to double per output
-    column; month arithmetic is exact integers (year×12+month)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        (
-            F.year(F.col("o_orderdate")) * 12 + F.month(F.col("o_orderdate")) - 1
-        ).alias("ym"),
-        F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
-    )
-    first = orders.groupBy("o_custkey").agg(F.min("ym").alias("cohort_ym"))
-    cells = (
-        orders.join(first, "o_custkey")
-        .groupBy(
-            "cohort_ym", (F.col("ym") - F.col("cohort_ym")).alias("month_offset")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price").alias("rev"),
-        )
-    )
-    w = (
-        Window.partitionBy("cohort_ym")
-        .orderBy("month_offset")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cohort_sizes = first.groupBy("cohort_ym").agg(
-        F.count(F.lit(1)).alias("cohort_customers")
-    )
-    return (
-        cells.withColumn("cum_rev", F.sum("rev").over(w))
-        .join(cohort_sizes, "cohort_ym")
-        .select(
-            (F.col("cohort_ym") / 12).cast("int").alias("cohort_year"),
-            (F.col("cohort_ym") % 12 + 1).cast("int").alias("cohort_month"),
-            # BIGINT to match the oracle's int64 (the r13 width-audit rule:
-            # cross-engine int-width splits hash-differ under Arrow)
-            F.col("month_offset").cast("bigint").alias("month_offset"),
-            "cohort_customers",
-            "n_orders",
-            F.col("rev").cast("double").alias("revenue"),
-            F.col("cum_rev").cast("double").alias("cumulative_revenue"),
-        )
-    )
-
-
-DECAY_HALF_LIFE_DAYS = 7.0
-
-
-def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user exponentially time-decayed engagement score (half-life
-    DECAY_HALF_LIFE_DAYS): Σ value · 2^(−age_days / half_life), anchored at
-    the corpus max timestamp — the standard recency-weighted activity
-    feature (user churn scoring, freshness-weighted sampling of
-    interaction data).
-
-    Determinism: ages come from exact epoch-microsecond integers (one
-    double division per row, identical expression in the oracle); each
-    decayed term rounds to 9dp and sums in DECIMAL(28,9) — the repo's
-    order-independent float-mean pattern — with ONE final 6dp display
-    round. The anchor (max ts) rides a broadcast 1-row cross join; the
-    rollup is one map-side-combinable groupBy(user_id)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    # fixture ts can surface as TIMESTAMP_NTZ; with the session pinned to
-    # UTC the cast is wall-clock identity and epoch micros match DuckDB's
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    anchor = ev.agg(F.max(us).alias("max_us"))
-    age_days = (F.col("max_us") - us).cast("double") / F.lit(86400.0 * 1e6)
-    term = F.col("value").cast("double") * F.pow(
-        F.lit(0.5), age_days / F.lit(DECAY_HALF_LIFE_DAYS)
-    )
-    dec = F.round(term, 9).cast("decimal(28,9)")
-    return (
-        ev.crossJoin(F.broadcast(anchor))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.round(F.sum(dec).cast("double"), 6) + F.lit(0.0)
-            ).alias("decayed_engagement"),
-            F.round(F.min(age_days), 6).alias("days_since_last_event"),
         )
     )
 
@@ -1809,81 +1362,6 @@ def orders_market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.where(F.col("confidence") >= RULE_MIN_CONFIDENCE)
 
 
-def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Traffic seasonality profile: event counts and share per (day-of-week,
-    hour-of-day) cell — the 7×24 heatmap behind capacity planning and
-    anomaly baselines ("is Tuesday 3am supposed to be this busy?").
-
-    Calendar math is PURE integer epoch arithmetic (hour = epoch%86400
-    div 3600; dow = (epoch div 86400 + 4) mod 7, anchored on 1970-01-01
-    being a Thursday) — no engine calendar/locale/timezone functions, so
-    the cells are bit-identical anywhere. One map-side-combinable groupBy;
-    the share divides by a 1-row broadcast total."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    s = "(unix_micros(cast(ts as timestamp)) div 1000000)"
-    cells = ev.select(
-        F.expr(f"({s} div 86400 + 4) % 7").cast("bigint").alias("dow"),
-        F.expr(f"({s} % 86400) div 3600").cast("bigint").alias("hour"),
-    )
-    total = cells.agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        cells.groupBy("dow", "hour")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .crossJoin(F.broadcast(total))
-        .select(
-            "dow",
-            "hour",
-            "n_events",
-            (F.col("n_events").cast("double") / F.col("n_total").cast("double")).alias(
-                "share"
-            ),
-        )
-    )
-
-
-def customer_order_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase cadence per market segment: exact percentiles of the
-    per-customer inter-order gap in days — the recurrence metric behind
-    replenishment-reminder timing and churn-window definitions
-    (order_lead_times measures fulfilment latency; this measures customer
-    rhythm).
-
-    Gaps come from one customer-keyed lag window over order dates (exact
-    integer day differences); the segment rollup uses the exact
-    interpolated percentile over integers — identical arithmetic to
-    DuckDB's quantile_cont, the order_lead_times convention."""
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate")
-    gaps = (
-        orders.withColumn("prev", F.lag("o_orderdate").over(w))
-        .where(F.col("prev").isNotNull())
-        .select(
-            "o_custkey",
-            F.datediff(F.col("o_orderdate"), F.col("prev"))
-            .cast("bigint")
-            .alias("gap_days"),
-        )
-    )
-    return (
-        gaps.join(cust, "o_custkey")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            F.min("gap_days").alias("min_gap_days"),
-            F.max("gap_days").alias("max_gap_days"),
-            (F.sum("gap_days").cast("double") / F.count(F.lit(1))).alias(
-                "avg_gap_days"
-            ),
-            F.expr("percentile(gap_days, 0.5)").alias("p50_gap_days"),
-            F.expr("percentile(gap_days, 0.9)").alias("p90_gap_days"),
-        )
-    )
-
-
 def brand_price_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand OLS of extended price on quantity — the price-curve fit
     behind "does this brand price linearly in volume?" (slope = marginal
@@ -1947,80 +1425,6 @@ def brand_price_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "r2"
             ),
         )
-    )
-
-
-def _daily_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(day, daily_count) per UTC epoch day — the shared spine for the
-    daily time-series operators (EWMA baseline, CUSUM drift). Pure integer
-    epoch arithmetic, one map-side-combinable groupBy."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-            .cast("bigint")
-            .alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("daily_count"))
-    )
-
-
-# Normalized-EWMA window length and the power-of-two decay exponent cap.
-# 2^EWMA_SHIFT is the weight of the current day; each older day halves.
-# Mirrored literally in the DuckDB oracle (oracles.py) — sync-pinned.
-EWMA_WINDOW_DAYS = 30
-
-
-EWMA_SHIFT = EWMA_WINDOW_DAYS - 1
-
-
-def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially-weighted daily event volume (half-life = 1 day,
-    normalized weights, 30-day truncated window) — the smoothed traffic
-    baseline anomaly alerts compare against. pandas' ewm(adjust=True)
-    semantics, truncated at 30 lags where the dropped tail weight is
-    < 2⁻³⁰ of the total.
-
-    Determinism: weights are exact powers of two (2^(29−lag)), so the
-    weighted numerator and the weight denominator are EXACT BIGINT sums —
-    order-independent — and the smoothed value is one double division at
-    the end. No float accumulation anywhere.
-
-    Decay is by CALENDAR day (each source day contributes to the 30
-    calendar days after it), so a zero-event gap day correctly costs a
-    halving — decaying by observed-row index would treat days across a
-    gap as consecutive. The weight denominator sums only the days that
-    exist, which is exactly pandas' adjust=True normalization over the
-    available observations.
-
-    Scale: daily counts are one map-side-combinable groupBy; the window
-    is expressed as explode(sequence) +
-    re-aggregate — an equi groupBy, no range join, no per-row window
-    state, no ordering spine at all."""
-    daily = _daily_event_counts(spark, sf_dir).withColumnRenamed(
-        "daily_count", "cnt"
-    )
-    weight = F.expr(f"shiftleft(cast(1 as bigint), {EWMA_SHIFT} - lag)")
-    contrib = daily.select(
-        "day",
-        "cnt",
-        F.explode(F.sequence(F.lit(0), F.lit(EWMA_SHIFT))).alias("lag"),
-    ).select(
-        (F.col("day") + F.col("lag")).alias("target_day"),
-        (F.col("cnt") * weight).alias("wcnt"),
-        weight.alias("w"),
-    )
-    smoothed = contrib.groupBy("target_day").agg(
-        F.sum("wcnt").alias("_num"), F.sum("w").alias("_den")
-    )
-    return daily.join(
-        smoothed, daily.day == smoothed.target_day
-    ).select(
-        "day",
-        "cnt",
-        (F.col("_num").cast("double") / F.col("_den").cast("double")).alias("ewma"),
     )
 
 
@@ -2118,170 +1522,6 @@ def approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_exact").cast("double"),
             6,
         ).alias("rel_error"),
-    )
-
-
-def orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical additive seasonal decomposition of monthly order revenue
-    (trend = centered 2×12 moving average, seasonal = month-of-year mean
-    of the detrended series, residual = the rest) — the standard
-    pre-forecasting diagnostic for business time series.
-
-    Exactness: monthly revenue is a DECIMAL sum; the 2×12 MA numerator is
-    2·(13-term window sum) − the two endpoint terms — integer-weighted
-    DECIMAL arithmetic, exact in any order — and stays SCALED BY 24 until
-    the final division, so detrending (r·24 − num) and the month-of-year
-    means (exact-decimal sums / integer counts) never touch a float until
-    the one division per output column. Trend/seasonal/residual are
-    emitted only where the full ±6 window exists (the standard
-    edge-NaN-free convention).
-
-    Scale: the monthly spine is calendar-bounded, so the unpartitioned
-    windows are constant-size frames at any data volume; everything
-    upstream is one map-side-combinable groupBy(month)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = (
-        orders.select(
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
-            .cast("bigint")
-            .alias("ym"),
-            F.month("o_orderdate").cast("bigint").alias("month_of_year"),
-            _dec("o_totalprice").alias("p"),
-        )
-        .groupBy("ym", "month_of_year")
-        .agg(F.sum("p").alias("rev"))
-    )
-    wfull = Window.orderBy("ym").rowsBetween(-6, 6)
-    with_ma = monthly.withColumn("win_sum", F.sum("rev").over(wfull)).withColumn(
-        "win_n", F.count(F.lit(1)).over(wfull)
-    )
-    wlag = Window.orderBy("ym")
-    num24 = (
-        F.lit(2) * F.col("win_sum")
-        - F.lag("rev", 6).over(wlag)
-        - F.lead("rev", 6).over(wlag)
-    )
-    trended = (
-        with_ma.withColumn("num24", num24)
-        .where(F.col("win_n") == F.lit(13))
-        .withColumn("detr24", F.col("rev") * F.lit(24) - F.col("num24"))
-    )
-    seas = trended.groupBy("month_of_year").agg(
-        F.sum("detr24").alias("s_sum"), F.count(F.lit(1)).alias("s_n")
-    )
-    raw_seasonal = F.col("s_sum").cast("double") / (
-        F.col("s_n").cast("double") * 24.0
-    )
-    # classical decomposition CENTERS the seasonal indices (they must sum
-    # to ~0 so trend keeps the level): subtract the mean of the month
-    # means. The 12-term mean uses the round-to-9dp → DECIMAL(28,9) exact
-    # sum (order-independent), the repo's float-mean convention.
-    grand = seas.agg(
-        (
-            F.sum(F.round(raw_seasonal, 9).cast("decimal(28,9)")).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("seasonal_mean")
-    )
-    seas_centered = seas.crossJoin(F.broadcast(grand)).select(
-        "month_of_year",
-        (raw_seasonal - F.col("seasonal_mean")).alias("seasonal"),
-    )
-    joined = trended.join(F.broadcast(seas_centered), "month_of_year")
-    rev_d = F.col("rev").cast("double")
-    trend_d = F.col("num24").cast("double") / 24.0
-    return joined.select(
-        "ym",
-        "month_of_year",
-        rev_d.alias("revenue"),
-        trend_d.alias("trend"),
-        F.col("seasonal"),
-        (rev_d - trend_d - F.col("seasonal")).alias("residual"),
-    )
-
-
-# Bot-detection thresholds (events/hour peak, max distinct types, minimum
-# volume; a user tripping >= 2 of 3 flags is marked). Oracle-mirrored.
-BOT_PEAK_PER_HOUR = 20
-
-
-BOT_MAX_TYPES = 2
-
-
-BOT_MIN_EVENTS = 50
-
-
-BOT_MIN_FLAGS = 2
-
-
-def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user bot/abuse heuristics — the traffic-hygiene gate a
-    training-data pipeline runs before user-derived text enters a corpus
-    (scripted clients poison engagement signals and duplicate content).
-    Three integer-exact signals per user: peak events in any single hour
-    (burstiness), distinct event types (behavioral diversity), and total
-    volume; >= BOT_MIN_FLAGS tripped flags marks the user.
-
-    Two map-side-combinable aggregations (user×hour, then user) — no
-    windows, no floats except the final mean-gap diagnostic (one exact
-    integer ratio divided once). Hour bucketing is pure epoch integer
-    arithmetic, bit-identical anywhere."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id",
-        "event_type",
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-        .cast("bigint")
-        .alias("epoch_s"),
-    )
-    hourly = (
-        base.withColumn("hour_bucket", F.expr("epoch_s div 3600"))
-        .groupBy("user_id", "hour_bucket")
-        .agg(F.count(F.lit(1)).alias("n_in_hour"))
-        .groupBy("user_id")
-        .agg(F.max("n_in_hour").alias("peak_per_hour"))
-    )
-    per_user = base.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("event_type").alias("n_types"),
-        F.min("epoch_s").alias("first_s"),
-        F.max("epoch_s").alias("last_s"),
-    )
-    return bot_verdict(per_user.join(hourly, "user_id"))
-
-
-def bot_verdict(j: DataFrame) -> DataFrame:
-    """Final flag/verdict projection over the per-user stats frame
-    (user_id, n_events, n_types, first_s, last_s, peak_per_hour).
-
-    Factored out so the is_bot TRUE path — data-unreachable on the organic
-    fixture, where only the volume flag can ever fire (max hourly peak 4,
-    min type diversity 5 at every scale) — is pinned by a
-    synthetic-pathology pytest THROUGH this exact production expression
-    (the r9 vacuity-audit rule: an inline re-implementation pins
-    nothing)."""
-    flags = (
-        F.when(F.col("peak_per_hour") >= F.lit(BOT_PEAK_PER_HOUR), F.lit(1)).otherwise(F.lit(0))
-        + F.when(F.col("n_types") <= F.lit(BOT_MAX_TYPES), F.lit(1)).otherwise(F.lit(0))
-        + F.when(F.col("n_events") >= F.lit(BOT_MIN_EVENTS), F.lit(1)).otherwise(F.lit(0))
-    )
-    mean_gap = F.when(
-        F.col("n_events") > F.lit(1),
-        (F.col("last_s") - F.col("first_s")).cast("double")
-        / (F.col("n_events") - F.lit(1)).cast("double"),
-    ).otherwise(F.lit(0.0))
-    return j.select(
-        "user_id",
-        "n_events",
-        "n_types",
-        "peak_per_hour",
-        mean_gap.alias("mean_gap_seconds"),
-        flags.cast("bigint").alias("bot_flags"),
-        F.when(flags >= F.lit(BOT_MIN_FLAGS), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("is_bot"),
     )
 
 
@@ -2398,199 +1638,6 @@ def er_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "name_a",
         "name_b",
         "lev_dist",
-    )
-
-
-def orders_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time open-order backlog — the interval-stabbing /
-    as-of-inventory pattern: an order opens at o_orderdate and closes
-    after its LAST lineitem ships; the backlog at any day is (openings so
-    far) − (closings so far). Computed as the classic +1/−1 event-delta
-    union with an exact integer running sum over the day spine — no
-    per-day interval join, no point-in-time snapshot explosion (the
-    technique that turns "how many open at time t, for all t" from O(n·t)
-    into one sort).
-
-    All counts and running sums are exact BIGINTs; the day spine is
-    calendar-bounded (constant-size window at any data volume). Orders
-    with no lineitems never close (the synthetic fixture has a small
-    tail of these, unlike strict TPC-H), so the series legitimately ends
-    at a positive standing backlog."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    closes = li.groupBy("l_orderkey").agg(
-        F.max(F.to_date("l_shipdate")).alias("close_date")
-    )
-    opens = orders.select(
-        F.to_date("o_orderdate").alias("day"), F.lit(1).cast("bigint").alias("opened"),
-        F.lit(0).cast("bigint").alias("closed"),
-    )
-    closed = closes.select(
-        F.col("close_date").alias("day"), F.lit(0).cast("bigint").alias("opened"),
-        F.lit(1).cast("bigint").alias("closed"),
-    )
-    deltas = (
-        opens.unionByName(closed)
-        .groupBy("day")
-        .agg(F.sum("opened").alias("n_opened"), F.sum("closed").alias("n_closed"))
-    )
-    cum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return deltas.select(
-        "day",
-        "n_opened",
-        "n_closed",
-        (F.sum("n_opened").over(cum) - F.sum("n_closed").over(cum)).alias("backlog"),
-    )
-
-
-# Duplicate-invoice blocking: same customer, amount in the same
-# DUP_INVOICE_BAND-wide band, within DUP_INVOICE_WINDOW_DAYS. Both
-# constants mirrored in the oracle — sync-pinned.
-DUP_INVOICE_BAND = 2000
-DUP_INVOICE_WINDOW_DAYS = 120
-
-
-def orders_duplicate_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-invoice detection — the finance-ops dedup: two orders by
-    the SAME customer with amounts in the same band within
-    DUP_INVOICE_WINDOW_DAYS are double-billing candidates (exact-amount
-    equality almost never fires on real books; banded amounts are the
-    standard blocking key). The scalable shape is a (custkey, band)-keyed
-    lag window — one shuffle, NO self-join, candidate volume bounded by
-    the blocking groups themselves (the er_blocking_pairs discipline on a
-    time axis).
-
-    All comparisons exact: integer amount bands, integer day gaps.
-    Output: one row per candidate pair (each order with its in-band
-    predecessor) with the gap."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        F.floor(F.col("o_totalprice") / F.lit(DUP_INVOICE_BAND))
-        .cast("bigint")
-        .alias("amount_band"),
-    )
-    w = Window.partitionBy("o_custkey", "amount_band").orderBy(
-        "o_orderdate", "o_orderkey"
-    )
-    gap = F.datediff(
-        F.to_date("o_orderdate"), F.to_date(F.lag("o_orderdate").over(w))
-    ).cast("bigint")
-    return (
-        orders.withColumn("prev_orderkey", F.lag("o_orderkey").over(w))
-        .withColumn("gap_days", gap)
-        .where(
-            F.col("prev_orderkey").isNotNull()
-            & (F.col("gap_days") <= F.lit(DUP_INVOICE_WINDOW_DAYS))
-        )
-        .select(
-            "o_custkey",
-            F.col("prev_orderkey").alias("orderkey_a"),
-            F.col("o_orderkey").alias("orderkey_b"),
-            "amount_band",
-            "gap_days",
-        )
-    )
-
-
-# Forecast-backtest geometry: seasonal lag and the power-of-two EWMA
-# window. Oracle-mirrored.
-FC_SEASON_LAG = 12
-FC_EWMA_LAGS = 6
-
-
-def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-step-ahead forecast backtest on monthly revenue — the model
-    bake-off every demand-planning pipeline runs BEFORE trusting a
-    forecaster: naive (last month), seasonal-naive (12 months ago), and a
-    truncated EWMA (halving weights over the trailing 6 months), each
-    scored on months where all three are defined. Output: per method,
-    MAE / MAPE / RMSE over the common evaluation window.
-
-    Exactness: monthly revenue is a DECIMAL sum; every forecast is
-    CALENDAR-true — naive/seasonal come from equi-joins on ym−1 / ym−12
-    and the EWMA from power-of-two-weighted contributions keyed by
-    target month (the calendar trick: lagging by
-    observed ROW index would treat months across a revenue gap as
-    consecutive), gated on all FC_EWMA_LAGS calendar months existing;
-    error aggregation rounds each per-month term at 9dp into
-    DECIMAL(38,9) (order-independent float-mean convention; 38 digits
-    because squared monetary errors pass 1e19 at large scale factors —
-    DECIMAL(28,9) would silently NULL-overflow on Spark and raise on
-    DuckDB); RMSE takes one sqrt at the end. The month spine is
-    calendar-bounded — constant-size frames at any data volume."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = (
-        orders.select(
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
-            .cast("bigint")
-            .alias("ym"),
-            _dec("o_totalprice").alias("p"),
-        )
-        .groupBy("ym")
-        .agg(F.sum("p").alias("rev"))
-    )
-    # EWMA contributions: month ym reaches target ym+lg with weight
-    # 2^(FC_EWMA_LAGS − lg) — exact DECIMAL×int terms, order-independent
-    # sum; a target is defined only when ALL lags exist on the calendar
-    lag_spine = spark.range(1, FC_EWMA_LAGS + 1).select(F.col("id").alias("lg"))
-    wt = F.expr(f"shiftleft(1L, cast({FC_EWMA_LAGS} - lg as int))")
-    ew = (
-        monthly.crossJoin(F.broadcast(lag_spine))
-        .select((F.col("ym") + F.col("lg")).alias("ym"), (F.col("rev") * wt).alias("wrev"))
-        .groupBy("ym")
-        .agg(F.sum("wrev").alias("ewma_num"), F.count(F.lit(1)).alias("n_lags"))
-        .where(F.col("n_lags") == FC_EWMA_LAGS)
-    )
-    ewma_den = float((1 << FC_EWMA_LAGS) - 1)
-    nv = monthly.select((F.col("ym") + 1).alias("ym"), F.col("rev").alias("rev_m1"))
-    sn = monthly.select(
-        (F.col("ym") + FC_SEASON_LAG).alias("ym"), F.col("rev").alias("rev_m12")
-    )
-    fc = (
-        monthly.join(nv, "ym")
-        .join(sn, "ym")
-        .join(ew, "ym")
-        .select(
-            "ym",
-            F.col("rev").cast("double").alias("actual"),
-            F.col("rev_m1").cast("double").alias("naive"),
-            F.col("rev_m12").cast("double").alias("seasonal_naive"),
-            (F.col("ewma_num").cast("double") / F.lit(ewma_den)).alias("ewma"),
-        )
-    )
-    methods = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(m).alias("method"), F.col(m).alias("forecast"))
-                for m in ("naive", "seasonal_naive", "ewma")
-            ]
-        )
-    ).alias("mf")
-    long = fc.select("ym", "actual", methods).select(
-        F.col("mf.method").alias("method"),
-        "actual",
-        F.col("mf.forecast").alias("forecast"),
-    )
-    err = F.abs(F.col("actual") - F.col("forecast"))
-    d9 = lambda c: F.round(c, 9).cast("decimal(38,9)")
-    agg = long.groupBy("method").agg(
-        F.count(F.lit(1)).alias("n_months"),
-        F.sum(d9(err)).alias("_sae"),
-        F.sum(d9(err / F.col("actual"))).alias("_sape"),
-        F.sum(d9(err * err)).alias("_sse"),
-    )
-    n = F.col("n_months").cast("double")
-    return agg.select(
-        "method",
-        "n_months",
-        F.round(F.col("_sae").cast("double") / n, 6).alias("mae"),
-        F.round(F.col("_sape").cast("double") / n, 6).alias("mape"),
-        F.round(F.sqrt(F.col("_sse").cast("double") / n), 6).alias("rmse"),
     )
 
 
@@ -2920,120 +1967,6 @@ def privacy_dp_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_user_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete-time churn hazard over user lifetimes — survival analysis
-    in the one form that is exactly engine-portable: the hazard at
-    day-offset k is (users whose OBSERVED lifetime ended at k) / (users
-    still at risk at k), a per-row ratio of exact integers — no
-    cumulative product, no exp/log chain, so every row is one division
-    (the Kaplan-Meier curve is its cumulative complement and is better
-    left to the consumer). Lifetime = last minus first active epoch-day
-    per user; the fixture window is bounded, so the final offset is
-    right-censored by construction (documented, same on both engines).
-
-    Scale: one map-side-combinable (user → min/max day) aggregate over
-    the corpus, then a ≤#distinct-lifetime-row rollup with a cumulative
-    window for the at-risk denominator. Output: day_offset, n_ended,
-    n_at_risk, hazard."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events")
-    day = (
-        F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-        .cast("bigint")
-        .alias("day")
-    )
-    life = (
-        ev.select("user_id", day)
-        .groupBy("user_id")
-        .agg((F.max("day") - F.min("day")).alias("lifetime"))
-    )
-    # materialized: the endings histogram feeds the user total AND the
-    # at-risk window (the multi-consumer convention)
-    ended = life.groupBy(F.col("lifetime").alias("day_offset")).agg(
-        F.count(F.lit(1)).alias("n_ended")
-    ).transform(truncate_lineage)
-    # at risk at offset k = users whose lifetime >= k — a suffix sum, i.e.
-    # total minus the cumulative endings strictly before k
-    w = (
-        Window.orderBy("day_offset")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    tot = ended.agg(F.sum("n_ended").alias("n_users"))
-    return (
-        ended.crossJoin(F.broadcast(tot))
-        .select(
-            "day_offset",
-            "n_ended",
-            (
-                F.col("n_users")
-                - F.coalesce(F.sum("n_ended").over(w), F.lit(0))
-            ).alias("n_at_risk"),
-        )
-        .select(
-            "day_offset",
-            "n_ended",
-            "n_at_risk",
-            (F.col("n_ended").cast("double") / F.col("n_at_risk").cast("double")).alias(
-                "hazard"
-            ),
-        )
-    )
-
-
-def events_burstiness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-arrival burstiness per event type — Goh & Barabási's
-    B = (σ−μ)/(σ+μ) over the per-user inter-event gaps: B → −1 for
-    clockwork traffic, ≈0 for Poisson, → +1 for bursty sessions — the
-    one-number answer to "is this event stream human-bursty or
-    bot-regular?" (events_bot_detection thresholds per-hour peaks; this
-    characterizes the arrival PROCESS itself).
-
-    Gaps are exact integer microseconds from one (user, type)-keyed lag
-    window; σ/μ come from exact DECIMAL(38,0)/HUGEINT sufficient sums
-    (gap² summed at 100 TB passes int64)
-    with the subtraction/sqrt/divide tree in double, identical on both
-    engines. Degenerate types (fewer than two gaps or zero σ+μ) yield
-    NULL. Output: event_type, n_gaps, mean_gap_us, burstiness."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    # gap multiset is tie-safe: equal timestamps sort in any order without
-    # changing the sorted-value differences, so no extra tie-break column
-    gaps = (
-        ev.withColumn("prev", F.lag("us").over(Window.partitionBy(
-            "user_id", "event_type").orderBy("us")))
-        .where(F.col("prev").isNotNull())
-        .select(
-            "event_type",
-            (F.col("us") - F.col("prev")).cast("decimal(19,0)").alias("g"),
-        )
-    )
-    s = gaps.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("g").alias("sg"),
-        F.sum(F.col("g") * F.col("g")).alias("sgg"),
-    )
-    nd = F.col("n").cast("double")
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    mean = d("sg") / nd
-    var = (nd * d("sgg") - d("sg") * d("sg")) / (nd * nd)
-    sigma = F.sqrt(var)
-    return s.select(
-        "event_type",
-        F.col("n").alias("n_gaps"),
-        mean.alias("mean_gap_us"),
-        F.when(
-            (F.col("n") > 1) & (sigma + mean > 0),
-            (sigma - mean) / (sigma + mean),
-        )
-        .otherwise(F.lit(None).cast("double"))
-        .alias("burstiness"),
-    )
-
-
 def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end: blocking + match scoring
     (``er_blocking_pairs``) → undirected match edges → connected components
@@ -3142,139 +2075,6 @@ def parts_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("min_before").isNull() | (F.col("p_size") < F.col("min_before")))
         )
         .select("p_partkey", "p_name", "p_retailprice", "p_size")
-    )
-
-
-def orders_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown of the DAILY order revenue series — the
-    peak-to-trough risk statistic (largest drop of the daily level from
-    its running max), computed exactly: daily revenue sums in
-    DECIMAL(18,2), the running-max window runs over the per-DAY aggregate
-    (days, not orders), and the trough argmax carries a (drawdown DESC,
-    day ASC) total tie-break. The peak day is the earliest day whose
-    level equals the trough's running max — an exact decimal equality,
-    joined back against the same daily frame.
-
-    The statistic runs on the daily LEVEL, not the running total: a
-    cumulative sum of nonnegative revenues is monotone, so its drawdown
-    is identically zero — the r9 registry-wide vacuity audit caught the
-    first cut measuring exactly that (always-0 output at every scale,
-    the KM/AUC vacuous-gate class)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
-    wd = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select(
-        "day",
-        F.col("rev").alias("cum"),
-    ).select("day", "cum", F.max("cum").over(wd).alias("runmax"))
-    dd = cum.select(
-        "day", "cum", "runmax", (F.col("runmax") - F.col("cum")).alias("drawdown")
-    )
-    trough = dd.orderBy(F.desc("drawdown"), F.asc("day")).limit(1)
-    peak = (
-        trough.alias("t")
-        .join(
-            dd.alias("p"),
-            (F.col("p.cum") == F.col("t.runmax")) & (F.col("p.day") <= F.col("t.day")),
-        )
-        .groupBy(
-            F.col("t.day").alias("trough_day"),
-            F.col("t.runmax").alias("peak_cum"),
-            F.col("t.cum").alias("trough_cum"),
-            F.col("t.drawdown").alias("max_drawdown"),
-        )
-        .agg(F.min("p.day").alias("peak_day"))
-    )
-    return peak.select(
-        "peak_day",
-        "trough_day",
-        F.col("peak_cum").cast("double").alias("peak_cum"),
-        F.col("trough_cum").cast("double").alias("trough_cum"),
-        F.col("max_drawdown").cast("double").alias("max_drawdown"),
-    )
-
-
-def orders_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer value-tier MIGRATION matrix: spend quartile in the first
-    half of the timeline vs the second half — who upgraded, who lapsed,
-    who appeared — the cohort-movement report behind every "customer
-    health" dashboard (and the longitudinal companion of the static
-    customer_rfm segmentation).
-
-    The timeline splits at the exact integer midpoint of the order-date
-    range (epoch-day arithmetic, floor division — engine-identical); per
-    period, customers score into ntile(4) spend quartiles with the
-    (spend DESC, custkey ASC) total tie-break customer_rfm established
-    (bare ntile over ties is engine-dependent); customers absent from a
-    period carry tier 0. The tiering (r12, replacing an ntile window
-    partitioned only by period — TWO partitions each holding every
-    customer) runs through ``bucketed_ntile`` with parts=[period]:
-    per-(period, bucket) tasks, values bit-identical to the window form
-    the oracle still uses. Spend is exact DECIMAL; the bucket probe is
-    its double shadow (monotone — ties collapsing into one bucket is
-    harmless). The migration rollup is a tiny (5 × 5)-key groupBy; the
-    within-row share is one exact-int ratio."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders")
-    rng = orders.agg(
-        F.min(F.to_date("o_orderdate")).alias("dmin"),
-        F.max(F.to_date("o_orderdate")).alias("dmax"),
-    )
-    per = (
-        orders.crossJoin(F.broadcast(rng))
-        .select(
-            "o_custkey",
-            F.col("o_totalprice").cast("decimal(14,2)").alias("price"),
-            F.when(
-                F.datediff(F.to_date("o_orderdate"), F.col("dmin"))
-                <= F.expr("datediff(dmax, dmin) div 2"),
-                F.lit(1),
-            )
-            .otherwise(F.lit(2))
-            .alias("period"),
-        )
-        .groupBy("period", "o_custkey")
-        .agg(F.sum("price").alias("spend"))
-        # feeds the boundary sketch + both bucketed-ntile passes
-        .transform(truncate_lineage)
-    )
-    slim = per.select(
-        "period",
-        "o_custkey",
-        (-F.col("spend")).alias("_negspend"),  # DESC spend == ASC −spend
-        (-F.col("spend")).cast("double").alias("_probe"),
-    )
-    tiers = bucketed_ntile(
-        slim, "_negspend", "o_custkey", 4, "tier", parts=["period"], probe="_probe"
-    ).select("period", "o_custkey", "tier")
-    p1 = tiers.where(F.col("period") == 1).select(
-        "o_custkey", F.col("tier").alias("from_tier")
-    )
-    p2 = tiers.where(F.col("period") == 2).select(
-        "o_custkey", F.col("tier").alias("to_tier")
-    )
-    mig = (
-        p1.join(p2, "o_custkey", "full_outer")
-        .select(
-            F.coalesce("from_tier", F.lit(0)).alias("from_tier"),
-            F.coalesce("to_tier", F.lit(0)).alias("to_tier"),
-        )
-        .groupBy("from_tier", "to_tier")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-    wf = Window.partitionBy("from_tier")
-    return mig.select(
-        "from_tier",
-        "to_tier",
-        F.col("n_customers").cast("bigint").alias("n_customers"),
-        F.round(
-            F.col("n_customers").cast("double")
-            / F.sum("n_customers").over(wf).cast("double"),
-            9,
-        ).alias("share_of_from_tier"),
     )
 
 
@@ -3528,246 +2328,13 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def orders_interrupted_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interrupted time-series analysis of daily revenue — the segmented-
-    regression causal readout (level shift + trend change at the
-    intervention) that completes the experimentation family beside the
-    randomized A/B readouts: when there is
-    no control group, ITS is the standard quasi-experimental design.
-
-    The intervention is the exact integer midpoint of the date range
-    (epoch-day div — engine-identical); each segment gets its own OLS of
-    revenue on day-index via exact-integer/decimal sufficient statistics
-    (revenue summed in DECIMAL(18,2) per day; x sums exact ints;
-    cross-terms on the 9dp-DECIMAL rail) with the single division in
-    double. Level change = post-intercept at the boundary minus the pre
-    trend extrapolated to it; trend change = slope difference. Windows
-    and aggregations run over the per-DAY frame only."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("rev")
-    )
-    rng = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    t = F.datediff(F.col("day"), F.col("dmin")).cast("bigint")
-    mid = F.expr("datediff(dmax, dmin) div 2")
-    seg = daily.crossJoin(F.broadcast(rng)).select(
-        t.alias("t"),
-        "rev",
-        F.when(t <= mid, F.lit("pre")).otherwise(F.lit("post")).alias("segment"),
-        mid.alias("mid"),
-    )
-    dec = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
-    s = seg.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("t").cast("decimal(38,0)")).cast("double").alias("sx"),
-        F.sum(dec(F.col("rev"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("t").cast("double") * F.col("rev"))).cast("double").alias("sxy"),
-        F.sum((F.col("t") * F.col("t")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sxx"),
-        F.min("mid").alias("mid"),
-    )
-    nd = F.col("n").cast("double")
-    vx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = F.when(vx > 0, (nd * F.col("sxy") - F.col("sx") * F.col("sy")) / vx)
-    fit = s.select(
-        "segment",
-        F.col("n").cast("bigint").alias("n_days"),
-        slope.alias("slope"),
-        ((F.col("sy") - slope * F.col("sx")) / nd).alias("intercept"),
-        F.col("mid").cast("double").alias("mid"),
-    )
-    pre = fit.where(F.col("segment") == "pre").select(
-        F.col("n_days").alias("n_pre"),
-        F.col("slope").alias("pre_slope"),
-        F.col("intercept").alias("pre_intercept"),
-        "mid",
-    )
-    post = fit.where(F.col("segment") == "post").select(
-        F.col("n_days").alias("n_post"),
-        F.col("slope").alias("post_slope"),
-        F.col("intercept").alias("post_intercept"),
-    )
-    bdry = F.col("mid") + F.lit(1.0)  # first post day
-    return pre.crossJoin(F.broadcast(post)).select(
-        "n_pre",
-        "n_post",
-        F.round("pre_slope", 6).alias("pre_slope"),
-        F.round("post_slope", 6).alias("post_slope"),
-        F.round(F.col("post_slope") - F.col("pre_slope"), 6).alias("trend_change"),
-        F.round(
-            (F.col("post_intercept") + F.col("post_slope") * bdry)
-            - (F.col("pre_intercept") + F.col("pre_slope") * bdry),
-            6,
-        ).alias("level_change"),
-    )
-
-
 # The two event types the permutation test compares, sync-pinned to the
 # oracle literals.
 KS_TYPE_A = "view"
 KS_TYPE_B = "click"
 
 
-# --- r9 additions: Benford QA and the permutation test ---------------------
-
-# Benford: chi-square critical value for df=8 at α=0.05.
-BENFORD_CHI2_CRIT_05 = 15.507
-
-
-# Winsorized stats: lower/upper quantile positions (5% / 95%).
-WINSOR_LO_NUM, WINSOR_HI_NUM, WINSOR_DEN = 5, 95, 100
-
-
-def orders_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit of order totals — the classic
-    fabricated-data / pipeline-corruption screen for financial-shaped
-    columns: natural multiplicative amounts follow P(d) = log10(1 + 1/d),
-    and a chi-square gap flags synthetic or truncated sources.
-
-    The leading significant digit comes from the STRING of the exact
-    cents decimal (first [1-9] match — no log10-of-double boundary games);
-    expected counts evaluate ln(1+1/d)/ln(10) on both engines (in-container
-    ln parity is verified); each digit's chi-square contribution rounds to
-    9dp and the total sums in DECIMAL(28,9) (the float-sum rail). A
-    digits-1..9 spine left-joins the observed counts so zero-count digits
-    still report. One groupBy over the scan + a 9-row tail."""
-    orders = load_table(spark, sf_dir, "orders")
-    digit_str = F.regexp_extract(
-        F.col("o_totalprice").cast("decimal(12,2)").cast("string"), "[1-9]", 0
-    )
-    # Guarded cast mirrors the oracle's TRY_CAST: under ANSI mode a plain
-    # cast of the '' regexp_extract miss (e.g. a 0.00 total) would raise
-    # NumberFormatException where DuckDB yields NULL (r9 ADVICE).
-    digit = F.when(digit_str != F.lit(""), digit_str.cast("bigint"))
-    obs = (
-        orders.select(digit.alias("digit"))
-        .where(F.col("digit").isNotNull())
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
-    )
-    spine = spark.range(1, 10).select(F.col("id").alias("digit"))
-    # n_total counts only rows with a leading significant digit, so a
-    # zero-amount row can neither crash the cast nor inflate chi2.
-    tot = obs.agg(
-        F.coalesce(F.sum("n_obs"), F.lit(0)).cast("bigint").alias("n_total")
-    )
-    d = F.col("digit").cast("double")
-    p = F.log(F.lit(1.0) + F.lit(1.0) / d) / F.log(F.lit(10.0))
-    exp_n = F.col("n_total").cast("double") * p
-    n_obs = F.coalesce(F.col("n_obs"), F.lit(0)).cast("bigint")
-    # n_total = 0 (no order has a leading significant digit) makes every
-    # term 0.0/0.0 — Spark Divide yields NULL where DuckDB float division
-    # yields NaN, which then fails the DECIMAL cast (r10 ADVICE). Guard the
-    # degenerate path to NULL terms on BOTH engines; chi2 and the reject
-    # flag follow as NULL.
-    contrib = F.when(
-        F.col("n_total") > 0,
-        F.round(
-            (n_obs.cast("double") - exp_n) * (n_obs.cast("double") - exp_n) / exp_n,
-            9,
-        ),
-    )
-    per_digit = (
-        spine.join(obs, "digit", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "digit",
-            n_obs.alias("n_obs"),
-            F.round(exp_n, 6).alias("n_expected"),
-            contrib.cast("decimal(28,9)").alias("chi2_term"),
-        )
-    )
-    chi2 = per_digit.agg(
-        F.round(F.sum("chi2_term").cast("double"), 6).alias("chi2")
-    )
-    return (
-        per_digit.crossJoin(F.broadcast(chi2))
-        .select(
-            "digit",
-            "n_obs",
-            "n_expected",
-            F.round(F.col("chi2_term").cast("double"), 6).alias("chi2_term"),
-            "chi2",
-            (F.col("chi2") > F.lit(BENFORD_CHI2_CRIT_05)).alias("reject_benford_05"),
-        )
-    )
-
-
-def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-event-type location stats: exact 5%/95% winsorization
-    bounds (k-th order statistic, k = floor(p·(n−1)) + 1 — a VALUE from
-    the sample, no interpolation), the winsorized mean (values clamped to
-    the bounds) and the trimmed mean (only values AT OR INSIDE the bounds
-    kept — inclusive on both ends, matching the oracle's BETWEEN) — the
-    outlier-resistant companions to the MAD anomaly screen, standard for
-    reward/quality columns with heavy tails.
-
-    Everything is exact integers until the final division: cents values,
-    rank positions, clamped sums. Value-based trimming (x between the
-    bound VALUES, not rank-sliced) keeps tie handling engine-identical.
-
-    Scale shape (the KS-test discipline): row-level data collapses to the
-    per-(type, value) aggregate FIRST, so the ordered window runs over
-    DISTINCT cents per type (bounded by the value domain, not the corpus)
-    and the k-th order statistic is "min v with cumulative count ≥ k";
-    the winsorized/trimmed sums then ride the same tiny aggregate —
-    never a single-task rank window over raw rows. Floor division stays
-    in integer space on both engines (Spark `div` ≡ DuckDB `//` for
-    non-negative ints; a double `/`+CAST would truncate in Spark but
-    banker's-round in DuckDB)."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    per_v = (
-        ev.select(F.col("event_type"), cents.alias("v"))
-        .groupBy("event_type", "v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = per_v.withColumn("cum", F.sum("cnt").over(wc))
-    tot = per_v.groupBy("event_type").agg(F.sum("cnt").alias("n"))
-    withn = cum.join(F.broadcast(tot), "event_type")
-    k_lo = F.expr(f"(({WINSOR_LO_NUM} * (n - 1)) div {WINSOR_DEN}) + 1")
-    k_hi = F.expr(f"(({WINSOR_HI_NUM} * (n - 1)) div {WINSOR_DEN}) + 1")
-    bounds = withn.groupBy("event_type").agg(
-        F.min(F.when(F.col("cum") >= k_lo, F.col("v"))).alias("q_lo"),
-        F.min(F.when(F.col("cum") >= k_hi, F.col("v"))).alias("q_hi"),
-    )
-    joined = per_v.join(F.broadcast(bounds), "event_type")
-    clamped = F.greatest(F.least(F.col("v"), F.col("q_hi")), F.col("q_lo"))
-    inside = (F.col("v") >= F.col("q_lo")) & (F.col("v") <= F.col("q_hi"))
-    # cnt·v widened to DECIMAL(38,0): per-value count × cents overflows
-    # BIGINT at web-scale row counts while the oracle's HUGEINT is exact
-    d38 = lambda col: col.cast("decimal(38,0)")  # noqa: E731
-    agg = joined.groupBy("event_type").agg(
-        F.sum("cnt").alias("n"),
-        F.max("q_lo").alias("qlo"),
-        F.max("q_hi").alias("qhi"),
-        F.sum(d38(F.col("cnt")) * d38(clamped)).alias("sw"),
-        F.sum(F.when(inside, d38(F.col("cnt")) * d38(F.col("v")))).alias("st"),
-        F.sum(F.when(inside, F.col("cnt")).otherwise(F.lit(0))).alias("nt"),
-    )
-    return agg.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n"),
-        (F.col("qlo").cast("double") / F.lit(100.0)).alias("q05"),
-        (F.col("qhi").cast("double") / F.lit(100.0)).alias("q95"),
-        F.round(
-            F.col("sw").cast("double") / F.col("n").cast("double") / F.lit(100.0), 9
-        ).alias("winsorized_mean"),
-        F.round(
-            F.col("st").cast("double") / F.col("nt").cast("double") / F.lit(100.0), 9
-        ).alias("trimmed_mean"),
-        F.col("nt").cast("bigint").alias("n_trimmed"),
-    )
-
+# --- r9 addition: the permutation test -------------------------------------
 
 # Permutation (randomization) test: replicate count (the two compared
 # groups are KS_TYPE_A / KS_TYPE_B above). Sync-pinned to the oracle
@@ -3907,190 +2474,6 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def orders_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly LASPEYRES price index of shipped parts (base = the first
-    ship month): I_t = Σᵢ p_{i,t}·q_{i,0} / Σᵢ p_{i,0}·q_{i,0} × 100 over
-    the parts traded in BOTH months — the classic fixed-basket inflation
-    readout, completing the econometrics family (indices beside OLS /
-    ITS / DiD).
-
-    Unit prices are the exact rational Σextendedprice/Σquantity per
-    (month, part) (both sides exact cents integers); each basket term
-    p_{i,t}·q_{i,0} evaluates ONE double expression over the four exact
-    integers, rounds at 9dp and sums in DECIMAL(28,9) (the float-sum
-    rail — the denominator uses the SAME expression shape at t = 0, so
-    the base month reads exactly 100). One (month, part) groupBy, one
-    partkey equi-join against the single base month, one per-month
-    rollup."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    li = load_table(spark, sf_dir, "lineitem")
-    per_mp = li.groupBy(
-        F.date_trunc("month", F.col("l_shipdate")).cast("date").alias("month"),
-        "l_partkey",
-    ).agg(
-        F.sum((F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint")).alias(
-            "ext_c"
-        ),
-        F.sum((F.col("l_quantity").cast("decimal(12,2)") * 100).cast("bigint")).alias(
-            "qty_c"
-        ),
-    )
-    base_month = per_mp.agg(F.min("month").alias("bm"))
-    base = (
-        per_mp.join(F.broadcast(base_month), per_mp.month == F.col("bm"))
-        .select(
-            "l_partkey",
-            F.col("ext_c").alias("ext0"),
-            F.col("qty_c").alias("qty0"),
-        )
-    )
-    j = per_mp.join(base, "l_partkey")
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    term_t = F.round(d("ext_c") / d("qty_c") * d("qty0"), 9)
-    term_0 = F.round(d("ext0") / d("qty0") * d("qty0"), 9)
-    agg = j.groupBy("month").agg(
-        F.count(F.lit(1)).alias("n_parts_matched"),
-        F.sum(term_t.cast("decimal(28,9)")).alias("num"),
-        F.sum(term_0.cast("decimal(28,9)")).alias("den"),
-    )
-    return agg.select(
-        "month",
-        F.col("n_parts_matched").cast("bigint").alias("n_parts_matched"),
-        F.round(
-            F.col("num").cast("double") / F.col("den").cast("double") * F.lit(100.0),
-            6,
-        ).alias("laspeyres_index"),
-    )
-
-
-# Theil-Sen evaluation window: the trailing year of the series. Slopes are
-# near-unique doubles, so the median's ordered cumulative pass is a
-# single-task sort of the whole pair list — days²/2 pairs. A full-history
-# daily series (~2.4k days → 2.9M pairs) costs ~6s in that single task for
-# no statistical benefit (trend readouts are windowed in practice); 365
-# days → 66k pairs keeps the identical machinery trivial at ANY corpus
-# size. Sync-pinned to the oracle literal (test_r11_constants_in_sync).
-THEIL_SEN_TRAILING_DAYS = 365
-
-
-def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust trend of daily order revenue over the trailing
-    year — the median-of-pairwise-slopes estimator (Sen 1968) that the
-    OLS trend queries can't replace: a 29.3% breakdown point makes it the
-    standard robust drift readout for revenue/volume series with outlier
-    days.
-
-    Exact evaluation on the established rails: the series is the
-    per-day exact-cents revenue aggregate (x = epoch day, y = cents
-    BIGINT) over the THEIL_SEN_TRAILING_DAYS ending at the series max;
-    every pairwise slope is ONE double division of exact integers
-    (identical on both engines), and both medians (slopes, then
-    intercept residuals y − m·x) use the order-statistic pattern — "min
-    value with 2·cumulative count ≥ N (+1)" over the per-value aggregate,
-    never a raw-row rank window. The OLS slope from exact DECIMAL(38)
-    sufficient statistics rides along as the sensitivity reference.
-
-    Scale shape: the ONLY corpus-scale work is the per-day groupBy; the
-    pair stage is window-days² (≈66k pairs), FIXED by the calendar and
-    independent of corpus row count, so the plan is unchanged at 100 TB.
-    Pairs come from a broadcast nested-loop self-join of the tiny daily
-    aggregate; the ordered cumulative window runs over the per-slope
-    aggregate."""
-    orders = load_table(spark, sf_dir, "orders")
-    cents = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
-    all_days = (
-        orders.select(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-            ).alias("x"),
-            cents.alias("c"),
-        )
-        .groupBy("x")
-        .agg(F.sum("c").cast("bigint").alias("y"))
-        # ONE corpus pass: the max-x probe and the trailing filter both
-        # re-read this checkpoint, never the scan (r10 review rule)
-        .transform(truncate_lineage)
-    )
-    max_x = all_days.agg(F.max("x").alias("mx"))
-    daily = (
-        all_days.crossJoin(F.broadcast(max_x))
-        .where(F.col("x") > F.col("mx") - F.lit(THEIL_SEN_TRAILING_DAYS))
-        .select("x", "y")
-    )
-    a = daily.select(F.col("x").alias("x1"), F.col("y").alias("y1"))
-    b = daily.select(F.col("x").alias("x2"), F.col("y").alias("y2"))
-    slope = (F.col("y2") - F.col("y1")).cast("double") / (
-        F.col("x2") - F.col("x1")
-    ).cast("double")
-    pair_slopes = (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("x2") > F.col("x1"))
-        .select(slope.alias("slope"))
-    )
-
-    def _median_orderstat(vals: DataFrame, col: str) -> DataFrame:
-        """(lo+hi)/2 median of a double column via the per-value
-        cumulative-count order statistic; ONE row out (global aggregates
-        only — empty input yields NULLs, never zero rows)."""
-        per_v = vals.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-        wc = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-        tot = per_v.agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"))
-        cum = per_v.select(
-            col, F.sum("cnt").over(wc).alias("cum")
-        ).crossJoin(F.broadcast(tot))
-        return cum.agg(
-            F.max("n").alias("n"),
-            F.min(F.when(2 * F.col("cum") >= F.col("n"), F.col(col))).alias("lo"),
-            F.min(F.when(2 * F.col("cum") >= F.col("n") + 1, F.col(col))).alias(
-                "hi"
-            ),
-        )
-
-    m = _median_orderstat(pair_slopes, "slope").select(
-        F.col("n").alias("n_pairs"),
-        ((F.col("lo") + F.col("hi")) / F.lit(2.0)).alias("ts_slope"),
-    )
-    resid = daily.crossJoin(F.broadcast(m)).select(
-        (
-            F.col("y").cast("double")
-            - F.col("ts_slope") * F.col("x").cast("double")
-        ).alias("r")
-    )
-    icept = _median_orderstat(resid, "r").select(
-        ((F.col("lo") + F.col("hi")) / F.lit(2.0)).alias("ts_intercept")
-    )
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    ols = (
-        daily.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            F.sum(d38("x")).alias("sx"),
-            F.sum(d38("y")).alias("sy"),
-            F.sum(d38("x") * d38("x")).alias("sxx"),
-            F.sum(d38("x") * d38("y")).alias("sxy"),
-        )
-        .select(
-            "n_days",
-            (
-                (
-                    F.col("n_days") * F.col("sxy") - F.col("sx") * F.col("sy")
-                ).cast("double")
-                / (
-                    F.col("n_days") * F.col("sxx") - F.col("sx") * F.col("sx")
-                ).cast("double")
-            ).alias("ols_slope"),
-        )
-    )
-    # No display rounding: every emitted double is a SELECTION (median) or
-    # one division/product tree of exact integers — bit-identical on both
-    # engines, and rounding would only reintroduce the half-up-vs-binary
-    # boundary class (r8) on genuinely small-rational values.
-    return (
-        ols.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(icept))
-        .select("n_days", "n_pairs", "ts_slope", "ts_intercept", "ols_slope")
-    )
-
-
 # Randomized-response (Warner / RAPPOR-style local DP) parameters: flip
 # probability f = 0.5 and the deterministic md5 coin salts. Sync-pinned
 # to the oracle literals (test_r11_constants_in_sync).
@@ -4187,129 +2570,4 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
         abs_err.alias("abs_err"),
         bound.alias("err_bound"),
         (abs_err <= bound).alias("within_contract"),
-    )
-
-
-# Magnitude guard for Welch's w-scaled decimal folds: DECIMAL(38,15) holds
-# 23 integer digits; 1e21 leaves 100× headroom for the k-row SUM (k ≲ 100
-# event types). Past it the statistic is degenerate anyway (see docstring).
-WELCH_W_RAIL_LIMIT = 1.0e21
-
-
-def events_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's heteroscedastic one-way ANOVA of event value across event
-    types — the parametric companion of Kruskal-Wallis (which tests rank
-    distributions): unequal variances and group sizes are the norm in
-    telemetry, and classic ANOVA's pooled variance is wrong there.
-
-        F* = [Σ w_j(m_j − x̄_w)² / (k−1)] / B,  w_j = n_j/s²_j,
-        B = 1 + 2(k−2)/(k²−1) · Σ (1−w_j/W)²/(n_j−1),
-        df2 = (k²−1) / (3 Σ (1−w_j/W)²/(n_j−1))
-
-    Sufficient statistics per group are exact (cents sums and DECIMAL(38,0)
-    squares in ONE corpus pass; the
-    Σx² identity is safe here because raw values vary, unlike the
-    jackknife's near-identical replicates); groups with n_j < 2 or zero
-    variance drop (reported as k_dropped). The k-row folds ride the
-    decimal rails (9dp for the weighted terms, 15dp for the ≲1/n lambda
-    terms) so group association order can never ulp-split the engines;
-    the final divisions happen once in double."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_j"),
-        F.sum(cents).cast("bigint").alias("s_j"),
-        F.sum(d38(cents) * d38(cents)).alias("ss_j"),
-    )
-    nj = F.col("n_j").cast("double")
-    mean_j = F.col("s_j").cast("double") / nj
-    # variance guarded on n_j >= 2: ANSI mode raises on the singleton
-    # group's /(n-1) = /0 even for doubles; NULL var -> ok coalesces FALSE
-    # so singletons count as dropped on both engines
-    var_j = F.when(
-        F.col("n_j") >= 2,
-        (
-            F.col("ss_j").cast("double")
-            - F.col("s_j").cast("double") * F.col("s_j").cast("double") / nj
-        )
-        / (nj - 1.0),
-    )
-    stats = g.select(
-        "event_type",
-        "n_j",
-        mean_j.alias("m"),
-        var_j.alias("v"),
-        F.coalesce(var_j > 0, F.lit(False)).alias("ok"),
-    ).transform(truncate_lineage)  # k rows; feeds both rail folds
-    kept = stats.where("ok")
-    # the 15dp/DECIMAL(38,15) rail throughout: the weights w = n/s² are
-    # ~1e-6-scale when values are cents (9dp rounding would cost 4 of
-    # their significant digits — measured as a 1e-5 relative error in df2).
-    # DECIMAL(38,15) leaves only 23 integer digits, and the w-SCALED terms
-    # can exceed that in the LARGE direction at degenerate web scale (a
-    # 1e12-row group whose integer-cents variance is ~1/n makes w ~ n² ~
-    # 1e24, and w·m / w·dev² larger still) — so every w-scaled term is
-    # magnitude-guarded BEFORE the cast: past 1e21 (100× headroom for the
-    # k-row SUM, k ≲ 100 event types) we raise a named, actionable error
-    # instead of ANSI's opaque cast overflow. A group that trips it has
-    # near-zero variance relative to its size; Welch's F is degenerate
-    # (w→∞ means that group pins x̄_w and F→∞) and the right fix is
-    # upstream (drop or variance-floor the degenerate group), not a wider
-    # rail. The bounded λ terms ((1−w/W)²/(n−1) ≤ 1) need no guard.
-    d15 = lambda c: F.round(c, 15).cast("decimal(38,15)")  # noqa: E731
-    g15 = lambda c, what: d15(  # noqa: E731
-        F.when(F.abs(c) < F.lit(WELCH_W_RAIL_LIMIT), c).otherwise(
-            F.raise_error(
-                F.format_string(
-                    "events_welch_anova: %s term %e for group '%s' exceeds the "
-                    "DECIMAL(38,15) rail (|term| >= 1e21) — a near-zero-variance "
-                    "group this large makes Welch's F degenerate; drop or "
-                    "variance-floor it upstream",
-                    F.lit(what),
-                    c,
-                    F.col("event_type"),
-                )
-            )
-        )
-    )
-    w = F.col("n_j").cast("double") / F.col("v")
-    tot = kept.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(g15(w, "w")).cast("double").alias("w_sum"),
-        F.sum(g15(w * (F.col("m")), "w*m")).cast("double").alias("wm_sum"),
-    )
-    dropped = stats.agg(
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("bigint").alias("k_dropped")
-    )
-    xbar = F.col("wm_sum") / F.col("w_sum")
-    folds = kept.crossJoin(F.broadcast(tot)).agg(
-        F.max("k").alias("k"),
-        F.sum(g15(w * (F.col("m") - xbar) * (F.col("m") - xbar), "w*dev^2"))
-        .cast("double")
-        .alias("num_fold"),
-        F.sum(
-            d15(
-                (F.lit(1.0) - w / F.col("w_sum"))
-                * (F.lit(1.0) - w / F.col("w_sum"))
-                / (F.col("n_j").cast("double") - 1.0)
-            )
-        )
-        .cast("double")
-        .alias("lam_fold"),
-    )
-    kd = F.col("k").cast("double")
-    a_num = F.col("num_fold") / (kd - 1.0)
-    b_den = 1.0 + (2.0 * (kd - 2.0) / (kd * kd - 1.0)) * F.col("lam_fold")
-    f_stat = F.when((F.col("k") >= 2) & (F.col("lam_fold") >= 0), a_num / b_den)
-    df2 = F.when(
-        (F.col("k") >= 2) & (F.col("lam_fold") > 0),
-        (kd * kd - 1.0) / (3.0 * F.col("lam_fold")),
-    )
-    return folds.crossJoin(F.broadcast(dropped)).select(
-        F.col("k").alias("k_groups"),
-        "k_dropped",
-        (F.col("k") - 1).cast("bigint").alias("df1"),
-        F.round(df2, 6).alias("df2"),
-        F.round(f_stat, 9).alias("f_stat"),
     )

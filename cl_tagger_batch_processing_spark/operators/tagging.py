@@ -288,7 +288,8 @@ def demo_tag_dim(spark: SparkSession) -> DataFrame:
 
     Derived JVM-side from ``spark.range`` — a driver ``createDataFrame``
     would serialize Python rows through an RDD for every query invocation;
-    range + expressions is pure Catalyst (and constant-foldable)."""
+    range + expressions is pure Catalyst (and constant-foldable). One
+    partition: folding 62 literal rows needs one task, not one per core."""
     i = F.col("id")
     category = F.element_at(
         F.array(*[F.lit(c) for c in CATEGORIES]), (i % 8 + 1).cast("int")
@@ -298,7 +299,7 @@ def demo_tag_dim(spark: SparkSession) -> DataFrame:
         .when(i % 8 == 5, F.concat(F.lit("meta_plain_"), i))
         .otherwise(F.concat(F.lit("tag_"), i))
     )
-    return spark.range(DEMO_TAG_COUNT).select(
+    return spark.range(0, DEMO_TAG_COUNT, 1, 1).select(
         i.cast("int").alias("tag_idx"), name.alias("tag_name"), category.alias("category")
     )
 

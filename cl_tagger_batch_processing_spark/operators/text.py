@@ -1663,11 +1663,12 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Spark sequence(1, 0) yields [1, 0], not empty). Tokenize ONCE per
     # row, then slice (split() inside the HOF lambda re-evaluates per
     # position — r8 review).
+    k = BOILERPLATE_SHINGLE_K
     sh_arr = F.expr(
-        """
-        CASE WHEN size(t) >= 3 THEN
-          transform(sequence(1, size(t) - 2),
-            i -> concat_ws(' ', slice(t, i, 3)))
+        f"""
+        CASE WHEN size(t) >= {k} THEN
+          transform(sequence(1, size(t) - {k - 1}),
+            i -> concat_ws(' ', slice(t, i, {k})))
         ELSE CAST(array() AS ARRAY<STRING>) END
         """
     )

@@ -425,7 +425,6 @@ GROUP BY o_orderpriority
 
 # --- dedup ------------------------------------------------------------------
 
-
 def _shingle_ctes(k: int, max_df: int | None = None) -> str:
     """Distinct k-word shingles per doc — mirrors dedup.word_shingles,
     including the hot-shingle document-frequency cap when ``max_df`` is
@@ -2196,29 +2195,6 @@ SELECT o_orderpriority, COUNT(*) AS n_lines,
 FROM j GROUP BY o_orderpriority
 """
 
-# Same per-customer RFM and identical unique-tie-break ntile orderings.
-ORACLE_SQL["customer_rfm"] = """
-WITH a AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS anchor FROM orders),
-pc AS (
-  SELECT o_custkey,
-         CAST(a.anchor - MAX(CAST(o_orderdate AS DATE)) AS BIGINT)
-           AS recency_days,
-         COUNT(*) AS frequency,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS monetary
-  FROM orders CROSS JOIN a
-  GROUP BY o_custkey, a.anchor
-)
-SELECT o_custkey, recency_days, frequency, monetary,
-       CAST(ntile(4) OVER (ORDER BY recency_days ASC, o_custkey ASC) AS BIGINT)
-         AS r_score,
-       CAST(ntile(4) OVER (ORDER BY frequency DESC, o_custkey ASC) AS BIGINT)
-         AS f_score,
-       CAST(ntile(4) OVER (ORDER BY monetary DESC, o_custkey ASC) AS BIGINT)
-         AS m_score
-FROM pc
-"""
-
-
 # Confusion matrix over the replayed langid prediction.
 ORACLE_SQL["langid_confusion_matrix"] = """
 WITH pred AS (
@@ -2483,28 +2459,7 @@ FROM hashed GROUP BY phash HAVING COUNT(*) > 1
 """
 
 
-# Mirrors relational.events_markov_transitions: lead() over (user_id; ts,
-# event_id) then an exact-int transition rollup.
-ORACLE_SQL["events_markov_transitions"] = """
-WITH pairs AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS to_type
-  FROM events
-),
-c AS (
-  SELECT from_type, to_type, COUNT(*) AS n_transitions
-  FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT from_type, to_type, n_transitions,
-       CAST(n_transitions AS DOUBLE)
-         / CAST(SUM(n_transitions) OVER (PARTITION BY from_type) AS DOUBLE)
-         AS probability
-FROM c
-"""
-
 # --- round-5 batch-2 additions ----------------------------------------------
-
 
 # Mirrors relational.scd2_order_status: change rows via lag(), intervals via
 # lead(), both over (o_custkey; date, o_orderkey).
@@ -2898,34 +2853,6 @@ FROM d GROUP BY lang, decile
 """
 
 
-# Mirrors relational.events_rolling_zscore: pinned-DECIMAL rolling moments
-# over the previous 10 events per user, z on exact rationals, 9dp-rounded
-# flag compare, 6dp + (-0 canonicalized) output.
-ORACLE_SQL["events_rolling_zscore"] = """
-WITH h AS (
-  SELECT event_id, user_id, value,
-         CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER w AS DECIMAL(18,2)) AS s1,
-         CAST(SUM(CAST(value AS DECIMAL(12,2)) * CAST(value AS DECIMAL(12,2)))
-              OVER w AS DECIMAL(22,4)) AS s2,
-         COUNT(*) OVER w AS n_window
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING)
-),
-f AS (
-  SELECT *,
-         CAST(n_window * s2 - s1 * s1 AS DOUBLE) AS var_num,
-         CAST(n_window * CAST(value AS DECIMAL(12,2)) - s1 AS DOUBLE) AS num
-  FROM h WHERE n_window >= 5
-)
-SELECT event_id, user_id, value,
-       CAST(n_window AS BIGINT) AS n_window,
-       round(num / sqrt(var_num), 6) + 0.0 AS z
-FROM f
-WHERE var_num > 0 AND round(abs(num / sqrt(var_num)), 9) > 2.0
-"""
-
-
 # Mirrors dedup.dedup_minhash_incremental: the dedup_minhash_lsh candidate
 # machinery restricted to store(even)/incoming(odd) generations, greedy
 # single-pass rejection, per-lang admission counts.
@@ -3006,24 +2933,6 @@ SELECT l_partkey, CAST(revenue AS DOUBLE) AS revenue, n_lines, cum_share,
             WHEN cum_share <= 0.95 THEN 'B'
             ELSE 'C' END AS abc_class
 FROM c
-"""
-
-# Mirrors relational.customer_trailing_revenue: RANGE frame over an exact
-# day ordinal, exact-decimal sums (range frames are tie-safe by definition).
-ORACLE_SQL["customer_trailing_revenue"] = """
-WITH b AS (
-  SELECT o_orderkey, o_custkey,
-         CAST(datediff('day', DATE '1990-01-01', CAST(o_orderdate AS DATE))
-              AS BIGINT) AS day_ord,
-         CAST(o_totalprice AS DECIMAL(14,2)) AS price
-  FROM orders
-)
-SELECT o_orderkey, o_custkey, day_ord,
-       CAST(SUM(price) OVER w AS DOUBLE) AS trailing_revenue,
-       CAST(COUNT(*) OVER w AS BIGINT) AS n_orders_window
-FROM b
-WINDOW w AS (PARTITION BY o_custkey ORDER BY day_ord
-             RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
 """
 
 # Mirrors text.corpus_dsir_sample: md5-derived 52-bit uniform, Gumbel term
@@ -3761,39 +3670,6 @@ FROM i GROUP BY doc_id, scene_idx
 """
 
 
-# Mirrors relational.orders_cohort_ltv: integer month ordinal (y*12+m-1),
-# exact DECIMAL revenue incl. the cohort-partitioned cumulative, one
-# double cast per output.
-ORACLE_SQL["orders_cohort_ltv"] = """
-WITH o AS (
-  SELECT o_custkey,
-         CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS ym,
-         CAST(o_totalprice AS DECIMAL(12,2)) AS price
-  FROM orders
-),
-first AS (SELECT o_custkey, MIN(ym) AS cohort_ym FROM o GROUP BY o_custkey),
-cells AS (
-  SELECT cohort_ym, ym - cohort_ym AS month_offset,
-         COUNT(*) AS n_orders, SUM(price) AS rev
-  FROM o JOIN first USING (o_custkey)
-  GROUP BY cohort_ym, ym - cohort_ym
-),
-sizes AS (
-  SELECT cohort_ym, COUNT(*) AS cohort_customers FROM first GROUP BY cohort_ym
-)
-SELECT CAST(cohort_ym // 12 AS INTEGER) AS cohort_year,
-       CAST(cohort_ym % 12 + 1 AS INTEGER) AS cohort_month,
-       month_offset,
-       cohort_customers,
-       n_orders,
-       CAST(rev AS DOUBLE) AS revenue,
-       CAST(SUM(rev) OVER (PARTITION BY cohort_ym ORDER BY month_offset
-                           ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-         AS cumulative_revenue
-FROM cells JOIN sizes USING (cohort_ym)
-"""
-
-
 # --- round-7 additions ------------------------------------------------------
 
 # Mirrors graph.graph_kcore: synchronous peel rounds chained as CTEs. Extra
@@ -4106,25 +3982,6 @@ FROM top
 """
 
 
-# Mirrors relational.events_decayed_engagement: exact epoch-microsecond
-# ages, one double division + pow per row, 9dp-round -> DECIMAL(28,9)
-# order-independent sum, 6dp display round.
-ORACLE_SQL["events_decayed_engagement"] = """
-WITH mx AS (SELECT MAX(epoch_us(ts)) AS max_us FROM events),
-t AS (
-  SELECT user_id, CAST(value AS DOUBLE) AS value,
-         CAST(mx.max_us - epoch_us(ts) AS DOUBLE) / (86400.0 * 1e6) AS age_days
-  FROM events CROSS JOIN mx
-)
-SELECT user_id, COUNT(*) AS n_events,
-       round(CAST(SUM(CAST(round(value * pow(0.5, age_days / 7.0), 9)
-                           AS DECIMAL(28,9))) AS DOUBLE), 6) + 0.0
-         AS decayed_engagement,
-       round(MIN(age_days), 6) AS days_since_last_event
-FROM t GROUP BY user_id
-"""
-
-
 # Mirrors text.corpus_fertility_by_lang: integer token/char sums, two
 # single double divisions per lang row.
 ORACLE_SQL["corpus_fertility_by_lang"] = """
@@ -4286,45 +4143,6 @@ FROM top
 """
 
 
-# Mirrors relational.events_hourly_seasonality: pure integer epoch
-# arithmetic (Thursday anchor), no engine calendar functions.
-ORACLE_SQL["events_hourly_seasonality"] = """
-WITH c AS (
-  SELECT CAST(((epoch_us(ts) // 1000000) // 86400 + 4) % 7 AS BIGINT) AS dow,
-         CAST(((epoch_us(ts) // 1000000) % 86400) // 3600 AS BIGINT) AS hour
-  FROM events
-),
-tot AS (SELECT COUNT(*) AS n_total FROM c)
-SELECT dow, hour, COUNT(*) AS n_events,
-       CAST(COUNT(*) AS DOUBLE) / CAST(t.n_total AS DOUBLE) AS share
-FROM c CROSS JOIN tot t
-GROUP BY dow, hour, t.n_total
-"""
-
-
-# Mirrors relational.customer_order_gap_percentiles: gaps = diffs of each
-# customer's date-sorted order list (tie order irrelevant - equal dates
-# yield the same diff multiset); exact interpolated percentiles.
-ORACLE_SQL["customer_order_gap_percentiles"] = """
-WITH g AS (
-  SELECT o_custkey,
-         CAST(CAST(o_orderdate AS DATE)
-              - lag(CAST(o_orderdate AS DATE))
-                  OVER (PARTITION BY o_custkey ORDER BY o_orderdate)
-              AS BIGINT) AS gap_days
-  FROM orders
-),
-gg AS (SELECT o_custkey, gap_days FROM g WHERE gap_days IS NOT NULL)
-SELECT c.c_mktsegment, COUNT(*) AS n_gaps,
-       MIN(gap_days) AS min_gap_days, MAX(gap_days) AS max_gap_days,
-       CAST(SUM(gap_days) AS DOUBLE) / COUNT(*) AS avg_gap_days,
-       quantile_cont(gap_days, 0.5) AS p50_gap_days,
-       quantile_cont(gap_days, 0.9) AS p90_gap_days
-FROM gg JOIN customer c ON gg.o_custkey = c.c_custkey
-GROUP BY c.c_mktsegment
-"""
-
-
 # Mirrors relational.brand_price_regression: exact DECIMAL sufficient
 # statistics, then the IDENTICAL closed-form double expression tree
 # (n·Sxy−SxSy over n·Sxx−Sx², squared-covariance r²) — bit-identical.
@@ -4361,32 +4179,6 @@ SELECT p_brand, n_rows,
        (num * num) / (denx * deny) AS r2
 FROM d
 WHERE n_rows >= 2 AND denx <> 0 AND deny <> 0
-"""
-
-
-# Mirrors relational.events_ewma_daily: exact power-of-two weights as
-# BIGINT sums (shift constants = EWMA_SHIFT/EWMA_WINDOW_DAYS, sync-pinned),
-# one double division at the end. Day/index arithmetic is pure integer.
-ORACLE_SQL["events_ewma_daily"] = """
-WITH daily AS (
-  SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT) AS day,
-         COUNT(*) AS cnt
-  FROM events GROUP BY 1
-),
-contrib AS (
-  SELECT d.day + u.lag AS target_day,
-         d.cnt * (CAST(1 AS BIGINT) << CAST(29 - u.lag AS INTEGER)) AS wcnt,
-         CAST(1 AS BIGINT) << CAST(29 - u.lag AS INTEGER) AS w
-  FROM daily d
-  CROSS JOIN (SELECT unnest(generate_series(0, 29)) AS lag) u
-),
-sm AS (
-  SELECT target_day, SUM(wcnt) AS num, SUM(w) AS den
-  FROM contrib GROUP BY target_day
-)
-SELECT d.day, d.cnt,
-       CAST(sm.num AS DOUBLE) / CAST(sm.den AS DOUBLE) AS ewma
-FROM daily d JOIN sm ON d.day = sm.target_day
 """
 
 
@@ -4577,96 +4369,6 @@ FROM top
 """
 
 
-# Mirrors relational.orders_seasonal_decompose: DECIMAL monthly sums, 2×12
-# MA numerator kept ×24 (2·window − endpoints), exact detrending, one
-# double division per output column.
-ORACLE_SQL["orders_seasonal_decompose"] = """
-WITH monthly AS (
-  SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS ym,
-         CAST(month(o_orderdate) AS BIGINT) AS month_of_year,
-         SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
-  FROM orders GROUP BY 1, 2
-),
-ma AS (
-  SELECT ym, month_of_year, rev,
-         SUM(rev) OVER w13 AS win_sum,
-         COUNT(*) OVER w13 AS win_n,
-         lag(rev, 6) OVER (ORDER BY ym) AS rev_m6,
-         lead(rev, 6) OVER (ORDER BY ym) AS rev_p6
-  FROM monthly
-  WINDOW w13 AS (ORDER BY ym ROWS BETWEEN 6 PRECEDING AND 6 FOLLOWING)
-),
-tr AS (
-  SELECT ym, month_of_year, rev,
-         2 * win_sum - rev_m6 - rev_p6 AS num24,
-         rev * 24 - (2 * win_sum - rev_m6 - rev_p6) AS detr24
-  FROM ma WHERE win_n = 13
-),
-seas AS (
-  SELECT month_of_year, SUM(detr24) AS s_sum, COUNT(*) AS s_n
-  FROM tr GROUP BY month_of_year
-),
-grand AS (
-  SELECT CAST(SUM(CAST(round(CAST(s_sum AS DOUBLE)
-                             / (CAST(s_n AS DOUBLE) * 24.0), 9)
-                       AS DECIMAL(28,9))) AS DOUBLE)
-           / CAST(COUNT(*) AS DOUBLE) AS seasonal_mean
-  FROM seas
-),
-sc AS (
-  SELECT month_of_year,
-         CAST(s_sum AS DOUBLE) / (CAST(s_n AS DOUBLE) * 24.0)
-           - g.seasonal_mean AS seasonal
-  FROM seas CROSS JOIN grand g
-)
-SELECT t.ym, t.month_of_year,
-       CAST(t.rev AS DOUBLE) AS revenue,
-       CAST(t.num24 AS DOUBLE) / 24.0 AS trend,
-       s.seasonal AS seasonal,
-       CAST(t.rev AS DOUBLE)
-         - CAST(t.num24 AS DOUBLE) / 24.0
-         - s.seasonal AS residual
-FROM tr t JOIN sc s ON t.month_of_year = s.month_of_year
-"""
-
-
-# Mirrors relational.events_bot_detection: integer epoch hour buckets,
-# two-level aggregation, threshold constants sync-pinned (20 / 2 / 50 / 2).
-ORACLE_SQL["events_bot_detection"] = """
-WITH base AS (
-  SELECT user_id, event_type,
-         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS epoch_s
-  FROM events
-),
-hourly AS (
-  SELECT user_id, MAX(n_in_hour) AS peak_per_hour
-  FROM (SELECT user_id, epoch_s // 3600 AS hour_bucket, COUNT(*) AS n_in_hour
-        FROM base GROUP BY 1, 2)
-  GROUP BY user_id
-),
-pu AS (
-  SELECT user_id, COUNT(*) AS n_events,
-         COUNT(DISTINCT event_type) AS n_types,
-         MIN(epoch_s) AS first_s, MAX(epoch_s) AS last_s
-  FROM base GROUP BY user_id
-),
-j AS (
-  SELECT pu.*, h.peak_per_hour,
-         (CASE WHEN h.peak_per_hour >= 20 THEN 1 ELSE 0 END
-          + CASE WHEN pu.n_types <= 2 THEN 1 ELSE 0 END
-          + CASE WHEN pu.n_events >= 50 THEN 1 ELSE 0 END) AS flags
-  FROM pu JOIN hourly h ON pu.user_id = h.user_id
-)
-SELECT user_id, n_events, n_types, peak_per_hour,
-       CASE WHEN n_events > 1
-            THEN CAST(last_s - first_s AS DOUBLE) / CAST(n_events - 1 AS DOUBLE)
-            ELSE 0.0 END AS mean_gap_seconds,
-       CAST(flags AS BIGINT) AS bot_flags,
-       CAST(CASE WHEN flags >= 2 THEN 1 ELSE 0 END AS BIGINT) AS is_bot
-FROM j
-"""
-
-
 # Mirrors relational.supplier_herfindahl: ×10⁴ integral rescale, exact
 # HUGEINT (Spark: DECIMAL(38,0)) squares, one double division.
 ORACLE_SQL["supplier_herfindahl"] = """
@@ -4720,35 +4422,6 @@ JOIN blocked b
  AND a.p_partkey < b.p_partkey
 WHERE levenshtein(a.p_name, b.p_name) <= 2
 """
-
-# Mirrors relational.orders_backlog_timeseries: +1/-1 event deltas on the
-# day spine, exact BIGINT running sums.
-ORACLE_SQL["orders_backlog_timeseries"] = """
-WITH closes AS (
-  SELECT l_orderkey, MAX(CAST(l_shipdate AS DATE)) AS close_date
-  FROM lineitem GROUP BY l_orderkey
-),
-deltas AS (
-  SELECT day, CAST(SUM(opened) AS BIGINT) AS n_opened,
-         CAST(SUM(closed) AS BIGINT) AS n_closed
-  FROM (
-    SELECT CAST(o_orderdate AS DATE) AS day,
-           CAST(1 AS BIGINT) AS opened, CAST(0 AS BIGINT) AS closed
-    FROM orders
-    UNION ALL
-    SELECT close_date AS day,
-           CAST(0 AS BIGINT) AS opened, CAST(1 AS BIGINT) AS closed
-    FROM closes
-  )
-  GROUP BY day
-)
-SELECT day, n_opened, n_closed,
-       CAST(SUM(n_opened) OVER w AS BIGINT)
-         - CAST(SUM(n_closed) OVER w AS BIGINT) AS backlog
-FROM deltas
-WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
-
 
 # Mirrors graph.graph_lpa_communities: fixed synchronous supersteps with
 # (count DESC, label ASC) tie-break; AS MATERIALIZED is load-bearing
@@ -4994,29 +4667,6 @@ FROM pr{n_iter}
 
 ORACLE_SQL["graph_personalized_pagerank"] = _ppr_sql(10)
 
-# Mirrors relational.orders_duplicate_detection: (custkey, 2000-wide
-# amount band) lag window, integer day gap, 120-day threshold sync-pinned.
-ORACLE_SQL["orders_duplicate_detection"] = """
-WITH o AS (
-  SELECT o_orderkey, o_custkey, o_orderdate,
-         CAST(floor(o_totalprice / 2000) AS BIGINT) AS amount_band,
-         lag(o_orderkey) OVER w AS prev_orderkey,
-         CAST(CAST(o_orderdate AS DATE)
-              - lag(CAST(o_orderdate AS DATE)) OVER w AS BIGINT) AS gap_days
-  FROM orders
-  WINDOW w AS (PARTITION BY o_custkey, CAST(floor(o_totalprice / 2000) AS BIGINT)
-               ORDER BY o_orderdate, o_orderkey)
-)
-SELECT o_custkey,
-       prev_orderkey AS orderkey_a,
-       o_orderkey AS orderkey_b,
-       amount_band,
-       gap_days
-FROM o
-WHERE prev_orderkey IS NOT NULL AND gap_days <= 120
-"""
-
-
 # Mirrors streaming.windows.stream_hll_distinct: batch replay of the
 # windowed register max-merge + the shared HLL finalize (complete mode on
 # the bounded fixture == batch). Hour buckets via integer epoch math.
@@ -5058,61 +4708,6 @@ SELECT window_start_epoch, n_regs,
 FROM pt
 """
 
-
-# Mirrors relational.orders_forecast_backtest: DECIMAL monthly sums,
-# CALENDAR-true forecasts (naive/seasonal via ym−1 / ym−12 equi-joins,
-# EWMA via power-of-two contributions keyed by target month, gated on
-# all 6 calendar lags existing), 9dp-rounded error terms into
-# DECIMAL(38,9), one final division/sqrt per metric. Lags (1, 12,
-# 6-term EWMA, /63.0 denominator) sync-pinned.
-ORACLE_SQL["orders_forecast_backtest"] = """
-WITH monthly AS (
-  SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS ym,
-         SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
-  FROM orders GROUP BY 1
-),
-contrib AS (
-  SELECT m.ym + u.lg AS ym,
-         m.rev * (CAST(1 AS BIGINT) << CAST(6 - u.lg AS INTEGER)) AS wrev
-  FROM monthly m
-  CROSS JOIN (SELECT unnest(generate_series(1, 6)) AS lg) u
-),
-ew AS (
-  SELECT ym, SUM(wrev) AS ewma_num
-  FROM contrib GROUP BY ym
-  HAVING COUNT(*) = 6
-),
-fc AS (
-  SELECT m.ym,
-         CAST(m.rev AS DOUBLE) AS actual,
-         CAST(n.rev AS DOUBLE) AS naive,
-         CAST(s.rev AS DOUBLE) AS seasonal_naive,
-         CAST(e.ewma_num AS DOUBLE) / 63.0 AS ewma
-  FROM monthly m
-  JOIN monthly n ON n.ym = m.ym - 1
-  JOIN monthly s ON s.ym = m.ym - 12
-  JOIN ew e ON e.ym = m.ym
-),
-long AS (
-  SELECT 'naive' AS method, actual, naive AS forecast FROM fc
-  UNION ALL
-  SELECT 'seasonal_naive', actual, seasonal_naive FROM fc
-  UNION ALL
-  SELECT 'ewma', actual, ewma FROM fc
-)
-SELECT method, COUNT(*) AS n_months,
-       round(CAST(SUM(CAST(round(abs(actual - forecast), 9)
-                           AS DECIMAL(38,9))) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS mae,
-       round(CAST(SUM(CAST(round(abs(actual - forecast) / actual, 9)
-                           AS DECIMAL(38,9))) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS mape,
-       round(sqrt(CAST(SUM(CAST(round(abs(actual - forecast)
-                                      * abs(actual - forecast), 9)
-                                AS DECIMAL(38,9))) AS DOUBLE)
-                  / CAST(COUNT(*) AS DOUBLE)), 6) AS rmse
-FROM long GROUP BY method
-"""
 
 # Mirrors relational.privacy_l_diversity: same QI key as k-anonymity,
 # distinct-sensitive count on the same shuffle, l = 3 sync-pinned.
@@ -5520,35 +5115,6 @@ FROM cells CROSS JOIN tot t
 """
 
 
-# Mirrors relational.events_user_hazard_curve: per-user lifetime from
-# epoch-day min/max, endings histogram, at-risk via total minus the
-# strictly-before cumulative, hazard as one exact-integer division.
-ORACLE_SQL["events_user_hazard_curve"] = """
-WITH life AS (
-  SELECT user_id,
-         MAX(CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT))
-           - MIN(CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT))
-           AS lifetime
-  FROM events GROUP BY user_id
-),
-ended AS MATERIALIZED (
-  SELECT lifetime AS day_offset, COUNT(*) AS n_ended
-  FROM life GROUP BY 1
-),
-tot AS (SELECT CAST(SUM(n_ended) AS BIGINT) AS n_users FROM ended),
-risky AS (
-  SELECT day_offset, n_ended,
-         t.n_users - COALESCE(CAST(SUM(n_ended) OVER (ORDER BY day_offset
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              AS BIGINT), 0) AS n_at_risk
-  FROM ended CROSS JOIN tot t
-)
-SELECT day_offset, n_ended, n_at_risk,
-       CAST(n_ended AS DOUBLE) / CAST(n_at_risk AS DOUBLE) AS hazard
-FROM risky
-"""
-
-
 # Mirrors similarity.sim_knn_label_vote: the sim_topk_cosine CTE joined to
 # neighbor labels, majority vote with the (count DESC, label ASC)
 # tie-break, truth filtered to the query rows (vec_id < 5 == the top-k
@@ -5670,42 +5236,6 @@ SELECT b.k, b.n_tokens_used, b.covered_tokens, t.total_tokens,
        CAST(b.covered_tokens AS DOUBLE) / CAST(t.total_tokens AS DOUBLE)
          AS coverage
 FROM best b CROSS JOIN tot t
-"""
-
-
-# Mirrors relational.events_burstiness_by_type: per-(user, type) lag gaps
-# in exact integer microseconds, HUGEINT sufficient sums, the identical
-# double mean/sigma/B tree with the degenerate-NULL guard.
-ORACLE_SQL["events_burstiness_by_type"] = """
-WITH g AS (
-  SELECT event_type,
-         CAST(epoch_us(ts)
-              - lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
-                                        ORDER BY epoch_us(ts))
-              AS HUGEINT) AS g
-  FROM events
-),
-gg AS (SELECT event_type, g FROM g WHERE g IS NOT NULL),
-s AS (
-  SELECT event_type, COUNT(*) AS n,
-         CAST(SUM(g) AS DOUBLE) AS sg,
-         CAST(SUM(g * g) AS DOUBLE) AS sgg
-  FROM gg GROUP BY event_type
-)
-SELECT event_type, n AS n_gaps,
-       sg / CAST(n AS DOUBLE) AS mean_gap_us,
-       CASE WHEN n > 1
-             AND sqrt((CAST(n AS DOUBLE) * sgg - sg * sg)
-                      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                 + sg / CAST(n AS DOUBLE) > 0
-            THEN (sqrt((CAST(n AS DOUBLE) * sgg - sg * sg)
-                       / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                  - sg / CAST(n AS DOUBLE))
-                 / (sqrt((CAST(n AS DOUBLE) * sgg - sg * sg)
-                         / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                    + sg / CAST(n AS DOUBLE))
-            ELSE NULL END AS burstiness
-FROM s
 """
 
 
@@ -6039,83 +5569,6 @@ WHERE NOT EXISTS (
     AND (q.p_retailprice < p.p_retailprice OR q.p_size < p.p_size)
 )
 """
-
-# Max drawdown of cumulative daily revenue: exact DECIMAL(18,2) sums,
-# windows over the per-day aggregate, argmax tie-break (drawdown DESC,
-# day ASC), peak = earliest day whose cumulative equals the trough's
-# running max (exact decimal equality).
-ORACLE_SQL["orders_max_drawdown"] = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-  FROM orders GROUP BY 1
-),
-cum AS (
-  SELECT day, rev AS cum
-  FROM daily
-),
-dd AS (
-  SELECT day, cum,
-         MAX(cum) OVER (ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) AS runmax,
-         MAX(cum) OVER (ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) - cum AS drawdown
-  FROM cum
-),
-trough AS (SELECT * FROM dd ORDER BY drawdown DESC, day ASC LIMIT 1)
-SELECT (SELECT MIN(p.day) FROM dd p, trough t
-        WHERE p.cum = t.runmax AND p.day <= t.day) AS peak_day,
-       t.day AS trough_day,
-       CAST(t.runmax AS DOUBLE) AS peak_cum,
-       CAST(t.cum AS DOUBLE) AS trough_cum,
-       CAST(t.drawdown AS DOUBLE) AS max_drawdown
-FROM trough t
-"""
-
-
-# Value-tier migration: exact epoch-day midpoint split, ntile(4) with the
-# customer_rfm tie-break convention, absent period = tier 0, exact-int
-# within-row shares.
-ORACLE_SQL["orders_rfm_migration"] = """
-WITH rng AS (
-  SELECT MIN(CAST(o_orderdate AS DATE)) AS dmin,
-         MAX(CAST(o_orderdate AS DATE)) AS dmax
-  FROM orders
-),
-per AS (
-  SELECT CASE WHEN date_diff('day', r.dmin, CAST(o_orderdate AS DATE))
-                   <= date_diff('day', r.dmin, r.dmax) // 2
-              THEN 1 ELSE 2 END AS period,
-         o_custkey,
-         SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS spend
-  FROM orders CROSS JOIN rng r
-  GROUP BY 1, 2
-),
-tiers AS (
-  SELECT period, o_custkey,
-         CAST(ntile(4) OVER (PARTITION BY period
-                             ORDER BY spend DESC, o_custkey ASC)
-              AS BIGINT) AS tier
-  FROM per
-),
-mig AS (
-  SELECT COALESCE(p1.tier, 0) AS from_tier,
-         COALESCE(p2.tier, 0) AS to_tier,
-         COUNT(*) AS n_customers
-  FROM (SELECT o_custkey, tier FROM tiers WHERE period = 1) p1
-  FULL OUTER JOIN (SELECT o_custkey, tier FROM tiers WHERE period = 2) p2
-    USING (o_custkey)
-  GROUP BY 1, 2
-)
-SELECT from_tier, to_tier, CAST(n_customers AS BIGINT) AS n_customers,
-       round(CAST(n_customers AS DOUBLE)
-             / CAST(SUM(n_customers) OVER (PARTITION BY from_tier)
-                    AS DOUBLE), 9) AS share_of_from_tier
-FROM mig
-"""
-
 
 # Near-dup keep-best: the memoized cluster assignment (dedup_clusters
 # oracle reused verbatim as a CTE) joined with THE shared quality formula;
@@ -6700,58 +6153,6 @@ FROM classes
 GROUP BY w
 """
 
-# Interrupted time series: exact midpoint split, per-segment OLS on the
-# established sufficient-statistic rails, boundary-extrapolated level
-# change + slope change.
-ORACLE_SQL["orders_interrupted_timeseries"] = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-  FROM orders GROUP BY 1
-),
-rng AS (SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM daily),
-seg AS (
-  SELECT CAST(date_diff('day', r.dmin, d.day) AS BIGINT) AS t, d.rev,
-         CASE WHEN date_diff('day', r.dmin, d.day)
-                   <= date_diff('day', r.dmin, r.dmax) // 2
-              THEN 'pre' ELSE 'post' END AS segment,
-         date_diff('day', r.dmin, r.dmax) // 2 AS mid
-  FROM daily d CROSS JOIN rng r
-),
-s AS (
-  SELECT segment, COUNT(*) AS n,
-         CAST(SUM(CAST(t AS HUGEINT)) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(round(rev, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(round(CAST(t AS DOUBLE) * rev, 9) AS DECIMAL(28,9)))
-              AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(t AS HUGEINT) * CAST(t AS HUGEINT)) AS DOUBLE) AS sxx,
-         MIN(mid) AS mid
-  FROM seg GROUP BY segment
-),
-fit AS (
-  SELECT segment, CAST(n AS BIGINT) AS n_days,
-         CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx > 0 THEN
-           (CAST(n AS DOUBLE) * sxy - sx * sy)
-             / (CAST(n AS DOUBLE) * sxx - sx * sx) END AS slope,
-         (sy - (CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx > 0 THEN
-            (CAST(n AS DOUBLE) * sxy - sx * sy)
-              / (CAST(n AS DOUBLE) * sxx - sx * sx) END) * sx)
-           / CAST(n AS DOUBLE) AS intercept,
-         CAST(mid AS DOUBLE) AS mid
-  FROM s
-)
-SELECT p.n_days AS n_pre, q.n_days AS n_post,
-       round(p.slope, 6) AS pre_slope,
-       round(q.slope, 6) AS post_slope,
-       round(q.slope - p.slope, 6) AS trend_change,
-       round((q.intercept + q.slope * (p.mid + CAST(1.0 AS DOUBLE)))
-             - (p.intercept + p.slope * (p.mid + CAST(1.0 AS DOUBLE))), 6)
-         AS level_change
-FROM (SELECT * FROM fit WHERE segment = 'pre') p
-CROSS JOIN (SELECT * FROM fit WHERE segment = 'post') q
-"""
-
-
 # One-stop per-source health dashboard: composes the funnel survivor
 # windows, THE quality formula, and the token-count convention.
 ORACLE_SQL["corpus_health_report"] = f"""
@@ -6812,105 +6213,7 @@ CROSS JOIN tot t
 """
 
 
-# --- r9 additions: Benford QA, permutation test, retrieval statistics -------
-
-
-# Mirrors relational.orders_benford_test: leading digit from the exact cents
-# decimal's STRING, expected shares via ln(1+1/d)/ln(10), 9dp-rounded
-# chi-square terms summed in DECIMAL(28,9).
-ORACLE_SQL["orders_benford_test"] = """
-WITH obs AS (
-  SELECT TRY_CAST(regexp_extract(
-           CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
-           '[1-9]', 0) AS BIGINT) AS digit,
-         COUNT(*) AS n_obs
-  FROM orders
-  GROUP BY 1
-  HAVING digit IS NOT NULL
-),
-spine AS (SELECT range AS digit FROM range(1, 10)),
-tot AS (SELECT CAST(COALESCE(SUM(n_obs), 0) AS BIGINT) AS n_total FROM obs),
-per_digit AS (
-  SELECT s.digit,
-         CAST(COALESCE(o.n_obs, 0) AS BIGINT) AS n_obs,
-         n_total,
-         CAST(n_total AS DOUBLE)
-           * (ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / CAST(s.digit AS DOUBLE))
-              / ln(CAST(10 AS DOUBLE))) AS exp_n
-  FROM spine s LEFT JOIN obs o ON s.digit = o.digit CROSS JOIN tot
-),
-terms AS (
-  -- n_total = 0: 0.0/0.0 is NaN here but NULL in Spark — guard the
-  -- degenerate path to NULL terms on BOTH engines (r10 ADVICE)
-  SELECT digit, n_obs, exp_n,
-         CASE WHEN n_total > 0 THEN
-           CAST(round((CAST(n_obs AS DOUBLE) - exp_n)
-                      * (CAST(n_obs AS DOUBLE) - exp_n) / exp_n, 9)
-                AS DECIMAL(28,9))
-         END AS chi2_term
-  FROM per_digit
-),
-chi AS (SELECT round(CAST(SUM(chi2_term) AS DOUBLE), 6) AS chi2 FROM terms)
-SELECT digit, n_obs,
-       round(exp_n, 6) AS n_expected,
-       round(CAST(chi2_term AS DOUBLE), 6) AS chi2_term,
-       chi2,
-       chi2 > CAST(15.507 AS DOUBLE) AS reject_benford_05
-FROM terms CROSS JOIN chi
-"""
-
-
-# Mirrors relational.events_winsorized_stats: k-th order statistic as
-# "min v with cumulative count >= k" over the per-(type, cents) aggregate,
-# HUGEINT-widened clamped sums, // floor positions.
-ORACLE_SQL["events_winsorized_stats"] = """
-WITH per_v AS (
-  SELECT event_type,
-         CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-         COUNT(*) AS cnt
-  FROM events
-  GROUP BY 1, 2
-),
-cum AS (
-  SELECT event_type, v, cnt,
-         SUM(cnt) OVER (PARTITION BY event_type ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum
-  FROM per_v
-),
-tot AS (SELECT event_type, SUM(cnt) AS n FROM per_v GROUP BY 1),
-bounds AS (
-  SELECT c.event_type,
-         MIN(CASE WHEN cum >= (5 * (n - 1)) // 100 + 1 THEN v END) AS q_lo,
-         MIN(CASE WHEN cum >= (95 * (n - 1)) // 100 + 1 THEN v END) AS q_hi
-  FROM cum c JOIN tot USING (event_type)
-  GROUP BY 1
-),
-agg AS (
-  SELECT p.event_type,
-         SUM(cnt) AS n,
-         MAX(q_lo) AS qlo,
-         MAX(q_hi) AS qhi,
-         SUM(CAST(cnt AS HUGEINT)
-             * CAST(GREATEST(LEAST(v, q_hi), q_lo) AS HUGEINT)) AS sw,
-         SUM(CASE WHEN v BETWEEN q_lo AND q_hi
-                  THEN CAST(cnt AS HUGEINT) * CAST(v AS HUGEINT) END) AS st,
-         SUM(CASE WHEN v BETWEEN q_lo AND q_hi THEN cnt ELSE 0 END) AS nt
-  FROM per_v p JOIN bounds USING (event_type)
-  GROUP BY 1
-)
-SELECT event_type,
-       CAST(n AS BIGINT) AS n,
-       CAST(qlo AS DOUBLE) / CAST(100 AS DOUBLE) AS q05,
-       CAST(qhi AS DOUBLE) / CAST(100 AS DOUBLE) AS q95,
-       round(CAST(sw AS DOUBLE) / CAST(n AS DOUBLE)
-             / CAST(100 AS DOUBLE), 9) AS winsorized_mean,
-       round(CAST(st AS DOUBLE) / CAST(nt AS DOUBLE)
-             / CAST(100 AS DOUBLE), 9) AS trimmed_mean,
-       CAST(nt AS BIGINT) AS n_trimmed
-FROM agg
-"""
-
+# --- r9 additions: permutation test, retrieval statistics -------------------
 
 # Mirrors text.text_kneser_ney_bigram: same tokenization/halving as the
 # add-1 bigram LM, D = 3/4 absolute discount, add-1-smoothed continuation
@@ -7207,112 +6510,6 @@ SELECT lang, bucket, n_docs, n_tokens,
        round(CAST(psum AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
          AS mean_perplexity
 FROM agg
-"""
-
-
-# Mirrors relational.orders_price_index_laspeyres: exact cents unit-price
-# rationals, 9dp-rounded basket terms on the DECIMAL(28,9) rail, base =
-# first ship month.
-ORACLE_SQL["orders_price_index_laspeyres"] = """
-WITH per_mp AS (
-  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-         l_partkey,
-         SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-           AS ext_c,
-         SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT))
-           AS qty_c
-  FROM lineitem
-  GROUP BY 1, 2
-),
-bm AS (SELECT MIN(month) AS bm FROM per_mp),
-base AS (
-  SELECT l_partkey, ext_c AS ext0, qty_c AS qty0
-  FROM per_mp CROSS JOIN bm WHERE month = bm
-),
-j AS (
-  SELECT p.month, p.ext_c, p.qty_c, b.ext0, b.qty0
-  FROM per_mp p JOIN base b USING (l_partkey)
-),
-agg AS (
-  SELECT month, COUNT(*) AS n_parts_matched,
-         SUM(CAST(round(CAST(ext_c AS DOUBLE) / CAST(qty_c AS DOUBLE)
-                        * CAST(qty0 AS DOUBLE), 9) AS DECIMAL(28,9))) AS num,
-         SUM(CAST(round(CAST(ext0 AS DOUBLE) / CAST(qty0 AS DOUBLE)
-                        * CAST(qty0 AS DOUBLE), 9) AS DECIMAL(28,9))) AS den
-  FROM j GROUP BY month
-)
-SELECT month,
-       CAST(n_parts_matched AS BIGINT) AS n_parts_matched,
-       round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-             * CAST(100 AS DOUBLE), 6) AS laspeyres_index
-FROM agg
-"""
-
-
-# Mirrors relational.orders_theil_sen_trend: per-day exact-cents revenue,
-# pairwise slopes as one double division of exact integers, both medians
-# via the per-value cumulative order statistic (2*cum >= N / N+1), OLS
-# slope from HUGEINT sufficient statistics. No display rounding: every
-# output double is a selection or a single exact-integer expression tree.
-ORACLE_SQL["orders_theil_sen_trend"] = """
-WITH all_days AS MATERIALIZED (
-  SELECT date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS x,
-         CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-              AS BIGINT) AS y
-  FROM orders GROUP BY 1
-),
-daily AS MATERIALIZED (
-  SELECT x, y FROM all_days
-  WHERE x > (SELECT MAX(x) FROM all_days) - 365
-),
-pair_slopes AS (
-  SELECT CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS slope
-  FROM daily a JOIN daily b ON b.x > a.x
-),
-sl_per AS (SELECT slope AS v, COUNT(*) AS cnt FROM pair_slopes GROUP BY 1),
-sl_tot AS (SELECT CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS n FROM sl_per),
-sl_cum AS (
-  SELECT v, SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS cum, n
-  FROM sl_per CROSS JOIN sl_tot
-),
-m AS MATERIALIZED (
-  SELECT MAX(n) AS n_pairs,
-         (MIN(CASE WHEN 2 * cum >= n THEN v END)
-          + MIN(CASE WHEN 2 * cum >= n + 1 THEN v END)) / CAST(2 AS DOUBLE)
-           AS ts_slope
-  FROM sl_cum
-),
-resid AS (
-  SELECT CAST(d.y AS DOUBLE) - m.ts_slope * CAST(d.x AS DOUBLE) AS r
-  FROM daily d CROSS JOIN m
-),
-r_per AS (SELECT r AS v, COUNT(*) AS cnt FROM resid GROUP BY 1),
-r_tot AS (SELECT CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS n FROM r_per),
-r_cum AS (
-  SELECT v, SUM(cnt) OVER (ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS cum, n
-  FROM r_per CROSS JOIN r_tot
-),
-icept AS (
-  SELECT (MIN(CASE WHEN 2 * cum >= n THEN v END)
-          + MIN(CASE WHEN 2 * cum >= n + 1 THEN v END)) / CAST(2 AS DOUBLE)
-           AS ts_intercept
-  FROM r_cum
-),
-ols AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-         CAST(COUNT(*) * SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT))
-              - SUM(CAST(x AS HUGEINT)) * SUM(CAST(y AS HUGEINT)) AS DOUBLE)
-           / CAST(COUNT(*) * SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT))
-                  - SUM(CAST(x AS HUGEINT)) * SUM(CAST(x AS HUGEINT))
-                  AS DOUBLE) AS ols_slope
-  FROM daily
-)
-SELECT n_days, n_pairs, ts_slope, ts_intercept, ols_slope
-FROM ols CROSS JOIN m CROSS JOIN icept
 """
 
 
@@ -7628,65 +6825,7 @@ FROM spine sp LEFT JOIN shared sh ON sp.s1 = sh.s1 AND sp.s2 = sh.s2
 """
 
 
-# Mirrors relational.events_welch_anova: exact HUGEINT sufficient
-# statistics, degenerate groups dropped, both k-row folds on the decimal
-# rails (9dp for the weighted terms, 15dp for the tiny lambda terms).
-ORACLE_SQL["events_welch_anova"] = """
-WITH g AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_j,
-         CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS s_j,
-         SUM(CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)
-             * CAST(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS HUGEINT)) AS ss_j
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-),
-stats AS MATERIALIZED (
-  SELECT event_type, n_j,
-         CAST(s_j AS DOUBLE) / CAST(n_j AS DOUBLE) AS m,
-         CASE WHEN n_j >= 2 THEN
-           (CAST(ss_j AS DOUBLE)
-            - CAST(s_j AS DOUBLE) * CAST(s_j AS DOUBLE) / CAST(n_j AS DOUBLE))
-           / (CAST(n_j AS DOUBLE) - 1.0) END AS v,
-         COALESCE(CASE WHEN n_j >= 2 THEN
-           (CAST(ss_j AS DOUBLE)
-            - CAST(s_j AS DOUBLE) * CAST(s_j AS DOUBLE) / CAST(n_j AS DOUBLE))
-           / (CAST(n_j AS DOUBLE) - 1.0) END > 0, FALSE) AS ok
-  FROM g
-),
-kept AS (SELECT * FROM stats WHERE ok),
-tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(CAST(ROUND(CAST(n_j AS DOUBLE) / v, 15) AS DECIMAL(38,15))) AS DOUBLE) AS w_sum,
-         CAST(SUM(CAST(ROUND(CAST(n_j AS DOUBLE) / v * m, 15) AS DECIMAL(38,15))) AS DOUBLE) AS wm_sum
-  FROM kept
-),
-folds AS (
-  SELECT MAX(k) AS k,
-         CAST(SUM(CAST(ROUND(CAST(n_j AS DOUBLE) / v
-               * (m - wm_sum / w_sum) * (m - wm_sum / w_sum), 15) AS DECIMAL(38,15))) AS DOUBLE) AS num_fold,
-         CAST(SUM(CAST(ROUND((1.0 - (CAST(n_j AS DOUBLE) / v) / w_sum)
-               * (1.0 - (CAST(n_j AS DOUBLE) / v) / w_sum)
-               / (CAST(n_j AS DOUBLE) - 1.0), 15) AS DECIMAL(38,15))) AS DOUBLE) AS lam_fold
-  FROM kept CROSS JOIN tot
-),
-dropped AS (
-  SELECT CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS k_dropped
-  FROM stats
-)
-SELECT k AS k_groups, k_dropped,
-       CAST(k - 1 AS BIGINT) AS df1,
-       ROUND(CASE WHEN k >= 2 AND lam_fold > 0
-             THEN (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0) / (3.0 * lam_fold) END, 6) AS df2,
-       ROUND(CASE WHEN k >= 2 AND lam_fold >= 0
-             THEN (num_fold / (CAST(k AS DOUBLE) - 1.0))
-                  / (1.0 + (2.0 * (CAST(k AS DOUBLE) - 2.0)
-                            / (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)) * lam_fold)
-             END, 9) AS f_stat
-FROM folds CROSS JOIN dropped
-"""
-
-
 # --- r12 additions -----------------------------------------------------------
-
 
 # Mirrors text.text_lexical_diversity: one (source, token) pass, Yule/
 # Simpson from HUGEINT-exact sum of squared counts, Herdan from 7dp-pinned
@@ -8003,5 +7142,3 @@ SELECT a.n_vectors, f.n_queries, f.n_used,
          AS intrinsic_dim
 FROM folds f CROSS JOIN n_all a
 """
-
-

@@ -158,20 +158,15 @@ from .sources import textfiles  # noqa: E402
 
 # Displaced by the r14 window refresh (see above): the r12/r13 rotation
 # names, all driver-green and oracle-backed locally.
-register("customer_rfm", relational.customer_rfm)
-register("orders_rfm_migration", relational.orders_rfm_migration)
 register("text_good_turing", text.text_good_turing)
 register("text_js_divergence", text.text_js_divergence)
 register("text_quality_kappa", text.text_quality_kappa)
 register("text_quality_calibration", text.text_quality_calibration)
-register("orders_theil_sen_trend", relational.orders_theil_sen_trend)
 register("graph_kcore", graph.graph_kcore)
 register("corpus_token_budget", curation.corpus_token_budget)
 register("dedup_paragraphs", text.dedup_paragraphs)
 register("corpus_temperature_mix", curation.corpus_temperature_mix)
 register("text_heavy_hitters_cms", text.text_heavy_hitters_cms)
-register("orders_backlog_timeseries", relational.orders_backlog_timeseries)
-register("events_ewma_daily", relational.events_ewma_daily)
 register("text_hashing_tf", text.text_hashing_tf)
 register("text_word_pmi", text.text_word_pmi)
 register("text_char_entropy", text.text_char_entropy)
@@ -212,12 +207,9 @@ register("percentiles_by_priority", scalar.percentiles_by_priority)
 # Displaced by the r12 window refresh (see above): the 20 r10-rotation
 # names were driver-green two consecutive rounds (r10-r11); all remain
 # fully oracle-backed locally.
-register("orders_benford_test", relational.orders_benford_test)
-register("events_winsorized_stats", relational.events_winsorized_stats)
 register("sim_hybrid_rrf", similarity.sim_hybrid_rrf)
 register("dedup_rouge_verify", dedup.dedup_rouge_verify)
 register("sim_ann_graph_search", similarity.sim_ann_graph_search)
-register("orders_price_index_laspeyres", relational.orders_price_index_laspeyres)
 register("stream_session_counts", streaming_windows.stream_session_counts)
 register("approx_distinct", relational.approx_distinct)
 register("dedup_simhash_error_report", dedup.dedup_simhash_error_report)
@@ -233,7 +225,6 @@ register("stream_quantile_histogram", streaming_windows.stream_quantile_histogra
 # were driver-green four consecutive rounds (r7-r10), the twelve r9
 # promotions two (r9-r10); all remain fully oracle-backed locally.
 register("dedup_minhash_lev_verify", dedup.dedup_minhash_lev_verify)
-register("orders_forecast_backtest", relational.orders_forecast_backtest)
 register("approx_distinct_hll", relational.approx_distinct_hll)
 register("sim_mmr_diversify", similarity.sim_mmr_diversify)
 register("privacy_t_closeness", relational.privacy_t_closeness)
@@ -241,7 +232,6 @@ register("text_bpe_train_merges", text.text_bpe_train_merges)
 register("text_winnowing_fingerprints", text.text_winnowing_fingerprints)
 register("parts_pareto_skyline", relational.parts_pareto_skyline)
 register("text_bm25_topk", text.text_bm25_topk)
-register("orders_interrupted_timeseries", relational.orders_interrupted_timeseries)
 register("privacy_generalization_sweep", curation.privacy_generalization_sweep)
 
 # Displaced by the r10 window refresh (see above): the ten r7-survivors were
@@ -252,7 +242,6 @@ register("dedup_url_canonical", dedup.dedup_url_canonical)
 register("corpus_dedup_funnel", dedup.corpus_dedup_funnel)
 register("sim_range_search", similarity.sim_range_search)
 register("mm_scene_cuts", multimodal.mm_scene_cuts)
-register("orders_cohort_ltv", relational.orders_cohort_ltv)
 register("crossmodal_curation_verdict", curation.crossmodal_curation_verdict)
 register("embedding_kmeans", similarity.embedding_kmeans)
 register("privacy_k_anonymity", curation.privacy_k_anonymity)
@@ -273,7 +262,6 @@ register("layout_bucketed_join", sources_layout.layout_bucketed_join)
 register("source_jsonl_roundtrip", textfiles.source_jsonl_roundtrip)
 register("stream_stream_join", streaming_windows.stream_stream_join)
 register("stream_user_event_mix", streaming_stateful.stream_user_event_mix)
-register("events_markov_transitions", relational.events_markov_transitions)
 register("scd2_order_status", relational.scd2_order_status)
 register("mm_audio_framing", multimodal.mm_audio_framing)
 register("text_tfidf_topk", text.text_tfidf_topk)
@@ -359,7 +347,6 @@ register("yoy_revenue_growth", relational.yoy_revenue_growth)
 # Lift-normalized affinity (broadcast marginals + 1-row scalar total).
 # Operational latency report (exact interpolated p90 over integers).
 register("order_lead_times", relational.order_lead_times)
-# RFM quartile scoring over the per-customer aggregate (unique tie-breaks).
 # Classifier-QA confusion matrix over the langid heuristic.
 register("langid_confusion_matrix", text.langid_confusion_matrix)
 # Incremental dedup: incoming batch vs the corpus hash store (anti join).
@@ -421,17 +408,12 @@ register("text_keyword_rake", text.text_keyword_rake)
 register("dedup_exact_keep_best", dedup.dedup_exact_keep_best)
 
 
-register("events_rolling_zscore", relational.events_rolling_zscore)
-
 register("dedup_minhash_incremental", dedup.dedup_minhash_incremental)
-
 
 
 register("layout_zorder_skipping", sources_layout.layout_zorder_skipping)
 
 register("part_abc_classification", relational.part_abc_classification)
-
-register("customer_trailing_revenue", relational.customer_trailing_revenue)
 
 register("corpus_dsir_sample", text.corpus_dsir_sample)
 
@@ -453,17 +435,9 @@ register("text_html_strip", text.text_html_strip)
 register("mm_audio_energy_segments", multimodal.mm_audio_energy_segments)
 register("mm_keyframe_select", multimodal.mm_keyframe_select)
 register("corpus_near_dup_rate_by_source", dedup.corpus_near_dup_rate_by_source)
-register("events_decayed_engagement", relational.events_decayed_engagement)
 register("corpus_fertility_by_lang", text.corpus_fertility_by_lang)
 register("dedup_cluster_quality_report", dedup.dedup_cluster_quality_report)
-register("events_hourly_seasonality", relational.events_hourly_seasonality)
-register(
-    "customer_order_gap_percentiles",
-    relational.customer_order_gap_percentiles,
-)
 register("brand_price_regression", relational.brand_price_regression)
-register("orders_seasonal_decompose", relational.orders_seasonal_decompose)
-register("events_bot_detection", relational.events_bot_detection)
 register("supplier_herfindahl", relational.supplier_herfindahl)
 register("er_blocking_pairs", relational.er_blocking_pairs)
 # displaced from the driver window by the r7 second refresh — still
@@ -474,38 +448,31 @@ register("text_quality_score", text.text_quality_score)
 register("text_langid", text.text_langid)
 register("text_fingerprint", text.text_fingerprint)
 register("text_blocklist_filter", text.text_blocklist_filter)
-register("orders_duplicate_detection", relational.orders_duplicate_detection)
 register("text_stats", text.text_stats)
 register("mm_byte_histogram", multimodal.mm_byte_histogram)
 register("corpus_split_assign", curation.corpus_split_assign)
 register("privacy_dp_sensitivity", relational.privacy_dp_sensitivity)
-register("events_user_hazard_curve", relational.events_user_hazard_curve)
 register("sim_knn_label_vote", similarity.sim_knn_label_vote)
-register("events_burstiness_by_type", relational.events_burstiness_by_type)
 
 # --- round-8 additions: lexical retrieval ranking (BM25), HITS
 # hubs/authorities, entity-resolution clusters ------------------------------
-register("orders_max_drawdown", relational.orders_max_drawdown)
 register("dedup_cluster_keep_best", dedup.dedup_cluster_keep_best)
 register("sim_ivf_balance_report", similarity.sim_ivf_balance_report)
 register("mm_audio_silence_trim", multimodal.mm_audio_silence_trim)
 register("embedding_hard_negatives", similarity.embedding_hard_negatives)
 register("corpus_dedup_token_savings", dedup.corpus_dedup_token_savings)
-# The round-9 additions (Benford QA, winsorized stats, Kneser-Ney LM, RRF
-# fusion, permutation test, ROUGE verify, graph-ANN beam search, CCNet
-# buckets, Laspeyres) plus the corpus_stratified_split /
-# corpus_health_report / streaming reports were promoted into the driver
-# window by the r10 rotation — registered above.
+# The round-9 additions (Kneser-Ney LM, RRF fusion, permutation test,
+# ROUGE verify, graph-ANN beam search, CCNet buckets) plus the
+# corpus_stratified_split / corpus_health_report / streaming reports were
+# promoted into the driver window by the r10 rotation — registered above.
 
 # Round-11 to round-13 additions: retrieval eval (nDCG), the
-# randomized-response privacy audit, stylometry (Burrows' delta), Welch's
-# heteroscedastic one-way ANOVA, lexical diversity and the
-# source-concentration report (HHI/Gini/top-k token shares — mixture
-# governance).
+# randomized-response privacy audit, stylometry (Burrows' delta), lexical
+# diversity and the source-concentration report (HHI/Gini/top-k token
+# shares — mixture governance).
 register("text_ndcg_eval", text.text_ndcg_eval)
 register("privacy_randomized_response", relational.privacy_randomized_response)
 register("text_burrows_delta", text.text_burrows_delta)
-register("events_welch_anova", relational.events_welch_anova)
 register("text_lexical_diversity", text.text_lexical_diversity)
 register("corpus_source_concentration", curation.corpus_source_concentration)
 # Vocabulary-growth law fit (Heaps β/K over integer-arithmetic doc-prefix

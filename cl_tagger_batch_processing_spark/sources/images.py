@@ -10,24 +10,21 @@ free here), and recursion is the ``recursiveFileLookup`` option.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-# appV2.py:17 — suffix match is case-insensitive there (lower() at :135);
-# Hadoop globs are case-sensitive, so the glob carries both cases and a
-# residual lower-case filter guarantees parity for mixed-case suffixes.
+# appV2.py:17 — suffix match is case-insensitive there (lower() at :135).
+# Hadoop globs are case-sensitive, so each extension is spelled with one
+# character class per letter (``[jJ][pP][gG]``): every case mix matches.
 IMAGE_EXTENSIONS = ["jpg", "jpeg", "png", "webp", "bmp", "gif"]
 _GLOB = "*.{%s}" % ",".join(
-    ext for e in IMAGE_EXTENSIONS for ext in (e, e.upper())
+    "".join(f"[{c}{c.upper()}]" for c in e) for e in IMAGE_EXTENSIONS
 )
 
 
 def scan_images(spark: SparkSession, folder: str, recursive: bool = False) -> DataFrame:
     """S1: (path, modificationTime, length, content) for image files."""
-    df = (
+    return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", _GLOB)
         .option("recursiveFileLookup", str(bool(recursive)).lower())
         .load(folder)
     )
-    suffix = F.lower(F.element_at(F.split(F.col("path"), "\\."), -1))
-    return df.where(suffix.isin(IMAGE_EXTENSIONS))

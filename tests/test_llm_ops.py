@@ -394,20 +394,6 @@ def test_scd2_interval_semantics(spark):
     ]
 
 
-def test_markov_probabilities_sum_to_one(spark, sf_dir):
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = QUERIES["events_markov_transitions"](spark, sf_dir).collect()
-    sums = defaultdict(float)
-    for r in rows:
-        assert 0.0 < r.probability <= 1.0
-        sums[r.from_type] += r.probability
-    for ft, s in sums.items():
-        assert abs(s - 1.0) < 1e-9, ft
-
-
 def test_containment_dominates_jaccard(spark, sf_dir):
     from cl_tagger_batch_processing_spark.operators.dedup import (
         dedup_containment,
@@ -442,21 +428,6 @@ def test_keep_best_consistent_with_exact_dedup(spark, sf_dir):
     }
     # same duplicate-group structure, only the keep POLICY differs
     assert exact == best
-
-
-def test_rolling_zscore_flags_exceed_threshold(spark, sf_dir):
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        ZSCORE_MIN_HISTORY,
-        ZSCORE_SIGMAS,
-        ZSCORE_WINDOW,
-        events_rolling_zscore,
-    )
-
-    rows = events_rolling_zscore(spark, sf_dir).collect()
-    assert rows, "fixtures should surface at least one anomaly"
-    for r in rows:
-        assert abs(r.z) > ZSCORE_SIGMAS - 1e-6
-        assert ZSCORE_MIN_HISTORY <= r.n_window <= ZSCORE_WINDOW
 
 
 def test_rake_degree_dominates_freq(spark, sf_dir):
@@ -822,36 +793,6 @@ def test_scene_cuts_partition_frames(spark, sf_dir):
     assert any(r.scene_frames > 1 for r in rows)
 
 
-def test_cohort_ltv_monotone_cumulative(spark, sf_dir):
-    """Per cohort: offset 0 exists, offsets carry positive revenue, and the
-    cumulative curve is strictly the running sum (monotone non-decreasing)."""
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = QUERIES["orders_cohort_ltv"](spark, sf_dir).collect()
-    assert rows
-    by_cohort = defaultdict(list)
-    for r in rows:
-        assert r.revenue > 0 and r.n_orders > 0 and r.cohort_customers > 0
-        by_cohort[(r.cohort_year, r.cohort_month)].append(r)
-    for cohort, cs in by_cohort.items():
-        cs.sort(key=lambda r: r.month_offset)
-        assert cs[0].month_offset == 0, cohort  # first order defines the cohort
-        # exact-decimal running sum: the query's cumulative is DECIMAL-exact,
-        # so accumulate the expectation in Decimal too — a double running sum
-        # with an absolute tolerance goes flaky once cohort revenue ~1e9+
-        from decimal import Decimal
-
-        run = Decimal(0)
-        for r in cs:
-            run += Decimal(str(r.revenue))
-            assert Decimal(str(r.cumulative_revenue)) == run, (
-                cohort,
-                r.month_offset,
-            )
-
-
 def test_band_sweep_configs_in_sync():
     """dedup.BAND_SWEEP and the oracle builder's default configs must match
     (the repo's duplicated-constant convention, cf. max_df/k-means tests) —
@@ -1030,20 +971,6 @@ def test_common_neighbors_excludes_edges(spark, sf_dir):
         assert 0.0 < r.nbr_jaccard <= 1.0
 
 
-def test_decayed_engagement_invariants(spark, sf_dir):
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = relational.events_decayed_engagement(spark, sf_dir).collect()
-    ev = load_table(spark, sf_dir, "events")
-    assert len(rows) == ev.select("user_id").distinct().count()
-    assert sum(r.n_events for r in rows) == ev.count()
-    for r in rows:
-        assert r.days_since_last_event >= 0.0
-    # at least one user has a zero-age (anchor) event
-    assert min(r.days_since_last_event for r in rows) == 0.0
-
-
 def test_fertility_by_lang_invariants(spark, sf_dir):
     from cl_tagger_batch_processing_spark.operators import text as text_ops
     from cl_tagger_batch_processing_spark.sources.tables import load_table
@@ -1194,11 +1121,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert "COUNT(*) >= 2" in oracles.ORACLE_SQL["orders_market_basket_rules"]
     assert relational.RULE_MIN_CONFIDENCE == 0.2
     assert ">= 0.2" in oracles.ORACLE_SQL["orders_market_basket_rules"]
-    assert relational.DECAY_HALF_LIFE_DAYS == 7.0
-    assert "age_days / 7.0" in oracles.ORACLE_SQL["events_decayed_engagement"]
-    assert relational.EWMA_WINDOW_DAYS == 30 and relational.EWMA_SHIFT == 29
-    assert "generate_series(0, 29)" in oracles.ORACLE_SQL["events_ewma_daily"]
-    assert "<< CAST(29 - u.lag AS INTEGER)" in oracles.ORACLE_SQL["events_ewma_daily"]
     assert graph.SP_N_SEEDS == 3
     assert "LIMIT 3" in oracles.ORACLE_SQL["graph_shortest_paths"]
     assert graph.SP_MAX_ROUNDS == 64
@@ -1224,11 +1146,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert "LIMIT 100" in es_sql and "1152921504606846976.0" in es_sql
     cov_sql = oracles.ORACLE_SQL["embedding_covariance"]
     assert "* 1000, 0" in cov_sql and "1000000.0" in cov_sql  # quant scale
-    assert (relational.BOT_PEAK_PER_HOUR, relational.BOT_MAX_TYPES) == (20, 2)
-    assert (relational.BOT_MIN_EVENTS, relational.BOT_MIN_FLAGS) == (50, 2)
-    bot_sql = oracles.ORACLE_SQL["events_bot_detection"]
-    assert ">= 20" in bot_sql and "<= 2" in bot_sql
-    assert ">= 50" in bot_sql and "flags >= 2" in bot_sql
     assert (relational.ER_BLOCK_CAP, relational.ER_LEV_MAX) == (64, 2)
     er_sql = oracles.ORACLE_SQL["er_blocking_pairs"]
     assert "block_size <= 64" in er_sql
@@ -1256,22 +1173,12 @@ def test_r7_constants_in_sync_with_oracles():
     assert text_ops.BLOCKLIST == ("slow", "dup")
     bl_sql = oracles.ORACLE_SQL["text_blocklist_filter"]
     assert "t = 'slow' OR t = 'dup'" in bl_sql and "['slow', 'dup']" in bl_sql
-    assert (relational.DUP_INVOICE_BAND, relational.DUP_INVOICE_WINDOW_DAYS) == (
-        2000,
-        120,
-    )
-    dup_sql = oracles.ORACLE_SQL["orders_duplicate_detection"]
-    assert "/ 2000" in dup_sql and "<= 120" in dup_sql
     ppr_sql = oracles.ORACLE_SQL["graph_personalized_pagerank"]
     assert "LIMIT 3" in ppr_sql  # seed set == SP_N_SEEDS
     assert str(graph.PR_SCALE) in ppr_sql
     shll = oracles.ORACLE_SQL["stream_hll_distinct"]
     assert "h % 64" in shll and "<< CAST(56 - m AS INTEGER)" in shll
     assert "3600 * 3600" in shll  # hour tumbling window via integer epoch
-    assert (relational.FC_SEASON_LAG, relational.FC_EWMA_LAGS) == (12, 6)
-    fb = oracles.ORACLE_SQL["orders_forecast_backtest"]
-    assert "m.ym - 12" in fb and "generate_series(1, 6)" in fb
-    assert "CAST(6 - u.lg" in fb and "/ 63.0" in fb and "DECIMAL(38,9)" in fb
     assert relational.LDIV_L == 3
     assert ">= 3" in oracles.ORACLE_SQL["privacy_l_diversity"]
     assert relational.TCL_T == 0.2
@@ -1345,33 +1252,6 @@ def test_word_pmi_invariants(spark, sf_dir):
         assert r.n_ab <= min(r.n_a, r.n_b)
 
 
-def test_hourly_seasonality_invariants(spark, sf_dir):
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = relational.events_hourly_seasonality(spark, sf_dir).collect()
-    n = load_table(spark, sf_dir, "events").count()
-    assert sum(r.n_events for r in rows) == n
-    assert sum(r.share for r in rows) == pytest.approx(1.0)
-    for r in rows:
-        assert 0 <= r.dow <= 6 and 0 <= r.hour <= 23
-
-
-def test_order_gap_invariants(spark, sf_dir):
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = relational.customer_order_gap_percentiles(spark, sf_dir).collect()
-    assert rows
-    orders = load_table(spark, sf_dir, "orders")
-    n_orders = orders.count()
-    n_cust = orders.select("o_custkey").distinct().count()
-    # every non-first order of each customer contributes exactly one gap
-    assert sum(r.n_gaps for r in rows) == n_orders - n_cust
-    for r in rows:
-        assert 0 <= r.min_gap_days <= r.p50_gap_days <= r.p90_gap_days <= r.max_gap_days
-
-
 def test_brand_price_regression_invariants(spark, sf_dir):
     """OLS sanity: r² in [0,1]; the fitted line at the brand's mean
     quantity passes through the mean price (an exact OLS identity:
@@ -1402,23 +1282,6 @@ def test_brand_price_regression_invariants(spark, sf_dir):
         m = means[r.p_brand]
         fitted = r.slope * m.mx + r.intercept
         assert abs(fitted - m.my) <= 1e-9 * max(1.0, abs(m.my)), (r, m)
-
-
-def test_events_ewma_daily_invariants(spark, sf_dir):
-    """The normalized EWMA is a convex combination of the trailing window,
-    so it must lie within [min, max] of the last 30 daily counts; the
-    first day's EWMA equals its own count (only weight present)."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    rows = sorted(
-        relational.events_ewma_daily(spark, sf_dir).collect(), key=lambda r: r.day
-    )
-    assert rows
-    assert rows[0].ewma == float(rows[0].cnt)
-    cnts = [r.cnt for r in rows]
-    for i, r in enumerate(rows):
-        window = cnts[max(0, i - 29) : i + 1]
-        assert min(window) <= r.ewma <= max(window), (i, r)
 
 
 def test_graph_shortest_paths_layering(spark, sf_dir):
@@ -1541,77 +1404,6 @@ def test_weighted_sample_favors_weight(spark, sf_dir):
     assert sample_mean > corpus_mean
 
 
-def test_seasonal_decompose_identity(spark, sf_dir):
-    """revenue = trend + seasonal + residual exactly (the additive
-    decomposition identity, by construction); the monthly spine is the
-    full-window interior; seasonal depends only on month_of_year."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    rows = sorted(
-        relational.orders_seasonal_decompose(spark, sf_dir).collect(),
-        key=lambda r: r.ym,
-    )
-    assert rows
-    yms = [r.ym for r in rows]
-    assert yms == list(range(yms[0], yms[0] + len(yms)))  # contiguous interior
-    seas = {}
-    for r in rows:
-        # RELATIVE tolerance: the residual is revenue minus two doubles, so
-        # reconstruction error scales with |revenue| (an absolute 1e-9
-        # bound broke at sf0.01 where monthly revenue is ~5e7)
-        assert abs(r.revenue - (r.trend + r.seasonal + r.residual)) <= 1e-12 * max(
-            1.0, abs(r.revenue)
-        )
-        seas.setdefault(r.month_of_year, set()).add(r.seasonal)
-    assert all(len(v) == 1 for v in seas.values())
-    # centered: the 12 seasonal indices average to ~0 (classical form)
-    idx = [next(iter(v)) for v in seas.values()]
-    assert abs(sum(idx) / len(idx)) < 1e-6 * max(abs(r.revenue) for r in rows)
-
-
-def test_bot_detection_replay(spark, sf_dir):
-    """Flags replay exactly from the emitted stats; every user appears
-    exactly once; bot iff >= 2 flags."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    rows = relational.events_bot_detection(spark, sf_dir).collect()
-    assert len(rows) == len({r.user_id for r in rows})
-    for r in rows:
-        f = (
-            (1 if r.peak_per_hour >= 20 else 0)
-            + (1 if r.n_types <= 2 else 0)
-            + (1 if r.n_events >= 50 else 0)
-        )
-        assert r.bot_flags == f and r.is_bot == (1 if f >= 2 else 0), r
-
-
-def test_bot_detection_fires_on_synthetic_bot(spark):
-    """The is_bot TRUE path is data-unreachable on the organic fixture
-    (only the volume flag ever fires: max hourly peak 4 < 20, min type
-    diversity 5 > 2 at every scale) — pin it through the FACTORED
-    production expression (relational.bot_verdict) on a synthetic
-    scripted client, per the r9 vacuity-audit rule."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    stats = spark.createDataFrame(
-        [
-            # scripted client: 500 events, 1 type, 100/hour peak -> 3 flags
-            (666, 500, 1, 0, 3600 * 5, 100),
-            # bursty-but-diverse human: 2 flags (peak + volume) -> bot
-            (2, 60, 5, 0, 3600 * 24, 25),
-            # organic human: volume flag only -> not a bot
-            (1, 60, 5, 0, 3600 * 24 * 30, 3),
-        ],
-        "user_id long, n_events long, n_types long, first_s long, "
-        "last_s long, peak_per_hour long",
-    )
-    rows = {r.user_id: r for r in relational.bot_verdict(stats).collect()}
-    assert rows[666].bot_flags == 3 and rows[666].is_bot == 1
-    assert rows[2].bot_flags == 2 and rows[2].is_bot == 1
-    assert rows[1].bot_flags == 1 and rows[1].is_bot == 0
-    assert rows[666].mean_gap_seconds == pytest.approx(3600 * 5 / 499)
-
-
 def test_herfindahl_bounds(spark, sf_dir):
     """1/n ≤ HHI ≤ 1 per nation; effective supplier count between 1 and n;
     HHI equals the share-squared sum replayed from per-supplier revenue."""
@@ -1664,41 +1456,6 @@ def test_er_blocking_guard_and_symmetry(spark, sf_dir):
         assert r.lev_dist <= relational.ER_LEV_MAX
         assert r.name_a.split(" ")[0] == r.block_word
         assert r.name_b.split(" ")[0] == r.block_word
-
-
-def test_backlog_conservation(spark, sf_dir):
-    """Every order opens; exactly the orders WITH lineitems close (the
-    fixture has a small no-lineitem tail that stays open); backlog is the
-    exact delta prefix sum, never negative, ending at the standing
-    open-forever count."""
-    from pyspark.sql import functions as F
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = sorted(
-        relational.orders_backlog_timeseries(spark, sf_dir).collect(),
-        key=lambda r: r.day,
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    n_orders = orders.count()
-    n_shipped = (
-        orders.join(
-            load_table(spark, sf_dir, "lineitem").select(
-                F.col("l_orderkey").alias("o_orderkey")
-            ),
-            "o_orderkey",
-            "left_semi",
-        ).count()
-    )
-    assert sum(r.n_opened for r in rows) == n_orders
-    assert sum(r.n_closed for r in rows) == n_shipped
-    run = 0
-    for r in rows:
-        run += r.n_opened - r.n_closed
-        assert r.backlog == run
-        assert r.backlog >= 0, r
-    assert rows[-1].backlog == n_orders - n_shipped
 
 
 def test_lpa_communities_refine_components(spark, sf_dir):
@@ -1865,42 +1622,6 @@ def test_ppr_concentrates_on_seeds(spark, sf_dir):
             assert r.pr_scaled >= 0
 
 
-def test_duplicate_detection_blocking(spark, sf_dir):
-    """Every emitted pair shares (customer, amount band), respects the day
-    window, orders a before b, and the full pair set replays from a
-    driver-side scan of the orders fixture."""
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    rows = relational.orders_duplicate_detection(spark, sf_dir).collect()
-    assert rows
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.to_date("o_orderdate").alias("d"),
-            F.floor(F.col("o_totalprice") / relational.DUP_INVOICE_BAND)
-            .cast("bigint")
-            .alias("band"),
-        )
-        .collect()
-    )
-    by_block = defaultdict(list)
-    for o in orders:
-        by_block[(o.o_custkey, o.band)].append(o)
-    expected = set()
-    for block in by_block.values():
-        block.sort(key=lambda o: (o.d, o.o_orderkey))
-        for a, b in zip(block, block[1:]):
-            if (b.d - a.d).days <= relational.DUP_INVOICE_WINDOW_DAYS:
-                expected.add((a.o_orderkey, b.o_orderkey))
-    assert {(r.orderkey_a, r.orderkey_b) for r in rows} == expected
-
-
 def test_stream_hll_tracks_exact_distinct(spark, sf_dir):
     """The streaming windowed HLL stays within the m=64 error envelope of
     the exact per-window distinct count (5σ bound), covers every hour
@@ -1938,47 +1659,6 @@ def test_stream_hll_tracks_exact_distinct(spark, sf_dir):
             r.hll_estimate,
             exact[w],
         )
-
-
-def test_forecast_backtest_replay(spark, sf_dir):
-    """All three methods score the SAME evaluation months; MAE/RMSE obey
-    RMSE >= MAE (power-mean inequality); the naive method's MAE replays
-    from a driver-side recompute of the monthly series."""
-    from collections import OrderedDict
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    rows = {r.method: r for r in relational.orders_forecast_backtest(spark, sf_dir).collect()}
-    assert set(rows) == {"naive", "seasonal_naive", "ewma"}
-    assert len({r.n_months for r in rows.values()}) == 1
-    for r in rows.values():
-        assert r.rmse >= r.mae > 0, r
-        assert r.mape > 0
-    monthly = OrderedDict(
-        (r.ym, float(r.rev))
-        for r in load_table(spark, sf_dir, "orders")
-        .select(
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).alias("ym"),
-            F.col("o_totalprice").cast("decimal(12,2)").alias("p"),
-        )
-        .groupBy("ym")
-        .agg(F.sum("p").alias("rev"))
-        .orderBy("ym")
-        .collect()
-    )
-    # eval window: months whose CALENDAR lag-12 and all 6 EWMA calendar
-    # lags exist (the calendar-true semantics — row-index lags would
-    # silently bridge revenue gaps)
-    eval_months = [
-        ym
-        for ym in monthly
-        if ym - 12 in monthly and all(ym - k in monthly for k in range(1, 7))
-    ]
-    errs = [abs(monthly[ym] - monthly[ym - 1]) for ym in eval_months]
-    assert abs(rows["naive"].mae - sum(errs) / len(errs)) < 1e-5
-    assert rows["naive"].n_months == len(errs)
 
 
 def test_l_diversity_consistent_with_k_anonymity(spark, sf_dir):
@@ -2336,48 +2016,6 @@ def test_split_leakage_consistent_with_components(spark, sf_dir):
     assert abs(sum(r.pair_share for r in rows) - 1.0) < 1e-12
 
 
-def test_hazard_curve_replays_exactly(spark, sf_dir):
-    """Hazard rows replay from a driver-side lifetime recompute; at-risk
-    counts telescope (risk at k+1 = risk at k − ended at k over observed
-    offsets); the first offset's at-risk is every user; hazards are in
-    (0, 1] and the last observed offset's hazard is 1 by construction."""
-    from collections import Counter
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    rows = sorted(
-        relational.events_user_hazard_curve(spark, sf_dir).collect(),
-        key=lambda r: r.day_offset,
-    )
-    assert rows
-    per_user = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("unix_micros(cast(ts as timestamp)) div 1000000 div 86400")
-            .cast("bigint")
-            .alias("day"),
-        )
-        .groupBy("user_id")
-        .agg((F.max("day") - F.min("day")).alias("lt"))
-        .collect()
-    )
-    ended = Counter(r.lt for r in per_user)
-    n = len(per_user)
-    at_risk = n
-    for r in rows:
-        # at-risk at this offset = users with lifetime >= offset
-        expect_risk = sum(v for k, v in ended.items() if k >= r.day_offset)
-        assert r.n_ended == ended[r.day_offset]
-        assert r.n_at_risk == expect_risk
-        assert r.hazard == r.n_ended / r.n_at_risk
-        assert 0.0 < r.hazard <= 1.0
-    assert rows[0].n_at_risk == n
-    assert rows[-1].hazard == 1.0  # everyone still at risk ends at the max
-
-
 def test_knn_label_vote_replays_exactly(spark, sf_dir):
     """The majority vote replays from the collected top-k neighbor set
     with the same (count DESC, label ASC) tie-break; one row per query;
@@ -2510,57 +2148,6 @@ def test_vocab_coverage_curve_replays_exactly(spark, sf_dir):
         prev = r.coverage
     if max(text_ops.VOCAB_CURVE_KS) >= len(ordered):
         assert rows[max(text_ops.VOCAB_CURVE_KS)].coverage == 1.0
-
-
-def test_burstiness_replays_and_bounds(spark, sf_dir):
-    """Burstiness replays from a driver-side gap recompute with the same
-    double tree; B is within (−1, 1); every event type with ≥2 gaps
-    appears."""
-    import math
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    rows = {
-        r.event_type: r
-        for r in relational.events_burstiness_by_type(spark, sf_dir).collect()
-    }
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        )
-        .collect()
-    )
-    series: defaultdict = defaultdict(list)
-    for r in ev:
-        series[(r.user_id, r.event_type)].append(r.us)
-    gaps: defaultdict = defaultdict(list)
-    for (_, et), ts in series.items():
-        ts.sort()
-        gaps[et].extend(b - a for a, b in zip(ts, ts[1:]))
-    assert set(rows) == {et for et, g in gaps.items() if g}
-    for et, g in gaps.items():
-        if not g:
-            continue
-        n = float(len(g))
-        sg = float(sum(g))
-        sgg = float(sum(x * x for x in g))
-        mean = sg / n
-        sigma = math.sqrt((n * sgg - sg * sg) / (n * n))
-        r = rows[et]
-        assert r.n_gaps == len(g)
-        assert r.mean_gap_us == mean
-        if len(g) > 1 and sigma + mean > 0:
-            assert r.burstiness == (sigma - mean) / (sigma + mean)
-            assert -1.0 < r.burstiness < 1.0
-        else:
-            assert r.burstiness is None
 
 
 def test_r8_constants_in_sync_with_oracles():
@@ -2787,14 +2374,6 @@ def test_r9_constants_in_sync_with_oracles():
     from cl_tagger_batch_processing_spark.operators import relational, similarity
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
-    bf = oracles.ORACLE_SQL["orders_benford_test"]
-    assert relational.BENFORD_CHI2_CRIT_05 == 15.507
-    assert "CAST(15.507 AS DOUBLE)" in bf
-    ws = oracles.ORACLE_SQL["events_winsorized_stats"]
-    assert (relational.WINSOR_LO_NUM, relational.WINSOR_HI_NUM) == (5, 95)
-    assert relational.WINSOR_DEN == 100
-    assert "(5 * (n - 1)) // 100 + 1" in ws
-    assert "(95 * (n - 1)) // 100 + 1" in ws
     kn = oracles.ORACLE_SQL["text_kneser_ney_bigram"]
     assert (text_ops.KN_DISCOUNT_NUM, text_ops.KN_DISCOUNT_DEN) == (3, 4)
     assert kn.count("CAST(3 AS DOUBLE) / CAST(4 AS DOUBLE)") == 2
@@ -2855,19 +2434,6 @@ def test_bench_delta_artifact_citations_match():
         assert float(total) == parsed["value"], (fname, total, parsed["value"])
         assert int(n_queries) == parsed["n_queries"], fname
         assert int(n_errors) == parsed["n_errors"], fname
-
-
-def test_winsorized_stats_are_nonvacuous(spark, sf_dir):
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = QUERIES["events_winsorized_stats"](spark, sf_dir).collect()
-    assert len(rows) == 5  # every fixture event type reports
-    for r in rows:
-        assert r.q05 <= r.q95
-        assert 0 < r.n_trimmed <= r.n
-        # winsorizing pulls tails IN: both means sit inside the bounds
-        assert r.q05 <= r.winsorized_mean <= r.q95
-        assert r.q05 <= r.trimmed_mean <= r.q95
 
 
 # --- r9 independent sequential cross-checks (the Viterbi/Brandes pattern):
@@ -3096,41 +2662,6 @@ def test_token_count_classes_on_synthetic_text(spark):
     assert row.n_bpe_tokens == 10
 
 
-def test_its_matches_numpy_lstsq(spark, sf_dir):
-    """Independent segmented regression: numpy least squares per segment
-    over the raw daily revenue — no sufficient-statistic rails."""
-    import numpy as np
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["orders_interrupted_timeseries"](spark, sf_dir).collect()[0]
-    daily = _duck_rows(
-        sf_dir,
-        """SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-           FROM '{sf}/orders.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    d0 = daily[0][0]
-    ts = np.array([(d - d0).days for d, _ in daily], dtype=float)
-    ys = np.array([r for _, r in daily])
-    mid = int(ts.max()) // 2
-
-    def fit(mask):
-        a = np.vstack([ts[mask], np.ones(mask.sum())]).T
-        slope, intercept = np.linalg.lstsq(a, ys[mask], rcond=None)[0]
-        return slope, intercept
-
-    ps, pi = fit(ts <= mid)
-    qs, qi = fit(ts > mid)
-    assert row.n_pre == int((ts <= mid).sum())
-    assert row.n_post == int((ts > mid).sum())
-    assert abs(row.pre_slope - ps) < 1e-4
-    assert abs(row.post_slope - qs) < 1e-4
-    assert abs(row.trend_change - (qs - ps)) < 1e-4
-    b = mid + 1.0
-    assert abs(row.level_change - ((qi + qs * b) - (pi + ps * b))) < 1e-3
-
-
 def test_logistic_regression_matches_numpy_gd(spark, sf_dir):
     """Independent full-float numpy GD (no 9dp rail, no DECIMAL sums, no
     clip expression sharing) over the same feature projection: after
@@ -3266,116 +2797,6 @@ def test_permutation_test_matches_hashlib_replay(spark, sf_dir):
     assert row.p_value == pytest.approx((n_extreme + 1) / (n_perms + 1), abs=1e-6)
 
 
-def test_benford_matches_python_replay(spark, sf_dir):
-    """First-digit counts and chi-square recomputed from the raw decimal
-    strings with math.log10 and plain float sums."""
-    import math
-    import re
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {r.digit: r for r in QUERIES["orders_benford_test"](spark, sf_dir).collect()}
-    totals = _duck_rows(
-        sf_dir,
-        """SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
-           FROM '{sf}/orders.parquet'""",
-    )
-    obs = {d: 0 for d in range(1, 10)}
-    for (s,) in totals:
-        m = re.search(r"[1-9]", s)
-        if m:
-            obs[int(m.group(0))] += 1
-    n = sum(obs.values())
-    chi2 = sum(
-        (obs[d] - n * math.log10(1 + 1 / d)) ** 2 / (n * math.log10(1 + 1 / d))
-        for d in range(1, 10)
-    )
-    assert set(rows) == set(range(1, 10))
-    for d in range(1, 10):
-        assert rows[d].n_obs == obs[d]
-        assert rows[d].n_expected == pytest.approx(n * math.log10(1 + 1 / d), abs=1e-5)
-        assert rows[d].chi2 == pytest.approx(chi2, abs=1e-4)
-    assert rows[1].reject_benford_05 == (chi2 > 15.507)
-
-
-def test_benford_degenerate_zero_digit_fixture(spark, tmp_path):
-    """Every order total 0.00 → no leading significant digit → n_total=0,
-    where unguarded 0.0/0.0 is NULL in Spark but NaN in DuckDB (r10
-    ADVICE). Both engines must emit the 9-digit spine with NULL
-    chi2_term/chi2/reject on the SAME synthetic fixture."""
-    import duckdb
-
-    from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "zero_digit"
-    d.mkdir()
-    spark.createDataFrame(
-        [(i, 0.0) for i in range(1, 4)], "o_orderkey long, o_totalprice double"
-    ).write.parquet(str(d / "orders.parquet"))
-
-    rows = QUERIES["orders_benford_test"](spark, str(d)).collect()
-    assert len(rows) == 9
-    for r in rows:
-        assert r.n_obs == 0 and r.n_expected == 0.0
-        assert r.chi2_term is None and r.chi2 is None
-        assert r.reject_benford_05 is None
-
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW orders AS SELECT * FROM "
-            f"read_parquet('{d}/orders.parquet/*.parquet')"
-        )
-        out = con.execute(oracles.ORACLE_SQL["orders_benford_test"]).fetchall()
-    finally:
-        con.close()
-    assert len(out) == 9
-    for digit, n_obs, n_expected, chi2_term, chi2, reject in out:
-        assert n_obs == 0 and n_expected == 0.0
-        assert chi2_term is None and chi2 is None and reject is None
-
-
-def test_laspeyres_matches_python_replay(spark, sf_dir):
-    """The fixed-basket index recomputed from raw lineitem rows with
-    Python dict aggregation and plain float unit prices."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    got = {
-        r.month: r for r in QUERIES["orders_price_index_laspeyres"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT CAST(date_trunc('month', l_shipdate) AS DATE), l_partkey,
-                  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT),
-                  CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/lineitem.parquet'""",
-    )
-    per_mp: dict[tuple, list] = {}
-    for month, part, ext, qty in raw:
-        agg = per_mp.setdefault((month, part), [0, 0])
-        agg[0] += ext
-        agg[1] += qty
-    base_month = min(m for m, _ in per_mp)
-    base = {p: v for (m, p), v in per_mp.items() if m == base_month}
-    months: dict = {}
-    for (m, p), (ext, qty) in per_mp.items():
-        if p not in base:
-            continue
-        ext0, qty0 = base[p]
-        num, den, cnt = months.setdefault(m, [0.0, 0.0, 0])
-        months[m] = [
-            num + ext / qty * qty0,
-            den + ext0 / qty0 * qty0,
-            cnt + 1,
-        ]
-    assert set(got) == set(months)
-    for m, (num, den, cnt) in months.items():
-        assert got[m].n_parts_matched == cnt
-        assert got[m].laspeyres_index == pytest.approx(num / den * 100.0, rel=1e-7)
-    assert got[base_month].laspeyres_index == pytest.approx(100.0, abs=1e-6)
-
-
 def test_kneser_ney_matches_textbook_python(spark, sf_dir):
     """Interpolated KN bigram LM rebuilt with Python dicts and plain float
     log-probs (no 9dp rail, no join chain), per-doc perplexity compared."""
@@ -3422,43 +2843,6 @@ def test_kneser_ney_matches_textbook_python(spark, sf_dir):
         assert got[d].perplexity == pytest.approx(ppl, rel=1e-4), d
         checked += 1
     assert checked and checked == len(got)
-
-
-def test_winsorized_stats_match_python_replay(spark, sf_dir):
-    """Order-statistic bounds and clamped/trimmed means recomputed from
-    a plain Python sort per event type."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    got = {
-        r.event_type: r
-        for r in QUERIES["events_winsorized_stats"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type,
-                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           FROM '{sf}/events.parquet'""",
-    )
-    by_type: dict = {}
-    for t, v in raw:
-        by_type.setdefault(t, []).append(v)
-    assert set(got) == set(by_type)
-    for t, vs in by_type.items():
-        vs.sort()
-        n = len(vs)
-        q_lo = vs[(5 * (n - 1)) // 100]       # k = floor(p(n-1)) + 1, 1-based
-        q_hi = vs[(95 * (n - 1)) // 100]
-        wins = [min(max(v, q_lo), q_hi) for v in vs]
-        trim = [v for v in vs if q_lo <= v <= q_hi]
-        r = got[t]
-        assert r.n == n
-        assert r.q05 == pytest.approx(q_lo / 100.0, abs=1e-9)
-        assert r.q95 == pytest.approx(q_hi / 100.0, abs=1e-9)
-        assert r.winsorized_mean == pytest.approx(sum(wins) / n / 100.0, abs=1e-8)
-        assert r.trimmed_mean == pytest.approx(
-            sum(trim) / len(trim) / 100.0, abs=1e-8
-        )
-        assert r.n_trimmed == len(trim)
 
 
 def test_ccnet_buckets_match_python_replay(spark, sf_dir):
@@ -3578,9 +2962,6 @@ def test_r11_constants_in_sync():
     from cl_tagger_batch_processing_spark import oracles
     from cl_tagger_batch_processing_spark.operators import relational, similarity
 
-    ts = oracles.ORACLE_SQL["orders_theil_sen_trend"]
-    assert relational.THEIL_SEN_TRAILING_DAYS == 365
-    assert "(SELECT MAX(x) FROM all_days) - 365" in ts
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
     nd = oracles.ORACLE_SQL["text_ndcg_eval"]
@@ -3601,48 +2982,6 @@ def test_r11_constants_in_sync():
     assert "eps_degree >= 2" in db
     # the oracle inlines the kNN-graph chain — its k must track the builder
     assert similarity.KNN_GRAPH_K == 3 and "rank <= 3" in db
-
-
-def test_theil_sen_matches_python_replay(spark, sf_dir):
-    """Slopes and medians recomputed by PLAIN SORT over the pair list (no
-    per-value aggregate, no cumulative window) and the OLS slope by exact
-    Fraction sufficient statistics — the different-algorithm rule for
-    operators whose oracle shares the order-statistic machinery."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    row = QUERIES["orders_theil_sen_trend"](spark, sf_dir).collect()[0]
-    daily = _duck_rows(
-        sf_dir,
-        """SELECT date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)),
-                  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-                                AS BIGINT)) AS BIGINT)
-           FROM '{sf}/orders.parquet' GROUP BY 1""",
-    )
-    cutoff = max(x for x, _ in daily) - 365
-    xs = sorted((x, y) for x, y in daily if x > cutoff)
-    n = len(xs)
-    assert row.n_days == n
-    slopes = sorted(
-        (y2 - y1) / (x2 - x1)
-        for i, (x1, y1) in enumerate(xs)
-        for (x2, y2) in xs[i + 1 :]
-    )
-    npairs = n * (n - 1) // 2
-    assert row.n_pairs == npairs
-    lo, hi = slopes[(npairs + 1) // 2 - 1], slopes[npairs // 2]
-    ts = (lo + hi) / 2.0
-    assert row.ts_slope == pytest.approx(ts, rel=1e-12)
-    resid = sorted(y - ts * x for x, y in xs)
-    ri = (resid[(n + 1) // 2 - 1] + resid[n // 2]) / 2.0
-    assert row.ts_intercept == pytest.approx(ri, rel=1e-9)
-    sx = sum(Fraction(x) for x, _ in xs)
-    sy = sum(Fraction(y) for _, y in xs)
-    sxx = sum(Fraction(x) * x for x, _ in xs)
-    sxy = sum(Fraction(x) * y for x, y in xs)
-    ols = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    assert row.ols_slope == pytest.approx(float(ols), rel=1e-12)
 
 
 def test_dbscan_matches_union_find_replay(spark, sf_dir):
@@ -3971,10 +3310,9 @@ def test_r11_continuation_constants_in_sync():
 def test_date_operators_pin_utc_session_timezone():
     """Static audit (second-review hazard class): every operator that
     evaluates a session-timezone-dependent date function must pin the
-    session to UTC first (or route through _daily_event_counts, which
-    does) — otherwise a caller that mutates the timezone silently shifts
-    Spark's day/week/year boundaries away from DuckDB's naive-timestamp
-    arithmetic and breaks oracle parity."""
+    session to UTC first — otherwise a caller that mutates the timezone
+    silently shifts Spark's day/week/year boundaries away from DuckDB's
+    naive-timestamp arithmetic and breaks oracle parity."""
     import re
 
     date_fns = [
@@ -3995,7 +3333,7 @@ def test_date_operators_pin_utc_session_timezone():
             name = f.split("(")[0].strip()
             if not any(k in f for k in date_fns):
                 continue
-            if "session.timeZone" in f or "_daily_event_counts" in f:
+            if "session.timeZone" in f:
                 continue
             offenders.append(f"{path.split('/')[-1]}:{name}")
     assert not offenders, offenders
@@ -4003,174 +3341,6 @@ def test_date_operators_pin_utc_session_timezone():
 
 # --- replay depth for pre-r11 operators that shared their algorithm with
 # the oracle (blanket parity could not catch a mirrored mistake) ----------
-
-
-def test_max_drawdown_matches_textbook_replay(spark, sf_dir):
-    """Daily series rebuilt in Python with exact Decimal revenue, the
-    running max / trough / peak found by a plain scan."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["orders_max_drawdown"](spark, sf_dir).collect()[0]
-    daily = _duck_rows(
-        sf_dir,
-        """SELECT CAST(o_orderdate AS DATE) AS day,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-           FROM '{sf}/orders.parquet' GROUP BY 1 ORDER BY 1""",
-    )
-    runmax = Decimal("-Infinity")
-    best = None  # (drawdown, day, cum, runmax)
-    for day, rev in daily:
-        runmax = max(runmax, rev)
-        dd = runmax - rev
-        if best is None or dd > best[0]:
-            best = (dd, day, rev, runmax)
-    dd, trough_day, trough_cum, peak_cum = best
-    peak_day = min(d for d, rev in daily if rev == peak_cum and d <= trough_day)
-    assert str(r.trough_day) == str(trough_day)
-    assert str(r.peak_day) == str(peak_day)
-    assert r.max_drawdown == pytest.approx(float(dd), rel=1e-12)
-    assert r.peak_cum == pytest.approx(float(peak_cum), rel=1e-12)
-    assert r.trough_cum == pytest.approx(float(trough_cum), rel=1e-12)
-
-
-def test_burstiness_matches_textbook_replay(spark, sf_dir):
-    """Gaps rebuilt by sorting each (user, type) series in Python;
-    Goh-Barabási B from plain float mean/population-σ. Pins −1 ≤ B ≤ 1."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.event_type: r
-        for r in QUERIES["events_burstiness_by_type"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, event_type, epoch_us(ts)
-           FROM '{sf}/events.parquet'""",
-    )
-    series: dict = {}
-    for u, et, us in raw:
-        series.setdefault((u, et), []).append(us)
-    gaps: dict = {}
-    for (u, et), ts in series.items():
-        ts.sort()
-        gaps.setdefault(et, []).extend(b - a for a, b in zip(ts, ts[1:]))
-    for et, g in gaps.items():
-        if not g:
-            continue
-        r = rows[et]
-        n = len(g)
-        mean = sum(g) / n
-        var = (n * sum(x * x for x in g) - sum(g) ** 2) / n**2
-        sigma = var**0.5
-        assert r.n_gaps == n
-        assert r.mean_gap_us == pytest.approx(mean, rel=1e-9)
-        if n > 1 and sigma + mean > 0:
-            b = (sigma - mean) / (sigma + mean)
-            assert r.burstiness == pytest.approx(b, rel=1e-7, abs=1e-9)
-            assert -1.0 - 1e-9 <= r.burstiness <= 1.0 + 1e-9
-        else:
-            assert r.burstiness is None
-
-
-def test_order_gap_percentiles_matches_textbook_replay(spark, sf_dir):
-    """Per-customer date gaps rebuilt in Python; interpolated percentile
-    by the textbook index formula (identical to Spark percentile /
-    DuckDB quantile_cont)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.c_mktsegment: r
-        for r in QUERIES["customer_order_gap_percentiles"](spark, sf_dir).collect()
-    }
-    orders = _duck_rows(
-        sf_dir,
-        """SELECT o.o_custkey, c.c_mktsegment, CAST(o.o_orderdate AS DATE)
-           FROM '{sf}/orders.parquet' o
-           JOIN '{sf}/customer.parquet' c ON o.o_custkey = c.c_custkey
-           ORDER BY o.o_custkey, 3""",
-    )
-    per_cust: dict = {}
-    seg_of: dict = {}
-    for ck, seg, d in orders:
-        per_cust.setdefault(ck, []).append(d)
-        seg_of[ck] = seg
-    by_seg: dict = {}
-    for ck, ds in per_cust.items():
-        by_seg.setdefault(seg_of[ck], []).extend(
-            (b - a).days for a, b in zip(ds, ds[1:])
-        )
-
-    def pctl(sorted_vals, q):
-        idx = q * (len(sorted_vals) - 1)
-        lo = int(idx)
-        frac = idx - lo
-        if lo + 1 < len(sorted_vals):
-            return sorted_vals[lo] + frac * (sorted_vals[lo + 1] - sorted_vals[lo])
-        return float(sorted_vals[lo])
-
-    assert set(rows) == {s for s, g in by_seg.items() if g}
-    for seg, g in by_seg.items():
-        if not g:
-            continue
-        r = rows[seg]
-        g.sort()
-        assert r.n_gaps == len(g)
-        assert (r.min_gap_days, r.max_gap_days) == (g[0], g[-1])
-        assert r.avg_gap_days == pytest.approx(sum(g) / len(g), rel=1e-12)
-        assert r.p50_gap_days == pytest.approx(pctl(g, 0.5), rel=1e-12)
-        assert r.p90_gap_days == pytest.approx(pctl(g, 0.9), rel=1e-12)
-
-
-def test_seasonal_decompose_matches_textbook_replay(spark, sf_dir):
-    """Classical 2x12 decomposition rebuilt with Fractions over the
-    exact monthly Decimal revenues (ROW-based +/-6 window like the
-    operator); residual identity revenue = trend + seasonal + residual
-    also pinned."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    out = {
-        r.ym: r for r in QUERIES["orders_seasonal_decompose"](spark, sf_dir).collect()
-    }
-    monthly = _duck_rows(
-        sf_dir,
-        """SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT),
-                  CAST(month(o_orderdate) AS BIGINT),
-                  SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-           FROM '{sf}/orders.parquet' GROUP BY 1, 2 ORDER BY 1""",
-    )
-    yms = [ym for ym, _, _ in monthly]
-    revs = [Fraction(rev) for _, _, rev in monthly]
-    moys = [m for _, m, _ in monthly]
-    n = len(monthly)
-    trended = {}
-    for i in range(6, n - 6):
-        num24 = 2 * sum(revs[i - 6 : i + 7]) - revs[i - 6] - revs[i + 6]
-        trended[yms[i]] = (moys[i], revs[i], num24, revs[i] * 24 - num24)
-    seas_groups: dict = {}
-    for ym, (moy, _, _, d24) in trended.items():
-        seas_groups.setdefault(moy, []).append(d24)
-    raw_seasonal = {
-        moy: float(sum(v) / len(v)) / 24.0 for moy, v in seas_groups.items()
-    }
-    grand = sum(raw_seasonal.values()) / len(raw_seasonal)
-    assert set(out) == set(trended)
-    for ym, (moy, rev, num24, _) in trended.items():
-        r = out[ym]
-        seasonal = raw_seasonal[moy] - grand
-        assert r.month_of_year == moy
-        assert r.revenue == pytest.approx(float(rev), rel=1e-12)
-        assert r.trend == pytest.approx(float(num24) / 24.0, rel=1e-12)
-        assert r.seasonal == pytest.approx(seasonal, abs=5e-7)
-        assert r.residual == pytest.approx(
-            float(rev) - float(num24) / 24.0 - seasonal, abs=5e-7
-        )
-        assert r.revenue == pytest.approx(
-            r.trend + r.seasonal + r.residual, abs=1e-6
-        )
 
 
 def _basket_pairs(sf_dir, min_support=2):
@@ -4316,38 +3486,6 @@ def test_embedding_dim_stats_matches_textbook_replay(spark, sf_dir):
         assert r.variance >= -1e-12
 
 
-def test_hourly_seasonality_matches_textbook_replay(spark, sf_dir):
-    """7×24 cells rebuilt with plain integer epoch arithmetic (the
-    Thursday-anchor dow formula re-derived independently via Python's
-    calendar) — shares get an exact-ratio check."""
-    import datetime
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        (r.dow, r.hour): r
-        for r in QUERIES["events_hourly_seasonality"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(sf_dir, "SELECT epoch_us(ts) FROM '{sf}/events.parquet'")
-    cells: dict = {}
-    for (us,) in raw:
-        sec = us // 1_000_000
-        dow = (sec // 86400 + 4) % 7
-        # independent derivation: Python datetime's weekday (Mon=0) →
-        # Sunday-0 encoding must agree with the epoch formula
-        dt = datetime.datetime(1970, 1, 1) + datetime.timedelta(seconds=int(sec))
-        assert dow == (dt.weekday() + 1) % 7
-        hour = (sec % 86400) // 3600
-        assert hour == dt.hour
-        cells[(dow, hour)] = cells.get((dow, hour), 0) + 1
-    total = len(raw)
-    assert set(rows) == set(cells)
-    for key, n in cells.items():
-        r = rows[key]
-        assert r.n_events == n
-        assert r.share == pytest.approx(n / total, rel=1e-12)
-
-
 def test_adamic_adar_matches_textbook_replay(spark, sf_dir):
     """AA scores rebuilt with Python dict wedges over the hub-capped
     subgraph (cap + degree recompute + non-adjacency re-derived
@@ -4390,105 +3528,6 @@ def test_adamic_adar_matches_textbook_replay(spark, sf_dir):
     for got, exp in zip(out, expect):
         assert got[:4] == exp[:4]
         assert got[4] == pytest.approx(exp[4], abs=2e-6)
-
-
-def test_trailing_revenue_matches_textbook_replay(spark, sf_dir):
-    """RANGE-frame trailing sums rebuilt with a per-customer Python scan
-    over exact Decimal prices (all same-day orders enter together)."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.o_orderkey: r
-        for r in QUERIES["customer_trailing_revenue"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT o_orderkey, o_custkey,
-                  datediff('day', DATE '1990-01-01', CAST(o_orderdate AS DATE)),
-                  CAST(o_totalprice AS DECIMAL(14,2))
-           FROM '{sf}/orders.parquet'""",
-    )
-    by_cust: dict = {}
-    for ok, ck, day, price in raw:
-        by_cust.setdefault(ck, []).append((day, ok, Decimal(price)))
-    n_checked = 0
-    for ck, orders in by_cust.items():
-        for day, ok, _ in orders:
-            in_win = [
-                (d, p) for d, _, p in orders if day - 30 <= d <= day
-            ]
-            r = rows[ok]
-            assert r.day_ord == day and r.o_custkey == ck
-            assert r.n_orders_window == len(in_win)
-            assert r.trailing_revenue == pytest.approx(
-                float(sum(p for _, p in in_win)), rel=1e-12
-            )
-            n_checked += 1
-    assert n_checked == len(rows)
-
-
-def test_rfm_migration_matches_textbook_replay(spark, sf_dir):
-    """Migration matrix rebuilt in Python: integer midpoint split, the
-    ntile(4) bucket-size formula applied to the (spend DESC, custkey)
-    sort, full-outer tier join, per-from-tier shares."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        (r.from_tier, r.to_tier): r
-        for r in QUERIES["orders_rfm_migration"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT o_custkey, CAST(o_orderdate AS DATE),
-                  CAST(o_totalprice AS DECIMAL(14,2))
-           FROM '{sf}/orders.parquet'""",
-    )
-    dmin = min(d for _, d, _ in raw)
-    dmax = max(d for _, d, _ in raw)
-    half = (dmax - dmin).days // 2
-    spend: dict = {}
-    for ck, d, p in raw:
-        period = 1 if (d - dmin).days <= half else 2
-        spend[(period, ck)] = spend.get((period, ck), Decimal(0)) + Decimal(p)
-
-    def ntile4(items):
-        # items pre-sorted; Spark ntile: first (n % 4) tiles take
-        # ceil(n/4) rows, the rest floor(n/4)
-        n = len(items)
-        base, extra = divmod(n, 4)
-        tiers = {}
-        i = 0
-        for t in range(1, 5):
-            size = base + (1 if t <= extra else 0)
-            for ck in items[i : i + size]:
-                tiers[ck] = t
-            i += size
-        return tiers
-
-    tiers = {}
-    for period in (1, 2):
-        items = sorted(
-            (ck for (p, ck) in spend if p == period),
-            key=lambda ck: (-spend[(period, ck)], ck),
-        )
-        tiers[period] = ntile4(items)
-    custs = set(tiers[1]) | set(tiers[2])
-    mig: dict = {}
-    for ck in custs:
-        key = (tiers[1].get(ck, 0), tiers[2].get(ck, 0))
-        mig[key] = mig.get(key, 0) + 1
-    assert {k: r.n_customers for k, r in rows.items()} == mig
-    from_tot: dict = {}
-    for (ft, _), n in mig.items():
-        from_tot[ft] = from_tot.get(ft, 0) + n
-    for (ft, tt), r in rows.items():
-        assert r.share_of_from_tier == pytest.approx(
-            mig[(ft, tt)] / from_tot[ft], abs=1e-9
-        )
 
 
 def test_herfindahl_matches_textbook_replay(spark, sf_dir):
@@ -4608,84 +3647,6 @@ def test_doc_length_histogram_matches_textbook_replay(spark, sf_dir):
         r = rows[key]
         assert (r.n_docs, r.min_tokens, r.max_tokens) == (n, mn, mx)
         assert 2**r.log2_bucket <= mn and mx < 2 ** (r.log2_bucket + 1)
-
-
-def test_user_hazard_curve_matches_textbook_replay(spark, sf_dir):
-    """Hazard rebuilt from Python-int lifetimes with an explicit suffix
-    count for the at-risk set; pins 0 < hazard ≤ 1 and the final-offset
-    hazard = 1 (bounded-window right-censoring)."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.day_offset: r
-        for r in QUERIES["events_user_hazard_curve"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, (epoch_us(ts) // 1000000) // 86400
-           FROM '{sf}/events.parquet'""",
-    )
-    days: dict = {}
-    for u, d in raw:
-        lo, hi = days.get(u, (d, d))
-        days[u] = (min(lo, d), max(hi, d))
-    lifetimes = [hi - lo for lo, hi in days.values()]
-    ended: dict = {}
-    for lt in lifetimes:
-        ended[lt] = ended.get(lt, 0) + 1
-    assert set(rows) == set(ended)
-    for k, n_end in ended.items():
-        at_risk = sum(n for lt, n in ended.items() if lt >= k)
-        r = rows[k]
-        assert (r.n_ended, r.n_at_risk) == (n_end, at_risk)
-        assert r.hazard == pytest.approx(n_end / at_risk, rel=1e-12)
-        assert 0.0 < r.hazard <= 1.0
-    assert rows[max(ended)].hazard == pytest.approx(1.0)
-
-
-def test_customer_rfm_matches_textbook_replay(spark, sf_dir):
-    """R/F/M quartiles rebuilt with the explicit ntile bucket-size
-    formula over the three deterministic tie-broken sorts."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.o_custkey: r for r in QUERIES["customer_rfm"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT o_custkey, CAST(o_orderdate AS DATE),
-                  CAST(o_totalprice AS DECIMAL(14,2))
-           FROM '{sf}/orders.parquet'""",
-    )
-    anchor = max(d for _, d, _ in raw)
-    per: dict = {}
-    for ck, d, p in raw:
-        last, freq, mon = per.get(ck, (d, 0, Decimal(0)))
-        per[ck] = (max(last, d), freq + 1, mon + Decimal(p))
-
-    def ntile4(keys):
-        n = len(keys)
-        base, extra = divmod(n, 4)
-        out, i = {}, 0
-        for t in range(1, 5):
-            size = base + (1 if t <= extra else 0)
-            for k in keys[i : i + size]:
-                out[k] = t
-            i += size
-        return out
-
-    r_t = ntile4(sorted(per, key=lambda c: ((anchor - per[c][0]).days, c)))
-    f_t = ntile4(sorted(per, key=lambda c: (-per[c][1], c)))
-    m_t = ntile4(sorted(per, key=lambda c: (-per[c][2], c)))
-    assert set(rows) == set(per)
-    for ck, (last, freq, mon) in per.items():
-        r = rows[ck]
-        assert r.recency_days == (anchor - last).days
-        assert r.frequency == freq
-        assert r.monetary == pytest.approx(float(mon), rel=1e-12)
-        assert (r.r_score, r.f_score, r.m_score) == (r_t[ck], f_t[ck], m_t[ck])
 
 
 def test_word_pmi_matches_textbook_replay(spark, sf_dir):
@@ -4817,44 +3778,6 @@ def test_source_overlap_matrix_matches_textbook_replay(spark, sf_dir):
         assert r.jaccard == pytest.approx(nc / (na + nb - nc), rel=1e-12)
 
 
-def test_welch_anova_matches_textbook_replay(spark, sf_dir):
-    """F* recomputed with plain per-group float means/variances and the
-    Welch 1951 formulas — no sufficient-statistic identity, no rails."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["events_welch_anova"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT event_type, CAST(CAST(value AS DECIMAL(12,2))*100 AS BIGINT)
-           FROM '{sf}/events.parquet' WHERE value IS NOT NULL""",
-    )
-    groups: dict = {}
-    for et, v in raw:
-        groups.setdefault(et, []).append(v)
-    kept = {}
-    for et, xs in groups.items():
-        if len(xs) < 2:
-            continue
-        m = sum(xs) / len(xs)
-        v = sum((x - m) ** 2 for x in xs) / (len(xs) - 1)
-        if v > 0:
-            kept[et] = (len(xs), m, v)
-    k = len(kept)
-    assert r.k_groups == k and r.k_dropped == len(groups) - k
-    if k >= 2:
-        ws = {et: n / v for et, (n, m, v) in kept.items()}
-        W = sum(ws.values())
-        xbar = sum(ws[et] * kept[et][1] for et in kept) / W
-        a = sum(ws[et] * (kept[et][1] - xbar) ** 2 for et in kept) / (k - 1)
-        lam = sum(
-            (1 - ws[et] / W) ** 2 / (kept[et][0] - 1) for et in kept
-        )
-        b = 1 + 2 * (k - 2) / (k * k - 1) * lam
-        assert r.f_stat == pytest.approx(a / b, rel=1e-6, abs=1e-6)
-        assert r.df1 == k - 1
-        assert r.df2 == pytest.approx((k * k - 1) / (3 * lam), rel=1e-6)
-
-
 # --- r12 addition replays: each addition recomputed the naive textbook way
 # off a raw duckdb parquet pull (no windows, no decimal rails, no doubled-
 # rank tricks) — independent of both engines' machinery -----------------------
@@ -4916,83 +3839,6 @@ def test_rich_club_matches_textbook_replay(spark, sf_dir):
             )  # 9dp output round
         else:
             assert r.phi is None
-
-
-def _write_events(spark, d, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).selectExpr(
-        "event_id", "cast(ts as timestamp) ts", "user_id", "event_type",
-        "value", "props",
-    ).write.parquet(str(d / "events.parquet"))
-
-
-def test_welch_anova_drops_synthetic_constant_group(spark, tmp_path):
-    """k_dropped is identically zero on the organic fixture — a synthetic
-    zero-variance group must drop (and a 1-row group too) while the
-    remaining groups still produce a finite F."""
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    d = tmp_path / "wa"
-    d.mkdir()
-    rows = []
-    eid = 0
-    for et, vals in [
-        ("varies_a", [float(i) for i in range(1, 21)]),
-        ("varies_b", [float(i) * 3 for i in range(1, 21)]),
-        ("constant", [7.0] * 20),
-        ("singleton", [5.0]),
-    ]:
-        for v in vals:
-            eid += 1
-            rows.append((eid, "2024-01-01 00:00:00", 1, et, v, "{}"))
-    _write_events(spark, d, rows)
-    r = QUERIES["events_welch_anova"](spark, str(d)).collect()[0]
-    assert r.k_groups == 2 and r.k_dropped == 2
-    assert r.f_stat is not None and r.f_stat > 0 and r.df1 == 1
-
-
-def test_welch_anova_rail_guard_raises_past_limit(spark):
-    """The w-scaled decimal folds are magnitude-guarded: past
-    WELCH_W_RAIL_LIMIT the query must raise the NAMED degenerate-group
-    error (not ANSI's opaque DECIMAL(38,15) cast overflow), and just
-    below the limit the rail must accept the term. The limit itself is
-    untrippable from fixture-sized parquet (w ~ n²/cents-var needs ~3e10
-    rows), so the guard expression is pinned directly."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        WELCH_W_RAIL_LIMIT,
-    )
-
-    def guarded(c):
-        # same shape as events_welch_anova's g15 (when/raise before cast)
-        return F.round(
-            F.when(F.abs(c) < F.lit(WELCH_W_RAIL_LIMIT), c).otherwise(
-                F.raise_error(
-                    F.format_string(
-                        "events_welch_anova: w term %e for group '%s' exceeds "
-                        "the DECIMAL(38,15) rail",
-                        c,
-                        F.col("event_type"),
-                    )
-                )
-            ),
-            15,
-        ).cast("decimal(38,15)")
-
-    df = spark.createDataFrame(
-        [("ok_small", 1.0e-6), ("ok_large", 9.0e20)], "event_type string, w double"
-    )
-    got = {r.event_type: r.t for r in df.select("event_type", guarded(F.col("w")).alias("t")).collect()}
-    assert float(got["ok_large"]) == 9.0e20 and float(got["ok_small"]) == 1.0e-6
-
-    bad = spark.createDataFrame([("degenerate", 1.0e21)], "event_type string, w double")
-    with pytest.raises(Exception, match="exceeds .*DECIMAL\\(38,15\\) rail"):
-        bad.select(guarded(F.col("w")).alias("t")).collect()
 
 
 def test_r12_constants_in_sync():
@@ -5171,36 +4017,6 @@ def test_minhash_lsh_matches_python_pipeline(spark, sf_dir):
     assert got == want
 
 
-def test_markov_transitions_match_python_pairs(spark, sf_dir):
-    """Transition counts replayed from a python sort of each user's
-    (ts, event_id)-ordered stream; probabilities are exact ratios."""
-    from fractions import Fraction
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, ts, event_id, event_type
-           FROM '{sf}/events.parquet' ORDER BY user_id, ts, event_id""",
-    )
-    counts: dict = {}
-    prev_user = prev_type = None
-    for user, _, _, et in raw:
-        if user == prev_user:
-            counts[(prev_type, et)] = counts.get((prev_type, et), 0) + 1
-        prev_user, prev_type = user, et
-    from_tot: dict = {}
-    for (a, _), n in counts.items():
-        from_tot[a] = from_tot.get(a, 0) + n
-    rows = QUERIES["events_markov_transitions"](spark, sf_dir).collect()
-    got = {(r.from_type, r.to_type): (r.n_transitions, r.probability) for r in rows}
-    assert set(got) == set(counts)
-    for key, n in counts.items():
-        gn, gp = got[key]
-        assert gn == n
-        assert gp == pytest.approx(float(Fraction(n, from_tot[key[0]])), rel=1e-12)
-
-
 def test_tfidf_topk_matches_python_counter(spark, sf_dir):
     """TF-IDF replayed with Counters and math.log; the per-doc top-5 set
     re-ranked with the same (6dp score DESC, token ASC) key."""
@@ -5253,34 +4069,6 @@ def test_unigram_loglik_matches_python_counter(spark, sf_dir):
         mean = round(float(s) / len(t), 6) + 0.0
         assert rows[d].n_tokens == len(t)
         assert rows[d].avg_loglik == pytest.approx(mean, abs=2e-6)
-
-
-def test_ewma_daily_matches_python_recurrence(spark, sf_dir):
-    """The truncated adjust=True EWMA replayed with explicit power-of-two
-    weights over the calendar (gap days cost a halving) — exact integer
-    numerator/denominator, one float division."""
-    from cl_tagger_batch_processing_spark.operators.relational import EWMA_SHIFT
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    raw = dict(
-        _duck_rows(
-            sf_dir,
-            """SELECT CAST((epoch_us(ts) // 1000000) // 86400 AS BIGINT), COUNT(*)
-               FROM '{sf}/events.parquet' GROUP BY 1""",
-        )
-    )
-    rows = {r.day: r for r in QUERIES["events_ewma_daily"](spark, sf_dir).collect()}
-    assert set(rows) == set(raw)
-    for day, cnt in raw.items():
-        num = den = 0
-        for lag in range(EWMA_SHIFT + 1):
-            w = 1 << (EWMA_SHIFT - lag)
-            src = day - lag
-            if src in raw:
-                num += raw[src] * w
-                den += w
-        assert rows[day].cnt == cnt
-        assert rows[day].ewma == pytest.approx(num / den, rel=1e-12)
 
 
 def test_ann_graph_search_matches_python_beam(spark, sf_dir):
@@ -5530,37 +4318,6 @@ def test_closeness_matches_python_bfs(spark, sf_dir):
             assert r.closeness is None
 
 
-def test_decayed_engagement_matches_python_loop(spark, sf_dir):
-    """The half-life decay replayed with math.pow over raw (us, value)
-    rows, 9dp terms in Decimal, 6dp final."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        DECAY_HALF_LIFE_DAYS,
-    )
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)), CAST(value AS DOUBLE)
-           FROM '{sf}/events.parquet'""",
-    )
-    max_us = max(us for _, us, _ in raw)
-    per_user: dict = {}
-    for u, us, v in raw:
-        age = (max_us - us) / (86400.0 * 1e6)
-        term = Decimal(str(round(v * 0.5 ** (age / DECAY_HALF_LIFE_DAYS), 9)))
-        n, s, mn = per_user.get(u, (0, Decimal(0), float("inf")))
-        per_user[u] = (n + 1, s + term, min(mn, age))
-    rows = {r.user_id: r for r in QUERIES["events_decayed_engagement"](spark, sf_dir).collect()}
-    assert set(rows) == set(per_user)
-    for u, (n, s, mn) in per_user.items():
-        r = rows[u]
-        assert r.n_events == n
-        assert r.decayed_engagement == pytest.approx(round(float(s), 6) + 0.0, abs=2e-6)
-        assert r.days_since_last_event == pytest.approx(round(mn, 6), abs=2e-6)
-
-
 def test_market_basket_rules_match_python_counts(spark, sf_dir):
     """Support/confidence/lift replayed with python set counting over the
     distinct baskets, same min-support and confidence prune."""
@@ -5681,41 +4438,6 @@ def test_shortest_paths_match_python_bfs(spark, sf_dir):
                 q.append(v)
     got = {r.node: r.dist for r in QUERIES["graph_shortest_paths"](spark, sf_dir).collect()}
     assert got == dist
-
-
-def test_duplicate_detection_matches_python_scan(spark, sf_dir):
-    """Blocked consecutive-pair detection replayed with a per-(customer,
-    amount-band) python sort and explicit calendar gaps."""
-    from cl_tagger_batch_processing_spark.operators.relational import (
-        DUP_INVOICE_BAND,
-        DUP_INVOICE_WINDOW_DAYS,
-    )
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE),
-                  CAST(o_totalprice AS DOUBLE)
-           FROM '{sf}/orders.parquet'""",
-    )
-    import math
-
-    blocks: dict = {}
-    for ok, ck, od, price in raw:
-        band = math.floor(price / DUP_INVOICE_BAND)
-        blocks.setdefault((ck, band), []).append((od, ok))
-    want = set()
-    for (ck, band), rows_ in blocks.items():
-        rows_.sort()
-        for (d0, k0), (d1, k1) in zip(rows_, rows_[1:]):
-            gap = (d1 - d0).days
-            if gap <= DUP_INVOICE_WINDOW_DAYS:
-                want.add((ck, k0, k1, band, gap))
-    got = {
-        (r.o_custkey, r.orderkey_a, r.orderkey_b, r.amount_band, r.gap_days)
-        for r in QUERIES["orders_duplicate_detection"](spark, sf_dir).collect()
-    }
-    assert got == want
 
 
 def test_dsir_sample_matches_python_gumbel(spark, sf_dir):

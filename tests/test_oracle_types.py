@@ -94,9 +94,8 @@ def test_harness_reproduces_hugeint_fail(spark):
 def test_harness_flags_int_width_split(spark):
     # r13 width-audit rule: value-identical outputs that differ only in
     # integer WIDTH across engines (Spark int32 vs DuckDB int64) must fail
-    # the local compare — three such latent splits were found and widened
-    # this round (tag_top1/tag_threshold tag_idx, orders_cohort_ltv
-    # month_offset).
+    # the local compare — r13 found and widened three such latent splits,
+    # among them tag_top1/tag_threshold's tag_idx.
     import pyspark.sql.functions as F
 
     def q32(spark, sf_dir):

@@ -495,18 +495,6 @@ def test_tfidf_and_dsir_scalar_broadcast_no_cartesian(spark, sf_dir):
             assert op not in plan, (name, op)
 
 
-def test_markov_transitions_no_join_bounded_shuffles(spark, sf_dir):
-    # lead() needs one user-partition exchange; the transition rollup is one
-    # map-side-combined exchange; the per-source probability window runs
-    # over the tiny (type × type) relation. No join anywhere.
-    plan = inspect.executed_plan(QUERIES["events_markov_transitions"](spark, sf_dir))
-    for op in ["SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-               "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas"]:
-        assert op not in plan, op
-    df = QUERIES["events_markov_transitions"](spark, sf_dir)
-    assert inspect.count_shuffles(df) <= 3
-
-
 def test_scd2_single_customer_shuffle(spark, sf_dir):
     # change detection (lag) and interval close-out (lead) share the
     # (o_custkey; o_date, o_orderkey) partitioning — Spark must plan ONE
@@ -633,17 +621,6 @@ def test_quality_calibration_lang_partitioned_sort(spark, sf_dir):
     df = QUERIES["text_quality_calibration"](spark, sf_dir)
     plan = inspect.executed_plan(df)
     assert "Exchange SinglePartition" not in plan
-    for op in ["SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-               "BatchEvalPython", "MapInPandas"]:
-        assert op not in plan, op
-
-
-def test_rolling_zscore_single_user_shuffle(spark, sf_dir):
-    # both rolling moments + count share ONE (user_id; ts, event_id)
-    # window — a second exchange or a join would double the fact pass
-    df = QUERIES["events_rolling_zscore"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    assert inspect.count_shuffles(df) == 1
     for op in ["SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
                "BatchEvalPython", "MapInPandas"]:
         assert op not in plan, op
@@ -824,16 +801,6 @@ def test_scene_cuts_doc_keyed_single_window(spark, sf_dir):
     assert inspect.count_shuffles(df) <= 2
 
 
-def test_cohort_ltv_customer_keyed(spark, sf_dir):
-    # one customer-keyed equi-join (first-order cohort), matrix-sized
-    # window + size join — no cartesian, no Python
-    df = QUERIES["orders_cohort_ltv"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    for op in ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython",
-               "MapInPandas"]:
-        assert op not in plan, op
-
-
 def test_regression_single_agg_no_python(spark, sf_dir):
     # distributed OLS = ONE hash aggregate of sufficient statistics after
     # the partkey equi-join; coefficients are scalar math — no second
@@ -844,16 +811,6 @@ def test_regression_single_agg_no_python(spark, sf_dir):
                "MapInPandas"]:
         assert op not in plan, op
     assert plan.count("FileScan") == 2  # lineitem + part, once each
-
-
-def test_ewma_no_range_join_no_window(spark, sf_dir):
-    # the EWMA window is an explode + equi groupBy — no range join, no
-    # per-row window state, no ordering spine
-    df = QUERIES["events_ewma_daily"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    for op in ["CartesianProduct", "BroadcastNestedLoop", "Window",
-               "BatchEvalPython", "ArrowEvalPython"]:
-        assert op not in plan, op
 
 
 def test_hll_single_corpus_scan_per_branch(spark, sf_dir):
@@ -999,16 +956,6 @@ def test_er_blocking_join_is_block_keyed(spark, sf_dir):
     plan = inspect.executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
-
-
-def test_backlog_spine_windows_only(spark, sf_dir):
-    # deltas collapse to the day spine BEFORE the running sums: the only
-    # Window runs over the spine aggregate, and no join anywhere
-    df = QUERIES["orders_backlog_timeseries"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    for op in ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"]:
-        assert op not in plan, op
-    assert "Window" in plan
 
 
 def test_lev_verify_distance_on_candidates_only(spark, sf_dir):
@@ -1172,14 +1119,9 @@ def test_r11_continuation_plan_shapes(spark):
 # naming the bound.
 
 # Runtime allowlist: query name -> why the windowed relation is bounded.
-# (Specs ordered on the bucketed-rank machinery's `_bkt` spine are allowed
-# structurally: the spine is ≤RANK_BUCKETS rows by construction.)
 UNPARTITIONED_WINDOW_OK = {
     "sim_hybrid_rrf": "fusion of two bounded top-k lists",
     "sim_ann_graph_search": "beam candidates, bounded by GBS_BEAM",
-    "orders_backlog_timeseries": "daily spine — calendar-bounded",
-    "orders_max_drawdown": "daily spine — calendar-bounded",
-    "orders_seasonal_decompose": "month spine — calendar-bounded",
     "parts_pareto_skyline": "constant bucket grid",
     "text_ngram_novelty": "constant bucket grid",
     "text_bm25_topk": "rank window AFTER .limit(k)",
@@ -1199,9 +1141,7 @@ UNPARTITIONED_WINDOW_OK = {
     "part_abc_classification": "parts-dimension relation (docstring)",
     "text_textrank_keywords": "vocab-cardinality — sublinear; SCALE.md row",
     "text_vocab_coverage_curve": "vocab-cardinality — sublinear; SCALE.md row",
-    "events_user_hazard_curve": "day-offset spine — calendar-bounded",
     "graph_effective_diameter": "distinct BFS distances ≤ diameter",
-    "orders_theil_sen_trend": "calendar-bounded trailing-year pair stage",
     "text_ndcg_eval": "two bounded top-k rankings",
     "text_heaps_law_fit": "constant checkpoint spine — ≤ HEAPS_CHECKPOINTS rows",
 }
@@ -1228,10 +1168,9 @@ def _unpartitioned_window_specs(plan: str) -> list[str]:
 def test_registry_wide_unpartitioned_window_allowlist(spark):
     # Runtime prong: every non-stream registry query's executed plan may
     # contain an unpartitioned window ONLY if the query is allowlisted
-    # with a boundedness reason (or the window is the bucketed-rank
-    # machinery's ≤RANK_BUCKETS `_bkt` spine). Allowlist entries may go
-    # unused at runtime — eager checkpoints hide upstream machinery from
-    # the final plan, so visibility varies; the STATIC audit below is the
+    # with a boundedness reason. Allowlist entries may go unused at
+    # runtime — eager checkpoints hide upstream machinery from the final
+    # plan, so visibility varies; the STATIC audit below is the
     # staleness-checked prong.
     import os
 
@@ -1240,20 +1179,14 @@ def test_registry_wide_unpartitioned_window_allowlist(spark):
     for name, fn in QUERIES.items():
         if name.startswith("stream_"):
             continue
-        specs = [
-            s
-            for s in _unpartitioned_window_specs(
-                inspect.executed_plan(fn(spark, sf))
-            )
-            if not s.startswith("_bkt#")
-        ]
+        specs = _unpartitioned_window_specs(inspect.executed_plan(fn(spark, sf)))
         if specs and name not in UNPARTITIONED_WINDOW_OK:
             bad.append(f"{name}: {specs}")
     assert not bad, (
         "unpartitioned window over a relation with no triaged bound "
-        "(single-task global sort at scale) — fix via the bucketed two-pass "
-        "rank machinery (bucketed_ntile) or allowlist with a "
-        f"boundedness reason: {bad}"
+        "(single-task global sort at scale) — partition the window by an "
+        "entity key, or rank within range buckets and add per-bucket "
+        f"offsets, or allowlist with a boundedness reason: {bad}"
     )
 
 
@@ -1261,16 +1194,10 @@ def test_registry_wide_unpartitioned_window_allowlist(spark):
 # Keyed by construction SITE so checkpoint-hidden machinery (the
 # events_kruskal_wallis lesson) cannot dodge the gate.
 STATIC_WINDOW_OK = {
-    ("relational.py", "_bucket_offsets"): "bucketed-rank spine ≤RANK_BUCKETS",
     ("relational.py", "part_abc_classification"): "parts-dimension relation",
-    ("relational.py", "orders_seasonal_decompose"): "month spine",
-    ("relational.py", "orders_backlog_timeseries"): "daily spine",
     ("relational.py", "histogram_quantile_estimates"): "constant bucket grid",
-    ("relational.py", "events_user_hazard_curve"): "day-offset spine",
     ("relational.py", "parts_pareto_skyline"): "constant bucket grid",
-    ("relational.py", "orders_max_drawdown"): "daily spine",
     ("relational.py", "events_hmm_viterbi_decode"): "daily spine",
-    ("relational.py", "orders_theil_sen_trend"): "calendar-bounded pair stage",
     ("curation.py", "corpus_source_mix"): "#sources strata",
     ("curation.py", "corpus_token_budget"): "#source×lang strata",
     ("curation.py", "corpus_temperature_mix"): "#sources strata",
@@ -1326,9 +1253,10 @@ def test_static_unpartitioned_window_audit():
             if key not in STATIC_WINDOW_OK:
                 bad.append(f"{p.name}:{i} in {cur}: {line.strip()[:80]}")
     assert not bad, (
-        "new unpartitioned-Window construction site — use the bucketed "
-        "two-pass rank machinery (bucketed_ntile) for unbounded relations, "
-        f"or allowlist the bounded spine with a reason: {bad}"
+        "new unpartitioned-Window construction site — over an unbounded "
+        "relation, partition by an entity key or rank within range buckets "
+        "plus per-bucket offsets; over a bounded spine, allowlist it with a "
+        f"reason: {bad}"
     )
     stale = set(STATIC_WINDOW_OK) - hits
     assert not stale, f"stale STATIC_WINDOW_OK entries (site gone): {stale}"

@@ -21,10 +21,13 @@ def _touch(path: str, content: bytes = b"img-bytes") -> None:
 
 def test_scan_extension_filter_and_case(spark, tmp_path):
     d = str(tmp_path)
-    for name in ["a.jpg", "b.PNG", "c.txt", "d.webp", "e.jpeg.bak", "f.GIF"]:
+    names = ["a.jpg", "b.PNG", "c.txt", "d.webp", "e.jpeg.bak", "f.GIF"]
+    # mixed-case suffixes: the reference lower-cases before matching
+    names += ["c.Jpg", "d.pNg"]
+    for name in names:
         _touch(os.path.join(d, name))
     got = {os.path.basename(r.path) for r in scan_images(spark, d).collect()}
-    assert got == {"a.jpg", "b.PNG", "d.webp", "f.GIF"}
+    assert got == {"a.jpg", "b.PNG", "d.webp", "f.GIF", "c.Jpg", "d.pNg"}
 
 
 def test_scan_recursive_flag(spark, tmp_path):

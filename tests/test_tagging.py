@@ -119,3 +119,5 @@ def test_flagship_runs_on_fixtures(spark, sf_dir):
     assert df.columns == ["image_id", "tags_text"]
     n = df.count()
     assert n == 500  # one row per embeddings vec_id at sf0.001
+    # the dimension fold collects 62 literal rows: one task, not one per core
+    assert tagging.demo_tag_dim(spark).rdd.getNumPartitions() == 1

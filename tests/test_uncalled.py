@@ -1,4 +1,5 @@
-"""Every top-level function and class of the package has a caller.
+"""Every top-level function, class and UPPER_CASE constant of the package
+has a caller.
 
 A definition counts as called when package code, ``__spark_entry__.py``,
 ``bench.py``, ``tools/`` or ``perfbench/`` (its tests excluded) names it:
@@ -10,9 +11,11 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "cl_tagger_batch_processing_spark"
+CONSTANT = re.compile(r"_?[A-Z][A-Z0-9_]*")
 
 # (module, name) -> why it may stay without a caller. A name of "*"
 # exempts every definition of the module.
@@ -90,7 +93,12 @@ def _references(module: str, path: str, modules: set[str]) -> set[tuple[str, str
 
     def visit(node: ast.AST, inside: str | None) -> None:
         inside = own_bodies.get(id(node), inside)
-        if isinstance(node, ast.Name) and node.id != inside:
+        # Loads only: a constant's own assignment target is not a caller.
+        if (
+            isinstance(node, ast.Name)
+            and isinstance(node.ctx, ast.Load)
+            and node.id != inside
+        ):
             refs.add((module, node.id))
         elif isinstance(node, ast.Attribute):
             dotted, base = [node.attr], node.value
@@ -112,6 +120,26 @@ def _references(module: str, path: str, modules: set[str]) -> set[tuple[str, str
     return refs
 
 
+def _definitions(tree: ast.Module) -> list[str]:
+    """Top-level function and class names, and UPPER_CASE constant names
+    bound by a plain or annotated assignment (tuple targets included)."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            out.append(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [
+                n.id
+                for t in targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+                and isinstance(n.ctx, ast.Store)
+                and CONSTANT.fullmatch(n.id)
+            ]
+    return out
+
+
 def _uncalled() -> set[tuple[str, str]]:
     sources = _sources()
     modules = set(sources)
@@ -122,10 +150,9 @@ def _uncalled() -> set[tuple[str, str]]:
     for module, path in sources.items():
         if not (module.startswith(PKG) or module == "__spark_entry__"):
             continue
-        for node in _parse(path).body:
-            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-                if (module, node.name) not in refs:
-                    out.add((module, node.name))
+        for name in _definitions(_parse(path)):
+            if (module, name) not in refs:
+                out.add((module, name))
     return out
 
 

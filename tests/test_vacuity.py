@@ -88,12 +88,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("text_heavy_hitters_cms", "ALL_ZERO", "overestimate"): (
         "identity-checked estimator gap (est - exact), pinned by equality tests"
     ),
-    ("events_bot_detection", "ALL_ZERO", "is_bot"): (
-        "honest negative: only the volume flag can fire on the organic "
-        "fixture (max hourly peak 4, min type diversity 5 at every scale); "
-        "TRUE path pinned by test_bot_detection_fires_on_synthetic_bot "
-        "through the factored relational.bot_verdict"
-    ),
     ("er_blocking_pairs", "ALL_ZERO", "lev_dist"): (
         "whole-word name edits exceed the <=2 threshold by construction; "
         "the union-find cross-check pins the closure"
@@ -109,12 +103,6 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
     ),
     ("text_gopher_flags", "ALL_FALSE", "flag_repetition"): (
         "clean-fixture honest negative; same synthetic-pathology pin"
-    ),
-    # --- r12 addition triage -------------------------------------------
-    ("events_welch_anova", "ALL_ZERO", "k_dropped"): (
-        "honest zero: every fixture event type has n>=2 and positive "
-        "variance at every scale; the degenerate-group TRUE path is "
-        "pinned by test_welch_anova_drops_synthetic_constant_group"
     ),
     # --- text and embedding QA triage ----------------------------------
     ("text_heaps_law_fit", "ALL_ZERO", "heaps_beta"): (
