@@ -59,6 +59,29 @@ def mm_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _byte_histograms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mm_byte_histogram``'s kernel. Module-level, like every function
+    the package hands to Spark: it is pickled by reference, so unpickling
+    it in a worker imports the package (see ``install_zip_guard``)."""
+    import numpy as np
+
+    for pdf in batches:
+        hists = []
+        entropies = []
+        for content in pdf["content"]:
+            # NumPy, not a Python byte loop: the UDF cost must be
+            # O(bytes) in vectorized C, or the Python boundary becomes
+            # the pipeline bottleneck exactly as SURVEY §2.9 warns.
+            arr = np.frombuffer(bytes(content), dtype=np.uint8)
+            hist = np.bincount(arr >> HIST_SHIFT, minlength=HIST_BINS)
+            n = arr.size or 1
+            p = hist[hist > 0] / n
+            ent = float(-(p * np.log2(p)).sum())
+            hists.append(hist.tolist())
+            entropies.append(round(ent, 6))
+        yield pd.DataFrame({"doc_id": pdf["doc_id"], "hist": hists, "entropy": entropies})
+
+
 def mm_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over binary payloads via Arrow-batched
     ``mapInPandas``: 16-bin byte histogram + Shannon entropy per payload,
@@ -72,31 +95,8 @@ def mm_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the function body, not the plan.
     """
     docs = load_table(spark, sf_dir, "documents")
-    payload = with_binary_payload(docs)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            hists = []
-            entropies = []
-            for content in pdf["content"]:
-                # NumPy, not a Python byte loop: the UDF cost must be
-                # O(bytes) in vectorized C, or the Python boundary becomes
-                # the pipeline bottleneck exactly as SURVEY §2.9 warns.
-                arr = np.frombuffer(bytes(content), dtype=np.uint8)
-                hist = np.bincount(arr >> HIST_SHIFT, minlength=HIST_BINS)
-                n = arr.size or 1
-                p = hist[hist > 0] / n
-                ent = float(-(p * np.log2(p)).sum())
-                hists.append(hist.tolist())
-                entropies.append(round(ent, 6))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "hist": hists, "entropy": entropies}
-            )
-
-    wide = payload.mapInPandas(
-        extract, schema="doc_id bigint, hist array<bigint>, entropy double"
+    wide = with_binary_payload(docs).mapInPandas(
+        _byte_histograms, schema="doc_id bigint, hist array<bigint>, entropy double"
     )
     # Explode JVM-side (codegen'd generator), not in the kernel: the Arrow
     # transfer stays one row per payload and the 16x fan-out is free.
@@ -114,6 +114,25 @@ FRAME_CHARS = 64
 FRAME_STRIDE = 4
 
 
+def _frame_samples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mm_frame_sample``'s kernel (module-level, see ``_byte_histograms``)."""
+    import hashlib
+
+    for pdf in batches:
+        out_id, out_idx, out_md5, out_n = [], [], [], []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            n_frames = (len(text) + FRAME_CHARS - 1) // FRAME_CHARS
+            for frame_idx in range(0, n_frames, FRAME_STRIDE):
+                frame = text[frame_idx * FRAME_CHARS : (frame_idx + 1) * FRAME_CHARS]
+                out_id.append(doc_id)
+                out_idx.append(frame_idx)
+                out_md5.append(hashlib.md5(frame.encode("utf-8")).hexdigest())
+                out_n.append(n_frames)
+        yield pd.DataFrame(
+            {"doc_id": out_id, "frame_idx": out_idx, "frame_md5": out_md5, "n_frames": out_n}
+        )
+
+
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over "video" payloads via Arrow-batched mapInPandas:
     split each payload into fixed-size frames, keep every FRAME_STRIDE-th,
@@ -127,27 +146,10 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary column in, Arrow batches through Python, long-form feature rows
     out, fully partition-parallel with no driver involvement.
     """
-    import hashlib
-
     docs = load_table(spark, sf_dir, "documents")
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_idx, out_md5, out_n = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n_frames = (len(text) + FRAME_CHARS - 1) // FRAME_CHARS
-                for frame_idx in range(0, n_frames, FRAME_STRIDE):
-                    frame = text[frame_idx * FRAME_CHARS : (frame_idx + 1) * FRAME_CHARS]
-                    out_id.append(doc_id)
-                    out_idx.append(frame_idx)
-                    out_md5.append(hashlib.md5(frame.encode("utf-8")).hexdigest())
-                    out_n.append(n_frames)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "frame_idx": out_idx, "frame_md5": out_md5, "n_frames": out_n}
-            )
-
     return docs.select("doc_id", "text").mapInPandas(
-        sample, schema="doc_id bigint, frame_idx bigint, frame_md5 string, n_frames bigint"
+        _frame_samples,
+        schema="doc_id bigint, frame_idx bigint, frame_md5 string, n_frames bigint",
     )
 
 

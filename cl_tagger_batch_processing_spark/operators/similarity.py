@@ -21,6 +21,7 @@ All vector math uses the integer-quantized embeddings from
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -594,6 +595,56 @@ def _kmeans_assign_full(
 SEMANTIC_COSINE_THRESHOLD = 0.3
 
 
+def _semantic_pairs(threshold: float, pdf):
+    """``dedup_semantic``'s per-cluster pair scoring. Module-level, like
+    every function the package hands to Spark: it is pickled by reference,
+    so unpickling it in a worker imports the package."""
+    import numpy as np
+    import pandas as pd
+
+    empty = pd.DataFrame(
+        {
+            "cluster_id": pd.Series(dtype="int64"),
+            "vec_a": pd.Series(dtype="int64"),
+            "vec_b": pd.Series(dtype="int64"),
+            "cosine": pd.Series(dtype="float64"),
+        }
+    )
+    n = len(pdf)
+    if n < 2:
+        return empty
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    order = np.argsort(ids)
+    ids = ids[order]
+    q = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["qv"].iloc[order]])
+    rn = np.sqrt(pdf["nrm"].to_numpy(dtype=np.int64)[order].astype(np.float64))
+    cid = int(pdf["cluster_id"].iloc[0])
+    # Row-block the pair matrix: memory is BLOCK×n, never n×n, so a
+    # pathologically large cluster (skewed data, k mis-derived) degrades
+    # to more blocks instead of an executor OOM. Values are unchanged —
+    # each (a, b) pair with a < b is scored exactly once.
+    BLOCK = 1024
+    outs = []
+    for lo in range(0, n - 1, BLOCK):
+        hi = min(lo + BLOCK, n)
+        cos = (q[lo:hi] @ q.T).astype(np.float64) / np.outer(rn[lo:hi], rn)
+        ia, ib = np.nonzero(cos >= threshold)
+        upper = lo + ia < ib  # strict upper triangle in global indices
+        ia, ib = ia[upper], ib[upper]
+        if len(ia):
+            outs.append(
+                pd.DataFrame(
+                    {
+                        "cluster_id": np.full(len(ia), cid, dtype=np.int64),
+                        "vec_a": ids[lo + ia],
+                        "vec_b": ids[ib],
+                        "cosine": cos[ia, ib],
+                    }
+                )
+            )
+    return pd.concat(outs, ignore_index=True) if outs else empty
+
+
 def dedup_semantic(
     spark: SparkSession, sf_dir: str, threshold: float = SEMANTIC_COSINE_THRESHOLD
 ) -> DataFrame:
@@ -622,54 +673,9 @@ def dedup_semantic(
         "cluster_id", "vec_id", "qv", "nrm"
     )
 
-    def _score(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "cluster_id": pd.Series(dtype="int64"),
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
-        n = len(pdf)
-        if n < 2:
-            return empty
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids)
-        ids = ids[order]
-        q = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["qv"].iloc[order]])
-        rn = np.sqrt(pdf["nrm"].to_numpy(dtype=np.int64)[order].astype(np.float64))
-        cid = int(pdf["cluster_id"].iloc[0])
-        # Row-block the pair matrix: memory is BLOCK×n, never n×n, so a
-        # pathologically large cluster (skewed data, k mis-derived) degrades
-        # to more blocks instead of an executor OOM. Values are unchanged —
-        # each (a, b) pair with a < b is scored exactly once.
-        BLOCK = 1024
-        outs = []
-        for lo in range(0, n - 1, BLOCK):
-            hi = min(lo + BLOCK, n)
-            cos = (q[lo:hi] @ q.T).astype(np.float64) / np.outer(rn[lo:hi], rn)
-            ia, ib = np.nonzero(cos >= threshold)
-            upper = lo + ia < ib  # strict upper triangle in global indices
-            ia, ib = ia[upper], ib[upper]
-            if len(ia):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "cluster_id": np.full(len(ia), cid, dtype=np.int64),
-                            "vec_a": ids[lo + ia],
-                            "vec_b": ids[ib],
-                            "cosine": cos[ia, ib],
-                        }
-                    )
-                )
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
     return base.groupBy("cluster_id").applyInPandas(
-        _score, "cluster_id bigint, vec_a bigint, vec_b bigint, cosine double"
+        partial(_semantic_pairs, threshold),
+        "cluster_id bigint, vec_a bigint, vec_b bigint, cosine double",
     )
 
 
@@ -1181,6 +1187,65 @@ def embedding_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gram_partials(batches):
+    """``outer_product_stats``' per-batch kernel (module-level, see
+    ``_semantic_pairs``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    for batch in batches:
+        col = batch.column(0)
+        if isinstance(col, pa.ChunkedArray):  # pragma: no cover
+            col = col.combine_chunks()
+        valid = col.drop_null()
+        if len(valid) == 0:
+            continue
+        if valid.values.null_count:
+            # NULL inside a qv array would convert to float NaN and
+            # then to garbage int64 — fail loudly instead (the old
+            # expression form null-skipped in SUM; no fixture or
+            # quantizer output contains element nulls, so this is a
+            # data-contract assert, not a behavior branch).
+            raise ValueError(
+                "outer_product_stats: qv arrays must not contain null "
+                "elements"
+            )
+        offsets = valid.offsets.to_numpy(zero_copy_only=False)
+        values = valid.values.to_numpy(zero_copy_only=False).astype(
+            np.int64, copy=False
+        )
+        lens = np.diff(offsets)
+        # one partial set per distinct vector length (uniform-d corpora
+        # take the single-pass fast path; ragged rows only combine
+        # with rows of the same length, mirroring the per-row
+        # upper-triangle emission of the expression form)
+        for d in np.unique(lens):
+            idx = np.nonzero(lens == d)[0]
+            starts = offsets[idx]
+            gather = starts[:, None] + np.arange(d)[None, :]
+            x = values[gather]
+            gram = x.T @ x
+            sx = x.sum(axis=0)
+            iu, ju = np.triu_indices(int(d))
+            n = np.full(iu.size, len(idx), dtype=np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(iu + 1, type=pa.int64()),
+                    pa.array(ju + 1, type=pa.int64()),
+                    pa.array(n, type=pa.int64()),
+                    pa.array(sx[iu], type=pa.int64()),
+                    pa.array(sx[ju], type=pa.int64()),
+                    pa.array(gram[iu, iu], type=pa.int64()),
+                    pa.array(gram[ju, ju], type=pa.int64()),
+                    pa.array(gram[iu, ju], type=pa.int64()),
+                ],
+                names=[
+                    "dim_i", "dim_j", "pn", "psx", "psy",
+                    "psxx", "psyy", "psxy",
+                ],
+            )
+
+
 def outer_product_stats(base: DataFrame) -> DataFrame:
     """Upper-triangle (dim_i ≤ dim_j, 1-based) sufficient statistics of the
     quantized embedding matrix in ONE corpus pass with ZERO joins.
@@ -1196,68 +1261,12 @@ def outer_product_stats(base: DataFrame) -> DataFrame:
     self-join shuffled n·d rows through a join no algebra required —
     VERDICT r7 ask #2). All sums are exact BIGINTs in any summation
     order and any batch split — engine-portable, value-identical."""
-    import numpy as np
-    import pyarrow as pa
-
     out_schema = (
         "dim_i bigint, dim_j bigint, pn bigint, psx bigint, psy bigint, "
         "psxx bigint, psyy bigint, psxy bigint"
     )
 
-    def _partials(batches):
-        for batch in batches:
-            col = batch.column(0)
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            valid = col.drop_null()
-            if len(valid) == 0:
-                continue
-            if valid.values.null_count:
-                # NULL inside a qv array would convert to float NaN and
-                # then to garbage int64 — fail loudly instead (the old
-                # expression form null-skipped in SUM; no fixture or
-                # quantizer output contains element nulls, so this is a
-                # data-contract assert, not a behavior branch).
-                raise ValueError(
-                    "outer_product_stats: qv arrays must not contain null "
-                    "elements"
-                )
-            offsets = valid.offsets.to_numpy(zero_copy_only=False)
-            values = valid.values.to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            lens = np.diff(offsets)
-            # one partial set per distinct vector length (uniform-d corpora
-            # take the single-pass fast path; ragged rows only combine
-            # with rows of the same length, mirroring the per-row
-            # upper-triangle emission of the expression form)
-            for d in np.unique(lens):
-                idx = np.nonzero(lens == d)[0]
-                starts = offsets[idx]
-                gather = starts[:, None] + np.arange(d)[None, :]
-                x = values[gather]
-                gram = x.T @ x
-                sx = x.sum(axis=0)
-                iu, ju = np.triu_indices(int(d))
-                n = np.full(iu.size, len(idx), dtype=np.int64)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(iu + 1, type=pa.int64()),
-                        pa.array(ju + 1, type=pa.int64()),
-                        pa.array(n, type=pa.int64()),
-                        pa.array(sx[iu], type=pa.int64()),
-                        pa.array(sx[ju], type=pa.int64()),
-                        pa.array(gram[iu, iu], type=pa.int64()),
-                        pa.array(gram[ju, ju], type=pa.int64()),
-                        pa.array(gram[iu, ju], type=pa.int64()),
-                    ],
-                    names=[
-                        "dim_i", "dim_j", "pn", "psx", "psy",
-                        "psxx", "psyy", "psxy",
-                    ],
-                )
-
-    partials = base.select("qv").mapInArrow(_partials, out_schema)
+    partials = base.select("qv").mapInArrow(_gram_partials, out_schema)
     return partials.groupBy("dim_i", "dim_j").agg(
         F.sum("pn").alias("n_vecs"),
         F.sum("psx").alias("sx"),
@@ -2169,6 +2178,34 @@ INTRINSIC_DIM_MAX_CANDIDATES = 1_000_000
 _INTRINSIC_CAND_CACHE: dict = {}
 
 
+def _twonn_batch(cand_bc, vec_id, qv, nrm):
+    """``embedding_intrinsic_dim``'s 2-NN kernel (module-level, see
+    ``_semantic_pairs``)."""
+    import numpy as np
+    import pandas as pd
+
+    cand_ids, cand_mat, cand_nrm = cand_bc.value
+    ids = vec_id.to_numpy(dtype=np.int64)
+    q_mat = np.array(qv.tolist(), dtype=np.int64)
+    q_nrm = nrm.to_numpy(dtype=np.int64)
+    d2 = q_nrm[:, None] + cand_nrm[None, :] - 2 * (q_mat @ cand_mat.T)
+    # self-exclusion: vec_id is unique, so each query masks at most one
+    # candidate column; the int64 maximum is far above any real d² (bounded
+    # by 2·64·(scale·‖x‖∞)² ≪ 2⁶³)
+    d2[ids[:, None] == cand_ids[None, :]] = np.iinfo(np.int64).max
+    n_real = len(cand_ids) - np.isin(ids, cand_ids).astype(np.int64)
+    k2 = np.partition(d2, 1, axis=1)[:, :2] if d2.shape[1] >= 2 else d2
+    r1 = pd.array(
+        np.where(n_real >= 1, k2[:, 0], 0), dtype="Int64"
+    )
+    r2 = pd.array(
+        np.where(n_real >= 2, k2[:, -1], 0), dtype="Int64"
+    )
+    r1[np.asarray(n_real < 1)] = pd.NA
+    r2[np.asarray(n_real < 2)] = pd.NA
+    return pd.DataFrame({"r1sq": r1, "r2sq": r2})
+
+
 def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017) — the
     representation-QA readout that says how many degrees of freedom the
@@ -2187,8 +2224,9 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: squared distances r² = ‖a‖² + ‖b‖² − 2·a·b are EXACT
     integers on the quantized vectors (the dedup_embedding_cosine
     convention), computed as one int64 matrix product per Arrow batch
-    in the vectorized 2-NN kernel below; each ln ratio evaluates once
-    in double and rides the 9dp/DECIMAL(28,9) rail into the fold.
+    in the vectorized 2-NN kernel ``_twonn_batch``; each ln ratio
+    evaluates once in double and rides the 9dp/DECIMAL(28,9) rail into
+    the fold.
     Duplicate-vector queries (r1 = 0) drop and are reported.
 
     Scale shape: the exact queries×all candidate stage is the
@@ -2215,7 +2253,6 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two smallest d² values per query — a multiset property, invariant to
     # the old (d2, oid) tie-break.
     import numpy as np
-    import pandas as pd
 
     from ..checkpointing import session_cache_sweep
 
@@ -2250,32 +2287,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         # closure; executors fetch the blocks once per JVM.
         cached = spark.sparkContext.broadcast((cand_ids, cand_mat, cand_nrm))
         _INTRINSIC_CAND_CACHE[memo_key] = cached
-    cand_bc = cached
-    sentinel = np.iinfo(np.int64).max
-
-    def _twonn_batch(vec_id, qv, nrm):
-        cand_ids, cand_mat, cand_nrm = cand_bc.value
-        ids = vec_id.to_numpy(dtype=np.int64)
-        q_mat = np.array(qv.tolist(), dtype=np.int64)
-        q_nrm = nrm.to_numpy(dtype=np.int64)
-        d2 = q_nrm[:, None] + cand_nrm[None, :] - 2 * (q_mat @ cand_mat.T)
-        # self-exclusion: vec_id is unique, so each query masks at most one
-        # candidate column; the sentinel is far above any real d² (bounded
-        # by 2·64·(scale·‖x‖∞)² ≪ 2⁶³)
-        d2[ids[:, None] == cand_ids[None, :]] = sentinel
-        n_real = len(cand_ids) - np.isin(ids, cand_ids).astype(np.int64)
-        k2 = np.partition(d2, 1, axis=1)[:, :2] if d2.shape[1] >= 2 else d2
-        r1 = pd.array(
-            np.where(n_real >= 1, k2[:, 0], 0), dtype="Int64"
-        )
-        r2 = pd.array(
-            np.where(n_real >= 2, k2[:, -1], 0), dtype="Int64"
-        )
-        r1[np.asarray(n_real < 1)] = pd.NA
-        r2[np.asarray(n_real < 2)] = pd.NA
-        return pd.DataFrame({"r1sq": r1, "r2sq": r2})
-
-    twonn = F.pandas_udf(_twonn_batch, "struct<r1sq:bigint,r2sq:bigint>")
+    twonn = F.pandas_udf(partial(_twonn_batch, cached), "struct<r1sq:bigint,r2sq:bigint>")
     two_nn = (
         base.where(F.col("vec_id") < INTRINSIC_DIM_QUERY_CAP)
         .select("vec_id", twonn("vec_id", "qv", "nrm").alias("s"))

@@ -24,6 +24,14 @@ tags_text; the reference's success/failure counters (A3) are ``summarize``.
 The Python boundary is exactly one Arrow-batched ``mapInArrow`` stage; the
 scorer batches tensors (vs the reference's hard-coded batch=1, appV2.py:48)
 and builds any native session lazily per executor process.
+
+Every Python task starts with ``importlib.invalidate_caches()`` in
+PySpark's worker. Up to CPython 3.12 that re-reads the directory of every
+zip archive on the worker's path (``pyspark.zip``, the ``spark-core`` jar),
+0.1-0.25 CPU-s per task. Unpickling this stage's function imports the
+package, whose ``__init__`` then installs ``install_zip_guard`` in the
+worker, so an archive is re-read only when it has changed. On CPython
+3.13+ the guard is a no-op, because there the call re-reads lazily.
 """
 
 from __future__ import annotations
@@ -130,8 +138,10 @@ def one_task_per_core(images: DataFrame) -> DataFrame:
     spark.sql.files.maxPartitionBytes))`` partitions. The file splitter
     charges every file ``openCostInBytes`` (4 MB by default), so a folder
     of small images plans many more partitions than cores, and every
-    Python task has a fixed cost; a narrow coalesce only merges, so a scan
-    that already has that many partitions or fewer is unchanged."""
+    Python task has a fixed cost: the worker hand-off and Arrow set-up,
+    plus the zip directory re-reads of each worker's first two tasks (see
+    ``install_zip_guard``). A narrow coalesce only merges, so a scan that
+    already has that many partitions or fewer is unchanged."""
     session = images.sparkSession._jsparkSession
     listed = int(images._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     max_bytes = session.sessionState().conf().filesMaxPartitionBytes()

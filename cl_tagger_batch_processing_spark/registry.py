@@ -341,17 +341,14 @@ register("unpivot_measures", relational.unpivot_measures)
 # roundtrips, remaining stream_* queries, VARIANT/LATERAL surfaces and the
 # composed ANN/SemDeDup verdicts by the r11 rotation — all registered above.
 
-# Market-basket pair counts (bounded self-join: baskets are small).
 # Lag analytics over the aggregated series, not the fact rows.
 register("yoy_revenue_growth", relational.yoy_revenue_growth)
-# Lift-normalized affinity (broadcast marginals + 1-row scalar total).
 # Operational latency report (exact interpolated p90 over integers).
 register("order_lead_times", relational.order_lead_times)
 # Classifier-QA confusion matrix over the langid heuristic.
 register("langid_confusion_matrix", text.langid_confusion_matrix)
 # Incremental dedup: incoming batch vs the corpus hash store (anti join).
 register("dedup_exact_incremental", dedup.dedup_exact_incremental)
-# Source-pair shingle Jaccard (mixture-design diagnostics).
 # Per-cluster distance-outlier QA over the k-means assignment.
 register("embedding_outliers", similarity.embedding_outliers)
 # Power-of-two token-length histogram (exact integer log2 buckets).

@@ -22,13 +22,14 @@ Two surfaces (SURVEY.md §2.1 S3):
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 # POSIX mount-point prefixes that conventionally expose a filesystem shared
 # by every executor (NFS/FUSE mounts) — the ONLY kind of path this sink can
-# write on a multi-node cluster, because ``write_batches`` uses plain
+# write on a multi-node cluster, because ``_write_batches`` uses plain
 # ``open()``. URI-scheme paths (hdfs://, s3a://, ...) are NOT writable by
 # open() at all — those belong to ``write_tags_parquet``, which goes through
 # Hadoop's filesystem layer.
@@ -70,6 +71,20 @@ def _require_shared_out_dir(tagged: DataFrame, out_dir: str, allow_executor_loca
         )
 
 
+def _write_batches(out_dir: str, batches):
+    """The sidecar writer of one task. Module-level, so it is pickled by
+    reference and unpickling it in a worker imports the package."""
+    os.makedirs(out_dir, exist_ok=True)
+    n = 0
+    for batch in batches:
+        for path, text in zip(*batch.to_pydict().values()):
+            base = os.path.splitext(os.path.basename(path))[0]  # appV2.py:178
+            with open(os.path.join(out_dir, base + ".txt"), "w", encoding="utf-8") as f:
+                f.write(text or "")
+            n += 1
+    yield pa.RecordBatch.from_pydict({"n_written": pa.array([n], pa.int64())})
+
+
 def write_sidecar_txt(tagged: DataFrame, out_dir: str, *, allow_executor_local: bool = False) -> int:
     """Write one ``<basename>.txt`` per row of (path, tags_text).
 
@@ -79,20 +94,8 @@ def write_sidecar_txt(tagged: DataFrame, out_dir: str, *, allow_executor_local: 
     multi-node master (checked; see ``_require_shared_out_dir``).
     """
     _require_shared_out_dir(tagged, out_dir, allow_executor_local)
-
-    def write_batches(batches):
-        os.makedirs(out_dir, exist_ok=True)
-        n = 0
-        for batch in batches:
-            for path, text in zip(*batch.to_pydict().values()):
-                base = os.path.splitext(os.path.basename(path))[0]  # appV2.py:178
-                with open(os.path.join(out_dir, base + ".txt"), "w", encoding="utf-8") as f:
-                    f.write(text or "")
-                n += 1
-        yield pa.RecordBatch.from_pydict({"n_written": pa.array([n], pa.int64())})
-
     written = tagged.select("path", "tags_text").mapInArrow(
-        write_batches, schema="n_written long"
+        partial(_write_batches, out_dir), schema="n_written long"
     )
     # SQL action (fires any upstream Observation); one long per partition.
     return sum(row.n_written for row in written.collect())
