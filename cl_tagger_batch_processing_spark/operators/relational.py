@@ -1240,60 +1240,6 @@ def scd2_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ABC_A_CUTOFF = 0.8
-ABC_B_CUTOFF = 0.95
-
-
-def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC (Pareto) classification: rank parts by discounted revenue and
-    split them into A (first 80% of cumulative revenue), B (next 15%),
-    C (tail) — the inventory-prioritization classic, and the same
-    largest-first cumulative-share shape corpus_token_budget applies to
-    token strata.
-
-    Revenue accumulates in exact DECIMAL (the money discipline everywhere
-    here), so the cumulative shares are exact-rational divisions and the
-    class boundaries cannot drift between engines. One map-side-combined
-    groupBy over lineitem; the ranking windows run over the per-part
-    relation with the (revenue DESC, partkey ASC) tie-break. At 100 TB
-    the per-part relation is parts-sized (dimension-scale), so the
-    unpartitioned windows stay cheap; the fact table is touched once."""
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = (
-        F.col("l_extendedprice").cast("decimal(14,2)")
-        * (F.lit(1).cast("decimal(14,2)") - F.col("l_discount").cast("decimal(14,2)"))
-    ).cast("decimal(18,4)")
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum(rev).cast("decimal(28,4)").alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-    total = Window.partitionBy()
-    cum = (
-        Window.partitionBy()
-        .orderBy(F.desc("revenue"), F.asc("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum_share = (
-        F.sum("revenue").over(cum).cast("double")
-        / F.sum("revenue").over(total).cast("double")
-    )
-    cls = (
-        F.when(F.col("cum_share") <= ABC_A_CUTOFF, F.lit("A"))
-        .when(F.col("cum_share") <= ABC_B_CUTOFF, F.lit("B"))
-        .otherwise(F.lit("C"))
-    )
-    return (
-        per_part.withColumn("cum_share", cum_share)
-        .select(
-            "l_partkey",
-            F.col("revenue").cast("double").alias("revenue"),
-            "n_lines",
-            "cum_share",
-            cls.alias("abc_class"),
-        )
-    )
-
-
 RULE_MIN_SUPPORT = 2
 RULE_MIN_CONFIDENCE = 0.2
 
@@ -1525,56 +1471,6 @@ def approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def supplier_herfindahl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier market concentration per nation: the Herfindahl–Hirschman
-    index Σᵢ shareᵢ² over each nation's supplier revenue shares, plus the
-    effective competitor count 1/HHI — the antitrust-style "is this
-    supply base concentrated?" metric.
-
-    Determinism: HHI = Σrᵢ²/(Σrᵢ)² needs SQUARES of revenues; per-supplier
-    revenue is an exact DECIMAL(·,4), rescaled to an integral DECIMAL(19,0)
-    (×10⁴) so the squares and their sum are EXACT wide integers (Spark
-    DECIMAL(38,0) ≡ oracle HUGEINT, the embedding_covariance convention —
-    a double sum of squares would be association-sensitive). The scale
-    factor cancels in the ratio; one double division at the end.
-
-    Scale: lineitem⋈supplier equi-join, two hash aggregates
-    (supplier, then nation) — all map-side-combinable."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    sup = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
-    )
-    nat = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nationkey"), "n_name"
-    )
-    rev = _dec("l_extendedprice") * _one_minus("l_discount")
-    per_sup = (
-        li.join(sup, "l_suppkey")
-        .groupBy("l_suppkey", "s_nationkey")
-        .agg(F.sum(rev).alias("r"))
-        .select(
-            "s_nationkey",
-            (F.col("r") * F.lit(10000)).cast("decimal(19,0)").alias("ri"),
-        )
-    )
-    per_nation = per_sup.groupBy("s_nationkey").agg(
-        F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum(F.col("ri") * F.col("ri")).alias("sum_sq"),
-        F.sum("ri").alias("total"),
-    )
-    hhi = F.col("sum_sq").cast("double") / (
-        F.col("total").cast("double") * F.col("total").cast("double")
-    )
-    return per_nation.join(F.broadcast(nat), "s_nationkey").select(
-        "n_name",
-        "n_suppliers",
-        hhi.alias("hhi"),
-        (F.lit(1.0) / hhi).alias("effective_suppliers"),
-    )
-
-
 # Entity-resolution blocking: block key = (first name word, p_size),
 # oversized-block guard, and the edit-distance match threshold. Mirrored
 # in the oracle — sync-pinned.
@@ -1638,129 +1534,6 @@ def er_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "name_a",
         "name_b",
         "lev_dist",
-    )
-
-
-# l-diversity threshold over the k-anonymity QI classes. Oracle-mirrored.
-LDIV_L = 3
-
-
-def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit — k-anonymity's necessary companion: a class of
-    k identical quasi-identifier rows still leaks the sensitive attribute
-    if all k share one value (the homogeneity attack). QI key = (nation,
-    balance band) — privacy_k_anonymity's QI tuple WITHOUT the market
-    segment, which this audit instead treats as the sensitive attribute
-    (band width shared via KANON_BAND_WIDTH, sync-pinned); a class is
-    l-diverse when it contains at least LDIV_L distinct sensitive values.
-
-    One hash aggregate over the QI key (distinct-count of the sensitive
-    value rides the same shuffle); entropy-free distinct l-diversity —
-    the auditable variant. Output: class, size, distinct sensitive
-    values, 0/1 verdict."""
-    from .curation import KANON_BAND_WIDTH
-
-    cust = load_table(spark, sf_dir, "customer")
-    band = F.floor(F.col("c_acctbal") / F.lit(KANON_BAND_WIDTH)).cast("bigint")
-    return (
-        cust.select(
-            F.col("c_nationkey").cast("bigint").alias("nation_key"),
-            band.alias("acctbal_band"),
-            "c_mktsegment",
-        )
-        .groupBy("nation_key", "acctbal_band")
-        .agg(
-            F.count(F.lit(1)).alias("class_size"),
-            F.countDistinct("c_mktsegment").cast("bigint").alias("n_sensitive"),
-        )
-        .select(
-            "nation_key",
-            "acctbal_band",
-            "class_size",
-            "n_sensitive",
-            F.when(F.col("n_sensitive") >= F.lit(LDIV_L), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("is_l_diverse"),
-        )
-    )
-
-
-# t-closeness threshold (total-variation distance) — sync-pinned in the
-# oracle. TVD is the categorical-sensitive-attribute instantiation of the
-# t-closeness EMD (Li et al., ICDE'07: equal-distance ground metric).
-TCL_T = 0.2
-
-
-def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit — the third rung of the privacy ladder after
-    k-anonymity (class size) and l-diversity (distinct sensitive values):
-    a class can be large AND diverse yet still leak if its sensitive
-    DISTRIBUTION deviates from the global one (the skewness attack).
-    QI key = (nation, acctbal band) — the l-diversity key, i.e.
-    k-anonymity's QI tuple minus the market segment, which is the
-    sensitive attribute here (band width shared via KANON_BAND_WIDTH);
-    distance = total-variation distance between the class's segment
-    distribution and the corpus-wide one.
-
-    Exact arithmetic: |cnt/size − gcnt/total| is computed as the integer
-    |cnt·total − gcnt·size| and the Σ is divided ONCE by 2·size·total —
-    no per-term float rounding, so the hash compare is safe. The ONLY
-    full-data pass is the (class × segment) cell count (cardinality
-    bounded by #classes × #segments); the class sizes, segment marginal,
-    and grand total are all rollups of that materialized cell frame
-    (plan-tested: one FileScan), and the small sides ride broadcasts."""
-    from .curation import KANON_BAND_WIDTH
-
-    cust = load_table(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_nationkey").cast("bigint").alias("nation_key"),
-        F.floor(F.col("c_acctbal") / F.lit(KANON_BAND_WIDTH))
-        .cast("bigint")
-        .alias("acctbal_band"),
-        "c_mktsegment",
-    )
-    cell = base.groupBy("nation_key", "acctbal_band", "c_mktsegment").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).transform(truncate_lineage)
-    cls = cell.groupBy("nation_key", "acctbal_band").agg(
-        F.sum("cnt").alias("class_size")
-    )
-    seg = cell.groupBy("c_mktsegment").agg(F.sum("cnt").alias("gcnt"))
-    tot = cell.agg(F.sum("cnt").alias("total"))
-    grid = (
-        cls.crossJoin(F.broadcast(seg))
-        .crossJoin(F.broadcast(tot))
-        .join(
-            F.broadcast(cell), ["nation_key", "acctbal_band", "c_mktsegment"], "left"
-        )
-        .select(
-            "nation_key",
-            "acctbal_band",
-            "class_size",
-            "total",
-            F.abs(
-                F.coalesce(F.col("cnt"), F.lit(0)) * F.col("total")
-                - F.col("gcnt") * F.col("class_size")
-            ).alias("dev"),
-        )
-    )
-    t_dist = F.col("dev_sum").cast("double") / (
-        F.lit(2) * F.col("class_size") * F.col("total")
-    ).cast("double")
-    return (
-        grid.groupBy("nation_key", "acctbal_band", "class_size", "total")
-        .agg(F.sum("dev").alias("dev_sum"))
-        .select(
-            "nation_key",
-            "acctbal_band",
-            "class_size",
-            t_dist.alias("t_distance"),
-            F.when(t_dist <= F.lit(TCL_T), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("is_t_close"),
-        )
     )
 
 
@@ -1925,48 +1698,6 @@ def histogram_quantile_estimates(
     )
 
 
-# DP audit epsilons — mirrored literally in the oracle (sync-pinned).
-DP_EPSILONS = (0.1, 1.0)
-
-
-def privacy_dp_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differential-privacy sensitivity audit for the per-nation order
-    count — the fourth rung of the privacy ladder (k-anonymity/
-    l-diversity/t-closeness audit the DATA; this audits a RELEASE): under
-    user-level DP, removing one customer changes a nation's order count
-    by that customer's whole contribution, so the L1 sensitivity is the
-    MAX per-customer order count in the nation — and the Laplace noise
-    scale a release needs is sensitivity/ε. The report shows, per
-    nation, how much one heavy customer inflates the noise bill.
-
-    Exactness: contributions and sensitivities are exact integers from
-    two chained map-side-combinable aggregates ((nation, customer) →
-    nation); the noise scales are single divisions of exact integers by
-    the literal epsilons. Output: nation_key, n_orders, n_customers,
-    l1_sensitivity, laplace_scale_eps01, laplace_scale_eps1."""
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_nationkey").cast("bigint").alias("nation_key"),
-    )
-    per_cust = (
-        orders.join(cust, "o_custkey")
-        .groupBy("nation_key", "o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_cust_orders"))
-    )
-    return per_cust.groupBy("nation_key").agg(
-        F.sum("n_cust_orders").alias("n_orders"),
-        F.count(F.lit(1)).alias("n_customers"),
-        F.max("n_cust_orders").alias("l1_sensitivity"),
-        (F.max("n_cust_orders").cast("double") / F.lit(DP_EPSILONS[0])).alias(
-            "laplace_scale_eps01"
-        ),
-        (F.max("n_cust_orders").cast("double") / F.lit(DP_EPSILONS[1])).alias(
-            "laplace_scale_eps1"
-        ),
-    )
-
-
 def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end: blocking + match scoring
     (``er_blocking_pairs``) → undirected match edges → connected components
@@ -2020,61 +1751,6 @@ def er_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ent.join(canon, "entity_id").select(
         "entity_id", "canonical_name", "n_records", "member_ids"
-    )
-
-
-# Heavy-purchaser threshold: a user is a positive iff they made at least
-# this many purchases. Sync-pinned to the privacy_randomized_response
-# oracle literal.
-AUC_LABEL_MIN_PURCHASES = 10
-
-
-def parts_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto skyline of the part catalog on (price ↓, size ↓): parts not
-    dominated by any other (another part at most as expensive AND at most
-    as large, strictly better somewhere) — the skyline operator (Börzsönyi
-    et al.), the multi-objective shortlist query every "cheapest AND
-    smallest" tradeoff reduces to.
-
-    Sort-based evaluation, NOT the n² dominance join: group to one row per
-    price (min size — only a price group's min-size rows can survive),
-    compute the strictly-cheaper running min size, and keep rows strictly
-    below it (equality means a strictly cheaper part matched the size —
-    dominated; same-(price,size) ties survive together, no strict edge
-    between them). The running min is TWO-LEVEL so no single task ever
-    sorts all distinct prices (code-review r8: distinct p_retailprice
-    reaches ~2M at large SF): prices bucket by integer part, the
-    strictly-earlier-bucket prefix min is one ordered window over the
-    per-BUCKET aggregate (cardinality = price range, truly tiny), and the
-    within-bucket strictly-earlier running min is a window PARTITIONED by
-    bucket — parallel across buckets. min_before = least of the two
-    (Spark least() skips nulls). Survivors join back price-keyed. The
-    oracle is deliberately the INDEPENDENT algorithm (NOT EXISTS
-    dominator), so a bug in the sort-based pass cannot be mirrored."""
-    part = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_retailprice", F.col("p_size").cast("bigint").alias("p_size")
-    )
-    g = part.groupBy("p_retailprice").agg(F.min("p_size").alias("gmin"))
-    g = g.withColumn("bkt", F.floor("p_retailprice").cast("bigint"))
-    b = g.groupBy("bkt").agg(F.min("gmin").alias("bmin"))
-    wb = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    b2 = b.select("bkt", F.min("bmin").over(wb).alias("bmin_before"))
-    wi = Window.partitionBy("bkt").orderBy("p_retailprice").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    g2 = (
-        g.join(F.broadcast(b2), "bkt")
-        .withColumn("wmin_before", F.min("gmin").over(wi))
-        .withColumn("min_before", F.least("bmin_before", "wmin_before"))
-        .select("p_retailprice", "gmin", "min_before")
-    )
-    return (
-        part.join(g2, "p_retailprice")
-        .where(
-            (F.col("p_size") == F.col("gmin"))
-            & (F.col("min_before").isNull() | (F.col("p_size") < F.col("min_before")))
-        )
-        .select("p_partkey", "p_name", "p_retailprice", "p_size")
     )
 
 
@@ -2471,103 +2147,4 @@ def events_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("p_value"),
         )
-    )
-
-
-# Randomized-response (Warner / RAPPOR-style local DP) parameters: flip
-# probability f = 0.5 and the deterministic md5 coin salts. Sync-pinned
-# to the oracle literals (test_r11_constants_in_sync).
-RR_FLIP_PROB = 0.5
-RR_COIN_SALT = "rr-coin"
-RR_VALUE_SALT = "rr-value"
-
-
-def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local differential privacy by RANDOMIZED RESPONSE over the
-    heavy-purchaser bit — the collection-side privacy mechanism the
-    privacy family lacked (k-anonymity/l-diversity/t-closeness audit a
-    RELEASED table; DP sensitivity calibrates a CENTRAL mechanism; this
-    privatizes each user's bit BEFORE aggregation): with probability
-    1 − f the true bit is reported, otherwise a uniform coin, and the
-    collector debiases  p̂ = (mean_reported − f/2)/(1 − f).
-
-    Deterministic by construction:
-    both coins are md5 draws — flip if md5(rr-coin:user)/2⁶⁰ < f, noise
-    bit = md5(rr-value:user) parity — so the privatized table, the
-    estimate, and the |p̂ − p| error are reproducible facts on any
-    engine. The accuracy CONTRACT (the HLL/CMS pattern) bounds the error
-    by 3/(2·√n·(1−f)) — three Hoeffding sigmas of the debiased mean —
-    so the gate checks the estimator, not a lucky constant.
-
-    Scale shape: one map-side-combined per-user aggregate (the bit), one
-    global 1-row aggregate — corpus touched once, no shuffle wider than
-    the user rollup."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    per_user = ev.groupBy("user_id").agg(
-        (
-            F.sum(
-                F.when(F.col("event_type") == F.lit("purchase"), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            )
-            >= F.lit(AUC_LABEL_MIN_PURCHASES)
-        )
-        .cast("int")
-        .alias("b")
-    )
-    u60 = lambda salt: (  # noqa: E731
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col("user_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        .cast("double")
-        / F.lit(1152921504606846976.0)
-    )
-    noise_bit = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(RR_VALUE_SALT + ":"), F.col("user_id").cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    ).cast("int")
-    reported = F.when(u60(RR_COIN_SALT) < F.lit(RR_FLIP_PROB), noise_bit).otherwise(
-        F.col("b")
-    )
-    agg = per_user.select("b", reported.alias("r")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum("b").cast("bigint").alias("n_true"),
-        F.sum("r").cast("bigint").alias("n_reported_true"),
-    )
-    n = F.col("n_users").cast("double")
-    p_true = F.col("n_true").cast("double") / n
-    p_rep = F.col("n_reported_true").cast("double") / n
-    f = F.lit(RR_FLIP_PROB)
-    p_hat = (p_rep - f / F.lit(2.0)) / (F.lit(1.0) - f)
-    abs_err = F.abs(p_hat - p_true)
-    bound = F.lit(3.0) / (F.lit(2.0) * F.sqrt(n) * (F.lit(1.0) - f))
-    return agg.select(
-        "n_users",
-        "n_true",
-        "n_reported_true",
-        f.alias("flip_prob"),
-        p_true.alias("p_true"),
-        p_rep.alias("p_reported"),
-        p_hat.alias("p_hat"),
-        abs_err.alias("abs_err"),
-        bound.alias("err_bound"),
-        (abs_err <= bound).alias("within_contract"),
     )

@@ -179,12 +179,24 @@ class TagSelector:
         return [", ".join(tags) for tags in out]
 
 
+def tag_dim_frame(spark: SparkSession, rows: list[tuple[int, str, str]]) -> DataFrame:
+    """(tag_idx, tag_name, category) rows as a tag dimension. Built from an
+    Arrow table, which Spark keeps as a ``LocalRelation``: collecting it
+    (``fold_tag_dim``) reads the rows on the driver and starts no job. A
+    Python list would go through an RDD, and ``spark.range`` through a
+    scan, each a job per collect."""
+    idx, names, cats = zip(*rows) if rows else ((), (), ())
+    table = pa.table({"tag_idx": idx, "tag_name": names, "category": cats})
+    return spark.createDataFrame(table, "tag_idx int, tag_name string, category string")
+
+
 def fold_tag_dim(
     tag_dim: DataFrame,
     gen_threshold: float = DEFAULT_GEN_THRESHOLD,
     char_threshold: float = DEFAULT_CHAR_THRESHOLD,
 ) -> TagSelector:
-    """One driver collect of the small (tag_idx, tag_name, category) frame."""
+    """One driver collect of the small (tag_idx, tag_name, category) frame;
+    no Spark job when the frame comes from ``tag_dim_frame``."""
     rows = tag_dim.select("tag_idx", "tag_name", "category").collect()
     return TagSelector.fold(rows, gen_threshold, char_threshold)
 
@@ -285,23 +297,15 @@ DEMO_LOGIT_SCALE = 100.0  # spreads sigmoid over (0,1) and exercises the ±30 cl
 def demo_tag_dim(spark: SparkSession) -> DataFrame:
     """Literal tag dimension: tag_idx 0..61, category = mod-8 bucket, names
     with ``_`` (exercises P1) and some blacklisted meta names (exercises F3).
-
-    Derived JVM-side from ``spark.range`` — a driver ``createDataFrame``
-    would serialize Python rows through an RDD for every query invocation;
-    range + expressions is pure Catalyst (and constant-foldable). One
-    partition: folding 62 literal rows needs one task, not one per core."""
-    i = F.col("id")
-    category = F.element_at(
-        F.array(*[F.lit(c) for c in CATEGORIES]), (i % 8 + 1).cast("int")
-    )
-    name = (
-        F.when(i % 16 == 5, F.concat(F.lit("meta_id_"), i))
-        .when(i % 8 == 5, F.concat(F.lit("meta_plain_"), i))
-        .otherwise(F.concat(F.lit("tag_"), i))
-    )
-    return spark.range(0, DEMO_TAG_COUNT, 1, 1).select(
-        i.cast("int").alias("tag_idx"), name.alias("tag_name"), category.alias("category")
-    )
+    Built by ``tag_dim_frame``, so folding it starts no Spark job."""
+    return tag_dim_frame(spark, [
+        (
+            i,
+            f"meta_id_{i}" if i % 16 == 5 else f"meta_plain_{i}" if i % 8 == 5 else f"tag_{i}",
+            CATEGORIES[i % 8],
+        )
+        for i in range(DEMO_TAG_COUNT)
+    ])
 
 
 def embedding_probs(spark: SparkSession, sf_dir: str) -> DataFrame:

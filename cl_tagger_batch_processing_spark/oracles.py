@@ -2908,32 +2908,6 @@ WHERE user_id BETWEEN 10 AND 40 AND value BETWEEN 20.0 AND 60.0
 GROUP BY user_id
 """
 
-# Mirrors relational.part_abc_classification: exact-decimal revenue,
-# largest-first cumulative share, 80/95 class boundaries.
-ORACLE_SQL["part_abc_classification"] = """
-WITH p AS (
-  SELECT l_partkey,
-         CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(14,2))
-                       * (CAST(1 AS DECIMAL(14,2))
-                          - CAST(l_discount AS DECIMAL(14,2)))
-                       AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS revenue,
-         COUNT(*) AS n_lines
-  FROM lineitem GROUP BY l_partkey
-),
-c AS (
-  SELECT l_partkey, revenue, n_lines,
-         CAST(SUM(revenue) OVER (ORDER BY revenue DESC, l_partkey ASC
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) AS DOUBLE)
-           / CAST(SUM(revenue) OVER () AS DOUBLE) AS cum_share
-  FROM p
-)
-SELECT l_partkey, CAST(revenue AS DOUBLE) AS revenue, n_lines, cum_share,
-       CASE WHEN cum_share <= 0.8 THEN 'A'
-            WHEN cum_share <= 0.95 THEN 'B'
-            ELSE 'C' END AS abc_class
-FROM c
-"""
 
 # Mirrors text.corpus_dsir_sample: md5-derived 52-bit uniform, Gumbel term
 # −ln(−ln u) rounded at 9dp before the 6dp key (round-terms-to-9dp
@@ -4369,32 +4343,6 @@ FROM top
 """
 
 
-# Mirrors relational.supplier_herfindahl: ×10⁴ integral rescale, exact
-# HUGEINT (Spark: DECIMAL(38,0)) squares, one double division.
-ORACLE_SQL["supplier_herfindahl"] = """
-WITH per_sup AS (
-  SELECT s.s_nationkey,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                  * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4))))
-              * 10000 AS HUGEINT) AS ri
-  FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  GROUP BY l.l_suppkey, s.s_nationkey
-),
-per_nation AS (
-  SELECT s_nationkey, COUNT(*) AS n_suppliers,
-         SUM(ri * ri) AS sum_sq, SUM(ri) AS total
-  FROM per_sup GROUP BY s_nationkey
-)
-SELECT n.n_name, p.n_suppliers,
-       CAST(sum_sq AS DOUBLE)
-         / (CAST(total AS DOUBLE) * CAST(total AS DOUBLE)) AS hhi,
-       1.0 / (CAST(sum_sq AS DOUBLE)
-              / (CAST(total AS DOUBLE) * CAST(total AS DOUBLE)))
-         AS effective_suppliers
-FROM per_nation p JOIN nation n ON p.s_nationkey = n.n_nationkey
-"""
-
-
 # Mirrors relational.er_blocking_pairs: (first word, size) blocks, cap 64,
 # levenshtein <= 2 — identical integer edit distance. Sync-pinned.
 ORACLE_SQL["er_blocking_pairs"] = """
@@ -4709,67 +4657,6 @@ FROM pt
 """
 
 
-# Mirrors relational.privacy_l_diversity: same QI key as k-anonymity,
-# distinct-sensitive count on the same shuffle, l = 3 sync-pinned.
-ORACLE_SQL["privacy_l_diversity"] = """
-SELECT CAST(c_nationkey AS BIGINT) AS nation_key,
-       CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS acctbal_band,
-       COUNT(*) AS class_size,
-       CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS n_sensitive,
-       CAST(CASE WHEN COUNT(DISTINCT c_mktsegment) >= 3 THEN 1 ELSE 0 END
-            AS BIGINT) AS is_l_diverse
-FROM customer
-GROUP BY 1, 2
-"""
-
-
-# Mirrors relational.privacy_t_closeness: same QI key as the k-anonymity /
-# l-diversity audits, total-variation distance to the global market-segment
-# distribution computed from exact integer cross-products and divided once
-# by 2·class_size·total; the 0.2 threshold is sync-pinned (TCL_T).
-ORACLE_SQL["privacy_t_closeness"] = """
-WITH base AS (
-  SELECT CAST(c_nationkey AS BIGINT) AS nation_key,
-         CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS acctbal_band,
-         c_mktsegment
-  FROM customer
-),
-cell AS MATERIALIZED (
-  SELECT nation_key, acctbal_band, c_mktsegment, COUNT(*) AS cnt
-  FROM base GROUP BY 1, 2, 3
-),
-cls AS (
-  SELECT nation_key, acctbal_band, CAST(SUM(cnt) AS BIGINT) AS class_size
-  FROM cell GROUP BY 1, 2
-),
-seg AS (SELECT c_mktsegment, CAST(SUM(cnt) AS BIGINT) AS gcnt
-        FROM cell GROUP BY 1),
-tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM cell),
-grid AS (
-  SELECT c.nation_key, c.acctbal_band, c.class_size, t.total,
-         abs(COALESCE(l.cnt, 0) * t.total - s.gcnt * c.class_size) AS dev
-  FROM cls c
-  CROSS JOIN seg s
-  CROSS JOIN tot t
-  LEFT JOIN cell l
-    ON l.nation_key = c.nation_key
-   AND l.acctbal_band = c.acctbal_band
-   AND l.c_mktsegment = s.c_mktsegment
-),
-agg AS (
-  SELECT nation_key, acctbal_band, class_size, total,
-         CAST(SUM(dev) AS BIGINT) AS dev_sum
-  FROM grid GROUP BY 1, 2, 3, 4
-)
-SELECT nation_key, acctbal_band, class_size,
-       CAST(dev_sum AS DOUBLE) / CAST(2 * class_size * total AS DOUBLE)
-         AS t_distance,
-       CAST(CASE WHEN CAST(dev_sum AS DOUBLE)
-                      / CAST(2 * class_size * total AS DOUBLE) <= 0.2
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_t_close
-FROM agg
-"""
-
 # Mirrors graph.graph_closeness_centrality: same co-occurrence graph,
 # sources = the 4 highest-degree nodes (degree DESC, node ASC — LIMIT 4
 # sync-pinned with CLOSE_N_SOURCES), per-source min hop distance via the
@@ -5064,25 +4951,6 @@ WHERE CAST(cum AS DOUBLE) >= q * CAST(n AS DOUBLE)
   AND CAST(cum - cnt AS DOUBLE) < q * CAST(n AS DOUBLE)
 """
 
-# Mirrors relational.privacy_dp_sensitivity: per-(nation, customer) order
-# counts rolled up to nation, L1 sensitivity = max single-customer
-# contribution, Laplace scales at the sync-pinned epsilons (0.1, 1.0).
-ORACLE_SQL["privacy_dp_sensitivity"] = """
-WITH per_cust AS (
-  SELECT CAST(c.c_nationkey AS BIGINT) AS nation_key, o.o_custkey,
-         COUNT(*) AS n_cust_orders
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-  GROUP BY 1, 2
-)
-SELECT nation_key,
-       CAST(SUM(n_cust_orders) AS BIGINT) AS n_orders,
-       COUNT(*) AS n_customers,
-       CAST(MAX(n_cust_orders) AS BIGINT) AS l1_sensitivity,
-       CAST(MAX(n_cust_orders) AS DOUBLE) / 0.1 AS laplace_scale_eps01,
-       CAST(MAX(n_cust_orders) AS DOUBLE) / 1.0 AS laplace_scale_eps1
-FROM per_cust
-GROUP BY nation_key
-"""
 
 # Mirrors curation.corpus_split_leakage_report: the production MinHash-LSH
 # candidates at the dedup_clusters threshold (est_jaccard >= 0.5,
@@ -5555,20 +5423,6 @@ SELECT CAST(row_number() OVER (ORDER BY aa_score DESC, u ASC, v ASC)
 FROM top
 """
 
-
-# Skyline oracle: deliberately the INDEPENDENT n^2 dominance algorithm
-# (NOT EXISTS dominator), so a bug in the engine's sort-based pass cannot
-# be mirrored by construction.
-ORACLE_SQL["parts_pareto_skyline"] = """
-SELECT p_partkey, p_name, p_retailprice, CAST(p_size AS BIGINT) AS p_size
-FROM part p
-WHERE NOT EXISTS (
-  SELECT 1 FROM part q
-  WHERE q.p_retailprice <= p.p_retailprice
-    AND q.p_size <= p.p_size
-    AND (q.p_retailprice < p.p_retailprice OR q.p_size < p.p_size)
-)
-"""
 
 # Near-dup keep-best: the memoized cluster assignment (dedup_clusters
 # oracle reused verbatim as a CTE) joined with THE shared quality formula;
@@ -6609,59 +6463,6 @@ idcg AS (
 SELECT CAST(20 AS BIGINT) AS k, n_eval, n_overlap, dcg, idcg,
        dcg / idcg AS ndcg
 FROM dcg CROSS JOIN idcg
-"""
-
-# Mirrors relational.privacy_randomized_response: md5-60-bit uniform
-# coins, the f=0.5 Warner debias, and the 3-sigma Hoeffding accuracy
-# contract as identical double trees.
-ORACLE_SQL["privacy_randomized_response"] = """
-WITH per_user AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 10
-              AS INT) AS b
-  FROM events GROUP BY 1
-),
-priv AS (
-  SELECT b,
-         CASE WHEN CAST(CAST('0x' || substr(md5('rr-coin:'
-                                             || CAST(user_id AS VARCHAR)),
-                                  1, 15) AS BIGINT) AS DOUBLE)
-                   / 1152921504606846976.0 < CAST(0.5 AS DOUBLE)
-              THEN CAST(CAST('0x' || substr(md5('rr-value:'
-                                                || CAST(user_id AS VARCHAR)),
-                                  1, 15) AS BIGINT) % 2 AS INT)
-              ELSE b END AS r
-  FROM per_user
-),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-         CAST(SUM(b) AS BIGINT) AS n_true,
-         CAST(SUM(r) AS BIGINT) AS n_reported_true
-  FROM priv
-)
-SELECT n_users, n_true, n_reported_true,
-       CAST(0.5 AS DOUBLE) AS flip_prob,
-       CAST(n_true AS DOUBLE) / CAST(n_users AS DOUBLE) AS p_true,
-       CAST(n_reported_true AS DOUBLE) / CAST(n_users AS DOUBLE) AS p_reported,
-       (CAST(n_reported_true AS DOUBLE) / CAST(n_users AS DOUBLE)
-        - CAST(0.5 AS DOUBLE) / CAST(2 AS DOUBLE))
-         / (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE)) AS p_hat,
-       abs((CAST(n_reported_true AS DOUBLE) / CAST(n_users AS DOUBLE)
-            - CAST(0.5 AS DOUBLE) / CAST(2 AS DOUBLE))
-             / (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE))
-           - CAST(n_true AS DOUBLE) / CAST(n_users AS DOUBLE)) AS abs_err,
-       CAST(3 AS DOUBLE)
-         / (CAST(2 AS DOUBLE) * sqrt(CAST(n_users AS DOUBLE))
-            * (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE))) AS err_bound,
-       abs((CAST(n_reported_true AS DOUBLE) / CAST(n_users AS DOUBLE)
-            - CAST(0.5 AS DOUBLE) / CAST(2 AS DOUBLE))
-             / (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE))
-           - CAST(n_true AS DOUBLE) / CAST(n_users AS DOUBLE))
-         <= CAST(3 AS DOUBLE)
-              / (CAST(2 AS DOUBLE) * sqrt(CAST(n_users AS DOUBLE))
-                 * (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE)))
-         AS within_contract
-FROM agg
 """
 
 

@@ -227,10 +227,8 @@ register("stream_quantile_histogram", streaming_windows.stream_quantile_histogra
 register("dedup_minhash_lev_verify", dedup.dedup_minhash_lev_verify)
 register("approx_distinct_hll", relational.approx_distinct_hll)
 register("sim_mmr_diversify", similarity.sim_mmr_diversify)
-register("privacy_t_closeness", relational.privacy_t_closeness)
 register("text_bpe_train_merges", text.text_bpe_train_merges)
 register("text_winnowing_fingerprints", text.text_winnowing_fingerprints)
-register("parts_pareto_skyline", relational.parts_pareto_skyline)
 register("text_bm25_topk", text.text_bm25_topk)
 register("privacy_generalization_sweep", curation.privacy_generalization_sweep)
 
@@ -245,7 +243,6 @@ register("mm_scene_cuts", multimodal.mm_scene_cuts)
 register("crossmodal_curation_verdict", curation.crossmodal_curation_verdict)
 register("embedding_kmeans", similarity.embedding_kmeans)
 register("privacy_k_anonymity", curation.privacy_k_anonymity)
-register("privacy_l_diversity", relational.privacy_l_diversity)
 
 # Displaced by the r9 window refresh (see above): all 19 were driver-green
 # three-to-eight consecutive rounds and remain fully oracle-backed locally.
@@ -410,7 +407,6 @@ register("dedup_minhash_incremental", dedup.dedup_minhash_incremental)
 
 register("layout_zorder_skipping", sources_layout.layout_zorder_skipping)
 
-register("part_abc_classification", relational.part_abc_classification)
 
 register("corpus_dsir_sample", text.corpus_dsir_sample)
 
@@ -435,7 +431,6 @@ register("corpus_near_dup_rate_by_source", dedup.corpus_near_dup_rate_by_source)
 register("corpus_fertility_by_lang", text.corpus_fertility_by_lang)
 register("dedup_cluster_quality_report", dedup.dedup_cluster_quality_report)
 register("brand_price_regression", relational.brand_price_regression)
-register("supplier_herfindahl", relational.supplier_herfindahl)
 register("er_blocking_pairs", relational.er_blocking_pairs)
 # displaced from the driver window by the r7 second refresh — still
 # oracle-backed and locally parity-checked every commit
@@ -448,7 +443,6 @@ register("text_blocklist_filter", text.text_blocklist_filter)
 register("text_stats", text.text_stats)
 register("mm_byte_histogram", multimodal.mm_byte_histogram)
 register("corpus_split_assign", curation.corpus_split_assign)
-register("privacy_dp_sensitivity", relational.privacy_dp_sensitivity)
 register("sim_knn_label_vote", similarity.sim_knn_label_vote)
 
 # --- round-8 additions: lexical retrieval ranking (BM25), HITS
@@ -463,12 +457,10 @@ register("corpus_dedup_token_savings", dedup.corpus_dedup_token_savings)
 # corpus_stratified_split / corpus_health_report / streaming reports were
 # promoted into the driver window by the r10 rotation — registered above.
 
-# Round-11 to round-13 additions: retrieval eval (nDCG), the
-# randomized-response privacy audit, stylometry (Burrows' delta), lexical
-# diversity and the source-concentration report (HHI/Gini/top-k token
-# shares — mixture governance).
+# Round-11 to round-13 additions: retrieval eval (nDCG), stylometry
+# (Burrows' delta), lexical diversity and the source-concentration report
+# (HHI/Gini/top-k token shares — mixture governance).
 register("text_ndcg_eval", text.text_ndcg_eval)
-register("privacy_randomized_response", relational.privacy_randomized_response)
 register("text_burrows_delta", text.text_burrows_delta)
 register("text_lexical_diversity", text.text_lexical_diversity)
 register("corpus_source_concentration", curation.corpus_source_concentration)

@@ -23,7 +23,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.tagging import CATEGORIES
+from ..operators.tagging import CATEGORIES, tag_dim_frame
 
 KNOWN_CATEGORIES = set(CATEGORIES)  # appV2.py:63
 
@@ -49,6 +49,4 @@ def normalize_tag_mapping(data: dict) -> list[tuple[int, str, str]]:
 def load_tag_dim(spark: SparkSession, mapping_path: str) -> DataFrame:
     with open(mapping_path, encoding="utf-8") as f:
         data = json.load(f)
-    return spark.createDataFrame(
-        normalize_tag_mapping(data), "tag_idx int, tag_name string, category string"
-    )
+    return tag_dim_frame(spark, normalize_tag_mapping(data))

@@ -1179,13 +1179,6 @@ def test_r7_constants_in_sync_with_oracles():
     shll = oracles.ORACLE_SQL["stream_hll_distinct"]
     assert "h % 64" in shll and "<< CAST(56 - m AS INTEGER)" in shll
     assert "3600 * 3600" in shll  # hour tumbling window via integer epoch
-    assert relational.LDIV_L == 3
-    assert ">= 3" in oracles.ORACLE_SQL["privacy_l_diversity"]
-    assert relational.TCL_T == 0.2
-    assert "<= 0.2" in oracles.ORACLE_SQL["privacy_t_closeness"]
-    # all three privacy audits share one QI band width (KANON_BAND_WIDTH)
-    assert "/ 1000.0" in oracles.ORACLE_SQL["privacy_l_diversity"]
-    assert "/ 1000.0" in oracles.ORACLE_SQL["privacy_t_closeness"]
     assert graph.CLOSE_N_SOURCES == 4
     assert "LIMIT 4" in oracles.ORACLE_SQL["graph_closeness_centrality"]
     assert graph.CLOSE_MAX_ROUNDS == 64
@@ -1219,9 +1212,6 @@ def test_r7_constants_in_sync_with_oracles():
     assert "floor(value / 4.0)" in sqh_sql and "127" in sqh_sql
     assert "3600 * 3600" in sqh_sql  # hour tumbling window, integer epoch
     assert "[0.5, 0.9, 0.99]" in sqh_sql
-    assert relational.DP_EPSILONS == (0.1, 1.0)
-    dp_sql = oracles.ORACLE_SQL["privacy_dp_sensitivity"]
-    assert "/ 0.1" in dp_sql and "/ 1.0" in dp_sql
     assert _dd.CLUSTER_EST_THRESHOLD == 0.5
     leak_sql = oracles.ORACLE_SQL["corpus_split_leakage_report"]
     assert "est_jaccard >= 0.5" in leak_sql
@@ -1402,18 +1392,6 @@ def test_weighted_sample_favors_weight(spark, sf_dir):
     )
     sample_mean = sum(r.n_tokens for r in rows) / len(rows)
     assert sample_mean > corpus_mean
-
-
-def test_herfindahl_bounds(spark, sf_dir):
-    """1/n ≤ HHI ≤ 1 per nation; effective supplier count between 1 and n;
-    HHI equals the share-squared sum replayed from per-supplier revenue."""
-    from cl_tagger_batch_processing_spark.operators import relational
-
-    rows = relational.supplier_herfindahl(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 1.0 / r.n_suppliers - 1e-12 <= r.hhi <= 1.0 + 1e-12, r
-        assert 1.0 - 1e-9 <= r.effective_suppliers <= r.n_suppliers + 1e-9, r
 
 
 def test_bfs_exact_budget_diameter_converges(spark):
@@ -1661,30 +1639,6 @@ def test_stream_hll_tracks_exact_distinct(spark, sf_dir):
         )
 
 
-def test_l_diversity_consistent_with_k_anonymity(spark, sf_dir):
-    """Class sizes agree with privacy_k_anonymity rolled up over segments
-    (same QI minus the sensitive attribute); n_sensitive <= min(5, size);
-    the verdict replays."""
-    from collections import defaultdict
-
-    from cl_tagger_batch_processing_spark.operators import curation, relational
-
-    ldiv = relational.privacy_l_diversity(spark, sf_dir).collect()
-    kan = curation.privacy_k_anonymity(spark, sf_dir).collect()
-    k_sizes = defaultdict(int)
-    k_segments = defaultdict(set)
-    for r in kan:
-        k_sizes[(r.nation_key, r.acctbal_band)] += r.class_size
-        k_segments[(r.nation_key, r.acctbal_band)].add(r.c_mktsegment)
-    assert len(ldiv) == len(k_sizes)
-    for r in ldiv:
-        key = (r.nation_key, r.acctbal_band)
-        assert r.class_size == k_sizes[key]
-        assert r.n_sensitive == len(k_segments[key])
-        assert 1 <= r.n_sensitive <= min(5, r.class_size)
-        assert r.is_l_diverse == (1 if r.n_sensitive >= relational.LDIV_L else 0)
-
-
 def test_closeness_centrality_matches_python_bfs(spark, sf_dir):
     """Exact cross-check: roots are the top-degree nodes (degree DESC, node
     ASC), and each root's (n_reached, sum_dist, closeness) equals a
@@ -1721,45 +1675,6 @@ def test_closeness_centrality_matches_python_bfs(spark, sf_dir):
             assert r.closeness == (r.n_reached - 1) / r.sum_dist
         else:
             assert r.closeness is None
-
-
-def test_t_closeness_matches_exact_tvd(spark, sf_dir):
-    """t-closeness cross-check: every class's t_distance equals the exact
-    integer TVD recomputed driver-side, class sizes partition the table,
-    and the verdict mirrors the TCL_T threshold on the same double."""
-    import math
-    from collections import Counter
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = relational.privacy_t_closeness(spark, sf_dir).collect()
-    assert rows
-    data = load_table(spark, sf_dir, "customer").select(
-        "c_nationkey", "c_acctbal", "c_mktsegment"
-    ).collect()
-    cells: Counter = Counter()
-    seg: Counter = Counter()
-    for c in data:
-        band = math.floor(float(c.c_acctbal) / 1000.0)
-        cells[(int(c.c_nationkey), band, c.c_mktsegment)] += 1
-        seg[c.c_mktsegment] += 1
-    total = len(data)
-    assert sum(r.class_size for r in rows) == total
-    for r in rows:
-        key = (r.nation_key, r.acctbal_band)
-        size = sum(
-            v for (nk, b, _), v in cells.items() if (nk, b) == key
-        )
-        assert size == r.class_size
-        dev = sum(
-            abs(cells.get((key[0], key[1], s), 0) * total - g * size)
-            for s, g in seg.items()
-        )
-        expect = float(dev) / float(2 * size * total)
-        assert r.t_distance == expect
-        assert 0.0 <= r.t_distance <= 1.0
-        assert r.is_t_close == (1 if expect <= relational.TCL_T else 0)
 
 
 def test_assortativity_matches_exact_stats(spark, sf_dir):
@@ -1950,39 +1865,6 @@ def test_textrank_matches_python_pagerank(spark, sf_dir):
     ranked = sorted(nodes, key=lambda v: (-pr[v], v))
     for i, v in enumerate(ranked, 1):
         assert rows[v].rank == i
-
-
-def test_dp_sensitivity_replays_exactly(spark, sf_dir):
-    """Driver-side replay of the per-nation contribution rollup; the noise
-    scales are single exact divisions; sensitivity never exceeds the
-    nation's order count and is at least its average."""
-    from collections import Counter, defaultdict
-
-    from cl_tagger_batch_processing_spark.operators import relational
-    from cl_tagger_batch_processing_spark.sources.tables import load_table
-
-    rows = {r.nation_key: r for r in relational.privacy_dp_sensitivity(spark, sf_dir).collect()}
-    nation = {
-        r.c_custkey: r.c_nationkey
-        for r in load_table(spark, sf_dir, "customer")
-        .select("c_custkey", "c_nationkey")
-        .collect()
-    }
-    contrib: Counter = Counter()
-    for r in load_table(spark, sf_dir, "orders").select("o_custkey").collect():
-        contrib[(nation[r.o_custkey], r.o_custkey)] += 1
-    per_nation: defaultdict = defaultdict(list)
-    for (nk, _), c in contrib.items():
-        per_nation[nk].append(c)
-    assert set(rows) == set(per_nation)
-    for nk, cs in per_nation.items():
-        r = rows[nk]
-        assert r.n_orders == sum(cs)
-        assert r.n_customers == len(cs)
-        assert r.l1_sensitivity == max(cs)
-        assert r.laplace_scale_eps01 == max(cs) / relational.DP_EPSILONS[0]
-        assert r.laplace_scale_eps1 == max(cs) / relational.DP_EPSILONS[1]
-        assert r.n_orders / r.n_customers <= r.l1_sensitivity <= r.n_orders
 
 
 def test_split_leakage_consistent_with_components(spark, sf_dir):
@@ -2377,7 +2259,6 @@ def test_r9_constants_in_sync_with_oracles():
     kn = oracles.ORACLE_SQL["text_kneser_ney_bigram"]
     assert (text_ops.KN_DISCOUNT_NUM, text_ops.KN_DISCOUNT_DEN) == (3, 4)
     assert kn.count("CAST(3 AS DOUBLE) / CAST(4 AS DOUBLE)") == 2
-    assert relational.AUC_LABEL_MIN_PURCHASES == 10
     pt = oracles.ORACLE_SQL["events_permutation_test"]
     assert relational.PERM_B == 64 and "generate_series(0, 63)" in pt
     rrf = oracles.ORACLE_SQL["sim_hybrid_rrf"]
@@ -2960,19 +2841,13 @@ def test_rrf_fusion_matches_python_replay(spark, sf_dir):
 def test_r11_constants_in_sync():
     """Round-11 tuning constants pinned to their oracle literals."""
     from cl_tagger_batch_processing_spark import oracles
-    from cl_tagger_batch_processing_spark.operators import relational, similarity
-
+    from cl_tagger_batch_processing_spark.operators import similarity
     from cl_tagger_batch_processing_spark.operators import text as text_ops
 
     nd = oracles.ORACLE_SQL["text_ndcg_eval"]
     assert text_ops.NDCG_K == 20 and text_ops.NDCG_QUERY_VEC == 0
     assert "generate_series(1, 20)" in nd and "sem_rank <= 20" in nd
     assert "WHERE doc_id != 0" in nd
-    rr = oracles.ORACLE_SQL["privacy_randomized_response"]
-    assert relational.RR_FLIP_PROB == 0.5 and "< CAST(0.5 AS DOUBLE)" in rr
-    assert relational.RR_COIN_SALT == "rr-coin" and "md5('rr-coin:'" in rr
-    assert relational.RR_VALUE_SALT == "rr-value" and "md5('rr-value:'" in rr
-    assert relational.AUC_LABEL_MIN_PURCHASES == 10 and ">= 10" in rr
     bd = oracles.ORACLE_SQL["text_burrows_delta"]
     assert text_ops.BURROWS_TOP_WORDS == 20 and "LIMIT 20" in bd
     db = oracles.ORACLE_SQL["embedding_dbscan_lite"]
@@ -3093,44 +2968,6 @@ def test_ndcg_matches_python_replay(spark, sf_dir):
     assert row.dcg == pytest.approx(dcg, rel=1e-9)
     assert row.idcg == pytest.approx(idcg, rel=1e-9)
     assert row.ndcg == pytest.approx(dcg / idcg, rel=1e-9)
-
-
-def test_randomized_response_matches_hashlib_replay(spark, sf_dir):
-    """The privatized bits, debiased estimate, and contract replayed with
-    hashlib md5 coins over raw per-user purchase counts (the
-    resampling-replay recipe)."""
-    import hashlib
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    r = QUERIES["privacy_randomized_response"](spark, sf_dir).collect()[0]
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT user_id,
-                  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-           FROM '{sf}/events.parquet' GROUP BY 1""",
-    )
-    u60 = lambda s: (  # noqa: E731
-        int(hashlib.md5(s.encode()).hexdigest()[:15], 16) / 2**60
-    )
-    bit = lambda s: int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 2  # noqa: E731
-    n = len(raw)
-    n_true = sum(1 for _, c in raw if c >= 10)
-    rep = 0
-    for uid, c in raw:
-        b = 1 if c >= 10 else 0
-        if u60(f"rr-coin:{uid}") < 0.5:
-            rep += bit(f"rr-value:{uid}")
-        else:
-            rep += b
-    assert (r.n_users, r.n_true, r.n_reported_true) == (n, n_true, rep)
-    p_true, p_rep = n_true / n, rep / n
-    p_hat = (p_rep - 0.25) / 0.5
-    assert r.p_hat == pytest.approx(p_hat, rel=1e-12)
-    assert r.abs_err == pytest.approx(abs(p_hat - p_true), rel=1e-12)
-    bound = 3.0 / (2.0 * n**0.5 * 0.5)
-    assert r.err_bound == pytest.approx(bound, rel=1e-12)
-    assert r.within_contract == (abs(p_hat - p_true) <= bound)
 
 
 def test_burrows_delta_matches_python_replay(spark, sf_dir):
@@ -3528,75 +3365,6 @@ def test_adamic_adar_matches_textbook_replay(spark, sf_dir):
     for got, exp in zip(out, expect):
         assert got[:4] == exp[:4]
         assert got[4] == pytest.approx(exp[4], abs=2e-6)
-
-
-def test_herfindahl_matches_textbook_replay(spark, sf_dir):
-    """HHI rebuilt with exact Decimal supplier revenues (the ×10⁴
-    HALF_UP integerization mirrored); pins 1/n ≤ HHI ≤ 1."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.n_name: r for r in QUERIES["supplier_herfindahl"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT n.n_name, l.l_suppkey,
-                  SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                      * (CAST(1 AS DECIMAL(8,4)) - CAST(l.l_discount AS DECIMAL(8,4))))
-           FROM '{sf}/lineitem.parquet' l
-           JOIN '{sf}/supplier.parquet' s ON l.l_suppkey = s.s_suppkey
-           JOIN '{sf}/nation.parquet' n ON s.s_nationkey = n.n_nationkey
-           GROUP BY 1, 2""",
-    )
-    by_nation: dict = {}
-    for nn, _, r in raw:
-        ri = int((Decimal(r) * 10000).quantize(Decimal(1), ROUND_HALF_UP))
-        by_nation.setdefault(nn, []).append(ri)
-    assert set(rows) == set(by_nation)
-    for nn, ris in by_nation.items():
-        r = rows[nn]
-        hhi = sum(x * x for x in ris) / sum(ris) ** 2
-        assert r.n_suppliers == len(ris)
-        assert r.hhi == pytest.approx(hhi, rel=1e-12)
-        assert r.effective_suppliers == pytest.approx(1.0 / hhi, rel=1e-12)
-        assert 1.0 / len(ris) - 1e-9 <= hhi <= 1.0 + 1e-9
-
-
-def test_abc_classification_matches_textbook_replay(spark, sf_dir):
-    """Cumulative-share classes rebuilt with exact Decimal revenue and an
-    explicit largest-first sort; class boundaries re-derived."""
-    from decimal import Decimal
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    rows = {
-        r.l_partkey: r
-        for r in QUERIES["part_abc_classification"](spark, sf_dir).collect()
-    }
-    raw = _duck_rows(
-        sf_dir,
-        """SELECT l_partkey,
-                  SUM(CAST(CAST(l_extendedprice AS DECIMAL(14,2))
-                      * (CAST(1 AS DECIMAL(14,2)) - CAST(l_discount AS DECIMAL(14,2)))
-                      AS DECIMAL(18,4))),
-                  COUNT(*)
-           FROM '{sf}/lineitem.parquet' GROUP BY 1""",
-    )
-    parts = sorted(raw, key=lambda t: (-t[1], t[0]))
-    total = sum(Decimal(r) for _, r, _ in parts)
-    cum = Decimal(0)
-    assert set(rows) == {p for p, _, _ in parts}
-    for pk, rev, nl in parts:
-        cum += Decimal(rev)
-        share = float(cum) / float(total)
-        r = rows[pk]
-        assert r.n_lines == nl
-        assert r.revenue == pytest.approx(float(rev), rel=1e-12)
-        assert r.cum_share == pytest.approx(share, abs=1e-12)
-        cls = "A" if r.cum_share <= 0.8 else ("B" if r.cum_share <= 0.95 else "C")
-        assert r.abc_class == cls
 
 
 def test_fertility_by_lang_matches_textbook_replay(spark, sf_dir):

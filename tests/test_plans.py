@@ -967,18 +967,6 @@ def test_lev_verify_distance_on_candidates_only(spark, sf_dir):
     assert "levenshtein" in plan
 
 
-def test_t_closeness_single_customer_scan(spark, sf_dir):
-    # class sizes, segment marginal, and grand total are rollups of the
-    # materialized cell frame — one customer scan total, all small sides
-    # broadcast (no sort-merge join anywhere)
-    df = QUERIES["privacy_t_closeness"](spark, sf_dir)
-    plan = inspect.executed_plan(df)
-    assert plan.count("FileScan") == 0  # cell frame is checkpointed
-    for op in ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython",
-               "SortMergeJoin"]:
-        assert op not in plan, op
-
-
 def test_assortativity_no_cartesian_no_python(spark, sf_dir):
     df = QUERIES["graph_assortativity"](spark, sf_dir)
     plan = inspect.executed_plan(df)
@@ -1122,7 +1110,6 @@ def test_r11_continuation_plan_shapes(spark):
 UNPARTITIONED_WINDOW_OK = {
     "sim_hybrid_rrf": "fusion of two bounded top-k lists",
     "sim_ann_graph_search": "beam candidates, bounded by GBS_BEAM",
-    "parts_pareto_skyline": "constant bucket grid",
     "text_ngram_novelty": "constant bucket grid",
     "text_bm25_topk": "rank window AFTER .limit(k)",
     "text_vocab_topk": "rank window AFTER .limit(k)",
@@ -1138,7 +1125,6 @@ UNPARTITIONED_WINDOW_OK = {
     "corpus_temperature_mix": "#sources strata",
     "corpus_source_concentration": "#sources strata",
     "corpus_token_budget": "#source×lang strata",
-    "part_abc_classification": "parts-dimension relation (docstring)",
     "text_textrank_keywords": "vocab-cardinality — sublinear; SCALE.md row",
     "text_vocab_coverage_curve": "vocab-cardinality — sublinear; SCALE.md row",
     "graph_effective_diameter": "distinct BFS distances ≤ diameter",
@@ -1194,9 +1180,7 @@ def test_registry_wide_unpartitioned_window_allowlist(spark):
 # Keyed by construction SITE so checkpoint-hidden machinery (the
 # events_kruskal_wallis lesson) cannot dodge the gate.
 STATIC_WINDOW_OK = {
-    ("relational.py", "part_abc_classification"): "parts-dimension relation",
     ("relational.py", "histogram_quantile_estimates"): "constant bucket grid",
-    ("relational.py", "parts_pareto_skyline"): "constant bucket grid",
     ("relational.py", "events_hmm_viterbi_decode"): "daily spine",
     ("curation.py", "corpus_source_mix"): "#sources strata",
     ("curation.py", "corpus_token_budget"): "#source×lang strata",

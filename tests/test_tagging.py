@@ -119,5 +119,70 @@ def test_flagship_runs_on_fixtures(spark, sf_dir):
     assert df.columns == ["image_id", "tags_text"]
     n = df.count()
     assert n == 500  # one row per embeddings vec_id at sf0.001
-    # the dimension fold collects 62 literal rows: one task, not one per core
-    assert tagging.demo_tag_dim(spark).rdd.getNumPartitions() == 1
+
+
+def _fold_in_job_group(spark, group: str, make_dim):
+    """``fold_tag_dim(make_dim())`` run inside job group ``group``, with the
+    ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "tag dimension fold")
+    try:
+        selector = tagging.fold_tag_dim(make_dim())
+    finally:
+        sc.setJobGroup(None, None)
+    return selector, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _assert_same_selector(got: tagging.TagSelector, want: tagging.TagSelector):
+    import numpy as np
+
+    for field in ("idx", "category", "tag", "threshold"):  # NaN == NaN here
+        np.testing.assert_array_equal(getattr(got, field), getattr(want, field), field)
+    assert (got.top1, got.kept) == (want.top1, want.kept)
+
+
+def test_tag_dim_folds_without_a_job(spark, tmp_path):
+    # Both tag dimensions are driver-local relations: folding one reads its
+    # rows on the driver and starts no Spark job. The folded arrays are
+    # those of the rows the dimension stands for: the oracle's TAG_DIM_CTE
+    # mirror for the demo dimension, the normalized mapping for a file.
+    import json
+
+    import duckdb
+
+    from cl_tagger_batch_processing_spark.oracles import TAG_DIM_CTE
+    from cl_tagger_batch_processing_spark.sources.tag_mapping import (
+        load_tag_dim,
+        normalize_tag_mapping,
+    )
+
+    schema = "struct<tag_idx:int,tag_name:string,category:string>"
+    assert tagging.demo_tag_dim(spark).schema.simpleString() == schema
+    selector, jobs = _fold_in_job_group(
+        spark, "tag-dim-fold-demo", lambda: tagging.demo_tag_dim(spark)
+    )
+    assert jobs == []
+    oracle_rows = duckdb.sql(
+        f"WITH {TAG_DIM_CTE.strip()} SELECT tag_idx, tag_name, category FROM tag_dim"
+    ).fetchall()
+    assert len(oracle_rows) == tagging.DEMO_TAG_COUNT
+    _assert_same_selector(selector, tagging.TagSelector.fold(oracle_rows))
+
+    mappings = {
+        "mixed": {
+            "idx_to_tag": {"3": "long_hair", "0": "safe", "7": "holiday", "9": "odd"},
+            "tag_to_category": {
+                "long_hair": "general", "safe": "Rating", "holiday": "meta", "odd": "bogus"
+            },
+        },
+        "empty": {"0": {"tag": "x", "category": "bogus"}},
+    }
+    for name, data in mappings.items():
+        path = tmp_path / f"{name}.json"
+        path.write_text(json.dumps(data))
+        assert load_tag_dim(spark, str(path)).schema.simpleString() == schema
+        selector, jobs = _fold_in_job_group(
+            spark, f"tag-dim-fold-{name}", lambda: load_tag_dim(spark, str(path))
+        )
+        assert jobs == [], name
+        _assert_same_selector(selector, tagging.TagSelector.fold(normalize_tag_mapping(data)))
