@@ -62,9 +62,11 @@ register("pipeline_score_tag", _pipeline_score_tag)
 
 # ---------------------------------------------------------------------------
 # REGISTRATION ORDER IS LOAD-BEARING. The correctness driver value-checks the
-# FIRST 50 registrations only; everything after gets no driver row (local
-# pytest oracles still cover it — tests/test_oracle_parity.py runs EVERY
-# oracle-backed registration at sf0.001, and at sf0.01 on demand).
+# FIRST 50 registrations only; everything after gets no driver row. Local
+# pytest oracles cover only part of the rest by default:
+# tests/test_oracle_parity.py value-checks the driver window plus its
+# OPTIMIZATION_TOUCHED names at sf0.001. SPARK_GRAFT_FULL_PARITY=1 checks
+# EVERY oracle-backed registration, and at sf0.01 on demand.
 # The first 50 slots therefore hold the queries where driver verification
 # adds the most information: the reference-core tagging surface, every
 # oracle-backed dedup/similarity/text/streaming/multimodal extension, and

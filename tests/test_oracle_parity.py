@@ -14,6 +14,7 @@ import pytest
 from cl_tagger_batch_processing_spark.oracles import ORACLE_SQL
 from cl_tagger_batch_processing_spark.registry import NO_ORACLE, QUERIES
 
+from .conftest import sweep_cases
 from .oracle_harness import compare_query
 
 
@@ -178,41 +179,45 @@ def test_oracle_parity(spark, sf_dir, name):
     assert ok, f"{name}: {msg}"
 
 
-# The two driver-canonicalizer guards below pin sf0.001 regardless of
-# SPARK_GRAFT_TEST_SF_DIR: output schemas and cell sortability do not
-# depend on the scale factor, and constructing a registry query is NOT
-# free (driver-loop operators and streaming entries execute jobs before
-# .schema is readable) — at the sf0.01 oracle scale the re-execution
-# would meaningfully inflate the suite.
-GUARD_SF_DIR = "/root/testdata/sf0.001"
+# The two driver-canonicalizer guards below read the session's registry
+# record, built at GUARD_SF_DIR regardless of SPARK_GRAFT_TEST_SF_DIR:
+# output schemas and cell sortability do not depend on the scale factor.
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_nested_output_columns(spark, name):
+def nested_output_columns(schema) -> list[str]:
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    return [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+
+
+def canonicalize_like_driver(df) -> None:
+    pdf = df.toPandas()
+    pdf.sort_values(by=list(pdf.columns))  # raises on unsortable cells
+
+
+@pytest.mark.parametrize("name", sweep_cases(sorted(QUERIES)))
+def test_no_nested_output_columns(registry_record, name):
     # The correctness driver canonicalizes results with a pandas
     # sort_values over ALL columns; array/map/struct cells make that crash
     # with "unhashable type: 'list'" (r6's one red row, mm_phash_dedup).
     # Registry queries must therefore emit scalar columns only — flatten
     # member lists to sorted joined strings, vectors to long (key, dim,
     # value) form.
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    schema = QUERIES[name](spark, GUARD_SF_DIR).schema
-    nested = [
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    nested = nested_output_columns(registry_record[name].schema)
     assert not nested, (
         f"{name} emits nested output columns {nested}; the driver's pandas "
         "canonicalizer cannot sort them — flatten to scalars"
     )
 
 
-@pytest.mark.parametrize("name", list(QUERIES)[:DRIVER_WINDOW])
-def test_driver_window_canonicalizes(spark, name):
+@pytest.mark.parametrize("name", sweep_cases(list(QUERIES)[:DRIVER_WINDOW]))
+def test_driver_window_canonicalizes(registry_record, name):
     # Round-trip every driver-window query through the DRIVER'S exact
-    # canonicalization recipe (pandas sort_values over all columns) so any
-    # schema regression fails at commit time, not at round grading.
-    pdf = QUERIES[name](spark, GUARD_SF_DIR).toPandas()
-    pdf.sort_values(by=list(pdf.columns))  # raises on unsortable cells
+    # canonicalization recipe (toPandas, then pandas sort_values over all
+    # columns) so any schema regression fails at commit time, not at round
+    # grading.
+    canonicalize_like_driver(registry_record[name].df)

@@ -28,9 +28,8 @@ import decimal
 
 from cl_tagger_batch_processing_spark.oracles import ORACLE_SQL
 
+from .conftest import GUARD_SF_DIR
 from .oracle_harness import _canon, compare_query, duckdb_connection
-
-GUARD_SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_oracle_output_types():

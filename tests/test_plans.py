@@ -6,8 +6,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from cl_tagger_batch_processing_spark.plans import inspect
 from cl_tagger_batch_processing_spark.registry import QUERIES
+
+from .conftest import GUARD_SF_DIR, SWEEP_TIMEOUT_S
 
 
 def test_q1_filter_pushdown_and_pruning(spark, sf_dir):
@@ -321,11 +325,9 @@ def test_simhash_strategies_agree(spark, sf_dir):
 
 
 def test_simhash_rejects_degenerate_banding(spark, sf_dir):
-    import pytest as _pytest
-
     from cl_tagger_batch_processing_spark.operators import dedup
 
-    with _pytest.raises(ValueError, match="blocks"):
+    with pytest.raises(ValueError, match="blocks"):
         dedup.dedup_simhash(
             spark, sf_dir, hamming_threshold=dedup.SIMHASH_BITS, strategy="banded"
         )
@@ -1015,55 +1017,60 @@ def test_textrank_supersteps_on_vocab_frames(spark, sf_dir):
         assert op not in plan, op
 
 
-def test_registry_wide_no_scale_killers(spark):
+# Queries whose plans may hold Arrow-vectorized Python: the documented
+# kernel and sketch paths.
+ARROW_ALLOWED = {
+    "mm_frame_sample",
+    "text_simhash",
+    "mm_byte_histogram",
+    # r13 optimization: the TwoNN pair stage's exact int64 d² matrix
+    # product (one BLAS-shaped kernel per Arrow batch) replaced
+    # queries×candidates interpreted HOF dot products — the
+    # _simhash_majority precedent; values bit-identical, oracle-pinned.
+    "embedding_intrinsic_dim",
+    # r13 optimization: outer_product_stats' per-batch Gram-matrix
+    # kernel (exact int64 partial sufficient statistics) replaced the
+    # n·d²/2 interpreted HOF term explosion; same single
+    # map-side-combined groupBy above it.
+    "embedding_covariance",
+    "embedding_pca_power_iteration",
+    # the tag selection is one NumPy function, run as a mapInArrow
+    # over each image's probs (the kernel runs it in-stage)
+    "tag_select",
+    "tag_top1_rating_quality",
+    "tag_threshold_filter",
+    "pipeline_score_tag",
+}
+
+
+def scale_killers(record) -> list[str]:
+    bad: list[str] = []
+    for name, rec in record.items():
+        if name.startswith("stream_"):
+            continue
+        plan = rec.plan
+        if "CartesianProduct" in plan:
+            bad.append(f"{name}: CartesianProduct")
+        if "BatchEvalPython" in plan:
+            bad.append(f"{name}: row-at-a-time Python")
+        if name not in ARROW_ALLOWED and (
+            "ArrowEvalPython" in plan
+            or "MapInPandas" in plan
+            or "MapInArrow" in plan
+        ):
+            bad.append(f"{name}: unexpected Python boundary")
+    return bad
+
+
+@pytest.mark.timeout(SWEEP_TIMEOUT_S)
+def test_registry_wide_no_scale_killers(registry_record):
     # THE blanket physical-plan guarantee, pinned registry-wide (r8): no
     # query's executed plan may contain a CartesianProduct or row-at-a-time
     # Python (BatchEvalPython) ANYWHERE, and Arrow-vectorized Python is
     # confined to the three documented kernel/sketch paths. Streaming
     # queries are excluded (constructing them runs the stream; their
     # shapes are pinned by test_streaming/test_plans entries).
-    import os
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES as _Q
-
-    guard_sf = os.environ.get("SPARK_GRAFT_GUARD_SF_DIR", "/root/testdata/sf0.001")
-    arrow_allowed = {
-        "mm_frame_sample",
-        "text_simhash",
-        "mm_byte_histogram",
-        # r13 optimization: the TwoNN pair stage's exact int64 d² matrix
-        # product (one BLAS-shaped kernel per Arrow batch) replaced
-        # queries×candidates interpreted HOF dot products — the
-        # _simhash_majority precedent; values bit-identical, oracle-pinned.
-        "embedding_intrinsic_dim",
-        # r13 optimization: outer_product_stats' per-batch Gram-matrix
-        # kernel (exact int64 partial sufficient statistics) replaced the
-        # n·d²/2 interpreted HOF term explosion; same single
-        # map-side-combined groupBy above it.
-        "embedding_covariance",
-        "embedding_pca_power_iteration",
-        # the tag selection is one NumPy function, run as a mapInArrow
-        # over each image's probs (the kernel runs it in-stage)
-        "tag_select",
-        "tag_top1_rating_quality",
-        "tag_threshold_filter",
-        "pipeline_score_tag",
-    }
-    bad: list[str] = []
-    for name, fn in _Q.items():
-        if name.startswith("stream_"):
-            continue
-        plan = inspect.executed_plan(fn(spark, guard_sf))
-        if "CartesianProduct" in plan:
-            bad.append(f"{name}: CartesianProduct")
-        if "BatchEvalPython" in plan:
-            bad.append(f"{name}: row-at-a-time Python")
-        if name not in arrow_allowed and (
-            "ArrowEvalPython" in plan
-            or "MapInPandas" in plan
-            or "MapInArrow" in plan
-        ):
-            bad.append(f"{name}: unexpected Python boundary")
+    bad = scale_killers(registry_record)
     assert not bad, bad
 
 
@@ -1072,23 +1079,18 @@ def test_r11_continuation_plan_shapes(spark):
     Spark exposes the shape: no SortMergeJoin anywhere (dims broadcast),
     the single-aggregate reports carry no join at all, and the
     kappa/good-turing corpus passes read parquet exactly once."""
-    import os
-
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    sf = os.environ.get("SPARK_GRAFT_GUARD_SF_DIR", "/root/testdata/sf0.001")
     for name in ["text_good_turing", "text_quality_kappa", "text_js_divergence"]:
-        plan = inspect.executed_plan(QUERIES[name](spark, sf))
+        plan = inspect.executed_plan(QUERIES[name](spark, GUARD_SF_DIR))
         assert "SortMergeJoin" not in plan, name
 
     # kappa: ONE corpus aggregate — no join, no window, one parquet scan.
-    kp = inspect.executed_plan(QUERIES["text_quality_kappa"](spark, sf))
+    kp = inspect.executed_plan(QUERIES["text_quality_kappa"](spark, GUARD_SF_DIR))
     assert "Join" not in kp and "Window" not in kp
     assert kp.count("FileScan parquet") == 1
 
     # good-turing: frequency-of-frequencies re-aggregates from the
     # (source, token) relation — no join, one parquet scan.
-    gt = inspect.executed_plan(QUERIES["text_good_turing"](spark, sf))
+    gt = inspect.executed_plan(QUERIES["text_good_turing"](spark, GUARD_SF_DIR))
     assert "Join" not in gt
     assert gt.count("FileScan parquet") == 1
 
@@ -1151,23 +1153,26 @@ def _unpartitioned_window_specs(plan: str) -> list[str]:
     return out
 
 
-def test_registry_wide_unpartitioned_window_allowlist(spark):
+def unallowlisted_unpartitioned_windows(record) -> list[str]:
+    bad = []
+    for name, rec in record.items():
+        if name.startswith("stream_"):
+            continue
+        specs = _unpartitioned_window_specs(rec.plan)
+        if specs and name not in UNPARTITIONED_WINDOW_OK:
+            bad.append(f"{name}: {specs}")
+    return bad
+
+
+@pytest.mark.timeout(SWEEP_TIMEOUT_S)
+def test_registry_wide_unpartitioned_window_allowlist(registry_record):
     # Runtime prong: every non-stream registry query's executed plan may
     # contain an unpartitioned window ONLY if the query is allowlisted
     # with a boundedness reason. Allowlist entries may go unused at
     # runtime — eager checkpoints hide upstream machinery from the final
     # plan, so visibility varies; the STATIC audit below is the
     # staleness-checked prong.
-    import os
-
-    sf = os.environ.get("SPARK_GRAFT_GUARD_SF_DIR", "/root/testdata/sf0.001")
-    bad = []
-    for name, fn in QUERIES.items():
-        if name.startswith("stream_"):
-            continue
-        specs = _unpartitioned_window_specs(inspect.executed_plan(fn(spark, sf)))
-        if specs and name not in UNPARTITIONED_WINDOW_OK:
-            bad.append(f"{name}: {specs}")
+    bad = unallowlisted_unpartitioned_windows(registry_record)
     assert not bad, (
         "unpartitioned window over a relation with no triaged bound "
         "(single-task global sort at scale) — partition the window by an "

@@ -23,7 +23,7 @@ import decimal
 
 import pytest
 
-from cl_tagger_batch_processing_spark.registry import QUERIES
+from .conftest import SWEEP_TIMEOUT_S
 
 # (query, kind, column) -> why it is benign AT sf0.001.
 ALLOWLIST: dict[tuple[str, str, str], str] = {
@@ -131,13 +131,12 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
 }
 
 
-@pytest.mark.timeout(1500)
-def test_registry_non_vacuity(spark, sf_dir):
-    if not sf_dir.rstrip("/").endswith("sf0.001"):
-        pytest.skip("vacuity allowlist is triaged against the sf0.001 fixture")
+def vacuous_outputs(record) -> set[tuple[str, str, str]]:
+    """(query, kind, column) for every zero-row result, all-NULL column,
+    all-zero numeric column and all-False column in the record."""
     flagged: set[tuple[str, str, str]] = set()
-    for name, fn in QUERIES.items():
-        rows = fn(spark, sf_dir).collect()
+    for name, rec in record.items():
+        rows = rec.rows
         if not rows:
             flagged.add((name, "ZERO_ROWS", ""))
             continue
@@ -157,6 +156,12 @@ def test_registry_non_vacuity(spark, sf_dir):
                 # *_guarantee) is the same vacuous-gate class as an
                 # identically-zero integer flag (ADVICE r10).
                 flagged.add((name, "ALL_FALSE", col))
+    return flagged
+
+
+@pytest.mark.timeout(SWEEP_TIMEOUT_S)
+def test_registry_non_vacuity(registry_record):
+    flagged = vacuous_outputs(registry_record)
     new = flagged - set(ALLOWLIST)
     stale = set(ALLOWLIST) - flagged
     assert not new, (

@@ -20,26 +20,39 @@ from .conftest import SF_TEST_DIR
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_watchdog_fails_hung_test_fast(tmp_path):
-    hang = tmp_path / "test_hang.py"
-    hang.write_text(
+# A hang in a test body, and one in a session fixture's setup (the
+# registry record is built there).
+HUNG_TESTS = {
+    "test_hang_call.py": (
         "import time\n\n\ndef test_deliberate_hang():\n    time.sleep(600)\n"
-    )
+    ),
+    "test_hang_setup.py": (
+        "import time\n\nimport pytest\n\n\n"
+        "@pytest.fixture(scope=\"session\")\ndef hung():\n    time.sleep(600)\n\n\n"
+        "def test_deliberate_hang(hung):\n    pass\n"
+    ),
+}
+
+
+def test_watchdog_fails_hung_test_fast(tmp_path):
     env = dict(os.environ, SPARK_GRAFT_TEST_TIMEOUT="3")
-    t0 = time.monotonic()
-    # -p tests.conftest registers the watchdog hook for the foreign test dir.
-    proc = subprocess.run(
-        [sys.executable, "-m", "pytest", "-p", "tests.conftest", "-x", "-q", str(hang)],
-        cwd=REPO,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    elapsed = time.monotonic() - t0
-    assert proc.returncode != 0
-    assert "watchdog: test exceeded 3s" in proc.stdout
-    assert elapsed < 60, f"watchdog took {elapsed:.0f}s to fire"
+    for file_name, source in HUNG_TESTS.items():
+        hang = tmp_path / file_name
+        hang.write_text(source)
+        t0 = time.monotonic()
+        # -p tests.conftest registers the watchdog hooks for the foreign test dir.
+        proc = subprocess.run(
+            [sys.executable, "-m", "pytest", "-p", "tests.conftest", "-x", "-q", str(hang)],
+            cwd=REPO,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        elapsed = time.monotonic() - t0
+        assert proc.returncode != 0, file_name
+        assert "watchdog: test exceeded 3s" in proc.stdout, (file_name, proc.stdout)
+        assert elapsed < 60, f"{file_name}: watchdog took {elapsed:.0f}s to fire"
 
 
 def test_watchdog_passes_fast_test(tmp_path):
