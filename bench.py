@@ -10,26 +10,31 @@ from __future__ import annotations
 import importlib
 import json
 import os
+import pkgutil
 import re
 import sys
 import time
 
-# The operator session memos (module under the package, dict name) whose
-# builds and hits each per-query line attributes; tools/qbench.py clears
-# the same dicts before every cold run.
-MEMO_CACHES = [
-    ("operators.relational", "_PART_PAIRS_CACHE"),
-    ("operators.similarity", "_TOPK_COSINE_CACHE"),
-    ("operators.similarity", "_KMEANS_CACHE"),
-    ("operators.similarity", "_SEMANTIC_KEEP_CACHE"),
-    ("operators.similarity", "_KNN_GRAPH_CACHE"),
-    ("operators.similarity", "_INTRINSIC_CAND_CACHE"),
-    ("operators.dedup", "_CLUSTERS_CACHE"),
-    ("operators.dedup", "_LSH_PAIRS_CACHE"),
-    ("operators.dedup", "_SIMHASH_PAIRS_CACHE"),
-    ("operators.dedup", "_SIG_CACHE"),
-    ("operators.graph", "_EDGES_CACHE"),
-]
+PKG = "cl_tagger_batch_processing_spark"
+# Memos bench leaves warm on purpose: fixture table plans (no data is
+# cached) and the scorer's per-worker model handle.
+KEPT_MEMOS = frozenset({"_TABLE_PLAN_CACHE", "_SESSION_CACHE"})
+
+
+def package_memos(kept=KEPT_MEMOS) -> list[tuple[object, str]]:
+    """(module, name) of every module-level ``_*CACHE`` dict in the
+    package, minus the names in ``kept``: the session memos whose builds
+    and hits each per-query line attributes. tools/qbench.py clears the
+    same dicts before every cold run."""
+    package = importlib.import_module(PKG)
+    found = []
+    for info in pkgutil.walk_packages(package.__path__, PKG + "."):
+        module = importlib.import_module(info.name)
+        for name, value in vars(module).items():
+            is_memo = re.fullmatch(r"_[A-Z0-9_]*CACHE", name) and isinstance(value, dict)
+            if is_memo and name not in kept:
+                found.append((module, name))
+    return found
 
 
 def main() -> int:
@@ -93,9 +98,9 @@ def main() -> int:
             super().__setitem__(key, val)
 
     memo_caches: list[_CountingCache] = []
-    for mod, attr in MEMO_CACHES:
+    for module, name in package_memos():
         cache = _CountingCache()
-        setattr(importlib.import_module(f"cl_tagger_batch_processing_spark.{mod}"), attr, cache)
+        setattr(module, name, cache)
         memo_caches.append(cache)
 
     def run_once(name: str, fn) -> tuple[float, str | None]:

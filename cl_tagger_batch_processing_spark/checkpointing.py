@@ -137,24 +137,39 @@ def checkpoint_with_metric(df: DataFrame, metric, *extra_metrics):
     return ck, vals
 
 
-def session_cache_sweep(cache: dict, app_id: str) -> None:
-    """Evict entries belonging to any OTHER Spark application from an
-    applicationId-keyed DataFrame memo (the session-scoped cache pattern
-    shared by the k-means chain, the SemDeDup keep artifact, and the
-    near-dup cluster assignment): a cached plan is only valid inside the
-    application that built it, and the applicationId key makes staleness
-    structurally impossible rather than time-based.
+def session_memo(cache: dict, spark, key: tuple, build):
+    """The one session memo: return ``cache``'s entry for ``key`` in this
+    application and checkpoint mode, or store and return ``build()``.
 
-    Shared contract of every cache swept here (r10 ADVICE, documented
-    once): keys carry ``sf_dir`` but no data-version component, so the
-    memo assumes the fixture directory is IMMUTABLE for the lifetime of
-    the application — true for the read-only ``/root/testdata`` fixtures
-    and for any production run over immutable snapshot paths; a pipeline
-    that rewrites a path in place must key on a snapshot/version id
-    instead. Cached ``localCheckpoint`` blocks live until application
-    exit by design: each memo holds O(pairs/centroids) rows, bounded far
-    below executor storage at any fixture scale, and the blocks ARE the
-    saving (every consumer re-reads them instead of re-running the
-    build)."""
-    for key in [k for k in cache if k[0] != app_id]:
-        del cache[key]
+    Every entry is keyed ``(applicationId, checkpoint mode, *key)``. A
+    cached frame is only valid inside the application that built it, so
+    entries of any OTHER application are evicted first (a stop/recreate
+    cycle frees the dead session's checkpoint blocks instead of pinning
+    them, and CPython's reuse of object ids cannot hand a new session a
+    stale frame). The mode is in the key because a frame checkpointed in
+    one mode is not the frame the other mode asks for: a switch to
+    ``reliable`` must write reliable checkpoint files, not return the
+    local blocks built before it.
+
+    Shared contract of every memo: keys carry ``sf_dir`` but no
+    data-version component, so the memo assumes the fixture directory is
+    IMMUTABLE for the lifetime of the application — true for read-only
+    fixtures and for any production run over immutable snapshot paths; a
+    pipeline that rewrites a path in place must key on a snapshot/version
+    id instead. Cached checkpoint blocks live until application exit by
+    design: each memo holds frames bounded far below executor storage at
+    any fixture scale, and the blocks ARE the saving (every consumer
+    re-reads them instead of re-running the build).
+
+    ``cache`` is read through ``.get`` and written through ``[]=`` only,
+    and callers pass the module-level dict itself at call time, so
+    benchmarks can swap in a counting dict subclass by attribute name."""
+    app_id = spark.sparkContext.applicationId
+    for stale in [k for k in cache if k[0] != app_id]:
+        del cache[stale]
+    full_key = (app_id, spark.conf.get(CHECKPOINT_MODE_CONF, "local"), *key)
+    hit = cache.get(full_key)
+    if hit is None:
+        hit = build()
+        cache[full_key] = hit
+    return hit

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import truncate_lineage, truncate_lineage_eager
+from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
 from ..sources.tables import load_table
 from .quality import quality_components
 
@@ -286,33 +286,26 @@ def minhash_signature_table(
     spark: SparkSession, sf_dir: str, max_df: int | None = DEFAULT_MAX_DF
 ) -> DataFrame:
     """(doc_id, sig array) — THE materialized 16-hash signature table,
-    memoized per (application, sf_dir, max_df, checkpoint-mode), the
-    dedup_minhash_lsh/cooccurrence_edges convention. The shingle→md5→
-    16-min groupBy pipeline under it is the dominant shared cost of the
+    session-memoized per (sf_dir, max_df). The shingle→md5→16-min
+    groupBy pipeline under it is the dominant shared cost of the
     whole MinHash family, and THREE consumers used to rebuild it from the
     corpus per query (the shipped 4×4 candidates, the band sweep, the
     b-bit report): whichever runs first pays the build, the rest read
     O(n_docs × 16 bigints) checkpoint blocks — far below the corpus-sized
     frames the memo contract excludes (r13 optimization)."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, max_df, spark.conf.get(CHECKPOINT_MODE_CONF, "local"))
-    session_cache_sweep(_SIG_CACHE, app_id)
-    hit = _SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    out = (
-        minhash_signatures(word_shingles(docs, k=3, max_df=max_df, distinct=False))
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"h{i}") for i in range(MINHASH_NUM_HASHES)]).alias("sig"),
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        return (
+            minhash_signatures(word_shingles(docs, k=3, max_df=max_df, distinct=False))
+            .select(
+                "doc_id",
+                F.array(*[F.col(f"h{i}") for i in range(MINHASH_NUM_HASHES)]).alias("sig"),
+            )
+            .transform(truncate_lineage_eager)
         )
-        .transform(truncate_lineage_eager)  # memoized family-shared frame
-    )
-    _SIG_CACHE[key] = out
-    return out
+
+    return session_memo(_SIG_CACHE, spark, (sf_dir, max_df), build)
 
 
 def minhash_candidates(
@@ -340,30 +333,24 @@ def dedup_minhash_lsh(
     in several bands produces duplicate candidate rows with an IDENTICAL
     estimate — max() is just the dedup.
 
-    MATERIALIZED once and memoized per (application, sf_dir, max_df,
-    checkpoint-mode) — the cooccurrence_edges convention: SEVEN consumers
-    (clusters, funnel, lev/ROUGE verify, error report, near-dup rate,
-    cluster quality) ride this same pair frame and the shingle→signature→
+    MATERIALIZED once and session-memoized per (sf_dir, max_df): SEVEN
+    consumers (clusters, funnel, lev/ROUGE verify, error report, near-dup
+    rate, cluster quality) ride this same pair frame and the shingle→signature→
     banding pipeline is their dominant shared cost. Callers must NOT
     re-truncate it. (Checkpointed frames lose stats: a consumer joining
     this small frame should rely on AQE's runtime size or hint broadcast
     explicitly.)"""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, max_df, spark.conf.get(CHECKPOINT_MODE_CONF, "local"))
-    session_cache_sweep(_LSH_PAIRS_CACHE, app_id)
-    hit = _LSH_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = (
-        minhash_candidates(spark, sf_dir, max_df=max_df)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("est").alias("est_jaccard"))
-        .transform(truncate_lineage_eager)  # memoized family-shared frame
+    return session_memo(
+        _LSH_PAIRS_CACHE,
+        spark,
+        (sf_dir, max_df),
+        lambda: (
+            minhash_candidates(spark, sf_dir, max_df=max_df)
+            .groupBy("doc_a", "doc_b")
+            .agg(F.max("est").alias("est_jaccard"))
+            .transform(truncate_lineage_eager)
+        ),
     )
-    _LSH_PAIRS_CACHE[key] = out
-    return out
 
 
 def _simhash_majority(hs: pd.Series) -> pd.Series:
@@ -543,36 +530,21 @@ def dedup_simhash(
       not a pair list.
     * ``auto`` — broadcast iff the corpus row count is under the crossover.
 
-    MATERIALIZED once and memoized per (application, sf_dir, threshold,
-    strategy, checkpoint-mode) — the _LSH_PAIRS_CACHE convention (VERDICT
-    r9 ask #2): the signature build + pair scan is the dominant shared cost
-    of the SimHash family (dedup_simhash itself, dedup_simhash_error_report,
-    and any downstream verify). Callers must NOT re-truncate the result;
+    MATERIALIZED once and session-memoized per (sf_dir, threshold,
+    strategy) (VERDICT r9 ask #2): the signature build + pair scan is the
+    dominant shared cost of the SimHash family (dedup_simhash itself,
+    dedup_simhash_error_report, and any downstream verify). Callers must NOT re-truncate the result;
     checkpointed frames lose stats, so a consumer joining this frame should
-    rely on AQE's runtime sizing or hint broadcast explicitly. Like every
-    ``session_cache_sweep`` memo, the key has no data-version component:
-    ``sf_dir`` is assumed immutable for the application's lifetime (see
-    ``checkpointing.session_cache_sweep`` for the shared contract).
+    rely on AQE's runtime sizing or hint broadcast explicitly.
     """
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
-
-    app_id = spark.sparkContext.applicationId
-    key = (
-        app_id,
-        sf_dir,
-        hamming_threshold,
-        strategy,
-        spark.conf.get(CHECKPOINT_MODE_CONF, "local"),
+    return session_memo(
+        _SIMHASH_PAIRS_CACHE,
+        spark,
+        (sf_dir, hamming_threshold, strategy),
+        lambda: _simhash_pairs_build(spark, sf_dir, hamming_threshold, strategy).transform(
+            truncate_lineage_eager
+        ),
     )
-    session_cache_sweep(_SIMHASH_PAIRS_CACHE, app_id)
-    hit = _SIMHASH_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = _simhash_pairs_build(spark, sf_dir, hamming_threshold, strategy).transform(
-        truncate_lineage_eager  # memoized family-shared frame
-    )
-    _SIMHASH_PAIRS_CACHE[key] = out
-    return out
 
 
 def _simhash_pairs_build(
@@ -706,6 +678,7 @@ def connected_components(
     # can exceed the bigint range, and a silent non-ANSI wraparound could
     # fake equality and stop the loop early.
     from ..checkpointing import checkpoint_with_metric
+    from .graph import broadcast_max_nodes
 
     label_sum = F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("label_sum")
 
@@ -713,13 +686,13 @@ def connected_components(
         labels, label_sum, F.count(F.lit(1)).alias("n_labels")
     )
     prev_sum = init["label_sum"]
-    # Broadcast-strategy census (guide §3.1, the graph.PR_BROADCAST_MAX_NODES
-    # convention): the label frame is edge-incident-node-sized and constant
-    # across rounds; under the threshold it broadcasts into the propagation
-    # and pointer-jump joins, leaving the edge side unshuffled. Past the
+    # Broadcast-strategy census (guide §3.1, ``graph.broadcast_max_nodes``):
+    # the label frame is edge-incident-node-sized and constant across
+    # rounds; under the cap it broadcasts into the propagation and
+    # pointer-jump joins, leaving the edge side unshuffled. Past the
     # threshold the plan is exactly the pre-r14 shuffle shape. The count
     # rides the initial checkpoint job — zero extra passes.
-    bcast = init["n_labels"] <= (1 << 23)
+    bcast = init["n_labels"] <= broadcast_max_nodes(labels.sparkSession)
     converged = False
     # max_iter + 1 total rounds: convergence DETECTION needs one no-change
     # round after the last change, so a graph needing exactly max_iter
@@ -781,14 +754,10 @@ def connected_components(
     return labels.unionByName(singletons)
 
 
-# Session-scoped memo of the per-doc cluster assignment — the SAME
-# applicationId-keyed pattern as similarity's k-means/SemDeDup caches: the
-# assignment is a pure function of (sf_dir, checkpoint mode), and FOUR
-# registry queries consume it (dedup_clusters, corpus_dedup_funnel,
+# Session memo of the per-doc cluster assignment: FOUR registry queries
+# consume it (dedup_clusters, corpus_dedup_funnel,
 # corpus_near_dup_rate_by_source, dedup_cluster_quality_report) — without
-# the memo each one re-runs the full MinHash-LSH + CC chain. The checkpoint
-# mode is part of the key so tests/test_checkpointing.py's reliable-vs-local
-# equality check still computes BOTH variants for real.
+# the memo each one re-runs the full MinHash-LSH + CC chain.
 _CLUSTERS_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -796,26 +765,20 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate clusters: MinHash-LSH candidate pairs with estimated
     Jaccard ≥ 0.5 become edges; connected components give each doc a
     cluster_id (singletons cluster with themselves). The materialized
-    assignment is memoized per (application, sf_dir, checkpoint-mode)."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
+    assignment is session-memoized per sf_dir."""
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, spark.conf.get(CHECKPOINT_MODE_CONF, "local"))
-    session_cache_sweep(_CLUSTERS_CACHE, app_id)
-    hit = _CLUSTERS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        dedup_minhash_lsh(spark, sf_dir)
-        .where(F.col("est_jaccard") >= CLUSTER_EST_THRESHOLD)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    )
-    out = connected_components(docs.select("doc_id"), pairs).transform(
-        truncate_lineage_eager  # memoized family-shared frame
-    )
-    _CLUSTERS_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        pairs = (
+            dedup_minhash_lsh(spark, sf_dir)
+            .where(F.col("est_jaccard") >= CLUSTER_EST_THRESHOLD)
+            .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        )
+        return connected_components(docs.select("doc_id"), pairs).transform(
+            truncate_lineage_eager
+        )
+
+    return session_memo(_CLUSTERS_CACHE, spark, (sf_dir,), build)
 
 
 def quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,10 +31,12 @@ one scalar, the sanctioned control-plane shape.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import truncate_lineage, truncate_lineage_eager
+from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
 
 PR_SCALE = 10**15  # rank unit: 1e-15 (bigint-exact; total mass 1e15 ≪ 2^63)
 PR_DAMPING_NUM, PR_DAMPING_DEN = 85, 100  # 0.85 as an exact integer ratio
@@ -51,15 +53,26 @@ PR_CHECKPOINT_EVERY = 3
 # bit-identical either way (pinned by test_pagerank_salted_strategy_agrees).
 PR_HOT_OUTDEG = 1 << 14
 PR_SALTS = 16
-# Broadcast-strategy census (r14, guide §3.1): node-sized score/label
-# frames re-join the edge relation every superstep; below this node count
-# they are BROADCAST into those joins (≈8M nodes × ~24 B ≈ 200 MB built
-# relation — inside the guide's "few hundred MB is usually fine" and far
-# under the 8 GB hard cap), which removes the per-superstep shuffle of the
-# score frame AND of the edge side. The node count is the control-plane
-# scalar the loops already hold; past the threshold the shuffle path is
-# exactly the pre-r14 plan. Join strategy never changes values.
-PR_BROADCAST_MAX_NODES = 1 << 23
+
+
+def broadcast_max_nodes(spark: SparkSession) -> int:
+    """Broadcast-strategy census cap (r14, guide §3.1): node-sized
+    score/label frames re-join the edge relation every superstep; at or
+    below this node count they are BROADCAST into those joins, which
+    removes the per-superstep shuffle of the node frame AND of the edge
+    side. Past the cap the shuffle path is exactly the pre-r14 plan; join
+    strategy never changes values.
+
+    The driver builds every broadcast relation, so the cap follows
+    ``spark.driver.memory``: 2**23 nodes (≈8M × ~24 B ≈ 200 MB built
+    relation, inside the guide's "few hundred MB is usually fine") at a
+    16g driver or more, proportionally fewer below (2**20 at 2g)."""
+    mem = spark.conf.get("spark.driver.memory", "1g").strip().lower()
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem)
+    if m is None:
+        raise ValueError(f"spark.driver.memory={mem!r}: not a JVM memory size")
+    mib = int(m.group(1)) * {"k": 1 / 1024, "g": 1024, "t": 1 << 20}.get(m.group(2), 1)
+    return min(1 << 23, int((1 << 23) * mib) // (16 * 1024))
 
 
 _EDGES_CACHE: dict = {}
@@ -73,30 +86,19 @@ def cooccurrence_edges(
     bounded basket self-join) symmetrized. Edge generation is linear in
     order count; the support filter prunes noise edges.
 
-    MATERIALIZED once and memoized per (application, sf_dir, min_support,
-    checkpoint-mode) — the dedup_clusters memo convention: ten graph-family
-    queries consume this same relation and the basket self-join is their
-    dominant shared cost. Callers therefore must NOT re-truncate it."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
+    MATERIALIZED once and session-memoized per (sf_dir, min_support): ten
+    graph-family queries consume this same relation and the basket
+    self-join is their dominant shared cost. Callers therefore must NOT
+    re-truncate it."""
     from .relational import counted_part_pairs
 
-    app_id = spark.sparkContext.applicationId
-    key = (
-        app_id,
-        sf_dir,
-        min_support,
-        spark.conf.get(CHECKPOINT_MODE_CONF, "local"),
-    )
-    session_cache_sweep(_EDGES_CACHE, app_id)
-    hit = _EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = counted_part_pairs(spark, sf_dir, min_support=min_support)
-    fwd = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-    rev = pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    out = fwd.unionByName(rev).transform(truncate_lineage_eager)
-    _EDGES_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        pairs = counted_part_pairs(spark, sf_dir, min_support=min_support)
+        fwd = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
+        rev = pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
+        return fwd.unionByName(rev).transform(truncate_lineage_eager)
+
+    return session_memo(_EDGES_CACHE, spark, (sf_dir, min_support), build)
 
 
 def graph_pagerank(
@@ -220,7 +222,7 @@ def pagerank_on_edges(
         n_iter,
         hot_nodes=hot_nodes,
         n_salts=n_salts,
-        broadcast_nodes=n <= PR_BROADCAST_MAX_NODES,
+        broadcast_nodes=n <= broadcast_max_nodes(edges.sparkSession),
     )
     return pr.select(
         "node",
@@ -250,7 +252,7 @@ def _superstep_scores_join(
     are bit-identical either way."""
     if hot_nodes is None:
         if broadcast_scores:
-            # node census ≤ PR_BROADCAST_MAX_NODES: ship the score frame,
+            # node census ≤ broadcast_max_nodes: ship the score frame,
             # leave the (possibly enormous) edge side unshuffled
             return F.broadcast(scores).join(edges_deg, scores.node == edges_deg.src)
         return scores.join(edges_deg, scores.node == edges_deg.src)
@@ -680,6 +682,7 @@ def bfs_distances(
     from ..checkpointing import checkpoint_with_metric
 
     n_rows = F.count(F.lit(1)).alias("n")
+    cap = broadcast_max_nodes(edges.sparkSession)
     seed_col = seeds.columns[0]
     dist = seeds.select(
         F.col(seed_col).alias("node"), F.lit(0).cast("bigint").alias("dist")
@@ -703,13 +706,9 @@ def bfs_distances(
         # Broadcast strategy (guide §3.1): the frontier/labeled sizes are
         # the convergence scalars the loop already reads — under the node
         # threshold they broadcast, leaving the edge side unshuffled.
-        fr = (
-            F.broadcast(frontier)
-            if layer_size <= PR_BROADCAST_MAX_NODES
-            else frontier
-        )
+        fr = F.broadcast(frontier) if layer_size <= cap else frontier
         seen = dist.select("node")
-        if labeled_n <= PR_BROADCAST_MAX_NODES:
+        if labeled_n <= cap:
             seen = F.broadcast(seen)
         cand = (
             fr.join(edges, frontier.node == edges.src)
@@ -791,8 +790,8 @@ def _lpa_labels(
         )
     )
     # node census doubles as the lazy checkpoint's materializing action and
-    # drives the per-round broadcast strategy (PR_BROADCAST_MAX_NODES)
-    bcast = labels.count() <= PR_BROADCAST_MAX_NODES
+    # drives the per-round broadcast strategy
+    bcast = labels.count() <= broadcast_max_nodes(spark)
     for _ in range(rounds):
         lab_side = F.broadcast(labels) if bcast else labels
         votes = (
@@ -926,7 +925,7 @@ def graph_personalized_pagerank(
         n_iter,
         carry=("is_seed",),
         hot_nodes=hot_nodes,
-        broadcast_nodes=n <= PR_BROADCAST_MAX_NODES,
+        broadcast_nodes=n <= broadcast_max_nodes(spark),
     )
     return pr.select(
         "node",
@@ -980,6 +979,7 @@ def graph_closeness_centrality(
         deg.orderBy(F.desc("degree"), F.asc("src")).limit(CLOSE_N_SOURCES)
     )
     n_rows = F.count(F.lit(1)).alias("n")
+    cap = broadcast_max_nodes(spark)
     dist = roots.select(
         F.col("src").alias("root"),
         F.col("src").alias("node"),
@@ -997,13 +997,9 @@ def graph_closeness_centrality(
         if layer_size == 0:
             converged = True
             break
-        fr = (
-            F.broadcast(frontier)
-            if layer_size <= PR_BROADCAST_MAX_NODES
-            else frontier
-        )
+        fr = F.broadcast(frontier) if layer_size <= cap else frontier
         seen = dist.select("root", "node")
-        if labeled_n <= PR_BROADCAST_MAX_NODES:
+        if labeled_n <= cap:
             seen = F.broadcast(seen)
         cand = (
             fr.join(edges, frontier.node == edges.src)
@@ -1231,7 +1227,7 @@ def graph_hits(
     )
     # node census: the count doubles as the lazy checkpoint's materializing
     # action (the pagerank convention) and drives the broadcast strategy
-    bcast = nodes.count() <= PR_BROADCAST_MAX_NODES
+    bcast = nodes.count() <= broadcast_max_nodes(spark)
     h = nodes.withColumn("h", F.lit(HITS_SCALE).cast("bigint"))
     for i in range(n_rounds):
         a = _hits_push(
@@ -1348,6 +1344,7 @@ def graph_betweenness_seeded(
         F.col("src").alias("seed")
     )
     n_rows = F.count(F.lit(1)).alias("n")
+    cap = broadcast_max_nodes(spark)
     state = seeds.select(
         "seed",
         F.col("seed").alias("node"),
@@ -1362,13 +1359,9 @@ def graph_betweenness_seeded(
     for d in range(1, BC_MAX_DEPTH + 1):
         if layer_size == 0:
             break
-        fr = (
-            F.broadcast(frontier)
-            if layer_size <= PR_BROADCAST_MAX_NODES
-            else frontier
-        )
+        fr = F.broadcast(frontier) if layer_size <= cap else frontier
         seen = state.select("seed", "node")
-        if labeled_n <= PR_BROADCAST_MAX_NODES:
+        if labeled_n <= cap:
             seen = F.broadcast(seen)
         cand = (
             fr.join(edges, frontier.node == edges.src)
@@ -1417,7 +1410,7 @@ def graph_betweenness_seeded(
         # per-layer frames have KNOWN sizes (observed on the forward pass);
         # under the node threshold they broadcast into the dependency join,
         # leaving the edge side unshuffled (guide §3.1, value-identical)
-        if layer_sizes.get(d + 1, 0) <= PR_BROADCAST_MAX_NODES:
+        if layer_sizes.get(d + 1, 0) <= cap:
             sw = F.broadcast(sw)
             dw = F.broadcast(dw)
         term = F.expr(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import truncate_lineage, truncate_lineage_eager
+from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
 from ..sources.tables import load_table
 
 # Exact-decimal casts for the 2-decimal fixture money columns.
@@ -1049,9 +1049,8 @@ def counted_part_pairs(
     basket pair generator behind part_cooccurrence, part_affinity_lift,
     orders_market_basket_rules, and graph.cooccurrence_edges — any change
     to basket semantics (distinctness, support definition) lands in all
-    four at once. MATERIALIZED once and memoized per (application,
-    sf_dir, min_support, checkpoint-mode) — the dedup_minhash_lsh
-    convention: four consumers used to re-run the basket self-join from
+    four at once. MATERIALIZED once and session-memoized per (sf_dir,
+    min_support): four consumers used to re-run the basket self-join from
     the fact table each, and the memoized frame is the support-filtered
     pair relation, bounded well below the corpus (r13 optimization).
 
@@ -1062,33 +1061,21 @@ def counted_part_pairs(
     by the data model rather than a guard. Distinct parts first (a part
     twice in one order is one basket membership), pair key ordered
     (a < b) so each pair counts once."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+        basket = li.distinct()
+        a = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
+        b = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
+        return (
+            a.join(b, "l_orderkey")
+            .where(F.col("part_a") < F.col("part_b"))
+            .groupBy("part_a", "part_b")
+            .agg(F.count(F.lit(1)).alias("n_orders"))
+            .where(F.col("n_orders") >= min_support)
+            .transform(truncate_lineage_eager)
+        )
 
-    app_id = spark.sparkContext.applicationId
-    key = (
-        app_id,
-        sf_dir,
-        min_support,
-        spark.conf.get(CHECKPOINT_MODE_CONF, "local"),
-    )
-    session_cache_sweep(_PART_PAIRS_CACHE, app_id)
-    hit = _PART_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    basket = li.distinct()
-    a = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
-    b = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
-    out = (
-        a.join(b, "l_orderkey")
-        .where(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .where(F.col("n_orders") >= min_support)
-        .transform(truncate_lineage_eager)  # memoized family-shared frame
-    )
-    _PART_PAIRS_CACHE[key] = out
-    return out
+    return session_memo(_PART_PAIRS_CACHE, spark, (sf_dir, min_support), build)
 
 
 def part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:

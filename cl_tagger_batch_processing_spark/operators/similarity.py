@@ -26,7 +26,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import truncate_lineage, truncate_lineage_eager
+from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
 from .dedup import int_dot, quantized_embeddings
 
 DEFAULT_TOP_K = 10
@@ -62,47 +62,34 @@ def sim_topk_cosine(
     top_k nearest corpus vectors. Broadcast the query side; unique vec_id
     tie-break keeps the top-k set deterministic.
 
-    MATERIALIZED once and memoized per (application, sf_dir, top_k,
-    num_queries, checkpoint-mode) — the dedup_minhash_lsh convention:
-    this exact referee is the ground truth of FIVE recall/eval consumers
-    (ann_recall_report, the IVF probe sweep, scalar-quant and PQ recall,
-    nDCG), each of which used to re-run the brute-force queries×corpus
+    MATERIALIZED once and session-memoized per (sf_dir, top_k,
+    num_queries): this exact referee is the ground truth of FIVE
+    recall/eval consumers (ann_recall_report, the IVF probe sweep,
+    scalar-quant and PQ recall, nDCG), each of which used to re-run the brute-force queries×corpus
     pass; the memoized frame is ≤ top_k × num_queries rows (r13
     optimization)."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
 
-    app_id = spark.sparkContext.applicationId
-    key = (
-        app_id,
-        sf_dir,
-        top_k,
-        num_queries,
-        spark.conf.get(CHECKPOINT_MODE_CONF, "local"),
-    )
-    session_cache_sweep(_TOPK_COSINE_CACHE, app_id)
-    hit = _TOPK_COSINE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    base = quantized_embeddings(spark, sf_dir)
-    queries = base.where(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qq"), F.col("nrm").alias("nq")
-    )
-    cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
-    scored = (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= top_k)
-        .transform(truncate_lineage_eager)  # memoized family-shared frame
-    )
-    _TOPK_COSINE_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        base = quantized_embeddings(spark, sf_dir)
+        queries = base.where(F.col("vec_id") < num_queries).select(
+            F.col("vec_id").alias("query_id"), F.col("qv").alias("qq"), F.col("nrm").alias("nq")
+        )
+        cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
+            F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
+        )
+        scored = (
+            base.crossJoin(F.broadcast(queries))
+            .where(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
+        )
+        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+            .where(F.col("rank") <= top_k)
+            .transform(truncate_lineage_eager)
+        )
+
+    return session_memo(_TOPK_COSINE_CACHE, spark, (sf_dir, top_k, num_queries), build)
 
 
 def lsh_buckets(base: DataFrame) -> DataFrame:
@@ -396,31 +383,17 @@ KMEANS_ITERATIONS = 2
 # (k structs in one projection); switch to a broadcast-join argmin.
 KMEANS_LITERAL_MAX_K = 64
 
-# Session-scoped memo of the Lloyd's chain:
-# (applicationId, sf_dir, k, n_iter) → (materialized base, final centroid
-# list). Four registry consumers (embedding_kmeans, dedup_semantic,
-# dedup_semantic_keep via dedup_semantic, embedding_outliers, crossmodal
-# verdict) share one iteration cost while each staying standalone-correct —
-# the memo is a pure function of its key. Keyed on applicationId (unique
-# per SparkContext lifetime), NOT id(spark): CPython reuses object ids
-# after GC, so an id-keyed cache could hand a recreated session DataFrames
-# bound to a dead one. Entries from any other applicationId are evicted on
-# access, so a stop/recreate cycle frees the old session's localCheckpoint
-# blocks instead of pinning them for the process lifetime.
+# Session memo of the Lloyd's chain: (sf_dir, k, n_iter) → (materialized
+# base, final centroid list). Four registry consumers (embedding_kmeans,
+# dedup_semantic, dedup_semantic_keep via dedup_semantic,
+# embedding_outliers, crossmodal verdict) share one iteration cost while
+# each staying standalone-correct — the memo is a pure function of its key.
 _KMEANS_CACHE: dict[tuple, tuple[DataFrame, list]] = {}
 
 
-from ..checkpointing import session_cache_sweep as _cache_sweep  # noqa: E402
-
-
-def _kmeans_cache_sweep(app_id: str) -> None:
-    _cache_sweep(_KMEANS_CACHE, app_id)
-
-
-# Same memo pattern for SemDeDup's keep/drop artifact: the CC iteration over
+# Session memo of SemDeDup's keep/drop artifact: the CC iteration over
 # semantic pairs is the chain's second expensive stage and has two registry
 # consumers (dedup_semantic_keep itself and crossmodal_curation_verdict).
-# Key = (applicationId, sf_dir); same eviction rule as _KMEANS_CACHE.
 _SEMANTIC_KEEP_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -478,10 +451,13 @@ def _kmeans_state(
     n_iter: int = KMEANS_ITERATIONS,
 ) -> tuple[DataFrame, list]:
     """(materialized base, final centroids) from the session memo,
-    populating it if needed — the accessor downstream consumers use
-    instead of poking the cache layout by hand."""
-    _kmeans_assign_full(spark, sf_dir, k, n_iter)
-    return _KMEANS_CACHE[(spark.sparkContext.applicationId, sf_dir, k, n_iter)]
+    populating it if needed."""
+    return session_memo(
+        _KMEANS_CACHE,
+        spark,
+        (sf_dir, k, n_iter),
+        lambda: _kmeans_build(spark, sf_dir, k, n_iter),
+    )
 
 
 def _kmeans_assignment(base: DataFrame, cent_rows: list) -> DataFrame:
@@ -541,21 +517,23 @@ def _kmeans_assign_full(
     k: int | None = None,
     n_iter: int = KMEANS_ITERATIONS,
 ) -> DataFrame:
-    """Lloyd's iterations over the materialized quantized base; the final
-    assignment keeps ``qv``/``nrm`` so downstream consumers (dedup_semantic)
-    can continue from it with no second embeddings scan and no join."""
-    app_id = spark.sparkContext.applicationId
-    _kmeans_cache_sweep(app_id)
-    key = (app_id, sf_dir, k, n_iter)
-    hit = _KMEANS_CACHE.get(key)
-    if hit is not None:
-        base, cent = hit
-        return _kmeans_assignment(base, cent)
+    """The final assignment of Lloyd's iterations over the materialized
+    quantized base; it keeps ``qv``/``nrm`` so downstream consumers
+    (dedup_semantic) can continue from it with no second embeddings scan
+    and no join."""
+    return _kmeans_assignment(*_kmeans_state(spark, sf_dir, k, n_iter))
+
+
+def _kmeans_build(
+    spark: SparkSession, sf_dir: str, k: int | None, n_iter: int
+) -> tuple[DataFrame, list]:
+    """(materialized base, final centroids): the un-memoized chain behind
+    ``_kmeans_state``."""
     base = (
         quantized_embeddings(spark, sf_dir)
         .select("vec_id", "qv", "nrm")
         .repartition(spark.sparkContext.defaultParallelism)
-        .transform(truncate_lineage_eager)  # memoized family-shared frame
+        .transform(truncate_lineage_eager)
     )
     if k is None:
         # count() on the materialized checkpoint is a metadata-cheap pass;
@@ -588,8 +566,7 @@ def _kmeans_assign_full(
             for r in sums.collect()
         ]
         cent.sort()
-    _KMEANS_CACHE[key] = (base, cent)
-    return _kmeans_assignment(base, cent)
+    return base, cent
 
 
 SEMANTIC_COSINE_THRESHOLD = 0.3
@@ -692,25 +669,20 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins against to drop semantic duplicates."""
     from .dedup import connected_components
 
-    app_id = spark.sparkContext.applicationId
-    _cache_sweep(_SEMANTIC_KEEP_CACHE, app_id)
-    key = (app_id, sf_dir)
-    hit = _SEMANTIC_KEEP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = dedup_semantic(spark, sf_dir)
-    edges = pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b"))
-    nodes = quantized_embeddings(spark, sf_dir).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    cc = connected_components(nodes, edges)
-    out = cc.select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("cluster_id").alias("dup_group"),
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-    ).transform(truncate_lineage_eager)  # memoized family-shared frame
-    _SEMANTIC_KEEP_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        pairs = dedup_semantic(spark, sf_dir)
+        edges = pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b"))
+        nodes = quantized_embeddings(spark, sf_dir).select(
+            F.col("vec_id").alias("doc_id")
+        )
+        cc = connected_components(nodes, edges)
+        return cc.select(
+            F.col("doc_id").alias("vec_id"),
+            F.col("cluster_id").alias("dup_group"),
+            (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
+        ).transform(truncate_lineage_eager)
+
+    return session_memo(_SEMANTIC_KEEP_CACHE, spark, (sf_dir,), build)
 
 
 def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1817,8 +1789,6 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (bucket join + per-vector top-k window + mutuality self-join) is the
 # dominant shared cost of the graph-ANN family — sim_knn_graph itself, the
 # beam search's edge frame, and the beam-recall referee all consume it.
-# Key = (applicationId, sf_dir, checkpoint-mode); same eviction rule and
-# immutable-sf_dir contract as every session_cache_sweep memo.
 _KNN_GRAPH_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -1837,21 +1807,16 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles; ranks carry the (cosine DESC, neighbor ASC) total
     tie-break.
 
-    MATERIALIZED once and session-memoized (the _LSH_PAIRS_CACHE
-    convention). Consumers must NOT re-truncate the result; checkpointed
-    frames lose stats, so a consumer joining this frame should rely on
-    AQE's runtime sizing or hint broadcast explicitly."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, spark.conf.get(CHECKPOINT_MODE_CONF, "local"))
-    _cache_sweep(_KNN_GRAPH_CACHE, app_id)
-    hit = _KNN_GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = _knn_graph_build(spark, sf_dir).transform(truncate_lineage_eager)  # memoized family-shared frame
-    _KNN_GRAPH_CACHE[key] = out
-    return out
+    MATERIALIZED once and session-memoized per sf_dir. Consumers must
+    NOT re-truncate the result; checkpointed frames lose stats, so a
+    consumer joining this frame should rely on AQE's runtime sizing or
+    hint broadcast explicitly."""
+    return session_memo(
+        _KNN_GRAPH_CACHE,
+        spark,
+        (sf_dir,),
+        lambda: _knn_graph_build(spark, sf_dir).transform(truncate_lineage_eager),
+    )
 
 
 # Hybrid retrieval fusion: RRF constant, the query vector id, and the fused
@@ -2173,8 +2138,8 @@ INTRINSIC_DIM_MAX_CANDIDATES = 1_000_000
 # Candidate-matrix memo (r13 ADVICE): embedding_intrinsic_dim used to run
 # its driver-side candidate collect EVERY time the query was merely
 # CONSTRUCTED (plan dumps, scale-killer gates, repeated bench runs). The
-# collected NumPy arrays are immutable fixture data — memoized per
-# (applicationId, sf_dir) and swept like every other session memo.
+# collected NumPy arrays are immutable fixture data — session-memoized per
+# sf_dir.
 _INTRINSIC_CAND_CACHE: dict = {}
 
 
@@ -2254,13 +2219,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the old (d2, oid) tie-break.
     import numpy as np
 
-    from ..checkpointing import session_cache_sweep
-
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir)
-    session_cache_sweep(_INTRINSIC_CAND_CACHE, app_id)
-    cached = _INTRINSIC_CAND_CACHE.get(memo_key)
-    if cached is None:
+    def build():
         # Collect at most one row past the cap: an oversized corpus fails
         # here without pulling the whole candidate side to the driver.
         cand = (
@@ -2285,9 +2244,10 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand_nrm = cand["nrm"].to_numpy(dtype=np.int64)
         # One broadcast instead of re-pickling the matrix into every task
         # closure; executors fetch the blocks once per JVM.
-        cached = spark.sparkContext.broadcast((cand_ids, cand_mat, cand_nrm))
-        _INTRINSIC_CAND_CACHE[memo_key] = cached
-    twonn = F.pandas_udf(partial(_twonn_batch, cached), "struct<r1sq:bigint,r2sq:bigint>")
+        return spark.sparkContext.broadcast((cand_ids, cand_mat, cand_nrm))
+
+    cand_bc = session_memo(_INTRINSIC_CAND_CACHE, spark, (sf_dir,), build)
+    twonn = F.pandas_udf(partial(_twonn_batch, cand_bc), "struct<r1sq:bigint,r2sq:bigint>")
     two_nn = (
         base.where(F.col("vec_id") < INTRINSIC_DIM_QUERY_CAP)
         .select("vec_id", twonn("vec_id", "qv", "nrm").alias("s"))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpointing import session_memo
+
 FIXTURE_TABLES = [
     "region",
     "nation",
@@ -41,34 +43,28 @@ _NANO_TS_COLUMNS: dict[str, list[str]] = {
 # ~0.12s × ~500 calls across a full bench run, none of it data-dependent.
 # The cached value is an unmaterialized DataFrame (a logical plan): every
 # action on it still scans the parquet files, so nothing about execution
-# or results changes — only the redundant re-planning goes away. Keyed and
-# swept exactly like the operator memos (applicationId + sf_dir; the
-# fixture-immutability contract documented on session_cache_sweep).
+# or results changes — only the redundant re-planning goes away.
 _TABLE_PLAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing nano-timestamp columns."""
-    from ..checkpointing import session_cache_sweep
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    session_cache_sweep(_TABLE_PLAN_CACHE, app_id)
-    hit = _TABLE_PLAN_CACHE.get(key)
-    if hit is not None:
-        # A fresh projection per call: two loads of one table must not be
-        # the same DataFrame, whose shared column ids make a self-join's
-        # Column predicates ambiguous. It reuses the memoized plan, so
-        # there is still no re-listing and no footer read.
-        return hit.toDF(*hit.columns)
-    # Runtime-settable; required before the read plans the parquet schema.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
-    for col in _NANO_TS_COLUMNS.get(name, []):
-        if dtypes.get(col) == "bigint":
-            # epoch nanos -> epoch micros -> TimestampType (truncation matches
-            # DuckDB's ns->us conversion of the same parquet data).
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    _TABLE_PLAN_CACHE[key] = df
-    return df
+    def build() -> DataFrame:
+        # Runtime-settable; required before the read plans the parquet schema.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        dtypes = dict(df.dtypes)
+        for col in _NANO_TS_COLUMNS.get(name, []):
+            if dtypes.get(col) == "bigint":
+                # epoch nanos -> epoch micros -> TimestampType (truncation
+                # matches DuckDB's ns->us conversion of the same parquet data).
+                df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+        return df
+
+    plan = session_memo(_TABLE_PLAN_CACHE, spark, (sf_dir, name), build)
+    # A fresh projection per call: two loads of one table must not be the
+    # same DataFrame, whose shared column ids make a self-join's Column
+    # predicates ambiguous. It reuses the memoized plan, so there is still
+    # no re-listing and no footer read.
+    return plan.toDF(*plan.columns)

@@ -100,10 +100,11 @@ def oracle_sf_dir() -> str:
 # --- the registry record: every query built once per session ---------------
 #
 # The registry-wide checks (non-vacuity, scale killers, unpartitioned
-# windows, nested output columns, driver-window canonicalization) all read
-# this one record instead of building the registry themselves. Whichever
-# of them runs first pays for the whole build-and-collect, so each carries
-# SWEEP_TIMEOUT_S (a parametrized check on its first case only).
+# windows, nested output columns, driver-window canonicalization) and the
+# oracle parity cases at GUARD_SF_DIR all read this one record instead of
+# building the registry themselves. Whichever of them runs first pays for
+# the whole build-and-collect, so each carries SWEEP_TIMEOUT_S (a
+# parametrized check on its first case only).
 SWEEP_TIMEOUT_S = 1500
 
 # Query builds made by the registry_record fixture, by name.

@@ -120,17 +120,23 @@ def _arrow_width(t) -> str:
     return str(t)
 
 
-def compare_query(spark, name: str, sf_dir: str, query_fn=None, sql: str | None = None):
-    """Returns (ok, message)."""
+def compare_query(
+    spark, name: str, sf_dir: str, query_fn=None, sql: str | None = None, recorded=None
+):
+    """Returns (ok, message). ``recorded`` is the query's result at
+    ``sf_dir`` already collected (anything with ``.schema`` and ``.rows``,
+    e.g. a registry record entry); given, the query is not built again."""
     from cl_tagger_batch_processing_spark.oracles import ORACLE_SQL
     from cl_tagger_batch_processing_spark.registry import QUERIES
 
-    query_fn = query_fn or QUERIES[name]
     sql = sql or ORACLE_SQL[name]
-
-    sdf = query_fn(spark, sf_dir)
-    spark_cols = [c.lower() for c in sdf.columns]
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    if recorded is None:
+        sdf = (query_fn or QUERIES[name])(spark, sf_dir)
+        schema, rows = sdf.schema, sdf.collect()
+    else:
+        schema, rows = recorded.schema, recorded.rows
+    spark_cols = [c.lower() for c in schema.fieldNames()]
+    spark_rows = [tuple(r) for r in rows]
 
     con = duckdb_connection(sf_dir)
     # Arrow fetch on purpose (NOT fetchall): the driver hashes through
@@ -147,7 +153,7 @@ def compare_query(spark, name: str, sf_dir: str, query_fn=None, sql: str | None 
     # other column hashes differently under the driver's Arrow serialization
     # even when every value matches — the same class as r12's HUGEINT fails.
     # Zero extra jobs: both schemas are already in hand.
-    sw = {f.name.lower(): _spark_width(f.dataType) for f in sdf.schema.fields}
+    sw = {f.name.lower(): _spark_width(f.dataType) for f in schema.fields}
     dw = {n.lower(): _arrow_width(f.type) for n, f in zip(tbl.column_names, tbl.schema)}
     width_bad = {
         c: (sw[c], dw[c])

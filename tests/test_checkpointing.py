@@ -96,3 +96,25 @@ def test_cc_loop_identical_in_reliable_mode(spark, sf_dir, reliable_mode):
     spark.conf.set(CHECKPOINT_MODE_CONF, "local")
     local = _rows(dedup_clusters(spark, sf_dir))
     assert reliable == local
+
+
+def test_kmeans_chain_memos_rebuild_after_switch_to_reliable(spark, sf_dir, reliable_mode):
+    """The k-means chain and SemDeDup keep memos hold eager checkpoints, so
+    a frame built in local mode must not answer for reliable mode: after
+    the switch both rebuild, and their checkpoint files land in the
+    reliable directory."""
+    from cl_tagger_batch_processing_spark.operators.similarity import (
+        dedup_semantic_keep,
+        embedding_kmeans,
+    )
+
+    spark.conf.set(CHECKPOINT_MODE_CONF, "local")
+    local_keep = dedup_semantic_keep(spark, sf_dir)
+    local_kmeans = _rows(embedding_kmeans(spark, sf_dir))
+    spark.conf.set(CHECKPOINT_MODE_CONF, "reliable")
+    reliable_keep = dedup_semantic_keep(spark, sf_dir)
+    reliable_kmeans = _rows(embedding_kmeans(spark, sf_dir))
+    assert reliable_keep is not local_keep
+    assert any(files for _, _, files in os.walk(reliable_mode))
+    assert reliable_kmeans == local_kmeans
+    assert _rows(reliable_keep) == _rows(local_keep)

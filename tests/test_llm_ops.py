@@ -463,6 +463,17 @@ def test_pagerank_empty_graph_returns_empty(spark, sf_dir):
     assert [f.name for f in out.schema.fields] == ["node", "pr_scaled", "pagerank"]
 
 
+def test_broadcast_cap_follows_driver_memory():
+    from cl_tagger_batch_processing_spark.operators.graph import broadcast_max_nodes
+
+    def cap(mem):
+        return broadcast_max_nodes(type("S", (), {"conf": {"spark.driver.memory": mem}})())
+
+    assert cap("16g") == cap("64g") == cap("16384m") == 1 << 23
+    assert cap("4g") == cap("4096") == 1 << 21  # a bare number is MiB
+    assert cap("2g") == 1 << 20
+
+
 def test_parse_byte_conf_spark_forms():
     from cl_tagger_batch_processing_spark.streaming.windows import _parse_byte_conf
 

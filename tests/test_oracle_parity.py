@@ -3,7 +3,9 @@ hash-match DuckDB on the sf0.001 fixtures. The DEFAULT run value-checks the
 driver window + every optimization-touched operator (fits the verification
 driver's pytest budget); SPARK_GRAFT_FULL_PARITY=1 sweeps every
 oracle-backed registration. SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01
-runs either set at the driver-scale fixtures."""
+runs either set at the driver-scale fixtures. At the default sf0.001 the
+cases compare the session's registry record (``conftest.registry_record``)
+with DuckDB instead of building each query again."""
 
 from __future__ import annotations
 
@@ -14,7 +16,7 @@ import pytest
 from cl_tagger_batch_processing_spark.oracles import ORACLE_SQL
 from cl_tagger_batch_processing_spark.registry import NO_ORACLE, QUERIES
 
-from .conftest import sweep_cases
+from .conftest import GUARD_SF_DIR, sweep_cases
 from .oracle_harness import compare_query
 
 
@@ -173,9 +175,18 @@ PARITY_NAMES = (
 )
 
 
-@pytest.mark.parametrize("name", PARITY_NAMES)
-def test_oracle_parity(spark, sf_dir, name):
-    ok, msg = compare_query(spark, name, sf_dir)
+@pytest.fixture(scope="session")
+def parity_record(request, sf_dir):
+    """The registry record, which holds each query's schema and rows at
+    GUARD_SF_DIR; None at any other scale, where each case builds its
+    query."""
+    return request.getfixturevalue("registry_record") if sf_dir == GUARD_SF_DIR else None
+
+
+@pytest.mark.parametrize("name", sweep_cases(PARITY_NAMES))
+def test_oracle_parity(spark, sf_dir, parity_record, name):
+    recorded = parity_record[name] if parity_record else None
+    ok, msg = compare_query(spark, name, sf_dir, recorded=recorded)
     assert ok, f"{name}: {msg}"
 
 

@@ -1,5 +1,6 @@
-"""The session's registry record (conftest.registry_record) and the five
-registry-wide checks that read it.
+"""The session's registry record (conftest.registry_record) and the
+checks that read it: the five registry-wide checks and the oracle
+comparison of the default parity cases.
 
 Each check is a function over the record, so each can be fed a synthetic
 record with one planted violation and no Spark session. A check that
@@ -15,7 +16,8 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from cl_tagger_batch_processing_spark.registry import QUERIES
 
-from .conftest import REGISTRY_BUILDS, SWEEP_TIMEOUT_S, QueryRecord
+from .conftest import GUARD_SF_DIR, REGISTRY_BUILDS, SWEEP_TIMEOUT_S, QueryRecord
+from .oracle_harness import compare_query
 from .test_oracle_parity import canonicalize_like_driver, nested_output_columns
 from .test_plans import scale_killers, unallowlisted_unpartitioned_windows
 from .test_vacuity import ALLOWLIST, vacuous_outputs
@@ -51,6 +53,13 @@ def _canonicalize_errors(record):
     except TypeError as e:
         return str(e)
     return ""
+
+
+def _oracle_mismatch(record):
+    ok, msg = compare_query(
+        None, PLANTED, GUARD_SF_DIR, sql="SELECT 1::BIGINT AS id", recorded=record[PLANTED]
+    )
+    return "" if ok else msg
 
 
 # case -> (check, record with one planted violation, what the check reports)
@@ -101,6 +110,11 @@ PLANTED_CASES = {
         _canonicalize_errors,
         _record(df=_FrameStub(pd.DataFrame({"id": [1, 1], "members": [[1], [2]]}))),
         "unhashable type: 'list'",
+    ),
+    "oracle_value_mismatch": (
+        _oracle_mismatch,
+        _record(rows=[Row(id=2)], schema=StructType([StructField("id", LongType())])),
+        "value mismatch (1 rows differ)",
     ),
 }
 

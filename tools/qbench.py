@@ -14,7 +14,7 @@ AQE's final plan is what lands in the file.
 Each run is tagged with its own Spark job group so the output reports the
 NUMBER OF SPARK JOBS the run launched — the measurement the iterative-
 family optimizations (fewer checkpoint/census jobs per superstep) are
-graded on. Session memo caches (the bench.py cold/warm list plus the
+graded on. Session memo caches (the memos bench.py attributes plus the
 table-plan memo) are cleared before every timed run by default so isolated
 medians compare cold against cold; pass --keep-memos for bench-like warm
 riding.
@@ -30,17 +30,12 @@ import time
 
 
 def _memo_caches():
-    """The session memo dicts cleared before each run: the operator memos
-    bench.py instruments plus the table-plan memo, so every isolated run
-    pays its own memo builds and table plans (cold-vs-cold A/B)."""
-    import importlib
+    """The session memo dicts cleared before each run: every memo bench.py
+    attributes plus the table-plan memo, so every isolated run pays its
+    own memo builds and table plans (cold-vs-cold A/B)."""
+    from bench import package_memos
 
-    from bench import MEMO_CACHES
-
-    return [
-        getattr(importlib.import_module(f"cl_tagger_batch_processing_spark.{mod}"), attr)
-        for mod, attr in [*MEMO_CACHES, ("sources.tables", "_TABLE_PLAN_CACHE")]
-    ]
+    return [getattr(module, name) for module, name in package_memos(kept={"_SESSION_CACHE"})]
 
 
 def main() -> int:
