@@ -810,6 +810,16 @@ def int_dot(a, b):
     )
 
 
+def int_cosine(a: str, na: str, b: str, nb: str):
+    """Cosine of two quantized vector columns ``a``/``b`` with squared
+    norms ``na``/``nb``: the exact int_dot over the product of the two
+    norm square roots, one operation order everywhere so every engine
+    and every caller computes bit-identical doubles."""
+    return int_dot(F.col(a), F.col(b)).cast("double") / (
+        F.sqrt(F.col(na).cast("double")) * F.sqrt(F.col(nb).cast("double"))
+    )
+
+
 def embedding_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-block pair relation (vec_a, vec_b, label, cosine) BEFORE the
     threshold filter — the quantity that must stay far below all-pairs;
@@ -822,9 +832,7 @@ def embedding_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = base.select(
         F.col("vec_id").alias("vec_b"), "label", F.col("qv").alias("qb"), F.col("nrm").alias("nb")
     )
-    cos = int_dot(F.col("qa"), F.col("qb")).cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cos = int_cosine("qa", "na", "qb", "nb")
     return (
         a.join(b, "label")
         .where(F.col("vec_a") < F.col("vec_b"))

@@ -31,8 +31,6 @@ one scalar, the sanctioned control-plane shape.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -66,13 +64,11 @@ def broadcast_max_nodes(spark: SparkSession) -> int:
     The driver builds every broadcast relation, so the cap follows
     ``spark.driver.memory``: 2**23 nodes (≈8M × ~24 B ≈ 200 MB built
     relation, inside the guide's "few hundred MB is usually fine") at a
-    16g driver or more, proportionally fewer below (2**20 at 2g)."""
-    mem = spark.conf.get("spark.driver.memory", "1g").strip().lower()
-    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem)
-    if m is None:
-        raise ValueError(f"spark.driver.memory={mem!r}: not a JVM memory size")
-    mib = int(m.group(1)) * {"k": 1 / 1024, "g": 1024, "t": 1 << 20}.get(m.group(2), 1)
-    return min(1 << 23, int((1 << 23) * mib) // (16 * 1024))
+    16g driver or more, proportionally fewer below (2**20 at 2g). Spark's
+    own size parser reads it (a bare number is MiB; an unparseable value
+    raises)."""
+    mib = spark.sparkContext._jsc.sc().conf().getSizeAsMb("spark.driver.memory", "1g")
+    return min(1 << 23, (1 << 23) * mib // (16 * 1024))
 
 
 _EDGES_CACHE: dict = {}
@@ -675,17 +671,19 @@ def bfs_distances(
     max_rounds: int = SP_MAX_ROUNDS,
     round_counter: list | None = None,
 ) -> DataFrame:
-    """Frontier BFS core over a symmetric (src, dst) edge frame and a
-    single-column seed frame — factored out so synthetic graphs (budget
-    edge cases, chain diameters) are unit-testable without the fixture
-    edge builder."""
+    """Frontier BFS core over a symmetric (src, dst) edge frame and a seed
+    frame — factored out so synthetic graphs (budget edge cases, chain
+    diameters) are unit-testable without the fixture edge builder. The
+    last seed column is the seed node; any columns before it are keys
+    carried through every round, so each key runs its own BFS and labels
+    each (key, node) pair exactly once (closeness keys on its root)."""
     from ..checkpointing import checkpoint_with_metric
 
     n_rows = F.count(F.lit(1)).alias("n")
     cap = broadcast_max_nodes(edges.sparkSession)
-    seed_col = seeds.columns[0]
+    *keys, seed_col = seeds.columns
     dist = seeds.select(
-        F.col(seed_col).alias("node"), F.lit(0).cast("bigint").alias("dist")
+        *keys, F.col(seed_col).alias("node"), F.lit(0).cast("bigint").alias("dist")
     )
     dist, layer_size = checkpoint_with_metric(dist, n_rows)
     labeled_n = layer_size
@@ -707,15 +705,15 @@ def bfs_distances(
         # the convergence scalars the loop already reads — under the node
         # threshold they broadcast, leaving the edge side unshuffled.
         fr = F.broadcast(frontier) if layer_size <= cap else frontier
-        seen = dist.select("node")
+        seen = dist.select(*keys, "node")
         if labeled_n <= cap:
             seen = F.broadcast(seen)
         cand = (
             fr.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
+            .select(*keys, F.col("dst").alias("node"))
             .distinct()
-            .join(seen, "node", "left_anti")
-            .select("node", F.lit(hop).cast("bigint").alias("dist"))
+            .join(seen, [*keys, "node"], "left_anti")
+            .select(*keys, "node", F.lit(hop).cast("bigint").alias("dist"))
         )
         fresh, layer_size = checkpoint_with_metric(cand, n_rows)
         labeled_n += layer_size
@@ -954,22 +952,16 @@ def graph_closeness_centrality(
     is REACH EFFICIENCY (mean hops to everything reachable). Sources are
     deterministic: degree DESC, node ASC.
 
-    Algorithm: source-tagged frontier BFS — state is (root, node, dist),
-    the frontier joins the edge list once per round, candidates are
-    deduped per (root, node) and anti-joined against the labeled set, so
-    each (root, node) pair is labeled exactly once and total join work is
-    O(sources × E) across all rounds. Rounds are checkpointed with the
-    frontier size observed on the same job (the bfs_distances
-    discipline); an undrained frontier at the budget RAISES, matching the
-    oracle's dist guard. Closeness = (n_reached − 1) / Σdist — one
-    division of exact BIGINTs; isolated sources yield NULL.
+    Algorithm: ``bfs_distances`` keyed on the source — state is (root,
+    node, dist), so each (root, node) pair is labeled exactly once and
+    total join work is O(sources × E) across all rounds; an undrained
+    frontier at the budget RAISES, matching the oracle's dist guard.
+    Closeness = (n_reached − 1) / Σdist — one division of exact BIGINTs;
+    isolated sources yield NULL.
 
-    Scale: identical per-round shape to ``bfs_distances`` with a
-    constant-factor (4×) wider frontier; the state frame is bounded by
-    sources × nodes. The degree ranking is a map-side-combinable groupBy
-    plus a k-row limit."""
-    from ..checkpointing import checkpoint_with_metric
-
+    Scale: a constant-factor (4×) wider frontier than single-source BFS;
+    the state frame is bounded by sources × nodes. The degree ranking is
+    a map-side-combinable groupBy plus a k-row limit."""
     edges = cooccurrence_edges(spark, sf_dir, min_support=min_support)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     # materialized once: roots feeds both the BFS seed frame and the final
@@ -978,47 +970,12 @@ def graph_closeness_centrality(
     roots = truncate_lineage(
         deg.orderBy(F.desc("degree"), F.asc("src")).limit(CLOSE_N_SOURCES)
     )
-    n_rows = F.count(F.lit(1)).alias("n")
-    cap = broadcast_max_nodes(spark)
-    dist = roots.select(
-        F.col("src").alias("root"),
-        F.col("src").alias("node"),
-        F.lit(0).cast("bigint").alias("dist"),
+    dist = bfs_distances(
+        edges,
+        roots.select(F.col("src").alias("root"), "src"),
+        max_rounds=CLOSE_MAX_ROUNDS,
+        round_counter=round_counter,
     )
-    dist, layer_size = checkpoint_with_metric(dist, n_rows)
-    labeled_n = layer_size
-    frontier = dist
-    converged = False
-    # budget + 1 probe round proves the dist == budget layer is the last
-    # (the bfs_distances convention); probe rows are discarded on raise.
-    for hop in range(1, CLOSE_MAX_ROUNDS + 2):
-        if round_counter is not None:
-            round_counter.append(1)
-        if layer_size == 0:
-            converged = True
-            break
-        fr = F.broadcast(frontier) if layer_size <= cap else frontier
-        seen = dist.select("root", "node")
-        if labeled_n <= cap:
-            seen = F.broadcast(seen)
-        cand = (
-            fr.join(edges, frontier.node == edges.src)
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-            .join(seen, ["root", "node"], "left_anti")
-            .select("root", "node", F.lit(hop).cast("bigint").alias("dist"))
-        )
-        fresh, layer_size = checkpoint_with_metric(cand, n_rows)
-        labeled_n += layer_size
-        dist = truncate_lineage(dist.unionByName(fresh))
-        frontier = fresh
-    if layer_size == 0:
-        converged = True
-    if not converged:
-        raise RuntimeError(
-            f"graph_closeness_centrality did not drain its frontier within "
-            f"{CLOSE_MAX_ROUNDS} hops — raise the round budget"
-        )
     reach = dist.groupBy("root").agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),

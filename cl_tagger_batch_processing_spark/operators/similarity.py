@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
-from .dedup import int_dot, quantized_embeddings
+from .dedup import int_cosine, int_dot, quantized_embeddings
 
 DEFAULT_TOP_K = 10
 DEFAULT_NUM_QUERIES = 5
@@ -47,6 +47,35 @@ def _lcg_plane_weights(num_planes: int = LSH_NUM_PLANES, dim: int = EMBED_DIM) -
             row.append(1 if (state >> 16) & 1 else -1)
         planes.append(row)
     return planes
+
+
+def _query_scan(spark: SparkSession, sf_dir: str, num_queries: int) -> DataFrame:
+    """Every (query, corpus vector) pair with its exact cosine: the query
+    vectors (vec_id < num_queries) broadcast against one scan of the
+    corpus. The brute-force scan behind both top-k and range search."""
+    base = quantized_embeddings(spark, sf_dir)
+    queries = base.where(F.col("vec_id") < num_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("qv").alias("qq"), F.col("nrm").alias("nq")
+    )
+    return (
+        base.crossJoin(F.broadcast(queries))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            int_cosine("qq", "nq", "qv", "nrm").alias("cosine"),
+        )
+    )
+
+
+def _rank_top_k(scored: DataFrame, top_k: int) -> DataFrame:
+    """The top_k neighbors of each query by (cosine DESC, neighbor_id ASC),
+    with their bigint rank; the unique neighbor_id tie-break keeps the set
+    deterministic."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
+        F.col("rank") <= top_k
+    )
 
 
 _TOPK_COSINE_CACHE: dict[tuple, DataFrame] = {}
@@ -70,24 +99,8 @@ def sim_topk_cosine(
     optimization)."""
 
     def build() -> DataFrame:
-        base = quantized_embeddings(spark, sf_dir)
-        queries = base.where(F.col("vec_id") < num_queries).select(
-            F.col("vec_id").alias("query_id"), F.col("qv").alias("qq"), F.col("nrm").alias("nq")
-        )
-        cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-            F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-        )
-        scored = (
-            base.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .where(F.col("rank") <= top_k)
-            .transform(truncate_lineage_eager)
-        )
+        scored = _query_scan(spark, sf_dir, num_queries)
+        return _rank_top_k(scored, top_k).transform(truncate_lineage_eager)
 
     return session_memo(_TOPK_COSINE_CACHE, spark, (sf_dir, top_k, num_queries), build)
 
@@ -143,9 +156,7 @@ def ann_candidates(
             F.explode(probe_buckets).alias("bucket"),
         )
     )
-    cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
+    cos = int_cosine("qq", "nq", "qv", "nrm")
     return (
         base.join(F.broadcast(queries), "bucket")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -163,12 +174,7 @@ def sim_ann_lsh(
     exact cosine re-rank inside the bucket. The equi-join on bucket replaces
     the brute-force cross join — this is the plan shape that survives a
     100× corpus scale-up (add multi-probe / more tables for recall)."""
-    scored = ann_candidates(spark, sf_dir, num_queries=num_queries)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= top_k)
-    )
+    return _rank_top_k(ann_candidates(spark, sf_dir, num_queries=num_queries), top_k)
 
 
 IVF_NUM_CELLS = 8
@@ -180,9 +186,7 @@ def ivf_assign(base: DataFrame, centroids: DataFrame) -> DataFrame:
     tie-break): the IVF coarse quantizer. Centroids are a broadcast literal
     dim; the argmax is a window over (vector × centroid) — linear in corpus
     size times the (small, fixed) cell count, never corpus × corpus."""
-    cos = int_dot(F.col("cv"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("cn").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
+    cos = int_cosine("cv", "cn", "qv", "nrm")
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell_id"))
     return (
         base.crossJoin(F.broadcast(centroids))
@@ -205,9 +209,7 @@ def _ivf_query_cells(base: DataFrame, centroids: DataFrame, num_queries: int) ->
     """Every query × cell, ranked by (cosine DESC, cell_id ASC) — the
     probe schedule. A branch probing ``nprobe`` cells is ``rn <= nprobe``
     over this ONE relation, so a probe sweep shares a single build."""
-    qcos = int_dot(F.col("cv"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("cn").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
+    qcos = int_cosine("cv", "cn", "qv", "nrm")
     wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cell_id"))
     return (
         base.where(F.col("vec_id") < num_queries)
@@ -232,19 +234,13 @@ def _ivf_topk_on_index(
     probed = qcells.where(F.col("rn") <= nprobe).select(
         "query_id", "qq", "nq", "cell_id"
     )
-    cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
+    cos = int_cosine("qq", "nq", "qv", "nrm")
     scored = (
         assigned.join(F.broadcast(probed), "cell_id")
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= top_k)
-    )
+    return _rank_top_k(scored, top_k)
 
 
 def sim_topk_ivf(
@@ -1057,19 +1053,7 @@ def sim_range_search(
     one top-k shuffle disappears and the operator is a pure map at any
     corpus size. Cosine on integer-quantized vectors is bit-identical
     across engines, so the ≥ cut is exact, not tolerance-fuzzy."""
-    base = quantized_embeddings(spark, sf_dir)
-    queries = base.where(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qq"), F.col("nrm").alias("nq")
-    )
-    cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
-    return (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _query_scan(spark, sf_dir, num_queries).where(F.col("cosine") >= threshold)
 
 
 MARGIN_INTER_BUCKETS = 32
@@ -1108,9 +1092,7 @@ def embedding_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qv").alias("qb"),
         F.col("nrm").alias("nb"),
     )
-    cos = int_dot(F.col("qa"), F.col("qb")).cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cos = int_cosine("qa", "na", "qb", "nb")
     intra = (
         a.join(b.drop("bucket"), (F.col("label_a") == F.col("label_b")))
         .where(F.col("vec_a") < F.col("vec_b"))
@@ -1432,9 +1414,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     qr = base.where(F.col("vec_id") == 0).select(
         F.col("qv").alias("qq"), F.col("nrm").alias("nq")
     )
-    rel = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
+    rel = int_cosine("qq", "nq", "qv", "nrm")
     scored = (
         base.crossJoin(F.broadcast(qr))
         .where(F.col("vec_id") != 0)
@@ -1451,9 +1431,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = pool.select(
         F.col("vec_id").alias("idb"), F.col("qv").alias("qb"), F.col("nrm").alias("nb")
     )
-    sim = int_dot(F.col("qa"), F.col("qb")).cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    sim = int_cosine("qa", "na", "qb", "nb")
     sims = (
         pa.join(F.broadcast(pb), F.col("ida") != F.col("idb"))
         .select("ida", "idb", sim.alias("sim"))
@@ -1758,9 +1736,7 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nv"),
         "bucket",
     )
-    cos = int_dot(F.col("qu"), F.col("qv2")).cast("double") / (
-        F.sqrt(F.col("nu").cast("double")) * F.sqrt(F.col("nv").cast("double"))
-    )
+    cos = int_cosine("qu", "nu", "qv2", "nv")
     pairs = (
         a.join(b, "bucket")
         .where(F.col("u") != F.col("v"))
@@ -1918,9 +1894,7 @@ def sim_ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = sim_knn_graph(spark, sf_dir).select(
         F.col("vec_id").alias("u"), F.col("neighbor_id").alias("v")
     )
-    cos = int_dot(F.col("qq"), F.col("qv")).cast("double") / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
+    cos = int_cosine("qq", "nq", "qv", "nrm")
 
     def score(nodes: DataFrame) -> DataFrame:
         return (

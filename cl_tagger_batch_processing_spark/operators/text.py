@@ -932,6 +932,62 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str, top_n: int = ZIPF_TOP_N) ->
     )
 
 
+def _heldout_bigram_model(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The held-out bigram LM protocol shared by the add-1 and Kneser-Ney
+    scorers: space-split documents, bigrams of docs with ≥ 2 tokens,
+    train = even doc_ids, test = odd. Returns (test bigrams (doc_id, w1,
+    w2), the train bigram counts c2 (w1, w2, c2), the 1-row train
+    vocabulary size v).
+
+    c2 is MATERIALIZED: every scorer reads it from several consumers
+    (prefix totals, fan-in types, scalars, the score join), it is
+    bigram-TYPE-sized (the model, not the corpus), and re-deriving it
+    re-runs the train-side explode+groupBy per consumer."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    gen = (
+        "transform(sequence(1, size(t)-1), "
+        "i -> struct(element_at(t, i) AS w1, element_at(t, i+1) AS w2))"
+    )
+    bigrams = toks.where(F.size("t") >= 2).select(
+        "doc_id", F.explode(F.expr(gen)).alias("b")
+    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+    train = bigrams.where(F.col("doc_id") % 2 == 0)
+    test = bigrams.where(F.col("doc_id") % 2 == 1)
+    c2 = (
+        train.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c2"))
+        .transform(truncate_lineage)
+    )
+    vocab = (
+        toks.where(F.col("doc_id") % 2 == 0)
+        .select(F.explode("t").alias("token"))
+        .agg(F.countDistinct("token").alias("v"))
+    )
+    return test, c2, vocab
+
+
+def _perplexity_rollup(scored: DataFrame) -> DataFrame:
+    """Per-document (n_bigrams, avg_neg_loglik, perplexity) over exact
+    DECIMAL(28,9) ln terms ``ll``: the mean rounds at 6dp and the
+    perplexity exponentiates that rounded mean (exp of identical doubles
+    in every engine)."""
+    avg_nll = F.round(
+        -(F.sum("ll").cast("double")) / F.count(F.lit(1)).cast("double"), 6
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        avg_nll.alias("avg_neg_loglik"),
+    ).select(
+        "doc_id",
+        "n_bigrams",
+        "avg_neg_loglik",
+        F.round(F.exp(F.col("avg_neg_loglik")), 6).alias("perplexity"),
+    )
+
+
 def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document perplexity under an add-1-smoothed BIGRAM LM trained on
     the even-doc_id half of the corpus and scored on the odd half — the
@@ -952,30 +1008,8 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row broadcast scalar. Determinism: each ln term evaluates on an
     exact rational, rounds at 9dp, and sums in DECIMAL(28,9); perplexity
     exponentiates the 6dp-rounded mean (exp of identical doubles)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    gen = (
-        "transform(sequence(1, size(t)-1), "
-        "i -> struct(element_at(t, i) AS w1, element_at(t, i+1) AS w2))"
-    )
-    bigrams = toks.where(F.size("t") >= 2).select(
-        "doc_id", F.explode(F.expr(gen)).alias("b")
-    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    train = bigrams.where(F.col("doc_id") % 2 == 0)
-    test = bigrams.where(F.col("doc_id") % 2 == 1)
-    # TWO consumers (prefix totals + the score join) of the bigram-count
-    # model relation: materialize once (bigram-type-sized — the model)
-    c2 = (
-        train.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .transform(truncate_lineage)
-    )
+    test, c2, vocab = _heldout_bigram_model(spark, sf_dir)
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    vocab = (
-        toks.where(F.col("doc_id") % 2 == 0)
-        .select(F.explode("t").alias("token"))
-        .agg(F.countDistinct("token").alias("v"))
-    )
     scored = (
         test.join(c2, ["w1", "w2"], "left")
         .join(c1, "w1", "left")
@@ -993,18 +1027,7 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ll"),
         )
     )
-    avg_nll = F.round(
-        -(F.sum("ll").cast("double")) / F.count(F.lit(1)).cast("double"), 6
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        avg_nll.alias("avg_neg_loglik"),
-    ).select(
-        "doc_id",
-        "n_bigrams",
-        "avg_neg_loglik",
-        F.round(F.exp(F.col("avg_neg_loglik")), 6).alias("perplexity"),
-    )
+    return _perplexity_rollup(scored)
 
 
 def text_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1936,41 +1959,13 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     train bigrams; fan-out types fold into the prefix-count relation (same
     key, one shuffle); the score pass joins test bigrams by token-pair /
     token equi-joins with the two scalars on broadcast."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    gen = (
-        "transform(sequence(1, size(t)-1), "
-        "i -> struct(element_at(t, i) AS w1, element_at(t, i+1) AS w2))"
-    )
-    bigrams = toks.where(F.size("t") >= 2).select(
-        "doc_id", F.explode(F.expr(gen)).alias("b")
-    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    train = bigrams.where(F.col("doc_id") % 2 == 0)
-    test = bigrams.where(F.col("doc_id") % 2 == 1)
-    # FOUR consumers (prefix totals, fan-in types, the type-count scalar,
-    # the score join) of the bigram-count model relation: materialize it
-    # once — it is bigram-TYPE-sized (the model, not the corpus), and
-    # re-deriving it re-runs the train-side explode+groupBy per consumer
-    c2 = (
-        train.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .transform(truncate_lineage)
-    )
+    test, c2, vocab = _heldout_bigram_model(spark, sf_dir)
     # prefix totals + fan-out type counts share the w1 key: one relation
     c1 = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("fanout")
     )
     fanin = c2.groupBy("w2").agg(F.count(F.lit(1)).alias("fanin"))
-    scalars = (
-        c2.agg(F.count(F.lit(1)).alias("n_types"))
-        .crossJoin(
-            F.broadcast(
-                toks.where(F.col("doc_id") % 2 == 0)
-                .select(F.explode("t").alias("token"))
-                .agg(F.countDistinct("token").alias("v"))
-            )
-        )
-    )
+    scalars = c2.agg(F.count(F.lit(1)).alias("n_types")).crossJoin(F.broadcast(vocab))
     dd = F.lit(float(KN_DISCOUNT_NUM)) / F.lit(float(KN_DISCOUNT_DEN))
     pcont = (
         (F.coalesce("fanin", F.lit(0)) + F.lit(1)).cast("double")
@@ -1996,18 +1991,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.log(p), 9).cast("decimal(28,9)").alias("ll"),
         )
     )
-    avg_nll = F.round(
-        -(F.sum("ll").cast("double")) / F.count(F.lit(1)).cast("double"), 6
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        avg_nll.alias("avg_neg_loglik"),
-    ).select(
-        "doc_id",
-        "n_bigrams",
-        "avg_neg_loglik",
-        F.round(F.exp(F.col("avg_neg_loglik")), 6).alias("perplexity"),
-    )
+    return _perplexity_rollup(scored)
 
 
 def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -62,22 +62,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-def _parse_byte_conf(raw: str) -> int | None:
-    """Spark size confs are byte STRINGS ('10485760b', '100MB', '1g', or a
-    bare int meaning bytes; '-1' disables). Mirror JavaUtils
-    byteStringAsBytes for the suffixes that occur in practice; None for
-    anything unparseable."""
-    import re
-
-    m = re.fullmatch(r"\s*(-?\d+)\s*([kmgtp]?b?)\s*", str(raw).lower())
-    if not m:
-        return None
-    mult = {"": 1, "b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
-            "g": 1024**3, "gb": 1024**3, "t": 1024**4, "tb": 1024**4,
-            "p": 1024**5, "pb": 1024**5}[m.group(2)]
-    return int(m.group(1)) * mult
-
-
 def _run_to_memory(agg: DataFrame, output_mode: str) -> DataFrame:
     """Drive a bounded stream to completion into a memory sink.
 
@@ -129,12 +113,13 @@ def _run_all_to_memory(aggs: list[tuple[DataFrame, str]]) -> list[DataFrame]:
     return [spark.table(name) for name in names]
 
 
-def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windows per event_type over a live stream; complete
-    mode ⇒ result set equals the batch aggregation (oracle-checked)."""
+def _windowed_type_counts(spark: SparkSession, sf_dir: str, *window: str) -> DataFrame:
+    """Event count and exact DECIMAL value sum per (time window, event_type)
+    over a live stream in complete mode; ``window`` is F.window's duration
+    (and slide) after the ts column."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # epoch-aligned windows
     ev = events_stream(spark, sf_dir)
-    agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
+    agg = ev.groupBy(F.window("ts", *window).alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(12,2)")).alias("sv"),
     )
@@ -145,6 +130,12 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.col("sv").cast("double").alias("sum_value"),
     )
+
+
+def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour windows per event_type over a live stream; complete
+    mode ⇒ result set equals the batch aggregation (oracle-checked)."""
+    return _windowed_type_counts(spark, sf_dir, "1 hour")
 
 
 def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,14 +265,12 @@ def stream_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bound the demo dim to what actually broadcasts: each row is ~16 bytes
     # (bigint + short string), so cap rows at autoBroadcastJoinThreshold/16.
     # A 10M-row "guard" would admit a dim of hundreds of MB and fail later
-    # as an executor OOM instead of this intended loud ValueError. The conf
-    # value is a BYTE STRING ('10485760b', '100MB', ...) or '-1' (auto-
-    # broadcast disabled — we broadcast explicitly here, so fall back to
-    # the 10 MB default cap rather than a zero cap).
-    thresh_bytes = _parse_byte_conf(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    )
-    if thresh_bytes is None or thresh_bytes <= 0:
+    # as an executor OOM instead of this intended loud ValueError. SQLConf
+    # parses the byte string; -1 means auto-broadcast is disabled — we
+    # broadcast explicitly here, so fall back to the 10 MB default cap
+    # rather than a zero cap.
+    thresh_bytes = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if thresh_bytes <= 0:
         thresh_bytes = 10 * 1024 * 1024
     max_dim_rows = max(1, thresh_bytes // 16)
     if max_uid is None or max_uid >= max_dim_rows:
@@ -312,21 +301,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window starts with an integer generate_series). State is one row per
     (window, type) — slide count × tumbling state, bounded by the
     watermarkable window width, not stream history."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = events_stream(spark, sf_dir)
-    agg = ev.groupBy(
-        F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(12,2)")).alias("sv"),
-    )
-    out = _run_to_memory(agg, "complete")
-    return out.select(
-        F.unix_timestamp("w.start").alias("window_start_epoch"),
-        "event_type",
-        "n",
-        F.col("sv").cast("double").alias("sum_value"),
-    )
+    return _windowed_type_counts(spark, sf_dir, "1 hour", "15 minutes")
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -463,27 +463,29 @@ def test_pagerank_empty_graph_returns_empty(spark, sf_dir):
     assert [f.name for f in out.schema.fields] == ["node", "pr_scaled", "pagerank"]
 
 
-def test_broadcast_cap_follows_driver_memory():
+def test_broadcast_cap_follows_driver_memory(spark):
+    """The cap reads the session's SparkConf through Spark's own size
+    parser (JavaUtils.byteStringAsMb); the driver's memory is fixed at
+    launch, so rewriting the conf entry changes nothing but the reading."""
     from cl_tagger_batch_processing_spark.operators.graph import broadcast_max_nodes
 
+    conf = spark.sparkContext._jsc.sc().conf()
+    key = "spark.driver.memory"
+    before = conf.getOption(key)
+
     def cap(mem):
-        return broadcast_max_nodes(type("S", (), {"conf": {"spark.driver.memory": mem}})())
+        conf.set(key, mem)
+        return broadcast_max_nodes(spark)
 
-    assert cap("16g") == cap("64g") == cap("16384m") == 1 << 23
-    assert cap("4g") == cap("4096") == 1 << 21  # a bare number is MiB
-    assert cap("2g") == 1 << 20
-
-
-def test_parse_byte_conf_spark_forms():
-    from cl_tagger_batch_processing_spark.streaming.windows import _parse_byte_conf
-
-    # the forms Spark actually returns/accepts for size confs
-    assert _parse_byte_conf("10485760b") == 10 * 1024 * 1024
-    assert _parse_byte_conf("10485760") == 10 * 1024 * 1024
-    assert _parse_byte_conf("100MB") == 100 * 1024 * 1024
-    assert _parse_byte_conf("1g") == 1024**3
-    assert _parse_byte_conf("-1") == -1  # broadcast disabled
-    assert _parse_byte_conf("garbage") is None
+    try:
+        assert cap("16g") == cap("64g") == cap("16384m") == 1 << 23
+        assert cap("4g") == cap("4096") == 1 << 21  # a bare number is MiB
+        assert cap("2g") == 1 << 20
+    finally:
+        if before.isDefined():
+            conf.set(key, before.get())
+        else:
+            conf.remove(key)
 
 
 def test_substring_span_constants_in_sync():
@@ -4058,43 +4060,6 @@ def test_dau_wau_mau_matches_python_sets(spark, sf_dir):
         assert (r.dau, r.wau, r.mau) == (dau, wau, mau)
         if mau > 0:
             assert r.stickiness == pytest.approx(round(dau / mau, 9), abs=1e-9)
-
-
-def test_closeness_matches_python_bfs(spark, sf_dir):
-    """Closeness replayed with a deque BFS from the same deterministic
-    (degree DESC, node ASC) probe sources over the collected edge list."""
-    from collections import deque
-
-    from cl_tagger_batch_processing_spark.operators.graph import (
-        CLOSE_N_SOURCES,
-        cooccurrence_edges,
-    )
-    from cl_tagger_batch_processing_spark.registry import QUERIES
-
-    adj: dict = {}
-    deg: dict = {}
-    for r in cooccurrence_edges(spark, sf_dir).collect():
-        adj.setdefault(r.src, []).append(r.dst)
-        deg[r.src] = deg.get(r.src, 0) + 1
-    roots = sorted(deg, key=lambda n: (-deg[n], n))[:CLOSE_N_SOURCES]
-    rows = {r.root: r for r in QUERIES["graph_closeness_centrality"](spark, sf_dir).collect()}
-    assert set(rows) == set(roots)
-    for root in roots:
-        dist = {root: 0}
-        q = deque([root])
-        while q:
-            u = q.popleft()
-            for v in adj.get(u, []):
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    q.append(v)
-        n_reached, sum_dist = len(dist), sum(dist.values())
-        r = rows[root]
-        assert (r.degree, r.n_reached, r.sum_dist) == (deg[root], n_reached, sum_dist)
-        if sum_dist > 0:
-            assert r.closeness == pytest.approx((n_reached - 1) / sum_dist, rel=1e-12)
-        else:
-            assert r.closeness is None
 
 
 def test_market_basket_rules_match_python_counts(spark, sf_dir):
