@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .text import STOPWORDS
+from .dedup import (
+    CLUSTER_EST_THRESHOLD,
+    dedup_minhash_lsh,
+    dedup_survivor_counts_by_source,
+    keep_lowest_doc_id,
+)
+from .quality import STOPWORDS, quality_components, tokens
 
 # Shared by Java regex (Spark) and RE2 (DuckDB): char classes, +, {n},
 # alternation only — no lookaround, no backrefs.
@@ -98,7 +104,7 @@ def _gopher_flagged(docs: DataFrame) -> DataFrame:
     booleans are bit-identical across engines with no float compare at all.
     Entirely row-local array/length math: a zero-shuffle map stage.
     """
-    base = docs.withColumn("toks", F.split(F.col("text"), " "))
+    base = docs.withColumn("toks", tokens("text"))
     # bigrams as their own attribute (HOF lambdas get no CSE — see
     # text.text_repetition)
     bi = base.withColumn(
@@ -195,7 +201,7 @@ def corpus_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = docs.select(
         "source",
         F.col("n_chars"),
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
     )
     per_source = per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -246,10 +252,7 @@ def curation_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_redactions.alias("n_redactions"),
         F.md5(redacted).alias("content_hash"),
     )
-    survivor = F.row_number().over(
-        Window.partitionBy("content_hash").orderBy("doc_id")
-    )
-    deduped = staged.withColumn("rn", survivor).where(F.col("rn") == 1)
+    deduped = keep_lowest_doc_id(staged, "content_hash")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
             "bigint"
@@ -309,7 +312,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint")
         % 10000
     )
-    n_tokens = F.size(F.split("text", " ")).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     per_doc = docs.select(
         "source",
         thr.alias("rate_bp"),
@@ -440,7 +443,7 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     same arithmetic, embarrassingly parallel, documented here rather than
     implemented because the fixture's 4 sources fit the direct form."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " ")).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -567,7 +570,7 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     strata = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split(F.col("text"), " "))).cast("bigint").alias("n_tokens"),
+        F.sum(F.size(tokens("text"))).cast("bigint").alias("n_tokens"),
     )
     total = Window.partitionBy()
     cum = (
@@ -608,7 +611,7 @@ def corpus_length_filter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     no explode-by-thresholds row multiplication, no second scan. All
     counts exact integers; rates are single exact-int divisions."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.col("text"), " "))
+    n_tok = F.size(tokens("text"))
     aggs = [F.count(F.lit(1)).alias("n_total")]
     for t in LENGTH_SWEEP_THRESHOLDS:
         keep = n_tok >= t
@@ -667,7 +670,7 @@ def corpus_temperature_mix(
     budget at ``epoch_budget`` total."""
     docs = load_table(spark, sf_dir, "documents")
     per_source = (
-        docs.select("source", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"))
+        docs.select("source", F.size(tokens("text")).cast("bigint").alias("n_tokens"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("sum_tokens"))
     )
@@ -751,7 +754,7 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str, k: int = ES_SAMPLE_
     tree, and the top-k carries the doc_id tie-break (the repo top-k
     convention, though md5-derived key ties are measure-zero)."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.size(F.split("text", " ")).cast("bigint")
+    w = F.size(tokens("text")).cast("bigint")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
     ).cast("bigint")
@@ -784,7 +787,6 @@ def corpus_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size); the rollup's key space is at most 6 split-pair cells;
     the share divides exact integers once."""
     from ..checkpointing import truncate_lineage
-    from .dedup import CLUSTER_EST_THRESHOLD, dedup_minhash_lsh
 
     # materialized: the split frame is joined on BOTH pair sides — the two
     # probes are different subplans, so without the checkpoint the
@@ -968,19 +970,14 @@ def corpus_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined per source); survivors ride the memoized cluster chain;
     the token share's grand total is a 1-row broadcast. Quality means on
     the 9dp-DECIMAL rail; rates divide once per row."""
-    from ..operators.dedup import dedup_survivor_counts_by_source
-    from .quality import quality_components  # noqa: F811
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         "text",
         F.md5("text").alias("content_hash"),
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
     )
-    q = F.round(
-        quality_components(F.col("text"), F.split(F.col("text"), " "))["score"], 6
-    )
+    q = F.round(quality_components(F.col("text"), tokens("text"))["score"], 6)
     dec = lambda c: F.round(c, 9).cast("decimal(28,9)")  # noqa: E731
     base = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1037,7 +1034,7 @@ def corpus_source_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after operates on the bounded source spine."""
     docs = load_table(spark, sf_dir, "documents")
     per_source = (
-        docs.select("source", F.size(F.split("text", " ")).cast("bigint").alias("t"))
+        docs.select("source", F.size(tokens("text")).cast("bigint").alias("t"))
         .groupBy("source")
         .agg(F.sum("t").cast("bigint").alias("tokens"))
     )

@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
 from ..sources.tables import load_table
-from .quality import quality_components
+from .quality import quality_components, token_counts, tokens
 
 MINHASH_NUM_HASHES = 16
 MINHASH_BANDS = 4
@@ -76,7 +76,7 @@ def word_shingles(
     per-partition dedup would only shrink shuffle bytes, but dropping the
     exchange entirely is the bigger win.
     """
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).where(F.size("t") >= k)
+    toks = docs.select("doc_id", tokens("text").alias("t")).where(F.size("t") >= k)
     gen = f"transform(sequence(0, size(t)-{k}), i -> concat_ws(' ', slice(t, i+1, {k})))"
     sh = toks.select("doc_id", F.explode(F.expr(gen)).alias("shingle"))
     if distinct:
@@ -419,7 +419,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     hs = F.transform(
-        F.array_distinct(F.split("text", " ")),
+        F.array_distinct(tokens("text")),
         lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"),
     )
     # UDF wrapped here, not at module import: pandas_udf parses its DDL
@@ -851,6 +851,14 @@ def dedup_embedding_cosine(
     return embedding_candidates(spark, sf_dir).where(F.col("cosine") >= threshold)
 
 
+def keep_lowest_doc_id(df: DataFrame, key: str) -> DataFrame:
+    """The rows of ``df`` with the lowest doc_id per ``key`` — the
+    min-doc_id keep rule of exact dedup, as ``row_number() over (partition
+    by key order by doc_id) = 1``. The ``rn`` column stays on."""
+    w = Window.partitionBy(key).orderBy("doc_id")
+    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
+
+
 def incremental_split(docs: DataFrame):
     """(existing_hashes, incoming, in_unique) — the shared scaffold of every
     incremental-dedup variant (plain anti-join, Bloom-prefiltered, bucketed
@@ -861,10 +869,7 @@ def incremental_split(docs: DataFrame):
     h = F.md5("text").alias("content_hash")
     existing = docs.where(F.col("doc_id") % 2 == 0).select(h).distinct()
     incoming = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "lang", h)
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
-    in_unique = (
-        incoming.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
-    )
+    in_unique = keep_lowest_doc_id(incoming, "content_hash")
     return existing, incoming, in_unique
 
 
@@ -937,6 +942,27 @@ def dedup_containment(
     )
 
 
+def quality_keep_rule(
+    text_col: Column, toks_col: Column
+) -> tuple[Column, Column, list[Column]]:
+    """The quality keep policy shared by the keep-best dedups, as (``q``,
+    ``b``, the keep columns):
+
+    * ``q``: the shared quality score (operators/quality.py), 6dp-rounded
+      and scaled to an exact bigint, so the struct comparison is exact;
+    * ``b``: the group aggregate max(struct(q, −doc_id)) — doc_id enters
+      NEGATED so the struct max realizes (quality DESC, doc_id ASC);
+    * ``keep_doc_id`` and ``keep_quality`` read back from ``b``."""
+    quality = F.round(quality_components(text_col, toks_col)["score"], 6)
+    q = F.round(quality * 1000000, 0).cast("bigint").alias("q")
+    best = F.max(F.struct(F.col("q"), (-F.col("doc_id")).alias("neg_id"))).alias("b")
+    keep = [
+        (-F.col("b.neg_id")).cast("bigint").alias("keep_doc_id"),
+        (F.col("b.q").cast("double") / F.lit(1000000.0)).alias("keep_quality"),
+    ]
+    return q, best, keep
+
+
 def dedup_exact_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup with a QUALITY keep policy: among identical-content
     copies keep the highest-quality one, not the lowest id — what a real
@@ -949,39 +975,19 @@ def dedup_exact_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same scale shape as dedup_exact (ONE shuffle on the uniform content
     hash); the argmax rides the groupBy as max(struct(...)) — no window,
-    no second pass. The struct comparison needs an ordering-safe encoding
-    of quality: 6dp-rounded and scaled to bigint (exact), and doc_id
-    enters NEGATED so the struct max realizes (quality DESC, doc_id ASC).
+    no second pass (the encoding is ``quality_keep_rule``'s).
     """
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", F.col("text"), F.split(F.col("text"), " ").alias("toks")
-    )
+    base = docs.select("doc_id", F.col("text"), tokens("text").alias("toks"))
     # THE quality formula (operators/quality.py — shared with
     # text_quality_score / text_quality_calibration, so keep_quality is
     # directly comparable against that query's thresholds/deciles).
-    quality = F.round(
-        quality_components(F.col("text"), F.col("toks"))["score"], 6
-    )
-    q_scaled = F.round(quality * 1000000, 0).cast("bigint")
-    scored = base.select(
-        F.md5("text").alias("content_hash"),
-        "doc_id",
-        q_scaled.alias("q"),
-    )
-    best = F.max(F.struct(F.col("q"), (-F.col("doc_id")).alias("neg_id")))
+    q, best, keep = quality_keep_rule(F.col("text"), F.col("toks"))
+    scored = base.select(F.md5("text").alias("content_hash"), "doc_id", q)
     return (
         scored.groupBy("content_hash")
-        .agg(
-            best.alias("b"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .select(
-            "content_hash",
-            (-F.col("b.neg_id")).cast("bigint").alias("keep_doc_id"),
-            (F.col("b.q").cast("double") / F.lit(1000000.0)).alias("keep_quality"),
-            "n_copies",
-        )
+        .agg(best, F.count(F.lit(1)).alias("n_copies"))
+        .select("content_hash", *keep, "n_copies")
     )
 
 
@@ -1132,7 +1138,7 @@ def dedup_substring_spans(
     positions; determinism is structural.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).where(
+    toks = docs.select("doc_id", tokens("text").alias("t")).where(
         F.size("t") >= k
     )
     gen = (
@@ -1205,9 +1211,7 @@ def synthetic_urls(docs: DataFrame) -> DataFrame:
         slash,
         query,
     )
-    return docs.select(
-        "doc_id", url.alias("url"), "text", F.split("text", " ").alias("toks")
-    )
+    return docs.select("doc_id", url.alias("url"), "text", tokens("text").alias("toks"))
 
 
 def canonicalize_url(url):
@@ -1238,23 +1242,14 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     score is the shared operators/quality.py formula, 6dp-scaled to exact
     bigints inside the struct comparison."""
     urls = synthetic_urls(load_table(spark, sf_dir, "documents"))
-    quality = F.round(quality_components(F.col("text"), F.col("toks"))["score"], 6)
-    q_scaled = F.round(quality * 1000000, 0).cast("bigint")
+    q, best, keep = quality_keep_rule(F.col("text"), F.col("toks"))
     scored = urls.select(
-        canonicalize_url(F.col("url")).alias("canonical_url"),
-        "doc_id",
-        q_scaled.alias("q"),
+        canonicalize_url(F.col("url")).alias("canonical_url"), "doc_id", q
     )
-    best = F.max(F.struct(F.col("q"), (-F.col("doc_id")).alias("neg_id")))
     return (
         scored.groupBy("canonical_url")
-        .agg(best.alias("b"), F.count(F.lit(1)).alias("n_copies"))
-        .select(
-            "canonical_url",
-            (-F.col("b.neg_id")).cast("bigint").alias("keep_doc_id"),
-            (F.col("b.q").cast("double") / F.lit(1000000.0)).alias("keep_quality"),
-            "n_copies",
-        )
+        .agg(best, F.count(F.lit(1)).alias("n_copies"))
+        .select("canonical_url", *keep, "n_copies")
     )
 
 
@@ -1407,20 +1402,11 @@ def _dedup_survivors(
     stages; exact keeps the min doc_id per content hash, near keeps the
     min exact-SURVIVOR per MinHash cluster (the memoized assignment)."""
     keep_cols = [c for c in docs.columns if c != "content_hash"]
-    w_exact = Window.partitionBy("content_hash").orderBy("doc_id")
-    exact_surv = (
-        docs.withColumn("rn", F.row_number().over(w_exact))
-        .where(F.col("rn") == 1)
-        .select(*keep_cols)
-    )
+    exact_surv = keep_lowest_doc_id(docs, "content_hash").select(*keep_cols)
     clusters = dedup_clusters(spark, sf_dir)
-    w_near = Window.partitionBy("cluster_id").orderBy("doc_id")
-    near_surv = (
-        exact_surv.join(clusters, "doc_id")
-        .withColumn("rn", F.row_number().over(w_near))
-        .where(F.col("rn") == 1)
-        .select(*keep_cols)
-    )
+    near_surv = keep_lowest_doc_id(
+        exact_surv.join(clusters, "doc_id"), "cluster_id"
+    ).select(*keep_cols)
     return exact_surv, near_surv
 
 
@@ -1508,9 +1494,7 @@ def dedup_simhash_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # do NOT re-truncate (the _LSH_PAIRS_CACHE consumer rule).
     pairs = dedup_simhash(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
-    )
+    toks = docs.select("doc_id", F.array_distinct(tokens("text")).alias("toks"))
     ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
     tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
     inter = F.size(F.array_intersect("ta", "tb"))
@@ -1691,25 +1675,19 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass; members flatten to the sorted-csv scalar shape."""
     cc = dedup_clusters(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.split(F.col("text"), " ").alias("toks")
+        "doc_id", "text", tokens("text").alias("toks")
     )
-    q_scaled = F.round(
-        F.round(quality_components(F.col("text"), F.col("toks"))["score"], 6)
-        * 1000000,
-        0,
-    ).cast("bigint")
-    scored = cc.join(docs.select("doc_id", q_scaled.alias("q")), "doc_id")
-    best = F.max(F.struct(F.col("q"), (-F.col("doc_id")).alias("neg_id")))
+    q, best, keep = quality_keep_rule(F.col("text"), F.col("toks"))
+    scored = cc.join(docs.select("doc_id", q), "doc_id")
     agg = scored.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
-        best.alias("b"),
+        best,
         sorted_ids_csv(F.col("doc_id")).alias("member_ids"),
     )
     return agg.where(F.col("n_members") > 1).select(
         "cluster_id",
         F.col("n_members").cast("bigint").alias("n_members"),
-        (-F.col("b.neg_id")).cast("bigint").alias("keep_doc_id"),
-        (F.col("b.q").cast("double") / F.lit(1000000.0)).alias("keep_quality"),
+        *keep,
         "member_ids",
     )
 
@@ -1731,7 +1709,7 @@ def corpus_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.md5("text").alias("content_hash"),
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
     )
     exact_surv, near_surv = _dedup_survivors(spark, sf_dir, docs)
     t_all = docs.groupBy("source").agg(F.sum("n_tokens").alias("tokens_raw"))
@@ -1875,14 +1853,8 @@ def dedup_rouge_verify(
         "doc_a", "doc_b", "est_jaccard"
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tc = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    lens = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tok")
-    )
+    tc = token_counts(docs, "doc_id", alias="tf")
+    lens = docs.select("doc_id", F.size(tokens("text")).cast("bigint").alias("n_tok"))
     ta = tc.select(
         F.col("doc_id").alias("doc_a"), "token", F.col("tf").alias("tf_a")
     )

@@ -34,7 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
+from ..checkpointing import (
+    checkpoint_with_metric,
+    session_memo,
+    truncate_lineage,
+    truncate_lineage_eager,
+)
 
 PR_SCALE = 10**15  # rank unit: 1e-15 (bigint-exact; total mass 1e15 ≪ 2^63)
 PR_DAMPING_NUM, PR_DAMPING_DEN = 85, 100  # 0.85 as an exact integer ratio
@@ -132,8 +137,6 @@ def _prepare_superstep_edges(
     column (pmod(xxhash64(dst), n_salts) on hub rows, 0 elsewhere) and the
     broadcast-sized hot-node frame the superstep uses to replicate hub
     rank rows. Salt never enters arithmetic — bit-identical either way."""
-    from ..checkpointing import checkpoint_with_metric
-
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # Census FUSED with the materialization (r14, guide §1.2): the hub
     # census used to be its own full count() job over the outdeg aggregate,
@@ -500,8 +503,6 @@ def graph_kcore(
     rounds past convergence are no-ops, so it chains a fixed budget).
     """
     edges = cooccurrence_edges(spark, sf_dir, min_support=min_support)
-    from ..checkpointing import checkpoint_with_metric
-
     n_edges = F.count(F.lit(1)).alias("n_edges")
 
     # symmetric edge list: degree(src) = row count per src
@@ -677,8 +678,6 @@ def bfs_distances(
     last seed column is the seed node; any columns before it are keys
     carried through every round, so each key runs its own BFS and labels
     each (key, node) pair exactly once (closeness keys on its root)."""
-    from ..checkpointing import checkpoint_with_metric
-
     n_rows = F.count(F.lit(1)).alias("n")
     cap = broadcast_max_nodes(edges.sparkSession)
     *keys, seed_col = seeds.columns
@@ -782,14 +781,15 @@ def _lpa_labels(
     edge frame too so modularity scores the SAME graph the labels came
     from without rebuilding it)."""
     edges = cooccurrence_edges(spark, sf_dir, min_support=min_support)
-    labels = truncate_lineage(
+    # the node census rides the checkpoint's own job (connected
+    # components' pattern) and drives the per-round broadcast strategy
+    labels, n_nodes = checkpoint_with_metric(
         edges.select("src").distinct().select(
             F.col("src").alias("node"), F.col("src").cast("bigint").alias("label")
-        )
+        ),
+        F.count(F.lit(1)).alias("n"),
     )
-    # node census doubles as the lazy checkpoint's materializing action and
-    # drives the per-round broadcast strategy
-    bcast = labels.count() <= broadcast_max_nodes(spark)
+    bcast = n_nodes <= broadcast_max_nodes(spark)
     for _ in range(rounds):
         lab_side = F.broadcast(labels) if bcast else labels
         votes = (
@@ -1089,8 +1089,6 @@ def _hits_push(
     one scalar on the driver (the hub-census/label-sum control-plane
     convention) and re-enters the renormalization as a literal: same
     integer, same floor division, bit-identical output."""
-    from ..checkpointing import checkpoint_with_metric
-
     raw, mx = checkpoint_with_metric(
         _superstep_scores_join(
             scores, [score_col], edges_deg, hot_nodes, n_salts,
@@ -1293,8 +1291,6 @@ def graph_betweenness_seeded(
     The backward loop count is the OBSERVED max depth (a driver scalar
     from the forward pass — control plane); every layer frame is
     checkpointed with its size read off the same job."""
-    from ..checkpointing import checkpoint_with_metric
-
     edges = cooccurrence_edges(spark, sf_dir, min_support=min_support)
     nodes = edges.select("src").distinct()
     seeds = nodes.orderBy("src").limit(SP_N_SEEDS).select(

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
+from ..sources.images import IMAGE_EXTENSIONS
 from ..sources.tables import load_table
 
 # Exact-decimal casts for the 2-decimal fixture money columns.
@@ -906,10 +907,9 @@ def scan_extension_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     ext = F.element_at(F.split(F.lit(".jpg,.JPEG,.png,.webp,.bmp,.GIF,.txt,.mp4"), ","), (F.col("doc_id") % 8 + 1).cast("int"))
     path = F.concat(F.col("source"), F.lit("/doc_"), F.col("doc_id").cast("string"), ext)
-    image_exts = ["jpg", "jpeg", "png", "webp", "bmp", "gif"]  # appV2.py:17
     with_path = docs.select("doc_id", path.alias("path"))
     suffix = F.lower(F.element_at(F.split(F.col("path"), "\\."), -1))
-    return with_path.where(suffix.isin(image_exts))
+    return with_path.where(suffix.isin(IMAGE_EXTENSIONS))
 
 
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:

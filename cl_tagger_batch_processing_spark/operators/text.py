@@ -16,9 +16,7 @@ from pyspark.sql import functions as F
 from ..checkpointing import truncate_lineage, truncate_lineage_eager
 from ..sources.tables import load_table
 from .dedup import DEFAULT_MAX_DF, sorted_ids_csv, word_shingles
-# STOPWORDS' canonical home is operators/quality.py; re-exported here for
-# the existing importers (curation.py, tests).
-from .quality import STOPWORDS, quality_components  # noqa: F401
+from .quality import STOPWORDS, quality_components, token_counts, tokens
 
 # Marker-token lists per language for the n-gram/stopword language-ID
 # heuristic. Deterministic and tiny — a broadcast literal dimension.
@@ -38,9 +36,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # tokens as their own attribute: each consumer evaluates the split once
     # per row instead of once per use (see text_repetition for the rationale)
-    base = docs.select(
-        "doc_id", F.col("text"), F.split(F.col("text"), " ").alias("toks")
-    )
+    base = docs.select("doc_id", F.col("text"), tokens("text").alias("toks"))
     n_tokens = F.size("toks")
     n_alpha = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z]+"), 0))
     nospace_len = F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
@@ -62,9 +58,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     The formula lives ONCE in operators/quality.py (shared with
     text_quality_calibration and dedup_exact_keep_best)."""
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", F.col("text"), F.split(F.col("text"), " ").alias("toks")
-    )
+    base = docs.select("doc_id", F.col("text"), tokens("text").alias("toks"))
     q = quality_components(F.col("text"), F.col("toks"))
     return base.select(
         "doc_id",
@@ -86,13 +80,10 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing). struct sort ascending on (-score, lang) ≡ score DESC,
     lang ASC."""
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", F.col("lang"), F.split(F.col("text"), " ").alias("toks")
-    )
-    tokens = F.col("toks")
+    base = docs.select("doc_id", F.col("lang"), tokens("text").alias("toks"))
     def marker_hits(words: list[str]):
         marker_arr = F.array(*[F.lit(w) for w in words])
-        return F.size(F.filter(tokens, lambda t: F.array_contains(marker_arr, t)))
+        return F.size(F.filter("toks", lambda t: F.array_contains(marker_arr, t)))
 
     entries = [
         F.struct((-marker_hits(words)).alias("neg_score"), F.lit(lang).alias("cand_lang"))
@@ -121,7 +112,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # higher-order functions) — O(n_tok²) per document; the same applies to
     # the bigram array reused by size/array_distinct. Catalyst keeps these
     # projections separate because each attribute is referenced repeatedly.
-    toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
+    toks = docs.select("doc_id", tokens("text").alias("toks"))
     bi = toks.select(
         "doc_id",
         F.transform(
@@ -155,11 +146,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFrame
     (per-partition top-k merged on the driver), NOT a single-partition
     global sort; the final rank window runs over at most k rows."""
     docs = load_table(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-    )
+    counts = token_counts(docs, alias="n_occurrences")
     top = counts.orderBy(F.desc("n_occurrences"), F.asc("token")).limit(k)
     w = Window.orderBy(F.desc("n_occurrences"), F.asc("token"))
     return top.select(
@@ -185,7 +172,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays chunking exactly, chunk text included."""
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
+        "doc_id", tokens("text").alias("toks")
     ).withColumn("n_toks", F.size("toks").cast("bigint"))
     last_idx = F.greatest(
         F.lit(0).cast("bigint"), F.expr(f"(n_toks - {CHUNK_TOKENS - CHUNK_STRIDE + 1}) div {CHUNK_STRIDE}")
@@ -282,7 +269,7 @@ def text_unigram_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean bit-stable across runs AND engines; the final mean rounds at 6dp.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     lm = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n_tok"))
     total = lm.agg(F.sum("n_tok").alias("n_total"))
     scored = (
@@ -434,7 +421,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed as the bit length of the integer (exact — no float log),
     zero-shuffle until the tiny aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " ")).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     # floor(log2(n)) == (number of binary digits of n) - 1 for n >= 1,
     # computed exactly via conv(n, 10, 2) — no float log anywhere
     log2_bucket = (
@@ -469,8 +456,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     same reasoning as text_unigram_loglik); the final top-k window
     partitions by doc_id — high cardinality, no skew."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
+    tf = token_counts(docs, "doc_id", alias="tf")
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -521,7 +507,7 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     b = PARAGRAPH_BLOCK_TOKENS
     base = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
+        "doc_id", tokens("text").alias("toks")
     ).withColumn("n_blocks", (F.size("toks") / b).cast("bigint"))
     blocks = base.where(F.col("n_blocks") >= 1).select(
         "doc_id",
@@ -570,9 +556,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean flips on rounding boundaries under Spark's run-varying partial
     aggregation order (observed once at sf0.1); the mean rounds at 6dp."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("token")
-    )
+    tok = docs.select("doc_id", "lang", F.explode(tokens("text")).alias("token"))
     lm = tok.groupBy("token").agg(
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("n_tgt"),
@@ -617,7 +601,7 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy; top-100 orders by (count DESC, pair ASC) so
     the cut is deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(F.split(F.col("text"), " ").alias("toks")).where(
+    base = docs.select(tokens("text").alias("toks")).where(
         F.size("toks") >= 2
     )
     pairs = base.select(
@@ -696,9 +680,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str, k: int = RAKE_TOP_K) -> 
     exact integers; score is one exact-int division; ranking carries the
     (score DESC, word ASC) tie-break."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word")
-    )
+    toks = docs.select("doc_id", F.posexplode(tokens("text")).alias("pos", "word"))
     stop = F.col("word").isin(STOPWORDS)
     w_run = (
         Window.partitionBy("doc_id")
@@ -746,9 +728,7 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort identical doubles; the mean token count is an exact-int ratio
     rounded at 6dp."""
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", "lang", F.col("text"), F.split(F.col("text"), " ").alias("toks")
-    )
+    base = docs.select("doc_id", "lang", F.col("text"), tokens("text").alias("toks"))
     scored = base.select(
         "doc_id",
         "lang",
@@ -831,8 +811,7 @@ def source_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson), and the final divergence rounds at 6dp with the −0.0
     canonicalization."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(F.split("text", " ")).alias("token"))
-    counts = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c"))
+    counts = token_counts(docs, "source", alias="c")
     totals = counts.groupBy("source").agg(F.sum("c").alias("tot"))
     t = counts.join(totals, "source").select(
         "source", "token", (F.col("c").cast("double") / F.col("tot")).alias("p")
@@ -901,11 +880,7 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str, top_n: int = ZIPF_TOP_N) ->
     round at 6dp."""
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("token"))
-        .limit(top_n)
+        token_counts(docs, alias="c").orderBy(F.desc("c"), F.asc("token")).limit(top_n)
     )
     w = Window.orderBy(F.desc("c"), F.asc("token"))
     xy = counts.withColumn("rank", F.row_number().over(w)).select(
@@ -946,7 +921,7 @@ def _heldout_bigram_model(
     bigram-TYPE-sized (the model, not the corpus), and re-deriving it
     re-runs the train-side explode+groupBy per consumer."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    toks = docs.select("doc_id", tokens("text").alias("t"))
     gen = (
         "transform(sequence(1, size(t)-1), "
         "i -> struct(element_at(t, i) AS w1, element_at(t, i+1) AS w2))"
@@ -1105,7 +1080,7 @@ def text_hashing_tf(
     text_char_entropy — two-level integer keys, no skew (buckets spread
     uniformly), linear at any corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     bucket = (
         F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
         % num_buckets
@@ -1201,7 +1176,7 @@ def corpus_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one map-side-combinable groupBy(lang); the two ratios divide
     exact integer sums once per output row."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " ")).cast("bigint")
+    n_tok = F.size(tokens("text")).cast("bigint")
     n_chars = F.length("text").cast("bigint")
     return (
         docs.select("lang", n_tok.alias("t"), n_chars.alias("c"))
@@ -1238,7 +1213,7 @@ def text_word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBys; totals ride 1-row broadcast scalars; the top-k is
     a distributed TakeOrdered."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split("text", " ").alias("t")).where(F.size("t") >= 2)
+    toks = docs.select(tokens("text").alias("t")).where(F.size("t") >= 2)
     pairs = toks.select(
         F.explode(
             F.expr(
@@ -1248,7 +1223,7 @@ def text_word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     uni = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
     )
@@ -1332,11 +1307,7 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str, k: int = CMS_TOP_K)
     ≤ CMS_DEPTH·CMS_WIDTH rows — broadcast-joined to the candidates. All
     arithmetic is exact integers; determinism is total."""
     docs = load_table(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("true_count"))
-    )
+    counts = token_counts(docs, alias="true_count")
     depth = cms_depth_rows()
     bucket = cms_bucket(F.col("token"))
     cells = (
@@ -1441,7 +1412,7 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     size. Output per doc: total hits, distinct blocked terms, the 0/1
     drop verdict."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     # Column-level filter over the ONE shared tokenization — no SQL-string
     # interpolation (a quote in a future blocklist entry must not be able
     # to break the expression)
@@ -1485,7 +1456,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import pagerank_on_edges
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split("text", " ").alias("t")).where(F.size("t") >= 2)
+    toks = docs.select(tokens("text").alias("t")).where(F.size("t") >= 2)
     pairs = toks.select(
         F.explode(
             F.expr(
@@ -1541,11 +1512,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..checkpointing import truncate_lineage
 
     docs = load_table(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    counts = token_counts(docs, alias="n")
     w = Window.orderBy(F.desc("n"), F.asc("token"))
     ranked = counts.select(
         "n",
@@ -1611,7 +1578,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered (orderBy+limit), never a single-partition window over the
     corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tot = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
         F.broadcast(tok.agg(F.count(F.lit(1)).alias("total_tokens")))
@@ -1700,7 +1667,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (repeated-set filter, totals, top-shingle window): materialize each
     # once — the former plan re-ran the explode+distinct per consumer
     sh = (
-        docs.select("source", "doc_id", F.split("text", " ").alias("t"))
+        docs.select("source", "doc_id", tokens("text").alias("t"))
         .select("source", "doc_id", F.explode(sh_arr).alias("sh"))
         .distinct()
         .transform(truncate_lineage_eager)  # consumers land in one plan
@@ -1778,7 +1745,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     words = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
     )
@@ -1887,7 +1854,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lambda is re-evaluated per position (Spark does not hoist
     # row-constant expressions out of HOF lambdas): O(n_tokens²) work on
     # long documents (r8 review)
-    toked = docs.select("doc_id", F.split("text", " ").alias("t"))
+    toked = docs.select("doc_id", tokens("text").alias("t"))
     sh_arr = F.expr(
         f"""
         CASE WHEN size(t) >= {WINNOW_K} THEN
@@ -2016,7 +1983,7 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rollup — no raw-doc window anywhere."""
     pp = text_bigram_lm_perplexity(spark, sf_dir).select("doc_id", "perplexity")
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.size(F.split("text", " ")).cast("bigint").alias("ntok")
+        "doc_id", "lang", F.size(tokens("text")).cast("bigint").alias("ntok")
     )
     j = pp.join(docs, "doc_id")
     # TWO consumers (the per-lang totals and the cumulative window) of the
@@ -2190,13 +2157,8 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..checkpointing import truncate_lineage
 
     docs = load_table(spark, sf_dir, "documents")
-    counts = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        # one corpus pass; three consumers (top words, totals, profiles)
-        .transform(truncate_lineage)
-    )
+    # one corpus pass; three consumers (top words, totals, profiles)
+    counts = token_counts(docs, "source", alias="cnt").transform(truncate_lineage)
     top = (
         counts.groupBy("token")
         .agg(F.sum("cnt").alias("n"))
@@ -2278,13 +2240,7 @@ def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the only raw-row pass is the (source, token) aggregate
     (map-side combinable); everything downstream is vocabulary-sized."""
     docs = load_table(spark, sf_dir, "documents")
-    st = (
-        docs.select(
-            "source", F.explode(F.split(F.col("text"), " ")).alias("token")
-        )
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
+    st = token_counts(docs, "source", alias="c")
     rep = st.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("vocab"),
@@ -2324,7 +2280,7 @@ def text_quality_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     no rounding needed."""
     docs = load_table(spark, sf_dir, "documents")
     a = F.col("n_chars") >= 250
-    b = F.size(F.split(F.col("text"), " ")) >= 45
+    b = F.size(tokens("text")) >= 45
     agg = docs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when(a & b, 1).otherwise(0)).cast("bigint").alias("n11"),
@@ -2377,11 +2333,8 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..checkpointing import truncate_lineage
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = (
-        docs.select("source", F.explode(F.split(F.col("text"), " ")).alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .transform(truncate_lineage_eager)  # totals + both join sides, one plan
+    tok = token_counts(docs, "source", alias="c").transform(
+        truncate_lineage_eager  # totals + both join sides, one plan
     )
     tots = tok.groupBy("source").agg(F.sum("c").cast("bigint").alias("n"))
     t2 = tok.join(F.broadcast(tots), "source").select(
@@ -2453,13 +2406,8 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..checkpointing import truncate_lineage
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(F.split("text", " ")).alias("token"))
-    counts = (
-        tok.groupBy("source", "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        # feeds the totals AND the frequency-of-frequencies re-aggregate
-        .transform(truncate_lineage)
-    )
+    # feeds the totals AND the frequency-of-frequencies re-aggregate
+    counts = token_counts(docs, "source", alias="c").transform(truncate_lineage)
     d38 = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     per_source = counts.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),
@@ -2530,7 +2478,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the documents scan
     from ..checkpointing import truncate_lineage
 
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     # range from the un-exploded docs scan (identical: split() yields ≥1
     # token per doc, so every doc_id appears in tok); 1-row frame with
     # THREE consumers (both bucket passes + the spine) — checkpointed so
@@ -2648,7 +2596,7 @@ def text_token_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     ts = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("token"))
+        docs.select("source", F.explode(tokens("text")).alias("token"))
         .groupBy("token", "source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
         .transform(truncate_lineage)  # feeds token totals, source totals, cells

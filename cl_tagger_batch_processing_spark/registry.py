@@ -42,13 +42,6 @@ def _tag_exploded(spark: SparkSession, sf_dir: str, top1: bool) -> DataFrame:
     return tagging.explode_tags(tagging.embedding_probs(spark, sf_dir), selector, top1)
 
 
-# r8 window refresh: tag_top1_rating_quality / tag_threshold_filter were
-# driver-green all seven rounds — re-registered below the window so the
-# highest-risk never-driver-verified families (k-means chain, graph
-# fixpoints, GD regression, privacy audits, quantile sketches) get their
-# first independent driver rows (VERDICT r7 ask #1).
-
-
 def _pipeline_score_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import pipeline_score_tag
 
@@ -334,11 +327,6 @@ register("window_frames", relational.window_frames)
 register("grouping_sets_agg", relational.grouping_sets_agg)
 register("above_avg_parts", relational.above_avg_parts)
 register("unpivot_measures", relational.unpivot_measures)
-# approx_distinct (accuracy-contract oracle since r8) promoted into the
-# driver window by the r10 rotation, and the whole scalar-functions family
-# (string/date/math/array/map, percentiles_by_priority) plus the source_*
-# roundtrips, remaining stream_* queries, VARIANT/LATERAL surfaces and the
-# composed ANN/SemDeDup verdicts by the r11 rotation — all registered above.
 
 # Lag analytics over the aggregated series, not the fact rows.
 register("yoy_revenue_growth", relational.yoy_revenue_growth)
@@ -366,29 +354,19 @@ register("dq_checks_report", curation.dq_checks_report)
 register("text_chunk_windows", text.text_chunk_windows)
 # Hash-threshold mixture sampler (split-independent salt), scan-time filter.
 register("corpus_mixture_sample", curation.corpus_mixture_sample)
-# Exact binary-payload dedup (content-addressing; synthetic re-uploads).
 # Two partition-pruned incremental runs merged == one-shot recompute.
 register("incremental_daily_agg", sources_layout.incremental_daily_agg)
-# Text gates AND semantic dedup joined into the final per-doc verdict.
 register("embedding_dim_stats", similarity.embedding_dim_stats)
-# Deterministic Lloyd's k-means (SemDeDup-style clustering stage): exact
-# value oracle replaying both refinement iterations in SQL; also
-# transitively driver-verified through dedup_semantic's windowed oracle.
 
 register("dedup_fingerprint", text.dedup_fingerprint)
 register("text_repetition", text.text_repetition)
 register("text_vocab_topk", text.text_vocab_topk)
 register("embedding_label_centroids", similarity.embedding_label_centroids)
-# stream_session_counts (deterministic end-of-stream flush oracle since r8)
-# promoted into the driver window by the r10 rotation — registered above.
 
-# --- round-5 additions: lexical retrieval, C4-style span dedup, DSIR
-# selection, BPE merge counting, perceptual-hash payload dedup -------------
+# --- round-5 additions: BPE merge counting ---------------------------------
 register("text_bpe_pair_counts", text.text_bpe_pair_counts)
 
-# --- round-5 additions, batch 2: flow/robust-stats/SCD2 analytics, shingle
-# containment, scalar-quantized ANN, audio framing, entropy QA, budget
-# planning ----------------------------------------------------------------
+# --- round-5 additions, batch 2: scalar-quantized ANN ----------------------
 register("sim_scalar_quant_recall", similarity.sim_scalar_quant_recall)
 
 # displaced from the window by the r5 refresh (local parity still covers)
@@ -400,18 +378,13 @@ register("graph_degree_stats", graph.graph_degree_stats)
 
 register("text_keyword_rake", text.text_keyword_rake)
 
-
 register("dedup_exact_keep_best", dedup.dedup_exact_keep_best)
-
 
 register("dedup_minhash_incremental", dedup.dedup_minhash_incremental)
 
-
 register("layout_zorder_skipping", sources_layout.layout_zorder_skipping)
 
-
 register("corpus_dsir_sample", text.corpus_dsir_sample)
-
 
 register("corpus_length_filter_sweep", curation.corpus_length_filter_sweep)
 
@@ -425,8 +398,7 @@ register("dedup_exact_incremental_bucketed", sources_layout.dedup_exact_incremen
 register("mm_tile_grid", multimodal.mm_tile_grid)
 register("text_html_strip", text.text_html_strip)
 
-# --- round-7 additions: k-core backbone, corpus novelty curve, VAD-style
-# energy segmentation ------------------------------------------------------
+# --- round-7 additions: VAD-style energy segmentation, keyframes, corpus QA
 register("mm_audio_energy_segments", multimodal.mm_audio_energy_segments)
 register("mm_keyframe_select", multimodal.mm_keyframe_select)
 register("corpus_near_dup_rate_by_source", dedup.corpus_near_dup_rate_by_source)
@@ -447,17 +419,12 @@ register("mm_byte_histogram", multimodal.mm_byte_histogram)
 register("corpus_split_assign", curation.corpus_split_assign)
 register("sim_knn_label_vote", similarity.sim_knn_label_vote)
 
-# --- round-8 additions: lexical retrieval ranking (BM25), HITS
-# hubs/authorities, entity-resolution clusters ------------------------------
+# --- round-8 additions: cluster keep-best, IVF balance, audio trim ---------
 register("dedup_cluster_keep_best", dedup.dedup_cluster_keep_best)
 register("sim_ivf_balance_report", similarity.sim_ivf_balance_report)
 register("mm_audio_silence_trim", multimodal.mm_audio_silence_trim)
 register("embedding_hard_negatives", similarity.embedding_hard_negatives)
 register("corpus_dedup_token_savings", dedup.corpus_dedup_token_savings)
-# The round-9 additions (Kneser-Ney LM, RRF fusion, permutation test,
-# ROUGE verify, graph-ANN beam search, CCNet buckets) plus the
-# corpus_stratified_split / corpus_health_report / streaming reports were
-# promoted into the driver window by the r10 rotation — registered above.
 
 # Round-11 to round-13 additions: retrieval eval (nDCG), stylometry
 # (Burrows' delta), lexical diversity and the source-concentration report

@@ -31,19 +31,15 @@ def _default_driver_mem() -> str:
 def get_spark(
     app_name: str = "cl_tagger_batch_processing_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-    ui: bool = False,
     master: str | None = None,
 ) -> SparkSession:
     """``master`` overrides the default ``local[cpus]`` URL (e.g. a real
     cluster URL from the CLI's ``--master``) while keeping every config
     below — one config surface for all entry points. ``cpus`` still sizes
-    ``spark.sql.shuffle.partitions`` unless ``shuffle_partitions`` is given.
+    ``spark.sql.shuffle.partitions``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     # Local mode runs every task inside the driver JVM, so the driver heap
     # IS the executor heap: Spark's 1g default leaves ~300 MB of
     # execution+storage memory shared by `cpus` concurrent tasks (~10 MB
@@ -58,13 +54,13 @@ def get_spark(
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
         .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", str(ui).lower())
+        .config("spark.ui.enabled", "false")
         # The driver-generated fixtures carry parquet TIMESTAMP(NANOS), which
         # Spark only reads via this legacy flag (as epoch-nanos LongType);
         # sources.tables normalizes those columns back to TimestampType.

@@ -38,17 +38,14 @@ _URI_SCHEMES = ("hdfs:", "s3:", "s3a:", "s3n:", "gs:", "abfs:", "abfss:",
                 "wasb:", "wasbs:", "dbfs:", "file:")
 
 
-def _require_shared_out_dir(tagged: DataFrame, out_dir: str, allow_executor_local: bool) -> None:
+def _require_shared_out_dir(tagged: DataFrame, out_dir: str) -> None:
     """On a non-local master, refuse an out_dir the plain-``open()`` sidecar
     writer cannot safely use: URI-scheme paths are never writable by open()
     (they'd be treated as odd relative LOCAL directory names on each
     executor), and a bare node-local path gives each machine its own
     partial set of sidecars — silently, which is worse than failing. Only
     POSIX shared-mount prefixes pass. Local masters (local[*], the test
-    bed) have one filesystem and always pass; ``allow_executor_local=True``
-    is the explicit escape hatch for clusters where an unlisted POSIX path
-    really is a shared mount (it does NOT unlock URI schemes — those are
-    wrong for this sink on any master)."""
+    bed) have one filesystem and always pass."""
     if any(out_dir.startswith(s) for s in _URI_SCHEMES):
         raise ValueError(
             f"write_sidecar_txt: out_dir {out_dir!r} is a URI-scheme path, "
@@ -58,7 +55,7 @@ def _require_shared_out_dir(tagged: DataFrame, out_dir: str, allow_executor_loca
             "store as a POSIX path (/mnt/..., /dbfs/...)."
         )
     master = tagged.sparkSession.conf.get("spark.master", "local")
-    if allow_executor_local or master.startswith("local"):
+    if master.startswith("local"):
         return
     if not out_dir.startswith(SHARED_MOUNT_PREFIXES):
         raise ValueError(
@@ -66,8 +63,8 @@ def _require_shared_out_dir(tagged: DataFrame, out_dir: str, allow_executor_loca
             f"shared POSIX mount (prefixes: {SHARED_MOUNT_PREFIXES}) but "
             f"master is {master!r} — each executor would write its own "
             "partial set of sidecar files to its local disk. Point out_dir "
-            "at a shared mount, pass allow_executor_local=True if it is "
-            "one, or use write_tags_parquet (the scale-correct sink)."
+            "at a shared mount, or use write_tags_parquet (the scale-correct "
+            "sink)."
         )
 
 
@@ -85,7 +82,7 @@ def _write_batches(out_dir: str, batches):
     yield pa.RecordBatch.from_pydict({"n_written": pa.array([n], pa.int64())})
 
 
-def write_sidecar_txt(tagged: DataFrame, out_dir: str, *, allow_executor_local: bool = False) -> int:
+def write_sidecar_txt(tagged: DataFrame, out_dir: str) -> int:
     """Write one ``<basename>.txt`` per row of (path, tags_text).
 
     Returns the number of sidecars written. Idempotent under task retry
@@ -93,7 +90,7 @@ def write_sidecar_txt(tagged: DataFrame, out_dir: str, *, allow_executor_local: 
     ``out_dir`` must be a shared filesystem when running against a
     multi-node master (checked; see ``_require_shared_out_dir``).
     """
-    _require_shared_out_dir(tagged, out_dir, allow_executor_local)
+    _require_shared_out_dir(tagged, out_dir)
     written = tagged.select("path", "tags_text").mapInArrow(
         partial(_write_batches, out_dir), schema="n_written long"
     )

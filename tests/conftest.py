@@ -82,7 +82,7 @@ def pytest_configure(config):
 def spark():
     from cl_tagger_batch_processing_spark.session import get_spark
 
-    s = get_spark(app_name="tests", cpus=4, shuffle_partitions=4)
+    s = get_spark(app_name="tests", cpus=4)
     yield s
     s.stop()
 

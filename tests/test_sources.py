@@ -84,7 +84,7 @@ def test_sidecar_sink(spark, tmp_path):
 def test_sidecar_shared_fs_guard():
     """On a non-local master the sink must refuse an executor-local out_dir
     (each node would write its own partial sidecar set — silent data
-    fan-out); shared-FS prefixes and the explicit escape hatch pass."""
+    fan-out); shared-FS prefixes pass."""
     import pytest
 
     from cl_tagger_batch_processing_spark.sources.sinks import _require_shared_out_dir
@@ -102,22 +102,20 @@ def test_sidecar_shared_fs_guard():
             self.conf = _Conf(master)
 
     # local master: any POSIX path is the one shared filesystem
-    _require_shared_out_dir(_Fake("local[32]"), "/tmp/out", False)
+    _require_shared_out_dir(_Fake("local[32]"), "/tmp/out")
     # cluster master + node-local path: refuse
     with pytest.raises(ValueError, match="shared POSIX mount"):
-        _require_shared_out_dir(_Fake("spark://host:7077"), "/tmp/out", False)
-    # URI schemes are unwritable by plain open() on ANY master — even with
-    # the escape hatch — because open() would treat them as weird relative
-    # local dirs on each executor (use write_tags_parquet instead)
+        _require_shared_out_dir(_Fake("spark://host:7077"), "/tmp/out")
+    # URI schemes are unwritable by plain open() on ANY master, because
+    # open() would treat them as weird relative local dirs on each
+    # executor (use write_tags_parquet instead)
     for uri in ["hdfs:///ns/out", "s3a://bucket/out", "dbfs:/out"]:
-        for master, hatch in [("local[4]", False), ("yarn", False), ("yarn", True)]:
+        for master in ["local[4]", "yarn"]:
             with pytest.raises(ValueError, match="URI-scheme"):
-                _require_shared_out_dir(_Fake(master), uri, hatch)
+                _require_shared_out_dir(_Fake(master), uri)
     # cluster master + shared POSIX mounts: pass
     for ok in ["/mnt/shared/out", "/dbfs/out", "/nfs/corpus/out"]:
-        _require_shared_out_dir(_Fake("yarn"), ok, False)
-    # explicit escape hatch for unlisted shared mounts
-    _require_shared_out_dir(_Fake("yarn"), "/data/nfs-mount/out", True)
+        _require_shared_out_dir(_Fake("yarn"), ok)
 
 
 def test_two_loads_of_one_table_self_join_on_columns(spark, sf_dir):

@@ -82,11 +82,11 @@ def test_kmeans_cache_survives_session_churn():
         from cl_tagger_batch_processing_spark.operators import similarity
 
         sf = {SF_TEST_DIR!r}
-        s1 = get_spark(app_name="churn1", cpus=2, shuffle_partitions=2)
+        s1 = get_spark(app_name="churn1", cpus=2)
         n1 = similarity.embedding_kmeans(s1, sf).count()
         assert len(similarity._KMEANS_CACHE) == 1
         s1.stop()
-        s2 = get_spark(app_name="churn2", cpus=2, shuffle_partitions=2)
+        s2 = get_spark(app_name="churn2", cpus=2)
         assert s2.sparkContext.applicationId != ""
         n2 = similarity.embedding_kmeans(s2, sf).count()
         assert n1 == n2 > 0, (n1, n2)
