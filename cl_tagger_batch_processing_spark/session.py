@@ -74,6 +74,27 @@ def get_spark(
         # driver-side API itself. Deployment-independent: the overhead is
         # py4j latency, present on any cluster's driver.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Every run plans its query again, so a warm run is fast only if
+        # its generated classes are still in Spark's compiled-class cache
+        # (LRU, 100 entries by default). One query_mix pass generates ~200
+        # distinct classes, so at 100 each warm pass recompiled all of
+        # them (195-222 Janino compiles per pass, on the driver, inside
+        # each query; 0 from pass 2 on with this cap). One run of each of
+        # the 228 batch registry queries at sf0.001 compiles 5,228 classes
+        # at the default and 2,562 with both settings here; after it, heap
+        # after GC is 139 -> 211 MB and Metaspace 197 -> 217 MB (4 vCPU).
+        # Bounded, not unlimited: an ad-hoc session would grow an
+        # unbounded cache forever. Static: Spark reads it once per JVM, at
+        # the first code generation.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The cache is keyed by the generated source, and Spark names each
+        # whole-stage class after its codegen stage id. AQE numbers stages
+        # in the order they are created, which follows the order concurrent
+        # shuffle stages happen to finish, so an unchanged plan could come
+        # back with two stage ids swapped and miss the cache
+        # (text_tfidf_topk: 4 compiles on some warm runs, 0 on others).
+        # Without the id in the name, such classes are equal sources.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

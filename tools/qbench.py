@@ -14,10 +14,13 @@ AQE's final plan is what lands in the file.
 Each run is tagged with its own Spark job group so the output reports the
 NUMBER OF SPARK JOBS the run launched — the measurement the iterative-
 family optimizations (fewer checkpoint/census jobs per superstep) are
-graded on. Session memo caches (the memos bench.py attributes plus the
-table-plan memo) are cleared before every timed run by default so isolated
-medians compare cold against cold; pass --keep-memos for bench-like warm
-riding.
+graded on — and the number of classes Spark's code generator COMPILED
+during the run: 0 on a run whose generated classes are all still in
+Spark's compiled-class cache, so a count that stays high on repeated runs
+shows codegen thrash. Session memo caches (the memos bench.py attributes
+plus the table-plan memo) are cleared before every timed run by default
+so isolated medians compare cold against cold; pass --keep-memos for
+bench-like warm riding.
 """
 
 from __future__ import annotations
@@ -69,6 +72,11 @@ def main() -> int:
     spark = get_spark(app_name="qbench", cpus=cpus)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:  # classes compiled in this JVM so far
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm
     caches = _memo_caches()
     qmap = queries()
@@ -76,23 +84,27 @@ def main() -> int:
         fn = qmap[name]
         times: list[float] = []
         job_counts: list[int] = []
+        compile_counts: list[int] = []
         for i in range(max(args.runs, 0)):
             if not args.keep_memos:
                 for c in caches:
                     c.clear()
             group = f"qbench:{name}:{i}"
             sc.setJobGroup(group, f"qbench {name} run {i}")
+            c0 = compiled()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
             job_counts.append(len(tracker.getJobIdsForGroup(group)))
+            compile_counts.append(compiled() - c0)
             sc.setJobGroup(None, None)
         line: dict = {
             "query": name,
             "runs": times,
             "median": sorted(times)[len(times) // 2] if times else None,
             "jobs": job_counts,
+            "compiles": compile_counts,
         }
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
